@@ -270,3 +270,42 @@ def test_source_bounds_hint_matches_computed(spark, tmp_path):
             when_matched="skip", when_not_matched="insert", ts=5000,
             source_bounds={"wrong": (0, 1)},
         )
+
+
+@pytest.mark.parametrize(
+    "clauses",
+    [
+        ("skip", "insert", True),    # fused write + count pass
+        ("update", "skip", False),   # fused write pass, no counts
+        ("update", "insert", True),  # counts over the pure upsert
+        ("delete", "insert", True),  # counts job before the delete
+        ("delete", "skip", False),   # the delete's key collection
+    ],
+)
+def test_source_bounds_too_narrow_raises(spark, tmp_path, clauses):
+    """A caller box that misses source keys would turn matched keys
+    into inserts (key 3 exists but lies outside (2, 2)); the pass
+    that consumes the probe join counts such rows and the merge
+    raises instead.  Every shape here writes nothing: the counts and
+    key-collection shapes check before any write, and the fused pass
+    writes no partition holding an outside row (one partition here)."""
+    when_matched, when_not_matched, return_counts = clauses
+    uri = _mk(tmp_path)
+    src = _src(spark, [(2, 99), (3, 77), (4, 44)]).coalesce(1)
+    with pytest.raises(ValueError, match="source_bounds misses 2"):
+        merge_into_array(
+            spark, uri, src,
+            when_matched=when_matched, when_not_matched=when_not_matched,
+            ts=2000, return_counts=return_counts,
+            source_bounds={"k": (2, 2)},
+        )
+    assert _state(spark, uri) == [(1, 10), (2, 20), (3, 30)]
+    # an empty box for a non-empty source misses every key
+    with pytest.raises(ValueError, match="empty box"):
+        merge_into_array(
+            spark, uri, src,
+            when_matched=when_matched, when_not_matched=when_not_matched,
+            ts=3000, return_counts=return_counts,
+            source_bounds={"k": (None, None)},
+        )
+    assert _state(spark, uri) == [(1, 10), (2, 20), (3, 30)]

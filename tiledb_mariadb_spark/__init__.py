@@ -52,6 +52,13 @@ _EXPORTS = {
 __all__ = [*_EXPORTS, "__version__"]
 __version__ = "0.1.0"
 
+# a Spark Python worker imports this package when it unpickles one of
+# its DataSources or mapInPandas functions; from then on the worker
+# keeps pyspark.zip's directory between requests (see zipcache)
+from tiledb_mariadb_spark import zipcache as _zipcache  # noqa: E402
+
+_zipcache.install_on_spark_worker()
+
 
 def __getattr__(name: str):
     import importlib  # noqa: PLC0415

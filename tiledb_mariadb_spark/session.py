@@ -1,23 +1,46 @@
 """SparkSession bootstrap tuned for this engine.
 
-Local testing runs on ``local[32]`` in one JVM; the configs below are the
-ones that survive a 1000-executor cluster unchanged (AQE, adaptive skew
-join, Arrow for the Python boundary) plus local-only sizing
-(``shuffle.partitions`` ~ cores).  At 100 TB the same code runs with
-``spark.sql.shuffle.partitions`` sized by AQE's coalescing and
-``files.maxPartitionBytes`` kept at the 128 MB default so scan tasks stay
-memory-bounded.
+Local runs use ``local[<usable cores>]`` in one JVM with half the host's
+memory as driver heap; ``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_DRIVER_MEM``
+override both.  The configs below are the ones that survive a
+1000-executor cluster unchanged (AQE, adaptive skew join, Arrow for the
+Python boundary) plus local-only sizing (``shuffle.partitions`` ~ cores).
+At 100 TB the same code runs with ``spark.sql.shuffle.partitions`` sized
+by AQE's coalescing and ``files.maxPartitionBytes`` kept at the 128 MB
+default so scan tasks stay memory-bounded.
 """
 
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
 
+def _host_cpus() -> int:
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # not on Linux
+        return os.cpu_count() or 1
+
+
+def _host_driver_mem() -> str:
+    """Half the physical memory, in whole GiB: local mode runs every
+    executor in the driver JVM and the Python workers share the rest."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "1g"  # Spark's own default
+    return f"{max(1, phys // 2**31)}g"
+
+
 def get_spark(app_name: str = "tiledb_mariadb_spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(_host_cpus())
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_mem()
+    warehouse = os.path.join(
+        tempfile.gettempdir(), "tiledb_mariadb_spark", "spark-warehouse"
+    )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -27,9 +50,9 @@ def get_spark(app_name: str = "tiledb_mariadb_spark") -> SparkSession:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.warehouse.dir", "/root/repo/.tmp/spark-warehouse")
+        .config("spark.sql.warehouse.dir", warehouse)
         .config("spark.sql.python.filterPushdown.enabled", "true")
         # let the planner pick shuffled-hash over sort-merge when its
         # size conditions hold (guide §3.1): skips the per-partition

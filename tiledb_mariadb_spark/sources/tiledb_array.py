@@ -1612,7 +1612,11 @@ def _merge_write_and_count(
     fewer passes; the counts travel in the action's result, so they are
     exactly-once under task retry, unlike accumulators).  Fragment
     layout matches the old filtered write: same join-output partitions,
-    one fragment per partition with kept rows."""
+    one fragment per partition with kept rows.
+
+    The ``__oob`` column flags source rows outside a caller-supplied
+    probe box; a partition holding one writes nothing, and the driver
+    raises once the pass ends."""
     update = when_matched == "update"
     insert = when_not_matched == "insert"
 
@@ -1620,9 +1624,10 @@ def _merge_write_and_count(
         import pandas as pd  # noqa: PLC0415
 
         parts = list(batches)
-        m = n = 0
+        m = n = x = 0
         if parts:
             pdf = pd.concat(parts, ignore_index=True)
+            x = int(pdf.pop("__oob").sum())
             mask_m = pdf["__m"].notna()
             m, n = int(mask_m.sum()), len(pdf)
             if update and insert:
@@ -1633,7 +1638,7 @@ def _merge_write_and_count(
                 out = pdf[~mask_m]
             else:
                 out = pdf.iloc[0:0]
-            if len(out):
+            if len(out) and not x:
                 kw = {} if ts is None else {"ts": ts}
                 backend.write(
                     uri,
@@ -1641,10 +1646,21 @@ def _merge_write_and_count(
                     sparse=True,
                     **kw,
                 )
-        yield pd.DataFrame({"m": [m], "n": [n]})
+        yield pd.DataFrame({"m": [m], "n": [n], "x": [x]})
 
-    rows = flagged.mapInPandas(write_and_count, schema="m long, n long").collect()
+    rows = flagged.mapInPandas(
+        write_and_count, schema="m long, n long, x long"
+    ).collect()
+    _raise_outside_bounds(sum(r.x for r in rows))
     return sum(r.m for r in rows), sum(r.n for r in rows)
+
+
+def _raise_outside_bounds(n: int) -> None:
+    if n:
+        raise ValueError(
+            f"source_bounds misses {n} source keys: a box narrower than "
+            "the source would misclassify matched keys as new"
+        )
 
 
 def merge_into_array(
@@ -1688,6 +1704,15 @@ def merge_into_array(
     libtiledb's dedup_coords hazard): 'error' raises, 'last_wins'
     keeps the last row per key (deterministic by the source's own
     order), 'allow' writes as-is (for allows_dups schemas).
+
+    ``source_bounds`` ({dim: (lo, hi)}) replaces the probe box's own
+    aggregation job.  A box that misses a source key raises ValueError
+    from the pass that consumes the probe.  The counting shapes and the
+    delete clause raise before anything is written; the fused
+    write-and-count pass writes no partition holding a missed key, but
+    other partitions may already have committed their (correctly
+    classified) rows, so re-running with a true box converges to the
+    same state.
     Returns ``{"matched": n, "not_matched": n, "written": n}``
     (counts -1 when ``return_counts=False`` skips the extra jobs).
     """
@@ -1752,8 +1777,9 @@ def merge_into_array(
         # ingest job (guide §2.6) — skip this aggregation job.  The
         # box only CONFINES the probe read, but the caller's values
         # must cover the true min/max: a too-narrow box would misread
-        # matched keys as new, so only pass bounds computed from the
-        # same source frame.
+        # matched keys as new.  So the pass that consumes the probe
+        # join also counts source rows outside a caller's box, and the
+        # merge raises ValueError when there is any.
         if source_bounds is not None:
             missing_b = [d for d in dim_names if d not in source_bounds]
             if missing_b:
@@ -1770,6 +1796,11 @@ def merge_into_array(
                 *[F.max(d).alias(f"{d}_hi") for d in dim_names],
             ).collect()[0]
         if bounds[f"{dim_names[0]}_lo"] is None:
+            if source_bounds is not None and not source.isEmpty():
+                raise ValueError(
+                    "source_bounds gives an empty box for a non-empty "
+                    "source"
+                )
             to_write = source.limit(0)
             matched = not_matched = 0
             counts["written"] = 0  # empty source: nothing to write
@@ -1785,7 +1816,16 @@ def merge_into_array(
                 spark, uri, backend=backend, columns=[],
                 dim_ranges=box, target_splits=target_splits,
             ).select(*dim_names).distinct().withColumn("__m", F.lit(1))
-            flagged = source.join(tgt_keys, on=dim_names, how="left")
+            oob = F.lit(False)  # a computed box holds every key
+            if source_bounds is not None:
+                inside = F.lit(True)
+                for d, (lo, hi) in box.items():
+                    inside = inside & F.col(d).between(F.lit(lo), F.lit(hi))
+                # null-safe: a None bound puts every row outside
+                oob = ~F.coalesce(inside, F.lit(False))
+            flagged = source.join(
+                tgt_keys, on=dim_names, how="left"
+            ).withColumn("__oob", oob)
             if need_split and when_matched != "delete":
                 # FUSE the probe counts into the write (round 10): the
                 # counts aggregation and the fragment write were two
@@ -1825,16 +1865,18 @@ def merge_into_array(
                 if keep:
                     to_write = flagged.filter(
                         keep[0] if len(keep) == 1 else (keep[0] | keep[1])
-                    ).drop("__m")
+                    ).drop("__m", "__oob")
                 else:
                     # statically empty, never launch the write job
-                    to_write = flagged.limit(0).drop("__m")
+                    to_write = flagged.limit(0).drop("__m", "__oob")
                     counts["written"] = 0
                 if return_counts:
                     agg = flagged.agg(
                         F.count(F.col("__m")).alias("m"),
                         F.count(F.lit(1)).alias("n"),
+                        F.count(F.when(F.col("__oob"), 1)).alias("x"),
                     ).collect()[0]
+                    _raise_outside_bounds(agg["x"])
                     matched, not_matched = agg["m"], agg["n"] - agg["m"]
         if return_counts:
             counts["matched"], counts["not_matched"] = matched, not_matched
@@ -1854,11 +1896,16 @@ def merge_into_array(
 
                 # driver-side IN-list is bounded: take(N+1) caps the
                 # collect, and over-limit merges are refused with a
-                # pointer to the predicate form (which never collects)
+                # pointer to the predicate form (which never collects).
+                # Rows outside a caller's box ride along, so the same
+                # job checks the box when no counts job ran.
                 key_rows = (
-                    flagged.filter(F.col("__m").isNotNull())
-                    .select(dim_names[0])
+                    flagged.filter(F.col("__m").isNotNull() | F.col("__oob"))
+                    .select(dim_names[0], "__m")
                     .take(max_delete_keys + 1)
+                )
+                _raise_outside_bounds(
+                    sum(r["__m"] is None for r in key_rows)
                 )
                 if len(key_rows) > max_delete_keys:
                     raise ValueError(
