@@ -25,7 +25,7 @@
 //
 // All delegation goes through a tiny subprocess bridge
 // (tiledb_mariadb_spark.tools.jvm_bridge) into the repo's pure-Python
-// decoder (JSON-lines rows; the big-scan fast path remains the Python
+// decoder (Arrow IPC rows; the big-scan fast path remains the Python
 // datasource — this format exists for the pushdown contract).
 //
 // Build/registration: tiledb_mariadb_spark.sources.jvm_agg compiles this
@@ -35,8 +35,6 @@
 import com.fasterxml.jackson.databind.JsonNode;
 import com.fasterxml.jackson.databind.ObjectMapper;
 import java.io.BufferedInputStream;
-import java.io.BufferedReader;
-import java.io.InputStreamReader;
 import org.apache.arrow.memory.BufferAllocator;
 import org.apache.arrow.memory.RootAllocator;
 import org.apache.arrow.vector.VectorSchemaRoot;
@@ -110,7 +108,6 @@ import org.apache.spark.sql.types.DataType;
 import org.apache.spark.sql.types.DataTypes;
 import org.apache.spark.sql.types.StructField;
 import org.apache.spark.sql.types.StructType;
-import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector;
 import org.apache.spark.sql.util.CaseInsensitiveStringMap;
 import org.apache.spark.sql.vectorized.ArrowColumnVector;
 import org.apache.spark.sql.vectorized.ColumnVector;
@@ -1020,7 +1017,7 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
     }
   }
 
-  // ---- row-scan path (bridge JSON-lines; filters exact, columns pruned) -----
+  // ---- row-scan path (bridge Arrow IPC; filters exact, columns pruned) -----
 
   static class RowScan implements Scan, Batch, SupportsReportStatistics, SupportsRuntimeFiltering {
     private final StructType schema;
@@ -1222,7 +1219,9 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
 
     @Override
     public PartitionReader<InternalRow> createReader(InputPartition p) {
-      return new RowsReader((RowsPartition) p, schema);
+      // supportColumnarReads is true for every partition, so Spark only
+      // ever asks for the columnar reader
+      throw new UnsupportedOperationException("tiledb_agg row scans are columnar-only");
     }
 
     @Override
@@ -1257,174 +1256,15 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
     }
   }
 
-  static class RowsReader implements PartitionReader<InternalRow> {
-    private final Process proc;
-    private final StructType schema;
-    private final ObjectMapper mapper = new ObjectMapper();
-    private InternalRow current;
-    // wire auto-detect: the bridge emits ARROW IPC when pyarrow is
-    // importable (never starts with '['), JSON lines otherwise
-    private BufferedReader jsonIn;
-    private BufferAllocator allocator;
-    private ArrowStreamReader arrow;
-    private VectorSchemaRoot root;
-    private int rowInBatch;
-    private int batchRows;
-
-    RowsReader(RowsPartition part, StructType schema) {
-      this.schema = schema;
-      Bridge b = Bridge.fromOptions(new CaseInsensitiveStringMap(part.opts));
-      this.proc =
-          b.start("rows", null, part.rangesJson, part.condsJson, part.columnsJson, null, part.limit);
-      try {
-        BufferedInputStream in = new BufferedInputStream(proc.getInputStream());
-        in.mark(2);
-        int first = in.read();
-        if (first == -1) {
-          jsonIn = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8));
-          return; // empty stream: the JSON loop surfaces exit status
-        }
-        in.reset();
-        if (first == '[') {
-          jsonIn = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8));
-        } else {
-          allocator = new RootAllocator(Long.MAX_VALUE);
-          arrow = new ArrowStreamReader(in, allocator);
-          root = arrow.getVectorSchemaRoot();
-          rowInBatch = 0;
-          batchRows = 0;
-        }
-      } catch (Exception e) {
-        proc.destroy();
-        throw new RuntimeException("tiledb_agg rows bridge open failed: " + e, e);
-      }
-    }
-
-    private static Object arrowToSpark(Object o, DataType t) {
-      if (o == null) {
-        return null;
-      }
-      if (t == DataTypes.StringType) {
-        return UTF8String.fromString(o.toString());
-      }
-      if (t == DataTypes.LongType) {
-        return ((Number) o).longValue();
-      }
-      if (t == DataTypes.IntegerType) {
-        return ((Number) o).intValue();
-      }
-      if (t == DataTypes.ShortType) {
-        return ((Number) o).shortValue();
-      }
-      if (t == DataTypes.ByteType) {
-        return ((Number) o).byteValue();
-      }
-      if (t == DataTypes.DoubleType) {
-        return ((Number) o).doubleValue();
-      }
-      if (t == DataTypes.FloatType) {
-        return ((Number) o).floatValue();
-      }
-      if (t == DataTypes.BooleanType) {
-        return (Boolean) o;
-      }
-      if (t == DataTypes.BinaryType) {
-        return (byte[]) o;
-      }
-      throw new RuntimeException("tiledb_agg: unsupported arrow type " + t);
-    }
-
-    private boolean nextArrow() throws Exception {
-      while (rowInBatch >= batchRows) {
-        if (!arrow.loadNextBatch()) {
-          int rc = proc.waitFor();
-          if (rc != 0) {
-            String err =
-                new String(proc.getErrorStream().readAllBytes(), StandardCharsets.UTF_8);
-            throw new RuntimeException("tiledb_agg rows bridge failed: " + err);
-          }
-          return false;
-        }
-        batchRows = root.getRowCount();
-        rowInBatch = 0;
-      }
-      StructField[] fields = schema.fields();
-      Object[] vals = new Object[fields.length];
-      for (int i = 0; i < fields.length; i++) {
-        vals[i] =
-            arrowToSpark(root.getVector(i).getObject(rowInBatch), fields[i].dataType());
-      }
-      rowInBatch++;
-      current = new GenericInternalRow(vals);
-      return true;
-    }
-
-    @Override
-    public boolean next() {
-      try {
-        if (arrow != null) {
-          return nextArrow();
-        }
-        String line = jsonIn.readLine();
-        if (line == null || line.isEmpty()) {
-          int rc = proc.waitFor();
-          if (rc != 0) {
-            String err =
-                new String(proc.getErrorStream().readAllBytes(), StandardCharsets.UTF_8);
-            throw new RuntimeException("tiledb_agg rows bridge failed: " + err);
-          }
-          return false;
-        }
-        JsonNode arr = mapper.readTree(line);
-        StructField[] fields = schema.fields();
-        Object[] vals = new Object[fields.length];
-        for (int i = 0; i < fields.length; i++) {
-          vals[i] = jsonToSpark(arr.get(i), fields[i].dataType());
-        }
-        current = new GenericInternalRow(vals);
-        return true;
-      } catch (RuntimeException e) {
-        throw e;
-      } catch (Exception e) {
-        throw new RuntimeException("tiledb_agg rows bridge read failed: " + e, e);
-      }
-    }
-
-    @Override
-    public InternalRow get() {
-      return current;
-    }
-
-    @Override
-    public void close() {
-      try {
-        if (arrow != null) {
-          arrow.close();
-        }
-        if (allocator != null) {
-          allocator.close();
-        }
-      } catch (Exception ignored) {
-        // release-path best effort
-      }
-      proc.destroy();
-    }
-  }
-
-  /** Columnar twin of RowsReader (r8 verdict #4): the bridge's Arrow
-   * IPC batches are handed to Spark as ColumnarBatch — ArrowColumnVector
-   * wraps each FieldVector zero-copy, eliminating the per-row
-   * InternalRow conversion that dominated the fallback scan.  The
-   * bridge emits an EXPLICIT Arrow schema equal to the pruned Spark
-   * schema, so vector types match by construction.  A JSON-lines wire
-   * (pyarrow unavailable in the bridge env) fills OnHeapColumnVector
-   * chunks instead — same contract, still batch-shaped. */
+  /** The row scan's reader: the bridge's Arrow IPC batches are handed
+   * to Spark as ColumnarBatch — ArrowColumnVector wraps each FieldVector
+   * zero-copy, with no per-row InternalRow conversion.  The bridge
+   * emits an EXPLICIT Arrow schema equal to the pruned Spark schema, so
+   * vector types match by construction; a zero-column scan (COUNT(*))
+   * gets zero-column batches whose row counts carry the rows. */
   static class ColumnarRowsReader implements PartitionReader<ColumnarBatch> {
-    private static final int JSON_CHUNK = 4096;
     private final Process proc;
     private final StructType schema;
-    private final ObjectMapper mapper = new ObjectMapper();
-    private BufferedReader jsonIn;
     private BufferAllocator allocator;
     private ArrowStreamReader arrow;
     private VectorSchemaRoot root;
@@ -1437,20 +1277,14 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
           b.start("rows", null, part.rangesJson, part.condsJson, part.columnsJson, null, part.limit);
       try {
         BufferedInputStream in = new BufferedInputStream(proc.getInputStream());
-        in.mark(2);
-        int first = in.read();
-        if (first == -1) {
-          jsonIn = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8));
-          return; // empty stream: the JSON loop surfaces exit status
+        in.mark(1);
+        if (in.read() == -1) {
+          return; // empty stream: next() surfaces the exit status
         }
         in.reset();
-        if (first == '[') {
-          jsonIn = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8));
-        } else {
-          allocator = new RootAllocator(Long.MAX_VALUE);
-          arrow = new ArrowStreamReader(in, allocator);
-          root = arrow.getVectorSchemaRoot();
-        }
+        allocator = new RootAllocator(Long.MAX_VALUE);
+        arrow = new ArrowStreamReader(in, allocator);
+        root = arrow.getVectorSchemaRoot();
       } catch (Exception e) {
         proc.destroy();
         throw new RuntimeException("tiledb_agg columnar bridge open failed: " + e, e);
@@ -1466,66 +1300,18 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
       }
     }
 
-    private static void putJson(
-        OnHeapColumnVector col, int row, JsonNode v, DataType t) {
-      if (v == null || v.isNull()) {
-        col.putNull(row);
-        return;
-      }
-      if (t == DataTypes.StringType) {
-        col.putByteArray(row, v.asText().getBytes(StandardCharsets.UTF_8));
-      } else if (t == DataTypes.LongType) {
-        col.putLong(row, v.asLong());
-      } else if (t == DataTypes.IntegerType) {
-        col.putInt(row, (int) v.asLong());
-      } else if (t == DataTypes.ShortType) {
-        col.putShort(row, (short) v.asLong());
-      } else if (t == DataTypes.ByteType) {
-        col.putByte(row, (byte) v.asLong());
-      } else if (t == DataTypes.DoubleType) {
-        col.putDouble(row, v.asDouble());
-      } else if (t == DataTypes.FloatType) {
-        col.putFloat(row, (float) v.asDouble());
-      } else if (t == DataTypes.BooleanType) {
-        col.putBoolean(row, v.asBoolean());
-      } else {
-        throw new RuntimeException("tiledb_agg: unsupported columnar type " + t);
-      }
-    }
-
     @Override
     public boolean next() {
       try {
-        if (arrow != null) {
-          if (!arrow.loadNextBatch()) {
-            checkExit();
-            return false;
-          }
-          StructField[] fields = schema.fields();
-          ColumnVector[] vecs = new ColumnVector[fields.length];
-          for (int i = 0; i < fields.length; i++) {
-            vecs[i] = new ArrowColumnVector(root.getVector(i));
-          }
-          current = new ColumnarBatch(vecs, root.getRowCount());
-          return true;
-        }
-        StructField[] fields = schema.fields();
-        OnHeapColumnVector[] cols =
-            OnHeapColumnVector.allocateColumns(JSON_CHUNK, schema);
-        int n = 0;
-        String line;
-        while (n < JSON_CHUNK && (line = jsonIn.readLine()) != null && !line.isEmpty()) {
-          JsonNode arr = mapper.readTree(line);
-          for (int i = 0; i < fields.length; i++) {
-            putJson(cols[i], n, arr.get(i), fields[i].dataType());
-          }
-          n++;
-        }
-        if (n == 0) {
+        if (arrow == null || !arrow.loadNextBatch()) {
           checkExit();
           return false;
         }
-        current = new ColumnarBatch(cols, n);
+        ColumnVector[] vecs = new ColumnVector[schema.fields().length];
+        for (int i = 0; i < vecs.length; i++) {
+          vecs[i] = new ArrowColumnVector(root.getVector(i));
+        }
+        current = new ColumnarBatch(vecs, root.getRowCount());
         return true;
       } catch (RuntimeException e) {
         throw e;

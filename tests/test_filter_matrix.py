@@ -37,7 +37,6 @@ from tiledb_mariadb_spark.sources.tiledb_native import (
     _F_SHA256,
     _F_ZSTD,
     _bitshuffle,
-    _lz4_block_decode,
     _rle_decode,
     read_native_array,
     read_byte_span,
@@ -80,26 +79,6 @@ def test_codec_roundtrip_compressible(tmp_path, ftype):
     data = (b"abcdef" * 40000)[: 200001]  # odd length, highly repetitive
     enc = _roundtrip(tmp_path, [(ftype, b"")], data, elem=1)
     assert len(enc) < len(data) // 4  # actually compresses
-
-
-def test_lz4_block_decoder_matches_real_lz4():
-    """The pure-python LZ4 block decoder vs blocks produced by the REAL
-    lz4 library (pyarrow lz4_raw): literals, long matches, overlapping
-    matches, incompressible tails."""
-    pa = pytest.importorskip("pyarrow")
-    codec = pa.Codec("lz4_raw")
-    rnd = random.Random(3)
-    cases = [
-        b"",
-        b"a",
-        b"ab" * 50000,                      # long match chains
-        bytes(rnd.randrange(256) for _ in range(4096)),  # incompressible
-        b"x" * 70000,                       # overlapping match (offset 1)
-        (b"hello world, " * 1000) + bytes(rnd.randrange(256) for _ in range(99)),
-    ]
-    for data in cases:
-        comp = codec.compress(data, asbytes=True)
-        assert _lz4_block_decode(comp, len(data)) == data
 
 
 def test_delta_signed_wraparound(tmp_path):

@@ -186,6 +186,29 @@ def test_agg_composes_with_pushed_filters(spark, tmp_path):
     assert spark.sql(q2).collect()[0].n == sum(
         1 for i in range(500) if i % 7 == 3
     )
+    # the same zero-column scan, where the Arrow batches' row counts
+    # carry the count: survivors spanning two 32768-row batches, and
+    # none at all (q = 1 lies inside the fragment's q range, so no
+    # metadata refutes it)
+    big = str(tmp_path / "big")
+    create_native_array(
+        big,
+        [NativeDim("k", 1, 1, (0, 10**6), None)],
+        [NativeAttr("q", 1, 1, False, None)],
+    )
+    write_native_fragment(
+        big,
+        {"k": list(range(40000)), "q": [3 * (i % 10 > 0) for i in range(40000)]},
+        ts=10,
+        version=19,
+    )
+    agg_reader(spark, big).load().createOrReplaceTempView("jvm_agg_big")
+    for cond, want in (("q = 3", 36000), ("q = 1", 0)):
+        q3 = f"SELECT COUNT(*) AS n FROM jvm_agg_big WHERE {cond}"
+        p3 = spark.sql(q3)._jdf.queryExecution().executedPlan().toString()
+        assert "MetadataAggScan" not in p3
+        assert "PushedConditions" in p3
+        assert spark.sql(q3).collect()[0].n == want
 
 
 def test_grouped_rollup_pushdown_zero_scan(spark, tmp_path):

@@ -219,12 +219,9 @@ def test_metadata_untouched_by_write(tmp_path):
     assert read_array_metadata(d) == {}
 
 
-def test_zstd_fragment_pure_python_decode(tmp_path, monkeypatch):
-    """A fragment compressed with a REAL zstd encoder decodes through
-    the from-scratch pure-Python zstd decoder (pyarrow path disabled) —
-    the no-dependency read path for arbitrary real arrays."""
-    import tiledb_mariadb_spark.sources.tiledb_native as tn
-
+def test_zstd_fragment_pure_python_decode(tmp_path):
+    """A fragment compressed with a REAL zstd encoder (fixed and var
+    columns, several chunks) round-trips through the native decoder."""
     d = str(tmp_path / "zarr")
     create_native_array(
         d,
@@ -245,8 +242,6 @@ def test_zstd_fragment_pure_python_decode(tmp_path, monkeypatch):
         },
         ts=10,
     )
-    # force the pure-Python zstd path (as if pyarrow were absent)
-    monkeypatch.setattr(tn, "_HAVE_PA_ZSTD", False)
     _s, rows = read_native_array(d)
     assert len(rows) == n
     assert rows[0] == (0, 0.0, "doc-0-")

@@ -67,21 +67,15 @@ def test_pushdown_ranges_golden_query_through_spark(spark):
 
 
 def test_zstd_minimal_decoder_edges():
-    from tiledb_mariadb_spark.sources.tiledb_native import (
-        _zstd_decode_minimal,
-    )
+    from tiledb_mariadb_spark.sources.tiledb_native import _decode_chunk
 
     # raw block frame (single segment, FCS=3): magic, FHD 0x20, FCS,
     # block header (last=1, raw, size=3), payload
     frame = b"\x28\xb5\x2f\xfd" + bytes([0x20, 3]) + bytes([0x19, 0, 0]) + b"abc"
-    assert _zstd_decode_minimal(frame) == b"abc"
+    assert bytes(_decode_chunk(frame, 3)) == b"abc"
     # RLE block: size=4 repeats of one byte
     rle = b"\x28\xb5\x2f\xfd" + bytes([0x20, 4]) + bytes([0x23, 0, 0]) + b"z"
-    assert _zstd_decode_minimal(rle) == b"zzzz"
-    with pytest.raises(NotImplementedError):
-        _zstd_decode_minimal(
-            b"\x28\xb5\x2f\xfd" + bytes([0x20, 1]) + bytes([0x05, 0, 0]) + b"x"
-        )
+    assert bytes(_decode_chunk(rle, 4)) == b"zzzz"
 
 
 def test_hilbert_fixture_2_3_matches_mtr_golden():

@@ -343,11 +343,41 @@ def test_connector_pushes_attribute_conditions(spark):
         read_array(spark, f"{R}/2.0/bank", conditions=[("nope", "=", 1)])
 
 
-def test_dd_loop_fallback_matches_numpy(monkeypatch):
-    """The numpy-free fallback loop and the vectorized unpack are the
-    same decoder: force an ImportError for numpy inside _dd_decode and
-    compare byte-for-byte."""
-    import builtins
+def _dd_decode_loop(buf: bytes, elem: int = 8) -> bytes:
+    """Test-local bit-by-bit DOUBLE_DELTA decoder: the reference
+    implementation the vectorized _dd_decode is checked against."""
+    import struct as _s
+
+    bitsize = buf[0]
+    (num,) = _s.unpack_from("<Q", buf, 1)
+    code = {1: "b", 2: "h", 4: "i", 8: "q"}[elem]
+    if bitsize >= elem * 8 - 1 or num <= 2:
+        vals = list(_s.unpack_from(f"<{num}{code}", buf, 9))
+    else:
+        vals = list(_s.unpack_from(f"<2{code}", buf, 9))
+        stream = buf[9 + 2 * elem :]
+        word = bitpos = wi = 0
+        nbits_entry = bitsize + 1
+        for _ in range(num - 2):
+            while bitpos < nbits_entry:
+                word = (word << 64) | int.from_bytes(
+                    stream[wi : wi + 8], "little"
+                )
+                wi += 8
+                bitpos += 64
+            entry = (word >> (bitpos - nbits_entry)) & ((1 << nbits_entry) - 1)
+            bitpos -= nbits_entry
+            word &= (1 << bitpos) - 1
+            mag = entry & ((1 << bitsize) - 1)
+            dd = -mag if entry >> bitsize else mag
+            vals.append(vals[-1] + (vals[-1] - vals[-2]) + dd)
+    mask = (1 << (8 * elem)) - 1
+    return b"".join(int(v & mask).to_bytes(elem, "little") for v in vals)
+
+
+def test_dd_loop_fallback_matches_numpy():
+    """The vectorized unpack in _dd_decode and the bit-by-bit reference
+    loop are the same decoder, byte for byte."""
     import random
 
     from tiledb_mariadb_spark.sources.tiledb_native import _dd_decode
@@ -357,17 +387,7 @@ def test_dd_loop_fallback_matches_numpy(monkeypatch):
     for _ in range(499):
         vals.append(vals[-1] + rng.randint(-70, 70))
     enc = _dd_encode(vals)
-    expect = _dd_decode(enc, 8 * len(vals), 8)
-
-    real_import = builtins.__import__
-
-    def no_numpy(name, *a, **kw):
-        if name == "numpy":
-            raise ImportError("blocked for fallback test")
-        return real_import(name, *a, **kw)
-
-    monkeypatch.setattr(builtins, "__import__", no_numpy)
-    assert _dd_decode(enc, 8 * len(vals), 8) == expect
+    assert _dd_decode(enc, 8 * len(vals), 8) == _dd_decode_loop(enc)
 
 
 def test_at_sign_in_path_component(spark):

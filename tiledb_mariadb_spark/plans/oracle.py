@@ -10,6 +10,7 @@ philosophy with DuckDB as the golden producer).
 from __future__ import annotations
 
 import datetime as _dt
+import decimal
 import hashlib
 import math
 from dataclasses import dataclass
@@ -47,13 +48,8 @@ def _norm_value(v):
         return v.hex()
     if isinstance(v, list):
         return "[" + ",".join(_norm_value(x) for x in v) + "]"
-    try:
-        import decimal
-
-        if isinstance(v, decimal.Decimal):
-            return repr(float(v))
-    except ImportError:  # pragma: no cover
-        pass
+    if isinstance(v, decimal.Decimal):
+        return repr(float(v))
     return str(v)
 
 

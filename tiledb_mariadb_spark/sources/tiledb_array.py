@@ -23,10 +23,11 @@ The reference exposes TileDB arrays to SQL through the MariaDB handler
   the distributed generalization of the reference's bulk write path
   (ha_mytile.cc:3260-3360).
 
-The actual TileDB I/O sits behind :class:`ArrayBackend` so the connector's
-planning/pushdown/pruning logic is testable without the ``tiledb`` wheel
-(not present in this container): :class:`TileDBBackend` is import-gated,
-:class:`InMemoryBackend` serves tests with identical semantics.
+The TileDB I/O sits behind :class:`ArrayBackend`.  The default,
+:class:`NativeDecoderBackend`, reads and writes the on-disk format through
+the package's own decoder and writer (no libtiledb);
+:class:`FragmentDirBackend` serves parquet fragment directories, and
+tests substitute their own backends through the same interface.
 """
 
 from __future__ import annotations
@@ -39,15 +40,6 @@ from typing import Any, Iterator, Optional, Sequence
 # reference below is annotation-only (PEP 563 via the future import) or
 # a method on a caller-passed session.  The jvm_bridge subprocess
 # imports this module per partition; pyspark would tax each spawn.
-
-try:  # pragma: no cover - tiledb wheel not available in CI container
-    import tiledb  # type: ignore
-
-    HAVE_TILEDB = True
-except ImportError:
-    tiledb = None
-    HAVE_TILEDB = False
-
 
 @dataclass(frozen=True)
 class DimInfo:
@@ -140,111 +132,6 @@ def _apply_conditions(pdf, conditions: Optional[Sequence[tuple]]):
             mask = s.notna() & cmp
         pdf = pdf[mask]
     return pdf.reset_index(drop=True)
-
-
-class TileDBBackend(ArrayBackend):  # pragma: no cover - needs tiledb wheel
-    """Real libtiledb-backed I/O (import-gated; plumbing only in this
-    container).  Each method opens/closes the array locally so instances
-    pickle cleanly into executor tasks."""
-
-    def __init__(self) -> None:
-        if not HAVE_TILEDB:
-            raise ImportError(
-                "the 'tiledb' package is required for TileDBBackend; "
-                "use InMemoryBackend for testing without it"
-            )
-
-    def _open(
-        self,
-        uri: str,
-        mode: str,
-        at: Optional[int],
-        since: Optional[int] = None,
-    ):
-        # libtiledb window semantics: timestamp=(start, end) opens the
-        # array at [timestamp_start, timestamp_end]; a bare int is the
-        # end bound only.  None end = "now".
-        if since is not None:
-            kw = {"timestamp": (since, at)}
-        elif at is not None:
-            kw = {"timestamp": at}
-        else:
-            kw = {}
-        return tiledb.open(uri, mode=mode, **kw)
-
-    def info(self, uri: str, at: Optional[int] = None) -> ArrayInfo:
-        with self._open(uri, "r", at) as a:
-            sch = a.schema
-            ned = a.nonempty_domain()
-            dims = [
-                DimInfo(
-                    name=sch.domain.dim(i).name,
-                    dtype=_np_to_ddl(sch.domain.dim(i).dtype),
-                    domain=tuple(ned[i]) if ned else sch.domain.dim(i).domain,
-                )
-                for i in range(sch.domain.ndim)
-            ]
-            attrs = [
-                AttrInfo(
-                    name=sch.attr(i).name,
-                    dtype=_np_to_ddl(sch.attr(i).dtype),
-                    nullable=sch.attr(i).isnullable,
-                )
-                for i in range(sch.nattr)
-            ]
-            return ArrayInfo(dims=dims, attrs=attrs, sparse=sch.sparse)
-
-    def read_range(
-        self, uri, ranges, columns, at=None, conditions=None, since=None
-    ):
-        with self._open(uri, "r", at, since=since) as a:
-            q = a.query(attrs=None, dims=True)  # multi_index keeps coords
-            idx = tuple(
-                slice(lo, hi) if lo is not None or hi is not None else slice(None)
-                for lo, hi in ranges
-            )
-            data = q.multi_index[idx]
-            import pandas as pd  # noqa: PLC0415
-
-            # a fuller impl would compile `conditions` to a
-            # tiledb.QueryCondition; post-filtering is semantically
-            # identical and keeps the wheel-present path simple
-            return _apply_conditions(
-                pd.DataFrame({c: data[c] for c in columns}), conditions
-            )
-
-    def write(self, uri, pdf, sparse=True, ts=None):
-        with self._open(uri, "w", ts) as a:
-            schema_dims = [a.schema.domain.dim(i).name for i in range(a.schema.ndim)]
-            coords = tuple(pdf[d].to_numpy() for d in schema_dims)
-            attrs = {
-                c: pdf[c].to_numpy() for c in pdf.columns if c not in schema_dims
-            }
-            a[coords] = attrs
-
-
-def _np_to_ddl(np_dtype) -> str:  # pragma: no cover - exercised with tiledb
-    import numpy as np  # noqa: PLC0415
-
-    m = {
-        np.dtype("int8"): "tinyint",
-        np.dtype("int16"): "smallint",
-        np.dtype("int32"): "int",
-        np.dtype("int64"): "bigint",
-        np.dtype("uint8"): "smallint",
-        np.dtype("uint16"): "int",
-        np.dtype("uint32"): "bigint",
-        np.dtype("uint64"): "decimal(20,0)",
-        np.dtype("float32"): "float",
-        np.dtype("float64"): "double",
-    }
-    if np_dtype in m:
-        return m[np_dtype]
-    if np_dtype.kind in ("U", "S", "O"):
-        return "string"
-    if np_dtype.kind == "M":
-        return "timestamp"
-    raise TypeError(f"unsupported TileDB dtype {np_dtype}")
 
 
 class NativeDecoderBackend(ArrayBackend):
@@ -993,11 +880,7 @@ def read_array(
             "pass encryption_key to the backend constructor when "
             "supplying an explicit backend"
         )
-    backend = backend or (
-        TileDBBackend()
-        if HAVE_TILEDB and encryption_key is None
-        else NativeDecoderBackend(encryption_key=encryption_key)
-    )
+    backend = backend or NativeDecoderBackend(encryption_key=encryption_key)
     if since is not None:
         # vacuum hazard (windowed sibling of the diff_arrays guard): a
         # consolidated fragment straddling the window start is excluded
@@ -1177,11 +1060,7 @@ def topk_array(
     The final ordering ties break by the dimension tuple (ascending),
     making the result deterministic under equal ``col`` values.
     """
-    backend = backend or (
-        TileDBBackend()
-        if HAVE_TILEDB and encryption_key is None
-        else NativeDecoderBackend(encryption_key=encryption_key)
-    )
+    backend = backend or NativeDecoderBackend(encryption_key=encryption_key)
     thr_fn = getattr(backend, "topk_threshold", None)
     # dim_ranges restrict which rows compete, but the stats guarantee
     # counts whole fragments — a bound derived ignoring the ranges
@@ -1267,11 +1146,7 @@ def diff_arrays(
     (`uri@ts`, ha_mytile.cc open_at) but diffing two of them requires
     two full MariaDB scans plus a server-side join — here it is one
     windowed map-only pass."""
-    backend = backend or (
-        TileDBBackend()
-        if HAVE_TILEDB and encryption_key is None
-        else NativeDecoderBackend(encryption_key=encryption_key)
-    )
+    backend = backend or NativeDecoderBackend(encryption_key=encryption_key)
     info = backend.info(uri, at=at_new)
     try:  # row identity must be unique: dup-key arrays aren't diffable
         from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
@@ -1458,9 +1333,7 @@ def copartitioned_asof_join(
         # bounds the GLOBAL predecessor.  A tolerance makes the
         # extension exact: matches beyond it are NULL by definition.
         raise ValueError("by_cols requires tolerance (bounded lookback)")
-    backend_a = backend or (
-        TileDBBackend() if HAVE_TILEDB else NativeDecoderBackend()
-    )
+    backend_a = backend or NativeDecoderBackend()
     backend_b = backend_b or backend_a
     info_a = backend_a.info(uri_a, at=at_a)
     info_b = backend_b.info(uri_b, at=at_b)
@@ -1728,11 +1601,7 @@ def merge_into_array(
         raise ValueError(
             f"on_source_dups must be error|last_wins|allow: {on_source_dups}"
         )
-    backend = backend or (
-        TileDBBackend()
-        if HAVE_TILEDB and encryption_key is None
-        else NativeDecoderBackend(encryption_key=encryption_key)
-    )
+    backend = backend or NativeDecoderBackend(encryption_key=encryption_key)
     info = backend.info(uri)
     dim_names = [d.name for d in info.dims]
     missing = [d for d in dim_names if d not in source.columns]
@@ -1988,9 +1857,7 @@ def copartitioned_join_arrays(
         raise ValueError(
             f"how must be 'inner', 'left' or 'full', got {how!r}"
         )
-    backend_a = backend or (
-        TileDBBackend() if HAVE_TILEDB else NativeDecoderBackend()
-    )
+    backend_a = backend or NativeDecoderBackend()
     backend_b = backend_b or backend_a
     info_a = backend_a.info(uri_a, at=at_a)
     info_b = backend_b.info(uri_b, at=at_b)
@@ -2261,9 +2128,7 @@ def copartitioned_join_many(
     n_arr = len(uris)
     if n_arr < 2:
         raise ValueError("copartitioned_join_many needs >= 2 arrays")
-    backend = backend or (
-        TileDBBackend() if HAVE_TILEDB else NativeDecoderBackend()
-    )
+    backend = backend or NativeDecoderBackend()
     ats = list(at) if at is not None else [None] * n_arr
     colss = list(columns) if columns is not None else [None] * n_arr
     condss = list(conditions) if conditions is not None else [None] * n_arr
@@ -2480,11 +2345,7 @@ def write_array(
             "pass encryption_key to the backend constructor when "
             "supplying an explicit backend"
         )
-    backend = backend or (
-        TileDBBackend()
-        if HAVE_TILEDB and encryption_key is None
-        else NativeDecoderBackend(encryption_key=encryption_key)
-    )
+    backend = backend or NativeDecoderBackend(encryption_key=encryption_key)
 
     def write_part(batches) -> Iterator:
         import pandas as pd  # noqa: PLC0415

@@ -10,8 +10,8 @@ Format subset implemented (public TileDB format spec, v1.6 era):
   ``[orig_len u32][filtered_len u32][metadata_len u32][metadata]
   [filtered bytes]``; chunk payloads may be raw, zlib (attribute GZIP
   filter) or zstd (the 1.6 default coordinate filter);
-- **zstd frames** — RAW/RLE blocks decode inline; compressed blocks
-  route through the from-scratch RFC 8878 decoder in ``zstd_py``;
+- **zstd / LZ4 payloads** — decoded by pyarrow's ``zstd`` and
+  ``lz4_raw`` codecs (pyarrow and numpy are required dependencies);
 - **dense fragments** — the attribute tile holds cells in row-major
   global order over the declared domain;
 - **sparse fragments** — ``__coords.tdb`` holds per-dimension
@@ -32,51 +32,13 @@ blobs this decoder reads back byte-exact.
 
 from __future__ import annotations
 
+import functools
 import itertools
 import os
 import struct
 import zlib
 
 ZSTD_MAGIC = b"\x28\xb5\x2f\xfd"
-
-
-def _zstd_decode_minimal(buf: bytes) -> bytes:
-    """Decode a zstd frame containing only RAW / RLE blocks."""
-    if buf[:4] != ZSTD_MAGIC:
-        raise ValueError("not a zstd frame")
-    pos = 4
-    fhd = buf[pos]
-    pos += 1
-    single_segment = (fhd >> 5) & 1
-    fcs_code = fhd >> 6
-    if fhd & 0x03:
-        raise NotImplementedError("dictionary frames unsupported")
-    if (fhd >> 3) & 1:
-        raise NotImplementedError("reserved bit set")
-    if not single_segment:
-        pos += 1  # window descriptor
-    fcs_sizes = {0: 1 if single_segment else 0, 1: 2, 2: 4, 3: 8}
-    pos += fcs_sizes[fcs_code]
-    out = bytearray()
-    while True:
-        header = int.from_bytes(buf[pos : pos + 3], "little")
-        pos += 3
-        last = header & 1
-        btype = (header >> 1) & 3
-        size = header >> 3
-        if btype == 0:  # raw
-            out += buf[pos : pos + size]
-            pos += size
-        elif btype == 1:  # RLE: one byte repeated `size` times
-            out += buf[pos : pos + 1] * size
-            pos += 1
-        else:
-            raise NotImplementedError(
-                "compressed zstd blocks unsupported (minimal decoder)"
-            )
-        if last:
-            break
-    return bytes(out)
 
 
 def _decode_chunk(filtered: bytes, orig_len: int) -> bytes:
@@ -244,29 +206,17 @@ def read_sparse_array(
 # mytile/mytile-discovery.cc:54-473).  Public TileDB storage format.
 # ===========================================================================
 
-_HAVE_PA_ZSTD = None
+@functools.cache
+def _codec(name: str):
+    """The pyarrow codec ``name``, built once per process."""
+    import pyarrow as pa  # noqa: PLC0415
+
+    return pa.Codec(name)
 
 
 def _zstd_decode(buf: bytes, orig_len: int) -> bytes:
-    """Full zstd frame decode: pyarrow's codec when present, else the
-    from-scratch pure-Python RFC 8878 decoder (sources/zstd_py) — either
-    way compressed blocks decode, so arbitrary real arrays read without
-    libtiledb OR pyarrow."""
-    global _HAVE_PA_ZSTD
-    if _HAVE_PA_ZSTD is None:
-        try:
-            import pyarrow as pa  # noqa: PLC0415
-
-            _HAVE_PA_ZSTD = pa.Codec("zstd")
-        except Exception:  # noqa: BLE001
-            _HAVE_PA_ZSTD = False
-    if _HAVE_PA_ZSTD:
-        return _HAVE_PA_ZSTD.decompress(buf, orig_len)
-    from tiledb_mariadb_spark.sources.zstd_py import (  # noqa: PLC0415
-        zstd_decompress,
-    )
-
-    return zstd_decompress(buf)
+    """Full zstd frame decode (pyarrow's codec)."""
+    return _codec("zstd").decompress(buf, orig_len)
 
 
 def read_generic_tile(path: str, key: bytes | None = None) -> bytes:
@@ -630,24 +580,14 @@ def _rle_decode(filtered: bytes, value_size: int, orig_len: int) -> bytes:
         raise ValueError(
             f"RLE part {len(filtered)} not a multiple of record {rec}"
         )
-    try:
-        import numpy as np  # noqa: PLC0415
+    import numpy as np  # noqa: PLC0415
 
-        a = np.frombuffer(filtered, dtype=np.uint8).reshape(-1, rec)
-        runs = (a[:, -2].astype(np.int64) << 8) | a[:, -1]
-        out = np.repeat(a[:, :value_size], runs, axis=0).tobytes()
-    except ImportError:
-        buf = bytearray()
-        for pos in range(0, len(filtered), rec):
-            val = filtered[pos : pos + value_size]
-            run = int.from_bytes(
-                filtered[pos + value_size : pos + rec], "big"
-            )
-            buf += val * run
-        out = bytes(buf)
+    a = np.frombuffer(filtered, dtype=np.uint8).reshape(-1, rec)
+    runs = (a[:, -2].astype(np.int64) << 8) | a[:, -1]
+    out = np.repeat(a[:, :value_size], runs, axis=0).tobytes()
     if len(out) != orig_len:
         raise ValueError(f"RLE decoded {len(out)}, expected {orig_len}")
-    return bytes(out)
+    return out
 
 
 def _rle_var_decode(part: bytes, orig_len: int) -> bytes:
@@ -703,28 +643,23 @@ def _dict_decode(part: bytes, orig_len: int) -> bytes:
             f"dictionary part: {len(idx_bytes)} index bytes for "
             f"{n_cells} cells of width {idx_w}"
         )
-    out = None
-    if idx_w in (1, 2, 4, 8):
-        try:
-            # vectorized gather: dictionary take in Arrow C code — the
-            # result's data buffer IS the concatenated cell bytes
-            import numpy as np  # noqa: PLC0415
-            import pyarrow as pa  # noqa: PLC0415
+    if not n_cells:
+        out = b""
+    elif idx_w in (1, 2, 4, 8):
+        # vectorized gather: dictionary take in Arrow C code — the
+        # result's data buffer IS the concatenated cell bytes
+        import numpy as np  # noqa: PLC0415
+        import pyarrow as pa  # noqa: PLC0415
 
-            if n_cells:
-                idx_np = np.frombuffer(idx_bytes, dtype=f"<u{idx_w}")
-                ent = pa.array(entries, type=pa.large_binary())
-                taken = ent.take(pa.array(idx_np.astype(np.int64)))
-                bufs = taken.buffers()  # [validity, offsets, data]
-                offs = np.frombuffer(bufs[1], dtype=np.int64)[
-                    taken.offset : taken.offset + len(taken) + 1
-                ]
-                out = bufs[2].to_pybytes()[offs[0] : offs[-1]]
-            else:
-                out = b""
-        except ImportError:
-            out = None
-    if out is None:
+        idx_np = np.frombuffer(idx_bytes, dtype=f"<u{idx_w}")
+        ent = pa.array(entries, type=pa.large_binary())
+        taken = ent.take(pa.array(idx_np.astype(np.int64)))
+        bufs = taken.buffers()  # [validity, offsets, data]
+        offs = np.frombuffer(bufs[1], dtype=np.int64)[
+            taken.offset : taken.offset + len(taken) + 1
+        ]
+        out = bufs[2].to_pybytes()[offs[0] : offs[-1]]
+    else:
         idx = [
             int.from_bytes(idx_bytes[i : i + idx_w], "little")
             for i in range(0, len(idx_bytes), idx_w)
@@ -735,71 +670,10 @@ def _dict_decode(part: bytes, orig_len: int) -> bytes:
     return out
 
 
-_HAVE_PA_LZ4 = None
-
-
-def _lz4_block_decode(buf: bytes, orig_len: int) -> bytes:
-    """Pure-python LZ4 BLOCK format decoder (the format libtiledb's LZ4
-    filter stores: LZ4_decompress_safe input — token / literals /
-    little-endian u16 match offset / match copy with overlap).  The
-    normal path is pyarrow's lz4_raw codec; this is the dependency-free
-    fallback and the fuzz reference."""
-    out = bytearray()
-    pos, n = 0, len(buf)
-    while pos < n:
-        token = buf[pos]
-        pos += 1
-        lit = token >> 4
-        if lit == 15:
-            while True:
-                b = buf[pos]
-                pos += 1
-                lit += b
-                if b != 255:
-                    break
-        out += buf[pos : pos + lit]
-        pos += lit
-        if pos >= n:
-            break  # last sequence: literals only
-        off = buf[pos] | (buf[pos + 1] << 8)
-        pos += 2
-        if off == 0 or off > len(out):
-            raise ValueError("lz4: bad match offset")
-        ml = token & 0xF
-        if ml == 15:
-            while True:
-                b = buf[pos]
-                pos += 1
-                ml += b
-                if b != 255:
-                    break
-        ml += 4
-        start = len(out) - off
-        if off >= ml:
-            out += out[start : start + ml]
-        else:  # overlapping match: byte-at-a-time semantics
-            for i in range(ml):
-                out.append(out[start + i])
-    if len(out) != orig_len:
-        raise ValueError(f"lz4 decoded {len(out)}, expected {orig_len}")
-    return bytes(out)
-
-
 def _lz4_decode(part: bytes, orig_len: int) -> bytes:
     """LZ4 block decode: pyarrow's lz4_raw codec (the real LZ4 block
-    format, byte-compatible with libtiledb's filter) when present, else
-    the pure-python block decoder."""
-    global _HAVE_PA_LZ4
-    if _HAVE_PA_LZ4 is None:
-        try:
-            import pyarrow as pa  # noqa: PLC0415
-
-            _HAVE_PA_LZ4 = pa.Codec("lz4_raw")
-        except (ImportError, ValueError):
-            _HAVE_PA_LZ4 = False
-    if _HAVE_PA_LZ4:
-        return _HAVE_PA_LZ4.decompress(part, orig_len)
-    return _lz4_block_decode(part, orig_len)
+    format, byte-compatible with libtiledb's filter)."""
+    return _codec("lz4_raw").decompress(part, orig_len)
 
 
 def _delta_decode(part: bytes, orig_len: int, elem: int) -> bytes:
@@ -839,24 +713,13 @@ def _byteshuffle(data: bytes, elem: int, forward: bool) -> bytes:
     classic compression-friendly transpose (Blosc/TileDB BYTESHUFFLE)."""
     if elem <= 1 or len(data) % elem:
         return data  # undefined on misaligned payloads; identity is safe
-    try:
-        import numpy as np  # noqa: PLC0415
+    import numpy as np  # noqa: PLC0415
 
-        n = len(data) // elem
-        a = np.frombuffer(data, dtype=np.uint8).reshape(
-            (n, elem) if forward else (elem, n)
-        )
-        return a.T.tobytes()
-    except ImportError:
-        n = len(data) // elem
-        out = bytearray(len(data))
-        for i in range(n):
-            for j in range(elem):
-                if forward:
-                    out[j * n + i] = data[i * elem + j]
-                else:
-                    out[i * elem + j] = data[j * n + i]
-        return bytes(out)
+    n = len(data) // elem
+    a = np.frombuffer(data, dtype=np.uint8).reshape(
+        (n, elem) if forward else (elem, n)
+    )
+    return a.T.tobytes()
 
 
 def _bitshuffle(data: bytes, elem: int, forward: bool) -> bytes:
@@ -943,59 +806,22 @@ def _dd_decode(buf: bytes, orig_len: int, elem: int) -> bytes:
     double delta is negative.  (Bit convention pinned empirically against
     the reference's var/ fixture — offsets reproduce its committed gene
     strings exactly.)  Reconstruction is two vectorized cumsums
-    (d = d1 + Σdd; v = v1 + Σd); the pure-python loop remains as the
-    numpy-free fallback and the fuzz reference."""
+    (d = d1 + Σdd; v = v1 + Σd)."""
+    import numpy as np  # noqa: PLC0415
+
     bitsize = buf[0]
     (num,) = struct.unpack_from("<Q", buf, 1)
     code = {1: "b", 2: "h", 4: "i", 8: "q"}[elem]
-    if bitsize >= elem * 8 - 1:  # stored raw
-        vals = list(struct.unpack_from(f"<{num}{code}", buf, 9))
-    elif num <= 2:
-        vals = list(struct.unpack_from(f"<{num}{code}", buf, 9))
+    if bitsize >= elem * 8 - 1 or num <= 2:  # stored raw / too short
+        vals = np.frombuffer(buf, f"<i{elem}", num, 9).astype(np.int64)
     else:
         v0, v1 = struct.unpack_from(f"<2{code}", buf, 9)
-        stream = buf[9 + 2 * elem :]
-        try:
-            import numpy as np  # noqa: PLC0415
-
-            dd = _dd_unpack_numpy(stream, num - 2, bitsize)
-            d = (v1 - v0) + np.cumsum(dd)
-            v = v1 + np.cumsum(d)
-            out = np.empty(num, dtype=np.int64)
-            out[0], out[1], out[2:] = v0, v1, v
-            if elem == 8:
-                # int64 two's-complement LE bytes == u64 LE bytes
-                res = out.astype("<i8").tobytes()
-            else:
-                mask = (1 << (8 * elem)) - 1
-                res = b"".join(
-                    int(int(x) & mask).to_bytes(elem, "little") for x in out
-                )
-            if len(res) != orig_len:
-                raise ValueError(
-                    f"double-delta decoded {len(res)}, expected {orig_len}"
-                )
-            return res
-        except ImportError:
-            pass
-        vals = [v0, v1]
-        word = bitpos = wi = 0
-        nbits_entry = bitsize + 1
-        for _ in range(num - 2):
-            while bitpos < nbits_entry:
-                word = (word << 64) | int.from_bytes(
-                    stream[wi : wi + 8], "little"
-                )
-                wi += 8
-                bitpos += 64
-            entry = (word >> (bitpos - nbits_entry)) & ((1 << nbits_entry) - 1)
-            bitpos -= nbits_entry
-            word &= (1 << bitpos) - 1
-            mag = entry & ((1 << bitsize) - 1)
-            dd = -mag if entry >> bitsize else mag
-            vals.append(vals[-1] + (vals[-1] - vals[-2]) + dd)
-    mask = (1 << (8 * elem)) - 1
-    out = b"".join(int(v & mask).to_bytes(elem, "little") for v in vals)
+        dd = _dd_unpack_numpy(buf[9 + 2 * elem :], num - 2, bitsize)
+        d = (v1 - v0) + np.cumsum(dd)
+        vals = np.empty(num, dtype=np.int64)
+        vals[0], vals[1], vals[2:] = v0, v1, v1 + np.cumsum(d)
+    # the int64 -> int{elem} cast wraps, i.e. keeps the low elem bytes
+    out = vals.astype(f"<i{elem}").tobytes()
     if len(out) != orig_len:
         raise ValueError(f"double-delta decoded {len(out)}, expected {orig_len}")
     return out
@@ -2184,15 +2010,7 @@ def _var_str_span_arrow(base, schema, field, lo_cell, hi_cell):
     surprise (caller falls back to the row path, whose errors='replace'
     decode tolerates anything)."""
     import numpy as np  # noqa: PLC0415
-
-    # hoisted above the try: if pyarrow is absent the except clause below
-    # would reference an unbound `pa` (UnboundLocalError) instead of
-    # falling back — return None so the pure-python row path serves
-    # var-string arrays on pyarrow-less installs
-    try:
-        import pyarrow as pa  # noqa: PLC0415
-    except ImportError:
-        return None
+    import pyarrow as pa  # noqa: PLC0415
 
     try:
         offs = np.frombuffer(
@@ -2257,11 +2075,7 @@ def _fixed_char_cells(afile, schema, field, lo_cell, hi_cell):
     split across fixed cells) returns None — the row path's
     errors='replace' decode owns those."""
     import numpy as np  # noqa: PLC0415
-
-    try:
-        import pyarrow as pa  # noqa: PLC0415
-    except ImportError:
-        return None
+    import pyarrow as pa  # noqa: PLC0415
 
     cvn = field.cell_val_num
     try:
@@ -3371,7 +3185,7 @@ def read_native_array_range(
                 if hi is not None:
                     mask &= a <= hi
             return np.flatnonzero(mask).tolist()
-        except (ImportError, TypeError):
+        except TypeError:
             return [
                 i
                 for i in range(n)

@@ -66,6 +66,7 @@ from tiledb_mariadb_spark.sources.tiledb_native import (
     NativeAttr,
     NativeDim,
     NativeSchema,
+    _codec,
     _fragment_dirs,
     _frag_range,
     _frag_ts,
@@ -119,67 +120,36 @@ def _rle_fixed_encode(part: bytes, width: int) -> bytes:
     misfire."""
     if width < 1 or len(part) % width:
         raise ValueError(f"RLE: payload not a multiple of width {width}")
-    try:
-        import numpy as np  # noqa: PLC0415
+    import numpy as np  # noqa: PLC0415
 
-        n = len(part) // width
-        if n == 0:
-            return b""
-        a = np.frombuffer(part, dtype=np.uint8).reshape(n, width)
-        # run starts where the value differs from its predecessor
-        starts = np.flatnonzero(
-            np.r_[True, (a[1:] != a[:-1]).any(axis=1)]
-        )
-        lens = np.diff(np.r_[starts, n])
-        # split runs longer than the u16 record cap
-        reps = -(-lens // 65535)
-        rec_starts = np.repeat(starts, reps)
-        rec_lens = np.full(int(reps.sum()), 65535, dtype=np.int64)
-        tail_pos = np.cumsum(reps) - 1
-        rec_lens[tail_pos] = lens - (reps - 1) * 65535
-        vals = a[rec_starts]  # (records, width)
-        be = np.empty((len(rec_lens), 2), dtype=np.uint8)
-        be[:, 0] = rec_lens >> 8
-        be[:, 1] = rec_lens & 0xFF
-        out = np.concatenate([vals, be], axis=1).tobytes()
-    except ImportError:
-        buf = bytearray()
-        pos, nb = 0, len(part)
-        while pos < nb:
-            val = part[pos : pos + width]
-            run = 1
-            while (
-                run < 65535
-                and pos + run * width < nb
-                and part[pos + run * width : pos + (run + 1) * width] == val
-            ):
-                run += 1
-            buf += val + run.to_bytes(2, "big")
-            pos += run * width
-        out = bytes(buf)
+    n = len(part) // width
+    if n == 0:
+        return b""
+    a = np.frombuffer(part, dtype=np.uint8).reshape(n, width)
+    # run starts where the value differs from its predecessor
+    starts = np.flatnonzero(np.r_[True, (a[1:] != a[:-1]).any(axis=1)])
+    lens = np.diff(np.r_[starts, n])
+    # split runs longer than the u16 record cap
+    reps = -(-lens // 65535)
+    rec_starts = np.repeat(starts, reps)
+    rec_lens = np.full(int(reps.sum()), 65535, dtype=np.int64)
+    tail_pos = np.cumsum(reps) - 1
+    rec_lens[tail_pos] = lens - (reps - 1) * 65535
+    vals = a[rec_starts]  # (records, width)
+    be = np.empty((len(rec_lens), 2), dtype=np.uint8)
+    be[:, 0] = rec_lens >> 8
+    be[:, 1] = rec_lens & 0xFF
+    out = np.concatenate([vals, be], axis=1).tobytes()
     if len(out) == len(part):  # collision with the raw-part shortcut
         out += part[:width] + b"\x00\x00"
-    return bytes(out)
-
-
-def _cells_of(part: bytes, lens: Sequence[int]) -> list[bytes]:
-    cells, pos = [], 0
-    for ln in lens:
-        cells.append(part[pos : pos + ln])
-        pos += ln
-    if pos != len(part):
-        raise ValueError("var cell lengths do not cover the chunk")
-    return cells
+    return out
 
 
 def _arrow_cells(part: bytes, lens: Sequence[int]):
-    """Zero-copy Arrow LargeBinaryArray over the chunk's cells, or None
-    without pyarrow/numpy (callers fall back to the python encoders)."""
-    try:
-        import numpy as np  # noqa: PLC0415
-        import pyarrow as pa  # noqa: PLC0415
-    except ImportError:
-        return None
+    """Zero-copy Arrow LargeBinaryArray over the chunk's cells."""
+    import numpy as np  # noqa: PLC0415
+    import pyarrow as pa  # noqa: PLC0415
+
     offs = np.zeros(len(lens) + 1, dtype=np.int64)
     np.cumsum(np.asarray(lens, dtype=np.int64), out=offs[1:])
     if offs[-1] != len(part):
@@ -195,12 +165,12 @@ def _rle_var_encode(part: bytes, lens: Sequence[int]) -> bytes:
     decoder (_rle_var_decode).  Run boundaries come from one vectorized
     Arrow not_equal over shifted slices; only the runs themselves are
     built in python (clustered data — RLE's use case — has few)."""
-    runs: list[tuple[int, bytes]] = []
-    arr = _arrow_cells(part, lens) if len(lens) else None
-    if arr is not None and len(arr) > 1:
-        import numpy as np  # noqa: PLC0415
-        import pyarrow.compute as pc  # noqa: PLC0415
+    import numpy as np  # noqa: PLC0415
+    import pyarrow.compute as pc  # noqa: PLC0415
 
+    runs: list[tuple[int, bytes]] = []
+    arr = _arrow_cells(part, lens)
+    if len(arr):
         neq = pc.not_equal(arr.slice(1), arr.slice(0, len(arr) - 1))
         starts = np.flatnonzero(
             np.r_[True, neq.to_numpy(zero_copy_only=False)]
@@ -208,13 +178,6 @@ def _rle_var_encode(part: bytes, lens: Sequence[int]) -> bytes:
         bounds = np.r_[starts, len(arr)]
         for i, st in enumerate(starts):
             runs.append((int(bounds[i + 1] - st), arr[int(st)].as_py()))
-    else:
-        cells = _cells_of(part, lens)
-        for c in cells:
-            if runs and runs[-1][1] == c:
-                runs[-1] = (runs[-1][0] + 1, c)
-            else:
-                runs.append((1, c))
     run_w = _min_width(max((r for r, _ in runs), default=1))
     len_w = _min_width(max((len(c) for _, c in runs), default=1))
     if 2 + 4 + sum(run_w + len_w + len(c) for _, c in runs) == len(part):
@@ -230,27 +193,15 @@ def _rle_var_encode(part: bytes, lens: Sequence[int]) -> bytes:
 
 def _dict_encode(part: bytes, lens: Sequence[int]) -> bytes:
     """Dictionary encoding over whole var cells, first-occurrence order
-    (Arrow's C dictionary_encode when available — it assigns codes in
-    first-appearance order, matching the python fallback exactly).
-    Layout documented in the decoder (_dict_decode)."""
-    arr = _arrow_cells(part, lens) if len(lens) else None
-    if arr is not None:
-        denc = arr.dictionary_encode()
-        entries = denc.dictionary.to_pylist()
-        idx = denc.indices.to_numpy(zero_copy_only=False)
-        cells_n = len(arr)
-    else:
-        cells = _cells_of(part, lens)
-        index: dict[bytes, int] = {}
-        entries = []
-        idx = []
-        for c in cells:
-            i = index.get(c)
-            if i is None:
-                i = index[c] = len(entries)
-                entries.append(c)
-            idx.append(i)
-        cells_n = len(cells)
+    (Arrow's C dictionary_encode, which assigns codes in first-appearance
+    order).  Layout documented in the decoder (_dict_decode)."""
+    import numpy as np  # noqa: PLC0415
+
+    arr = _arrow_cells(part, lens)
+    denc = arr.dictionary_encode()
+    entries = denc.dictionary.to_pylist()
+    idx = denc.indices.to_numpy(zero_copy_only=False)
+    cells_n = len(arr)
     idx_w = _min_width(max(len(entries) - 1, 1))
     len_w = _min_width(max((len(c) for c in entries), default=1))
     for w in (idx_w, idx_w * 2):  # widen indices on a size collision
@@ -258,15 +209,7 @@ def _dict_encode(part: bytes, lens: Sequence[int]) -> bytes:
         out += struct.pack("<II", len(entries), cells_n)
         for c in entries:
             out += len(c).to_bytes(len_w, "little") + c
-        try:
-            import numpy as np  # noqa: PLC0415
-
-            out += np.asarray(idx, dtype=np.int64).astype(
-                f"<u{w}"
-            ).tobytes()
-        except ImportError:
-            for i in idx:
-                out += i.to_bytes(w, "little")
+        out += np.asarray(idx, dtype=np.int64).astype(f"<u{w}").tobytes()
         if len(out) != len(part):  # avoid the raw-part shortcut
             return bytes(out)
     raise ValueError("dictionary part size collision")  # unreachable:
@@ -289,26 +232,14 @@ def _delta_encode(part: bytes, width: int) -> bytes:
     return enc
 
 
-_LZ4_CODEC = None
-
-
 def _lz4_compress(part: bytes) -> bytes:
-    """Real LZ4 block format via pyarrow's lz4_raw codec (cached); the
-    dependency-free fallback emits one literal-only sequence (valid,
-    uncompressed LZ4)."""
-    global _LZ4_CODEC
-    try:
-        if _LZ4_CODEC is None:
-            import pyarrow as pa  # noqa: PLC0415
-
-            _LZ4_CODEC = pa.Codec("lz4_raw")
-        comp = _LZ4_CODEC.compress(part, asbytes=True)
-        # len(comp) == len(part) would misfire the reader's raw-part
-        # shortcut; the literal-only encoding below is always longer
-        if len(comp) != len(part):
-            return comp
-    except (ImportError, ValueError):
-        pass
+    """Real LZ4 block format via pyarrow's lz4_raw codec."""
+    comp = _codec("lz4_raw").compress(part, asbytes=True)
+    # len(comp) == len(part) would misfire the reader's raw-part
+    # shortcut; one literal-only sequence (valid, uncompressed LZ4) is
+    # always longer
+    if len(comp) != len(part):
+        return comp
     n = len(part)
     if n == 0:
         return b"\x00"
@@ -1644,24 +1575,16 @@ def _serialize_rtree(
     ``fanout``, serialized ROOT->LEAF as
     [u32 fanout][u32 levels][per level: u64 count + MBRs]."""
 
+    import numpy as np  # noqa: PLC0415
+
     def mbr_of(s: int, e: int) -> list:
         out = []
         for d in schema.dims:
-            vals = columns[d.name]
-            try:
-                import numpy as np  # noqa: PLC0415
-
-                if (
-                    isinstance(vals, np.ndarray)
-                    and vals.dtype.kind in "iuf"
-                ):
-                    sl = vals[s:e]
-                    out.append((sl.min().item(), sl.max().item()))
-                    continue
-            except ImportError:
-                pass
-            sl = vals[s:e]
-            out.append((min(sl), max(sl)))
+            sl = columns[d.name][s:e]
+            if isinstance(sl, np.ndarray) and sl.dtype.kind in "iuf":
+                out.append((sl.min().item(), sl.max().item()))
+            else:
+                out.append((min(sl), max(sl)))
         return out
 
     def merge(group: list) -> list:
@@ -2513,13 +2436,13 @@ def _seq_float_sum(vals) -> float:
     """Sequential float64 accumulation in cell order (np.cumsum is a
     strict running sum, so its last element is bit-identical to the
     python loop — used when the column coerces cleanly)."""
-    try:
-        import numpy as np  # noqa: PLC0415
+    import numpy as np  # noqa: PLC0415
 
+    try:
         arr = np.asarray(vals)
         if arr.dtype.kind in "iuf":
             return float(np.cumsum(arr, dtype=np.float64)[-1])
-    except (ImportError, TypeError, ValueError):
+    except (TypeError, ValueError):
         pass
     acc = 0.0
     for v in vals:
@@ -2569,16 +2492,16 @@ def _field_tile_stats(field, vals, slices):
     # int sums fall back to python's arbitrary-precision sum whenever a
     # magnitude bound says int64 could overflow; NaNs fall back (python
     # min/max order semantics).
+    import numpy as np  # noqa: PLC0415
+
     arr = None
     try:
-        import numpy as np  # noqa: PLC0415
-
         cand = np.asarray(vals)
         if cand.dtype.kind in "iuf" and not (
             cand.dtype.kind == "f" and np.isnan(cand).any()
         ):
             arr = cand
-    except (ImportError, TypeError, ValueError):
+    except (TypeError, ValueError):
         arr = None
     if arr is not None:
         mins = [arr[s:e].min().item() for s, e in slices]
@@ -2680,6 +2603,8 @@ def _write_fragment_metadata_v19(
     fields = {a.name: a for a in schema.attrs}
     fields.update({d.name: d for d in schema.dims})
     _nmcode = {nm: _DT[fields[nm].dtype_id][1] for nm in fields}
+
+    import numpy as np  # noqa: PLC0415
 
     from tiledb_mariadb_spark.sources.tiledb_native_crypto import (  # noqa: PLC0415
         key_for_path,
@@ -2853,20 +2778,11 @@ def _write_fragment_metadata_v19(
             raw += lo_b + hi_b
         elif empty:
             raw += struct.pack(f"<2{code}", 0, 0)
+        elif isinstance(vals, np.ndarray) and vals.dtype.kind in "iuf":
+            raw += struct.pack(
+                f"<2{code}", vals.min().item(), vals.max().item()
+            )
         else:
-            try:
-                import numpy as np  # noqa: PLC0415
-
-                if (
-                    isinstance(vals, np.ndarray)
-                    and vals.dtype.kind in "iuf"
-                ):
-                    raw += struct.pack(
-                        f"<2{code}", vals.min().item(), vals.max().item()
-                    )
-                    continue
-            except ImportError:
-                pass
             raw += struct.pack(f"<2{code}", min(vals), max(vals))
     if dense_box is not None:
         # sparse_tile_num is sparse-specific; dense cell counts derive

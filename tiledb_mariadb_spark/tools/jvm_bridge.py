@@ -210,9 +210,8 @@ def _rows_numpy(a, info, want, rng, conds) -> bool:
     """Pandas-free rows emission: columnar numpy decode -> vectorized
     condition masks -> Arrow IPC with the EXPLICIT schema the JVM
     columnar reader wraps.  Returns False (emitted nothing) when the
-    shape falls outside the numpy fast path, a column's declared type
-    is exotic, or pyarrow is unavailable — the caller then runs the
-    exact pandas path.
+    shape falls outside the numpy fast path or a column's declared type
+    is exotic — the caller then runs the exact pandas path.
 
     pandas is actively BLOCKED for the duration: pyarrow's pandas shim
     imports it on the first ``pa.array`` call even for pure-numpy
@@ -237,19 +236,48 @@ def _rows_numpy(a, info, want, rng, conds) -> bool:
             sys.meta_path.remove(_BlockPandas)
 
 
-def _rows_numpy_inner(a, info, want, rng, conds) -> bool:
-    try:
-        import numpy as np  # noqa: PLC0415
-        import pyarrow as pa  # noqa: PLC0415
-    except ImportError:
-        return False
-    _PA = {
+def _arrow_types() -> dict:
+    """Spark DDL type -> the Arrow type the JVM columnar reader wraps as
+    that Spark type."""
+    import pyarrow as pa  # noqa: PLC0415
+
+    return {
         "bigint": pa.int64(), "int": pa.int32(),
         "smallint": pa.int16(), "tinyint": pa.int8(),
         "double": pa.float64(), "float": pa.float32(),
         "string": pa.string(), "boolean": pa.bool_(),
         "binary": pa.binary(),
     }
+
+
+def _emit_arrow(tbl) -> None:
+    """Stream ``tbl`` to stdout as Arrow IPC in bounded batches; the JVM
+    columnar reader hands each batch to Spark as one ColumnarBatch."""
+    import pyarrow as pa  # noqa: PLC0415
+
+    sink = sys.stdout.buffer
+    with pa.ipc.new_stream(sink, tbl.schema) as wr:
+        wr.write_table(tbl, max_chunksize=1 << 15)
+    sink.flush()
+
+
+def _zero_column_table(n: int):
+    """``n`` rows and no columns — a COUNT-style scan prunes to zero
+    columns, and the batches' row counts carry its rows."""
+    import pyarrow as pa  # noqa: PLC0415
+
+    return pa.Table.from_batches([
+        pa.RecordBatch.from_struct_array(
+            pa.array([{}] * n, type=pa.struct([]))
+        )
+    ])
+
+
+def _rows_numpy_inner(a, info, want, rng, conds) -> bool:
+    import numpy as np  # noqa: PLC0415
+    import pyarrow as pa  # noqa: PLC0415
+
+    _PA = _arrow_types()
     ddl = {x.name: x.dtype for x in list(info.dims) + list(info.attrs)}
     if not all(ddl.get(c) in _PA for c in want):
         return False
@@ -276,21 +304,13 @@ def _rows_numpy_inner(a, info, want, rng, conds) -> bool:
         # re-applies the global limit, so truncating survivors is safe
         arrays = {nm: arr[: a.limit] for nm, arr in arrays.items()}
     cols = [c for c in want if c in names]
-    n = len(arrays[names[0]]) if names else 0
-    if not cols:
-        # COUNT-style scans prune to zero columns: one empty JSON row
-        # per surviving row (zero-column Arrow carries no row count)
-        w = sys.stdout.write
-        for _ in range(n):
-            w("[]\n")
-        return True
-    tbl = pa.table(
-        {c: pa.array(arrays[c], type=_PA[ddl[c]]) for c in cols}
-    )
-    sink = sys.stdout.buffer
-    with pa.ipc.new_stream(sink, tbl.schema) as wr:
-        wr.write_table(tbl, max_chunksize=1 << 15)
-    sink.flush()
+    if cols:
+        tbl = pa.table(
+            {c: pa.array(arrays[c], type=_PA[ddl[c]]) for c in cols}
+        )
+    else:
+        tbl = _zero_column_table(len(arrays[names[0]]) if names else 0)
+    _emit_arrow(tbl)
     return True
 
 
@@ -826,15 +846,12 @@ def main(argv=None) -> int:
         return 0
 
     # rows: the honest (split-parallel) scan fallback — pushed
-    # conditions applied EXACTLY, projection pruned.  Wire format is
-    # ARROW IPC when pyarrow imports (the Java side auto-detects: an
-    # Arrow stream never starts with '['), JSON lines otherwise —
-    # Arrow moves whole columns instead of per-cell JSON, ~an order of
-    # magnitude on wide scans.  The NUMPY-ONLY path runs first: this
-    # process is spawned PER PARTITION, and importing pandas costs
-    # ~0.5 s per spawn — more than decoding the split itself.  Only
-    # shapes outside the columnar fast path (or a missing pyarrow)
-    # pay the pandas fallback.
+    # conditions applied EXACTLY, projection pruned, emitted as Arrow
+    # IPC (whole columns, not per-cell values).  The NUMPY-ONLY path
+    # runs first: this process is spawned PER PARTITION, and importing
+    # pandas costs ~0.5 s per spawn — more than decoding the split
+    # itself.  Only shapes outside the columnar fast path pay the
+    # pandas path.
     try:
         be = NativeDecoderBackend(encryption_key=a.encryption_key)
         info = be.info(a.uri, at=a.at)
@@ -852,8 +869,6 @@ def main(argv=None) -> int:
         conds = _parse_conditions(a.conditions)
         if _rows_numpy(a, info, want, rng, conds):
             return 0
-        import pandas as pd  # noqa: PLC0415
-
         pdf = be.read_range(
             a.uri, rng, want, at=a.at,
             conditions=conds,
@@ -863,62 +878,25 @@ def main(argv=None) -> int:
     except Exception as e:  # noqa: BLE001 - bridge boundary
         print(f"tiledb_agg rows bridge: {e}", file=sys.stderr)
         return 3
-    w = sys.stdout.write
-    if not len(pdf.columns):
-        # COUNT-style scans prune to zero columns; emit one empty JSON
-        # row per surviving row (itertuples yields nothing on 0 cols)
-        for _ in range(len(pdf)):
-            w("[]\n")
-        return 0
-    try:
-        import pyarrow as pa  # noqa: PLC0415
+    import pyarrow as pa  # noqa: PLC0415
 
+    _PA = _arrow_types()
+    ddl = {x.name: x.dtype for x in list(info.dims) + list(info.attrs)}
+    if not len(pdf.columns):
+        tbl = _zero_column_table(len(pdf))
+    elif all(ddl.get(c) in _PA for c in pdf.columns):
         # EXPLICIT Arrow schema from the array schema (never pandas
-        # inference): the JVM side wraps these vectors directly in
-        # ArrowColumnVector for columnar reads, so the physical types
-        # must equal the declared Spark types — and explicit int64
-        # construction keeps nullable bigints exact (no float64 detour)
-        _PA = {
-            "bigint": pa.int64(), "int": pa.int32(),
-            "smallint": pa.int16(), "tinyint": pa.int8(),
-            "double": pa.float64(), "float": pa.float32(),
-            "string": pa.string(), "boolean": pa.bool_(),
-            "binary": pa.binary(),
-        }
-        ddl = {
-            x.name: x.dtype for x in list(info.dims) + list(info.attrs)
-        }
-        if all(ddl.get(c) in _PA for c in pdf.columns):
-            tbl = pa.Table.from_pandas(
-                pdf,
-                schema=pa.schema(
-                    [pa.field(c, _PA[ddl[c]]) for c in pdf.columns]
-                ),
-                preserve_index=False,
-            )
-        else:  # exotic column types: inference (row-path consumers)
-            tbl = pa.Table.from_pandas(pdf, preserve_index=False)
-        sink = sys.stdout.buffer
-        with pa.ipc.new_stream(sink, tbl.schema) as wr:
-            # bounded batches: the columnar reader hands each one to
-            # Spark as a ColumnarBatch
-            wr.write_table(tbl, max_chunksize=1 << 15)
-        sink.flush()
-        return 0
-    except ImportError:
-        pass
-    pdf = pdf.astype(object).where(pd.notna(pdf), None)
-    for r in pdf.itertuples(index=False, name=None):
-        try:
-            w(json.dumps(list(r), default=_json_cell))
-        except TypeError as e:
-            print(
-                f"tiledb_agg rows bridge: non-JSON cell ({e}); use the "
-                "tiledb_native Python datasource for this array",
-                file=sys.stderr,
-            )
-            return 3
-        w("\n")
+        # inference): the physical types must equal the declared Spark
+        # types — and explicit int64 construction keeps nullable
+        # bigints exact (no float64 detour)
+        tbl = pa.Table.from_pandas(
+            pdf,
+            schema=pa.schema([pa.field(c, _PA[ddl[c]]) for c in pdf.columns]),
+            preserve_index=False,
+        )
+    else:  # exotic column types: inference
+        tbl = pa.Table.from_pandas(pdf, preserve_index=False)
+    _emit_arrow(tbl)
     return 0
 
 
