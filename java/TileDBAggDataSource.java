@@ -1,11 +1,11 @@
 // Unified JVM DataSource V2 shim for the native-array tier.
 //
 // The Python DataSource API has no SupportsPushDownAggregates hook, so a
-// plain `SELECT COUNT(*)` over format("tiledb_native") full-scans (the
-// documented q310 gap).  This Java provider closes the group_by_handler
-// behaviors (TileDB-MariaDB mytile/ha_mytile.cc:607-715) unreachable
-// from plain SQL, and (round 8) serves the SCAN path too so the two
-// formats stop being a user-visible seam:
+// plain `SELECT COUNT(*)` over format("tiledb_native") full-scans.  This
+// Java provider closes the group_by_handler behaviors (TileDB-MariaDB
+// mytile/ha_mytile.cc:607-715) unreachable from plain SQL, and (round 8)
+// serves the SCAN path too so the two formats stop being a user-visible
+// seam:
 //
 // - ungrouped COUNT(*) / MIN / MAX / SUM / AVG answered ENTIRELY from
 //   fragment metadata (count_native_array / attr_stats_native_array /
@@ -124,7 +124,7 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
   @Override
   public StructType inferSchema(CaseInsensitiveStringMap options) {
     Bridge b = Bridge.fromOptions(options);
-    JsonNode out = b.call("schema", null, null, null);
+    JsonNode out = b.call("schema");
     if (out == null || !out.path("ok").asBoolean(false)) {
       throw new RuntimeException(
           "tiledb_agg: schema bridge failed for " + b.uri
@@ -170,24 +170,10 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
           o.get("encryption_key"));
     }
 
-    Process start(
-        String cmd,
-        String aggs,
-        String rangesJson,
-        String condsJson,
-        String columnsJson,
-        String group) {
-      return start(cmd, aggs, rangesJson, condsJson, columnsJson, group, null);
-    }
-
-    Process start(
-        String cmd,
-        String aggs,
-        String rangesJson,
-        String condsJson,
-        String columnsJson,
-        String group,
-        Integer limit) {
+    /** Launch {@code python -m ...jvm_bridge cmd --uri uri [--at]
+     * [--encryption-key]} followed by the flag/value {@code pairs}
+     * whose value is non-null. */
+    Process launch(String cmd, String... pairs) {
       List<String> argv = new ArrayList<>();
       argv.add(python);
       argv.add("-m");
@@ -195,43 +181,19 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
       argv.add(cmd);
       argv.add("--uri");
       argv.add(uri);
-      if (at != null) {
-        argv.add("--at");
-        argv.add(at);
-      }
-      if (encryptionKey != null) {
-        argv.add("--encryption-key");
-        argv.add(encryptionKey);
-      }
-      if (aggs != null) {
-        argv.add("--aggs");
-        argv.add(aggs);
-      }
-      if (rangesJson != null) {
-        argv.add("--ranges");
-        argv.add(rangesJson);
-      }
-      if (condsJson != null) {
-        argv.add("--conditions");
-        argv.add(condsJson);
-      }
-      if (columnsJson != null) {
-        argv.add("--columns");
-        argv.add(columnsJson);
-      }
-      if (group != null) {
-        argv.add("--group");
-        argv.add(group);
-      }
-      if (limit != null) {
-        argv.add("--limit");
-        argv.add(String.valueOf(limit));
+      String[] common = {"--at", at, "--encryption-key", encryptionKey};
+      for (String[] ps : new String[][] {common, pairs}) {
+        for (int i = 0; i < ps.length; i += 2) {
+          if (ps[i + 1] != null) {
+            argv.add(ps[i]);
+            argv.add(ps[i + 1]);
+          }
+        }
       }
       ProcessBuilder pb = new ProcessBuilder(argv);
       if (!pythonPath.isEmpty()) {
         pb.environment().put("PYTHONPATH", pythonPath);
       }
-      pb.redirectErrorStream(false);
       try {
         return pb.start();
       } catch (Exception e) {
@@ -239,81 +201,15 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
       }
     }
 
-    Process startWithFrags(String cmd, String fragsJson) {
-      List<String> argv = new ArrayList<>();
-      argv.add(python);
-      argv.add("-m");
-      argv.add("tiledb_mariadb_spark.tools.jvm_bridge");
-      argv.add(cmd);
-      argv.add("--uri");
-      argv.add(uri);
-      if (encryptionKey != null) {
-        argv.add("--encryption-key");
-        argv.add(encryptionKey);
-      }
-      argv.add("--frags");
-      argv.add(fragsJson);
-      ProcessBuilder pb = new ProcessBuilder(argv);
-      if (!pythonPath.isEmpty()) {
-        pb.environment().put("PYTHONPATH", pythonPath);
-      }
-      pb.redirectErrorStream(false);
+    /** Single-JSON-object commands (schema / agg / gagg / splits /
+     * topk). null on launch failure or empty output. */
+    JsonNode call(String cmd, String... pairs) {
       try {
-        return pb.start();
-      } catch (Exception e) {
-        throw new RuntimeException("tiledb_agg: cannot launch bridge: " + e, e);
-      }
-    }
-
-    JsonNode callTopK(String spec, String condsJson) {
-      List<String> argv = new ArrayList<>();
-      argv.add(python);
-      argv.add("-m");
-      argv.add("tiledb_mariadb_spark.tools.jvm_bridge");
-      argv.add("topk");
-      argv.add("--uri");
-      argv.add(uri);
-      if (at != null) {
-        argv.add("--at");
-        argv.add(at);
-      }
-      if (encryptionKey != null) {
-        argv.add("--encryption-key");
-        argv.add(encryptionKey);
-      }
-      argv.add("--topk");
-      argv.add(spec);
-      if (condsJson != null) {
-        argv.add("--conditions");
-        argv.add(condsJson);
-      }
-      ProcessBuilder pb = new ProcessBuilder(argv);
-      if (!pythonPath.isEmpty()) {
-        pb.environment().put("PYTHONPATH", pythonPath);
-      }
-      try {
-        Process p = pb.start();
+        Process p = launch(cmd, pairs);
         String out =
             new String(p.getInputStream().readAllBytes(), StandardCharsets.UTF_8);
         p.waitFor();
         return out.isEmpty() ? null : new ObjectMapper().readTree(out);
-      } catch (Exception e) {
-        return null;
-      }
-    }
-
-    /** Single-JSON-object commands (schema / agg / gagg / splits).
-     * null on launch failure. */
-    JsonNode call(String cmd, String aggs, String condsJson, String group) {
-      try {
-        Process p = start(cmd, aggs, null, condsJson, null, group);
-        String out =
-            new String(p.getInputStream().readAllBytes(), StandardCharsets.UTF_8);
-        p.waitFor();
-        if (out.isEmpty()) {
-          return null;
-        }
-        return new ObjectMapper().readTree(out);
       } catch (Exception e) {
         return null;
       }
@@ -477,7 +373,10 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
       }
       Bridge b = Bridge.fromOptions(options);
       JsonNode out =
-          b.callTopK(col + ":" + (asc ? "asc" : "desc") + ":" + n, condsJson());
+          b.call(
+              "topk",
+              "--topk", col + ":" + (asc ? "asc" : "desc") + ":" + n,
+              "--conditions", condsJson());
       if (out != null
           && out.path("ok").asBoolean(false)
           && out.hasNonNull("thr")) {
@@ -827,7 +726,7 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
       List<StructField> fields = new ArrayList<>();
       int off = 0;
       if (groupCols.isEmpty()) {
-        JsonNode out = b.call("agg", String.join(";", reqs), cj, null);
+        JsonNode out = b.call("agg", "--aggs", String.join(";", reqs), "--conditions", cj);
         if (out == null || !out.path("ok").asBoolean(false)) {
           return false; // metadata cannot prove it: honest scan fallback
         }
@@ -853,7 +752,11 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
           gspec.append(groupCols.get(i)).append(":").append(groupWidths.get(i));
         }
         JsonNode out =
-            b.call("gagg", String.join(";", reqs), cj, gspec.toString());
+            b.call(
+                "gagg",
+                "--aggs", String.join(";", reqs),
+                "--conditions", cj,
+                "--group", gspec.toString());
         if (out == null || !out.path("ok").asBoolean(false)) {
           return false;
         }
@@ -1125,7 +1028,7 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
       String key = effectiveConds() == null ? "" : effectiveConds();
       if (planOut == null || !key.equals(planKey)) {
         Bridge b = Bridge.fromOptions(new CaseInsensitiveStringMap(opts));
-        planOut = b.call("splits", null, effectiveConds(), null);
+        planOut = b.call("splits", "--conditions", effectiveConds());
         planKey = key;
       }
       return planOut;
@@ -1274,7 +1177,12 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
       this.schema = schema;
       Bridge b = Bridge.fromOptions(new CaseInsensitiveStringMap(part.opts));
       this.proc =
-          b.start("rows", null, part.rangesJson, part.condsJson, part.columnsJson, null, part.limit);
+          b.launch(
+              "rows",
+              "--ranges", part.rangesJson,
+              "--conditions", part.condsJson,
+              "--columns", part.columnsJson,
+              "--limit", part.limit == null ? null : String.valueOf(part.limit));
       try {
         BufferedInputStream in = new BufferedInputStream(proc.getInputStream());
         in.mark(1);
@@ -1426,7 +1334,7 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
       Bridge b = Bridge.fromOptions(new CaseInsensitiveStringMap(opts));
       try {
         String fragsJson = new ObjectMapper().writeValueAsString(frags);
-        Process p = b.startWithFrags("commitfrags", fragsJson);
+        Process p = b.launch("commitfrags", "--frags", fragsJson);
         String out =
             new String(p.getInputStream().readAllBytes(), StandardCharsets.UTF_8);
         int rc = p.waitFor();
@@ -1475,7 +1383,7 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
     AggDataWriter(StructType schema, Map<String, String> opts) {
       this.schema = schema;
       Bridge b = Bridge.fromOptions(new CaseInsensitiveStringMap(opts));
-      this.proc = b.start("write", null, null, null, null, null);
+      this.proc = b.launch("write");
       this.out =
           new java.io.BufferedWriter(
               new java.io.OutputStreamWriter(

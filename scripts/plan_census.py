@@ -12,10 +12,11 @@ regressions show up in diffs, not just in test failures.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SKIP = {
     "q90_stream_window",

@@ -8,6 +8,7 @@ import glob
 import math
 import os
 import random
+import shutil
 
 import pytest
 
@@ -235,31 +236,36 @@ def test_windowed_buckets_fuzz(tmp_path):
         bucketed_agg_native(uri, 50, ranges={"v": (0, 1)})
 
 
+@pytest.mark.skipif(
+    shutil.which("javac") is None or shutil.which("jar") is None,
+    reason="needs a JDK (javac + jar) to build the shim",
+)
 def test_sql_surface_metadata_equals_scan(spark, tmp_path):
-    """sql_bucketed_stats_from_array: the metadata view equals the
-    distributed groupBy fallback row-for-row (forced by a delete
-    commit, which trips the trust rules)."""
-    from tiledb_mariadb_spark.sources.spark_datasource import (
-        sql_bucketed_stats_from_array,
-    )
+    """GROUP BY FLOOR(k/300) over format('tiledb_agg'): the bucketed
+    metadata rollup equals the scan fallback row-for-row (forced by a
+    delete commit, which trips the trust rules)."""
+    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader
 
     uri = _mk(tmp_path)
     _write(uri, 0, 700, seed=11, ts=10)
     _write(uri, 1200, 500, seed=12, ts=20)
-    how = sql_bucketed_stats_from_array(
-        spark, "b_meta", uri, 300, ranges={"k": (150, 1450)})
-    assert how == "metadata"
+    agg_reader(spark, uri).load().createOrReplaceTempView("b_sql")
+    stats = ", ".join(
+        f"MIN({c}), MAX({c}), SUM({c})" for c in ("k", "v", "f", "w")
+    )
+    q = (
+        f"SELECT FLOOR(k/300) AS b, COUNT(*), {stats}, COUNT(w), "
+        "MIN(tag), MAX(tag) FROM b_sql WHERE k BETWEEN 150 AND 1450 "
+        "GROUP BY FLOOR(k/300) ORDER BY b"
+    )
+    plan = spark.sql(q)._jdf.queryExecution().executedPlan().toString()
+    assert "GroupedPushedAggregates" in plan, plan
+    meta = [tuple(r) for r in spark.sql(q).collect()]
     # no-op delete trips the trust rules -> scan fallback, same numbers
     write_delete_condition(uri, [("v", ">", 10**9)], ts=30)
-    how2 = sql_bucketed_stats_from_array(
-        spark, "b_scan", uri, 300, ranges={"k": (150, 1450)})
-    assert how2 == "scan"
-    q = (
-        "SELECT bucket, column, cnt, min_num, max_num, sum_num,"
-        " null_count, min_str, max_str FROM {} ORDER BY bucket, column"
-    )
-    meta = [tuple(r) for r in spark.sql(q.format("b_meta")).collect()]
-    scan = [tuple(r) for r in spark.sql(q.format("b_scan")).collect()]
+    plan2 = spark.sql(q)._jdf.queryExecution().executedPlan().toString()
+    assert "GroupedPushedAggregates" not in plan2, plan2
+    scan = [tuple(r) for r in spark.sql(q).collect()]
     assert len(meta) == len(scan) > 0
     for m, s in zip(meta, scan):
         for x, y in zip(m, s):

@@ -10,7 +10,6 @@ repo's decoder — and falls back to an honest bridge row-scan whenever
 the metadata trust rules cannot prove a value.
 """
 
-import glob
 import os
 import shutil
 
@@ -22,8 +21,10 @@ from tiledb_mariadb_spark.sources.tiledb_native import (
 )
 from tiledb_mariadb_spark.sources.tiledb_native_write import (
     create_native_array,
+    write_delete_condition,
     write_native_fragment,
 )
+from tiledb_mariadb_spark.suite.surfaces3 import poison_data_tiles
 
 pytestmark = pytest.mark.skipif(
     shutil.which("javac") is None or shutil.which("jar") is None,
@@ -31,8 +32,8 @@ pytestmark = pytest.mark.skipif(
 )
 
 
-def _mk(tmp_path, n=500):
-    uri = str(tmp_path / "arr")
+def _mk(tmp_path, n=500, name="arr"):
+    uri = str(tmp_path / name)
     create_native_array(
         uri,
         [NativeDim("k", 1, 1, (0, 10**6), None)],
@@ -58,16 +59,6 @@ def _mk(tmp_path, n=500):
     return uri
 
 
-def _poison_data_tiles(uri):
-    """Corrupt every data file, keep only fragment metadata: any path
-    that decodes a tile now fails loudly."""
-    for frag in glob.glob(os.path.join(uri, "__fragments", "__*")):
-        for f in os.listdir(frag):
-            if f != "__fragment_metadata.tdb":
-                with open(os.path.join(frag, f), "wb") as fh:
-                    fh.write(b"PoIsOn")
-
-
 def test_agg_pushdown_zero_decode(spark, tmp_path):
     """Plain-SQL COUNT(*)/MIN/MAX/SUM over format('tiledb_agg') push
     into the scan and are answered from fragment metadata — proven by
@@ -75,21 +66,23 @@ def test_agg_pushdown_zero_decode(spark, tmp_path):
     from tiledb_mariadb_spark.sources.jvm_agg import agg_reader
 
     uri = _mk(tmp_path)
-    _poison_data_tiles(uri)
+    poison_data_tiles(uri)
     agg_reader(spark, uri).load().createOrReplaceTempView("jvm_agg_t")
     q = (
         "SELECT COUNT(*) AS n, MIN(v) AS mn, MAX(v) AS mx, "
-        "SUM(q) AS sq, SUM(v) AS sv, MIN(k) AS mk, "
-        "AVG(v) AS av, COUNT(v) AS cv, COUNT(w) AS cw FROM jvm_agg_t"
+        "SUM(q) AS sq, SUM(v) AS sv, MIN(k) AS mk, MAX(k) AS xk, "
+        "AVG(v) AS av, COUNT(v) AS cv, COUNT(w) AS cw, "
+        "MIN(tag) AS mt, MAX(tag) AS xt FROM jvm_agg_t"
     )
     df = spark.sql(q)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "MetadataAggScan" in plan, plan
     row = df.collect()[0]
     assert (
-        row.n, row.mn, row.mx, row.sq, row.sv, row.mk, row.av, row.cv,
-        row.cw,
-    ) == (500, 0.0, 249.5, 1494, 62375.0, 0, 124.75, 500, 400)
+        row.n, row.mn, row.mx, row.sq, row.sv, row.mk, row.xk, row.av,
+        row.cv, row.cw, row.mt, row.xt,
+    ) == (500, 0.0, 249.5, 1494, 62375.0, 0, 499, 124.75, 500, 400,
+          "t0", "t2")
     # AVG over a NULL-containing nullable column: sum stat withheld,
     # honest refusal (would need a scan — which is poisoned, so assert
     # only the plan)
@@ -155,6 +148,16 @@ def test_agg_refuses_unprovable_stats(spark, tmp_path):
     assert "MetadataAggScan" not in plan  # honest refusal
     row = spark.sql(q).collect()[0]
     assert (row.n, row.mx) == (100, 999.0)
+    # a visible delete condition voids the trust rules too: the scan
+    # fallback carries the post-delete truth
+    uri2 = _mk(tmp_path, n=500, name="del")
+    write_delete_condition(uri2, [("k", "<", 100)])
+    agg_reader(spark, uri2).load().createOrReplaceTempView("jvm_agg_d")
+    q2 = "SELECT COUNT(*) AS n, MIN(k) AS mk FROM jvm_agg_d"
+    p2 = spark.sql(q2)._jdf.queryExecution().executedPlan().toString()
+    assert "MetadataAggScan" not in p2
+    row = spark.sql(q2).collect()[0]
+    assert (row.n, row.mk) == (400, 100)
 
 
 def test_agg_composes_with_pushed_filters(spark, tmp_path):
@@ -229,7 +232,7 @@ def test_grouped_rollup_pushdown_zero_scan(spark, tmp_path):
         {"k": list(range(400)), "v": [i * 3 for i in range(400)]},
         ts=10, version=19,
     )
-    _poison_data_tiles(uri)
+    poison_data_tiles(uri)
     agg_reader(spark, uri).load().createOrReplaceTempView("jvm_agg_g")
     q = (
         "SELECT FLOOR(k/100) AS b, COUNT(*) AS n, SUM(v) AS sv, "
@@ -583,11 +586,7 @@ def test_topn_pushdown_zone_map(spark, tmp_path):
     import glob as _glob
 
     frags = sorted(_glob.glob(os.path.join(uri, "__fragments", "__*")))
-    for frag in frags[:3]:
-        for fn in os.listdir(frag):
-            if fn != "__fragment_metadata.tdb":
-                with open(os.path.join(frag, fn), "wb") as fh:
-                    fh.write(b"PoIsOn")
+    poison_data_tiles(uri, frags[:3])
     agg_reader(spark, uri).load().createOrReplaceTempView("jvm_topk")
     df = spark.sql("SELECT k, q FROM jvm_topk ORDER BY q DESC LIMIT 5")
     plan = df._jdf.queryExecution().executedPlan().toString()

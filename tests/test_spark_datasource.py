@@ -347,79 +347,6 @@ def test_multivalue_cells_read_as_arrays(spark, tmp_path):
     assert len(sel) == 1 and list(sel[0]["emb"]) == [1.0, 0.0, 0.0, 3.5]
 
 
-def test_sql_stats_table_metadata_mode(spark, tmp_path, monkeypatch):
-    """sql_stats_table_from_array (group_by_handler parity,
-    ha_mytile.cc:607-715): the stats view builds from fragment metadata
-    with every tile-decode entry point poisoned, and its values equal a
-    real scan's aggregates.  Needs v19 fragments — the stats sections
-    only exist in the modern layout."""
-    import tiledb_mariadb_spark.sources.tiledb_native as tn
-    from tiledb_mariadb_spark.sources.spark_datasource import (
-        sql_stats_table_from_array,
-    )
-
-    arr = str(tmp_path / "arr19")
-    create_native_array(
-        arr,
-        dims=[NativeDim("k", 1, 1, (0, 10**6), None)],
-        attrs=[
-            NativeAttr("v", 3, 1, False, None),
-            NativeAttr("tag", 12, 0xFFFFFFFF, False, None),
-        ],
-    )
-    write_native_fragment(
-        arr,
-        {
-            "k": list(range(500)),
-            "v": [i * 0.5 for i in range(500)],
-            "tag": [f"t{i % 3}" for i in range(500)],
-        },
-        ts=10,
-        version=19,
-    )
-
-    def boom(*_a, **_k):
-        raise AssertionError("tile decode reached from stats path")
-
-    for n in ("_read_field", "read_tile_file", "read_byte_span",
-              "read_native_array", "read_native_array_range"):
-        monkeypatch.setattr(tn, n, boom)
-    mode = sql_stats_table_from_array(spark, "stats_md", arr)
-    assert mode == "metadata"
-    rows = {r.column: r for r in spark.sql("SELECT * FROM stats_md").collect()}
-    assert rows["k"].cnt == 500
-    assert (rows["k"].min_num, rows["k"].max_num) == (0.0, 499.0)
-    assert rows["v"].sum_num == sum(i * 0.5 for i in range(500))
-    # var-UTF-8 min/max now COME FROM fragment metadata too (the r7
-    # writer records TEXT stats in the fmmsn tile; decode is still
-    # poisoned above, so these are proven metadata-only).  Arrays whose
-    # fragments carry size-0 var entries still surface None — pinned in
-    # tests/test_native_stats.py.
-    assert rows["tag"].cnt == 500
-    assert (rows["tag"].min_str, rows["tag"].max_str) == ("t0", "t2")
-    assert rows["tag"].min_num is None
-
-
-def test_sql_stats_table_scan_fallback(spark, arr):
-    """A visible delete condition voids the metadata trust rules: the
-    helper reports 'scan' and the view carries the POST-DELETE truth."""
-    from tiledb_mariadb_spark.sources.spark_datasource import (
-        sql_stats_table_from_array,
-    )
-    from tiledb_mariadb_spark.sources.tiledb_native_write import (
-        write_delete_condition,
-    )
-
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    write_delete_condition(arr, [("k", "<", 100)])
-    mode = sql_stats_table_from_array(spark, "stats_scan", arr)
-    assert mode == "scan"
-    rows = {r.column: r for r in
-            spark.sql("SELECT * FROM stats_scan").collect()}
-    assert rows["k"].cnt == 400
-    assert rows["k"].min_num == 100.0
-
-
 def test_bbox_option_prunes_splits(tmp_path):
     """Round-6 spatial pushdown through the FORMAT (cond_push_func_spatial
     parity, ha_mytile.cc:2312-2507): the `bbox` option seeds dim ranges

@@ -9,6 +9,7 @@ import glob
 import math
 import os
 import random
+import shutil
 
 import pytest
 
@@ -331,51 +332,40 @@ def test_encrypted_array(tmp_path):
     assert res["audit"]["tiles_contained"] >= 5
 
 
+@pytest.mark.skipif(
+    shutil.which("javac") is None or shutil.which("jar") is None,
+    reason="needs a JDK (javac + jar) to build the shim",
+)
 def test_sql_windowed_stats_surface(spark, tmp_path):
-    """sql_windowed_stats_from_array: metadata mode when provable, scan
-    mode under deletes — identical view shape, identical numbers."""
-    from tiledb_mariadb_spark.sources.spark_datasource import (
-        sql_windowed_stats_from_array,
-    )
+    """WHERE dim BETWEEN over format('tiledb_agg'): metadata-served
+    when provable, a scan under deletes — identical numbers, each
+    pinned against a full range-read recompute."""
+    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader
 
     uri = _mk(tmp_path, capacity=100)
     for i, base in enumerate((0, 1000, 2000)):
         _write(uri, base, 1000, seed=i)
-    mode = sql_windowed_stats_from_array(
-        spark, "wstats_md", uri, {"k": (150, 2849)}
+    agg_reader(spark, uri).load().createOrReplaceTempView("wstats")
+    q = (
+        "SELECT COUNT(*) AS n, SUM(v) AS sv, MIN(v) AS mnv, "
+        "MAX(v) AS mxv, MIN(k) AS mnk, MAX(k) AS mxk, COUNT(w) AS cw, "
+        "MIN(tag) AS mnt, MAX(tag) AS mxt FROM wstats "
+        "WHERE k BETWEEN 150 AND 2849"
     )
-    assert mode == "metadata"
-    md = {
-        r.column: r for r in spark.sql("SELECT * FROM wstats_md").collect()
-    }
+    plan = spark.sql(q)._jdf.queryExecution().executedPlan().toString()
+    assert "MetadataAggScan" in plan, plan
+    md = spark.sql(q).collect()[0]
     exp = _expected(uri, 150, 2849, "v")
-    assert md["v"].cnt == exp["rows"] == 2700
-    assert md["v"].sum_num == float(exp["sum"])
-    assert md["v"].min_num == float(exp["min"])
-    assert md["v"].max_num == float(exp["max"])
     expw = _expected(uri, 150, 2849, "w")
-    assert md["w"].null_count == expw["nulls"]
     expt = _expected(uri, 150, 2849, "tag")
-    assert md["tag"].min_str == expt["min"]
-    assert md["tag"].max_str == expt["max"]
-    assert md["k"].min_num == 150.0 and md["k"].max_num == 2849.0
-
-    # a delete makes metadata unprovable -> scan mode, same numbers
-    write_delete_condition(uri, [("v", ">", 10**9)], ts=None)
-    mode2 = sql_windowed_stats_from_array(
-        spark, "wstats_scan", uri, {"k": (150, 2849)}
+    assert tuple(md) == (
+        exp["rows"], exp["sum"], exp["min"], exp["max"], 150, 2849,
+        expw["count"], expt["min"], expt["max"],
     )
-    assert mode2 == "scan"
-    sc = {
-        r.column: r
-        for r in spark.sql("SELECT * FROM wstats_scan").collect()
-    }
-    for col in ("v", "w", "tag", "k"):
-        assert sc[col].cnt == md[col].cnt, col
-        for fld in ("min_num", "max_num", "sum_num", "null_count",
-                    "min_str", "max_str"):
-            a, b = getattr(sc[col], fld), getattr(md[col], fld)
-            if isinstance(a, float) and isinstance(b, float):
-                assert math.isclose(a, b, rel_tol=1e-9), (col, fld)
-            else:
-                assert a == b, (col, fld)
+    assert md.n == 2700 and md.cw == md.n - expw["nulls"]
+
+    # a delete makes metadata unprovable -> scan, same numbers
+    write_delete_condition(uri, [("v", ">", 10**9)], ts=None)
+    plan2 = spark.sql(q)._jdf.queryExecution().executedPlan().toString()
+    assert "MetadataAggScan" not in plan2, plan2
+    assert spark.sql(q).collect()[0] == md

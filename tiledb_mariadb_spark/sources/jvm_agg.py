@@ -4,10 +4,10 @@ The one group_by_handler behavior (TileDB-MariaDB
 mytile/ha_mytile.cc:607-715) unreachable from plain SQL over the Python
 datasource is aggregate pushdown — the Python DataSource API exposes no
 ``SupportsPushDownAggregates`` hook, so ``SELECT COUNT(*)`` over
-``format("tiledb_native")`` full-scans (COVERAGE.md q310 note).  This
-module compiles ``java/TileDBAggDataSource.java`` against the installed
-pyspark jars (plain ``javac``, no build system) and loads it into the
-session with ``ADD JAR``, after which
+``format("tiledb_native")`` full-scans.  This module compiles
+``java/TileDBAggDataSource.java`` against the installed pyspark jars
+(plain ``javac``, no build system) and loads it into the session with
+``ADD JAR``, after which
 
     spark.read.format("tiledb_agg").option("path", uri)...
 

@@ -26,7 +26,7 @@ Options:
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import TYPE_CHECKING, Iterable, Iterator, List
+from typing import Iterable, Iterator, List
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -47,9 +47,6 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
-
-if TYPE_CHECKING:  # pragma: no cover
-    pass
 
 
 def _backend(encryption_key=None):
@@ -320,9 +317,8 @@ class TileDBNativeReader(DataSourceReader):
             # needle queries over bloom-indexed attrs launch tasks only
             # where candidate fragments live; [] = provably empty.
             # All ops qualify (stats refute range conjuncts too)
-            cfn = getattr(be, "condition_ned", None)
-            cbox = cfn(self.uri, list(self.conditions), at=self.at,
-                       since=self.since) if cfn else None
+            cbox = be.condition_ned(self.uri, list(self.conditions),
+                                    at=self.at, since=self.since)
             if cbox == []:
                 # provably empty: one sentinel partition that reads
                 # nothing (the DS API requires >=1 partition)
@@ -330,8 +326,7 @@ class TileDBNativeReader(DataSourceReader):
             if cbox is not None:
                 for d, (clo, chi) in zip(self._info.dims, cbox):
                     self._merge_range(d.name, clo, chi)
-        weights_fn = getattr(be, "split_weights", None)
-        weights = weights_fn(self.uri, at=self.at) if weights_fn else None
+        weights = be.split_weights(self.uri, at=self.at)
         # string-keyed arrays (no integer axis): cut dim0 at fragment
         # var-NED boundary keys so format() reads parallelize too (r7)
         skeys = None
@@ -339,11 +334,8 @@ class TileDBNativeReader(DataSourceReader):
             isinstance(b, int)
             for d in self._info.dims for b in (d.domain or (None, None))
         ):
-            skeys_fn = getattr(be, "string_split_keys", None)
-            skeys = (
-                skeys_fn(self.uri, at=self.at, since=self.since)
-                if skeys_fn else None
-            )
+            skeys = be.string_split_keys(self.uri, at=self.at,
+                                         since=self.since)
         splits = plan_splits(
             self._info, self.dim_ranges, self.target_splits,
             weights=weights, string_keys=skeys,
@@ -595,345 +587,6 @@ def register_tiledb_native(spark) -> None:
     fragments per micro-batch, ``df.writeStream.format('tiledb_native')``
     lands fragments per epoch."""
     spark.dataSource.register(TileDBNativeDataSource)
-
-
-_STATS_DDL = (
-    "column string, cnt bigint, min_num double, max_num double, "
-    "sum_num double, null_count bigint, min_str string, max_str string"
-)
-
-
-def sql_stats_table_from_array(
-    spark, table_name: str, uri: str, at=None, encryption_key=None
-) -> str:
-    """COUNT/MIN/MAX/SUM/NULL_COUNT of a native array as a SQL table
-    WITHOUT scanning it — group_by_handler parity
-    (mytile/ha_mytile.cc:607-715, which answers these aggregates from
-    storage before the executor runs).  The Python DataSource API has no
-    SupportsPushDownAggregates hook, so ``SELECT COUNT(*) FROM <view>``
-    over the format full-scans; THIS is the documented fast path: one
-    row per column, answered entirely from fragment metadata (footer
-    COUNT + fmmsn stats — zero data tiles decoded).
-
-    Returns ``'metadata'`` when the trust rules allowed a metadata-only
-    answer, else ``'scan'``: the same view computed by a distributed
-    scan+aggregate through the registered format (the honest fallback
-    when deletes/dense/overlap make per-fragment stats unmergeable).
-    Stats a path cannot serve are NULL, never guessed: string columns
-    fill min_str/max_str, numerics min_num/max_num/sum_num, null_count
-    only for nullable attributes."""
-    from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
-        _DT,
-        attr_stats_native_array,
-        count_native_array,
-        open_encryption,
-        parse_array_schema,
-        _schema_path,
-    )
-
-    if encryption_key is not None:
-        open_encryption(uri, encryption_key)
-    cnt = count_native_array(uri, at=at)
-    st = attr_stats_native_array(uri, at=at)
-    schema = parse_array_schema(_schema_path(uri))
-    fields = list(schema.dims) + list(schema.attrs)
-    if cnt is not None and st is not None:
-        rows = []
-        for f in fields:
-            s = st.get(f.name) or {}
-            is_str = _DT[f.dtype_id][1] == "c"
-            has_mm = "min" in s
-            rows.append((
-                f.name,
-                cnt,
-                float(s["min"]) if has_mm and not is_str else None,
-                float(s["max"]) if has_mm and not is_str else None,
-                float(s["sum"]) if "sum" in s else None,
-                int(s["null_count"]) if "null_count" in s else None,
-                str(s["min"]) if has_mm and is_str else None,
-                str(s["max"]) if has_mm and is_str else None,
-            ))
-        spark.createDataFrame(rows, _STATS_DDL).createOrReplaceTempView(
-            table_name
-        )
-        return "metadata"
-    # fallback: identical view shape from a distributed scan+aggregate
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
-    reader = spark.read.format("tiledb_native").option("path", uri)
-    if at is not None:
-        reader = reader.option("at", str(at))
-    if encryption_key is not None:
-        reader = reader.option("encryption_key", encryption_key)
-    register_tiledb_native(spark)
-    df = reader.load()
-    nullable_attrs = {a.name for a in schema.attrs if a.nullable}
-    parts = []
-    for f in fields:
-        is_str = _DT[f.dtype_id][1] == "c"
-        # fixed multi-value (array-typed) cells carry no orderable stats
-        is_num = f.cell_val_num == 1 and not is_str
-        c = F.col(f.name)
-        parts.append(
-            F.struct(
-                F.lit(f.name).alias("column"),
-                F.count(F.lit(1)).alias("cnt"),
-                (F.min(c).cast("double") if is_num
-                 else F.lit(None).cast("double")).alias("min_num"),
-                (F.max(c).cast("double") if is_num
-                 else F.lit(None).cast("double")).alias("max_num"),
-                (F.sum(c).cast("double") if is_num
-                 else F.lit(None).cast("double")).alias("sum_num"),
-                (F.sum(F.when(c.isNull(), 1).otherwise(0))
-                 if f.name in nullable_attrs
-                 else F.lit(None).cast("bigint")).alias("null_count"),
-                (F.min(c).cast("string") if is_str
-                 else F.lit(None).cast("string")).alias("min_str"),
-                (F.max(c).cast("string") if is_str
-                 else F.lit(None).cast("string")).alias("max_str"),
-            ).alias(f.name)
-        )
-    one = df.agg(*parts)
-    stacked = one.select(
-        F.explode(F.array(*[F.col(f.name) for f in fields])).alias("s")
-    ).select("s.*")
-    stacked.createOrReplaceTempView(table_name)
-    return "scan"
-
-
-def sql_windowed_stats_from_array(
-    spark, table_name: str, uri: str, ranges: dict,
-    at=None, since=None, encryption_key=None,
-) -> str:
-    """Range-WINDOWED COUNT/MIN/MAX/SUM/NULL_COUNT as a SQL table — the
-    subarray form of :func:`sql_stats_table_from_array` (group_by_handler
-    parity, mytile/ha_mytile.cc:607-715, extended with TileDB core's
-    tile-stats aggregate design): tiles fully inside ``ranges`` answer
-    from fragment metadata, only boundary tiles decode.  Same row shape
-    (``_STATS_DDL``), ``cnt`` = in-window cell count.
-
-    Returns ``'metadata'`` when the trust rules held (boundary tiles may
-    still have been decoded — exactly, driver-side, O(boundary)), else
-    ``'scan'``: the identical view computed by a distributed
-    filter+aggregate through the registered format.  Enum attributes
-    report LABEL extrema in min_str/max_str on both paths."""
-    from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
-        _DT,
-        open_encryption,
-        parse_array_schema,
-        _schema_path,
-    )
-    from tiledb_mariadb_spark.sources.tiledb_native_agg import (  # noqa: PLC0415
-        windowed_agg_native,
-    )
-
-    if encryption_key is not None:
-        open_encryption(uri, encryption_key)
-    schema = parse_array_schema(_schema_path(uri))
-    fields = list(schema.dims) + list(schema.attrs)
-    res = windowed_agg_native(
-        uri, ranges, fields=[f.name for f in fields], at=at, since=since
-    )
-    if res is not None:
-        rows = []
-        for f in fields:
-            s = res["fields"][f.name]
-            is_str = _DT[f.dtype_id][1] == "c" or bool(
-                getattr(f, "enumeration", None)
-            )
-            rows.append((
-                f.name,
-                res["count"],
-                float(s["min"]) if s["min"] is not None and not is_str
-                else None,
-                float(s["max"]) if s["max"] is not None and not is_str
-                else None,
-                float(s["sum"]) if s["sum"] is not None else None,
-                int(s["null_count"]) if s["null_count"] is not None
-                else None,
-                str(s["min"]) if s["min"] is not None and is_str else None,
-                str(s["max"]) if s["max"] is not None and is_str else None,
-            ))
-        spark.createDataFrame(rows, _STATS_DDL).createOrReplaceTempView(
-            table_name
-        )
-        return "metadata"
-    # fallback: identical view shape from a distributed scan+aggregate
-    # with the window pushed down as dim-range filters
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
-    reader = spark.read.format("tiledb_native").option("path", uri)
-    if at is not None:
-        reader = reader.option("at", str(at))
-    if since is not None:
-        reader = reader.option("since", str(since))
-    if encryption_key is not None:
-        reader = reader.option("encryption_key", encryption_key)
-    register_tiledb_native(spark)
-    df = reader.load()
-    for dname, (lo, hi) in (ranges or {}).items():
-        if lo is not None:
-            df = df.filter(F.col(dname) >= lo)
-        if hi is not None:
-            df = df.filter(F.col(dname) <= hi)
-    nullable_attrs = {a.name for a in schema.attrs if a.nullable}
-    parts = []
-    for f in fields:
-        is_str = _DT[f.dtype_id][1] == "c" or bool(
-            getattr(f, "enumeration", None)
-        )
-        is_num = f.cell_val_num == 1 and not is_str
-        c = F.col(f.name)
-        parts.append(
-            F.struct(
-                F.lit(f.name).alias("column"),
-                F.count(F.lit(1)).alias("cnt"),
-                (F.min(c).cast("double") if is_num
-                 else F.lit(None).cast("double")).alias("min_num"),
-                (F.max(c).cast("double") if is_num
-                 else F.lit(None).cast("double")).alias("max_num"),
-                (F.sum(c).cast("double") if is_num
-                 else F.lit(None).cast("double")).alias("sum_num"),
-                (F.sum(F.when(c.isNull(), 1).otherwise(0))
-                 if f.name in nullable_attrs
-                 else F.lit(None).cast("bigint")).alias("null_count"),
-                (F.min(c).cast("string") if is_str
-                 else F.lit(None).cast("string")).alias("min_str"),
-                (F.max(c).cast("string") if is_str
-                 else F.lit(None).cast("string")).alias("max_str"),
-            ).alias(f.name)
-        )
-    one = df.agg(*parts)
-    stacked = one.select(
-        F.explode(F.array(*[F.col(f.name) for f in fields])).alias("s")
-    ).select("s.*")
-    stacked.createOrReplaceTempView(table_name)
-    return "scan"
-
-
-def sql_bucketed_stats_from_array(
-    spark, table_name: str, uri: str, width: int,
-    at=None, since=None, encryption_key=None, ranges=None,
-) -> str:
-    """GROUP BY ``floor(dim0/width)`` rollup as a SQL table — the
-    grouped twin of :func:`sql_windowed_stats_from_array` (the
-    hypertable continuous-aggregate shape): per bucket and column,
-    COUNT/MIN/MAX/SUM/NULL_COUNT answered from tile stats in one footer
-    walk; only bucket-edge tiles decode.  Row shape: ``bucket`` +
-    ``_STATS_DDL``; ``cnt`` = the bucket's cell count.
-
-    ``ranges`` optionally windows the rollup (dim name -> inclusive
-    (lo, hi)) — GROUP BY bucket WHERE dim BETWEEN a AND b, answered
-    with out-of-window tiles skipped from metadata.
-
-    Returns ``'metadata'`` when the trust rules held, else ``'scan'``:
-    the identical view from a distributed groupBy over the registered
-    format (exact floor division, any-sign coordinates)."""
-    from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
-        _DT,
-        open_encryption,
-        parse_array_schema,
-        _schema_path,
-    )
-    from tiledb_mariadb_spark.sources.tiledb_native_agg import (  # noqa: PLC0415
-        bucketed_agg_native,
-    )
-
-    if encryption_key is not None:
-        open_encryption(uri, encryption_key)
-    schema = parse_array_schema(_schema_path(uri))
-    fields = list(schema.dims) + list(schema.attrs)
-    ddl = "bucket bigint, " + _STATS_DDL
-    res = bucketed_agg_native(
-        uri, width, fields=[f.name for f in fields], at=at, since=since,
-        ranges=ranges,
-    )
-    if res is not None:
-        rows = []
-        for b, ent in sorted(res["buckets"].items()):
-            for f in fields:
-                s = ent["fields"][f.name]
-                is_str = _DT[f.dtype_id][1] == "c" or bool(
-                    getattr(f, "enumeration", None)
-                )
-                rows.append((
-                    int(b),
-                    f.name,
-                    ent["count"],
-                    float(s["min"]) if s["min"] is not None and not is_str
-                    else None,
-                    float(s["max"]) if s["max"] is not None and not is_str
-                    else None,
-                    float(s["sum"]) if s["sum"] is not None else None,
-                    int(s["null_count"]) if s["null_count"] is not None
-                    else None,
-                    str(s["min"]) if s["min"] is not None and is_str
-                    else None,
-                    str(s["max"]) if s["max"] is not None and is_str
-                    else None,
-                ))
-        spark.createDataFrame(rows, ddl).createOrReplaceTempView(
-            table_name
-        )
-        return "metadata"
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
-    reader = spark.read.format("tiledb_native").option("path", uri)
-    if at is not None:
-        reader = reader.option("at", str(at))
-    if since is not None:
-        reader = reader.option("since", str(since))
-    if encryption_key is not None:
-        reader = reader.option("encryption_key", encryption_key)
-    register_tiledb_native(spark)
-    df = reader.load()
-    for dname, (rlo, rhi) in (ranges or {}).items():
-        if rlo is not None:
-            df = df.filter(F.col(dname) >= rlo)
-        if rhi is not None:
-            df = df.filter(F.col(dname) <= rhi)
-    d0 = schema.dims[0].name
-    # exact FLOOR division for any-sign integer keys (never through
-    # double: keys past 2^53 would round): non-negative python-mod
-    # then an exact DIV
-    bexpr = F.expr(
-        f"CAST((`{d0}` - (((`{d0}` % {width}) + {width}) % {width})) "
-        f"DIV {width} AS BIGINT)"
-    )
-    nullable_attrs = {a.name for a in schema.attrs if a.nullable}
-    parts = []
-    for f in fields:
-        is_str = _DT[f.dtype_id][1] == "c" or bool(
-            getattr(f, "enumeration", None)
-        )
-        is_num = f.cell_val_num == 1 and not is_str
-        c = F.col(f.name)
-        parts.append(
-            F.struct(
-                F.lit(f.name).alias("column"),
-                F.count(F.lit(1)).alias("cnt"),
-                (F.min(c).cast("double") if is_num
-                 else F.lit(None).cast("double")).alias("min_num"),
-                (F.max(c).cast("double") if is_num
-                 else F.lit(None).cast("double")).alias("max_num"),
-                (F.sum(c).cast("double") if is_num
-                 else F.lit(None).cast("double")).alias("sum_num"),
-                (F.sum(F.when(c.isNull(), 1).otherwise(0))
-                 if f.name in nullable_attrs
-                 else F.lit(None).cast("bigint")).alias("null_count"),
-                (F.min(c).cast("string") if is_str
-                 else F.lit(None).cast("string")).alias("min_str"),
-                (F.max(c).cast("string") if is_str
-                 else F.lit(None).cast("string")).alias("max_str"),
-            ).alias(f.name)
-        )
-    grouped = df.groupBy(bexpr.alias("bucket")).agg(*parts)
-    stacked = grouped.select(
-        "bucket",
-        F.explode(F.array(*[F.col(f.name) for f in fields])).alias("s"),
-    ).select("bucket", "s.*")
-    stacked.createOrReplaceTempView(table_name)
-    return "scan"
 
 
 def sql_table_from_array(spark, table_name: str, uri: str, **options) -> None:

@@ -184,7 +184,6 @@ class NativeDecoderBackend(ArrayBackend):
         import os  # noqa: PLC0415
 
         from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
-            _DT,
             _SPARK_TYPE,
             _fragment_dirs,
             parse_array_schema,
@@ -243,7 +242,6 @@ class NativeDecoderBackend(ArrayBackend):
             AttrInfo(name=a.name, dtype=_attr_ddl(a), nullable=a.nullable)
             for a in s.attrs
         ]
-        _ = _DT  # imported for typing parity; silence linters
         return ArrayInfo(dims=dims, attrs=attrs, sparse=s.array_type == "SPARSE")
 
     def read_range(self, uri, ranges, columns, at=None, conditions=None,

@@ -3162,19 +3162,34 @@ SPECS.append(
 
 
 # --- q310: metadata-aggregate fast path on the SQL surface ------------------
-# group_by_handler parity (mytile/ha_mytile.cc:607-715): the Python
-# DataSource API has no SupportsPushDownAggregates, so the documented
-# fast path is sql_stats_table_from_array — COUNT/MIN/MAX/SUM of every
-# column as a SQL view answered ENTIRELY from fragment metadata.  The
-# spec PROVES zero data-tile decode the way test_count_is_metadata_only
-# does: every decode entry point is poisoned while the view is built.
-# DuckDB recomputes the same aggregates from the source parquet.
+# group_by_handler parity (mytile/ha_mytile.cc:607-715): plain-SQL
+# COUNT/MIN/MAX/SUM of every column over format("tiledb_agg"), answered
+# ENTIRELY from fragment metadata.  The spec PROVES zero data-tile decode
+# across processes: every data file is overwritten before the SQL runs,
+# so a fallback to the bridge row scan would fail loudly, and the plan
+# must show one MetadataAggScan per column.  DuckDB recomputes the same
+# aggregates from the source parquet.
+def poison_data_tiles(uri, frags=None):
+    """Overwrite every data file of ``frags`` (fragment directories,
+    default all of ``uri``'s), keeping only fragment metadata: any path
+    that decodes a tile, in any process, now fails loudly."""
+    import glob  # noqa: PLC0415
+    import os  # noqa: PLC0415
+
+    if frags is None:
+        frags = glob.glob(os.path.join(uri, "__fragments", "__*"))
+    for frag in frags:
+        for f in os.listdir(frag):
+            if f != "__fragment_metadata.tdb":
+                with open(os.path.join(frag, f), "wb") as fh:
+                    fh.write(b"PoIsOn")
+
+
 def q310_native_stats_sql(spark, sf_dir):
     import tempfile  # noqa: PLC0415
 
-    import tiledb_mariadb_spark.sources.tiledb_native as tn  # noqa: PLC0415
-    from tiledb_mariadb_spark.sources.spark_datasource import (  # noqa: PLC0415
-        sql_stats_table_from_array,
+    from tiledb_mariadb_spark.sources.jvm_agg import (  # noqa: PLC0415
+        agg_reader,
     )
     from tiledb_mariadb_spark.sources.tiledb_array import (  # noqa: PLC0415
         write_array,
@@ -3211,26 +3226,22 @@ def q310_native_stats_sql(spark, sf_dir):
         )
     )
     write_array(src.repartition(4), uri)
-    # poison every tile-decode entry point: the view must still build
-    poisoned = ["_read_field", "read_tile_file", "read_byte_span",
-                "read_native_array", "read_native_array_range"]
-    saved = {n: getattr(tn, n) for n in poisoned}
-
-    def _boom(*_a, **_k):
-        raise AssertionError("tile decode reached from the stats path")
-
-    try:
-        for n in poisoned:
-            setattr(tn, n, _boom)
-        mode = sql_stats_table_from_array(spark, "q310_stats", uri)
-    finally:
-        for n, fn in saved.items():
-            setattr(tn, n, fn)
-    assert mode == "metadata", f"stats path fell back to {mode}"
-    return spark.sql(
-        "SELECT column AS col_name, cnt, min_num, max_num, sum_num "
-        "FROM q310_stats ORDER BY col_name"
+    poison_data_tiles(uri)
+    agg_reader(spark, uri).load().createOrReplaceTempView("q310_arr")
+    df = spark.sql(
+        " UNION ALL ".join(
+            f"SELECT '{c}' AS col_name, COUNT(*) AS cnt, "
+            f"CAST(MIN({c}) AS DOUBLE) AS min_num, "
+            f"CAST(MAX({c}) AS DOUBLE) AS max_num, "
+            f"CAST(SUM({c}) AS DOUBLE) AS sum_num FROM q310_arr"
+            for c in ("o_orderkey", "price_cents", "o_custkey")
+        )
+        + " ORDER BY col_name"
     )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    n_meta = plan.count("MetadataAggScan")
+    assert n_meta == 3, f"{n_meta} metadata-served columns of 3:\n{plan}"
+    return df
 
 
 Q310_SQL = """
@@ -3266,8 +3277,8 @@ SPECS.append(
         q310_native_stats_sql,
         Q310_SQL,
         "SQL-surface metadata aggregates (group_by_handler parity): "
-        "sql_stats_table_from_array answers COUNT/MIN/MAX/SUM from "
-        "fragment metadata with every tile-decode entry point poisoned, "
+        "plain-SQL COUNT/MIN/MAX/SUM over format('tiledb_agg') answered "
+        "from fragment metadata with every data file overwritten, "
         "checked against DuckDB on the source parquet",
     )
 )
