@@ -1082,20 +1082,15 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
 
     @Override
     public InputPartition[] planInputPartitions() {
-      // split plan from the bridge (dim0 cuts / R-tree weights / string
-      // boundary keys — the same planner read_array uses), intersected
-      // with pushed dim ranges + condition-NED; empty:true = provably
-      // no matching fragments -> ZERO partitions; a null entry =
-      // unbounded full scan
+      // split plan from the bridge: scan_ranges (pushed dim ranges +
+      // condition-NED) then scan_splits (dim0 cuts / R-tree weights /
+      // string boundary keys), the planner every read surface shares.
+      // An empty list = provably empty -> ZERO partitions; a null entry
+      // = unbounded full scan; no usable reply = one unbounded scan
       JsonNode out = planCall();
       List<InputPartition> parts = new ArrayList<>();
-      if (out != null
-          && out.path("ok").asBoolean(false)
-          && out.path("empty").asBoolean(false)) {
-        return new InputPartition[0];
-      }
       if (out != null && out.path("ok").asBoolean(false)
-          && out.path("splits").isArray() && out.path("splits").size() > 0) {
+          && out.path("splits").isArray()) {
         for (JsonNode s : out.path("splits")) {
           parts.add(
               new RowsPartition(

@@ -9,11 +9,12 @@ Reports wall for both plans; results are cross-checked row-identical.
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np  # noqa: E402
 

@@ -23,11 +23,12 @@ is generated arithmetic here, which is the point).
 from __future__ import annotations
 
 import json
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BASE = 1_000_000
 CELL_BYTES = 16  # float64 + int64 attr payload (dims are generated)

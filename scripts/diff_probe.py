@@ -11,11 +11,12 @@ self-join (include_unchanged=True) shows the O(array) alternative.
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np  # noqa: E402
 

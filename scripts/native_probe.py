@@ -13,11 +13,12 @@ Usage: python scripts/native_probe.py [cells ...]   (default 50k 200k 800k)
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:

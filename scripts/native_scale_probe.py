@@ -24,11 +24,12 @@ Base size is 1M rows x (int64 dim + float64 + int64 attrs) = 24 B/row.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BASE_ROWS = 1_000_000
 ROW_BYTES = 24  # int64 dim + float64 + int64 attr, decoded

@@ -16,7 +16,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SKIP = {
     "q90_stream_window",
@@ -65,7 +66,7 @@ def main() -> int:
             r"PushedFilters: \[\]", plan
         ) else "none"
         rows.append((name, exch, bcast, py, pushed))
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write(
             "# Plan census (generated by scripts/plan_census.py at "
             f"{sf_dir})\n\n"

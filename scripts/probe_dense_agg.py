@@ -5,11 +5,12 @@ Fragment-per-day dense raster (the time-partitioned ingest shape),
 arithmetic vs the same rollup from a fill-materializing connector scan.
 Writes one BASELINE.md-ready line."""
 
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 

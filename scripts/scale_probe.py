@@ -19,9 +19,10 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-ROOT = "/root/repo/.tmp/scale"
+ROOT = os.path.join(REPO, ".tmp", "scale")
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 MULTS = [int(x) for x in (sys.argv[1:] or ["1", "10", "30"])]
 

@@ -23,11 +23,12 @@ int64 + ~5-byte lang string = ~29 B/cell decoded.
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BASE_ROWS = 1_000_000
 ROW_BYTES = 29

@@ -301,6 +301,13 @@ def test_window_destroyed_guard(spark, tmp_path):
     assert window_destroyed(uri, 1500)
     with pytest.raises(ValueError, match="destroyed by consolidation"):
         read_array(spark, uri, since=1500)
+    # format("tiledb_native") plans through the same guard
+    from tiledb_mariadb_spark.sources.spark_datasource import (
+        TileDBNativeReader,
+    )
+
+    with pytest.raises(ValueError, match="destroyed by consolidation"):
+        TileDBNativeReader(uri, None, 2, ["k", "v"], since=1500).partitions()
     # windows past the consolidated range still read fine
     write_native_fragment(
         uri, {"k": [5], "v": [50]}, ts=3000, version=19

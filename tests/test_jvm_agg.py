@@ -272,11 +272,14 @@ def test_grouped_rollup_pushdown_zero_scan(spark, tmp_path):
     ]
 
 
-def test_scan_filter_pushdown_and_pruning(spark, tmp_path):
+def test_scan_filter_pushdown_and_pruning(spark, tmp_path, capsys):
     """Round 8: the scan path pushes =, ranges, IN, IS NULL and prunes
     the projection — no Spark-side residual (the decoder applies them
     EXACTLY, 3VL included), zero partitions when provably empty."""
+    import json
+
     from tiledb_mariadb_spark.sources.jvm_agg import agg_reader
+    from tiledb_mariadb_spark.tools import jvm_bridge
 
     uri = _mk(tmp_path, n=300)
     df = agg_reader(spark, uri).load()
@@ -302,6 +305,22 @@ def test_scan_filter_pushdown_and_pruning(spark, tmp_path):
     # provably-empty condition: the split plan returns zero partitions
     assert spark.sql(
         "SELECT * FROM jvm_scan_p WHERE q = 99"
+    ).collect() == []
+    # one empty-plan reply for a refuted condition box and for a
+    # contradictory range: no splits, planning stats still piggybacked
+    for conds in ('[["q","=",99]]', '[["k",">",10],["k","<",5]]'):
+        capsys.readouterr()
+        assert jvm_bridge.main(
+            ["splits", "--uri", uri, "--conditions", conds]
+        ) == 0
+        reply = json.loads(capsys.readouterr().out)
+        assert reply["ok"] and reply["splits"] == [], reply
+        assert "rows" in reply["stats"] and "empty" not in reply
+    # ... and the JVM plans zero partitions for it: a scan of the
+    # poisoned tiles would fail loudly
+    poison_data_tiles(uri)
+    assert spark.sql(
+        "SELECT k, v FROM jvm_scan_p WHERE k > 10 AND k < 5"
     ).collect() == []
 
 

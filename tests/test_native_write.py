@@ -1197,6 +1197,19 @@ def test_window_split_planning_prunes(spark, tmp_path):
         spark, uri, since=1500, dim_ranges={"id": (0, 700050)}
     )
     assert out2.count() == 51
+    # format("tiledb_native") shares the planner: its partitions lie
+    # inside the window box too, and an empty window plans none
+    from tiledb_mariadb_spark.sources.spark_datasource import (
+        TileDBNativeReader,
+    )
+
+    parts = TileDBNativeReader(uri, None, 8, ["id", "v"],
+                               since=1500).partitions()
+    assert parts and all(
+        700000 <= lo and hi <= 700099 for p in parts for lo, hi in p.ranges
+    )
+    assert TileDBNativeReader(uri, None, 8, ["id", "v"],
+                              since=9999).partitions() == []
 
 
 def test_vectorized_text_pack_byte_identity():

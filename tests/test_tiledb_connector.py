@@ -1,7 +1,8 @@
 """TileDB-array connector: split planning, driver-side range pruning,
 projection pushdown, time travel, and fragment-parallel writes — all run
-against the filesystem-fragment backend (libtiledb wheel not present; the
-real backend is import-gated behind the same ArrayBackend interface)."""
+against the parquet filesystem-fragment backend, which inherits the
+ArrayBackend "not provable" planning defaults (no split weights, window
+or condition boxes)."""
 
 from __future__ import annotations
 

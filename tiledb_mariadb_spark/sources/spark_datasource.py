@@ -195,27 +195,20 @@ class TileDBNativeReader(DataSourceReader):
             pts = parse_wkb_polygon(bytes.fromhex(str(spatial_wkb)))
             xs = [p[0] for p in pts]
             ys = [p[1] for p in pts]
-            self._merge_range(dx, min(xs) - pad, max(xs) + pad)
-            self._merge_range(dy, min(ys) - pad, max(ys) + pad)
+            self._narrow(dx, min(xs) - pad, max(xs) + pad)
+            self._narrow(dy, min(ys) - pad, max(ys) + pad)
 
-    def _merge_range(self, name, lo, hi):
-        cur = self.dim_ranges.get(name, (None, None))
-        if isinstance(cur, list):
-            self.dim_ranges[name] = [
-                (v, w) for v, w in cur
-                if (lo is None or w >= lo) and (hi is None or v <= hi)
-            ]
-            return
-        nlo = lo if cur[0] is None else (cur[0] if lo is None else max(cur[0], lo))
-        nhi = hi if cur[1] is None else (cur[1] if hi is None else min(cur[1], hi))
-        self.dim_ranges[name] = (nlo, nhi)
+    def _narrow(self, name, lo, hi):
+        from tiledb_mariadb_spark.sources.tiledb_array import (  # noqa: PLC0415
+            narrow_range,
+        )
+
+        self.dim_ranges[name] = narrow_range(self.dim_ranges.get(name), lo, hi)
 
     def pushFilters(self, filters: List[Filter]) -> Iterable[Filter]:
         """Catalyst hands every eligible predicate here; we absorb what
         the storage layer can evaluate (the reference's cond_push) and
         return the rest as residuals for Spark to re-apply."""
-
-        _narrow = self._merge_range  # intersect with any existing range
 
         def _add_points(name, pts):
             cur = self.dim_ranges.get(name)
@@ -244,15 +237,15 @@ class TileDBNativeReader(DataSourceReader):
             if col in self._dim_names and ftype in _COND_OPS:
                 v = f.value
                 if ftype is EqualTo:
-                    _narrow(col, v, v)
+                    self._narrow(col, v, v)
                 elif ftype is GreaterThanOrEqual:
-                    _narrow(col, v, None)
+                    self._narrow(col, v, None)
                 elif ftype is LessThanOrEqual:
-                    _narrow(col, None, v)
+                    self._narrow(col, None, v)
                 elif ftype is GreaterThan and isinstance(v, int):
-                    _narrow(col, v + 1, None)
+                    self._narrow(col, v + 1, None)
                 elif ftype is LessThan and isinstance(v, int):
-                    _narrow(col, None, v - 1)
+                    self._narrow(col, None, v - 1)
                 else:
                     residual.append(f)
                     continue
@@ -289,57 +282,21 @@ class TileDBNativeReader(DataSourceReader):
         return residual
 
     def partitions(self):
+        """One partition per split of the shared scan plan
+        (``scan_ranges`` then ``scan_splits``); [] when the plan is
+        provably empty, which Spark runs as one ``None`` partition."""
         from tiledb_mariadb_spark.sources.tiledb_array import (  # noqa: PLC0415
-            plan_splits,
+            scan_ranges,
+            scan_splits,
         )
 
         be = _backend(self.encryption_key)
-        if self.since is not None:
-            # vacuum hazard: a since-window whose straddling originals
-            # were consolidated away reads incomplete — fail loudly
-            # (read_array parity, round-8 guard)
-            from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
-                window_destroyed,
-            )
-
-            try:
-                if window_destroyed(self.uri, self.since):
-                    raise ValueError(
-                        f"tiledb_native: the CDC window since="
-                        f"{self.since} was destroyed by consolidation + "
-                        "vacuum; rows would be silently lost"
-                    )
-            except OSError:
-                pass  # non-native layout: backend semantics
-        if self.conditions:
-            # condition-aware planning (read_array parity): intersect
-            # the scan with the non-skippable fragments' union NED —
-            # needle queries over bloom-indexed attrs launch tasks only
-            # where candidate fragments live; [] = provably empty.
-            # All ops qualify (stats refute range conjuncts too)
-            cbox = be.condition_ned(self.uri, list(self.conditions),
-                                    at=self.at, since=self.since)
-            if cbox == []:
-                # provably empty: one sentinel partition that reads
-                # nothing (the DS API requires >=1 partition)
-                return [_SplitPartition(ranges=None)]
-            if cbox is not None:
-                for d, (clo, chi) in zip(self._info.dims, cbox):
-                    self._merge_range(d.name, clo, chi)
-        weights = be.split_weights(self.uri, at=self.at)
-        # string-keyed arrays (no integer axis): cut dim0 at fragment
-        # var-NED boundary keys so format() reads parallelize too (r7)
-        skeys = None
-        if not any(
-            isinstance(b, int)
-            for d in self._info.dims for b in (d.domain or (None, None))
-        ):
-            skeys = be.string_split_keys(self.uri, at=self.at,
-                                         since=self.since)
-        splits = plan_splits(
-            self._info, self.dim_ranges, self.target_splits,
-            weights=weights, string_keys=skeys,
-        )
+        ranges = scan_ranges(be, self.uri, self._info, self.dim_ranges,
+                             self.conditions, self.at, self.since)
+        if ranges is None:
+            return []
+        splits = scan_splits(be, self.uri, self._info, ranges,
+                             self.target_splits, self.at, self.since)
         return [_SplitPartition(s) for s in splits]
 
     _PA_TYPES = {
@@ -351,8 +308,8 @@ class TileDBNativeReader(DataSourceReader):
     def read(self, partition: _SplitPartition) -> Iterator:
         import pyarrow as pa  # noqa: PLC0415
 
-        if partition is None or partition.ranges is None:
-            return  # plan-level empty (condition_ned == [])
+        if partition is None:
+            return  # provably empty plan
         kw = {} if self.since is None else {"since": self.since}
         pdf = _backend(self.encryption_key).read_range(
             self.uri,

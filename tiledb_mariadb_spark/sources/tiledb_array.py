@@ -103,6 +103,25 @@ class ArrayBackend:
     def write(self, uri: str, pdf, sparse: bool = True) -> None:
         raise NotImplementedError
 
+    # Metadata proofs for planning.  The defaults prove nothing, which is
+    # always correct: the planner then scans the narrowed domain in
+    # uniform splits.
+    def split_weights(self, uri, at=None):
+        return None
+
+    def window_ned(self, uri, since=None, at=None):
+        return None
+
+    def condition_ned(self, uri, conditions, at=None, since=None):
+        return None
+
+    def topk_threshold(self, uri, col, k, ascending=False, at=None,
+                       since=None, conditions=None):
+        return None
+
+    def string_split_keys(self, uri, at=None, since=None):
+        return []
+
 
 def _apply_conditions(pdf, conditions: Optional[Sequence[tuple]]):
     """Shared pandas-side evaluator for pushed attribute conditions
@@ -610,6 +629,27 @@ def _intersect(
     return (lo, hi)
 
 
+def narrow_range(cur, lo, hi):
+    """Intersect one dimension's pushed range ``cur`` with ``[lo, hi]``
+    — the reference's most-restrictive merge (mytile-range.h:220-300).
+
+    ``cur`` is None, an inclusive ``(lo, hi)`` tuple or a list of IN
+    point ranges; a None bound is unbounded.  A list keeps the entries
+    that overlap ``[lo, hi]``.  An empty tuple intersection stays
+    inverted (``lo > hi``) so plan_splits plans nothing for it — None
+    would read as "unconstrained"."""
+    if isinstance(cur, list):
+        return [
+            (v, w) for v, w in cur
+            if (lo is None or w >= lo) and (hi is None or v <= hi)
+        ]
+    clo, chi = cur or (None, None)
+    return (
+        lo if clo is None else (clo if lo is None else max(clo, lo)),
+        hi if chi is None else (chi if hi is None else min(chi, hi)),
+    )
+
+
 def merge_ranges(
     ranges: list[tuple[Any, Any]],
 ) -> list[tuple[Any, Any]]:
@@ -840,6 +880,71 @@ def plan_splits(
     return splits
 
 
+def scan_ranges(backend, uri, info, dim_ranges, conditions, at, since):
+    """The pushed ``dim_ranges`` narrowed by what metadata proves — the
+    one planning step every read surface shares (init_scan →
+    build_subarray parity, mytile-range.cc:1189-1358).
+
+    A ``since`` window first passes the vacuum guard: when a
+    consolidated fragment straddles the window start and its in-window
+    originals were vacuumed, the read would silently lose their rows, so
+    it raises.  Then the ranges are intersected with the window
+    fragments' union box (``window_ned``) and, with ``conditions``, with
+    the box of the fragments the conditions cannot skip
+    (``condition_ned``: stats/bloom refuted and shadow-safe).  Returns
+    the narrowed dict, or None when a box is ``[]`` (provably empty)."""
+    boxes = []
+    if since is not None:
+        from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
+            window_destroyed,
+        )
+
+        try:
+            destroyed = window_destroyed(uri, since)
+        except OSError:
+            destroyed = False  # non-native layout: backend semantics
+        if destroyed:
+            raise ValueError(
+                f"the CDC window starting at since={since} was destroyed "
+                "by consolidation + vacuum (a consolidated fragment "
+                "straddles it and its in-window originals are gone); "
+                "rows would be silently lost"
+            )
+        boxes.append(backend.window_ned(uri, since=since, at=at))
+    if conditions:
+        boxes.append(backend.condition_ned(uri, list(conditions), at=at,
+                                           since=since))
+    ranges = dict(dim_ranges or {})
+    for box in boxes:
+        if box == []:
+            return None
+        for d, (lo, hi) in zip(info.dims, box or ()):
+            ranges[d.name] = narrow_range(ranges.get(d.name), lo, hi)
+    return ranges
+
+
+def _string_split_keys(backend, uri, info, at, since):
+    """dim0 cut keys for an array without an integer dimension (fragment
+    var-NED boundaries), so its scans parallelize; None otherwise."""
+    if any(
+        isinstance(b, int)
+        for d in info.dims for b in (d.domain or (None, None))
+    ):
+        return None
+    return backend.string_split_keys(uri, at=at, since=since)
+
+
+def scan_splits(backend, uri, info, ranges, target_splits, at, since):
+    """plan_splits over ``ranges`` with the backend's R-tree tile weights
+    (cell-count-quantile cuts) and, for string-keyed arrays, its split
+    keys.  [] = nothing to scan."""
+    return plan_splits(
+        info, ranges, target_splits,
+        weights=backend.split_weights(uri, at=at),
+        string_keys=_string_split_keys(backend, uri, info, at, since),
+    )
+
+
 # --- the connector ----------------------------------------------------------
 
 
@@ -867,9 +972,12 @@ def read_array(
     t/query_conditions.test) — each is ``(col, op[, value])``, ANDed;
     rows are filtered before they cross the backend→Arrow boundary.
 
-    Default backend: libtiledb when the wheel exists, else the
-    pure-Python format decoder (read-only) — so a bare on-disk array is
-    scannable either way.  ``encryption_key`` opens AES-256-GCM arrays
+    ``since``: the CDC window — only writes in ``[since, at]`` are seen.
+    Planning is :func:`scan_ranges` then :func:`scan_splits`, the path
+    the ``tiledb_native`` format and the ``tiledb_agg`` bridge share.
+
+    Default backend: :class:`NativeDecoderBackend`, the package's own
+    reader and writer.  ``encryption_key`` opens AES-256-GCM arrays
     (the reference's per-table encryption_key option); it travels inside
     the pickled backend to every task, never to disk.
     """
@@ -879,26 +987,6 @@ def read_array(
             "supplying an explicit backend"
         )
     backend = backend or NativeDecoderBackend(encryption_key=encryption_key)
-    if since is not None:
-        # vacuum hazard (windowed sibling of the diff_arrays guard): a
-        # consolidated fragment straddling the window start is excluded
-        # by the since gate — if its in-window originals were vacuumed,
-        # this read would silently LOSE their rows.  Fail loudly.
-        from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
-            window_destroyed,
-        )
-
-        try:
-            destroyed = window_destroyed(uri, since)
-        except OSError:
-            destroyed = False  # non-native layout: backend semantics
-        if destroyed:
-            raise ValueError(
-                f"read_array: the CDC window starting at since={since} "
-                "was destroyed by consolidation + vacuum (a consolidated "
-                "fragment straddles it and its in-window originals are "
-                "gone); rows would be silently lost"
-            )
     info = backend.info(uri, at=at)
     dim_names = [d.name for d in info.dims]
     attr_names = [a.name for a in info.attrs]
@@ -917,84 +1005,12 @@ def read_array(
             raise ValueError(f"unknown condition column: {col}")
         if op not in _OPS:
             raise ValueError(f"unknown condition op: {op}")
-
-    if since is not None:
-        # WINDOW-aware planning: a narrow CDC window's fragments cover
-        # a sliver of the domain — intersect the scan with their union
-        # bounding box (metadata-only) so tasks launch only there
-        wfn = getattr(backend, "window_ned", None)
-        wbox = wfn(uri, since=since, at=at) if wfn else None
-        if wbox == []:
-            ddl0 = ", ".join(
-                f"{c} "
-                f"{next(x.dtype for x in info.dims + info.attrs if x.name == c)}"
-                for c in cols
-            )
-            return spark.createDataFrame([], schema=ddl0)
-        if wbox is not None:
-            merged = dict(dim_ranges or {})
-            for d, (wlo, whi) in zip(info.dims, wbox):
-                cur = merged.get(d.name)
-                if cur is None:
-                    merged[d.name] = (wlo, whi)
-                elif isinstance(cur, tuple):
-                    lo, hi = cur
-                    merged[d.name] = (
-                        wlo if lo is None else max(lo, wlo),
-                        whi if hi is None else min(hi, whi),
-                    )
-                # list-of-point-ranges (IN pushdown): already narrow
-            dim_ranges = merged
-    if conditions:
-        # CONDITION-aware planning (the needle twin of the CDC window
-        # above): fragments the pushed conditions provably skip —
-        # stats/bloom refuted AND shadow-safe — cannot contribute rows,
-        # so intersect the scan with the SURVIVORS' union bounding box;
-        # a bloom-indexed point lookup launches tasks only where
-        # candidate fragments live.  ALL ops qualify: min/max stats
-        # refute range conjuncts (<, >=, BETWEEN shapes) just as well
-        # as needles (=/IN, which additionally get the bloom proof)
-        cfn = getattr(backend, "condition_ned", None)
-        cbox = cfn(uri, list(conditions), at=at, since=since)             if cfn else None
-        if cbox == []:
-            ddl0 = ", ".join(
-                f"{c} "
-                f"{next(x.dtype for x in info.dims + info.attrs if x.name == c)}"
-                for c in cols
-            )
-            return spark.createDataFrame([], schema=ddl0)
-        if cbox is not None:
-            merged = dict(dim_ranges or {})
-            for d, (clo, chi) in zip(info.dims, cbox):
-                cur = merged.get(d.name)
-                if cur is None:
-                    merged[d.name] = (clo, chi)
-                elif isinstance(cur, tuple):
-                    lo, hi = cur
-                    merged[d.name] = (
-                        clo if lo is None else max(lo, clo),
-                        chi if hi is None else min(hi, chi),
-                    )
-            dim_ranges = merged
-    # R-tree tile weights (when the backend can produce them from
-    # metadata) turn uniform-span splits into cell-count-quantile splits
-    weights_fn = getattr(backend, "split_weights", None)
-    weights = weights_fn(uri, at=at) if weights_fn else None
-    # string-keyed arrays (no integer axis): cut dim0 at the fragments'
-    # var-NED boundary keys so read parallelism tracks the fragment
-    # count instead of collapsing to one task (round 7)
-    skeys = None
-    if not any(
-        isinstance(b, int)
-        for d in info.dims for b in (d.domain or (None, None))
-    ):
-        skeys_fn = getattr(backend, "string_split_keys", None)
-        skeys = (
-            skeys_fn(uri, at=at, since=since) if skeys_fn else None
-        )
-    splits = plan_splits(
-        info, dim_ranges, target_splits,
-        weights=weights, string_keys=skeys,
+    ranges = scan_ranges(backend, uri, info, dim_ranges, conditions, at,
+                         since)
+    splits = (
+        [] if ranges is None
+        else scan_splits(backend, uri, info, ranges, target_splits, at,
+                         since)
     )
     ddl = ", ".join(
         f"{c} {next(x.dtype for x in info.dims + info.attrs if x.name == c)}"
@@ -1059,17 +1075,15 @@ def topk_array(
     making the result deterministic under equal ``col`` values.
     """
     backend = backend or NativeDecoderBackend(encryption_key=encryption_key)
-    thr_fn = getattr(backend, "topk_threshold", None)
     # dim_ranges restrict which rows compete, but the stats guarantee
     # counts whole fragments — a bound derived ignoring the ranges
     # could exclude in-range rows that belong in the top-k.  No
     # metadata proof relates per-fragment counts to an arbitrary
     # subrange, so ranged top-k runs unpruned (always correct).
     thr = (
-        thr_fn(uri, col, k, ascending=ascending, at=at, since=since,
-               conditions=conditions)
-        if thr_fn and not dim_ranges
-        else None
+        None if dim_ranges
+        else backend.topk_threshold(uri, col, k, ascending=ascending, at=at,
+                                    since=since, conditions=conditions)
     )
     conds = list(conditions or [])
     if thr is not None:
@@ -1207,26 +1221,17 @@ def diff_arrays(
     # include_unchanged must SEE the untouched rows, so it scans the
     # full domain; the changed-only diff is what gets O(window) cost
     if not dels and not include_unchanged:
-        wfn = getattr(backend, "window_ned", None)
-        wbox = wfn(uri, since=at_old + 1, at=at_new) if wfn else None
+        # delete-aware window box: sound only without a .del inside the
+        # window, so this is the one window_ned call outside scan_ranges
+        wbox = backend.window_ned(uri, since=at_old + 1, at=at_new)
         if wbox == []:
             return spark.createDataFrame([], schema=ddl)
         if wbox is not None:
             dim_ranges = {
                 d.name: (lo, hi) for d, (lo, hi) in zip(info.dims, wbox)
             }
-    weights_fn = getattr(backend, "split_weights", None)
-    weights = weights_fn(uri, at=at_new) if weights_fn else None
-    skeys = None
-    if not any(
-        isinstance(b, int)
-        for d in info.dims for b in (d.domain or (None, None))
-    ):
-        skeys_fn = getattr(backend, "string_split_keys", None)
-        skeys = skeys_fn(uri, at=at_new) if skeys_fn else None
-    splits = plan_splits(
-        info, dim_ranges, target_splits, weights=weights, string_keys=skeys
-    )
+    splits = scan_splits(backend, uri, info, dim_ranges, target_splits,
+                         at_new, None)
     if not splits:
         return spark.createDataFrame([], schema=ddl)
 
@@ -1363,9 +1368,8 @@ def copartitioned_asof_join(
     out_a = [n + suffixes[0] if n in collide else n for n in sel_a]
     out_b = [n + suffixes[1] if n in collide else n for n in sel_b]
 
-    weights_fn = getattr(backend_a, "split_weights", None)
-    weights = weights_fn(uri_a, at=at_a) if weights_fn else None
-    splits = plan_splits(info_a, None, target_splits, weights=weights)
+    splits = plan_splits(info_a, None, target_splits,
+                         weights=backend_a.split_weights(uri_a, at=at_a))
     type_a = {x.name: x.dtype for x in info_a.dims + info_a.attrs}
     type_b = {x.name: x.dtype for x in info_b.attrs}
     ddl = ", ".join(
@@ -1904,17 +1908,7 @@ def copartitioned_join_arrays(
     plan_info = info_a
     if how == "inner":
         for d in info_b.dims:
-            cur = merged.get(d.name)
-            blo, bhi = d.domain
-            if cur is None:
-                merged[d.name] = (blo, bhi)
-            elif isinstance(cur, tuple):
-                lo, hi = cur
-                merged[d.name] = (
-                    blo if lo is None else (lo if blo is None else max(lo, blo)),
-                    bhi if hi is None else (hi if bhi is None else min(hi, bhi)),
-                )
-            # list-of-point-ranges (IN pushdown): already narrow
+            merged[d.name] = narrow_range(merged.get(d.name), *d.domain)
     elif how == "full":
         union_dims = []
         for da, db in zip(info_a.dims, info_b.dims):
@@ -1929,21 +1923,13 @@ def copartitioned_join_arrays(
     # two subarray reads, so a B-heavy key region must attract cuts
     # even when A is uniform there (the weight lists just concatenate —
     # the planner sums overlapping tile spans)
-    wa = getattr(backend_a, "split_weights", None)
-    wb = getattr(backend_b, "split_weights", None)
-    wa = wa(uri_a, at=at_a) if wa else None
-    wb = wb(uri_b, at=at_b) if wb else None
+    wa = backend_a.split_weights(uri_a, at=at_a)
+    wb = backend_b.split_weights(uri_b, at=at_b)
     weights = (list(wa) + list(wb)) if (wa and wb) else (wa or wb)
-    skeys = None
-    if not any(
-        isinstance(b, int)
-        for d in info_a.dims for b in (d.domain or (None, None))
-    ):
-        skeys_fn = getattr(backend_a, "string_split_keys", None)
-        skeys = skeys_fn(uri_a, at=at_a) if skeys_fn else None
     splits = plan_splits(
         plan_info, merged, target_splits, weights=weights,
-        string_keys=skeys,
+        string_keys=_string_split_keys(backend_a, uri_a, info_a, at_a,
+                                       None),
     )
 
     type_a = {x.name: x.dtype for x in info_a.dims + info_a.attrs}
@@ -2170,27 +2156,10 @@ def copartitioned_join_many(
     if how == "inner":
         for inf in infos[1:]:
             for d in inf.dims:
-                cur = merged.get(d.name)
-                blo, bhi = d.domain
-                if cur is None:
-                    merged[d.name] = (blo, bhi)
-                elif isinstance(cur, tuple):
-                    lo, hi = cur
-                    merged[d.name] = (
-                        blo if lo is None
-                        else (lo if blo is None else max(lo, blo)),
-                        bhi if hi is None
-                        else (hi if bhi is None else min(hi, bhi)),
-                    )
+                merged[d.name] = narrow_range(merged.get(d.name), *d.domain)
     # combined tile weights across every side (see the pairwise note)
-    weights_fn = getattr(backend, "split_weights", None)
-    weights = None
-    if weights_fn:
-        per_side = [weights_fn(u, at=a) for u, a in zip(uris, ats)]
-        present = [w for w in per_side if w]
-        weights = (
-            [t for w in present for t in w] if present else None
-        )
+    per_side = [backend.split_weights(u, at=a) for u, a in zip(uris, ats)]
+    weights = [t for w in per_side if w for t in w] or None
     splits = plan_splits(infos[0], merged, target_splits, weights=weights)
 
     type_of: list[dict] = []
@@ -2325,8 +2294,8 @@ def write_array(
     """Each partition writes an independent fragment — TileDB writers
     need no coordination, so write parallelism is the partition count.
 
-    Default backend mirrors ``read_array``: libtiledb when the wheel
-    exists, else the pure-Python native-format writer.
+    Default backend: :class:`NativeDecoderBackend`, the package's own
+    native-format writer.
     ``encryption_key`` seals every written fragment with AES-256-GCM.
     ``ts``: explicit unix-millis write timestamp (TileDB's open-at-
     timestamp writes — the one logical write may land several fragments,
@@ -2433,9 +2402,8 @@ def consolidate_array(
         t2 += 1
     backend = NativeDecoderBackend(encryption_key=encryption_key)
     info = backend.info(uri)
-    weights_fn = getattr(backend, "split_weights", None)
-    weights = weights_fn(uri) if weights_fn else None
-    splits = plan_splits(info, None, target_splits, weights=weights)
+    splits = plan_splits(info, None, target_splits,
+                         weights=backend.split_weights(uri))
     cols = [d.name for d in info.dims] + [a.name for a in info.attrs]
     split_df = _seed_partitions(spark, len(splits))
     key = encryption_key
@@ -2739,9 +2707,8 @@ def consolidate_array_incremental(
 
     backend = NativeDecoderBackend(encryption_key=encryption_key)
     info = backend.info(uri)
-    weights_fn = getattr(backend, "split_weights", None)
-    weights = weights_fn(uri) if weights_fn else None
-    splits = plan_splits(info, None, target_splits, weights=weights)
+    splits = plan_splits(info, None, target_splits,
+                         weights=backend.split_weights(uri))
     dim_names = [d.name for d in info.dims]
     attr_names = [a.name for a in info.attrs]
     cols = dim_names + attr_names

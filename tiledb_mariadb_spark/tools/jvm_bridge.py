@@ -25,9 +25,11 @@ repo's pure-Python native decoder from the JVM:
   for SupportsPushDownTopN;
 - ``stats --uri U``: planning statistics (rows exact-or-upper-bound,
   on-disk/fixed-width sizeInBytes) for SupportsReportStatistics;
-- ``splits --uri U [--conditions J]``: the split plan for the scan
-  (dim0 cuts / R-tree weights / string boundary keys, intersected with
-  pushed dim ranges and the condition-NED — read_array parity);
+- ``splits --uri U [--conditions J]``: the split plan for the scan —
+  pushed dim ranges narrowed by ``scan_ranges`` (condition-NED), task
+  count sized by the estimated matching cells, cut by ``scan_splits``
+  (dim0 cuts / R-tree weights / string boundary keys); ``[]`` when the
+  plan is provably empty;
 - ``rows --uri U [--ranges J] [--conditions J] [--columns J]
   [--limit N]``: the decoded table — pushed conditions applied EXACTLY
   (QueryCondition analog), projection pruned, and an advisory
@@ -79,6 +81,10 @@ def _fold_dim_ranges(schema, conds):
     NULL tests, non-integer values).  The metadata aggregate path only
     fires when ``rest`` is empty — stats cannot prove anything under a
     residual filter."""
+    from tiledb_mariadb_spark.sources.tiledb_array import (  # noqa: PLC0415
+        narrow_range,
+    )
+
     dim_names = {d.name for d in schema.dims}
     non_nullable = dim_names | {
         a.name for a in schema.attrs if not a.nullable
@@ -87,10 +93,7 @@ def _fold_dim_ranges(schema, conds):
     rest = []
 
     def _narrow(name, lo, hi):
-        clo, chi = ranges.get(name, (None, None))
-        nlo = lo if clo is None else (clo if lo is None else max(clo, lo))
-        nhi = hi if chi is None else (chi if hi is None else min(chi, hi))
-        ranges[name] = (nlo, nhi)
+        ranges[name] = narrow_range(ranges.get(name), lo, hi)
 
     for c in conds or []:
         col, op = c[0], c[1]
@@ -766,15 +769,15 @@ def main(argv=None) -> int:
         return 0
 
     if a.cmd == "splits":
-        # split plan for the scan (one JVM partition per range — dim0
-        # cuts, R-tree weights, string boundary keys, same planner as
-        # read_array), intersected with pushed dim ranges and the
-        # condition-NED (needle queries launch tasks only where
-        # candidate fragments live; [] = provably empty -> zero
-        # partitions).  Single unbounded split when bounds aren't
-        # JSON-expressible (bytes dims).
+        # split plan for the scan, one JVM partition per range:
+        # scan_ranges (pushed dim ranges + the condition-NED, so needle
+        # queries launch tasks only where candidate fragments live),
+        # then estimate-based task sizing, then scan_splits.  An empty
+        # list is a provably empty plan -> zero partitions; [null] (bounds
+        # not JSON-expressible, e.g. bytes dims) is one unbounded split.
         from tiledb_mariadb_spark.sources.tiledb_array import (  # noqa: PLC0415
-            plan_splits,
+            scan_ranges,
+            scan_splits,
         )
 
         be = NativeDecoderBackend(encryption_key=a.encryption_key)
@@ -785,53 +788,34 @@ def main(argv=None) -> int:
             if conds:
                 schema = parse_array_schema(_schema_path(a.uri))
                 dim_ranges, _rest = _fold_dim_ranges(schema, conds)
-                cbox = be.condition_ned(a.uri, list(conds), at=a.at)
-                if cbox == []:
-                    print(json.dumps({"ok": True, "splits": [],
-                                      "empty": True}))
-                    return 0
-                if cbox is not None:
-                    for d, (clo, chi) in zip(info.dims, cbox):
-                        lo, hi = dim_ranges.get(d.name, (None, None))
-                        nlo = clo if lo is None else (
-                            lo if clo is None else max(lo, clo))
-                        nhi = chi if hi is None else (
-                            hi if chi is None else min(hi, chi))
-                        dim_ranges[d.name] = (nlo, nhi)
-            weights = be.split_weights(a.uri, at=a.at)
-            skeys = None
-            if not any(
-                isinstance(b, int)
-                for d in info.dims for b in (d.domain or (None, None))
-            ):
-                skeys = be.string_split_keys(a.uri, at=a.at)
-            # size the task count by the metadata UPPER BOUND on
-            # matching cells (narrowed by pushed ranges + the
-            # condition-NED): a needle/top-k query plans one task, a
-            # full scan keeps target_splits — an upper bound can only
-            # over-parallelize, never starve a real scan
-            target = a.target_splits
-            if dim_ranges:
-                from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
-                    estimate_range_cells,
-                )
+            ranges = scan_ranges(be, a.uri, info, dim_ranges, conds, a.at,
+                                 None)
+            splits = []
+            if ranges is not None:
+                # size the task count by the metadata UPPER BOUND on
+                # matching cells: a needle/top-k query plans one task, a
+                # full scan keeps target_splits — an upper bound can
+                # only over-parallelize, never starve a real scan
+                target = a.target_splits
+                if ranges:
+                    from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
+                        estimate_range_cells,
+                    )
 
-                try:
-                    rlist = [
-                        tuple(dim_ranges.get(d.name, (None, None)))
-                        for d in info.dims
-                    ]
-                    est = estimate_range_cells(a.uri, rlist, at=a.at)
-                    if est is not None:
-                        target = max(
-                            1, min(target, -(-est // 262144))
-                        )
-                except (OSError, ValueError):
-                    pass
-            splits = plan_splits(
-                info, dim_ranges or None, target,
-                weights=weights, string_keys=skeys,
-            )
+                    try:
+                        rlist = [
+                            tuple(ranges.get(d.name, (None, None)))
+                            for d in info.dims
+                        ]
+                        est = estimate_range_cells(a.uri, rlist, at=a.at)
+                        if est is not None:
+                            target = max(
+                                1, min(target, -(-est // 262144))
+                            )
+                    except (OSError, ValueError):
+                        pass
+                splits = scan_splits(be, a.uri, info, ranges, target, a.at,
+                                     None)
             out = [[list(r) for r in s] for s in splits]
             try:  # piggyback planning stats: one spawn serves both
                 st = _stats_payload(a)
@@ -841,7 +825,7 @@ def main(argv=None) -> int:
                 {"ok": True, "splits": out, "stats": st},
                 default=_json_cell,
             ))
-        except (Exception, TypeError):  # noqa: BLE001 - bridge boundary
+        except Exception:  # noqa: BLE001 - bridge boundary
             print(json.dumps({"ok": True, "splits": [None]}))
         return 0
 
