@@ -23,10 +23,13 @@
 //   intersected with pushed dim ranges + the condition-NED (zero
 //   partitions when provably empty).
 //
-// All delegation goes through a tiny subprocess bridge
-// (tiledb_mariadb_spark.tools.jvm_bridge) into the repo's pure-Python
-// decoder (Arrow IPC rows; the big-scan fast path remains the Python
-// datasource — this format exists for the pushdown contract).
+// All delegation goes to resident bridge processes
+// (tiledb_mariadb_spark.tools.jvm_bridge serve) running the repo's
+// pure-Python decoder: each command is one framed request to an idle
+// bridge from a per-JVM pool, which spawns one only when every bridge is
+// busy, so a call pays no interpreter start (Arrow IPC rows; the
+// big-scan fast path remains the Python datasource — this format exists
+// for the pushdown contract).
 //
 // Build/registration: tiledb_mariadb_spark.sources.jvm_agg compiles this
 // file against the installed pyspark jars and loads it with ADD JAR, so
@@ -35,6 +38,13 @@
 import com.fasterxml.jackson.databind.JsonNode;
 import com.fasterxml.jackson.databind.ObjectMapper;
 import java.io.BufferedInputStream;
+import java.io.BufferedOutputStream;
+import java.io.DataInputStream;
+import java.io.DataOutputStream;
+import java.io.EOFException;
+import java.io.IOException;
+import java.io.InputStream;
+import java.io.OutputStream;
 import org.apache.arrow.memory.BufferAllocator;
 import org.apache.arrow.memory.RootAllocator;
 import org.apache.arrow.vector.VectorSchemaRoot;
@@ -46,6 +56,8 @@ import java.util.ArrayList;
 import java.util.List;
 import java.util.Map;
 import java.util.OptionalLong;
+import java.util.concurrent.ConcurrentHashMap;
+import java.util.concurrent.ConcurrentLinkedDeque;
 import org.apache.spark.sql.catalyst.InternalRow;
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow;
 import org.apache.spark.sql.connector.catalog.SupportsRead;
@@ -125,10 +137,10 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
   public StructType inferSchema(CaseInsensitiveStringMap options) {
     Bridge b = Bridge.fromOptions(options);
     JsonNode out = b.call("schema");
-    if (out == null || !out.path("ok").asBoolean(false)) {
+    if (!out.path("ok").asBoolean(false)) {
       throw new RuntimeException(
-          "tiledb_agg: schema bridge failed for " + b.uri
-              + (out == null ? "" : ": " + out.path("reason").asText()));
+          "tiledb_agg: schema bridge failed for " + b.uri + ": "
+              + out.path("reason").asText());
     }
     return StructType.fromDDL(out.path("ddl").asText());
   }
@@ -141,7 +153,8 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
 
   // ---- bridge -------------------------------------------------------------
 
-  /** One subprocess call into the repo's Python decoder. */
+  /** One array's address (uri, at, key) plus the interpreter that
+   * serves it; every command goes as a request to a resident bridge. */
   static class Bridge implements Serializable {
     final String python;
     final String pythonPath;
@@ -170,14 +183,10 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
           o.get("encryption_key"));
     }
 
-    /** Launch {@code python -m ...jvm_bridge cmd --uri uri [--at]
-     * [--encryption-key]} followed by the flag/value {@code pairs}
-     * whose value is non-null. */
-    Process launch(String cmd, String... pairs) {
+    /** {@code cmd --uri uri [--at] [--encryption-key]} followed by the
+     * flag/value {@code pairs} whose value is non-null. */
+    private List<String> argv(String cmd, String... pairs) {
       List<String> argv = new ArrayList<>();
-      argv.add(python);
-      argv.add("-m");
-      argv.add("tiledb_mariadb_spark.tools.jvm_bridge");
       argv.add(cmd);
       argv.add("--uri");
       argv.add(uri);
@@ -190,28 +199,250 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
           }
         }
       }
-      ProcessBuilder pb = new ProcessBuilder(argv);
+      return argv;
+    }
+
+    /** A request that streams a payload ({@code write} rows) before its
+     * reply.  A dead bridge is an error here: the payload cannot be
+     * replayed. */
+    Request open(String cmd, String... pairs) {
+      Request q = new Request(Resident.borrow(python, pythonPath, false));
+      try {
+        q.sendHeader(argv(cmd, pairs));
+      } catch (IOException e) {
+        q.close();
+        throw new RuntimeException("tiledb_agg " + cmd + " bridge died: " + e, e);
+      }
+      return q;
+    }
+
+    /** A payload-free request whose reply has started.  A bridge that
+     * dies before its first reply byte is replaced by a fresh spawn and
+     * asked once more, unless {@code cmd} is the job commit, which
+     * writes. */
+    Request ask(String cmd, String... pairs) {
+      List<String> argv = argv(cmd, pairs);
+      boolean retry = !cmd.equals("commitfrags");
+      for (boolean fresh = false; ; fresh = true) {
+        Request q = new Request(Resident.borrow(python, pythonPath, fresh));
+        try {
+          q.sendHeader(argv);
+          q.startReply();
+          return q;
+        } catch (IOException e) {
+          q.close();
+          if (fresh || !retry) {
+            throw new RuntimeException("tiledb_agg " + cmd + " bridge died: " + e, e);
+          }
+        }
+      }
+    }
+
+    /** Single-JSON-object commands (schema / agg / gagg / splits / topk /
+     * commitfrags).  A nonzero status, a dead bridge or an empty reply
+     * throws with the bridge's stderr. */
+    JsonNode call(String cmd, String... pairs) {
+      Request q = ask(cmd, pairs);
+      try {
+        byte[] out = q.reply.readAllBytes();
+        q.finish(cmd);
+        if (out.length == 0) {
+          throw new RuntimeException("tiledb_agg " + cmd + " bridge: empty reply");
+        }
+        return MAPPER.readTree(out);
+      } catch (IOException e) {
+        throw new RuntimeException("tiledb_agg " + cmd + " bridge failed: " + e, e);
+      } finally {
+        q.close();
+      }
+    }
+  }
+
+  static final ObjectMapper MAPPER = new ObjectMapper();
+
+  /** One resident {@code python -m ...jvm_bridge serve} process.  Idle
+   * bridges wait in a per-JVM pool keyed by (python, pythonpath); the
+   * pool holds as many as calls ever ran at once.  A bridge that died
+   * while idle is skipped at the next borrow; when the JVM exits, every
+   * bridge reads EOF on stdin and exits. */
+  static final class Resident {
+    private static final ConcurrentHashMap<List<String>, ConcurrentLinkedDeque<Resident>>
+        IDLE = new ConcurrentHashMap<>();
+
+    final Process proc;
+    final DataOutputStream out;
+    final DataInputStream in;
+    private final ConcurrentLinkedDeque<Resident> home;
+
+    private Resident(Process proc, ConcurrentLinkedDeque<Resident> home) {
+      this.proc = proc;
+      this.out = new DataOutputStream(new BufferedOutputStream(proc.getOutputStream(), 1 << 16));
+      this.in = new DataInputStream(new BufferedInputStream(proc.getInputStream(), 1 << 16));
+      this.home = home;
+    }
+
+    /** An idle live bridge of this key, or a new one ({@code fresh}
+     * skips the pool). */
+    static Resident borrow(String python, String pythonPath, boolean fresh) {
+      ConcurrentLinkedDeque<Resident> idle =
+          IDLE.computeIfAbsent(List.of(python, pythonPath), k -> new ConcurrentLinkedDeque<>());
+      for (Resident r; !fresh && (r = idle.pollFirst()) != null; ) {
+        if (r.proc.isAlive()) {
+          return r;
+        }
+        r.destroy();
+      }
+      // stderr goes to the JVM's: requests carry their own in the status
+      // frame, so only the bridge's stray output lands there
+      ProcessBuilder pb =
+          new ProcessBuilder(python, "-m", "tiledb_mariadb_spark.tools.jvm_bridge", "serve")
+              .redirectError(ProcessBuilder.Redirect.INHERIT);
       if (!pythonPath.isEmpty()) {
         pb.environment().put("PYTHONPATH", pythonPath);
       }
       try {
-        return pb.start();
-      } catch (Exception e) {
+        return new Resident(pb.start(), idle);
+      } catch (IOException e) {
         throw new RuntimeException("tiledb_agg: cannot launch bridge: " + e, e);
       }
     }
 
-    /** Single-JSON-object commands (schema / agg / gagg / splits /
-     * topk). null on launch failure or empty output. */
-    JsonNode call(String cmd, String... pairs) {
-      try {
-        Process p = launch(cmd, pairs);
-        String out =
-            new String(p.getInputStream().readAllBytes(), StandardCharsets.UTF_8);
-        p.waitFor();
-        return out.isEmpty() ? null : new ObjectMapper().readTree(out);
-      } catch (Exception e) {
-        return null;
+    void release() {
+      home.offerFirst(this);
+    }
+
+    void destroy() {
+      proc.destroy();
+    }
+  }
+
+  /** One request on a resident bridge (wire in jvm_bridge.py): header
+   * frame, payload frames, then the reply frames and one status frame.
+   * The bridge goes back to the pool only after {@link #finish} read a
+   * zero status; {@link #close} before that destroys it, so a reply
+   * nobody read to its end never reaches the next request. */
+  static final class Request implements AutoCloseable {
+    private final Resident r;
+    private boolean payloadEnded = false;
+    private boolean replyEnded = false;
+    private int frameLeft = 0;
+    private boolean done = false;
+
+    /** Payload bytes, sent as frames of up to 64 KiB. */
+    final OutputStream payload;
+
+    /** Reply bytes; EOF at the frame that ends them. */
+    final InputStream reply =
+        new InputStream() {
+          @Override
+          public int read() throws IOException {
+            byte[] one = new byte[1];
+            return read(one, 0, 1) < 0 ? -1 : one[0] & 0xff;
+          }
+
+          @Override
+          public int read(byte[] b, int off, int len) throws IOException {
+            if (len == 0) {
+              return 0;
+            }
+            if (!nextFrame()) {
+              return -1;
+            }
+            int n = r.in.read(b, off, Math.min(len, frameLeft));
+            if (n < 0) {
+              throw new EOFException("bridge reply ended inside a frame");
+            }
+            frameLeft -= n;
+            return n;
+          }
+
+          @Override
+          public void close() {
+            // the bridge's stdout outlives this request
+          }
+        };
+
+    Request(Resident r) {
+      this.r = r;
+      this.payload =
+          new BufferedOutputStream(
+              new OutputStream() {
+                @Override
+                public void write(int b) throws IOException {
+                  write(new byte[] {(byte) b}, 0, 1);
+                }
+
+                @Override
+                public void write(byte[] b, int off, int len) throws IOException {
+                  if (len > 0) {
+                    r.out.writeInt(len);
+                    r.out.write(b, off, len);
+                  }
+                }
+              },
+              1 << 16);
+    }
+
+    void sendHeader(List<String> argv) throws IOException {
+      byte[] head = MAPPER.writeValueAsBytes(argv);
+      r.out.writeInt(head.length);
+      r.out.write(head);
+    }
+
+    private void endPayload() throws IOException {
+      if (!payloadEnded) {
+        payload.flush();
+        r.out.writeInt(0);
+        r.out.flush();
+        payloadEnded = true;
+      }
+    }
+
+    /** Ends the payload and waits for the first reply frame. */
+    void startReply() throws IOException {
+      nextFrame();
+    }
+
+    /** True when the started reply carries no bytes at all. */
+    boolean replyEmpty() {
+      return replyEnded && frameLeft == 0;
+    }
+
+    private boolean nextFrame() throws IOException {
+      endPayload();
+      while (frameLeft == 0) {
+        if (replyEnded) {
+          return false;
+        }
+        frameLeft = r.in.readInt();
+        replyEnded = frameLeft == 0;
+      }
+      return true;
+    }
+
+    /** Skips what is left of the reply, reads the status frame and
+     * returns the bridge to the pool; a nonzero status throws with the
+     * bridge's stderr. */
+    void finish(String cmd) throws IOException {
+      reply.transferTo(OutputStream.nullOutputStream());
+      byte[] status = new byte[r.in.readInt()];
+      r.in.readFully(status);
+      JsonNode st = MAPPER.readTree(status);
+      done = true;
+      r.release();
+      int rc = st.path("rc").asInt(-1);
+      if (rc != 0) {
+        throw new RuntimeException(
+            "tiledb_agg " + cmd + " bridge failed (status " + rc + "): "
+                + st.path("stderr").asText());
+      }
+    }
+
+    @Override
+    public void close() {
+      if (!done) {
+        done = true;
+        r.destroy();
       }
     }
   }
@@ -377,9 +608,7 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
               "topk",
               "--topk", col + ":" + (asc ? "asc" : "desc") + ":" + n,
               "--conditions", condsJson());
-      if (out != null
-          && out.path("ok").asBoolean(false)
-          && out.hasNonNull("thr")) {
+      if (out.path("ok").asBoolean(false) && out.hasNonNull("thr")) {
         JsonNode thr = out.path("thr");
         Object v;
         if (thr.isTextual()) {
@@ -727,7 +956,7 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
       int off = 0;
       if (groupCols.isEmpty()) {
         JsonNode out = b.call("agg", "--aggs", String.join(";", reqs), "--conditions", cj);
-        if (out == null || !out.path("ok").asBoolean(false)) {
+        if (!out.path("ok").asBoolean(false)) {
           return false; // metadata cannot prove it: honest scan fallback
         }
         JsonNode vals = out.path("values");
@@ -757,7 +986,7 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
                 "--aggs", String.join(";", reqs),
                 "--conditions", cj,
                 "--group", gspec.toString());
-        if (out == null || !out.path("ok").asBoolean(false)) {
+        if (!out.path("ok").asBoolean(false)) {
           return false;
         }
         JsonNode jrows = out.path("rows");
@@ -1018,7 +1247,7 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
       return runtimeCondsJson != null ? runtimeCondsJson : condsJson;
     }
 
-    // ONE planning spawn per query: the splits call piggybacks the
+    // ONE planning request per query: the splits reply piggybacks the
     // stats payload, cached here and keyed by the effective condition
     // set (runtime filters invalidate it)
     private transient JsonNode planOut;
@@ -1042,10 +1271,7 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
     @Override
     public Statistics estimateStatistics() {
       JsonNode plan = planCall();
-      JsonNode st =
-          plan != null && plan.path("ok").asBoolean(false)
-              ? plan.path("stats")
-              : null;
+      JsonNode st = plan.path("ok").asBoolean(false) ? plan.path("stats") : null;
       final boolean ok = st != null && !st.isNull() && st.has("rows");
       final long rows = ok ? st.path("rows").asLong() : 0;
       final long bytes = ok ? st.path("bytes").asLong() : 0;
@@ -1089,8 +1315,7 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
       // = unbounded full scan; no usable reply = one unbounded scan
       JsonNode out = planCall();
       List<InputPartition> parts = new ArrayList<>();
-      if (out != null && out.path("ok").asBoolean(false)
-          && out.path("splits").isArray()) {
+      if (out.path("ok").asBoolean(false) && out.path("splits").isArray()) {
         for (JsonNode s : out.path("splits")) {
           parts.add(
               new RowsPartition(
@@ -1161,7 +1386,7 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
    * vector types match by construction; a zero-column scan (COUNT(*))
    * gets zero-column batches whose row counts carry the rows. */
   static class ColumnarRowsReader implements PartitionReader<ColumnarBatch> {
-    private final Process proc;
+    private final Request req;
     private final StructType schema;
     private BufferAllocator allocator;
     private ArrowStreamReader arrow;
@@ -1171,35 +1396,23 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
     ColumnarRowsReader(RowsPartition part, StructType schema) {
       this.schema = schema;
       Bridge b = Bridge.fromOptions(new CaseInsensitiveStringMap(part.opts));
-      this.proc =
-          b.launch(
+      this.req =
+          b.ask(
               "rows",
               "--ranges", part.rangesJson,
               "--conditions", part.condsJson,
               "--columns", part.columnsJson,
               "--limit", part.limit == null ? null : String.valueOf(part.limit));
+      if (req.replyEmpty()) {
+        return; // no Arrow stream: next() surfaces the status
+      }
+      allocator = new RootAllocator(Long.MAX_VALUE);
+      arrow = new ArrowStreamReader(req.reply, allocator);
       try {
-        BufferedInputStream in = new BufferedInputStream(proc.getInputStream());
-        in.mark(1);
-        if (in.read() == -1) {
-          return; // empty stream: next() surfaces the exit status
-        }
-        in.reset();
-        allocator = new RootAllocator(Long.MAX_VALUE);
-        arrow = new ArrowStreamReader(in, allocator);
         root = arrow.getVectorSchemaRoot();
       } catch (Exception e) {
-        proc.destroy();
+        close();
         throw new RuntimeException("tiledb_agg columnar bridge open failed: " + e, e);
-      }
-    }
-
-    private void checkExit() throws Exception {
-      int rc = proc.waitFor();
-      if (rc != 0) {
-        String err =
-            new String(proc.getErrorStream().readAllBytes(), StandardCharsets.UTF_8);
-        throw new RuntimeException("tiledb_agg rows bridge failed: " + err);
       }
     }
 
@@ -1207,7 +1420,7 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
     public boolean next() {
       try {
         if (arrow == null || !arrow.loadNextBatch()) {
-          checkExit();
+          req.finish("rows");
           return false;
         }
         ColumnVector[] vecs = new ColumnVector[schema.fields().length];
@@ -1240,7 +1453,7 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
       } catch (Exception ignored) {
         // release-path best effort
       }
-      proc.destroy();
+      req.close(); // a stream left unread destroys its bridge
     }
   }
 
@@ -1328,23 +1541,13 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
       }
       Bridge b = Bridge.fromOptions(new CaseInsensitiveStringMap(opts));
       try {
-        String fragsJson = new ObjectMapper().writeValueAsString(frags);
-        Process p = b.launch("commitfrags", "--frags", fragsJson);
-        String out =
-            new String(p.getInputStream().readAllBytes(), StandardCharsets.UTF_8);
-        int rc = p.waitFor();
-        JsonNode n = out.isEmpty() ? null : new ObjectMapper().readTree(out);
-        if (rc != 0 || n == null || !n.path("ok").asBoolean(false)) {
-          String err =
-              new String(p.getErrorStream().readAllBytes(), StandardCharsets.UTF_8);
-          throw new RuntimeException(
-              "tiledb_agg commit failed (staged fragments remain "
-                  + "invisible): " + err);
+        JsonNode n = b.call("commitfrags", "--frags", MAPPER.writeValueAsString(frags));
+        if (!n.path("ok").asBoolean(false)) {
+          throw new RuntimeException("unexpected reply " + n);
         }
-      } catch (RuntimeException e) {
-        throw e;
       } catch (Exception e) {
-        throw new RuntimeException("tiledb_agg commit failed: " + e, e);
+        throw new RuntimeException(
+            "tiledb_agg commit failed (staged fragments remain invisible): " + e, e);
       }
     }
 
@@ -1371,19 +1574,18 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
 
   static class AggDataWriter implements DataWriter<InternalRow> {
     private final StructType schema;
-    private final Process proc;
+    private final Request req;
     private final java.io.BufferedWriter out;
     private final StringBuilder sb = new StringBuilder(256);
 
     AggDataWriter(StructType schema, Map<String, String> opts) {
       this.schema = schema;
       Bridge b = Bridge.fromOptions(new CaseInsensitiveStringMap(opts));
-      this.proc = b.launch("write");
+      this.req = b.open("write");
+      // JSON lines, sent as the request's payload frames
       this.out =
           new java.io.BufferedWriter(
-              new java.io.OutputStreamWriter(
-                  proc.getOutputStream(), StandardCharsets.UTF_8),
-              1 << 16);
+              new java.io.OutputStreamWriter(req.payload, StandardCharsets.UTF_8), 1 << 16);
     }
 
     @Override
@@ -1446,34 +1648,30 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
     @Override
     public WriterCommitMessage commit() throws java.io.IOException {
       try {
-        out.close(); // EOF: the bridge writes + stages the fragment
-        String outStr =
-            new String(proc.getInputStream().readAllBytes(), StandardCharsets.UTF_8);
-        int rc = proc.waitFor();
-        JsonNode n =
-            outStr.isEmpty() ? null : new ObjectMapper().readTree(outStr);
-        if (rc != 0 || n == null || !n.path("ok").asBoolean(false)) {
-          String err =
-              new String(proc.getErrorStream().readAllBytes(), StandardCharsets.UTF_8);
-          throw new java.io.IOException("tiledb_agg write task failed: " + err);
+        out.flush(); // the reply read ends the payload: the bridge stages the fragment
+        byte[] reply = req.reply.readAllBytes();
+        req.finish("write");
+        JsonNode n = reply.length == 0 ? null : MAPPER.readTree(reply);
+        if (n == null || !n.path("ok").asBoolean(false)) {
+          throw new java.io.IOException("tiledb_agg write task failed: reply " + n);
         }
         JsonNode f = n.path("frag");
         return new FragMessage(f.isNull() ? null : f.asText());
       } catch (java.io.IOException e) {
         throw e;
       } catch (Exception e) {
-        throw new java.io.IOException("tiledb_agg write task failed: " + e);
+        throw new java.io.IOException("tiledb_agg write task failed: " + e, e);
       }
     }
 
     @Override
     public void abort() {
-      proc.destroy(); // staged dir (if any) stays invisible
+      req.close(); // kills the bridge mid-payload: no fragment is staged
     }
 
     @Override
     public void close() {
-      proc.destroy();
+      req.close();
     }
   }
 }

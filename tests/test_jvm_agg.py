@@ -653,3 +653,224 @@ def test_write_path_two_jobs_compose(spark, tmp_path):
     got = {r.k: r.v for r in agg_reader(spark, uri).load().collect()}
     assert len(got) == 120
     assert got[50] == 50.0 and got[95] == 999.0 and got[119] == 999.0
+
+
+# ---- resident bridges -------------------------------------------------------
+
+
+def _bridge_pids(jvm_pid):
+    """PIDs of the JVM's children running jvm_bridge."""
+    pids = set()
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat") as f:
+                ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+            if ppid != jvm_pid:
+                continue
+            with open(f"/proc/{d}/cmdline", "rb") as f:
+                if b"jvm_bridge" in f.read():
+                    pids.add(int(d))
+        except (OSError, ValueError, IndexError):
+            pass  # exited while listed
+    return pids
+
+
+def _jvm_pid(spark):
+    if not os.path.isdir("/proc/self"):
+        pytest.skip("needs /proc to list the JVM's children")
+    return spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+
+
+def _window_expect(n, lo, hi):
+    ks = [k for k in range(n) if lo <= k <= hi]
+    return len(ks), sum(k % 7 for k in ks)
+
+
+def test_resident_bridge_spawns_once(spark, tmp_path):
+    """20 pushed aggregates in one session reuse one resident bridge:
+    at most one new jvm_bridge child of the JVM appears, so steady
+    state spawns 0 processes per query."""
+    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader
+
+    jvm = _jvm_pid(spark)
+    uri = _mk(tmp_path, n=500)
+    agg_reader(spark, uri).load().createOrReplaceTempView("jvm_spawns")
+    before = _bridge_pids(jvm)
+    new = set()
+    for i in range(20):
+        df = spark.sql(
+            "SELECT COUNT(*) AS n, SUM(q) AS s FROM jvm_spawns "
+            f"WHERE k BETWEEN {i * 10} AND {i * 10 + 300}"
+        )
+        assert "MetadataAggScan" in (
+            df._jdf.queryExecution().executedPlan().toString()
+        )
+        row = df.collect()[0]
+        assert (row.n, row.s) == _window_expect(500, i * 10, i * 10 + 300)
+        now = _bridge_pids(jvm)
+        assert now, "no resident bridge outlived the query"
+        new |= now - before
+    assert len(new) <= 1, new
+
+
+def test_bridge_killed_mid_query(spark, tmp_path):
+    """Killing bridges, idle or mid-request, never yields a wrong
+    answer: a query either respawns and answers exactly or fails with
+    a bridge error, and the next query after the kills is exact."""
+    import signal
+    import threading
+    import time
+
+    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader
+
+    jvm = _jvm_pid(spark)
+    n = 40000
+    uri = _mk(tmp_path, n=n)
+    agg_reader(spark, uri).load().createOrReplaceTempView("jvm_kill")
+    queries = [
+        ("SELECT COUNT(*) AS n, SUM(q) AS s FROM jvm_kill "
+         "WHERE k BETWEEN 100 AND 30000", _window_expect(n, 100, 30000)),
+        # an attr condition: the bridge row scan, not metadata
+        ("SELECT COUNT(*) AS n, SUM(q) AS s FROM jvm_kill WHERE q >= 3",
+         (sum(1 for k in range(n) if k % 7 >= 3),
+          sum(k % 7 for k in range(n) if k % 7 >= 3))),
+    ]
+
+    def run(sql):
+        r = spark.sql(sql).collect()[0]
+        return (r.n, r.s)
+
+    def kill_all():
+        for pid in _bridge_pids(jvm):
+            try:
+                os.kill(pid, signal.SIGKILL)
+            except ProcessLookupError:
+                pass
+
+    for sql, want in queries:  # bridges exist before the kills
+        assert run(sql) == want
+    kill_all()  # idle bridges die: the next borrow respawns
+    for sql, want in queries:
+        assert run(sql) == want
+    stop = threading.Event()
+
+    def killer():
+        while not stop.is_set():
+            kill_all()
+            time.sleep(0.05)
+
+    t = threading.Thread(target=killer, daemon=True)
+    t.start()
+    try:
+        for _ in range(4):
+            for sql, want in queries:
+                try:
+                    got = run(sql)
+                except Exception as e:  # noqa: BLE001 - the clean error
+                    assert "bridge" in str(e), str(e)[:2000]
+                else:
+                    assert got == want
+    finally:
+        stop.set()
+        t.join(timeout=60)
+    assert not t.is_alive()
+    for sql, want in queries:
+        assert run(sql) == want
+
+
+def test_abandoned_stream_not_reused(spark, tmp_path):
+    """A LIMIT above a residual filter stops reading the Arrow stream
+    after its first batch; that bridge is destroyed, so the unread
+    batches never reach the next request."""
+    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader
+
+    n = 70000  # three Arrow batches of at most 32768 rows
+    uri = _mk(tmp_path, n=n)
+    agg_reader(spark, uri).load().createOrReplaceTempView("jvm_abandon")
+    for _ in range(3):
+        df = spark.sql("SELECT k FROM jvm_abandon WHERE k * 2 + 1 > 0 LIMIT 5")
+        assert "PushedLimit" not in (
+            df._jdf.queryExecution().executedPlan().toString()
+        )
+        assert len(df.collect()) == 5
+        row = spark.sql(
+            "SELECT COUNT(*) AS n, SUM(q) AS s FROM jvm_abandon WHERE q >= 3"
+        ).collect()[0]
+        assert (row.n, row.s) == (
+            sum(1 for k in range(n) if k % 7 >= 3),
+            sum(k % 7 for k in range(n) if k % 7 >= 3),
+        )
+        got = spark.sql(
+            "SELECT COUNT(*) AS n FROM jvm_abandon WHERE k < 1000"
+        ).collect()[0]
+        assert got.n == 1000
+
+
+def test_fragment_visible_to_next_request(spark, tmp_path):
+    """A fragment committed between two queries is seen by the second
+    one, through the metadata aggregate and the row scan alike."""
+    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader
+
+    uri = _mk(tmp_path, n=300)
+    agg_reader(spark, uri).load().createOrReplaceTempView("jvm_fresh")
+    q_agg = "SELECT COUNT(*) AS n, MAX(k) AS hi FROM jvm_fresh"
+    q_scan = "SELECT COUNT(*) AS n FROM jvm_fresh WHERE q = 1"
+    assert tuple(spark.sql(q_agg).collect()[0]) == (300, 299)
+    assert spark.sql(q_scan).collect()[0].n == 43
+    write_native_fragment(
+        uri,
+        {"k": [1000, 1001], "v": [0.0, 1.0], "q": [1, 1],
+         "tag": ["x", "y"], "w": [None, 5]},
+        ts=20, version=19,
+    )
+    assert tuple(spark.sql(q_agg).collect()[0]) == (302, 1001)
+    assert spark.sql(q_scan).collect()[0].n == 45
+
+
+def test_bridge_error_carries_stderr(spark, tmp_path):
+    """A bridge command that fails reports the bridge's own error text,
+    not a bare 'bridge failed'."""
+    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader
+
+    uri = _mk(tmp_path, n=10)
+    with pytest.raises(Exception, match="must not be provided"):
+        agg_reader(
+            spark, uri, encryption_key="0123456789abcdef0123456789abcdef"
+        ).load()
+
+
+def test_write_task_failure_leaves_nothing(spark, tmp_path):
+    """A write job whose last task fails after the others staged their
+    fragments commits nothing: 0 rows are visible, and the next write
+    job through the same bridges lands exactly."""
+    from tiledb_mariadb_spark.sources.jvm_agg import (
+        agg_reader,
+        register_tiledb_agg,
+    )
+
+    register_tiledb_agg(spark)
+    uri = str(tmp_path / "wfail")
+    create_native_array(
+        uri,
+        [NativeDim("k", 1, 1, (0, 10**6), None)],
+        [NativeAttr("v", 3, 1, False, None)],
+    )
+    df = spark.range(0, 4000, numPartitions=4).selectExpr(
+        "id AS k",
+        "CASE WHEN id = 3999 THEN raise_error('planted write failure') "
+        "ELSE CAST(id AS DOUBLE) END AS v",
+    )
+    with pytest.raises(Exception, match="planted write failure"):
+        df.write.format("tiledb_agg").option("path", uri).mode(
+            "append"
+        ).save()
+    assert agg_reader(spark, uri).load().count() == 0
+    spark.range(0, 4000, numPartitions=4).selectExpr(
+        "id AS k", "CAST(id AS DOUBLE) AS v"
+    ).write.format("tiledb_agg").option("path", uri).mode("append").save()
+    got = agg_reader(spark, uri).load().selectExpr(
+        "COUNT(*) AS n", "SUM(k) AS s"
+    ).collect()[0]
+    assert (got.n, got.s) == (4000, sum(range(4000)))

@@ -129,8 +129,9 @@ def _run(code):
 
 def test_driver_import_leaves_zipimport_alone():
     """Outside a worker the package import neither touches zipimport
-    nor pulls in pyspark (tools/jvm_bridge.py spawns bare interpreters
-    that import the package for the decoder alone)."""
+    nor pulls in pyspark (the resident tools/jvm_bridge.py processes
+    are bare interpreters that import the package for the decoder
+    alone)."""
     got = _run(
         "import sys, zipimport\n"
         "before = zipimport.zipimporter.invalidate_caches\n"

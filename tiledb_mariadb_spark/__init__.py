@@ -17,11 +17,10 @@ Spark-first:
   :mod:`tiledb_mariadb_spark.functions`.
 
 The top-level names are resolved LAZILY (PEP 562): importing any
-submodule must not drag pyspark into the process.  The subprocess
-bridge behind ``format("tiledb_agg")`` (tools/jvm_bridge.py) spawns a
-fresh interpreter PER PARTITION and needs only the numpy decoder tier
-— an eager ``from .catalog import …`` here taxed every spawn ~0.4 s of
-pyspark import before a single byte decoded.
+submodule must not drag pyspark into the process.  The resident bridge
+behind ``format("tiledb_agg")`` (tools/jvm_bridge.py) needs only the
+numpy decoder tier — an eager ``from .catalog import …`` here would tax
+every bridge start ~0.4 s of pyspark import and its memory for life.
 """
 
 from __future__ import annotations

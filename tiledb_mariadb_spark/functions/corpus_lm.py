@@ -1,25 +1,14 @@
-"""Corpus-statistics operators: language-model-flavored quality signals
-(rare-n-gram ratio), substring-dedup signals (duplicated-span fraction,
-after Lee et al. 2022, "Deduplicating Training Data Makes Language Models
-Better" — the suffix-array signal re-expressed as k-gram doc frequency),
-incremental batch-vs-corpus dedup, and int8 embedding quantization.
+"""Corpus-statistics operators: a language-model-flavored quality signal
+(rare-n-gram ratio) over per-document k-gram counts.
 
-Scale design:
-- n-gram stats are two hash-shuffles (by (doc, shingle), then by shingle)
-  plus one shuffle back to doc — the minimal shape for corpus-relative
-  per-document scores; the per-(doc,shingle) pre-aggregation means the
-  shingle-keyed join moves counts, never raw shingle occurrences.
-- incremental dedup treats the existing corpus as an INDEX (hashes +
-  MinHash band buckets).  At 100 TB the corpus side is precomputed and
-  stored (write once, join per batch); only the new batch is shingled per
-  run.  Both probes are equi-joins — no all-pairs work.
-- quantization is map-only: per-vector max/abs + two integer folds, all
-  inside whole-stage codegen; nothing shuffles.
+Scale design: n-gram stats are two hash-shuffles (by (doc, shingle),
+then by shingle) plus one shuffle back to doc — the minimal shape for
+corpus-relative per-document scores; the per-(doc,shingle)
+pre-aggregation means the shingle-keyed join moves counts, never raw
+shingle occurrences.
 
-Determinism: counts are exact integers; the only float ops are single
-IEEE divisions / multiplies with identical parenthesization on both
-engines, and half-up rounding is spelled FLOOR(z + 0.5) because Spark's
-ROUND and DuckDB's ROUND disagree on negative halves.
+Determinism: counts are exact integers; the only float op is one IEEE
+division.
 """
 
 from __future__ import annotations
@@ -42,18 +31,6 @@ def per_doc_shingle_counts(
         with_shingles(df, id_col, text_col, k=k)
         .groupBy(id_col, "shingle")
         .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def per_doc_shingle_counts_sql(
-    table_expr: str, id_col: str, text_col: str, k: int
-) -> str:
-    from tiledb_mariadb_spark.functions.dedup import shingles_sql  # noqa: PLC0415
-
-    return (
-        f"SELECT {id_col}, shingle, COUNT(*) AS cnt"
-        f" FROM ({shingles_sql(table_expr, id_col, text_col, k=k)})"
-        f" GROUP BY {id_col}, shingle"
     )
 
 
@@ -96,293 +73,3 @@ def rare_ngram_ratio(
             F.col("rare_ngrams") / F.col("n_ngrams").cast("double"),
         )
     )
-
-
-def rare_ngram_ratio_sql(
-    table_expr: str,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    max_corpus_count: int = 2,
-) -> str:
-    per = per_doc_shingle_counts_sql(table_expr, id_col, text_col, k)
-    rare = f"SUM(CASE WHEN corpus_cnt <= {max_corpus_count} THEN cnt ELSE 0 END)"
-    return f"""
-WITH per AS ({per}),
-corpus AS (SELECT shingle, CAST(SUM(cnt) AS BIGINT) AS corpus_cnt
-           FROM per GROUP BY shingle)
-SELECT {id_col},
-       CAST(SUM(cnt) AS BIGINT) AS n_ngrams,
-       CAST({rare} AS BIGINT) AS rare_ngrams,
-       ({rare} / CAST(SUM(cnt) AS DOUBLE)) AS rare_ratio
-FROM per JOIN corpus USING (shingle)
-GROUP BY {id_col}
-"""
-
-
-# --- duplicated-span fraction (substring-dedup signal) ----------------------
-
-
-def dup_span_fraction(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    min_docs: int = 3,
-    flag_threshold: float = 0.5,
-) -> DataFrame:
-    """Per-doc fraction of k-gram occurrences whose k-gram appears in at
-    least ``min_docs`` distinct documents, plus a ``flagged`` gate at
-    ``flag_threshold``.
-
-    This is the doc-frequency re-expression of suffix-array substring
-    dedup (Lee et al. 2022): a doc mostly made of spans other docs also
-    contain is boilerplate / a partial duplicate, even when no single
-    whole-doc near-dup pair exists.  Differs from :func:`rare_ngram_ratio`
-    in the corpus statistic (distinct-doc frequency, not total count) and
-    the direction of the signal (shared spans, not rare ones).
-    """
-    per = per_doc_shingle_counts(df, id_col, text_col, k)
-    # (doc, shingle) is unique post-aggregation → COUNT(*) = doc frequency
-    docfreq = per.groupBy("shingle").agg(
-        F.count(F.lit(1)).cast("long").alias("doc_freq")
-    )
-    dup_occ = F.sum(
-        F.when(F.col("doc_freq") >= min_docs, F.col("cnt")).otherwise(F.lit(0))
-    ).cast("long")
-    return (
-        per.join(docfreq, "shingle")
-        .groupBy(id_col)
-        .agg(
-            F.sum("cnt").cast("long").alias("n_spans"),
-            dup_occ.alias("dup_spans"),
-        )
-        .withColumn(
-            "dup_frac", F.col("dup_spans") / F.col("n_spans").cast("double")
-        )
-        .withColumn("flagged", F.col("dup_frac") > F.lit(flag_threshold))
-    )
-
-
-def dup_span_fraction_sql(
-    table_expr: str,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    min_docs: int = 3,
-    flag_threshold: float = 0.5,
-) -> str:
-    per = per_doc_shingle_counts_sql(table_expr, id_col, text_col, k)
-    dup = f"SUM(CASE WHEN doc_freq >= {min_docs} THEN cnt ELSE 0 END)"
-    return f"""
-WITH per AS ({per}),
-docfreq AS (SELECT shingle, CAST(COUNT(*) AS BIGINT) AS doc_freq
-            FROM per GROUP BY shingle),
-scored AS (
-  SELECT {id_col},
-         CAST(SUM(cnt) AS BIGINT) AS n_spans,
-         CAST({dup} AS BIGINT) AS dup_spans,
-         ({dup} / CAST(SUM(cnt) AS DOUBLE)) AS dup_frac
-  FROM per JOIN docfreq USING (shingle)
-  GROUP BY {id_col})
-SELECT {id_col}, n_spans, dup_spans, dup_frac,
-       (dup_frac > {flag_threshold!r}) AS flagged
-FROM scored
-"""
-
-
-# --- incremental batch-vs-corpus dedup --------------------------------------
-
-
-def incremental_dedup_status(
-    batch: DataFrame,
-    corpus: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-) -> DataFrame:
-    """Admission check for a NEW batch against an EXISTING corpus:
-    per batch doc, ``dup_exact`` (md5 text hash already in the corpus),
-    ``dup_near`` (shares a MinHash LSH band bucket with any corpus doc),
-    and ``keep`` (neither).
-
-    Both probes are equi-joins against corpus-side structures that a
-    production pipeline precomputes once and stores (the hash set and the
-    band-bucket index — write amortized over every future batch); only
-    the incoming batch is shingled per run, so admission cost scales with
-    the batch, not the corpus.  Mirrors the candidate-generation shape of
-    :func:`~tiledb_mariadb_spark.functions.dedup.lsh_candidate_pairs`
-    but one-sided.
-    """
-    from tiledb_mariadb_spark.functions.dedup import (  # noqa: PLC0415
-        minhash_signatures,
-    )
-    from tiledb_mariadb_spark.functions.text import md5_hex  # noqa: PLC0415
-
-    def _bands(sigs: DataFrame) -> DataFrame:
-        num_bands = num_hashes // rows_per_band
-        structs = F.array(
-            *[
-                F.struct(
-                    F.lit(b).cast("long").alias("band"),
-                    F.col(f"mh{b * rows_per_band}").alias("h0"),
-                    F.col(f"mh{b * rows_per_band + 1}").alias("h1"),
-                )
-                for b in range(num_bands)
-            ]
-        )
-        return sigs.select(
-            F.col(id_col).alias("doc"), F.explode(structs).alias("bs")
-        ).select("doc", "bs.band", "bs.h0", "bs.h1")
-
-    corpus_hashes = corpus.select(
-        md5_hex(F.col(text_col)).alias("text_hash")
-    ).distinct()
-    exact_ids = (
-        batch.withColumn("text_hash", md5_hex(F.col(text_col)))
-        .join(corpus_hashes, "text_hash", "left_semi")
-        .select(F.col(id_col))
-    )
-    bsig = minhash_signatures(
-        with_shingles(batch, id_col, text_col, k=k), id_col, num_hashes
-    )
-    csig = minhash_signatures(
-        with_shingles(corpus, id_col, text_col, k=k), id_col, num_hashes
-    )
-    near_ids = (
-        _bands(bsig)
-        .join(_bands(csig), ["band", "h0", "h1"], "left_semi")
-        .select(F.col("doc").alias(id_col))
-        .distinct()
-    )
-    exact_flag = exact_ids.withColumn("dup_exact", F.lit(True))
-    near_flag = near_ids.withColumn("dup_near", F.lit(True))
-    return (
-        batch.select(id_col)
-        .join(exact_flag, id_col, "left")
-        .join(near_flag, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("dup_exact", F.lit(False)).alias("dup_exact"),
-            F.coalesce("dup_near", F.lit(False)).alias("dup_near"),
-            (
-                ~F.coalesce("dup_exact", F.lit(False))
-                & ~F.coalesce("dup_near", F.lit(False))
-            ).alias("keep"),
-        )
-    )
-
-
-def incremental_dedup_status_sql(
-    batch_expr: str,
-    corpus_expr: str,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-) -> str:
-    from tiledb_mariadb_spark.functions.dedup import (  # noqa: PLC0415
-        minhash_sql,
-        shingles_sql,
-    )
-
-    num_bands = num_hashes // rows_per_band
-
-    def _bands_sql(sig_cte: str) -> str:
-        parts = [
-            f"SELECT {id_col} AS doc, {b} AS band,"
-            f" mh{b * rows_per_band} AS h0, mh{b * rows_per_band + 1} AS h1"
-            f" FROM {sig_cte}"
-            for b in range(num_bands)
-        ]
-        return " UNION ALL ".join(parts)
-
-    bsig = minhash_sql(
-        shingles_sql(batch_expr, id_col, text_col, k=k), id_col, num_hashes
-    )
-    csig = minhash_sql(
-        shingles_sql(corpus_expr, id_col, text_col, k=k), id_col, num_hashes
-    )
-    return f"""
-WITH bsig AS ({bsig}), csig AS ({csig}),
-bband AS ({_bands_sql('bsig')}), cband AS ({_bands_sql('csig')}),
-exact AS (
-  SELECT DISTINCT b.{id_col} FROM {batch_expr} b
-  WHERE md5(b.{text_col}) IN (SELECT md5({text_col}) FROM {corpus_expr})),
-near AS (
-  SELECT DISTINCT bband.doc AS {id_col} FROM bband
-  JOIN cband USING (band, h0, h1))
-SELECT b.{id_col},
-       (b.{id_col} IN (SELECT {id_col} FROM exact)) AS dup_exact,
-       (b.{id_col} IN (SELECT {id_col} FROM near)) AS dup_near,
-       (b.{id_col} NOT IN (SELECT {id_col} FROM exact)
-        AND b.{id_col} NOT IN (SELECT {id_col} FROM near)) AS keep
-FROM {batch_expr} b
-"""
-
-
-# --- int8 embedding quantization --------------------------------------------
-# Symmetric per-vector int8: scale = max|x| / 127, code = half-up(x/scale).
-# Map-only; the audit columns (code_sum, scaled SSE) are exact integers so
-# the oracle hash-compares reconstruction quality, not just shape.
-
-_E = "1000000.0"  # error scaling: 1e6 keeps err² well inside int64
-
-
-def quantize_embedding_cols(vec_col: str) -> dict[str, str]:
-    """Spark SQL expr strings over an outer column ``maxabs`` (attach with
-    :func:`with_maxabs` first).  Half-up via FLOOR(z + 0.5): Spark ROUND
-    (HALF_UP) and DuckDB ROUND (half-away) disagree on negative halves."""
-    code = (
-        f"CASE WHEN maxabs = 0.0D THEN CAST(0 AS BIGINT) ELSE"
-        f" CAST(FLOOR((CAST(x AS DOUBLE) * 127.0D) / maxabs + 0.5D) AS BIGINT)"
-        f" END"
-    )
-    err = (
-        f"(CAST(x AS DOUBLE) - (CAST(({code}) AS DOUBLE) * maxabs) / 127.0D)"
-    )
-    err_int = f"CAST(FLOOR({err} * {_E}D + 0.5D) AS BIGINT)"
-    return {
-        "qscale": "(maxabs / 127.0D)",
-        "code_sum": (
-            f"aggregate(transform({vec_col}, x -> {code}),"
-            f" CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-        ),
-        "sse_scaled": (
-            f"aggregate(transform({vec_col}, x -> {err_int} * {err_int}),"
-            f" CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-        ),
-    }
-
-
-def with_maxabs(df: DataFrame, vec_col: str) -> DataFrame:
-    return df.withColumn(
-        "maxabs",
-        F.expr(f"array_max(transform({vec_col}, x -> abs(CAST(x AS DOUBLE))))"),
-    )
-
-
-def quantize_embedding_cols_sql(vec_col: str) -> dict[str, str]:
-    code = (
-        f"CASE WHEN maxabs = 0.0 THEN CAST(0 AS BIGINT) ELSE"
-        f" CAST(FLOOR((CAST(x AS DOUBLE) * 127.0) / maxabs + 0.5) AS BIGINT)"
-        f" END"
-    )
-    err = f"(CAST(x AS DOUBLE) - (CAST(({code}) AS DOUBLE) * maxabs) / 127.0)"
-    err_int = f"CAST(FLOOR({err} * {_E} + 0.5) AS BIGINT)"
-    return {
-        "maxabs": (
-            f"list_max(list_transform({vec_col}, x -> abs(CAST(x AS DOUBLE))))"
-        ),
-        "qscale": "(maxabs / 127.0)",
-        "code_sum": (
-            f"CAST(list_sum(list_transform({vec_col}, x -> {code})) AS BIGINT)"
-        ),
-        "sse_scaled": (
-            f"CAST(list_sum(list_transform({vec_col}, x -> {err_int} * {err_int}))"
-            f" AS BIGINT)"
-        ),
-    }

@@ -19,8 +19,6 @@ Shape of the index at 100 TB:
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -334,8 +332,3 @@ def compact_ivf_index(spark, path: str) -> int:
             shutil.rmtree(tmp, ignore_errors=True)
     shutil.rmtree(dpath, ignore_errors=True)
     return len(affected)
-
-
-def ideal_k(n_rows: int) -> int:
-    """Rule-of-thumb list count: √N keeps list size ≈ probe cost."""
-    return max(1, int(math.sqrt(max(n_rows, 1))))

@@ -15,8 +15,11 @@ answers ungrouped COUNT(*) / MIN / MAX / SUM entirely from fragment
 metadata (zero data tiles decoded — the decode-poison test corrupts
 every data file and the aggregates still come back), falling back to an
 honest bridge row-scan when the metadata trust rules cannot prove the
-value.  The fast scan path remains ``format("tiledb_native")``; this
-format exists for the aggregate contract.
+value.  The Java side sends every command to a resident
+``tools/jvm_bridge.py serve`` process of this interpreter, pooled per
+JVM, so a pushed aggregate costs one request, not an interpreter start.
+The fast scan path remains ``format("tiledb_native")``; this format
+exists for the aggregate contract.
 """
 
 from __future__ import annotations
@@ -86,8 +89,8 @@ def register_tiledb_agg(spark) -> None:
 
 def agg_reader(spark, uri: str, **options):
     """A DataFrameReader for ``format("tiledb_agg")`` preconfigured
-    with this interpreter + repo (the Java side subprocesses back into
-    the Python decoder)."""
+    with this interpreter + repo (the Java side's resident bridges run
+    them to reach the Python decoder)."""
     register_tiledb_agg(spark)
     r = (
         spark.read.format("tiledb_agg")

@@ -38,8 +38,8 @@ from typing import Any, Iterator, Optional, Sequence
 
 # NOTE: no module-level pyspark import — every DataFrame/SparkSession
 # reference below is annotation-only (PEP 563 via the future import) or
-# a method on a caller-passed session.  The jvm_bridge subprocess
-# imports this module per partition; pyspark would tax each spawn.
+# a method on a caller-passed session.  The resident jvm_bridge
+# processes import this module; pyspark would tax each bridge start.
 
 @dataclass(frozen=True)
 class DimInfo:

@@ -1587,15 +1587,6 @@ def _apply_enumeration(schema: "NativeSchema", field, vals: list) -> list:
         ) from exc
 
 
-def _dense_coords(schema: NativeSchema) -> list[tuple]:
-    """Global cell order of a dense fragment covering the whole domain:
-    space tiles in row-major tile order, cells row-major within each tile
-    (both ROW_MAJOR in every fixture)."""
-    return _dense_coords_box(
-        schema, [d.domain for d in schema.dims]
-    )
-
-
 def _dense_coords_box(schema: NativeSchema, box) -> list[tuple]:
     """Global cell order of a dense fragment covering ``box`` (per-dim
     inclusive (lo, hi), tile-aligned): the box's space tiles in
@@ -3892,31 +3883,6 @@ def fragment_overlaps(
         if hi is not None and dom[0] > hi:
             return False
     return True
-
-
-# Per-process decode cache: Spark reuses Python workers across tasks, so
-# when several splits of one scan land on the same worker they share one
-# decode instead of each re-reading every fragment.  Keyed by the
-# fragment-directory fingerprint so a newly committed fragment (or a
-# different `at`) misses; capped to a handful of arrays (fixture-scale).
-_ARRAY_CACHE: dict = {}
-_ARRAY_CACHE_MAX = 4
-
-
-def read_native_array_cached(
-    array_dir: str, at: int | None = None
-) -> tuple[NativeSchema, list[tuple]]:
-    key = (
-        array_dir,
-        at,
-        tuple(os.path.basename(f) for f in _fragment_dirs(array_dir, at=at)),
-    )
-    hit = _ARRAY_CACHE.get(key)
-    if hit is None:
-        if len(_ARRAY_CACHE) >= _ARRAY_CACHE_MAX:
-            _ARRAY_CACHE.clear()
-        hit = _ARRAY_CACHE[key] = read_native_array(array_dir, at=at)
-    return hit
 
 
 _SPARK_TYPE = {

@@ -73,6 +73,12 @@ def clear_encryption_key(array_dir: str) -> None:
     _KEYS.pop(_norm(array_dir), None)
 
 
+def clear_encryption_keys() -> None:
+    """Forget every registered key (the resident JVM bridge runs this
+    before each request it serves)."""
+    _KEYS.clear()
+
+
 def key_for_path(path: str) -> Optional[bytes]:
     """Longest registered array-dir prefix covering ``path`` (files of
     an array live under its directory; __schema/ and __fragments/

@@ -1,8 +1,12 @@
-"""Subprocess bridge for the unified JVM DataSource V2 shim.
+"""Resident bridge for the unified JVM DataSource V2 shim.
 
 ``java/TileDBAggDataSource.java`` (the DataSource V2 provider behind
-``spark.read.format("tiledb_agg")``) launches this module to reach the
-repo's pure-Python native decoder from the JVM:
+``spark.read.format("tiledb_agg")``) keeps ``python -m
+tiledb_mariadb_spark.tools.jvm_bridge serve`` processes alive for the
+life of the JVM, one per concurrent caller, and sends every command to
+one of them as a request (:func:`serve`), so a call pays no interpreter
+start or import.  The commands, which ``main(argv)`` also runs one-shot
+from the command line:
 
 - ``schema --uri U``: the array's Spark DDL as one JSON object;
 - ``agg --uri U --aggs count;min:c;sum:c [--conditions J]``:
@@ -18,7 +22,8 @@ repo's pure-Python native decoder from the JVM:
   1-D dim0 case, grid_agg_native for N-D / non-dim0 grids (footer walk
   + edge-tile decode — the q340/q343 metadata rollups behind plain
   SQL); bucket keys in the requested group order;
-- ``write --uri U`` (rows on stdin) / ``commitfrags --uri U --frags J``:
+- ``write --uri U`` (JSON-lines rows on stdin, which under ``serve`` is
+  the request's payload) / ``commitfrags --uri U --frags J``:
   the write path — one staged fragment per task, one atomic job-level
   visibility flip (.wrt marker or .con group);
 - ``topk --uri U --topk col:dir:k``: the zone-map ORDER-BY-LIMIT bound
@@ -38,13 +43,25 @@ repo's pure-Python native decoder from the JVM:
 
 Everything prints to stdout; errors exit nonzero with the reason on
 stderr (the Java side surfaces both).
+
+Wire of ``serve``: every frame is a 4-byte big-endian length and that
+many bytes.  A request is a header frame (the JSON argv list ``main``
+parses, ``--uri``/``--at``/``--encryption-key`` included), then zero or
+more payload frames (``write`` rows) ended by an empty frame.  The reply
+is ``main``'s stdout as frames ended by an empty frame, then one status
+frame ``{"rc": int, "stderr": str}``.  Stdin EOF between requests ends
+the loop with exit status 0.
 """
 
 from __future__ import annotations
 
 import argparse
+import io
 import json
+import os
+import struct
 import sys
+import traceback
 
 # FLOOR(k/width) in SQL is DOUBLE division: exact vs integer ``k//width``
 # only while |k| < 2^52 (quotient*width below the 53-bit mantissa).
@@ -209,36 +226,6 @@ def _np_cond_mask(np, arr, op, val=None):
     return notna & cmp
 
 
-def _rows_numpy(a, info, want, rng, conds) -> bool:
-    """Pandas-free rows emission: columnar numpy decode -> vectorized
-    condition masks -> Arrow IPC with the EXPLICIT schema the JVM
-    columnar reader wraps.  Returns False (emitted nothing) when the
-    shape falls outside the numpy fast path or a column's declared type
-    is exotic — the caller then runs the exact pandas path.
-
-    pandas is actively BLOCKED for the duration: pyarrow's pandas shim
-    imports it on the first ``pa.array`` call even for pure-numpy
-    input, and that import costs ~0.3 s in a process that lives
-    ~0.5 s (one spawn per partition).  The block is a meta_path hook
-    removed on exit, so the pandas fallback path still works."""
-
-    class _BlockPandas:  # noqa: D401 - import hook
-        @staticmethod
-        def find_spec(name, path=None, target=None):
-            if name == "pandas" or name.startswith("pandas."):
-                raise ImportError("pandas blocked in numpy rows path")
-            return None
-
-    block = "pandas" not in sys.modules
-    if block:
-        sys.meta_path.insert(0, _BlockPandas)
-    try:
-        return _rows_numpy_inner(a, info, want, rng, conds)
-    finally:
-        if block:
-            sys.meta_path.remove(_BlockPandas)
-
-
 def _arrow_types() -> dict:
     """Spark DDL type -> the Arrow type the JVM columnar reader wraps as
     that Spark type."""
@@ -276,7 +263,12 @@ def _zero_column_table(n: int):
     ])
 
 
-def _rows_numpy_inner(a, info, want, rng, conds) -> bool:
+def _rows_numpy(a, info, want, rng, conds) -> bool:
+    """Columnar rows emission: numpy decode -> vectorized condition
+    masks -> Arrow IPC with the EXPLICIT schema the JVM columnar reader
+    wraps.  Returns False (emitted nothing) when the shape falls
+    outside the numpy fast path or a column's declared type is exotic
+    — the caller then runs the exact pandas path."""
     import numpy as np  # noqa: PLC0415
     import pyarrow as pa  # noqa: PLC0415
 
@@ -322,7 +314,7 @@ def _stats_payload(a) -> dict | None:
     """{rows, exact, bytes} planning statistics, or None when no
     footer is parseable.  Shared by the standalone ``stats`` command
     and the ``splits`` command (which piggybacks it so the JVM scan
-    needs ONE planning spawn, not two)."""
+    needs ONE planning request, not two)."""
     import os as _os  # noqa: PLC0415
 
     from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
@@ -817,7 +809,7 @@ def main(argv=None) -> int:
                 splits = scan_splits(be, a.uri, info, ranges, target, a.at,
                                      None)
             out = [[list(r) for r in s] for s in splits]
-            try:  # piggyback planning stats: one spawn serves both
+            try:  # piggyback planning stats: one request serves both
                 st = _stats_payload(a)
             except Exception:  # noqa: BLE001 - stats are optional here
                 st = None
@@ -831,11 +823,8 @@ def main(argv=None) -> int:
 
     # rows: the honest (split-parallel) scan fallback — pushed
     # conditions applied EXACTLY, projection pruned, emitted as Arrow
-    # IPC (whole columns, not per-cell values).  The NUMPY-ONLY path
-    # runs first: this process is spawned PER PARTITION, and importing
-    # pandas costs ~0.5 s per spawn — more than decoding the split
-    # itself.  Only shapes outside the columnar fast path pay the
-    # pandas path.
+    # IPC (whole columns, not per-cell values).  The columnar numpy
+    # path runs first; only shapes outside it pay the pandas path.
     try:
         be = NativeDecoderBackend(encryption_key=a.encryption_key)
         info = be.info(a.uri, at=a.at)
@@ -884,5 +873,131 @@ def main(argv=None) -> int:
     return 0
 
 
+# ---- resident mode: framed requests over stdin/stdout ----------------------
+
+_FRAME = struct.Struct(">I")
+_MAX_FRAME = 1 << 24
+
+
+def _read_frame(f) -> bytes | None:
+    """The next frame's bytes; None at EOF on a frame boundary."""
+    head = f.read(_FRAME.size)
+    if not head:
+        return None
+    if len(head) == _FRAME.size:
+        (n,) = _FRAME.unpack(head)
+        body = f.read(n)
+        if len(body) == n:
+            return body
+    raise EOFError("jvm_bridge: input ended inside a frame")
+
+
+def _write_frame(f, data) -> None:
+    f.write(_FRAME.pack(len(data)))
+    f.write(data)
+
+
+class _PayloadIn(io.RawIOBase):
+    """A request's payload frames as one byte stream, ending at the
+    empty frame.  Input that ends first raises EOFError, so a ``write``
+    whose caller died never sees a clean end of its rows."""
+
+    def __init__(self, f):
+        self._f = f
+        self._left = memoryview(b"")
+        self.done = False
+
+    def readable(self) -> bool:
+        return True
+
+    def readinto(self, b) -> int:
+        while not self._left:
+            if self.done:
+                return 0
+            data = _read_frame(self._f)
+            if data is None:
+                raise EOFError("jvm_bridge: input ended inside a request")
+            self.done = not data
+            self._left = memoryview(data)
+        n = min(len(b), len(self._left))
+        b[:n] = self._left[:n]
+        self._left = self._left[n:]
+        return n
+
+
+class _ReplyOut(io.RawIOBase):
+    """Each write becomes reply frames (callers buffer it to 64 KiB)."""
+
+    def __init__(self, f):
+        self._f = f
+
+    def writable(self) -> bool:
+        return True
+
+    def write(self, b) -> int:
+        mv = memoryview(b).cast("B")
+        for i in range(0, len(mv), _MAX_FRAME):
+            _write_frame(self._f, mv[i:i + _MAX_FRAME])
+        return len(mv)
+
+
+def _run_request(argv, payload, out, err) -> int:
+    """``main(argv)`` with the payload as stdin, ``out`` as stdout and
+    ``err`` as stderr; any failure becomes a nonzero status."""
+    stdin = io.TextIOWrapper(io.BufferedReader(payload), encoding="utf-8")
+    stdout = io.TextIOWrapper(out, encoding="utf-8", write_through=True)
+    saved = sys.stdin, sys.stdout, sys.stderr
+    sys.stdin, sys.stdout, sys.stderr = stdin, stdout, err
+    try:
+        return main(argv)
+    except SystemExit as e:  # argparse rejects the argv
+        return e.code if isinstance(e.code, int) else 2
+    except Exception:  # noqa: BLE001 - bridge boundary
+        traceback.print_exc(file=err)
+        return 1
+    finally:
+        sys.stdin, sys.stdout, sys.stderr = saved
+        stdout.detach()  # flushes into ``out``, leaves it open
+        stdin.detach().detach()
+        payload.readall()  # the payload frames main did not read
+
+
+def serve() -> int:
+    """Answer framed requests (wire in the module docstring) on stdin
+    and stdout until stdin ends; returns 0 at EOF between requests.
+
+    The frames own fds 0 and 1, and fd 1 then points at stderr, so a
+    stray write to it (a library, C code) cannot corrupt the reply
+    stream.  Each request starts with an empty key registry: a request
+    without ``--encryption-key`` never reads with a key that an earlier
+    request on this process registered."""
+    from tiledb_mariadb_spark.sources.tiledb_native_crypto import (  # noqa: PLC0415
+        clear_encryption_keys,
+    )
+
+    rfile = os.fdopen(os.dup(0), "rb")
+    wfile = os.fdopen(os.dup(1), "wb")
+    os.dup2(2, 1)
+    null = os.open(os.devnull, os.O_RDONLY)
+    os.dup2(null, 0)
+    os.close(null)
+    while True:
+        head = _read_frame(rfile)
+        if head is None:
+            return 0
+        clear_encryption_keys()
+        out = io.BufferedWriter(_ReplyOut(wfile), 1 << 16)
+        err = io.StringIO()
+        rc = _run_request(json.loads(head), _PayloadIn(rfile), out, err)
+        out.flush()
+        wfile.write(_FRAME.pack(0))
+        _write_frame(wfile, json.dumps(
+            {"rc": rc, "stderr": err.getvalue()}
+        ).encode())
+        wfile.flush()
+
+
 if __name__ == "__main__":
+    if sys.argv[1:] == ["serve"]:
+        raise SystemExit(serve())
     raise SystemExit(main())
