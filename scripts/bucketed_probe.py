@@ -6,7 +6,7 @@ GROUP BY floor(k/width) COUNT/SUM/MIN/MAX two ways:
 
   bucketed — bucketed_agg_native (tile stats per contained tile, edge
              tiles decoded) — driver-side, one footer walk
-  scan     — read_native_array_range full read + python group-fold
+  scan     — read_native_array_range_np full read + python group-fold
              (what a scan-based rollup pays per fragment, single
              thread; the distributed groupBy adds a shuffle on top)
 
@@ -28,7 +28,7 @@ import numpy as np  # noqa: E402
 from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: E402
     NativeAttr,
     NativeDim,
-    read_native_array_range,
+    read_native_array_range_np,
 )
 from tiledb_mariadb_spark.sources.tiledb_native_agg import (  # noqa: E402
     bucketed_agg_native,
@@ -66,14 +66,12 @@ def main() -> None:
     n_buckets = len(res["buckets"])
 
     t0 = time.time()
-    names, rows = read_native_array_range(arr, None)
-    ki, vi = names.index("k"), names.index("v")
+    _names, cols = read_native_array_range_np(arr, None)
     agg = {}
-    for r in rows:
-        b = r[ki] // width
-        e = agg.setdefault(b, [0, 0])
+    for k, v in zip(cols["k"].tolist(), cols["v"].tolist()):
+        e = agg.setdefault(k // width, [0, 0])
         e[0] += 1
-        e[1] += r[vi]
+        e[1] += v
     t_scan = time.time() - t0
     assert len(agg) == n_buckets
     assert all(

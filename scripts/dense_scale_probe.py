@@ -3,12 +3,12 @@
 
 Measures the round-6 first-class dense tier: space-tiled **v19** dense
 fragment writes (single-process, the per-task cost of a distributed box
-write) and reads through the dense COLUMNAR fast path
+write) and reads through the dense branch of the columnar reader
 (`_read_dense_range_np` — generated coordinates, no coordinate files at
-all), against the row path on the same array:
+all):
 
 - v19 dense write wall + decoded MB/s (vectorized stats + zstd);
-- full-scan wall + MB/s, fast path vs row path;
+- full-scan wall + MB/s;
 - a narrow 1000-cell mid-array dim0-range read (row-major layout ->
   contiguous cell span; bytes decoded stay O(window) as the array
   grows);
@@ -47,8 +47,8 @@ def main() -> int:
 
     mults = [int(a) for a in sys.argv[1:]] or [1, 10, 30]
     print("| cells | tiles | v19 write | write MB/s | np scan | np MB/s "
-          "| row scan | row MB/s | narrow-1k | narrow bytes | COUNT |")
-    print("|---|---|---|---|---|---|---|---|---|---|---|")
+          "| narrow-1k | narrow bytes | COUNT |")
+    print("|---|---|---|---|---|---|---|---|---|")
     for mult in mults:
         n = BASE * mult
         uri = tempfile.mkdtemp(prefix=f"dsp_{mult}x_") + "/arr"
@@ -75,13 +75,6 @@ def main() -> int:
         t_np = time.time() - t0
         assert len(arrs["k"]) == n
 
-        t_row = None
-        if mult <= 10:  # the row path at 30M takes minutes; cap it
-            t0 = time.time()
-            _nm, rows = tn.read_native_array_range(uri, columns=["qty"])
-            t_row = time.time() - t0
-            assert len(rows) == n
-
         for k in tn._SPAN_STATS:
             tn._SPAN_STATS[k] = 0
         lo = n // 2
@@ -97,10 +90,9 @@ def main() -> int:
         cnt = tn.count_native_array(uri)
         tc = time.time() - t0
         assert cnt == n
-        row_s = f"{t_row:.1f} s | {mb / t_row:.0f}" if t_row else "— | —"
         print(
             f"| {n:,} | {tiles} | {tw:.1f} s | {mb / tw:.0f} "
-            f"| {t_np:.1f} s | {mb / t_np:.0f} | {row_s} "
+            f"| {t_np:.1f} s | {mb / t_np:.0f} "
             f"| {t_narrow * 1000:.0f} ms "
             f"| {span['bytes_decoded']:,} ({span['chunks_decoded']} chunks) "
             f"| {tc * 1000:.1f} ms |"

@@ -27,7 +27,7 @@ def main() -> int:
         NativeDim,
         count_native_array,
         estimate_range_cells,
-        read_native_array_range,
+        read_native_array_range_np,
     )
     from tiledb_mariadb_spark.sources.tiledb_native_write import (
         create_native_array,
@@ -51,9 +51,11 @@ def main() -> int:
         )
         tw = time.time() - t0
         t0 = time.time()
-        _names, rows = read_native_array_range(d, ranges=[(n // 2, n // 2 + 99)])
+        _names, cols = read_native_array_range_np(
+            d, ranges=[(n // 2, n // 2 + 99)]
+        )
         tn = time.time() - t0
-        assert len(rows) == 100
+        assert len(cols["k"]) == 100
         t0 = time.time()
         c = count_native_array(d)
         tc = time.time() - t0
@@ -63,9 +65,9 @@ def main() -> int:
         te = time.time() - t0
         assert e is not None and e >= n // 10
         t0 = time.time()
-        _names, allr = read_native_array_range(d)
+        _names, allc = read_native_array_range_np(d)
         tf = time.time() - t0
-        assert len(allr) == n
+        assert len(allc["k"]) == n
         print(
             f"| {n} | {tw:.2f} s | {tn * 1000:.0f} ms | {tc * 1000:.1f} ms"
             f" | {te * 1000:.1f} ms | {tf:.2f} s |"
@@ -88,7 +90,7 @@ def main() -> int:
     st = attr_stats_native_array(tab)
     ts = time.time() - t0
     t0 = time.time()
-    _n2, pruned = read_native_array_range(
+    _n2, pruned = read_native_array_range_np(
         tab, prune_conditions=[("gene_symbol", ">", 99999)]
     )
     tp = time.time() - t0
@@ -96,7 +98,7 @@ def main() -> int:
     _s3, rows = read_native_array(tab)
     tf2 = time.time() - t0
     assert st["gene_symbol"]["sum"] == sum(r[2] for r in rows)
-    assert pruned == []
+    assert not len(pruned["gene_symbol"])
     print(
         f"tabula v21 (58,870 cells): attr stats {ts * 1000:.1f} ms, "
         f"stats-pruned refuted scan {tp * 1000:.1f} ms, "

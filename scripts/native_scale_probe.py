@@ -90,11 +90,11 @@ def main() -> int:
             tn._SPAN_STATS[k] = 0
         lo = n // 2
         t0 = time.time()
-        _names, rows = tn.read_native_array_range(
+        _names, cols = tn.read_native_array_range_np(
             uri, ranges=[(lo, lo + 999)], columns=["price"]
         )
         tn_narrow = time.time() - t0
-        assert len(rows) == 1000
+        assert len(cols["id"]) == 1000
         span = dict(tn._SPAN_STATS)
 
         t0 = time.time()

@@ -293,7 +293,7 @@ def probe_ops(spark, sf_dir: str) -> dict[str, float]:
     from tiledb_mariadb_spark.sources.tiledb_native import (
         NativeAttr,
         NativeDim,
-        read_native_array_range,
+        read_native_array_range_np,
     )
     from tiledb_mariadb_spark.sources.tiledb_native_write import (
         create_native_array,
@@ -326,11 +326,11 @@ def probe_ops(spark, sf_dir: str) -> dict[str, float]:
     mid = n_cells // 2
 
     def native_span_read():
-        _names, rows_ = read_native_array_range(
+        _names, cols = read_native_array_range_np(
             uri, ranges=[(mid, mid + 1999)]
         )
-        assert len(rows_) == 2000
-        return len(rows_)
+        assert len(cols["k"]) == 2000
+        return len(cols["k"])
 
     clock("native_span_read_fixed_2k", native_span_read)
     shutil.rmtree(uri, ignore_errors=True)

@@ -5,7 +5,7 @@ Writes N sorted rows as range-partitioned fragments, then times a
 1%-key-window COUNT/SUM/MIN/MAX three ways:
 
   windowed  — windowed_agg_native (tile stats + boundary decode)
-  range     — read_native_array_range over the window, python aggregate
+  range     — read_native_array_range_np over the window, numpy aggregate
               (what a scan-based window aggregate pays, single-threaded)
   full      — attr_stats_native_array (full-array metadata stats, for
               reference: the windowed path should stay in its ballpark)
@@ -28,7 +28,7 @@ from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: E402
     NativeAttr,
     NativeDim,
     attr_stats_native_array,
-    read_native_array_range,
+    read_native_array_range_np,
 )
 from tiledb_mariadb_spark.sources.tiledb_native_agg import (  # noqa: E402
     windowed_agg_native,
@@ -68,10 +68,9 @@ def main() -> None:
     assert res is not None
 
     t0 = time.perf_counter()
-    names, rows = read_native_array_range(arr, [(lo, hi)])
-    iv = names.index("v")
-    vals = [r[iv] for r in rows]
-    brute = (len(rows), sum(vals), min(vals), max(vals))
+    _names, cols = read_native_array_range_np(arr, [(lo, hi)])
+    vals = cols["v"]
+    brute = (len(vals), int(vals.sum()), int(vals.min()), int(vals.max()))
     t_range = time.perf_counter() - t0
 
     t0 = time.perf_counter()

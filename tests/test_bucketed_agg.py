@@ -15,7 +15,6 @@ import pytest
 from tiledb_mariadb_spark.sources.tiledb_native import (
     NativeAttr,
     NativeDim,
-    read_native_array_range,
 )
 from tiledb_mariadb_spark.sources.tiledb_native_agg import (
     bucketed_agg_native,
@@ -25,6 +24,8 @@ from tiledb_mariadb_spark.sources.tiledb_native_write import (
     write_delete_condition,
     write_native_fragment,
 )
+
+from .native_model import range_rows
 
 
 def _mk(tmp_path, name="barr", capacity=100, lo=0, **kw):
@@ -64,7 +65,7 @@ def _write(uri, base, n, seed=0, ts=None, stride=1):
 
 def _expected_buckets(uri, width, col, window=None):
     """Brute-force GROUP BY floor(k/width) from a full read."""
-    names, rows = read_native_array_range(
+    names, rows = range_rows(
         uri, [window] if window else None
     )
     ki, ci = names.index("k"), names.index(col)

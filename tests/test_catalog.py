@@ -8,13 +8,10 @@ import pytest
 
 from tiledb_mariadb_spark.catalog import Attr, Dim, TileTable
 
-TMP = "/root/repo/.tmp/tile_tables/unit"
-
-
-def _mk(spark, name, **kw):
+def _mk(spark, tmp_path, name, **kw):
     return TileTable.create(
         spark,
-        f"{TMP}/{name}",
+        str(tmp_path / name),
         dimensions=kw.pop("dimensions", [Dim("k", "int")]),
         attributes=kw.pop("attributes", [Attr("v", "string")]),
         overwrite=True,
@@ -22,16 +19,15 @@ def _mk(spark, name, **kw):
     )
 
 
-def test_null_dimension_rejected(spark):
-    tt = _mk(spark, "nulldim")
+def test_null_dimension_rejected(spark, tmp_path):
+    tt = _mk(spark, tmp_path, "nulldim")
     df = spark.createDataFrame([(1, "a"), (None, "b")], "k int, v string")
     with pytest.raises(ValueError, match="null values are not allowed"):
         tt.write(df)
 
 
-def test_dense_bounds_enforced(spark):
-    tt = _mk(
-        spark,
+def test_dense_bounds_enforced(spark, tmp_path):
+    tt = _mk(spark, tmp_path,
         "densebounds",
         dimensions=[Dim("k", "int", lower=1, upper=4, tile_extent=4)],
         array_type="DENSE",
@@ -41,54 +37,54 @@ def test_dense_bounds_enforced(spark):
         tt.write(bad)
 
 
-def test_dense_requires_bounds(spark):
+def test_dense_requires_bounds(spark, tmp_path):
     with pytest.raises(ValueError, match="requires lower/upper"):
-        _mk(spark, "densenobounds", array_type="DENSE")
+        _mk(spark, tmp_path, "densenobounds", array_type="DENSE")
 
 
-def test_last_writer_wins_vs_allows_dups(spark):
-    tt = _mk(spark, "dups")
+def test_last_writer_wins_vs_allows_dups(spark, tmp_path):
+    tt = _mk(spark, tmp_path, "dups")
     tt.write(spark.createDataFrame([(1, "old")], "k int, v string"), version_ts=1)
     tt.write(spark.createDataFrame([(1, "new")], "k int, v string"), version_ts=2)
     rows = tt.read().collect()
     assert len(rows) == 1 and rows[0]["v"] == "new"
 
-    td = _mk(spark, "dups_ok", allows_dups=True)
+    td = _mk(spark, tmp_path, "dups_ok", allows_dups=True)
     td.write(spark.createDataFrame([(1, "a")], "k int, v string"), version_ts=1)
     td.write(spark.createDataFrame([(1, "b")], "k int, v string"), version_ts=2)
     assert td.read().count() == 2
 
 
-def test_time_travel_before_first_write_is_empty(spark):
-    tt = _mk(spark, "ttempty")
+def test_time_travel_before_first_write_is_empty(spark, tmp_path):
+    tt = _mk(spark, tmp_path, "ttempty")
     tt.write(spark.createDataFrame([(1, "a")], "k int, v string"), version_ts=100)
     assert tt.read(at=0).count() == 0
     assert tt.read(at=100).count() == 1
 
 
-def test_drop_deletes_storage(spark):
+def test_drop_deletes_storage(spark, tmp_path):
     import os
 
-    tt = _mk(spark, "dropme")
+    tt = _mk(spark, tmp_path, "dropme")
     uri = tt.uri
     tt.drop()
     assert not os.path.exists(uri)
 
 
-def test_cannot_drop_dimension(spark):
-    tt = _mk(spark, "dropdim")
+def test_cannot_drop_dimension(spark, tmp_path):
+    tt = _mk(spark, tmp_path, "dropdim")
     with pytest.raises(ValueError, match="cannot drop a dimension"):
         tt.drop_column("k")
 
 
-def test_add_existing_column_rejected(spark):
-    tt = _mk(spark, "dupcol")
+def test_add_existing_column_rejected(spark, tmp_path):
+    tt = _mk(spark, tmp_path, "dupcol")
     with pytest.raises(ValueError, match="already exists"):
         tt.add_column("v", "string")
 
 
-def test_missing_column_on_write(spark):
-    tt = _mk(spark, "misscol")
+def test_missing_column_on_write(spark, tmp_path):
+    tt = _mk(spark, tmp_path, "misscol")
     with pytest.raises(ValueError, match="missing columns"):
         tt.write(spark.createDataFrame([(1,)], "k int"))
 

@@ -25,7 +25,6 @@ import pytest
 from tiledb_mariadb_spark.sources.tiledb_native import (
     NativeAttr,
     NativeDim,
-    read_native_array_range,
 )
 from tiledb_mariadb_spark.sources.tiledb_native_agg import (
     bucketed_agg_native,
@@ -37,6 +36,8 @@ from tiledb_mariadb_spark.sources.tiledb_native_write import (
     create_native_array,
     write_native_fragment,
 )
+
+from .native_model import range_rows
 
 
 def _mk(tmp_path, name="d", extent=10, nullable_w=True):
@@ -54,7 +55,7 @@ def _mk(tmp_path, name="d", extent=10, nullable_w=True):
 
 
 def _brute(uri, lo, hi, col, at=None):
-    names, rows = read_native_array_range(uri, ranges=[(lo, hi)], at=at)
+    names, rows = range_rows(uri, ranges=[(lo, hi)], at=at)
     i = names.index(col)
     vals = [r[i] for r in rows]
     nn = [v for v in vals if v is not None]
@@ -187,7 +188,7 @@ def test_overlap_newest_wins(tmp_path):
     _check_window(uri, 0, 44)    # entirely the unshadowed remainder
     res = dense_bucketed_agg_native(uri, 10)
     assert res is not None
-    names, rows = read_native_array_range(uri)
+    names, rows = range_rows(uri)
     ik, iv = names.index("k"), names.index("v")
     import collections
 
@@ -228,7 +229,7 @@ def test_overlap_randomized_parity(tmp_path):
         lo = rng.randrange(0, 950)
         hi = min(999, lo + rng.randrange(1, 300))
         res = dense_windowed_agg_native(uri, {"k": (lo, hi)})
-        names, rows = read_native_array_range(uri, ranges=[(lo, hi)])
+        names, rows = range_rows(uri, ranges=[(lo, hi)])
         if not rows:
             continue
         assert res is not None
@@ -272,7 +273,7 @@ def test_bucketed_matches_scan(tmp_path):
     )
     import collections
 
-    names, rows = read_native_array_range(uri, ranges=[(0, 99)])
+    names, rows = range_rows(uri, ranges=[(0, 99)])
     iv, iw = names.index("v"), names.index("w")
     for width in (25, 30, 100, 7):
         res = bucketed_agg_native(uri, width)
@@ -423,7 +424,7 @@ def test_dense_grid_2d(tmp_path):
     )
     res = grid_agg_native(uri, {"x": 10, "y": 10})
     assert res is not None
-    names, rows = read_native_array_range(uri)
+    names, rows = range_rows(uri)
     ix, iy, iv = names.index("x"), names.index("y"), names.index("v")
     exp = collections.defaultdict(list)
     for r in rows:
@@ -494,7 +495,7 @@ def test_dense_2d_windowed_randomized_parity(tmp_path):
                 fields=["v", "w", "x", "y"],
             )
             assert res is not None
-            names, rows = read_native_array_range(
+            names, rows = range_rows(
                 uri, ranges=[(xlo, xhi), (ylo, yhi)]
             )
             idx = {n_: i for i, n_ in enumerate(names)}
@@ -643,7 +644,7 @@ def test_dense_2d_overlap_randomized_parity(tmp_path):
             res = dense_windowed_agg_native(
                 uri, {"x": (xlo, xhi), "y": (ylo, yhi)}
             )
-            names, rows = read_native_array_range(
+            names, rows = range_rows(
                 uri, ranges=[(xlo, xhi), (ylo, yhi)]
             )
             if not rows:
@@ -663,7 +664,7 @@ def test_dense_2d_overlap_randomized_parity(tmp_path):
         # grid rollup over the full bbox matches a grouped brute scan
         g = dense_grid_agg_native(uri, {"x": 25, "y": 25})
         assert g is not None
-        names, rows = read_native_array_range(uri)
+        names, rows = range_rows(uri)
         ix, iy, iv = names.index("x"), names.index("y"), names.index("v")
         import collections
 

@@ -24,13 +24,14 @@ from tiledb_mariadb_spark.sources.tiledb_native import (
     fragment_overlaps,
     parse_array_schema,
     parse_fragment_footer,
-    read_native_array_range,
     _schema_path,
 )
 from tiledb_mariadb_spark.sources.tiledb_native_write import (
     create_native_array,
     write_native_fragment,
 )
+
+from .native_model import range_rows
 
 FIXROOT = "/root/reference/mysql-test/mytile/test_data/tiledb_arrays"
 
@@ -133,7 +134,7 @@ def test_writer_footer_roundtrip_and_pruning(tmp_path):
     ]
     # and the range reader touches ZERO chunks of the pruned fragments
     _SPAN_STATS.update(chunks_decoded=0, chunks_total=0, bytes_decoded=0)
-    names, rows = read_native_array_range(d, ranges=rng)
+    names, rows = range_rows(d, ranges=rng)
     assert len(rows) == 100
     assert rows[0] == (10_100, 20_200)
     # chunks_total counts only walked files — one fragment's worth
@@ -212,7 +213,7 @@ def test_sorted_seek_decodes_log_chunks(tmp_path):
     span = sorted_dim0_cell_span(frag, schema, 150_000, 150_099)
     assert span == (150_000, 150_100, n)
     _SPAN_STATS.update(chunks_decoded=0, chunks_total=0, bytes_decoded=0)
-    names, rows = read_native_array_range(d, ranges=[(150_000, 150_099)])
+    names, rows = range_rows(d, ranges=[(150_000, 150_099)])
     assert len(rows) == 100
     assert rows[0] == (150_000, 300_000)
     assert rows[-1] == (150_099, 300_198)
@@ -243,7 +244,7 @@ def test_sorted_seek_matches_full_decode_on_fixtures(tmp_path):
     """Equivalence: range reads with and without the seek agree on a
     real multi-row fixture (bank, 45211 cells, row-major)."""
     arr = FIXROOT + "/2.0/bank"
-    names, rows = read_native_array_range(arr, ranges=[(100, 199)])
+    names, rows = range_rows(arr, ranges=[(100, 199)])
     assert len(rows) == 100
     assert all(100 <= r[0] <= 199 for r in rows)
 
@@ -293,7 +294,7 @@ def test_count_is_metadata_only(tmp_path, monkeypatch):
     monkeypatch.setattr(tn, "_read_field", boom)
     monkeypatch.setattr(tn, "read_tile_file", boom)
     monkeypatch.setattr(tn, "read_native_array", boom)
-    monkeypatch.setattr(tn, "read_native_array_range", boom)
+    monkeypatch.setattr(tn, "read_native_array_range_np", boom)
     assert tn.count_native_array(d) == 5
 
 
@@ -434,7 +435,6 @@ def test_rtree_prunes_on_non_dim0_ranges(tmp_path):
     tiles — verified via decode stats AND an exact result."""
     from tiledb_mariadb_spark.sources.tiledb_native import (
         _SPAN_STATS,
-        read_native_array_range,
         rtree_tile_runs,
     )
 
@@ -464,7 +464,7 @@ def test_rtree_prunes_on_non_dim0_ranges(tmp_path):
     covered = sum(hi - lo for lo, hi, _n in runs)
     assert covered <= 60  # 41 matching cells in 10-cell tiles, not 400
     before = dict(_SPAN_STATS)
-    _names, got = read_native_array_range(d, ranges=rngs)
+    _names, got = range_rows(d, ranges=rngs)
     assert got == [(i, i, i % 97) for i in range(100, 141)]
     decoded = _SPAN_STATS["bytes_decoded"] - before["bytes_decoded"]
     # 3 fields x ~60 cells x 8B plus chunk rounding — far below the
@@ -478,7 +478,6 @@ def test_estimate_range_cells(tmp_path):
     fragment totals for unbounded reads."""
     from tiledb_mariadb_spark.sources.tiledb_native import (
         estimate_range_cells,
-        read_native_array_range,
     )
 
     d = str(tmp_path / "est")
@@ -493,7 +492,7 @@ def test_estimate_range_cells(tmp_path):
     assert estimate_range_cells(d) == 300
     for lo, hi in [(0, 0), (0, 99), (100, 140), (595, 9000), (601, 9000)]:
         est = estimate_range_cells(d, ranges=[(lo, hi)])
-        _n, rows = read_native_array_range(d, ranges=[(lo, hi)])
+        _n, rows = range_rows(d, ranges=[(lo, hi)])
         assert est >= len(rows), (lo, hi)
         assert est <= 300
         # tile-granular: within one spilled tile of the truth
@@ -517,7 +516,6 @@ def test_corrupt_rtree_falls_back_without_wrong_results(tmp_path):
     wrong MBRs; ranged reads stay exact either way."""
     from tiledb_mariadb_spark.sources.tiledb_native import (
         parse_rtree_leaf_mbrs,
-        read_native_array_range,
         rtree_tile_runs,
     )
 
@@ -542,7 +540,7 @@ def test_corrupt_rtree_falls_back_without_wrong_results(tmp_path):
     open(fm, "wb").write(bytes(blob))
     assert parse_rtree_leaf_mbrs(frag, schema) is None
     assert rtree_tile_runs(frag, schema, [(50, 80)]) is None
-    _n, rows = read_native_array_range(d, ranges=[(50, 80)])
+    _n, rows = range_rows(d, ranges=[(50, 80)])
     assert rows == [(k, k) for k in ks if 50 <= k <= 80]
 
 
@@ -572,7 +570,7 @@ def test_explain_native_pruning(tmp_path):
 
     orig = {n: getattr(tn, n) for n in
             ("_read_field", "read_tile_file", "read_native_array",
-             "read_native_array_range")}
+             "read_native_array_range_np")}
     try:
         for n in orig:
             setattr(tn, n, boom)

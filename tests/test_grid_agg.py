@@ -10,7 +10,6 @@ import pytest
 from tiledb_mariadb_spark.sources.tiledb_native import (
     NativeAttr,
     NativeDim,
-    read_native_array_range,
 )
 from tiledb_mariadb_spark.sources.tiledb_native_agg import (
     grid_agg_native,
@@ -20,6 +19,8 @@ from tiledb_mariadb_spark.sources.tiledb_native_write import (
     write_delete_condition,
     write_native_fragment,
 )
+
+from .native_model import range_rows
 
 
 def _mk(tmp_path, name="garr", capacity=50, dups=False):
@@ -60,7 +61,7 @@ def _expected(uri, wx, wy, col, window_x=None):
     rng = (
         [window_x, (None, None)] if window_x else None
     )
-    names, rows = read_native_array_range(uri, rng)
+    names, rows = range_rows(uri, rng)
     xi, yi, ci = names.index("x"), names.index("y"), names.index(col)
     out = {}
     for r in rows:

@@ -26,6 +26,8 @@ from tiledb_mariadb_spark.sources.tiledb_native_write import (
 )
 from tiledb_mariadb_spark.suite.surfaces3 import poison_data_tiles
 
+from .native_model import range_rows
+
 pytestmark = pytest.mark.skipif(
     shutil.which("javac") is None or shutil.which("jar") is None,
     reason="needs a JDK (javac + jar) to build the shim",
@@ -384,9 +386,6 @@ def test_grid_rollup_dense_pushdown(spark, tmp_path):
     import collections
 
     from tiledb_mariadb_spark.sources.jvm_agg import agg_reader
-    from tiledb_mariadb_spark.sources.tiledb_native import (
-        read_native_array_range,
-    )
 
     uri = str(tmp_path / "d2")
     create_native_array(
@@ -407,7 +406,7 @@ def test_grid_rollup_dense_pushdown(spark, tmp_path):
     )
     plan = spark.sql(q)._jdf.queryExecution().executedPlan().toString()
     assert "GroupedPushedAggregates" in plan, plan
-    names, rows = read_native_array_range(uri)
+    names, rows = range_rows(uri)
     ix, iy, iv = names.index("x"), names.index("y"), names.index("v")
     exp = collections.defaultdict(lambda: [0, None])
     for r in rows:
@@ -450,6 +449,42 @@ def test_scan_is_columnar(spark, tmp_path):
         r.k: r.b for r in agg_reader(spark, uri2).load().collect()
     }
     assert rows == {1: big, 2: None, 3: 5}
+
+
+def test_scan_multivalue_and_utf16(spark, tmp_path):
+    """The tiledb_agg row scan serves a fixed multi-value float attr as
+    array<float> (a list of the declared element type on the Arrow
+    wire, not inferred doubles), var UTF-16 text and a nullable BOOL
+    (decoded 0/1 ints, declared boolean), row-exact with the written
+    cells."""
+    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader
+
+    uri = str(tmp_path / "mv")
+    create_native_array(
+        uri,
+        [NativeDim("k", 1, 1, (0, 1000), None)],
+        [NativeAttr("vec", 2, 4, False, None),          # float32 x 4
+         NativeAttr("s", 13, 0xFFFFFFFF, True, None),   # var UTF-16
+         NativeAttr("ok", 40, 1, True, None)],          # nullable BOOL
+    )
+    vecs = [[float(i), i + 0.5, -1.0, 0.25] for i in range(20)]
+    texts = [None if i % 4 == 0 else "日本" * (i % 3) + str(i)
+             for i in range(20)]
+    oks = [None if i % 3 == 0 else i % 2 == 0 for i in range(20)]
+    write_native_fragment(
+        uri, {"k": list(range(20)), "vec": vecs, "s": texts, "ok": oks},
+        ts=1, version=19,
+    )
+    df = agg_reader(spark, uri).load()
+    assert [f.dataType.simpleString() for f in df.schema.fields] == [
+        "bigint", "array<float>", "string", "boolean"
+    ]
+    got = sorted((r.k, list(r.vec), r.s, r.ok) for r in df.collect())
+    assert got == [(i, vecs[i], texts[i], oks[i]) for i in range(20)]
+    got = sorted(
+        (r.k, r.s) for r in df.where("k BETWEEN 3 AND 6").collect()
+    )
+    assert got == [(i, texts[i]) for i in range(3, 7)]
 
 
 def test_report_statistics_enables_broadcast(spark, tmp_path):

@@ -144,6 +144,11 @@ def test_serve_isolates_encryption_keys(bridge, tmp_path):
     out, st = bridge.ask(["schema", "--uri", uri])
     reply = json.loads(out)
     assert not reply["ok"] and "requires encryption_key" in reply["reason"]
+    # planning fails the request too, instead of replying one
+    # unbounded split that only the row scan would then reject
+    out, st = bridge.ask(["splits", "--uri", uri])
+    assert out == b"" and st["rc"] != 0
+    assert "requires encryption_key" in st["stderr"]
     # the keyed request still works after the refusals
     assert _count(bridge, uri, "--encryption-key", KEY) == 100
 
@@ -189,3 +194,24 @@ def test_serve_write_payload_and_abort(bridge, tmp_path):
     bridge.proc.stdin.close()
     assert bridge.proc.wait(timeout=60) != 0
     assert set(os.listdir(frags)) == staged
+
+
+def test_splits_bytes_dim_is_one_unbounded_split(bridge, tmp_path):
+    """Split bounds that JSON cannot carry (a bytes dimension) plan one
+    unbounded split; the keyed split plan of a numeric array is a list
+    of bounded ranges."""
+    uri = str(tmp_path / "bdim")
+    create_native_array(
+        uri, [NativeDim("g", 39, 0xFFFFFFFF, None, None)],
+        [NativeAttr("v", 1, 1, False, None)],
+    )
+    write_native_fragment(
+        uri, {"g": [b"a", b"b", b"c"], "v": [1, 2, 3]}, ts=10, version=19,
+    )
+    out, st = bridge.ask(["splits", "--uri", uri])
+    assert st["rc"] == 0, st
+    assert json.loads(out)["splits"] == [None]
+    out, st = bridge.ask(["splits", "--uri", _mk(tmp_path)])
+    assert st["rc"] == 0, st
+    splits = json.loads(out)["splits"]
+    assert splits and all(s is not None for s in splits)

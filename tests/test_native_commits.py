@@ -23,6 +23,8 @@ from tiledb_mariadb_spark.sources.tiledb_native_write import (
     write_native_fragment,
 )
 
+from .native_model import range_rows
+
 
 def _mkarray(d):
     uri = str(d / "arr")
@@ -154,7 +156,6 @@ def _arr_with_rows(tmp_path, name="darr"):
 def test_delete_condition_filters_reads(tmp_path):
     from tiledb_mariadb_spark.sources.tiledb_native import (
         count_native_array,
-        read_native_array_range,
     )
     from tiledb_mariadb_spark.sources.tiledb_native_write import (
         write_delete_condition,
@@ -174,7 +175,7 @@ def test_delete_condition_filters_reads(tmp_path):
     assert count_native_array(uri, at=150) == 4
     # range reader applies the delete even when the projection DROPS the
     # conditioned attr
-    names, rr = read_native_array_range(uri, [(None, None)], columns=["v"])
+    names, rr = range_rows(uri, [(None, None)], columns=["v"])
     assert names == ["x", "v"]
     assert rr == [(1, 10), (3, 30)]
 
@@ -249,7 +250,7 @@ def test_delete_rejects_dense_and_unknown_cols(tmp_path):
 
 def test_connector_delete_visible_to_spark_scan(spark, tmp_path):
     """The connector's full distributed path honors delete commits: the
-    executor-side split reads go through read_native_array_range, which
+    executor-side split reads go through read_native_array_range_np, which
     applies every visible .del."""
     from tiledb_mariadb_spark.sources.tiledb_array import (
         ArrayInfo,
@@ -384,9 +385,6 @@ def test_distributed_consolidation_dense(tmp_path, spark):
     import struct
 
     from tiledb_mariadb_spark.sources.tiledb_array import consolidate_array
-    from tiledb_mariadb_spark.sources.tiledb_native import (
-        read_native_array_range,
-    )
     from tiledb_mariadb_spark.sources.tiledb_native_write import (
         vacuum_native_array,
     )
@@ -415,7 +413,7 @@ def test_distributed_consolidation_dense(tmp_path, spark):
                for c in range(10, 30)]},
         ts=30, subarray=[(40, 59), (10, 29)], version=19,
     )
-    _n, before = read_native_array_range(uri)
+    _n, before = range_rows(uri)
     assert len(before) == 60 * 30  # bbox [(0,59),(0,29)]
     assert (13, 7, 777) in before and (13, 6, 1306) in before
     n_new = consolidate_array(spark, uri, target_splits=6)
@@ -426,13 +424,13 @@ def test_distributed_consolidation_dense(tmp_path, spark):
     ]
     assert len(cons) == 1
     assert len(_fragment_dirs(uri)) == n_new  # originals retired
-    _n, after = read_native_array_range(uri)
+    _n, after = range_rows(uri)
     assert after == before
     assert vacuum_native_array(uri) > 0
-    _n, after2 = read_native_array_range(uri)
+    _n, after2 = range_rows(uri)
     assert after2 == before
     # ranged read post-vacuum stays exact (band boundaries invisible)
-    _n, ranged = read_native_array_range(uri, ranges=[(10, 45), (5, 25)])
+    _n, ranged = range_rows(uri, ranges=[(10, 45), (5, 25)])
     assert ranged == [
         row for row in before if 10 <= row[0] <= 45 and 5 <= row[1] <= 25
     ]
@@ -448,9 +446,6 @@ def test_incremental_consolidation(tmp_path, spark):
     from tiledb_mariadb_spark.sources.tiledb_array import (
         consolidate_array_incremental,
         plan_consolidation,
-    )
-    from tiledb_mariadb_spark.sources.tiledb_native import (
-        read_native_array_range,
     )
     from tiledb_mariadb_spark.sources.tiledb_native_write import (
         vacuum_native_array,
@@ -474,18 +469,18 @@ def test_incremental_consolidation(tmp_path, spark):
             ts=200 + i, version=19,
         )
     write_delete_condition(uri, [("v", "=", 2)], ts=150)
-    _n, before = read_native_array_range(uri)
+    _n, before = range_rows(uri)
     big = os.path.basename(_fragment_dirs(uri)[0])
     runs = plan_consolidation(uri, ratio=3.0)
     assert len(runs) == 1 and len(runs[0]) == 5
     assert all(big != os.path.basename(f) for f in runs[0])
     n_new = consolidate_array_incremental(spark, uri, target_splits=3)
     assert n_new >= 1
-    _n, after = read_native_array_range(uri)
+    _n, after = range_rows(uri)
     assert after == before
     assert big in [os.path.basename(f) for f in _fragment_dirs(uri)]
     assert vacuum_native_array(uri) > 0
-    _n, after2 = read_native_array_range(uri)
+    _n, after2 = range_rows(uri)
     assert after2 == before
     # the .del survives an incremental merge (bakes only in FULL)
     assert [
@@ -567,9 +562,6 @@ def test_incremental_consolidation_races_appender(tmp_path, spark):
         consolidate_array_incremental,
         plan_consolidation,
     )
-    from tiledb_mariadb_spark.sources.tiledb_native import (
-        read_native_array_range,
-    )
     from tiledb_mariadb_spark.sources.tiledb_native_write import (
         vacuum_native_array,
     )
@@ -592,14 +584,14 @@ def test_incremental_consolidation_races_appender(tmp_path, spark):
     write_native_fragment(
         uri, {"k": [7, 999], "v": [-7, -999]}, ts=500, version=19
     )
-    _n, before = read_native_array_range(uri)
+    _n, before = range_rows(uri)
     assert (7, -7) in before and (999, -999) in before
     n_new = consolidate_array_incremental(spark, uri, target_splits=2)
     assert n_new >= 1
-    _n, after = read_native_array_range(uri)
+    _n, after = range_rows(uri)
     assert after == before
     vacuum_native_array(uri)
-    _n, after2 = read_native_array_range(uri)
+    _n, after2 = range_rows(uri)
     assert after2 == before
 
 
@@ -613,10 +605,6 @@ def test_dense_incremental_consolidation(tmp_path, spark):
     from tiledb_mariadb_spark.sources.tiledb_array import (
         consolidate_array_incremental,
         plan_consolidation,
-    )
-    from tiledb_mariadb_spark.sources.tiledb_native import (
-        read_native_array_range,
-        read_native_array_range_np,
     )
     from tiledb_mariadb_spark.sources.tiledb_native_write import (
         vacuum_native_array,
@@ -642,21 +630,18 @@ def test_dense_incremental_consolidation(tmp_path, spark):
         )
     runs = plan_consolidation(uri, ratio=3.0)
     assert len(runs) == 1 and len(runs[0]) == 4
-    _n, before = read_native_array_range(uri)
+    _n, before = range_rows(uri)
     big = os.path.basename(_fragment_dirs(uri)[0])
     n_new = consolidate_array_incremental(spark, uri, target_splits=2)
     assert n_new >= 1
-    _n, after = read_native_array_range(uri)
+    _n, after = range_rows(uri)
     assert after == before
-    fastr = read_native_array_range_np(uri)
-    assert fastr is not None
-    assert list(zip(fastr[1]["x"], fastr[1]["v"])) == before
     assert big in [os.path.basename(f) for f in _fragment_dirs(uri)]
     # the gap band [10200,10299] reads as fills, same as before
-    _n, gap = read_native_array_range(uri, ranges=[(10150, 10350)])
+    _n, gap = range_rows(uri, ranges=[(10150, 10350)])
     assert [r for r in gap if r[0] == 10250][0][1] == 0
     assert vacuum_native_array(uri) >= 4
-    _n, after2 = read_native_array_range(uri)
+    _n, after2 = range_rows(uri)
     assert after2 == before
     # an overlapping-history run is REFUSED: bands that overwrite part
     # of the base box must not be incrementally merged (their merged
@@ -678,9 +663,9 @@ def test_dense_incremental_consolidation(tmp_path, spark):
             ts=200 + i, subarray=[(blo, blo + 99)], version=19,
         )
     assert plan_consolidation(uri2, ratio=3.0)  # size-wise plannable
-    _n, b2 = read_native_array_range(uri2)
+    _n, b2 = range_rows(uri2)
     assert consolidate_array_incremental(spark, uri2) == 0
-    _n, a2 = read_native_array_range(uri2)
+    _n, a2 = range_rows(uri2)
     assert a2 == b2
 
 
@@ -733,9 +718,6 @@ def test_incremental_consolidation_aborts_on_midspan_commit(
     run — no .con lands, the staged fragments are removed, and every
     row (including the racer's) stays visible."""
     from tiledb_mariadb_spark.sources import tiledb_array as ta
-    from tiledb_mariadb_spark.sources.tiledb_native import (
-        read_native_array_range,
-    )
     from tiledb_mariadb_spark.sources.tiledb_native_write import (
         write_delete_condition,
     )
@@ -765,7 +747,7 @@ def test_incremental_consolidation_aborts_on_midspan_commit(
             )
         else:
             write_delete_condition(uri, [("v", "=", 0)], ts=102)
-        _n, before = read_native_array_range(uri)
+        _n, before = range_rows(uri)
         n_frags_before = len(_fragment_dirs(uri))
         assert ta.consolidate_array_incremental(
             spark, uri, target_splits=2
@@ -779,7 +761,7 @@ def test_incremental_consolidation_aborts_on_midspan_commit(
             d for d in os.listdir(froot)
             if os.path.isdir(os.path.join(froot, d))
         ]) == n_frags_before
-        _n, after = read_native_array_range(uri)
+        _n, after = range_rows(uri)
         assert after == before
         monkeypatch.undo()
 

@@ -25,7 +25,6 @@ from tiledb_mariadb_spark.sources.tiledb_native import (
     read_array_metadata,
     read_byte_span,
     read_native_array,
-    read_native_array_range,
     _schema_path,
 )
 from tiledb_mariadb_spark.sources.tiledb_native_write import (
@@ -37,6 +36,8 @@ from tiledb_mariadb_spark.sources.tiledb_native_write import (
     write_delete_condition,
     write_native_fragment,
 )
+
+from .native_model import range_rows
 
 KEY = b"0123456789abcdef0123456789abcdef"
 
@@ -81,7 +82,7 @@ def test_encrypted_roundtrip_v19(tmp_path):
     assert rows[1] == (1, 7, "s1")
     assert rows[10][2] is None  # validity tile decrypts too
     # projection + range through the O(split) reader
-    names, r = read_native_array_range(d, ranges=[(10, 20)], columns=["a0"])
+    names, r = range_rows(d, ranges=[(10, 20)], columns=["a0"])
     assert names == ["d0", "a0"] and len(r) == 11
 
 

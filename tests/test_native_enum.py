@@ -9,9 +9,10 @@ import pytest
 from tiledb_mariadb_spark.sources.tiledb_native import (
     parse_array_schema,
     read_native_array,
-    read_native_array_range,
     _schema_path,
 )
+
+from .native_model import range_rows
 
 _ENUM = "/root/reference/mysql-test/mytile/test_data/enum_array"
 
@@ -47,7 +48,7 @@ def test_full_read_matches_mtr_golden():
 
 def test_range_read_maps_labels_too():
     # `where rows > 20` golden: rows 30, 40
-    _names, rows = read_native_array_range(_ENUM, [(21, None)])
+    _names, rows = range_rows(_ENUM, [(21, None)])
     assert rows == _GOLDEN[2:]
 
 
@@ -105,7 +106,7 @@ def test_oversized_enum_reverts_to_base_type():
     assert s.version == 21  # v21 schema + two-file evolution history
     assert "gene_symbol" not in s.enumerations  # reverted
     assert list(s.enumerations) == ["feature_type"]  # 1 label, fits
-    _names, rows = read_native_array_range(_TABULA, [(0, 1)])
+    _names, rows = range_rows(_TABULA, [(0, 1)])
     # golden row types: gene_symbol int, var_id/ensemblid text
     assert rows[0][0] == 0 and rows[0][1] == "DDX11L1"
     assert isinstance(rows[0][2], int)  # gene_symbol raw ordinal

@@ -21,7 +21,6 @@ from tiledb_mariadb_spark.sources.tiledb_native import (
     fragment_attr_stats,
     parse_array_schema,
     read_native_array,
-    read_native_array_range,
     _schema_path,
 )
 from tiledb_mariadb_spark.sources.tiledb_native_write import (
@@ -29,6 +28,8 @@ from tiledb_mariadb_spark.sources.tiledb_native_write import (
     evolve_native_schema,
     write_native_fragment,
 )
+
+from .native_model import range_rows
 
 LABELS = ["red", "green", "blue"]
 
@@ -76,7 +77,7 @@ def test_labels_and_ordinals_round_trip(tmp_path):
     assert rows == [(1, "red", 10), (2, "blue", 20), (3, "green", 30),
                     (4, "", 40)]
     # projection through the O(split) range reader serves labels too
-    names, r = read_native_array_range(d, ranges=[(2, 3)], columns=["color"])
+    names, r = range_rows(d, ranges=[(2, 3)], columns=["color"])
     assert (names, r) == (["d0", "color"], [(2, "blue"), (3, "green")])
 
 
@@ -203,3 +204,57 @@ def test_enum_roundtrip_fuzz(tmp_path, seed):
     write_native_fragment(d, {"k": keys, "c": vals}, version=19)
     _, rows = read_native_array(d)
     assert [r[1] for r in rows] == expect
+
+
+@pytest.mark.parametrize("dense", [False, True])
+@pytest.mark.parametrize("ordinal", [-1, -3, 4])
+def test_out_of_range_ordinals_raise(tmp_path, dense, ordinal):
+    """A stored ordinal below 1 (other than the 0 = '' convention) or
+    past the last label is corruption: every reader raises the
+    'enumeration ordinal out of range' ValueError — a negative ordinal
+    must not wrap around to a label from the end.  The ordinals are
+    written through a non-enumerated twin (the writer refuses them) and
+    its fragment is moved under the enumerated schema."""
+    import shutil
+
+    from tiledb_mariadb_spark.sources.tiledb_native import (
+        _read_field,
+        _fragment_dirs,
+        read_native_array_range_np,
+    )
+
+    kw = {"array_type": "DENSE"} if dense else {}
+    dims = [NativeDim("d0", 1, 1, (0, 9), 10)]
+    d, twin = str(tmp_path / "enum"), str(tmp_path / "twin")
+    create_native_array(
+        d, dims, [NativeAttr("c", 5, 1, False, None, enumeration="colors")],
+        enumerations={"colors": LABELS}, **kw,
+    )
+    create_native_array(twin, dims, [NativeAttr("c", 5, 1, False, None)],
+                        **kw)
+    def place(ords):
+        # the twin's only fragment, moved under the enumerated schema
+        cols = {"c": ords, **({} if dense else {"d0": [1, 2, 3, 4]})}
+        for arr in (twin, d):
+            for sub in ("__fragments", "__commits"):
+                shutil.rmtree(os.path.join(arr, sub), ignore_errors=True)
+                os.makedirs(os.path.join(arr, sub))
+        write_native_fragment(twin, cols, ts=100, version=19,
+                              subarray=[(0, 3)] if dense else None)
+        for sub in ("__fragments", "__commits"):
+            shutil.copytree(os.path.join(twin, sub), os.path.join(d, sub),
+                            dirs_exist_ok=True)
+
+    place([1, 0, 2, 3])
+    assert read_native_array_range_np(d)[1]["c"].tolist() == [
+        "red", "", "green", "blue"
+    ]
+    place([1, 0, ordinal, 3])
+    with pytest.raises(ValueError, match="ordinal out of range"):
+        read_native_array_range_np(d)
+    with pytest.raises(ValueError, match="ordinal out of range"):
+        read_native_array(d)
+    schema = parse_array_schema(_schema_path(d))
+    frag = _fragment_dirs(d)[0]
+    with pytest.raises(ValueError, match="ordinal out of range"):
+        _read_field(frag, schema, schema.attrs[0], 0, "a")

@@ -1,15 +1,17 @@
-"""Stateful differential fuzz over the native tier's FULL op surface:
-random interleavings of writes, deletes, every consolidation mode,
+"""Stateful model fuzz over the native tier's FULL op surface: random
+interleavings of writes, deletes, every consolidation mode,
 fragment-meta folds, and vacuums — then reads checked three ways:
 
-1. ROW reader vs NP fast path on identical (ranges, conditions,
-   since, at) calls — they share fragment listing but none of the
-   decode/merge/skip machinery, so agreement is a real differential;
+1. against ``tests/native_model.ArrayModel``, which computes the view
+   from the written inputs alone (newest-wins, writer-ts-gated deletes,
+   ``at``/``since`` visibility) — full views always, time-travel and
+   window reads while the fragments are still the written ones;
 2. maintenance INVARIANCE: the full-view row set is bit-identical
    across consolidate / incremental-consolidate / fold / vacuum;
-3. conditioned reads == unconditioned reads filtered after the fact
-   (the planner's fragment skips must never change visibility —
-   the property behind plan_condition_skips' shadow rule).
+3. conditioned reads keep every matching row of the model's view and
+   invent none (the planner's fragment and tile skips must never
+   change visibility — the property behind plan_condition_skips'
+   shadow rule).
 
 This is the net that catches cross-feature interactions single-purpose
 tests can't: a fold serving a stale footer, a skip plan resurrecting a
@@ -24,49 +26,30 @@ from tiledb_mariadb_spark.sources.tiledb_native import (
     NativeAttr,
     NativeDim,
     _FMETA_CACHE,
-    read_native_array_range,
-    read_native_array_range_np,
 )
 from tiledb_mariadb_spark.sources.tiledb_native_write import (
     consolidate_fragment_meta,
     consolidate_native_array,
-    create_native_array,
     vacuum_native_array,
-    write_delete_condition,
-    write_native_fragment,
 )
 
-
-def _rows_np(res):
-    if res is None:
-        return None
-    names, cols = res
-    n = len(next(iter(cols.values()))) if cols else 0
-    return sorted(
-        tuple(
-            v.item() if hasattr(v, "item") else v
-            for v in (cols[c][i] for c in names)
-        )
-        for i in range(n)
-    )
+from .native_model import ArrayModel, range_rows
 
 
-def _read_both(arr, ranges=None, conds=None, since=None, at=None):
-    names, rows = read_native_array_range(
-        arr, ranges=ranges, prune_conditions=conds, since=since, at=at
-    )
-    got_row = sorted(tuple(r) for r in rows)
-    got_np = _rows_np(
-        read_native_array_range_np(
-            arr, ranges=ranges, prune_conditions=conds, since=since, at=at
-        )
-    )
-    if got_np is not None:
-        assert got_np == got_row, (
-            f"np/row divergence ranges={ranges} conds={conds} "
-            f"since={since} at={at}"
-        )
-    return got_row
+def _read(m, **kw):
+    """The reader's rows, checked against the model's full view when
+    the read is unwindowed."""
+    rows = sorted(range_rows(m.dir, **kw)[1])
+    if not any(kw.get(x) is not None for x in ("at", "since")):
+        want = sorted(m.read()[1])
+        if kw.get("ranges"):
+            (lo, hi), = kw["ranges"]
+            want = [r for r in want if lo <= r[0] <= hi]
+        if kw.get("prune_conditions"):
+            assert set(rows) <= set(want), f"{kw} invented rows"
+        else:
+            assert rows == want, f"model divergence {kw}"
+    return rows
 
 
 def _match(row, cond):
@@ -83,9 +66,8 @@ def _match(row, cond):
 @pytest.mark.parametrize("seed", range(16))
 def test_native_op_sequence_fuzz(tmp_path, seed):
     rnd = random.Random(4000 + seed)
-    arr = str(tmp_path / "arr")
-    create_native_array(
-        arr,
+    m = ArrayModel(
+        str(tmp_path / "arr"),
         dims=[NativeDim("k", 1, 1, (0, 500), None)],
         attrs=[NativeAttr("v", 1, 1, False, None)],
         bloom_attrs=["v"] if seed % 2 else None,
@@ -93,6 +75,16 @@ def test_native_op_sequence_fuzz(tmp_path, seed):
     ts = 10
     n_writes = 0
     write_ts: list[int] = []
+    merged = False  # fragments rewritten: time travel is layout-bound
+
+    def _history():
+        # time-travel and window reads, model-checked while every
+        # fragment is still a written one
+        for t in write_ts:
+            m.check(at=t)
+            m.check(since=t)
+            m.check(since=write_ts[0], at=t)
+
     for _step in range(rnd.randrange(8, 15)):
         op = rnd.random()
         if op < 0.55 or n_writes == 0:
@@ -103,82 +95,74 @@ def test_native_op_sequence_fuzz(tmp_path, seed):
                 if rnd.random() < 0.4
                 else [rnd.randrange(8) for _ in range(n)]
             )
-            write_native_fragment(
-                arr, {"k": sorted(keys), "v": vals}, ts=ts,
-                version=19 if rnd.random() < 0.8 else 5,
-            )
+            m.write({"k": sorted(keys), "v": vals}, ts=ts,
+                    version=19 if rnd.random() < 0.8 else 5)
             write_ts.append(ts)
             ts += rnd.randrange(1, 4)
             n_writes += 1
         elif op < 0.65:
             try:
-                write_delete_condition(
-                    arr, [("v", "=", rnd.randrange(8))], ts=ts
-                )
+                m.delete([("v", "=", rnd.randrange(8))], ts=ts)
                 ts += 1
             except (TypeError, ValueError):
                 pass
         elif op < 0.8:
-            before = _read_both(arr)
-            consolidate_native_array(arr)
-            assert _read_both(arr) == before, "consolidation changed view"
+            if not merged:
+                _history()
+            before = _read(m)
+            merged |= consolidate_native_array(m.dir) is not None
+            assert _read(m) == before, "consolidation changed view"
         elif op < 0.9:
-            before = _read_both(arr)
+            before = _read(m)
             _FMETA_CACHE.clear()
-            consolidate_fragment_meta(arr)
-            assert _read_both(arr) == before, "fold changed view"
+            consolidate_fragment_meta(m.dir)
+            assert _read(m) == before, "fold changed view"
         else:
-            before = _read_both(arr)
-            vacuum_native_array(arr)
-            assert _read_both(arr) == before, "vacuum changed view"
+            before = _read(m)
+            vacuum_native_array(m.dir)
+            assert _read(m) == before, "vacuum changed view"
+    if not merged:
+        _history()
 
     # final checks over random calls.  prune_conditions are PRUNE-ONLY
-    # in the raw readers (the backend applies the exact residual), so
-    # the soundness contract is: every MATCHING row survives the skip
-    # plan, and no row outside the unconditioned view appears —
-    # i.e. skips may leave residual non-matching rows but can neither
-    # lose a match nor resurrect a shadowed cell.
-    base = _read_both(arr)
+    # in the reader (the backend applies the exact residual), so the
+    # soundness contract is: every MATCHING row survives the skip plan,
+    # and no row outside the unconditioned view appears — i.e. skips
+    # may leave residual non-matching rows but can neither lose a match
+    # nor resurrect a shadowed cell.
+    base = _read(m)
     for _ in range(10):
         c = rnd.randrange(8)
         cond = ("v", rnd.choice(["=", "!=", "<", "<=", ">", ">="]), c)
-        got = _read_both(arr, conds=[cond])
+        got = _read(m, prune_conditions=[cond])
         want = [r for r in base if _match(r, cond)]
-        assert set(got) <= set(base), f"condition {cond} invented rows"
         assert [r for r in got if _match(r, cond)] == want, (
             f"condition {cond} lost a matching row"
         )
         lo = rnd.randrange(0, 120)
         hi = lo + rnd.randrange(0, 60)
-        got = _read_both(arr, ranges=[(lo, hi)], conds=[cond])
-        inr = [r for r in base if lo <= r[0] <= hi]
-        want = [r for r in inr if _match(r, cond)]
-        assert set(got) <= set(inr), f"range ({lo},{hi}) invented rows"
+        got = _read(m, ranges=[(lo, hi)], prune_conditions=[cond])
+        want = [r for r in base if lo <= r[0] <= hi and _match(r, cond)]
         assert [r for r in got if _match(r, cond)] == want, (
             f"range ({lo},{hi}) + condition {cond} lost a matching row"
         )
-    # time-travel to each historical write ts: np/row must agree (the
-    # value set itself is layout-dependent post-consolidation, so the
-    # cross-reader differential is the check, not a model)
+    # every historical timestamp still reads (layout-dependent values
+    # once merged; the model checks them above while unmerged)
     for t in write_ts:
-        _read_both(arr, at=t)
-        _read_both(arr, since=t)
-        if len(write_ts) >= 2:
-            _read_both(arr, since=write_ts[0], at=t)
+        _read(m, at=t)
+        _read(m, since=t)
 
 
 @pytest.mark.parametrize("seed", range(3))
 def test_maintenance_interleaved_fuzz(tmp_path, spark, seed):
     """maintain_array (the full consolidation matrix + vacuum) lands
-    between random write/delete batches; the full view is invariant
-    across every maintenance call and both readers agree throughout —
-    including window reads after merged fragments replace originals."""
+    between random write/delete batches; the full view matches the
+    model and is invariant across every maintenance call."""
     from tiledb_mariadb_spark.sources.tiledb_array import maintain_array
 
     rnd = random.Random(7000 + seed)
-    arr = str(tmp_path / "arr")
-    create_native_array(
-        arr,
+    m = ArrayModel(
+        str(tmp_path / "arr"),
         dims=[NativeDim("k", 1, 1, (0, 500), None)],
         attrs=[NativeAttr("v", 1, 1, False, None)],
         bloom_attrs=["v"],
@@ -188,22 +172,20 @@ def test_maintenance_interleaved_fuzz(tmp_path, spark, seed):
         for _w in range(rnd.randrange(2, 5)):
             n = rnd.randrange(2, 20)
             keys = rnd.sample(range(100), n)
-            write_native_fragment(
-                arr,
+            m.write(
                 {"k": sorted(keys), "v": [rnd.randrange(6) for _ in range(n)]},
                 ts=ts, version=19,
             )
             ts += rnd.randrange(1, 3)
         if rnd.random() < 0.5:
-            write_delete_condition(arr, [("v", "=", rnd.randrange(6))], ts=ts)
+            m.delete([("v", "=", rnd.randrange(6))], ts=ts)
             ts += 1
-        before = _read_both(arr)
+        before = _read(m)
         _FMETA_CACHE.clear()
-        maintain_array(spark, arr, incremental=bool(_round % 2))
-        assert _read_both(arr) == before, "maintain_array changed the view"
+        maintain_array(spark, m.dir, incremental=bool(_round % 2))
+        assert _read(m) == before, "maintain_array changed the view"
         # post-maintenance conditioned reads keep the prune-only contract
         c = rnd.randrange(6)
-        got = _read_both(arr, conds=[("v", "=", c)])
+        got = _read(m, prune_conditions=[("v", "=", c)])
         want = [r for r in before if r[1] == c]
         assert [r for r in got if r[1] == c] == want
-        assert set(got) <= set(before)

@@ -22,6 +22,8 @@ from tiledb_mariadb_spark.sources.tiledb_native import (
     _schema_path,
 )
 
+from .native_model import range_rows
+
 _FIX = "/root/reference/mysql-test/mytile/test_data"
 _OBS = f"{_FIX}/obs"
 _OBS_FRAG = (
@@ -232,7 +234,7 @@ def test_refuting_condition_decodes_zero_chunks(monkeypatch):
 
     monkeypatch.setattr(tn, "_read_field", count_f)
     monkeypatch.setattr(tn, "_read_field_span", count_s)
-    names, rows = tn.read_native_array_range(
+    names, rows = range_rows(
         _TABULA, [(None, None)],
         prune_conditions=[("gene_symbol", ">", 99999)],
     )
@@ -241,11 +243,8 @@ def test_refuting_condition_decodes_zero_chunks(monkeypatch):
 
 
 def test_non_refuting_condition_reads_normally():
-    from tiledb_mariadb_spark.sources.tiledb_native import (
-        read_native_array_range,
-    )
 
-    names, rows = read_native_array_range(
+    names, rows = range_rows(
         _TABULA, [(0, 3)], prune_conditions=[("gene_symbol", ">=", 0)]
     )
     assert len(rows) == 4  # pruning is a skip proof, never a filter

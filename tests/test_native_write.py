@@ -26,6 +26,8 @@ from tiledb_mariadb_spark.sources.tiledb_native_write import (
     write_native_fragment,
 )
 
+from .native_model import range_rows
+
 
 def _mk_sparse(tmp_path, name="arr"):
     d = str(tmp_path / name)
@@ -254,7 +256,6 @@ def test_sub_fragment_split_decodes_only_covering_chunks(tmp_path):
     item: tile-aligned seek in the native connector path)."""
     from tiledb_mariadb_spark.sources.tiledb_native import (
         _SPAN_STATS,
-        read_native_array_range,
     )
 
     d = str(tmp_path / "spanarr")
@@ -277,14 +278,14 @@ def test_sub_fragment_split_decodes_only_covering_chunks(tmp_path):
         ts=10,
     )
     _SPAN_STATS.update(chunks_decoded=0, chunks_total=0, bytes_decoded=0)
-    names, rows = read_native_array_range(d, ranges=[(1000, 1999)])
+    names, rows = range_rows(d, ranges=[(1000, 1999)])
     assert names == ["k", "v", "s"]
     assert len(rows) == 1000
     assert rows[0] == (1000, 500.0, f"w{1000 % 13}")
     narrow = _SPAN_STATS["chunks_decoded"]
 
     _SPAN_STATS.update(chunks_decoded=0, chunks_total=0, bytes_decoded=0)
-    _n2, rows_all = read_native_array_range(d, ranges=[(None, None)])
+    _n2, rows_all = range_rows(d, ranges=[(None, None)])
     assert len(rows_all) == n
     full = _SPAN_STATS["chunks_decoded"]
     # the narrow split touches a small fraction of the attr chunks
@@ -294,7 +295,6 @@ def test_sub_fragment_split_decodes_only_covering_chunks(tmp_path):
 def test_split_projection_skips_unrequested_attrs(tmp_path):
     from tiledb_mariadb_spark.sources.tiledb_native import (
         _SPAN_STATS,
-        read_native_array_range,
     )
 
     d = str(tmp_path / "projarr")
@@ -312,14 +312,14 @@ def test_split_projection_skips_unrequested_attrs(tmp_path):
             "b": [i * 2 for i in range(n)]}, ts=10
     )
     _SPAN_STATS.update(chunks_decoded=0, chunks_total=0, bytes_decoded=0)
-    names, rows = read_native_array_range(
+    names, rows = range_rows(
         d, ranges=[(0, 99)], columns=["a"]
     )
     assert names == ["k", "a"]
     assert rows[0] == (0, 0)
     only_a = _SPAN_STATS["chunks_decoded"]
     _SPAN_STATS.update(chunks_decoded=0, chunks_total=0, bytes_decoded=0)
-    read_native_array_range(d, ranges=[(0, 99)], columns=["a", "b"])
+    range_rows(d, ranges=[(0, 99)], columns=["a", "b"])
     both = _SPAN_STATS["chunks_decoded"]
     assert only_a < both
 
@@ -520,7 +520,6 @@ def test_allows_dups_keeps_duplicates(tmp_path):
     (t/duplicates.test semantics); allows_dups=false dedupes as before."""
     from tiledb_mariadb_spark.sources.tiledb_native import (
         parse_array_schema as _pas,
-        read_native_array_range,
     )
 
     for dups in (True, False):
@@ -541,7 +540,7 @@ def test_allows_dups_keeps_duplicates(tmp_path):
             ]
         else:
             assert rows == [(1, 12), (2, 20), (3, 30)]
-        _n, ranged = read_native_array_range(d, ranges=[(1, 1)])
+        _n, ranged = range_rows(d, ranges=[(1, 1)])
         assert len(ranged) == (3 if dups else 1)
 
 
@@ -585,7 +584,6 @@ def test_schema_evolution_native(tmp_path):
 
     from tiledb_mariadb_spark.sources.tiledb_native import (
         read_native_array,
-        read_native_array_range,
     )
     from tiledb_mariadb_spark.sources.tiledb_native_write import (
         evolve_native_schema,
@@ -620,7 +618,7 @@ def test_schema_evolution_native(tmp_path):
     evolve_native_schema(d, drop_attrs=["v"], ts=300)
     _s, rows = read_native_array(d)
     assert rows == [(1, None, -7), (2, None, -7), (3, None, -7), (4, 99, 5)]
-    _n, ranged = read_native_array_range(d, ranges=[(2, 4)])
+    _n, ranged = range_rows(d, ranges=[(2, 4)])
     assert ranged == [(2, None, -7), (3, None, -7), (4, 99, 5)]
     # guard rails
     with pytest.raises(ValueError):
@@ -640,7 +638,6 @@ def test_hilbert_cell_order_native(tmp_path):
     whichever dim it constrains."""
     from tiledb_mariadb_spark.sources.tiledb_native import (
         read_native_array,
-        read_native_array_range,
         rtree_tile_runs,
     )
 
@@ -671,7 +668,7 @@ def test_hilbert_cell_order_native(tmp_path):
         _s, rows = read_native_array(d)
         assert rows == sorted(grid)
         box = [(10, 17), (10, 17)]
-        _n, got = read_native_array_range(d, ranges=box)
+        _n, got = range_rows(d, ranges=box)
         assert got == [
             g for g in sorted(grid) if 10 <= g[0] <= 17 and 10 <= g[1] <= 17
         ]
@@ -712,7 +709,6 @@ def test_dense_subarray_writes(tmp_path):
         count_native_array,
         estimate_range_cells,
         read_native_array,
-        read_native_array_range,
     )
 
     d = str(tmp_path / "densesub")
@@ -737,7 +733,7 @@ def test_dense_subarray_writes(tmp_path):
     )
     assert count_native_array(d) == 20
     assert estimate_range_cells(d, ranges=[(8, 16)]) == 9
-    _n, ranged = read_native_array_range(d, ranges=[(8, 16)])
+    _n, ranged = range_rows(d, ranges=[(8, 16)])
     assert ranged == (
         [(8, 108), (9, 109)]
         + [(i, -1) for i in range(10, 15)]
@@ -795,7 +791,6 @@ def test_col_major_cell_order_native(tmp_path):
     1 in the schema blob; reads stay coordinate-exact."""
     from tiledb_mariadb_spark.sources.tiledb_native import (
         read_native_array,
-        read_native_array_range,
         _read_field,
     )
 
@@ -825,7 +820,7 @@ def test_col_major_cell_order_native(tmp_path):
     assert ys == sorted(ys)
     _s, rows = read_native_array(d)
     assert rows == sorted(pts)
-    _n, got = read_native_array_range(d, ranges=[(1, 2), (None, None)])
+    _n, got = range_rows(d, ranges=[(1, 2), (None, None)])
     assert got == [p for p in sorted(pts) if 1 <= p[0] <= 2]
     with pytest.raises(ValueError):
         create_native_array(
@@ -883,7 +878,6 @@ def test_datetime_dim_native_write(tmp_path):
     from tiledb_mariadb_spark.sources.tiledb_native import (
         count_native_array,
         read_native_array,
-        read_native_array_range,
     )
 
     d = str(tmp_path / "dtdim")
@@ -896,7 +890,7 @@ def test_datetime_dim_native_write(tmp_path):
                           ts=10)
     _s, rows = read_native_array(d)
     assert rows == [(1000, 1), (2000, 2), (5000, 3)]
-    _n, got = read_native_array_range(d, ranges=[(1500, 4000)])
+    _n, got = range_rows(d, ranges=[(1500, 4000)])
     assert got == [(2000, 2)]
     assert count_native_array(d) == 3
 
@@ -1024,10 +1018,6 @@ def test_window_reads_since(spark, tmp_path):
         read_array,
         write_array,
     )
-    from tiledb_mariadb_spark.sources.tiledb_native import (
-        read_native_array_range,
-        read_native_array_range_np,
-    )
 
     uri = str(tmp_path / "win")
     NativeDecoderBackend().create(
@@ -1057,11 +1047,9 @@ def test_window_reads_since(spark, tmp_path):
     assert rows == [
         (i, i * 10) for i in range(20, 40)
     ] + [(i, i * 100) for i in range(40, 80)]
-    # row/np parity for the window
-    _n, rr = read_native_array_range(uri, since=1500, at=2500)
-    fast = read_native_array_range_np(uri, since=1500, at=2500)
-    assert fast is not None
-    assert [(k, v) for k, v in zip(fast[1]["id"], fast[1]["v"])] == rr
+    # the decoder's own window read
+    _n, rr = range_rows(uri, since=1500, at=2500)
+    assert rr == [(i, i * 10) for i in range(20, 60)]
     # datasource option
     spark.dataSource.register(__import__(
         "tiledb_mariadb_spark.sources.spark_datasource",
@@ -1094,8 +1082,6 @@ def test_window_reads_survive_unvacuumed_consolidation(spark, tmp_path):
         write_array,
     )
     from tiledb_mariadb_spark.sources.tiledb_native import (
-        read_native_array_range,
-        read_native_array_range_np,
         window_ned,
     )
     from tiledb_mariadb_spark.sources.tiledb_native_write import (
@@ -1128,11 +1114,8 @@ def test_window_reads_survive_unvacuumed_consolidation(spark, tmp_path):
         for r in read_array(spark, uri, since=1500).collect()
     )
     assert rows == expect
-    _n, rr = read_native_array_range(uri, since=1500)
-    fast = read_native_array_range_np(uri, since=1500)
-    assert sorted((r[0], r[1]) for r in rr) == expect
-    assert fast is not None
-    assert sorted(zip(fast[1]["id"], fast[1]["v"])) == expect
+    _n, rr = range_rows(uri, since=1500)
+    assert rr == expect
     # split planning sees the window fragments' union box, not []
     assert window_ned(uri, since=1500) == [(10, 49)]
     # post-vacuum the originals are gone and the consolidated fragment
@@ -1149,7 +1132,7 @@ def test_window_reads_survive_unvacuumed_consolidation(spark, tmp_path):
     # the metadata layer itself keeps the fold-away semantics (planning
     # helpers must not raise); only the user-facing reads guard
     assert window_ned(uri, since=1500) == []
-    assert read_native_array_range(uri, since=1500)[1] == []
+    assert range_rows(uri, since=1500)[1] == []
     # a window that starts AT the consolidated range's t1 is complete
     rows2 = read_array(spark, uri, since=1000).count()
     assert rows2 == 50

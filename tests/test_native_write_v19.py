@@ -19,7 +19,6 @@ from tiledb_mariadb_spark.sources.tiledb_native import (
     parse_array_schema,
     parse_rtree_leaf_mbrs,
     read_native_array,
-    read_native_array_range,
     _fragment_dirs,
     _schema_path,
 )
@@ -27,6 +26,8 @@ from tiledb_mariadb_spark.sources.tiledb_native_write import (
     create_native_array,
     write_native_fragment,
 )
+
+from .native_model import range_rows
 
 
 def _mk(tmp_path, capacity=10, nullable_v=False):
@@ -73,7 +74,7 @@ def test_v19_roundtrip_all_readers(tmp_path):
     assert len(tiles) == 10  # capacity-packed: 95 cells / cap 10
     assert tiles[0][0] == min(vs[:10]) and tiles[0][1] == max(vs[:10])
     assert len(parse_rtree_leaf_mbrs(frag, schema)) == 10
-    _n, rr = read_native_array_range(d, [(20, 29)])
+    _n, rr = range_rows(d, [(20, 29)])
     assert [r[0] for r in rr] == list(range(20, 30))
 
 

@@ -1,11 +1,11 @@
-"""Nullable-integral exactness through the row-path read (ADVICE r8).
+"""Nullable-integral exactness through NativeDecoderBackend.read_range
+(ADVICE r8).
 
 pandas infers float64 for an int column containing None, silently
 corrupting int64 values >= 2^53 (2^53+1 -> 2^53.0 -> 2^53).  The
-NativeDecoderBackend row path must rebuild such columns as pandas
-masked Int* arrays from the raw decoded values, so the Arrow wire
-(jvm_bridge rows mode, the tiledb_native RecordBatch) carries exact
-int64 + validity end-to-end."""
+columnar reader hands nullable ints over as object columns of python
+ints, so the frame and the Arrow wire (the tiledb_native RecordBatch)
+carry exact int64 + validity end-to-end."""
 
 import pandas as pd
 import pytest
@@ -48,41 +48,19 @@ def test_fast_path_exact(arr):
     assert pd.isna(vals[2])
 
 
-def test_row_path_exact(arr, monkeypatch):
-    import tiledb_mariadb_spark.sources.tiledb_native as tn
-
-    monkeypatch.setattr(
-        tn, "read_native_array_range_np", lambda *a, **k: None
-    )
-    pdf = _read(arr)
-    assert str(pdf["big"].dtype) == "Int64"
-    vals = {k: v for k, v in zip(pdf["k"], pdf["big"])}
-    assert vals[1] == BIG and vals[3] == 5
-    assert pd.isna(vals[2])
-
-
-def test_row_path_conditions_3vl(arr, monkeypatch):
-    # pushed condition on the masked Int64 column: NULL never matches
-    import tiledb_mariadb_spark.sources.tiledb_native as tn
-
-    monkeypatch.setattr(
-        tn, "read_native_array_range_np", lambda *a, **k: None
-    )
+def test_conditions_3vl(arr):
+    # pushed condition on the nullable int column: NULL never matches,
+    # and the surviving big value stays exact
     pdf = _read(arr, conditions=[("big", ">", 0)])
     assert sorted(pdf["k"]) == [1, 3]
-    assert list(pdf["big"])[0] == BIG or list(pdf["big"])[1] == BIG
+    assert sorted(pdf["big"]) == [5, BIG]
 
 
-def test_arrow_wire_exact(arr, monkeypatch):
-    # the jvm_bridge rows mode serializes read_range output via
-    # pa.Table.from_pandas — masked Int64 must map to int64+validity
+def test_arrow_wire_exact(arr):
+    # the frame's nullable int column converts to int64 + validity on
+    # the Arrow wire, never through float64
     import pyarrow as pa
 
-    import tiledb_mariadb_spark.sources.tiledb_native as tn
-
-    monkeypatch.setattr(
-        tn, "read_native_array_range_np", lambda *a, **k: None
-    )
     tbl = pa.Table.from_pandas(_read(arr), preserve_index=False)
     assert tbl.schema.field("big").type == pa.int64()
     assert tbl.column("big").to_pylist() == [BIG, None, 5]

@@ -54,14 +54,14 @@ def test_codegen_active_on_flagship(spark):
     assert codegen_stage_count(df) >= 1
 
 
-def test_tile_table_time_travel_prunes_partitions(spark):
+def test_tile_table_time_travel_prunes_partitions(spark, tmp_path):
     """Reading snapshot v1 of a 2-version tile table must scan only the
     v=1 files (partition pruning on __tile_v)."""
     from tiledb_mariadb_spark.catalog import Attr, Dim, TileTable
 
     tt = TileTable.create(
         spark,
-        "/root/repo/.tmp/tile_tables/prune_check",
+        str(tmp_path / "prune_check"),
         dimensions=[Dim("k", "int")],
         attributes=[Attr("val", "string")],
         overwrite=True,

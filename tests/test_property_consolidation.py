@@ -22,7 +22,6 @@ from tiledb_mariadb_spark.sources.tiledb_native import (
     NativeDim,
     _frag_range,
     _fragment_dirs,
-    read_native_array_range,
 )
 from tiledb_mariadb_spark.sources.tiledb_native_write import (
     create_native_array,
@@ -30,6 +29,8 @@ from tiledb_mariadb_spark.sources.tiledb_native_write import (
     write_delete_condition,
     write_native_fragment,
 )
+
+from .native_model import range_rows
 
 
 @settings(max_examples=8, deadline=None)
@@ -70,9 +71,9 @@ def test_incremental_consolidation_model(
         # plan's never-bake rule and the survivors' 3VL filtering
         dts = draw(st.integers(50, 11000))
         write_delete_condition(d, [("v", "<", 5000)], ts=dts)
-    _n, before = read_native_array_range(d)
+    _n, before = range_rows(d)
     at_probe = draw(st.integers(50, 11000))
-    _n, before_at = read_native_array_range(d, at=at_probe)
+    _n, before_at = range_rows(d, at=at_probe)
     pre_frags = {os.path.basename(f) for f in _fragment_dirs(d)}
 
     runs = plan_consolidation(d, ratio=3.0)
@@ -89,7 +90,7 @@ def test_incremental_consolidation_model(
         run_members |= {os.path.basename(f) for f in run}
 
     n_new = consolidate_array_incremental(spark, d, target_splits=3)
-    _n, after = read_native_array_range(d)
+    _n, after = range_rows(d)
     assert after == before
     post_frags = {os.path.basename(f) for f in _fragment_dirs(d)}
     # non-run fragments are untouched and still visible
@@ -101,10 +102,10 @@ def test_incremental_consolidation_model(
         _frag_range(nm) for nm in post_frags - pre_frags
     ]
     if not any(a <= at_probe and at_probe < b for a, b in spans):
-        _n, after_at = read_native_array_range(d, at=at_probe)
+        _n, after_at = range_rows(d, at=at_probe)
         assert after_at == before_at
     vacuum_native_array(d)
-    _n, after2 = read_native_array_range(d)
+    _n, after2 = range_rows(d)
     assert after2 == before
     # every .del survives an incremental merge
     if del_ts:

@@ -14,7 +14,6 @@ from tiledb_mariadb_spark.sources.tiledb_native import (
     NativeDim,
     count_native_array,
     read_native_array,
-    read_native_array_range,
 )
 from tiledb_mariadb_spark.sources.tiledb_native_write import (
     consolidate_native_array,
@@ -23,6 +22,8 @@ from tiledb_mariadb_spark.sources.tiledb_native_write import (
     write_delete_condition,
     write_native_fragment,
 )
+
+from .native_model import range_rows
 
 # an op is one of:
 #   ("write", [(k, v), ...])
@@ -106,8 +107,8 @@ def test_history_fuzz_matches_model(tmp_path_factory, ops):
     # full view must always match the model
     _s, rows = read_native_array(d)
     assert [(r[0], r[1]) for r in rows] == _model_state(history)
-    # the range reader agrees with the whole-array reader
-    _names, rr = read_native_array_range(d, [(None, None)])
+    # an unbounded range read serves the same state
+    _names, rr = range_rows(d, [(None, None)])
     assert [(r[0], r[1]) for r in rr] == _model_state(history)
     # metadata COUNT is either honest None or exactly right
     n = count_native_array(d)

@@ -18,13 +18,13 @@ from hypothesis import given, settings, strategies as st
 from tiledb_mariadb_spark.sources.tiledb_native import (
     NativeAttr,
     NativeDim,
-    read_native_array_range,
-    read_native_array_range_np,
 )
 from tiledb_mariadb_spark.sources.tiledb_native_write import (
     create_native_array,
     write_native_fragment,
 )
+
+from .native_model import range_rows
 
 FILL = -99
 
@@ -102,13 +102,9 @@ def test_dense_model_1d(tmp_path_factory, data):
         for x in range(blo, bhi + 1)
     ]
     kw = {"ranges": [rng]} if rng is not None else {}
-    names, rows = read_native_array_range(d, **kw)
+    names, rows = range_rows(d, **kw)
     assert names == ["x", "v"]
     assert rows == expect
-    fast = read_native_array_range_np(d, **kw)
-    assert fast is not None, "dense fast path must claim eligibility"
-    _nf, arrs = fast
-    assert list(zip(arrs["x"].tolist(), arrs["v"].tolist())) == expect
 
 
 @settings(max_examples=15, deadline=None)
@@ -154,12 +150,6 @@ def test_dense_model_2d(tmp_path_factory, data):
         for x in range(bx_lo, bx_hi + 1)
         for y in range(by_lo, by_hi + 1)
     ]
-    names, rows = read_native_array_range(d)
+    names, rows = range_rows(d)
     assert names == ["x", "y", "v"]
     assert rows == expect
-    fast = read_native_array_range_np(d)
-    assert fast is not None
-    _nf, arrs = fast
-    got = list(zip(arrs["x"].tolist(), arrs["y"].tolist(),
-                   arrs["v"].tolist()))
-    assert got == expect

@@ -15,6 +15,8 @@ from tiledb_mariadb_spark.sources.tiledb_native_write import (
     write_native_fragment,
 )
 
+from .native_model import range_rows
+
 I64 = st.integers(min_value=-(2**63), max_value=2**63 - 1)
 I32 = st.integers(min_value=-(2**31), max_value=2**31 - 1)
 F64 = st.floats(allow_nan=False, allow_infinity=False, width=64)
@@ -97,12 +99,9 @@ def test_overwrite_merge_fuzz(tmp_path_factory, frags):
     width=st.integers(min_value=0, max_value=200),
 )
 def test_range_read_matches_bruteforce_fuzz(tmp_path_factory, cells, lo, width):
-    """read_native_array_range (footer pruning + sorted-dim0 bisect seek
+    """read_native_array_range_np (footer pruning + sorted-dim0 bisect seek
     + span decode) returns exactly the brute-force dict-filter answer on
     random fragments and random ranges."""
-    from tiledb_mariadb_spark.sources.tiledb_native import (
-        read_native_array_range,
-    )
 
     d = str(tmp_path_factory.mktemp("rr") / "arr")
     create_native_array(
@@ -113,7 +112,7 @@ def test_range_read_matches_bruteforce_fuzz(tmp_path_factory, cells, lo, width):
     ks = sorted(cells)
     write_native_fragment(d, {"k": ks, "v": [cells[k] for k in ks]}, ts=10)
     hi = lo + width
-    _names, rows = read_native_array_range(d, ranges=[(lo, hi)])
+    _names, rows = range_rows(d, ranges=[(lo, hi)])
     expect = [(k, cells[k]) for k in ks if lo <= k <= hi]
     assert rows == expect
 
@@ -137,9 +136,6 @@ def test_multifragment_range_read_fuzz(tmp_path_factory, frags, lo, width):
     """Range reads over OVERLAPPING multi-fragment arrays: footer
     pruning + per-fragment seeks still produce newest-wins-within-range
     exactly."""
-    from tiledb_mariadb_spark.sources.tiledb_native import (
-        read_native_array_range,
-    )
 
     d = str(tmp_path_factory.mktemp("mf") / "arr")
     create_native_array(
@@ -155,7 +151,7 @@ def test_multifragment_range_read_fuzz(tmp_path_factory, frags, lo, width):
         )
         model.update(cells)
     hi = lo + width
-    _names, rows = read_native_array_range(d, ranges=[(lo, hi)])
+    _names, rows = range_rows(d, ranges=[(lo, hi)])
     expect = [(k, model[k]) for k in sorted(model) if lo <= k <= hi]
     assert rows == expect
 
@@ -179,7 +175,6 @@ def test_multitile_range_read_fuzz(tmp_path_factory, cells, cap, lo, width):
     from tiledb_mariadb_spark.sources.tiledb_native import (
         count_native_array,
         read_native_array,
-        read_native_array_range,
     )
 
     d = str(tmp_path_factory.mktemp("mt") / "arr")
@@ -195,7 +190,7 @@ def test_multitile_range_read_fuzz(tmp_path_factory, cells, cap, lo, width):
     _s, rows = read_native_array(d)
     assert rows == [(k, cells[k]) for k in ks]
     hi = lo + width
-    _n, ranged = read_native_array_range(d, ranges=[(lo, hi)])
+    _n, ranged = range_rows(d, ranges=[(lo, hi)])
     assert ranged == [(k, cells[k]) for k in ks if lo <= k <= hi]
 
 
@@ -257,7 +252,6 @@ def test_dense_subarray_overlay_fuzz(tmp_path_factory, boxes, probe_lo, probe_w)
     from tiledb_mariadb_spark.sources.tiledb_native import (
         count_native_array,
         read_native_array,
-        read_native_array_range,
     )
 
     EXT, DOM_HI = 5, 29  # 6 tiles of 5
@@ -288,7 +282,7 @@ def test_dense_subarray_overlay_fuzz(tmp_path_factory, boxes, probe_lo, probe_w)
     assert rows == expect
     assert count_native_array(d) == bhi - blo + 1
     p_hi = probe_lo + probe_w
-    _n, ranged = read_native_array_range(d, ranges=[(probe_lo, p_hi)])
+    _n, ranged = range_rows(d, ranges=[(probe_lo, p_hi)])
     assert ranged == [r for r in expect if probe_lo <= r[0] <= p_hi]
 
 
@@ -315,7 +309,6 @@ def test_hilbert_write_read_fuzz(tmp_path_factory, pts, box):
     the brute-force model regardless of curve layout."""
     from tiledb_mariadb_spark.sources.tiledb_native import (
         read_native_array,
-        read_native_array_range,
     )
 
     d = str(tmp_path_factory.mktemp("hf") / "arr")
@@ -341,7 +334,7 @@ def test_hilbert_write_read_fuzz(tmp_path_factory, pts, box):
     assert rows == expect
     xlo, xw, ylo, yw = box
     rngs = [(xlo, xlo + xw), (ylo, ylo + yw)]
-    _n, got = read_native_array_range(d, ranges=rngs)
+    _n, got = range_rows(d, ranges=rngs)
     assert got == [
         r for r in expect
         if xlo <= r[0] <= xlo + xw and ylo <= r[1] <= ylo + yw
@@ -490,7 +483,6 @@ def test_array_metadata_fold_fuzz(tmp_path_factory, entries):
 def test_col_major_read_fuzz(tmp_path_factory, pts, rng):
     from tiledb_mariadb_spark.sources.tiledb_native import (
         read_native_array,
-        read_native_array_range,
     )
 
     d = str(tmp_path_factory.mktemp("cm") / "arr")
@@ -513,6 +505,6 @@ def test_col_major_read_fuzz(tmp_path_factory, pts, rng):
     _s, rows = read_native_array(d)
     assert rows == expect
     xlo, xw, ylo, yw = rng
-    _n, got = read_native_array_range(d, ranges=[(xlo, xlo + xw), (ylo, ylo + yw)])
+    _n, got = range_rows(d, ranges=[(xlo, xlo + xw), (ylo, ylo + yw)])
     assert got == [r for r in expect
                    if xlo <= r[0] <= xlo + xw and ylo <= r[1] <= ylo + yw]

@@ -16,7 +16,6 @@ from tiledb_mariadb_spark.schema import (
     time_to_micros_of_day,
 )
 
-TMP = "/root/repo/.tmp/tile_tables/unit"
 
 
 def test_unsigned_widening():
@@ -66,10 +65,10 @@ def test_time_as_micros_roundtrip(spark):
     assert row["s"] == "13:45:30.123456"
 
 
-def test_enum_attribute_validated_on_write(spark):
+def test_enum_attribute_validated_on_write(spark, tmp_path):
     tt = TileTable.create(
         spark,
-        f"{TMP}/enum",
+        f"{tmp_path}/enum",
         dimensions=[Dim("k", "int")],
         attributes=[Attr("status", "string", enum=["a", "b"])],
         overwrite=True,
@@ -80,10 +79,10 @@ def test_enum_attribute_validated_on_write(spark):
     assert "enum=('a','b')" in tt.show_create()
 
 
-def test_register_subset(spark):
+def test_register_subset(spark, tmp_path):
     src = TileTable.create(
         spark,
-        f"{TMP}/subset_src",
+        f"{tmp_path}/subset_src",
         dimensions=[Dim("k", "int")],
         attributes=[Attr("a", "string"), Attr("b", "double")],
         overwrite=True,
@@ -92,20 +91,20 @@ def test_register_subset(spark):
         spark.createDataFrame([(1, "x", 1.5), (2, "y", 2.5)], "k int, a string, b double")
     )
     sub = TileTable.register_subset(
-        spark, src.uri, f"{TMP}/subset_dst", columns=["k", "b"]
+        spark, src.uri, f"{tmp_path}/subset_dst", columns=["k", "b"]
     )
     rows = sub.read().collect()
     got = {r["k"]: r["b"] for r in rows}
     assert got == {1: 1.5, 2: 2.5}
     assert sub.read().columns == ["k", "b"]
     with pytest.raises(ValueError, match="all dimensions"):
-        TileTable.register_subset(spark, src.uri, f"{TMP}/subset_bad", columns=["a"])
+        TileTable.register_subset(spark, src.uri, f"{tmp_path}/subset_bad", columns=["a"])
 
 
-def test_est_records_counts_all_cells(spark):
+def test_est_records_counts_all_cells(spark, tmp_path):
     tt = TileTable.create(
         spark,
-        f"{TMP}/est",
+        f"{tmp_path}/est",
         dimensions=[Dim("k", "int")],
         attributes=[Attr("v", "string")],
         overwrite=True,

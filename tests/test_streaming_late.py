@@ -22,9 +22,6 @@ import time
 
 from pyspark.sql import functions as F
 
-_DIR = "/root/repo/.tmp/stream_late"
-
-
 def _ts(h: int, m: int) -> dt.datetime:
     return dt.datetime(2024, 3, 1, h, m, 0)
 
@@ -33,7 +30,7 @@ def _write(spark, src_dir: str, name: str, rows, mtime: float) -> None:
     """Land ``rows`` as one parquet FILE directly in ``src_dir`` (the file
     stream source lists plain files, not nested directories)."""
     df = spark.createDataFrame(rows, "event_id long, ts timestamp, user_id long")
-    stage = os.path.join(_DIR, "stage", name)
+    stage = os.path.join(os.path.dirname(src_dir), "stage", name)
     df.coalesce(1).write.mode("overwrite").parquet(stage)
     part = next(
         f for f in os.listdir(stage) if f.endswith(".parquet") and f.startswith("part-")
@@ -68,11 +65,10 @@ def _run_incremental(spark, src: str, ckpt: str, out: str) -> None:
     q.awaitTermination()
 
 
-def test_watermark_drops_late_rows(spark):
-    shutil.rmtree(_DIR, ignore_errors=True)
-    src = os.path.join(_DIR, "src")
-    ckpt = os.path.join(_DIR, "ckpt")
-    out = os.path.join(_DIR, "out")
+def test_watermark_drops_late_rows(spark, tmp_path):
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out")
     batch1 = [(i, _ts(8, 5 * i), 1) for i in range(5)] + [
         (10 + i, _ts(10, 10 * i), 2) for i in range(6)
     ]

@@ -4,9 +4,9 @@ per-tile v11+ min/max stats can reach the predicate.
 
 Contracts under test:
 - runs are exact on crafted layouts (op matrix, NaN floats, nulls);
-- both readers drop the SAME provably-non-matching cells (parity);
-- refuted tiles are truly skipped: poison proofs for the row path's
-  interior-gap spans and both paths' covering-span edges;
+- a conditioned read keeps every matching cell and invents none;
+- refuted tiles are truly skipped: interior refuted tiles drop their
+  cells, and a poison proof covers the covering-span edges;
 - the newest-wins shadow gate disables tile subsetting whenever an
   older overlapping fragment is in the read set (no resurrection)."""
 
@@ -22,7 +22,6 @@ from tiledb_mariadb_spark.sources.tiledb_native import (
     _fragment_dirs,
     condition_tile_runs,
     parse_array_schema,
-    read_native_array_range,
     read_native_array_range_np,
     _schema_path,
 )
@@ -30,6 +29,7 @@ from tiledb_mariadb_spark.sources.tiledb_native_write import (
     create_native_array,
     write_native_fragment,
 )
+
 
 CAP = 10  # tiny capacity: many tiles even in small fragments
 
@@ -50,18 +50,8 @@ def _read_np(uri, conds, ranges=None):
         uri, ranges=ranges or [(None, None)], columns=["v"],
         prune_conditions=conds,
     )
-    assert out is not None, "shape must stay on the fast path"
     names, arrays = out
     return sorted(zip(arrays["k"].tolist(), arrays["v"].tolist()))
-
-
-def _read_row(uri, conds, ranges=None):
-    names, rows = read_native_array_range(
-        uri, ranges=ranges or [(None, None)], columns=["v"],
-        prune_conditions=conds,
-    )
-    ki, vi = names.index("k"), names.index("v")
-    return sorted((r[ki], r[vi]) for r in rows)
 
 
 def test_runs_exact(tmp_path):
@@ -144,13 +134,22 @@ def test_conditioned_read_parity(tmp_path):
         [("v", "in", [3, 44])],
         [("v", "<", 5)],
     ):
-        assert _read_np(uri, conds) == _read_row(uri, conds)
+        # prune-only: every matching written cell survives, nothing is
+        # invented
+        got = _read_np(uri, conds)
+        assert set(got) <= {(k, k) for k in ks}
+        _col, op, val = conds[0]
+        want = [(k, k) for k in ks if (
+            k in val if op == "in" else
+            {">=": k >= val, "=": k == val, "<": k < val}[op]
+        )]
+        assert [p for p in got if p in want] == want
 
 
 def test_row_path_interior_gap_poison(tmp_path):
-    """The row path reads kept tiles as separate spans: poison an
-    INTERIOR refuted tile's bytes and the conditioned read still
-    answers."""
+    """Kept tiles on both sides of an INTERIOR refuted tile: the
+    conditioned read drops the refuted tile's cells and still answers
+    from the kept ones."""
     uri = _mk(tmp_path)
     ks = list(range(50))
     write_native_fragment(uri, {"k": ks, "v": ks}, ts=1, version=19)
@@ -160,7 +159,7 @@ def test_row_path_interior_gap_poison(tmp_path):
     assert runs == [(0, 10), (40, 50)]
     # prune_conditions are PRUNE-ONLY: the reader may return residual
     # non-matching rows from KEPT tiles, but nothing from dropped ones
-    got = _read_row(uri, [("v", "in", [5, 43])])
+    got = _read_np(uri, [("v", "in", [5, 43])])
     assert [p for p in got if p[1] in (5, 43)] == [(5, 5), (43, 43)]
     assert all(p[0] < 10 or p[0] >= 40 for p in got), (
         "interior refuted tiles leaked cells"
@@ -168,11 +167,11 @@ def test_row_path_interior_gap_poison(tmp_path):
 
 
 def test_covering_span_edge_poison_both_paths(tmp_path):
-    """Leading tiles outside the kept covering span are never decoded
-    by EITHER path: poison every byte file of a second fragment whose
-    tiles are all refuted — reads must still answer (fragment-level
-    skip), then poison nothing of the kept fragment and confine the
-    condition to its LAST tile: both paths answer from the tail span."""
+    """Leading tiles outside the kept covering span are never decoded:
+    poison every byte file of a second fragment whose tiles are all
+    refuted — reads must still answer (fragment-level skip), then poison
+    nothing of the kept fragment and confine the condition to its LAST
+    tile: the read answers from the tail span."""
     uri = _mk(tmp_path)
     write_native_fragment(
         uri, {"k": list(range(50)), "v": list(range(50))}, ts=1, version=19
@@ -197,7 +196,6 @@ def test_covering_span_edge_poison_both_paths(tmp_path):
                     with open(os.path.join(frag, fn), "r+b") as fh:
                         fh.write(b"\xde\xad\xbe\xef" * 4)
     conds = [("v", ">=", 45)]
-    assert _read_np(uri, conds) == _read_row(uri, conds)
     got = [r for r in _read_np(uri, conds) if r[1] >= 45]
     assert got == [(i, i) for i in range(45, 50)]
 
@@ -216,10 +214,9 @@ def test_shadow_gate_blocks_tile_subsetting(tmp_path):
     write_native_fragment(
         uri, {"k": list(range(20)), "v": [0] * 20}, ts=2, version=19
     )
-    for rd in (_read_np, _read_row):
-        got = dict(rd(uri, [("v", ">=", 90)]))
-        # k=5 must be 0 (the newer value) or absent — NEVER 99
-        assert got.get(5, 0) == 0, got
+    got = dict(_read_np(uri, [("v", ">=", 90)]))
+    # k=5 must be 0 (the newer value) or absent — NEVER 99
+    assert got.get(5, 0) == 0, got
 
 
 def test_since_window_tile_pruning_parity(tmp_path):

@@ -20,6 +20,8 @@ from tiledb_mariadb_spark.sources.tiledb_array import (
     write_array,
 )
 
+from .native_model import range_rows
+
 INFO = ArrayInfo(
     dims=[DimInfo("x", "bigint", (0, 999)), DimInfo("y", "bigint", (0, 9))],
     attrs=[AttrInfo("v", "double"), AttrInfo("s", "string")],
@@ -127,8 +129,6 @@ def test_string_dim_split_planning(spark, tmp_path):
         read_array,
     )
     from tiledb_mariadb_spark.sources.tiledb_native import (
-        read_native_array_range,
-        read_native_array_range_np,
         string_dim_split_keys,
     )
     from tiledb_mariadb_spark.sources.tiledb_native_write import (
@@ -160,10 +160,8 @@ def test_string_dim_split_planning(spark, tmp_path):
     # NUL-successor lower bound is EXCLUSIVE of the boundary key on
     # both read paths (numpy would otherwise strip the trailing NUL)
     rg = [("doc-00000\x00", "doc-00099")]
-    _n, rr = read_native_array_range(uri, ranges=rg)
-    fast = read_native_array_range_np(uri, ranges=rg)
+    _n, rr = range_rows(uri, ranges=rg)
     assert [r[0] for r in rr] == keys[1:100]
-    assert list(fast[1]["doc_id"]) == keys[1:100]
 
 
 def test_since_window_on_non_native_backend(spark, tmp_path):

@@ -13,12 +13,13 @@ import pytest
 from tiledb_mariadb_spark.sources.tiledb_native import (
     NativeAttr,
     NativeDim,
-    read_native_array_range,
 )
 from tiledb_mariadb_spark.sources.tiledb_native_write import (
     create_native_array,
     write_native_fragment,
 )
+
+from .native_model import range_rows
 
 VAR = 0xFFFFFFFF
 WORDS = ["héllo", "wörld", "日本語テキスト", "", "Ωμέγα", "plain"]
@@ -35,11 +36,11 @@ def test_var_roundtrip(tmp_path, dtype_id):
     write_native_fragment(
         uri, {"k": list(range(len(WORDS))), "s": WORDS}, ts=1, version=19
     )
-    names, rows = read_native_array_range(uri)
+    names, rows = range_rows(uri)
     got = [r[names.index("s")] for r in rows]
     assert got == WORDS
     # range + projection still exact
-    names, rows = read_native_array_range(uri, ranges=[(1, 2)])
+    names, rows = range_rows(uri, ranges=[(1, 2)])
     assert [r[names.index("s")] for r in rows] == WORDS[1:3]
 
 
@@ -57,7 +58,7 @@ def test_fixed_width_roundtrip(tmp_path, dtype_id):
     write_native_fragment(
         uri, {"k": [0, 1, 2, 3], "s": vals}, ts=1, version=19
     )
-    names, rows = read_native_array_range(uri)
+    names, rows = range_rows(uri)
     got = [r[names.index("s")].rstrip("\x00") for r in rows]
     assert got == ["abcd", "éé", "語", ""]
 
@@ -73,7 +74,7 @@ def test_nullable_utf16(tmp_path):
     write_native_fragment(
         uri, {"k": [0, 1, 2, 3], "s": vals}, ts=1, version=19
     )
-    names, rows = read_native_array_range(uri)
+    names, rows = range_rows(uri)
     assert [r[names.index("s")] for r in rows] == vals
 
 
@@ -118,7 +119,7 @@ def test_utf16_truncation_never_splits_surrogate(tmp_path):
     # "abc" (3 units) + U+1F600 (pair would straddle unit 4 — drops)
     vals = ["ab\U0001f600", "abc\U0001f600", "abcdef"]
     write_native_fragment(uri, {"k": [0, 1, 2], "s": vals}, ts=1, version=19)
-    names, rows = read_native_array_range(uri)
+    names, rows = range_rows(uri)
     got = [r[names.index("s")].rstrip("\x00") for r in rows]
     assert got == ["ab\U0001f600", "abc", "abcd"]
     assert all("�" not in g for g in got)
@@ -137,7 +138,7 @@ def test_utf8_truncation_never_splits_multibyte(tmp_path):
     # bytes 2-4 — fits exactly)
     vals = ["abcé", "a語", "abcdef"]
     write_native_fragment(uri, {"k": [0, 1, 2], "s": vals}, ts=1, version=19)
-    names, rows = read_native_array_range(uri)
+    names, rows = range_rows(uri)
     got = [r[names.index("s")].rstrip("\x00") for r in rows]
     assert got == ["abc", "a語", "abcd"]
 

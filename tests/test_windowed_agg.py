@@ -16,7 +16,6 @@ import pytest
 from tiledb_mariadb_spark.sources.tiledb_native import (
     NativeAttr,
     NativeDim,
-    read_native_array_range,
 )
 from tiledb_mariadb_spark.sources.tiledb_native_agg import (
     windowed_agg_native,
@@ -27,9 +26,11 @@ from tiledb_mariadb_spark.sources.tiledb_native_write import (
     write_native_fragment,
 )
 
+from .native_model import range_rows
+
 
 def _expected(uri, lo, hi, col, at=None, since=None):
-    names, rows = read_native_array_range(
+    names, rows = range_rows(
         uri, [(lo, hi)], at=at, since=since
     )
     i = names.index(col)
@@ -132,7 +133,7 @@ def test_interior_fragments_never_decoded(tmp_path):
     for frag in glob.glob(os.path.join(uri, "__fragments", "__*")):
         b = os.path.basename(frag)
         # fragment names embed [t1_t2]; interior = bases 1000,2000
-        names, rows = read_native_array_range(uri, None, frags=[frag])
+        names, rows = range_rows(uri, None, frags=[frag])
         i = names.index("k")
         if min(r[i] for r in rows) in (1000, 2000):
             for f in os.listdir(frag):

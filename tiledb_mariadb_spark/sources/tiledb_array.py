@@ -165,13 +165,14 @@ class NativeDecoderBackend(ArrayBackend):
     reference's write path (ha_mytile.cc:3158-3360) without the wheel.
 
     Scale shape: instances are stateless and pickle into executor tasks.
-    Since round 4 each task performs a true SUB-FRAGMENT read
-    (read_native_array_range): the chunk-extent index is walked with
+    Each task performs a true SUB-FRAGMENT columnar read
+    (read_native_array_range_np): the chunk-extent index is walked with
     header seeks only, and just the chunks covering the task's cell span
-    are read + decompressed, with projection pushed into the decoder —
-    per-task I/O and decode are O(split), not O(fragment).  Sparse
-    fragments decode their coordinate columns first to locate the span
-    (the same coords-first order libtiledb's sparse reader uses).
+    are read + decompressed into numpy columns, with projection pushed
+    into the decoder — per-task I/O and decode are O(split), not
+    O(fragment).  Sparse fragments decode their coordinate columns first
+    to locate the span (the same coords-first order libtiledb's sparse
+    reader uses).
 
     ``encryption_key`` (AES-256-GCM, the reference's per-table
     encryption_key option, ha_mytile.cc:75,792-795) pickles with the
@@ -205,6 +206,7 @@ class NativeDecoderBackend(ArrayBackend):
         from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
             _SPARK_TYPE,
             _fragment_dirs,
+            _spark_type,
             parse_array_schema,
             parse_fragment_footer,
             _schema_path,
@@ -246,16 +248,10 @@ class NativeDecoderBackend(ArrayBackend):
             # serves labels
             if getattr(a, "enumeration", None) in s.enumerations:
                 return "string"
-            base = _SPARK_TYPE.get(a.dtype_id, "bigint")
             # fixed multi-value cells (cell_val_num k, 1 < k < VAR) read
-            # as arrays — except fixed-width char cells, which decode to
+            # as arrays — except fixed-width text cells, which decode to
             # one string (schema.py multi-value parity)
-            if (
-                a.cell_val_num not in (1, 0xFFFFFFFF)
-                and a.dtype_id not in (4, 11, 12)
-            ):
-                return f"array<{base}>"
-            return base
+            return _spark_type(a.dtype_id, a.cell_val_num)
 
         attrs = [
             AttrInfo(name=a.name, dtype=_attr_ddl(a), nullable=a.nullable)
@@ -268,7 +264,6 @@ class NativeDecoderBackend(ArrayBackend):
         import pandas as pd  # noqa: PLC0415
 
         from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
-            read_native_array_range,
             read_native_array_range_np,
         )
 
@@ -276,62 +271,17 @@ class NativeDecoderBackend(ArrayBackend):
 
         # range + projection push INTO the decoder: only the chunks
         # covering this split's cell span are read and decompressed
-        # (read_byte_span), so per-task work is O(split) not O(fragment)
+        # (read_byte_span), so per-task work is O(split) not O(fragment);
+        # the columns land in the frame with no per-cell python work.
+        # Conditions double as fragment/tile-skip PROOFS in the decoder
+        # and are applied exactly below.
         need = set(columns) | {c[0] for c in conditions or []}
-        # columnar fast path first: numeric single-dim sparse arrays come
-        # back as whole numpy columns (no per-cell python work); None =
-        # shape outside the fast path, identical row-path semantics
-        fast = read_native_array_range_np(
+        names, arrays = read_native_array_range_np(
             uri, ranges=list(ranges), columns=list(need), at=at,
             prune_conditions=list(conditions) if conditions else None,
             frags=frags, since=since,
         )
-        if fast is not None:
-            names, arrays = fast
-            pdf = pd.DataFrame({nm: arrays[nm] for nm in names})
-        else:
-            names, rows = read_native_array_range(
-                uri, ranges=list(ranges), columns=list(need), at=at,
-                # conditions double as fragment-skip PROOFS: a v11+
-                # fragment whose min/max stats refute a conjunct decodes
-                # zero chunks (the filter below applies to whatever read)
-                prune_conditions=list(conditions) if conditions else None,
-                frags=frags, since=since,
-            )
-            pdf = pd.DataFrame(rows, columns=names)
-            # Nullable-integral exactness: pandas infers float64 for an
-            # int column containing None, silently corrupting int64
-            # values >= 2^53 (2^53+1 -> 2^53).  Rebuild any such column
-            # from the RAW row values as a pandas masked Int* array —
-            # exact end-to-end (Arrow maps it to int64+validity, the
-            # explicit-schema RecordBatch cast is then a no-op).
-            _PD_INT = {
-                "bigint": "Int64", "int": "Int32",
-                "smallint": "Int16", "tinyint": "Int8",
-            }
-            if len(rows):
-                idx = {nm: i for i, nm in enumerate(names)}
-                try:
-                    from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
-                        _SPARK_TYPE,
-                        parse_array_schema,
-                        _schema_path,
-                    )
-
-                    sch = parse_array_schema(_schema_path(uri))
-                    for a in sch.attrs:
-                        nm = a.name
-                        pd_dt = _PD_INT.get(_SPARK_TYPE.get(a.dtype_id))
-                        if (
-                            a.nullable and pd_dt and nm in idx
-                            and a.cell_val_num == 1
-                            and pdf[nm].dtype == "float64"
-                        ):
-                            pdf[nm] = pd.array(
-                                [r[idx[nm]] for r in rows], dtype=pd_dt
-                            )
-                except (OSError, ValueError, KeyError):
-                    pass  # schema unreadable: keep the inferred frame
+        pdf = pd.DataFrame({nm: arrays[nm] for nm in names})
         out = _apply_conditions(pdf, conditions)
         cols = [c for c in columns if c in out.columns]
         if len(out) == 0:

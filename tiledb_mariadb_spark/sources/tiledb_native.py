@@ -25,7 +25,11 @@ array directory opens with no caller schema at all, and handles generic
 tiles, array metadata, validity, var-length offsets pipelines
 (DD+BWR+ZSTD), multi-fragment newest-wins merge, v11+ fragment
 attribute stats (metadata-only MIN/MAX/SUM/NULL_COUNT + refutation
-pruning) and enumeration label mapping.  Write support lives in the sibling
+pruning) and enumeration label mapping.  Every read of a bare array
+goes through ONE columnar reader, ``read_native_array_range_np``: each
+field decodes into its own column (MyTile's per-field buffers of data,
+offsets and validity), and ``read_native_array`` is a row view of those
+columns.  Write support lives in the sibling
 module ``tiledb_native_write`` (round 4): it emits fragments + schema
 blobs this decoder reads back byte-exact.
 """
@@ -1311,52 +1315,6 @@ def _subset_era_deletes(dels: list, frags: list[str]) -> list:
     return [d for d in dels if d[0] <= end]
 
 
-def _match_delete(row_map: dict, conds: list) -> bool:
-    """Does a row satisfy EVERY condition of one delete?  NULL-safe 3VL:
-    a comparison with NULL never matches (the reference's QueryCondition
-    rule), so NULL cells survive value deletes and need is_null to be
-    removed."""
-    for cond in conds:
-        col, op, *rest = cond
-        v = row_map.get(col)
-        if op == "is_null":
-            ok = v is None
-        elif op == "is_not_null":
-            ok = v is not None
-        elif v is None:
-            ok = False
-        elif op == "in":
-            ok = v in (rest[0] or [])
-        else:
-            t = rest[0]
-            ok = {
-                "=": v == t, "!=": v != t, "<": v < t,
-                "<=": v <= t, ">": v > t, ">=": v >= t,
-            }[op]
-        if not ok:
-            return False
-    return True
-
-
-def _apply_deletes(rows_ts: list[tuple], names: list[str], dels: list):
-    """Filter (row, writer_ts) pairs through the visible deletes: a row
-    is removed iff some delete at ``dts`` has writer_ts <= dts AND the
-    row matches its conditions — deletes only affect cells written at or
-    before them, so later re-inserts survive."""
-    if not dels:  # the common case: no per-row dict/any work at all
-        return [row for row, _wts in rows_ts]
-    out = []
-    for row, wts in rows_ts:
-        rm = dict(zip(names, row))
-        if any(
-            wts is not None and wts <= dts and _match_delete(rm, conds)
-            for dts, conds in dels
-        ):
-            continue
-        out.append(row)
-    return out
-
-
 def open_encryption(
     array_dir: str, encryption_key: "bytes | str | None" = None
 ) -> "bytes | None":
@@ -1476,9 +1434,8 @@ def _fill_value(attr):
 def _enum_fill_label(schema: "NativeSchema", attr):
     """The LABEL an evolved-in ENUMERATED attribute reads as on
     pre-evolution fragments: the fill ordinal pushed through
-    :func:`_apply_enumeration` (None for nullable, '' for ordinal 0) —
-    what the row path produces cell-by-cell, computed once so the
-    columnar fast path can serve these fragments too."""
+    :func:`_apply_enumeration` (None for nullable, '' for ordinal 0),
+    computed once for a whole fill column."""
     fill = _fill_value(attr)
     if fill is None:
         return None
@@ -1568,7 +1525,8 @@ def _apply_enumeration(schema: "NativeSchema", field, vals: list) -> list:
     pinned by the enum_array fixture, whose row 10 stores 1 and reads
     back the FIRST label 'ee' in r/enum.result.  Only VAR string-label
     enumerations are registered (see NativeSchema); an out-of-range
-    ordinal is corruption and fails loudly."""
+    ordinal (negative, past the last label, or not an integer) is
+    corruption and fails loudly."""
     labels = (
         schema.enumerations.get(getattr(field, "enumeration", None) or "")
         if schema.enumerations
@@ -1576,36 +1534,17 @@ def _apply_enumeration(schema: "NativeSchema", field, vals: list) -> list:
     )
     if not labels:
         return vals
-    try:
-        return [
-            None if v is None else ("" if v == 0 else labels[v - 1])
-            for v in vals
-        ]
-    except (IndexError, TypeError) as exc:
-        raise ValueError(
-            f"enumeration ordinal out of range for {field.name}"
-        ) from exc
-
-
-def _dense_coords_box(schema: NativeSchema, box) -> list[tuple]:
-    """Global cell order of a dense fragment covering ``box`` (per-dim
-    inclusive (lo, hi), tile-aligned): the box's space tiles in
-    row-major tile order, cells row-major within each tile — the order
-    a TileDB global-order dense subarray write lays cells down."""
-    axes = []
-    for d, (blo, bhi) in zip(schema.dims, box):
-        lo, hi = d.domain
-        ext = d.extent or (hi - lo + 1)
-        tiles = []
-        for t in range(lo, hi + 1, ext):
-            s, e = max(t, blo), min(t + ext - 1, bhi)
-            if s <= e:
-                tiles.append(range(s, e + 1))
-        axes.append(tiles)
-    coords = []
-    for tile_combo in itertools.product(*axes):
-        coords.extend(itertools.product(*tile_combo))
-    return coords
+    out = []
+    for v in vals:
+        if v is None or v == 0:
+            out.append(None if v is None else "")
+        elif isinstance(v, int) and 1 <= v <= len(labels):
+            out.append(labels[v - 1])
+        else:
+            raise ValueError(
+                f"enumeration ordinal out of range for {field.name}"
+            )
+    return out
 
 
 def _dense_fragment_box(frag: str, schema: NativeSchema):
@@ -1652,96 +1591,16 @@ def read_native_array(
     encryption_key: "bytes | str | None" = None,
 ) -> tuple[NativeSchema, list[tuple]]:
     """Open a bare TileDB array directory with NO caller-supplied schema
-    (the discover_array analog, mytile/mytile-discovery.cc:54-473): parse
-    the on-disk schema blob, decode every committed fragment visible at
-    ``at`` (unix-millis time travel; None = all), and merge
-    newest-fragment-wins per coordinate (TileDB overwrite semantics).
-    Rows are (dims..., attrs...) in schema order.  ``encryption_key``
-    opens AES_256_GCM arrays (see :func:`open_encryption`)."""
+    (the discover_array analog, mytile/mytile-discovery.cc:54-473): the
+    whole array visible at ``at`` (unix-millis time travel; None = all)
+    as (schema, rows), rows (dims..., attrs...) in schema order — a row
+    view of :func:`read_native_array_range_np` (newest-fragment-wins
+    merge, deletes, dense fills).  ``encryption_key`` opens AES_256_GCM
+    arrays (see :func:`open_encryption`)."""
     open_encryption(array_dir, encryption_key)
     schema = parse_array_schema(_schema_path(array_dir))
-    merged: dict[tuple, tuple] = {}  # coord -> (row, writer_ts)
-    dup_rows: list[tuple] = []  # allows_dups=true: keep every (row, ts)
-    dense_boxes: list[list] = []  # written subarrays (dense fill read)
-    frags = _fragment_dirs(array_dir, at=at)
-    for frag in frags:
-        wts = _frag_range(os.path.basename(frag))[1]
-        dense_skip = None
-        zipped = os.path.join(frag, "__coords.tdb")
-        has_coords = os.path.isfile(zipped) or any(
-            os.path.isfile(os.path.join(frag, f"{d.name}.tdb"))
-            or os.path.isfile(os.path.join(frag, f"d{i}.tdb"))
-            for i, d in enumerate(schema.dims)
-        )
-        if schema.array_type == "SPARSE" or has_coords:
-            if os.path.isfile(zipped):
-                flat = _typed_cells(
-                    b"".join(read_chunked_tile(open(zipped, "rb").read())),
-                    schema.dims[0].dtype_id,
-                )
-                nd = len(schema.dims)
-                dim_cols = [flat[i::nd] for i in range(nd)]
-            else:
-                dim_cols = [
-                    _read_field(frag, schema, d, i, "d")
-                    for i, d in enumerate(schema.dims)
-                ]
-            coords = list(zip(*dim_cols))
-        else:
-            ned = _dense_fragment_box(frag, schema)
-            dense_boxes.append(ned)
-            # files are laid out over the tile-EXPANDED box; cells in
-            # the edge-tile padding are fill noise outside the NED and
-            # must not shadow older fragments' real data
-            layout = _dense_layout_box(schema, ned)
-            coords = _dense_coords_box(schema, layout)
-            dense_skip = (
-                ned if [tuple(b) for b in ned] != layout else None
-            )
-        attr_cols = [
-            _read_field(frag, schema, a, i, "a", n_cells=len(coords))
-            for i, a in enumerate(schema.attrs)
-        ]
-        for a, col in zip(schema.attrs, attr_cols):
-            if len(col) != len(coords):
-                raise ValueError(
-                    f"{a.name}: {len(col)} cells for {len(coords)} coords"
-                )
-        for i, c in enumerate(coords):
-            if dense_skip is not None and not all(
-                lo <= v <= hi for v, (lo, hi) in zip(c, dense_skip)
-            ):
-                continue
-            row = c + tuple(col[i] for col in attr_cols)
-            if schema.allows_dups:
-                dup_rows.append((row, wts))
-            else:
-                merged[c] = (row, wts)
-    if dense_boxes:
-        # Dense read semantics (fill_in.test / dense_writes.test): the
-        # scan materializes the BOUNDING BOX of the written subarrays;
-        # cells no fragment covered read as the attribute fill values.
-        bbox = [
-            (min(b[i][0] for b in dense_boxes),
-             max(b[i][1] for b in dense_boxes))
-            for i in range(len(schema.dims))
-        ]
-        fills = tuple(_fill_value(a) for a in schema.attrs)
-        for c in _dense_coords_box(schema, bbox):
-            if c not in merged:
-                merged[c] = (c + fills, None)
-    names = [d.name for d in schema.dims] + [a.name for a in schema.attrs]
-    dels = (
-        _delete_conditions(array_dir, at, frags)
-        if schema.array_type == "SPARSE"
-        else []
-    )
-    if schema.allows_dups:
-        nd = len(schema.dims)
-        rows = _apply_deletes(dup_rows, names, dels)
-        return schema, sorted(rows, key=lambda r: r[:nd])
-    ordered = [merged[c] for c in sorted(merged)]
-    return schema, _apply_deletes(ordered, names, dels)
+    names, cols = read_native_array_range_np(array_dir, at=at)
+    return schema, list(zip(*(cols[n].tolist() for n in names)))
 
 
 # ===========================================================================
@@ -1755,12 +1614,6 @@ def read_native_array(
 # ===========================================================================
 
 _SPAN_STATS = {"chunks_decoded": 0, "chunks_total": 0, "bytes_decoded": 0}
-
-# Worker-local cache of decoded sparse coordinate columns, keyed by
-# (fragment dir, dim names): splits of one scan share the coords decode.
-_DIM_CACHE: dict = {}
-_DIM_CACHE_MAX = 8
-
 
 _WALK_CACHE: dict = {}
 _WALK_CACHE_MAX = 256
@@ -1991,114 +1844,216 @@ class _SortedCellView:
         return vals[(byte - self._cum[ci]) // self._elem]
 
 
-def _var_str_span_arrow(base, schema, field, lo_cell, hi_cell):
-    """Cells [lo_cell, hi_cell) of a var-UTF-8 (or, for BLOB/GEOM_WKB
-    dtypes, var-BINARY) attribute as a numpy OBJECT array of python
-    strings/bytes, decoded through Arrow's
-    LargeString/LargeBinaryArray.from_buffers — offsets and byte
-    payload go straight from the span-decoded buffers into a C-built
-    column, no per-cell python slicing.  None on any structural/utf-8
-    surprise (caller falls back to the row path, whose errors='replace'
-    decode tolerates anything)."""
-    import numpy as np  # noqa: PLC0415
-    import pyarrow as pa  # noqa: PLC0415
-
-    try:
-        offs = np.frombuffer(
-            read_byte_span(
-                base, lo_cell * 8, hi_cell * 8,
-                filters=schema.offsets_filters, elem=8,
-            ),
-            "<u8",
-        )
-        if not len(offs):
-            return np.empty(0, object)
-        var_file = base[:-4] + "_var.tdb"
-        n_cells = file_decoded_size(base) // 8
-        if hi_cell < n_cells:
-            end = int(
-                np.frombuffer(
-                    read_byte_span(
-                        base, hi_cell * 8, (hi_cell + 1) * 8,
-                        filters=schema.offsets_filters, elem=8,
-                    ),
-                    "<u8",
-                )[0]
-            )
-        else:
-            end = file_decoded_size(var_file)
-        start = int(offs[0])
-        var = read_byte_span(
-            var_file, start, end, filters=field.filters, elem=1, var=True
-        )
-        rel = np.empty(len(offs) + 1, "<i8")
-        rel[:-1] = offs.astype("<i8") - start
-        rel[-1] = end - start
-        if rel[0] != 0 or (rel[1:] < rel[:-1]).any() or rel[-1] != len(var):
-            return None  # non-monotone/global-offset surprise: row path
-        if field.dtype_id in (39, 41):  # BLOB / GEOM_WKB: bytes cells
-            arr = pa.LargeBinaryArray.from_buffers(
-                pa.large_binary(), len(offs),
-                [None, pa.py_buffer(rel.tobytes()), pa.py_buffer(var)],
-            )
-            arr.validate(full=True)
-            out = np.empty(len(arr), dtype=object)
-            out[:] = arr.to_pylist()
-            return out
-        arr = pa.LargeStringArray.from_buffers(
-            len(offs), pa.py_buffer(rel.tobytes()), pa.py_buffer(var)
-        )
-        arr.validate(full=True)  # utf-8 check; invalid -> row path
-        return arr.to_numpy(zero_copy_only=False)
-    except (pa.lib.ArrowInvalid, ValueError, struct.error, OSError):
-        return None
-
-
-def _fixed_char_cells(afile, schema, field, lo_cell, hi_cell):
-    """Cells [lo_cell, hi_cell) of a FIXED-width CHAR/ASCII/UTF-8 column
-    (dtype 4/11/12, cell_val_num = k) as a numpy OBJECT array of python
-    strings — byte-exact with the row path's
-    ``joined[i:i+cvn].decode('utf-8')`` INCLUDING trailing NULs, which
-    is why numpy's S dtype (it strips them) was rejected and these cells
-    rode the row path until round 7.  Uniform Arrow offsets
-    (arange * cvn) + LargeStringArray.from_buffers keep the decode
-    C-speed; any structural or utf-8 surprise (e.g. a multibyte char
-    split across fixed cells) returns None — the row path's
-    errors='replace' decode owns those."""
-    import numpy as np  # noqa: PLC0415
-    import pyarrow as pa  # noqa: PLC0415
-
-    cvn = field.cell_val_num
-    try:
-        raw = read_byte_span(
-            afile, lo_cell * cvn, hi_cell * cvn,
-            filters=field.filters, elem=1,
-        )
-        n, rem = divmod(len(raw), cvn)
-        if rem:
-            return None  # torn file: row path's error surface
-        offs = np.arange(n + 1, dtype=np.int64) * cvn
-        arr = pa.LargeStringArray.from_buffers(
-            n, pa.py_buffer(offs.tobytes()), pa.py_buffer(raw)
-        )
-        arr.validate(full=True)  # utf-8 check; invalid -> row path
-        return arr.to_numpy(zero_copy_only=False)
-    except (pa.lib.ArrowInvalid, ValueError, struct.error, OSError):
-        return None
-
-
-# numpy dtype strings for the fixed-width scalar ids the columnar fast
-# path serves.  DATETIME_* (18-30) are raw int64 ticks here exactly as
-# on the row path — the connector types them bigint and rendering rules
-# (datetime_ticks_to_*) live with the callers.  BOOL (40) decodes as
-# raw u8 0/1 — exactly the row path's struct-'B' integers.  Fixed CHAR
-# (dtype 4/11/12, cvn=k) is NOT here — it decodes via
-# _fixed_char_cells (object strings with trailing NULs preserved).
+# numpy dtype strings for the fixed-width ids that decode with
+# frombuffer.  DATETIME_* (18-30) are raw int64 ticks — the connector
+# types them bigint and rendering rules (datetime_ticks_to_*) live with
+# the callers.  BOOL (40) decodes as raw u8 0/1, fixed-width BLOB /
+# GEOM_WKB (39/41) bytes as u8 integers.  Text dtypes (_TEXT_CODEC)
+# decode to object strings instead (_np_text).
 _NP_DT = {
     0: "<i4", 1: "<i8", 2: "<f4", 3: "<f8", 5: "<i1", 6: "<u1",
-    7: "<i2", 8: "<u2", 9: "<u4", 10: "<u8", 40: "<u1",
+    7: "<i2", 8: "<u2", 9: "<u4", 10: "<u8", 39: "<u1", 40: "<u1",
+    41: "<u1",
     **{i: "<i8" for i in range(18, 31)},
 }
+
+
+def _np_is_obj(schema: "NativeSchema", f) -> bool:
+    """Does field ``f`` read as an OBJECT column of python values (text,
+    bytes, lists, enumeration labels, None for NULL) rather than a typed
+    numpy column?"""
+    return (
+        f.cell_val_num != 1
+        or getattr(f, "nullable", False)
+        or getattr(f, "enumeration", None) in schema.enumerations
+        or f.dtype_id not in _NP_DT
+    )
+
+
+def _np_empty(schema: "NativeSchema", f):
+    import numpy as np  # noqa: PLC0415
+
+    return np.empty(
+        0, object if _np_is_obj(schema, f) else _NP_DT[f.dtype_id]
+    )
+
+
+def _np_fill(schema: "NativeSchema", a, n: int):
+    """``n`` cells of attribute ``a``'s fill value (see
+    :func:`_fill_value`); an ENUMERATED attr fills with the fill
+    ordinal's label."""
+    import numpy as np  # noqa: PLC0415
+
+    if getattr(a, "enumeration", None) in schema.enumerations:
+        fill = _enum_fill_label(schema, a)
+    elif not _np_is_obj(schema, a):
+        return np.full(n, _fill_value(a), dtype=_NP_DT[a.dtype_id])
+    else:
+        fill = _fill_value(a)
+    out = np.empty(n, dtype=object)
+    out[:] = [fill] * n  # list fills must not broadcast
+    return out
+
+
+def _np_text(buf: bytes, rel, codec: str):
+    """Text cells as an OBJECT array of python strings: ``buf`` holds the
+    cells back to back, ``rel`` (int64) their n+1 byte bounds.  UTF-8
+    goes through Arrow's LargeStringArray.from_buffers — C-speed, and
+    trailing NULs of fixed CHAR(k) cells survive (numpy's S dtype strips
+    them).  Bytes that are not valid UTF-8, and the UTF-16/32 codecs,
+    decode per cell with errors='replace'."""
+    import numpy as np  # noqa: PLC0415
+    import pyarrow as pa  # noqa: PLC0415
+
+    n = len(rel) - 1
+    if codec == "utf-8":
+        arr = pa.LargeStringArray.from_buffers(
+            n, pa.py_buffer(rel.tobytes()), pa.py_buffer(buf)
+        )
+        try:
+            arr.validate(full=True)
+        except pa.lib.ArrowInvalid:
+            pass  # invalid UTF-8: per-cell replacement decode below
+        else:
+            return arr.to_numpy(zero_copy_only=False)
+    b = rel.tolist()
+    out = np.empty(n, dtype=object)
+    out[:] = [
+        buf[b[i] : b[i + 1]].decode(codec, errors="replace")
+        for i in range(n)
+    ]
+    return out
+
+
+def _np_var_cells(base: str, schema: "NativeSchema", field,
+                  lo_cell: int, hi_cell: int):
+    """Cells [lo_cell, hi_cell) of a var-length field as an OBJECT
+    array — text (per _TEXT_CODEC), bytes (BLOB/GEOM_WKB) or lists of
+    numbers — from the offsets span and the var byte range it
+    addresses."""
+    import numpy as np  # noqa: PLC0415
+    import pyarrow as pa  # noqa: PLC0415
+
+    def _offs(lo, hi):
+        return np.frombuffer(
+            read_byte_span(
+                base, lo * 8, hi * 8, filters=schema.offsets_filters, elem=8
+            ),
+            "<u8",
+        ).astype(np.int64)
+
+    offs = _offs(lo_cell, hi_cell)
+    if not len(offs):
+        return np.empty(0, dtype=object)
+    var_file = base[:-4] + "_var.tdb"
+    if hi_cell < file_decoded_size(base) // 8:
+        end = int(_offs(hi_cell, hi_cell + 1)[0])
+    else:
+        end = file_decoded_size(var_file)
+    dt = field.dtype_id
+    start = int(offs[0])
+    var = read_byte_span(
+        var_file, start, end, filters=field.filters, elem=_DT[dt][2],
+        var=True,
+    )
+    rel = np.append(offs - start, end - start)
+    if (rel[1:] < rel[:-1]).any():
+        raise ValueError(f"{field.name}: var offsets out of order in {base}")
+    if dt in _TEXT_CODEC:
+        return _np_text(var, rel, _TEXT_CODEC[dt])
+    out = np.empty(len(offs), dtype=object)
+    if dt in (39, 41):  # BLOB / GEOM_WKB: bytes cells
+        out[:] = pa.LargeBinaryArray.from_buffers(
+            pa.large_binary(), len(offs),
+            [None, pa.py_buffer(rel.tobytes()), pa.py_buffer(var)],
+        ).to_pylist()
+        return out
+    flat = np.frombuffer(var, _NP_DT[dt]).tolist()
+    cut = (rel // _DT[dt][2]).tolist()
+    out[:] = [flat[cut[i] : cut[i + 1]] for i in range(len(offs))]
+    return out
+
+
+def _field_cells(path: str, field) -> int:
+    """Cell count of a fragment data file of ``field``."""
+    size = file_decoded_size(path)
+    if field.cell_val_num == 0xFFFFFFFF:
+        return size // 8
+    return size // (_DT[field.dtype_id][2] * field.cell_val_num)
+
+
+def _np_field(frag: str, schema: "NativeSchema", field, idx: int,
+              kind: str, lo_cell: int, hi_cell: int):
+    """Cells [lo_cell, hi_cell) of one dim (``kind`` 'd') or attr ('a')
+    of a fragment as a numpy column, decoding only the chunks that cover
+    the span — the one columnar field decoder.  Non-nullable scalar
+    numeric fields come back typed (see _NP_DT); everything else as an
+    OBJECT column: text (_np_text), bytes, python lists for fixed
+    multi-value and var numeric cells, enumeration labels (1-based
+    ordinals, 0 = '' — see :func:`_apply_enumeration`), None for NULL.
+    An attr with no data file in this fragment was evolved in later and
+    reads as its fill.  A span past the end of a file (torn fragment)
+    and an out-of-range enumeration ordinal raise ValueError."""
+    import numpy as np  # noqa: PLC0415
+
+    n = hi_cell - lo_cell
+    try:
+        base = _field_file(frag, field.name, idx, kind)
+    except FileNotFoundError:
+        if kind != "a":
+            raise
+        return _np_fill(schema, field, n)
+    dt, cvn = field.dtype_id, field.cell_val_num
+    elem = _DT[dt][2]
+    if cvn == 0xFFFFFFFF:
+        v = _np_var_cells(base, schema, field, lo_cell, hi_cell)
+    else:
+        cb = elem * cvn
+        raw = read_byte_span(
+            base, lo_cell * cb, hi_cell * cb, filters=field.filters,
+            elem=elem,
+        )
+        if dt in _TEXT_CODEC:
+            v = _np_text(
+                raw, np.arange(n + 1, dtype=np.int64) * cb, _TEXT_CODEC[dt]
+            )
+        elif cvn != 1:
+            v = np.empty(n, dtype=object)
+            v[:] = np.frombuffer(raw, _NP_DT[dt]).reshape(-1, cvn).tolist()
+        else:
+            v = np.frombuffer(raw, _NP_DT[dt])
+    valid = None
+    if getattr(field, "nullable", False):
+        valid = np.frombuffer(
+            read_byte_span(
+                base[:-4] + "_validity.tdb", lo_cell, hi_cell,
+                rle_value_size=1, filters=schema.validity_filters, elem=1,
+            ),
+            np.uint8,
+        ).astype(bool)
+    labels = schema.enumerations.get(getattr(field, "enumeration", None))
+    if labels:
+        # NULL cells are never range-checked (they stay None)
+        ords = v if valid is None else v[valid]
+        if len(ords) and (
+            ords.dtype.kind not in "iu"
+            or int(ords.min()) < 0
+            or int(ords.max()) > len(labels)
+        ):
+            raise ValueError(
+                f"enumeration ordinal out of range for {field.name}"
+            )
+        lookup = np.array(["", *labels], dtype=object)
+        mapped = np.empty(len(v), dtype=object)
+        if valid is None:
+            mapped[:] = lookup[v]
+        else:
+            mapped[valid] = lookup[v[valid]]
+        v = mapped
+    if valid is not None:
+        v = v.astype(object)  # a copy: frombuffer columns are read-only
+        v[~valid] = None
+    return v
 
 
 def _np_obj_scalar(v):
@@ -2120,11 +2075,10 @@ def _np_obj_scalar(v):
 
 def _np_cond_mask(vals, op: str, rest):
     """Vectorized single-conjunct delete-condition evaluation over one
-    merged column (the numpy twin of :func:`_match_delete`): True where
-    the cell MATCHES.  NULL-safe 3VL — a value comparison with NULL
-    never matches, so NULL cells survive value deletes and need is_null
-    to be removed.  None => uncomparable types (caller falls back to the
-    row path)."""
+    merged column: True where the cell MATCHES.  NULL-safe 3VL — a value
+    comparison with NULL never matches, so NULL cells survive value
+    deletes and need is_null to be removed.  Uncomparable cell/target
+    types raise TypeError, as python's own comparison does."""
     import numpy as np  # noqa: PLC0415
 
     isnull = (
@@ -2140,8 +2094,6 @@ def _np_cond_mask(vals, op: str, rest):
         return (
             ~isnull if isnull is not None else np.ones(len(vals), bool)
         )
-    if not rest:
-        return None
     if op == "in":
         members = [_np_obj_scalar(v) for v in (rest[0] or [])]
 
@@ -2159,16 +2111,13 @@ def _np_cond_mask(vals, op: str, rest):
                 "<=": sub <= t, ">": sub > t, ">=": sub >= t,
             }[op]
 
-    try:
-        if isnull is None:
-            return np.asarray(_cmp(vals), dtype=bool)
-        out = np.zeros(len(vals), dtype=bool)
-        idx = np.flatnonzero(~isnull)
-        if len(idx):
-            out[idx] = np.asarray(_cmp(vals[idx]), dtype=bool)
-        return out
-    except (TypeError, KeyError):
-        return None
+    if isnull is None:
+        return np.asarray(_cmp(vals), dtype=bool)
+    out = np.zeros(len(vals), dtype=bool)
+    idx = np.flatnonzero(~isnull)
+    if len(idx):
+        out[idx] = np.asarray(_cmp(vals[idx]), dtype=bool)
+    return out
 
 
 def _rm_window_indices(np, window, frame):
@@ -2187,95 +2136,6 @@ def _rm_window_indices(np, window, frame):
     return idx
 
 
-def _np_dense_attr(np, frag, schema, a, lo_cell, hi_cell, n_cells):
-    """Cells [lo_cell, hi_cell) of one dense attribute as a numpy
-    column (the dense twin of the sparse fast path's attr decode):
-    span-decoded bytes -> frombuffer / Arrow string array, validity
-    mask, vectorized enum ordinal->label map.  None => outside the fast
-    path (caller falls back to the row reader)."""
-    is_var = a.cell_val_num == 0xFFFFFFFF
-    fixed_char = a.dtype_id in (4, 11, 12) and not is_var
-    cvn = a.cell_val_num
-    elem = _DT[a.dtype_id][2]
-    w = hi_cell - lo_cell
-    try:
-        afile = _field_file(frag, a.name, schema.attrs.index(a), "a")
-    except FileNotFoundError:
-        if getattr(a, "enumeration", None) in schema.enumerations:
-            # evolved-in ENUM fill: the constant LABEL the row path's
-            # _apply_enumeration yields for the fill ordinal
-            filled = np.empty(w, dtype=object)
-            filled[:] = [_enum_fill_label(schema, a)] * w
-            return filled
-        if (
-            is_var or cvn != 1 or getattr(a, "nullable", False)
-            or a.dtype_id not in _NP_DT
-        ):
-            fill = _fill_value(a)
-            filled = np.empty(w, dtype=object)
-            filled[:] = [fill] * w
-            return filled
-        return np.full(w, _fill_value(a), dtype=_NP_DT[a.dtype_id])
-    if is_var:
-        v = _var_str_span_arrow(afile, schema, a, lo_cell, hi_cell)
-        if v is None:
-            return None
-    elif fixed_char:
-        v = _fixed_char_cells(afile, schema, a, lo_cell, hi_cell)
-        if v is None or len(v) != w:
-            return None
-    elif cvn != 1:
-        cb = elem * cvn
-        raw = read_byte_span(
-            afile, lo_cell * cb, hi_cell * cb,
-            filters=a.filters, elem=elem,
-        )
-        cells = np.frombuffer(raw, _NP_DT[a.dtype_id]).reshape(-1, cvn)
-        if len(cells) != w:
-            return None
-        v = np.empty(w, dtype=object)
-        v[:] = cells.tolist()
-    else:
-        raw = read_byte_span(
-            afile, lo_cell * elem, hi_cell * elem,
-            filters=a.filters, elem=elem,
-        )
-        v = np.frombuffer(raw, _NP_DT[a.dtype_id])
-        if len(v) != w:
-            return None
-    valid = None
-    if getattr(a, "nullable", False):
-        valid = np.frombuffer(
-            read_byte_span(
-                afile[:-4] + "_validity.tdb", lo_cell, hi_cell,
-                rle_value_size=1,
-                filters=schema.validity_filters, elem=1,
-            ),
-            np.uint8,
-        ).astype(bool)
-    en = getattr(a, "enumeration", None)
-    labels = schema.enumerations.get(en) if en else None
-    if labels:
-        ords = v if valid is None else v[valid]
-        if len(ords) and int(ords.min()) < 0:
-            return None
-        if len(ords) and int(ords.max()) > len(labels):
-            raise ValueError(
-                f"enumeration ordinal out of range for {a.name}"
-            )
-        lookup = np.array(["", *labels], dtype=object)
-        mapped = np.empty(len(v), dtype=object)
-        if valid is None:
-            mapped[:] = lookup[v]
-        else:
-            mapped[valid] = lookup[v[valid].astype(np.int64)]
-        v = mapped
-    if valid is not None:
-        v = v.astype(object) if v.dtype != object else np.array(v)
-        v[~valid] = None
-    return v
-
-
 def _read_dense_range_np(
     array_dir: str,
     schema,
@@ -2285,69 +2145,46 @@ def _read_dense_range_np(
     frags: list[str] | None = None,
     since: int | None = None,
 ):
-    """Columnar DENSE read (round 6): the dense twin of the sparse fast
-    path.  Dense fragments store no coordinates — dim columns are
-    GENERATED with arange/repeat/tile over the result bounding box, so
-    a dense scan costs exactly the attribute bytes plus O(cells) numpy
-    arithmetic (no per-cell python at all; the reference treats dense as
-    first-class, ha_mytile.cc:3287-3314).
+    """The DENSE branch of :func:`read_native_array_range_np`.  Dense
+    fragments store no coordinates — dim columns are GENERATED with
+    arange/repeat/tile over the result bounding box, so a dense scan
+    costs exactly the attribute bytes plus O(cells) numpy arithmetic
+    (the reference treats dense as first-class, ha_mytile.cc:3287-3314).
 
-    Semantics = the row path's dense branch, hash-parity-tested:
-    visible fragments' written boxes (footer NED) shape a bounding box,
-    clipped by the requested ranges; fragments scatter their cells into
-    it oldest -> newest (newest-wins overwrite); uncovered cells
-    materialize fill values.  Row-major single-space-tile fragments
-    (the writer default) decode only the dim0-range cell SPAN — per-task
-    bytes stay O(split); tiled layouts decode their box and permute
-    disk (global tile) order -> row-major vectorized."""
-    import itertools  # noqa: PLC0415
-
+    Semantics: visible fragments' written boxes (footer NED) shape a
+    bounding box, clipped by the requested ranges; fragments scatter
+    their cells into it oldest -> newest (newest-wins overwrite);
+    uncovered cells materialize fill values; cells come out in
+    row-major (= sorted coordinate) order.  Row-major single-space-tile
+    fragments (the writer default) decode only the dim0-range cell
+    SPAN — per-task bytes stay O(split); tiled layouts decode their box
+    and permute disk (global tile) order -> row-major vectorized.  A
+    fragment holding coordinates (a sparse write into a dense array) is
+    not supported and raises ValueError."""
     import numpy as np  # noqa: PLC0415
 
     dims = schema.dims
-    if any(
-        d.dtype_id not in _NP_DT or d.cell_val_num != 1
-        or d.domain is None for d in dims
-    ):
-        return None
     want = [
         a for a in schema.attrs if columns is None or a.name in columns
     ]
-    for a in want:
-        scalar_num = a.dtype_id in _NP_DT and a.cell_val_num == 1
-        var_str = (
-            a.cell_val_num == 0xFFFFFFFF
-            and a.dtype_id in (4, 11, 12, 39, 41)
-        )  # 39/41 = BLOB/GEOM_WKB: LargeBinary cells (bytes)
-        multi_fixed = (
-            a.dtype_id in _NP_DT and 1 < a.cell_val_num != 0xFFFFFFFF
-        )  # nullable multi: validity masks whole cells to None below
-        fixed_char = (
-            a.dtype_id in (4, 11, 12)
-            and a.cell_val_num != 0xFFFFFFFF
-        )  # round 7: object strings via _fixed_char_cells
-        if not (scalar_num or var_str or multi_fixed or fixed_char):
-            return None
-        en = getattr(a, "enumeration", None)
-        if en and en in schema.enumerations and not scalar_num:
-            return None
     rngs = list(ranges) if ranges else [(None, None)] * len(dims)
     frag_list = frags if frags is not None else _fragment_dirs(
         array_dir, at=at, since=since
     )
     names = [d.name for d in dims] + [a.name for a in want]
 
-    def _obj_col(a):
-        return (
-            a.cell_val_num != 1
-            or getattr(a, "nullable", False)
-            or (getattr(a, "enumeration", None) in schema.enumerations)
-            or a.dtype_id not in _NP_DT  # CHAR(1): object strings
-        )
-
     boxes = []          # every visible box shapes the bounding box
     frag_data = []      # (effective_box, {attr: col in rm-box order})
     for frag in frag_list:
+        try:
+            _field_file(frag, dims[0].name, 0, "d")
+            coords = True
+        except FileNotFoundError:
+            coords = os.path.isfile(os.path.join(frag, "__coords.tdb"))
+        if coords:
+            raise ValueError(
+                f"sparse fragment in a dense array is not supported: {frag}"
+            )
         ned = [tuple(b) for b in _dense_fragment_box(frag, schema)]
         boxes.append(ned)
         if not fragment_overlaps(frag, schema, rngs):
@@ -2379,14 +2216,13 @@ def _read_dense_range_np(
             lo_cell = (wlo0 - blo0) * inner
             box_n = (whi0 - wlo0 + 1) * inner
             eff_box[0] = (wlo0, whi0)
-        cols = {}
-        for a in want:
-            v = _np_dense_attr(
-                np, frag, schema, a, lo_cell, lo_cell + box_n, box_n
+        cols = {
+            a.name: _np_field(
+                frag, schema, a, schema.attrs.index(a), "a",
+                lo_cell, lo_cell + box_n,
             )
-            if v is None:
-                return None  # odd layout: row path owns it
-            cols[a.name] = v
+            for a in want
+        }
         if not row_major:
             # permute disk (global space-tile) order -> row-major:
             # per tile, its cells' row-major indices within the box
@@ -2425,14 +2261,7 @@ def _read_dense_range_np(
         frag_data.append((eff_box, cols))
 
     def _empty():
-        out = {
-            d.name: np.empty(0, _NP_DT[d.dtype_id]) for d in dims
-        }
-        for a in want:
-            out[a.name] = np.empty(
-                0, object if _obj_col(a) else _NP_DT[a.dtype_id]
-            )
-        return names, out
+        return names, {f.name: _np_empty(schema, f) for f in dims + want}
 
     if not boxes:
         return _empty()
@@ -2452,21 +2281,11 @@ def _read_dense_range_np(
     bbox_n = 1
     for s in sizes:
         bbox_n *= s
-    out = {}
-    for a in want:
-        if _obj_col(a):
-            fill = _fill_value(a)
-            filled = np.empty(bbox_n, dtype=object)
-            filled[:] = [fill] * bbox_n  # list fills must not broadcast
-            out[a.name] = filled
-        else:
-            out[a.name] = np.full(
-                bbox_n, _fill_value(a), dtype=_NP_DT[a.dtype_id]
-            )
-    # oldest -> newest scatter = newest-wins overwrite (frag_list order,
-    # same as the row path's merged-dict iteration).  Identity windows
-    # (fragment covers its whole box / the whole bbox — the common
-    # single-fragment scan) skip the index-array build and fancy-index.
+    out = {a.name: _np_fill(schema, a, bbox_n) for a in want}
+    # oldest -> newest scatter = newest-wins overwrite (frag_list
+    # order).  Identity windows (fragment covers its whole box / the
+    # whole bbox — the common single-fragment scan) skip the index-array
+    # build and fancy-index.
     for box, cols in frag_data:
         win = [
             (max(blo, bblo), min(bhi, bbhi))
@@ -2513,35 +2332,51 @@ def read_native_array_range_np(
     frags: list[str] | None = None,
     since: int | None = None,
 ):
-    """Vectorized COLUMNAR twin of :func:`read_native_array_range` for
-    the shape that dominates analytic scans: a SPARSE array of
-    fixed-width scalar numeric dims with numeric / var-UTF-8 attrs.
-    Visible delete-condition commits are applied as vectorized boolean
-    masks (post-merge, writer-ts gated — see ``dels`` below), so a
-    single .del commit no longer demotes a large scan to the row path.
-    Returns ``(names, {name: np.ndarray})`` — or None
-    when the array is outside the fast path, in which case callers fall
-    back to the row-tuple reader (identical semantics).
+    """Range + projection read of a bare native array as whole numpy
+    columns: ``(names, {name: ndarray})`` for the cells whose
+    coordinates fall inside the inclusive per-dimension ``ranges``
+    (None bound = unbounded) — dims, then the requested attrs in schema
+    order.  This is the one range reader: the ``tiledb_native`` data
+    source, the ``tiledb_agg`` bridge, consolidation, discovery and
+    :func:`read_native_array` (a row view) all read through it.  Column
+    types are described at :func:`_np_field`.
 
-    Why it exists: profiling (BASELINE.md round-5 probe) shows the
-    per-cell cost of a scan is ~95% python row-tuple construction and
-    newest-wins dict bookkeeping, not codec work.  Here every step is a
-    numpy array op — frombuffer on the span-decoded bytes, boolean range
-    mask, stable lexsort + shifted-compare dedup for newest-wins — so
-    the connector's mapInPandas tasks hand Arrow whole columns.
+    Why columns: profiling (BASELINE.md round-5 probe) put ~95% of a
+    row-tuple scan in python row construction and newest-wins dict
+    bookkeeping, not codec work.  Here every step is a numpy array op —
+    frombuffer on the span-decoded bytes, boolean range mask, stable
+    lexsort + shifted-compare dedup for newest-wins.
 
-    Semantics parity (hash-checked by the full driver sim):
-    - fragment visibility/pruning identical (commit gates, ``at``,
-      footer overlap, stats refutation via ``prune_conditions``);
-    - per-fragment dim0 bisect span (ROW_MAJOR fragments) for coords AND
-      attrs keeps per-task bytes O(split); the range mask re-checks
-      every cell on every dim, so the bisect stays advisory exactly
-      like the row path;
-    - newest-wins: fragments decode oldest→newest, a STABLE lexsort on
-      the coordinate tuple keeps that order within equal keys, and
-      keeping the LAST occurrence of each key reproduces the row path's
-      overwrite order (allows_dups keeps every occurrence, same sort);
-    - evolved-in attrs materialize their fill value."""
+    Semantics:
+    - visible fragments: commit gates, ``at`` (upper time bound),
+      ``since`` (inclusive LOWER time bound — TileDB timestamp_start, the
+      window a CDC export reads: a fragment is in iff since <= t1 and
+      t2 <= at), ``frags`` (the merged state of ONLY this oldest->newest
+      fragment subset — incremental consolidation's input);
+    - ``prune_conditions``: an AND-list of (col, op, value) the CALLER
+      applies after the read, used here only as a skip proof — stats /
+      bloom refutation of whole fragments and of tiles, gated by the
+      newest-wins shadow rule (dropping a provably non-matching cell
+      must not resurrect an older fragment's passing cell);
+    - footer-disjoint fragments decode nothing; ROW_MAJOR fragments
+      bisect dim0 so per-task bytes stay O(split), and the range mask
+      re-checks every cell on every dim (bisect and footers are
+      advisory);
+    - newest-wins: fragments decode oldest -> newest, a STABLE sort on
+      the coordinate tuple keeps that order within equal keys, and the
+      LAST occurrence of each key wins (allows_dups keeps every
+      occurrence, same order);
+    - visible delete commits apply after the merge as vectorized masks,
+      gated by writer ts (a delete removes only cells written at or
+      before it, so a deleted newest version never resurfaces an older
+      one); a condition on a column the schema lacks reads it as NULL;
+    - evolved-in attrs read as their fill; dense arrays generate their
+      coordinates (:func:`_read_dense_range_np`).
+
+    Torn files and impossible layouts raise: ValueError for a cell
+    count that does not match or zipped coordinates of mixed dtypes,
+    FileNotFoundError for a missing dim file, TypeError for range bounds
+    or delete targets that cannot be compared with the cells."""
     import numpy as np  # noqa: PLC0415
 
     schema = parse_array_schema(_schema_path(array_dir))
@@ -2550,99 +2385,46 @@ def read_native_array_range_np(
             array_dir, schema, ranges=ranges, columns=columns, at=at,
             frags=frags, since=since,
         )
-    if schema.array_type != "SPARSE":
-        return None
     dims = schema.dims
     d0 = dims[0]
-
-    def _var_str_dim(d):
-        # var-UTF-8 dims (string-keyed tables, t/string_dim.test) and —
-        # round 7 — var-BINARY BLOB/GEOM_WKB dims: decoded through the
-        # same Arrow from_buffers path as var attrs (bytes cells for
-        # 39/41), sorted/deduped with stable object argsort chains
-        return d.cell_val_num == 0xFFFFFFFF and d.dtype_id in (
-            4, 11, 12, 39, 41,
-        )
-
-    if any(
-        not (
-            (d.dtype_id in _NP_DT and d.cell_val_num == 1)
-            or _var_str_dim(d)
-        )
-        for d in dims
-    ):
-        return None
     want = [
         a for a in schema.attrs if columns is None or a.name in columns
     ]
     frag_list = frags if frags is not None else _fragment_dirs(
         array_dir, at=at, since=since
     )
-    # delete-condition commits: evaluated HERE as vectorized boolean
-    # masks over the merged columns (one visible .del no longer demotes
-    # a 100 TB scan to the row path); a delete may test attrs the
-    # projection dropped — decode them too, filter, project back down
-    # (same expansion the row path does)
+    # a delete may test attrs the projection dropped — decode them too,
+    # filter, then project back down
     dels = _delete_conditions(array_dir, at, frag_list)
     if frags is not None:
         dels = _subset_era_deletes(dels, frags)
     want_out = want
     if dels:
         need = {c[0] for _ts, conds in dels for c in conds}
-        if not need <= set(
-            [d.name for d in dims] + [a.name for a in schema.attrs]
-        ):
-            return None  # condition on an unknown column: row path
         want = want + [
             a for a in schema.attrs if a.name in need and a not in want
         ]
-    for a in want:
-        scalar_num = a.dtype_id in _NP_DT and a.cell_val_num == 1
-        # var UTF-8 strings (and BLOB/GEOM_WKB var-binary, dtypes
-        # 39/41 — the spatial tier's column) ride Arrow's from_buffers
-        # (C-speed offsets + bytes -> string/binary array)
-        var_str = (
-            a.cell_val_num == 0xFFFFFFFF
-            and a.dtype_id in (4, 11, 12, 39, 41)
-        )
-        # fixed multi-value numeric cells (the vector-store embedding
-        # shape, float32 x D): frombuffer + reshape, cells as lists —
-        # nullable multi stays on the row path (per-cell validity)
-        multi_fixed = (
-            a.dtype_id in _NP_DT and 1 < a.cell_val_num != 0xFFFFFFFF
-        )  # nullable multi: validity masks whole cells to None below
-        # fixed-width CHAR(k) text cells (round 7): object strings via
-        # _fixed_char_cells, trailing NULs preserved
-        fixed_char = (
-            a.dtype_id in (4, 11, 12)
-            and a.cell_val_num != 0xFFFFFFFF
-        )
-        if not (scalar_num or var_str or multi_fixed or fixed_char):
-            return None  # nullable/enumerated attrs are fine (below)
-        en = getattr(a, "enumeration", None)
-        if en and en in schema.enumerations and not scalar_num:
-            return None  # applied enums are scalar ordinals by contract
     rngs = list(ranges) if ranges else [(None, None)] * len(dims)
     lo, hi = rngs[0]
     names = [d.name for d in dims] + [a.name for a in want]
-    kelem = _DT[d0.dtype_id][2]
     any_rng = any(r != (None, None) for r in rngs)
+    # bounds past dim0, which the dim0 bisect cannot use: R-tree leaf
+    # MBRs keep only the tiles that can intersect them
+    rtree = any(r != (None, None) for r in rngs[1:])
     parts: list[dict] = []
     part_wts: list[int] = []  # per-part writer ts (delete applicability)
     cond_skips = (
         plan_condition_skips(frag_list, schema, prune_conditions)
         if prune_conditions else set()
     )
-    # TILE-level condition pruning (round 7): inside a surviving
-    # fragment, decode only the tiles whose per-tile stats can reach
-    # the conditions — gated by the same newest-wins shadow rule as
-    # fragment skips (dropping a provably-non-matching cell must not
-    # resurrect an older fragment's passing cell at the same coord)
     _cread = [f for f in frag_list if f not in cond_skips]
     _cfooters: dict = {}
 
     def _tile_runs(fr):
-        if not prune_conditions or schema.array_type != "SPARSE":
+        # TILE-level condition pruning: inside a surviving fragment,
+        # decode only the tiles whose per-tile stats can reach the
+        # conditions — gated by the same shadow rule as fragment skips
+        if not prune_conditions:
             return None
         others = [f for f in _cread if f != fr]
         if others and not condition_skip_safe(
@@ -2653,26 +2435,38 @@ def read_native_array_range_np(
 
     for frag in frag_list:
         if frag in cond_skips:
-            # stats/bloom-refuted AND shadow-safe (newest-wins hazard —
-            # see plan_condition_skips)
             continue
         if not fragment_overlaps(frag, schema, rngs):
             continue
-        cruns = _tile_runs(frag)
-        if cruns is not None and not cruns:
-            continue  # every tile stat-refuted (and shadow-safe)
-        cov = (cruns[0][0], cruns[-1][1]) if cruns else None
         zipped_file = os.path.join(frag, "__coords.tdb")
+        zipped = os.path.isfile(zipped_file)
+        # runs: absolute [lo, hi) cell spans outside which no cell can
+        # match — condition-kept tiles, intersected with R-tree-kept
+        # tiles; None = no such proof
+        runs = _tile_runs(frag)
+        rt = None
+        if rtree and not zipped:
+            rt = rtree_tile_runs(frag, schema, rngs)
+        if rt is not None:
+            rt = [(a, b) for a, b, _n in rt]
+            runs = rt if runs is None else [
+                (max(a, c), min(b, d))
+                for a, b in runs for c, d in rt if max(a, c) < min(b, d)
+            ]
+        if runs is not None and not runs:
+            continue  # every tile refuted (and shadow-safe) or disjoint
         base = 0
-        if os.path.isfile(zipped_file):
+        if zipped:
             # legacy (pre-2.0) ZIPPED coordinates: one interleaved
-            # (d0, d1, ..., dk) tuple per cell, uniform dim dtype —
+            # (d0, d1, ..., dk) tuple per cell in ONE fixed dim dtype —
             # decode once, de-interleave with a reshape column view
-            # (the numpy twin of _dims_cached's flat[i::nd])
-            if _var_str_dim(d0) or any(
-                d.dtype_id != d0.dtype_id for d in dims
+            if any(
+                d.dtype_id != d0.dtype_id or d.cell_val_num != 1
+                for d in dims
             ):
-                return None  # zipped format requires a uniform dtype
+                raise ValueError(
+                    f"zipped coordinates need one fixed dim dtype: {frag}"
+                )
             flat = np.frombuffer(
                 b"".join(
                     read_chunked_tile(open(zipped_file, "rb").read())
@@ -2680,113 +2474,48 @@ def read_native_array_range_np(
                 _NP_DT[d0.dtype_id],
             )
             if len(flat) % len(dims):
-                return None  # torn file: row path's error surface
+                raise ValueError(
+                    f"{len(flat)} zipped coordinate values for "
+                    f"{len(dims)} dims in {frag}"
+                )
             mat = flat.reshape(-1, len(dims))
             dcols = [np.ascontiguousarray(mat[:, i])
                      for i in range(len(dims))]
-            k = dcols[0]
-            if not len(k):
-                continue
         else:
-            try:
-                kfile = _field_file(frag, d0.name, 0, "d")
-            except FileNotFoundError:
-                return None
-            if _var_str_dim(d0):
-                n0 = file_decoded_size(kfile) // 8
-                k = _var_str_span_arrow(kfile, schema, d0, 0, n0)
-                if k is None:
-                    return None
-            elif (lo, hi) != (None, None):
+            s_lo = 0
+            s_hi = _field_cells(_field_file(frag, d0.name, 0, "d"), d0)
+            if (lo, hi) != (None, None):
                 span = sorted_dim0_cell_span(frag, schema, lo, hi)
                 if span is not None:
-                    s_lo, s_hi, _n = span
-                    if cov is not None:
-                        # condition-kept tiles narrow the covering span
-                        s_lo, s_hi = max(s_lo, cov[0]), min(s_hi, cov[1])
-                    if s_lo >= s_hi:
-                        continue
-                    k = np.frombuffer(
-                        read_byte_span(
-                            kfile, s_lo * kelem, s_hi * kelem,
-                            filters=d0.filters, elem=kelem,
-                        ),
-                        _NP_DT[d0.dtype_id],
-                    )
-                    base = s_lo
-                else:
-                    k = np.frombuffer(
-                        read_tile_file(
-                            kfile, filters=d0.filters, elem=kelem
-                        ),
-                        _NP_DT[d0.dtype_id],
-                    )
-            elif cov is not None:
-                # no dim range: the kept-tile covering span alone
-                # bounds the read (needle-in-one-tile shape)
-                k = np.frombuffer(
-                    read_byte_span(
-                        kfile, cov[0] * kelem, cov[1] * kelem,
-                        filters=d0.filters, elem=kelem,
-                    ),
-                    _NP_DT[d0.dtype_id],
-                )
-                base = cov[0]
-            else:
-                k = np.frombuffer(
-                    read_tile_file(kfile, filters=d0.filters, elem=kelem),
-                    _NP_DT[d0.dtype_id],
-                )
-            if not len(k):
+                    s_lo, s_hi = span[0], span[1]
+            if runs is not None:
+                # kept tiles narrow the covering span
+                s_lo, s_hi = max(s_lo, runs[0][0]), min(s_hi, runs[-1][1])
+            if s_lo >= s_hi:
                 continue
-            # remaining dim coordinates for the SAME cell window
-            dcols = [k]
-            for di, d in enumerate(dims[1:], start=1):
-                try:
-                    dfile = _field_file(frag, d.name, di, "d")
-                except FileNotFoundError:
-                    return None
-                if _var_str_dim(d):
-                    col = _var_str_span_arrow(
-                        dfile, schema, d, base, base + len(k)
-                    )
-                    if col is None:
-                        return None
-                    dcols.append(col)
-                    continue
-                delem = _DT[d.dtype_id][2]
-                dcols.append(
-                    np.frombuffer(
-                        read_byte_span(
-                            dfile, base * delem, (base + len(k)) * delem,
-                            filters=d.filters, elem=delem,
-                        ),
-                        _NP_DT[d.dtype_id],
-                    )
-                )
+            base = s_lo
+            dcols = [
+                _np_field(frag, schema, d, i, "d", s_lo, s_hi)
+                for i, d in enumerate(dims)
+            ]
+        k = dcols[0]
+        if not len(k):
+            continue
         # re-check the ranges on every cell of every dim (bisect and
         # footer pruning are advisory); asarray(..., bool) keeps object
         # (string-dim) comparisons composable with the bool mask
-        if any_rng or cruns is not None:
+        if any_rng or runs is not None:
             mask = np.ones(len(k), dtype=bool)
-            try:
-                for col, (rlo, rhi) in zip(dcols, rngs):
-                    if rlo is not None:
-                        mask &= np.asarray(
-                            col >= _np_obj_scalar(rlo), dtype=bool
-                        )
-                    if rhi is not None:
-                        mask &= np.asarray(
-                            col <= _np_obj_scalar(rhi), dtype=bool
-                        )
-            except TypeError:
-                return None  # uncomparable bound/cell types: row path
-            if cruns is not None:
-                # drop cells of condition-refuted tiles (same cells the
-                # row path drops — parity): runs are absolute cell
+            for col, (rlo, rhi) in zip(dcols, rngs):
+                if rlo is not None:
+                    mask &= np.asarray(col >= _np_obj_scalar(rlo), dtype=bool)
+                if rhi is not None:
+                    mask &= np.asarray(col <= _np_obj_scalar(rhi), dtype=bool)
+            if runs is not None:
+                # drop cells of refuted tiles: runs are absolute cell
                 # indices, this window starts at `base`
                 cmask = np.zeros(len(k), dtype=bool)
-                for r_lo, r_hi in cruns:
+                for r_lo, r_hi in runs:
                     a, b = max(r_lo - base, 0), min(r_hi - base, len(k))
                     if a < b:
                         cmask[a:b] = True
@@ -2804,130 +2533,26 @@ def read_native_array_range_np(
             d.name: (col[i0:i1] if contiguous else col[idx])
             for d, col in zip(dims, dcols)
         }
-        n_sel = len(cols[d0.name])
         for a in want:
-            is_var = a.cell_val_num == 0xFFFFFFFF
-            fixed_char = a.dtype_id in (4, 11, 12) and not is_var
-            cvn = a.cell_val_num
-            elem = _DT[a.dtype_id][2]
-            try:
-                afile = _field_file(
-                    frag, a.name, schema.attrs.index(a), "a"
-                )
-            except FileNotFoundError:
-                if getattr(a, "enumeration", None) in schema.enumerations:
-                    # evolved-in ENUM fill: the constant LABEL the row
-                    # path's _apply_enumeration yields for the ordinal
-                    filled = np.empty(n_sel, dtype=object)
-                    filled[:] = [_enum_fill_label(schema, a)] * n_sel
-                    cols[a.name] = filled
-                elif (
-                    is_var or cvn != 1 or getattr(a, "nullable", False)
-                    or a.dtype_id not in _NP_DT
-                ):
-                    fill = _fill_value(a)
-                    filled = np.empty(n_sel, dtype=object)
-                    filled[:] = [fill] * n_sel
-                    cols[a.name] = filled
-                else:
-                    cols[a.name] = np.full(
-                        n_sel, _fill_value(a), dtype=_NP_DT[a.dtype_id]
-                    )
-                continue
-            if is_var:
-                v = _var_str_span_arrow(
-                    afile, schema, a, base + i0, base + i1
-                )
-                if v is None:
-                    return None  # odd layout/invalid utf8: row path
-            elif fixed_char:
-                v = _fixed_char_cells(afile, schema, a, base + i0, base + i1)
-                if v is None or len(v) != i1 - i0:
-                    return None  # torn file/invalid utf8: row path
-            elif cvn != 1:
-                # fixed multi-value cells: one frombuffer + reshape,
-                # cells surfaced as python LISTS (the row path's
-                # _fixed_vals slice representation)
-                cb = elem * cvn
-                raw = read_byte_span(
-                    afile, (base + i0) * cb, (base + i1) * cb,
-                    filters=a.filters, elem=elem,
-                )
-                cells = np.frombuffer(raw, _NP_DT[a.dtype_id]).reshape(
-                    -1, cvn
-                )
-                v = np.empty(len(cells), dtype=object)
-                v[:] = cells.tolist()
-            else:
-                raw = read_byte_span(
-                    afile, (base + i0) * elem, (base + i1) * elem,
-                    filters=a.filters, elem=elem,
-                )
-                v = np.frombuffer(raw, _NP_DT[a.dtype_id])
-            valid = None
-            if getattr(a, "nullable", False):
-                valid = np.frombuffer(
-                    read_byte_span(
-                        afile[:-4] + "_validity.tdb",
-                        base + i0, base + i1,
-                        rle_value_size=1,
-                        filters=schema.validity_filters, elem=1,
-                    ),
-                    np.uint8,
-                ).astype(bool)
-            en = getattr(a, "enumeration", None)
-            labels = schema.enumerations.get(en) if en else None
-            if labels:
-                # vectorized ordinal→label map (1-based, 0 = '' — the
-                # MariaDB ENUM convention the row path applies); NULL
-                # cells are never range-checked, matching the row path
-                ords = v if valid is None else v[valid]
-                if len(ords) and int(ords.min()) < 0:
-                    return None  # negative ordinal: row-path semantics
-                if len(ords) and int(ords.max()) > len(labels):
-                    raise ValueError(
-                        f"enumeration ordinal out of range for {a.name}"
-                    )
-                lookup = np.array(["", *labels], dtype=object)
-                mapped = np.empty(len(v), dtype=object)
-                if valid is None:
-                    mapped[:] = lookup[v]
-                else:
-                    mapped[valid] = lookup[v[valid].astype(np.int64)]
-                v = mapped
-            if valid is not None:
-                if v.dtype != object:
-                    v = v.astype(object)
-                v[~valid] = None
+            v = _np_field(
+                frag, schema, a, schema.attrs.index(a), "a",
+                base + i0, base + i1,
+            )
             cols[a.name] = v if contiguous else v[idx - i0]
         parts.append(cols)
         part_wts.append(_frag_range(os.path.basename(frag))[1])
     out_names = [d.name for d in dims] + [a.name for a in want_out]
     if not parts:
-        def _empty(nm):
-            d = next((x for x in dims if x.name == nm), None)
-            if d is not None:
-                return np.empty(
-                    0, object if _var_str_dim(d) else _NP_DT[d.dtype_id]
-                )
-            a = next(x for x in want if x.name == nm)
-            if (
-                a.cell_val_num != 1
-                or a.nullable
-                or (getattr(a, "enumeration", None) in schema.enumerations)
-                or a.dtype_id not in _NP_DT  # CHAR(1): object strings
-            ):
-                return np.empty(0, object)
-            return np.empty(0, _NP_DT[a.dtype_id])
-
-        return out_names, {nm: _empty(nm) for nm in out_names}
+        return out_names, {
+            f.name: _np_empty(schema, f) for f in dims + want_out
+        }
     cat = {nm: np.concatenate([p[nm] for p in parts]) for nm in names}
-    # lexicographic coordinate order (= the row path's sorted(merged)).
-    # All-numeric keys: np.lexsort (stable, primary key = LAST array).
-    # String (object) keys: the classic stable-argsort chain from the
-    # LAST key to the FIRST — each pass is kind='stable', so the final
-    # order is the same lexicographic order with fragment order
-    # preserved inside equal keys.
+    # lexicographic coordinate order.  All-numeric keys: np.lexsort
+    # (stable, primary key = LAST array).  String (object) keys: the
+    # classic stable-argsort chain from the LAST key to the FIRST — each
+    # pass is kind='stable', so the final order is the same
+    # lexicographic order with fragment order preserved inside equal
+    # keys.
     key_cols = [cat[d.name] for d in dims]
     if any(c.dtype == object for c in key_cols):
         order = np.arange(len(key_cols[0]))
@@ -2948,30 +2573,24 @@ def read_native_array_range_np(
         keep = order[last]
     res = {nm: cat[nm][keep] for nm in names}
     if dels:
-        # vectorized _apply_deletes: a (post-merge) row dies iff some
-        # delete at dts has writer_ts <= dts AND every conjunct matches
-        # (NULL-safe: comparisons with NULL never match).  Runs AFTER
-        # newest-wins exactly like the row path — a deleted newest
-        # version never resurfaces the older one.
-        _none_wts = np.iinfo(np.int64).max  # wts None => never deleted
+        # a (post-merge) row dies iff some delete at dts has writer_ts
+        # <= dts AND every conjunct matches; each conjunct is evaluated
+        # only on the rows still matching the ones before it
         wts_cat = np.concatenate([
-            np.full(
-                len(p[d0.name]),
-                _none_wts if w is None else w,
-                dtype=np.int64,
-            )
+            np.full(len(p[d0.name]), w, dtype=np.int64)
             for p, w in zip(parts, part_wts)
         ])[keep]
         dead = np.zeros(len(wts_cat), dtype=bool)
         for dts, conds in dels:
             m = wts_cat <= dts
             for cond in conds:
-                if not m.any():
+                cand = np.flatnonzero(m)
+                if not len(cand):
                     break
-                cm = _np_cond_mask(res[cond[0]], cond[1], cond[2:])
-                if cm is None:
-                    return None  # uncomparable cell/target: row path
-                m &= cm
+                col = res.get(cond[0])
+                if col is None:  # a column the schema lacks reads NULL
+                    col = np.full(len(m), None, dtype=object)
+                m[cand] = _np_cond_mask(col[cand], cond[1], cond[2:])
             dead |= m
         if dead.any():
             live = ~dead
@@ -3054,17 +2673,6 @@ def dim0_neighbor(
     return (True, best)
 
 
-def _dense_is_row_major(schema: "NativeSchema") -> bool:
-    """True when every dim's tile extent covers its whole axis (the
-    fixture/writer layout): the global cell order is then plain
-    row-major and dim->cell spans are directly computable."""
-    for d in schema.dims:
-        lo, hi = d.domain
-        if d.extent is not None and d.extent < hi - lo + 1:
-            return False
-    return True
-
-
 def _dense_box_row_major(schema: "NativeSchema", box) -> bool:
     """Global (space-tile) cell order over ``box`` equals plain
     ROW-MAJOR order: every dim AFTER the first spans at most one
@@ -3079,351 +2687,6 @@ def _dense_box_row_major(schema: "NativeSchema", box) -> bool:
         if (blo - lo) // ext != (bhi - lo) // ext:
             return False
     return True
-
-
-def read_native_array_range(
-    array_dir: str,
-    ranges: list[tuple] | None = None,
-    columns: list[str] | None = None,
-    at: int | None = None,
-    prune_conditions: list | None = None,
-    encryption_key: "bytes | str | None" = None,
-    frags: list[str] | None = None,
-    since: int | None = None,
-) -> tuple[list[str], list[tuple]]:
-    """Range + projection read of a bare native array: returns
-    (column_names, rows) for cells whose coordinates fall inside the
-    inclusive per-dimension ``ranges`` (None bound = unbounded),
-    restricted to dims + requested attrs.  Per-fragment work:
-
-    - sparse: decode the coordinate columns (the narrow index data),
-      locate the matching cell span, then span-decode ONLY the requested
-      attrs' covering chunks;
-    - dense (row-major layout): the first-dim range maps straight to a
-      cell span — no scan of anything outside it;
-
-    Newest-fragment-wins merge applies within the range.
-
-    ``prune_conditions`` is an AND-list of (col, op, value) the CALLER
-    will apply after the read (the connector's QueryCondition pushdown);
-    here it is used ONLY as a skip proof: a SPARSE v11+ fragment whose
-    metadata stats refute one conjunct decodes zero chunks (deletes only
-    remove rows, so the negative proof survives them; dense fragments
-    are never pruned this way — their fill cells aren't in the stats)."""
-    if encryption_key is not None:
-        open_encryption(array_dir, encryption_key)
-    schema = parse_array_schema(_schema_path(array_dir))
-    dim_names = [d.name for d in schema.dims]
-    want = [
-        a for a in schema.attrs if columns is None or a.name in columns
-    ]
-    rngs = list(ranges) if ranges else [(None, None)] * len(schema.dims)
-    # ``frags``: read the merged state of ONLY this fragment SUBSET
-    # (oldest->newest, a contiguous timestamp run) — incremental
-    # consolidation's input; None = every visible fragment.
-    # ``since``: inclusive LOWER time bound (TileDB timestamp_start —
-    # the window read a CDC export wants): a fragment is in the window
-    # iff since <= t1 and t2 <= at; older deletes can never match
-    # window rows (their wts exceed the delete instant), so the
-    # existing delete logic is already window-correct
-    frag_list = frags if frags is not None else _fragment_dirs(
-        array_dir, at=at, since=since
-    )
-    dels = (
-        _delete_conditions(array_dir, at, frag_list)
-        if schema.array_type == "SPARSE"
-        else []
-    )
-    if frags is not None:
-        dels = _subset_era_deletes(dels, frags)
-    want_out = want
-    if dels:
-        # a delete's conditions may test attrs the projection dropped —
-        # decode them too, filter, then project back down
-        need = {c[0] for _ts, conds in dels for c in conds}
-        extra = [
-            a for a in schema.attrs
-            if a.name in need and a not in want
-        ]
-        want = want + extra
-    names = dim_names + [a.name for a in want]
-
-    def _in(v, lo, hi):
-        return (lo is None or v >= lo) and (hi is None or v <= hi)
-
-    def _range_match_indices(dim_cols, rngs, n):
-        """Indices of cells inside every dim range — vectorized for
-        numeric coordinate columns (a per-row Python loop over a 10^7-cell
-        fragment would dominate the read), python fallback for
-        string/mixed dims."""
-        try:
-            import numpy as np  # noqa: PLC0415
-
-            mask = np.ones(n, dtype=bool)
-            for col, (lo, hi) in zip(dim_cols, rngs):
-                if lo is None and hi is None:
-                    continue
-                a = np.asarray(col)
-                if a.dtype == object or a.dtype.kind in "SVU":
-                    # string/bytes dims: python path.  BYTES cells must
-                    # never ride numpy's S dtype (signed-char order ≠
-                    # python's unsigned bytes), and U coerces a bound
-                    # like k+"\0" (string split successor) back to k by
-                    # stripping trailing NULs — both would mis-filter
-                    raise TypeError
-                if lo is not None:
-                    mask &= a >= lo
-                if hi is not None:
-                    mask &= a <= hi
-            return np.flatnonzero(mask).tolist()
-        except TypeError:
-            return [
-                i
-                for i in range(n)
-                if all(
-                    _in(col[i], lo, hi)
-                    for col, (lo, hi) in zip(dim_cols, rngs)
-                )
-            ]
-
-    def _dims_cached(frag: str, zipped: bool) -> list[list]:
-        # several splits of one scan land on the same reused Python
-        # worker; the coordinate columns are identical across them, so
-        # decode once per fragment per worker
-        key = (frag, tuple(d.name for d in schema.dims))
-        hit = _DIM_CACHE.get(key)
-        if hit is None:
-            if zipped:
-                flat = _typed_cells(
-                    b"".join(
-                        read_chunked_tile(
-                            open(
-                                os.path.join(frag, "__coords.tdb"), "rb"
-                            ).read()
-                        )
-                    ),
-                    schema.dims[0].dtype_id,
-                )
-                nd = len(schema.dims)
-                hit = [flat[i::nd] for i in range(nd)]
-            else:
-                hit = [
-                    _read_field(frag, schema, d, i, "d")
-                    for i, d in enumerate(schema.dims)
-                ]
-            if len(_DIM_CACHE) >= _DIM_CACHE_MAX:
-                _DIM_CACHE.clear()
-            _DIM_CACHE[key] = hit
-        return hit
-
-    merged: dict[tuple, tuple] = {}  # coord -> (row, writer_ts)
-    dup_rows: list[tuple] = []  # allows_dups=true: keep every (row, ts)
-    dense_boxes: list[list] = []  # written subarrays (dense fill read)
-    cond_skips = (
-        plan_condition_skips(frag_list, schema, prune_conditions)
-        if prune_conditions and schema.array_type == "SPARSE" else set()
-    )
-    # TILE-level condition pruning — identical gate + runs as the
-    # columnar fast path (read_native_array_range_np), so both readers
-    # drop exactly the same provably-non-matching cells (parity fuzz)
-    _cread = [f for f in frag_list if f not in cond_skips]
-    _cfooters: dict = {}
-
-    def _tile_runs(fr):
-        if not prune_conditions or schema.array_type != "SPARSE":
-            return None
-        others = [f for f in _cread if f != fr]
-        if others and not condition_skip_safe(
-            fr, schema, others, _footers=_cfooters
-        ):
-            return None
-        return condition_tile_runs(fr, schema, prune_conditions)
-
-    for frag in frag_list:
-        wts = _frag_range(os.path.basename(frag))[1]
-        if frag in cond_skips:
-            continue  # stats/bloom-proven: no cell here can pass the
-            # filter, and skipping cannot resurrect shadowed cells
-        if not fragment_overlaps(frag, schema, rngs):
-            if schema.array_type == "DENSE":
-                # still shapes the bounding box (its gap cells inside
-                # the requested window must materialize as fills)
-                dense_boxes.append(_dense_fragment_box(frag, schema))
-            continue  # footer-proven disjoint: zero bytes decoded
-        zipped = os.path.isfile(os.path.join(frag, "__coords.tdb"))
-        has_coords = zipped or any(
-            os.path.isfile(os.path.join(frag, f"{d.name}.tdb"))
-            or os.path.isfile(os.path.join(frag, f"d{i}.tdb"))
-            for i, d in enumerate(schema.dims)
-        )
-        if schema.array_type == "SPARSE" or has_coords:
-            # sorted-seek fast path: ROW_MAJOR fragments keep dim0
-            # monotone, so the dim0 range maps to a cell span via bisect
-            # over the coordinate chunk index (O(log) chunk decodes) and
-            # even the coordinate read becomes O(span)
-            span = None
-            if not zipped and rngs[0] != (None, None):
-                span = sorted_dim0_cell_span(frag, schema, *rngs[0])
-            # R-tree tile pruning (all dims, incl. the ones bisect can't
-            # touch): contiguous runs of leaf tiles whose MBRs intersect
-            # the ranges — pruned tiles between runs are never decoded.
-            runs = rtree_tile_runs(frag, schema, rngs) if not zipped else None
-            if runs is not None and not runs:
-                continue  # R-tree-proven disjoint
-            if span is not None:
-                s_lo, s_hi, n_cells = span
-                if s_lo >= s_hi:
-                    continue
-                if runs:
-                    spans = [
-                        (max(r_lo, s_lo), min(r_hi, s_hi), n_cells)
-                        for r_lo, r_hi, _nc in runs
-                        if r_lo < s_hi and r_hi > s_lo
-                    ]
-                else:
-                    spans = [(s_lo, s_hi, n_cells)]
-            elif runs:
-                spans = runs
-            else:
-                spans = None
-            if spans is not None and not spans:
-                continue
-            cruns = _tile_runs(frag) if not zipped else None
-            if cruns is not None:
-                if not cruns:
-                    continue  # every tile stat-refuted (shadow-safe)
-                if spans is None:
-                    total = fragment_cell_count(frag, schema)
-                    if total:
-                        spans = [(0, total, total)]
-                if spans is not None:
-                    spans = [
-                        (max(a, r_lo), min(b, r_hi), nc)
-                        for a, b, nc in spans
-                        for r_lo, r_hi in cruns
-                        if max(a, r_lo) < min(b, r_hi)
-                    ]
-                    if not spans:
-                        continue
-
-            def _consume(dim_cols, base, n):
-                ok = _range_match_indices(dim_cols, rngs, n)
-                if not ok:
-                    return
-                lo_c, hi_c = ok[0], ok[-1] + 1
-                attr_vals = {
-                    a.name: _read_field_span(
-                        frag, schema, a, schema.attrs.index(a), "a",
-                        base + lo_c, base + hi_c, n_cells,
-                    )
-                    for a in want
-                }
-                for i in ok:
-                    c = tuple(col[i] for col in dim_cols)
-                    row = c + tuple(
-                        attr_vals[a.name][i - lo_c] for a in want
-                    )
-                    if schema.allows_dups:
-                        dup_rows.append((row, wts))
-                    else:
-                        merged[c] = (row, wts)
-
-            if spans is None:
-                dim_cols = _dims_cached(frag, zipped)
-                n_cells = len(dim_cols[0])
-                _consume(dim_cols, 0, n_cells)
-            else:
-                for p_lo, p_hi, n_cells in spans:
-                    dim_cols = [
-                        _read_field_span(
-                            frag, schema, dd, i, "d", p_lo, p_hi, n_cells
-                        )
-                        for i, dd in enumerate(schema.dims)
-                    ]
-                    _consume(dim_cols, p_lo, p_hi - p_lo)
-        else:  # dense
-            ned = [tuple(b) for b in _dense_fragment_box(frag, schema)]
-            dense_boxes.append(ned)
-            # decode over the tile-expanded LAYOUT box; merge only the
-            # NED cells (edge-tile padding is fill noise)
-            box = _dense_layout_box(schema, ned)
-            ned_clip = ned if ned != box else None
-            box_n = 1
-            for blo, bhi in box:
-                box_n *= bhi - blo + 1
-            full = box == [d.domain for d in schema.dims]
-            if full and _dense_is_row_major(schema) and rngs[0] != (None, None):
-                # row-major full-domain fast path: the dim0 range maps
-                # straight to a cell span
-                d0 = schema.dims[0]
-                lo0 = max(rngs[0][0], d0.domain[0]) if rngs[0][0] is not None else d0.domain[0]
-                hi0 = min(rngs[0][1], d0.domain[1]) if rngs[0][1] is not None else d0.domain[1]
-                if lo0 > hi0:
-                    continue
-                inner = box_n // (d0.domain[1] - d0.domain[0] + 1)
-                lo_c = (lo0 - d0.domain[0]) * inner
-                hi_c = (hi0 - d0.domain[0] + 1) * inner
-                span_coords = itertools.product(
-                    range(lo0, hi0 + 1),
-                    *(range(d.domain[0], d.domain[1] + 1)
-                      for d in schema.dims[1:]),
-                )
-            else:
-                # subarray fragment / space-tiled layout: decode the
-                # fragment's written box in its global tiled cell order
-                lo_c, hi_c = 0, box_n
-                span_coords = iter(_dense_coords_box(schema, box))
-            attr_vals = {
-                a.name: _read_field_span(
-                    frag, schema, a, schema.attrs.index(a), "a",
-                    lo_c, hi_c, box_n,
-                )
-                for a in want
-            }
-            for i, c in enumerate(span_coords):
-                if not all(
-                    _in(v, lo, hi) for v, (lo, hi) in zip(c, rngs)
-                ):
-                    continue
-                if ned_clip is not None and not all(
-                    nlo <= v <= nhi
-                    for v, (nlo, nhi) in zip(c, ned_clip)
-                ):
-                    continue
-                merged[c] = (c + tuple(attr_vals[a.name][i] for a in want),
-                             wts)
-    if dense_boxes:
-        # dense subarray-read semantics: materialize the requested
-        # window of the written bounding box; uncovered cells = fills
-        bbox = []
-        for i, d in enumerate(schema.dims):
-            blo = min(b[i][0] for b in dense_boxes)
-            bhi = max(b[i][1] for b in dense_boxes)
-            lo, hi = rngs[i]
-            if lo is not None:
-                blo = max(blo, lo)
-            if hi is not None:
-                bhi = min(bhi, hi)
-            bbox.append((blo, bhi))
-        if all(blo <= bhi for blo, bhi in bbox):
-            fills = tuple(_fill_value(a) for a in want)
-            for c in _dense_coords_box(schema, bbox):
-                if c not in merged:
-                    merged[c] = (c + fills, None)
-    if schema.allows_dups:
-        nd = len(schema.dims)
-        rows = sorted(_apply_deletes(dup_rows, names, dels),
-                      key=lambda r: r[:nd])
-    else:
-        ordered = [merged[c] for c in sorted(merged)]
-        rows = _apply_deletes(ordered, names, dels)
-    if want is not want_out:
-        keep = list(range(len(dim_names))) + [
-            len(dim_names) + want.index(a) for a in want_out
-        ]
-        names = dim_names + [a.name for a in want_out]
-        rows = [tuple(r[i] for i in keep) for r in rows]
-    return names, rows
 
 
 # ---------------------------------------------------------------------------
@@ -3952,11 +3215,17 @@ def _spark_type(dtype_id: int, cell_val_num: int) -> str:
 
 def native_to_dataframe(spark, array_dir: str):
     """Bare fixture directory → typed Spark DataFrame, schema inferred
-    entirely from the on-disk blob.  Scalar-only schemas ship via a
-    pandas frame (Arrow batch transfer — an order of magnitude cheaper
-    than row pickling for the 20k-row var fixture); multi-value (list)
-    cells fall back to the row path, whose Python-side typing is exact."""
-    schema, rows = read_native_array(array_dir)
+    entirely from the on-disk blob.  The decoded columns ship as one
+    pandas frame under the explicit schema (Arrow batch transfer — an
+    order of magnitude cheaper than row pickling for the 20k-row var
+    fixture); multi-value cells are python lists, which Arrow types
+    as the declared array element."""
+    import pandas as pd  # noqa: PLC0415
+    from pyspark.sql.types import _parse_datatype_string  # noqa: PLC0415
+
+    open_encryption(array_dir)
+    schema = parse_array_schema(_schema_path(array_dir))
+    names, cols = read_native_array_range_np(array_dir)
     fields = [
         (d.name, _spark_type(d.dtype_id, d.cell_val_num)) for d in schema.dims
     ] + [
@@ -3969,14 +3238,8 @@ def native_to_dataframe(spark, array_dir: str):
         for a in schema.attrs
     ]
     ddl = ", ".join(f"`{n}` {t}" for n, t in fields)
-    if all(not t.startswith("array<") for _n, t in fields):
-        import pandas as pd  # noqa: PLC0415
-
-        pdf = pd.DataFrame(rows, columns=[n for n, _t in fields])
-        from pyspark.sql.types import _parse_datatype_string  # noqa: PLC0415
-
-        return spark.createDataFrame(pdf, _parse_datatype_string(ddl))
-    return spark.createDataFrame(rows, ddl)
+    pdf = pd.DataFrame({n: cols[n] for n in names})
+    return spark.createDataFrame(pdf, _parse_datatype_string(ddl))
 
 
 # ---------------------------------------------------------------------------

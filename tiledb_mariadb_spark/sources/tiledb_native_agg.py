@@ -1279,7 +1279,7 @@ def _dense_fold_fragment(array_dir, schema, frag, box, R, attr_fields,
     disjoint evaluator guarantees it globally, the overlap evaluator
     routes only unshadowed window intersections here."""
     from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
-        read_native_array_range,
+        read_native_array_range_np,
     )
 
     inter = _box_intersect(box, R)
@@ -1429,12 +1429,11 @@ def _dense_fold_fragment(array_dir, schema, frag, box, R, attr_fields,
         ).append(f)
     for plan_key, flds in by_plan.items():
         for iv in plan_key:
-            names, rows = read_native_array_range(
+            names, cols = read_native_array_range_np(
                 array_dir, ranges=[tuple(r) for r in iv],
                 columns=list(flds), at=at, frags=[frag],
             )
-            idx = {n: i for i, n in enumerate(names)}
-            audit["cells_decoded"] += len(rows) * len(flds)
+            audit["cells_decoded"] += len(cols[names[0]]) * len(flds)
             for f in flds:
                 fld = by_name[f][2]
                 summable = (
@@ -1443,9 +1442,9 @@ def _dense_fold_fragment(array_dir, schema, frag, box, R, attr_fields,
                     and not getattr(fld, "enumeration", None)
                 )
                 acc = facc[f]
-                col = idx[f]
-                for row in rows:
-                    v = row[col]
+                # python values in cell order: float sums stay
+                # bit-identical to a row-at-a-time fold
+                for v in cols[f].tolist():
                     if v is None:
                         acc["null_count"] += 1
                         continue

@@ -1790,18 +1790,21 @@ def consolidate_native_array(array_dir: str) -> Optional[str]:
     from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
         _delete_conditions,
         _frag_range,
-        read_native_array,
+        open_encryption,
+        read_native_array_range_np,
     )
 
     old = _fragment_dirs(array_dir)
     dels = _delete_conditions(array_dir, None, old)
     if len(old) < 2 and not dels:
         return None  # a single fragment is already consolidated
-    schema, rows = read_native_array(array_dir)  # deletes applied = baked
-    if not rows:
+    open_encryption(array_dir)
+    schema = parse_array_schema(_schema_path(array_dir))
+    # the merged columns, deletes applied = baked
+    names, arrs = read_native_array_range_np(array_dir)
+    if not len(arrs[names[0]]):
         return None
-    names = [d.name for d in schema.dims] + [a.name for a in schema.attrs]
-    cols = {n: list(vals) for n, vals in zip(names, zip(*rows))}
+    cols = {n: arrs[n].tolist() for n in names}
     rngs = [_frag_range(os.path.basename(f)) for f in old]
     t1 = min(r[0] for r in rngs)
     t2 = max(r[1] for r in rngs)
@@ -1810,12 +1813,11 @@ def consolidate_native_array(array_dir: str) -> Optional[str]:
     t2 = max([t2] + [dts for dts, _c in dels])
     box = None
     if schema.array_type == "DENSE":
-        # the merged rows ARE the bounding box of the written subarrays
+        # the merged cells ARE the bounding box of the written subarrays
         # (contiguous, tile-aligned: min/max of aligned box edges)
-        nd = len(schema.dims)
         box = [
-            (min(r[i] for r in rows), max(r[i] for r in rows))
-            for i in range(nd)
+            (int(arrs[d.name].min()), int(arrs[d.name].max()))
+            for d in schema.dims
         ]
     # the consolidated fragment carries the MODERN (v19) layout — a
     # consolidated array must not LOSE the stats/R-tree pruning tier
@@ -2559,7 +2561,7 @@ def _pack_sum(dtype_id: int, v) -> bytes:
 
 def _dense_tile_slices(schema: NativeSchema, box) -> list[tuple[int, int]]:
     """Cell-index slices of one space tile each, in the global tile
-    order `_dense_coords_box` decodes (tiles row-major over the
+    order the dense reader decodes (tiles row-major over the
     domain-aligned extent grid clipped to ``box``, cells row-major
     within a tile).  The writer permutes columns into exactly this
     order before packing, so slice k holds tile k's cells."""

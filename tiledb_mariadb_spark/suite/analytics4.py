@@ -30,6 +30,7 @@ from pyspark.sql.window import Window
 
 from tiledb_mariadb_spark.functions.similarity import _scaled_int_spark, _scaled_int_sql
 from tiledb_mariadb_spark.suite import QuerySpec, t
+from tiledb_mariadb_spark.suite.scratch import scratch_dir
 from tiledb_mariadb_spark.suite.scratch import tag as _scratch_tag
 
 # --- q207: per-label embedding centroids -----------------------------------
@@ -116,7 +117,7 @@ ORDER BY counts.from_type, to_type
 
 
 # --- q209: multi-format export round-trip ----------------------------------
-_EXPORT_ROOT = "/root/repo/.tmp/exports"
+_EXPORT_ROOT = scratch_dir("exports")
 
 
 def q209_export_roundtrip(spark, sf_dir):

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from tiledb_mariadb_spark.functions import dedup as D
 from tiledb_mariadb_spark.functions import similarity as S
 from tiledb_mariadb_spark.suite import QuerySpec, ldf, spread, t
+from tiledb_mariadb_spark.suite.scratch import scratch_dir
 from tiledb_mariadb_spark.suite.scratch import tag as _scratch_tag
 
 # --- q173: incremental dedup — probe a new batch against the corpus --------
@@ -354,7 +355,7 @@ def q179_ivf_append(spark, sf_dir):
         e.filter(F.col("vec_id") < 256), "vec_id", "embedding", k=8, iters=1
     )
     tag = _scratch_tag(f"append:{sf_dir}")
-    path = os.path.join("/root/repo/.tmp/ivf_index", f"emb-app-{tag}")
+    path = os.path.join(scratch_dir("ivf_index"), f"emb-app-{tag}")
     shutil.rmtree(path, ignore_errors=True)
     ivf.write_ivf_index(ivf.assign_lists(resident, cents, "embedding"), path)
     ivf.append_ivf_index(batch, cents, "embedding", path)
@@ -594,7 +595,7 @@ def q271_ivf_delete(spark, sf_dir):
         e.filter(F.col("vec_id") < 256), "vec_id", "embedding", k=8, iters=1
     )
     tag = _scratch_tag(f"delete:{sf_dir}")
-    path = os.path.join("/root/repo/.tmp/ivf_index", f"emb-del-{tag}")
+    path = os.path.join(scratch_dir("ivf_index"), f"emb-del-{tag}")
     shutil.rmtree(path, ignore_errors=True)
     ivf.write_ivf_index(ivf.assign_lists(e, cents, "embedding"), path)
     ivf.delete_ivf_index(

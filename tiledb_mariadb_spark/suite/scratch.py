@@ -2,7 +2,8 @@
 
 Specs that exercise the write path (DDL round-trips, consolidation, IVF
 index builds, streaming sinks) materialize small on-disk arrays under
-``/root/repo/.tmp``.  Those paths were previously keyed only on the
+``.tmp/`` at the root of the checkout (:func:`scratch_dir`, derived from
+the package location the way ``scripts/`` finds the repo).  Those paths were previously keyed only on the
 sf_dir hash, so two engine processes running the same spec concurrently
 (e.g. the driver sim and pytest) raced on one array directory — a
 consolidate/vacuum in one process deleted parquet files mid-scan in the
@@ -22,13 +23,23 @@ import os
 import re
 import shutil
 
+_REPO = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
+
+
+def scratch_dir(name: str) -> str:
+    """``.tmp/<name>`` under the root of this checkout."""
+    return os.path.join(_REPO, ".tmp", name)
+
+
 _ROOTS = (
-    "/root/repo/.tmp/tile_tables",
-    "/root/repo/.tmp/ivf_index",
-    "/root/repo/.tmp/exports",
-    "/root/repo/.tmp/stream_cdc",
-    "/root/repo/.tmp/stream_native",
-    "/root/repo/spark-warehouse",
+    scratch_dir("tile_tables"),
+    scratch_dir("ivf_index"),
+    scratch_dir("exports"),
+    scratch_dir("stream_cdc"),
+    scratch_dir("stream_native"),
+    os.path.join(_REPO, "spark-warehouse"),
 )
 
 # Catalog table names can't contain '-', so specs that feed tag() into

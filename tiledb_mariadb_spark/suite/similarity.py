@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from tiledb_mariadb_spark.functions import similarity as S
 from tiledb_mariadb_spark.suite import QuerySpec, t
+from tiledb_mariadb_spark.suite.scratch import scratch_dir
 from tiledb_mariadb_spark.suite.scratch import tag as _scratch_tag
 
 
@@ -126,7 +127,7 @@ def q72_ann_ivf(spark, sf_dir):
     )
     indexed = ivf.assign_lists(e, cents, "embedding")
     tag = _scratch_tag(sf_dir)
-    path = os.path.join("/root/repo/.tmp/ivf_index", f"emb-{tag}")
+    path = os.path.join(scratch_dir("ivf_index"), f"emb-{tag}")
     ivf.write_ivf_index(indexed, path)
     stored = spark.read.parquet(path)
     qvec = [float(x) for x in e.orderBy("vec_id").limit(1).collect()[0]["embedding"]]
@@ -184,7 +185,7 @@ def q153_ivf_batch(spark, sf_dir):
     )
     indexed = ivf.assign_lists(corpus, cents, "embedding")
     tag = _scratch_tag(f"batch-{sf_dir}")
-    path = os.path.join("/root/repo/.tmp/ivf_index", f"embatch-{tag}")
+    path = os.path.join(scratch_dir("ivf_index"), f"embatch-{tag}")
     ivf.write_ivf_index(indexed, path)
     stored = spark.read.parquet(path)
     queries = e.filter(F.col("vec_id") < 5).select(

@@ -21,6 +21,7 @@ from tiledb_mariadb_spark.streaming.events import (
     windowed_counts,
 )
 from tiledb_mariadb_spark.suite import QuerySpec, t
+from tiledb_mariadb_spark.suite.scratch import scratch_dir
 from tiledb_mariadb_spark.suite.scratch import tag as _scratch_tag
 
 _WINDOW_US = 6 * 3600 * 1_000_000  # 6-hour tumbling windows
@@ -272,7 +273,7 @@ def q274_stream_cdc_feed(spark, sf_dir):
         "event_id", (F.col("event_id") % 100).alias("bucket")
     )
     tag = _scratch_tag(f"cdcfeed:{sf_dir}")
-    uri = f"/root/repo/.tmp/stream_cdc/{tag}"
+    uri = f"{scratch_dir('stream_cdc')}/{tag}"
     shutil.rmtree(uri, ignore_errors=True)
     tt = TileTable.create(
         spark,
@@ -346,7 +347,7 @@ def q279_stream_native_sink(spark, sf_dir):
     from tiledb_mariadb_spark.suite import dsum  # noqa: PLC0415
 
     tag = _scratch_tag(f"natsink:{sf_dir}")
-    root = f"/root/repo/.tmp/stream_native/{tag}"
+    root = f"{scratch_dir('stream_native')}/{tag}"
     shutil.rmtree(root, ignore_errors=True)
     uri = f"{root}/arr"
     be = NativeDecoderBackend()

@@ -18,13 +18,10 @@ from pyspark.sql import functions as F
 from tiledb_mariadb_spark.catalog import Attr, Dim, TileTable
 from tiledb_mariadb_spark.suite import QuerySpec, ldf, t
 
-TMP_ROOT = "/root/repo/.tmp/tile_tables"
-
-
 def _uri(name: str, sf_dir: str) -> str:
-    from tiledb_mariadb_spark.suite.scratch import tag  # noqa: PLC0415
+    from tiledb_mariadb_spark.suite.scratch import scratch_dir, tag  # noqa: PLC0415
 
-    return os.path.join(TMP_ROOT, f"{name}-{tag(sf_dir)}")
+    return os.path.join(scratch_dir("tile_tables"), f"{name}-{tag(sf_dir)}")
 
 
 # --- q80: @metadata virtual table -----------------------------------------

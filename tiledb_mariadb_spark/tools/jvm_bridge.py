@@ -263,31 +263,43 @@ def _zero_column_table(n: int):
     ])
 
 
-def _rows_numpy(a, info, want, rng, conds) -> bool:
+def _arrow_column(col, ddl: str):
+    """One decoded column as an Arrow array of its declared Spark DDL
+    type: ``array<T>`` (fixed multi-value cells) is a list of the
+    declared element type.  BOOL cells decode as 0/1 integers, so a
+    boolean column converts through tinyint and casts."""
+    import pyarrow as pa  # noqa: PLC0415
+
+    def _type(t):
+        if t.startswith("array<"):
+            return pa.list_(_arrow_types()[t[len("array<"):-1]])
+        return _arrow_types()[t]
+
+    if "boolean" in ddl:
+        return pa.array(
+            col, type=_type(ddl.replace("boolean", "tinyint"))
+        ).cast(_type(ddl))
+    return pa.array(col, type=_type(ddl))
+
+
+def _rows(a, info, want, rng, conds) -> None:
     """Columnar rows emission: numpy decode -> vectorized condition
     masks -> Arrow IPC with the EXPLICIT schema the JVM columnar reader
-    wraps.  Returns False (emitted nothing) when the shape falls
-    outside the numpy fast path or a column's declared type is exotic
-    — the caller then runs the exact pandas path."""
+    wraps (never inferred: the physical types must equal the declared
+    Spark types, and nullable bigints stay exact int64)."""
     import numpy as np  # noqa: PLC0415
     import pyarrow as pa  # noqa: PLC0415
 
-    _PA = _arrow_types()
-    ddl = {x.name: x.dtype for x in list(info.dims) + list(info.attrs)}
-    if not all(ddl.get(c) in _PA for c in want):
-        return False
     from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
         read_native_array_range_np,
     )
 
+    ddl = {x.name: x.dtype for x in list(info.dims) + list(info.attrs)}
     need = set(want) | {c[0] for c in conds or []}
-    fast = read_native_array_range_np(
+    names, arrays = read_native_array_range_np(
         a.uri, ranges=list(rng), columns=list(need), at=a.at,
         prune_conditions=list(conds) if conds else None,
     )
-    if fast is None:
-        return False
-    names, arrays = fast
     mask = None
     for c in conds or []:
         m = _np_cond_mask(np, arrays[c[0]], c[1], c[2] if len(c) > 2 else None)
@@ -301,13 +313,11 @@ def _rows_numpy(a, info, want, rng, conds) -> bool:
     cols = [c for c in want if c in names]
     if cols:
         tbl = pa.table(
-            {c: pa.array(arrays[c], type=_PA[ddl[c]]) for c in cols}
+            {c: _arrow_column(arrays[c], ddl[c]) for c in cols}
         )
     else:
-        tbl = _zero_column_table(len(arrays[names[0]]) if names else 0)
+        tbl = _zero_column_table(len(arrays[names[0]]))
     _emit_arrow(tbl)
-    return True
-
 
 
 def _stats_payload(a) -> dict | None:
@@ -767,6 +777,7 @@ def main(argv=None) -> int:
         # then estimate-based task sizing, then scan_splits.  An empty
         # list is a provably empty plan -> zero partitions; [null] (bounds
         # not JSON-expressible, e.g. bytes dims) is one unbounded split.
+        # Any planning error fails the request with its stderr.
         from tiledb_mariadb_spark.sources.tiledb_array import (  # noqa: PLC0415
             scan_ranges,
             scan_splits,
@@ -813,18 +824,21 @@ def main(argv=None) -> int:
                 st = _stats_payload(a)
             except Exception:  # noqa: BLE001 - stats are optional here
                 st = None
-            print(json.dumps(
-                {"ok": True, "splits": out, "stats": st},
-                default=_json_cell,
-            ))
-        except Exception:  # noqa: BLE001 - bridge boundary
-            print(json.dumps({"ok": True, "splits": [None]}))
+        except Exception as e:  # noqa: BLE001 - bridge boundary
+            print(f"tiledb_agg splits bridge: {e}", file=sys.stderr)
+            return 3
+        try:
+            reply = json.dumps(
+                {"ok": True, "splits": out, "stats": st}, default=_json_cell
+            )
+        except TypeError:  # bounds not JSON-expressible (bytes dims)
+            reply = json.dumps({"ok": True, "splits": [None]})
+        print(reply)
         return 0
 
     # rows: the honest (split-parallel) scan fallback — pushed
     # conditions applied EXACTLY, projection pruned, emitted as Arrow
-    # IPC (whole columns, not per-cell values).  The columnar numpy
-    # path runs first; only shapes outside it pay the pandas path.
+    # IPC (whole columns, not per-cell values).
     try:
         be = NativeDecoderBackend(encryption_key=a.encryption_key)
         info = be.info(a.uri, at=a.at)
@@ -840,36 +854,10 @@ def main(argv=None) -> int:
         else:
             rng = [(None, None)] * len(info.dims)
         conds = _parse_conditions(a.conditions)
-        if _rows_numpy(a, info, want, rng, conds):
-            return 0
-        pdf = be.read_range(
-            a.uri, rng, want, at=a.at,
-            conditions=conds,
-        )
-        if a.limit is not None and a.limit >= 0:
-            pdf = pdf.head(a.limit)
+        _rows(a, info, want, rng, conds)
     except Exception as e:  # noqa: BLE001 - bridge boundary
         print(f"tiledb_agg rows bridge: {e}", file=sys.stderr)
         return 3
-    import pyarrow as pa  # noqa: PLC0415
-
-    _PA = _arrow_types()
-    ddl = {x.name: x.dtype for x in list(info.dims) + list(info.attrs)}
-    if not len(pdf.columns):
-        tbl = _zero_column_table(len(pdf))
-    elif all(ddl.get(c) in _PA for c in pdf.columns):
-        # EXPLICIT Arrow schema from the array schema (never pandas
-        # inference): the physical types must equal the declared Spark
-        # types — and explicit int64 construction keeps nullable
-        # bigints exact (no float64 detour)
-        tbl = pa.Table.from_pandas(
-            pdf,
-            schema=pa.schema([pa.field(c, _PA[ddl[c]]) for c in pdf.columns]),
-            preserve_index=False,
-        )
-    else:  # exotic column types: inference
-        tbl = pa.Table.from_pandas(pdf, preserve_index=False)
-    _emit_arrow(tbl)
     return 0
 
 
