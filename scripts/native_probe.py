@@ -77,15 +77,16 @@ def main() -> int:
     # metadata-only MIN/MAX/SUM + refutation pruning vs a full decode of
     # the same 58,870-cell fragment (stats are a per-fragment O(1)
     # footer walk; the full decode pays for every var-string cell)
+    from tiledb_mariadb_spark.reference_fixtures import TEST_DATA
     from tiledb_mariadb_spark.sources.tiledb_native import (
         attr_stats_native_array,
         read_native_array,
     )
 
-    tab = (
-        "/root/reference/mysql-test/mytile/test_data/"
-        "tabula-sapiens-immune-var"
-    )
+    tab = f"{TEST_DATA}/tabula-sapiens-immune-var"
+    if not os.path.isdir(tab):
+        print(f"tabula v21 attr-stats step skipped: {tab} not present")
+        return 0
     t0 = time.time()
     st = attr_stats_native_array(tab)
     ts = time.time() - t0

@@ -4,6 +4,8 @@ import os
 
 import pytest
 
+from tiledb_mariadb_spark.reference_fixtures import missing
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
@@ -24,3 +26,13 @@ def duck():
     con = duckdb_connection(SF_DIR)
     yield con
     con.close()
+
+
+def needs_fixtures(*paths: str):
+    """Skip mark for a test that reads the reference fixtures at ``paths``
+    (see tiledb_mariadb_spark/reference_fixtures.py); the reason names
+    each directory that is not there."""
+    absent = missing(paths)
+    return pytest.mark.skipif(
+        bool(absent), reason=f"reference fixture not present: {', '.join(absent)}"
+    )

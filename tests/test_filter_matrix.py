@@ -505,7 +505,9 @@ def test_show_create_native_renders_pipelines(tmp_path):
     assert "offset_filters='ZSTD=5'" in ddl
     assert "PRIMARY KEY (`k`)" in ddl
     # a REAL reference fixture: the v19 obs array's DD+BWR+ZSTD offsets
-    ref = "/root/reference/mysql-test/mytile/test_data/obs"
+    from tiledb_mariadb_spark.reference_fixtures import TEST_DATA
+
+    ref = f"{TEST_DATA}/obs"
     if os.path.isdir(ref):
         ddl = show_create_native_array(ref)
         assert ("offset_filters='DOUBLE_DELTA,BIT_WIDTH_REDUCTION=256,"

@@ -31,9 +31,12 @@ from tiledb_mariadb_spark.sources.tiledb_native_write import (
     write_native_fragment,
 )
 
+from tiledb_mariadb_spark.reference_fixtures import TILEDB_ARRAYS
+
+from tests.conftest import needs_fixtures
 from .native_model import range_rows
 
-FIXROOT = "/root/reference/mysql-test/mytile/test_data/tiledb_arrays"
+FIXROOT = TILEDB_ARRAYS
 
 
 def _fixture_fragments():
@@ -56,6 +59,7 @@ def _fixture_fragments():
     return sorted({(a, f): (a, f, s) for a, f, s in out}.values())
 
 
+@needs_fixtures(FIXROOT)
 def test_fixture_footers_never_narrower_than_truth():
     checked = parsed = 0
     for _arr, frag, schema in _fixture_fragments():
@@ -85,6 +89,7 @@ def test_fixture_footers_never_narrower_than_truth():
     assert checked >= 8 and parsed >= checked // 2, (checked, parsed)
 
 
+@needs_fixtures(f"{FIXROOT}/2.0/bank", f"{FIXROOT}/2.0/all_datetimes")
 def test_known_fixture_footers_exact():
     cases = {
         f"{FIXROOT}/2.0/bank": [(0, 45210), None],  # var dim untrusted
@@ -221,6 +226,10 @@ def test_sorted_seek_decodes_log_chunks(tmp_path):
     assert _SPAN_STATS["chunks_decoded"] <= 10, _SPAN_STATS
 
 
+@needs_fixtures(
+    f"{FIXROOT}/2.3/quickstart_sparse_hilbert",
+    f"{FIXROOT}/2.0/string_dim",
+)
 def test_sorted_seek_declines_on_hilbert_and_var(tmp_path):
     """The seek only engages when the format guarantees dim0 order:
     Hilbert cell order and var-width dims fall back to full decode."""
@@ -240,6 +249,7 @@ def test_sorted_seek_declines_on_hilbert_and_var(tmp_path):
     assert sorted_dim0_cell_span(f2, s2, "aa", "bb") is None
 
 
+@needs_fixtures(f"{FIXROOT}/2.0/bank")
 def test_sorted_seek_matches_full_decode_on_fixtures(tmp_path):
     """Equivalence: range reads with and without the seek agree on a
     real multi-row fixture (bank, 45211 cells, row-major)."""
@@ -252,6 +262,7 @@ def test_sorted_seek_matches_full_decode_on_fixtures(tmp_path):
 # --- metadata-only exact COUNT (count_native_array) -------------------------
 
 
+@needs_fixtures(FIXROOT)
 def test_footer_count_matches_decode_on_every_fixture():
     """Whenever count_native_array claims a count from footers alone, it
     must equal the decoded row count — across every committed reference
@@ -370,6 +381,7 @@ def test_count_multi_tile_capacity_packing(tmp_path):
 # --- fragment R-tree: leaf MBRs (parse_rtree_leaf_mbrs) ---------------------
 
 
+@needs_fixtures(FIXROOT)
 def test_fixture_rtrees_never_narrower_than_truth():
     """Across every committed fixture: when the R-tree parses, the leaf
     count matches the footer's tile count and each leaf MBR CONTAINS its
@@ -499,6 +511,7 @@ def test_estimate_range_cells(tmp_path):
         assert est - len(rows) <= 2 * 10, (lo, hi, est, len(rows))
 
 
+@needs_fixtures(f"{FIXROOT}/2.0/bank")
 def test_estimate_range_cells_fixture():
     """Bank fixture: a one-tile id range estimates exactly one tile."""
     from tiledb_mariadb_spark.sources.tiledb_native import (

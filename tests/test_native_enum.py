@@ -6,15 +6,17 @@ ha_mytile.cc:2558 (label round-trip)."""
 
 import pytest
 
+from tiledb_mariadb_spark.reference_fixtures import TEST_DATA
 from tiledb_mariadb_spark.sources.tiledb_native import (
     parse_array_schema,
     read_native_array,
     _schema_path,
 )
 
+from tests.conftest import needs_fixtures
 from .native_model import range_rows
 
-_ENUM = "/root/reference/mysql-test/mytile/test_data/enum_array"
+_ENUM = f"{TEST_DATA}/enum_array"
 
 # r/enum.result golden: select rows, a0, a1, a2, a3 ... order by rows
 _GOLDEN = [
@@ -25,6 +27,7 @@ _GOLDEN = [
 ]
 
 
+@needs_fixtures(_ENUM)
 def test_schema_parses_v20_with_enum_links():
     s = parse_array_schema(_schema_path(_ENUM))
     assert s.version == 20
@@ -41,17 +44,20 @@ def test_schema_parses_v20_with_enum_links():
     }
 
 
+@needs_fixtures(_ENUM)
 def test_full_read_matches_mtr_golden():
     _s, rows = read_native_array(_ENUM)
     assert rows == _GOLDEN
 
 
+@needs_fixtures(_ENUM)
 def test_range_read_maps_labels_too():
     # `where rows > 20` golden: rows 30, 40
     _names, rows = range_rows(_ENUM, [(21, None)])
     assert rows == _GOLDEN[2:]
 
 
+@needs_fixtures(_ENUM)
 def test_connector_reads_labels_and_pushes_label_predicates(spark):
     from tiledb_mariadb_spark.sources.tiledb_array import read_array
 
@@ -71,6 +77,7 @@ def test_connector_reads_labels_and_pushes_label_predicates(spark):
     assert [tuple(r) for r in both.collect()] == [_GOLDEN[3]]
 
 
+@needs_fixtures(_ENUM)
 def test_native_to_dataframe_types_enum_as_string(spark):
     from tiledb_mariadb_spark.sources.tiledb_native import (
         native_to_dataframe,
@@ -81,6 +88,7 @@ def test_native_to_dataframe_types_enum_as_string(spark):
     assert [tuple(r) for r in df.orderBy("rows").collect()] == _GOLDEN
 
 
+@needs_fixtures(_ENUM)
 def test_fixed_label_enum_not_applied_and_stats_honest():
     """a3's enumeration has INT labels: reads serve the raw stored
     values (golden column a3 = 1..4), and the metadata stats path may
@@ -95,9 +103,10 @@ def test_fixed_label_enum_not_applied_and_stats_honest():
     assert st["a0"] == {} and st["a1"] == {} and st["a2"] == {}
 
 
-_TABULA = "/root/reference/mysql-test/mytile/test_data/tabula-sapiens-immune-var"
+_TABULA = f"{TEST_DATA}/tabula-sapiens-immune-var"
 
 
+@needs_fixtures(_TABULA)
 def test_oversized_enum_reverts_to_base_type():
     """enum.test part 3: gene_symbol's 57k-label enumeration exceeds the
     65536/attr_num DDL budget (mytile-discovery.cc oversize rule) — the
@@ -115,6 +124,7 @@ def test_oversized_enum_reverts_to_base_type():
     assert rows[0][3] == ""
 
 
+@needs_fixtures(_ENUM)
 def test_oversize_rule_is_per_attribute_budget():
     """The budget is 65536 / attribute_num — the same enumeration can be
     usable in a 1-attr schema and oversized in a many-attr one."""

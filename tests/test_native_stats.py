@@ -10,6 +10,7 @@ import os
 
 import pytest
 
+from tiledb_mariadb_spark.reference_fixtures import TEST_DATA
 from tiledb_mariadb_spark.sources.tiledb_native import (
     NativeAttr,
     NativeDim,
@@ -22,9 +23,10 @@ from tiledb_mariadb_spark.sources.tiledb_native import (
     _schema_path,
 )
 
+from tests.conftest import needs_fixtures
 from .native_model import range_rows
 
-_FIX = "/root/reference/mysql-test/mytile/test_data"
+_FIX = TEST_DATA
 _OBS = f"{_FIX}/obs"
 _OBS_FRAG = (
     f"{_OBS}/__fragments/"
@@ -40,6 +42,7 @@ def _scan_stats(array_dir, col_idx):
     return min(vals), max(vals), sum(vals), len(vals)
 
 
+@needs_fixtures(_OBS)
 def test_footer_sections_parse_v19():
     schema = parse_array_schema(_schema_path(_OBS))
     sec = parse_footer_sections(
@@ -55,6 +58,7 @@ def test_footer_sections_parse_v19():
     assert len(sec["tile_min"]) == 12
 
 
+@needs_fixtures(_OBS)
 def test_fragment_stats_match_scan_recompute_obs():
     """The decoded fmmsn stats equal a full-scan recompute — including
     the float64 SUM's exact accumulation error."""
@@ -74,6 +78,7 @@ def test_fragment_stats_match_scan_recompute_obs():
     assert st["soma_joinid"] == {"sum": total}
 
 
+@needs_fixtures(_OBS)
 def test_absent_stats_are_absent_not_zero():
     """UTF-8 var strings get no min/max/sum; non-nullable fields get no
     null_count — the trust boundary exposes absence, never zero."""
@@ -84,6 +89,7 @@ def test_absent_stats_are_absent_not_zero():
     assert "null_count" not in st["cluster"]  # non-nullable
 
 
+@needs_fixtures(_OBS, _VAR)
 def test_array_level_stats_obs_and_var():
     st = attr_stats_native_array(_OBS)
     assert st["cluster"] == {"min": 0, "max": 9, "sum": 7764}
@@ -94,6 +100,7 @@ def test_array_level_stats_obs_and_var():
     assert attr_stats_native_array(_VAR)["soma_joinid"]["sum"] == total
 
 
+@needs_fixtures(_MA)
 def test_dense_array_stats_refused():
     """Dense reads materialize fill values the stats never saw — the
     metadata path must refuse, not approximate."""
@@ -126,6 +133,7 @@ def test_pre_v11_fragments_refused(tmp_path):
     assert attr_stats_native_array(d) is None
 
 
+@needs_fixtures(_OBS)
 def test_tile_stats_single_tile_equal_fragment_stats():
     """obs is a single capacity tile: the per-tile lists must collapse to
     the fragment-level values."""
@@ -142,6 +150,7 @@ def test_tile_stats_single_tile_equal_fragment_stats():
         )
 
 
+@needs_fixtures(_OBS)
 def test_tile_stats_absent_for_uncomputed_field():
     schema = parse_array_schema(_schema_path(_OBS))
     assert fragment_tile_stats(_OBS_FRAG, schema, "obs_id") is None
@@ -183,11 +192,10 @@ def test_empty_array_stats(tmp_path):
     assert attr_stats_native_array(d) == {}
 
 
-_TABULA = (
-    "/root/reference/mysql-test/mytile/test_data/tabula-sapiens-immune-var"
-)
+_TABULA = f"{_FIX}/tabula-sapiens-immune-var"
 
 
+@needs_fixtures(_TABULA)
 def test_fragment_refutes_conditions_soundness():
     from tiledb_mariadb_spark.sources.tiledb_native import (
         _fragment_dirs,
@@ -216,6 +224,7 @@ def test_fragment_refutes_conditions_soundness():
     )
 
 
+@needs_fixtures(_TABULA)
 def test_refuting_condition_decodes_zero_chunks(monkeypatch):
     """The range reader with a refuting prune condition must not touch a
     single data chunk of the fragment."""
@@ -242,6 +251,7 @@ def test_refuting_condition_decodes_zero_chunks(monkeypatch):
     assert calls["n"] == 0  # only metadata tiles were touched
 
 
+@needs_fixtures(_TABULA)
 def test_non_refuting_condition_reads_normally():
 
     names, rows = range_rows(
@@ -250,6 +260,7 @@ def test_non_refuting_condition_reads_normally():
     assert len(rows) == 4  # pruning is a skip proof, never a filter
 
 
+@needs_fixtures(_TABULA)
 def test_connector_prunes_via_conditions(spark):
     from tiledb_mariadb_spark.sources.tiledb_array import read_array
 

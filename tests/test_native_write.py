@@ -221,6 +221,13 @@ def test_metadata_untouched_by_write(tmp_path):
     assert read_array_metadata(d) == {}
 
 
+def test_metadata_of_missing_array_raises(tmp_path):
+    """A path with no array is an error, not an array without metadata:
+    only an existing array lacking __meta/ reads as {}."""
+    with pytest.raises(FileNotFoundError):
+        read_array_metadata(str(tmp_path / "no_such_array"))
+
+
 def test_zstd_fragment_pure_python_decode(tmp_path):
     """A fragment compressed with a REAL zstd encoder (fixed and var
     columns, several chunks) round-trips through the native decoder."""

@@ -5,6 +5,8 @@ active (SURVEY.md §4 parity table)."""
 
 from __future__ import annotations
 
+import warnings
+
 from tests.conftest import SF_DIR
 from tiledb_mariadb_spark.plans.audit import (
     codegen_stage_count,
@@ -195,8 +197,12 @@ def test_no_python_udf_in_any_plan(spark):
         "q279_stream_native_sink",  # streaming + native connector boundary
     }
     offenders = []
+    unaudited = []
     for name, spec in SPECS.items():
         if name in skip:
+            continue
+        if spec.missing_needs():  # reference fixtures absent: cannot run
+            unaudited.append(name)
             continue
         plan = formatted_plan(spec.spark(spark, SF_DIR))
         if "BatchEvalPython" in plan:
@@ -207,6 +213,12 @@ def test_no_python_udf_in_any_plan(spark):
             or "FlatMapGroupsInPandas" in plan
         ):
             offenders.append((name, "unexpected Arrow-Python stage"))
+    if unaudited:
+        warnings.warn(
+            f"plan audit left out {len(unaudited)} specs whose reference "
+            f"fixtures are not present: {', '.join(unaudited)}",
+            stacklevel=1,
+        )
     assert not offenders, offenders
 
 

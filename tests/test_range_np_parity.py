@@ -807,10 +807,11 @@ def test_zipped_coords_parity():
     and projections agree with the full read."""
     import os
 
-    d = ("/root/reference/mysql-test/mytile/test_data/"
-         "tiledb_arrays/1.6/quickstart_sparse")
+    from tiledb_mariadb_spark.reference_fixtures import TILEDB_ARRAYS
+
+    d = f"{TILEDB_ARRAYS}/1.6/quickstart_sparse"
     if not os.path.isdir(d):
-        pytest.skip("reference fixtures not present")
+        pytest.skip(f"reference fixture not present: {d}")
     _n, full = range_rows(d)
     assert full == sorted(full)
     _n, r1 = range_rows(d, ranges=[(1, 1), (None, None)])

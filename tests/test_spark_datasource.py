@@ -17,6 +17,7 @@ from pyspark.sql.datasource import (
     StringStartsWith,
 )
 
+from tiledb_mariadb_spark.reference_fixtures import TEST_DATA
 from tiledb_mariadb_spark.sources.spark_datasource import (
     TileDBNativeReader,
     register_tiledb_native,
@@ -26,6 +27,8 @@ from tiledb_mariadb_spark.sources.tiledb_native_write import (
     create_native_array,
     write_native_fragment,
 )
+
+from tests.conftest import needs_fixtures
 
 
 @pytest.fixture()
@@ -279,6 +282,10 @@ def test_all_null_split_keeps_schema(spark, tmp_path):
     assert rows == [(1, None), (2, None), (500, 7), (501, 8)]
 
 
+_TABULA = f"{TEST_DATA}/tabula-sapiens-immune-var"
+
+
+@needs_fixtures(_TABULA)
 def test_format_scan_enum_labels_and_stats_pruning(spark):
     """format("tiledb_native") over the reference's v21 tabula fixture:
     enumerated columns surface per the ENUM rules (oversized gene_symbol
@@ -286,11 +293,7 @@ def test_format_scan_enum_labels_and_stats_pruning(spark):
     refute prunes ALL data IO through the pushFilters -> conditions ->
     fragment_refutes_conditions chain."""
     register_tiledb_native(spark)
-    tab = (
-        "/root/reference/mysql-test/mytile/test_data/"
-        "tabula-sapiens-immune-var"
-    )
-    df = spark.read.format("tiledb_native").option("path", tab).load()
+    df = spark.read.format("tiledb_native").option("path", _TABULA).load()
     types = dict(
         (f.name, f.dataType.simpleString()) for f in df.schema.fields
     )

@@ -7,13 +7,20 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, needs_fixtures
 from tiledb_mariadb_spark.plans.oracle import compare
 from tiledb_mariadb_spark.suite import all_specs
 
 SPECS = all_specs()
-ORACLE_SPECS = [s for s in SPECS.values() if s.oracle is not None]
-ROWS_ONLY_SPECS = [s for s in SPECS.values() if s.oracle is None]
+
+
+def _params(specs):
+    """One param per spec, skipped where the fixtures it needs are absent."""
+    return [pytest.param(s, marks=needs_fixtures(*s.needs)) for s in specs]
+
+
+ORACLE_SPECS = _params(s for s in SPECS.values() if s.oracle is not None)
+ROWS_ONLY_SPECS = _params(s for s in SPECS.values() if s.oracle is None)
 
 
 @pytest.mark.parametrize("spec", ORACLE_SPECS, ids=lambda s: s.name)

@@ -6,15 +6,12 @@ reference's test queries from the reference's bytes, no libtiledb.
 
 from __future__ import annotations
 
-import os
+from tests.conftest import needs_fixtures
+from tiledb_mariadb_spark.reference_fixtures import TILEDB_ARRAYS
 
-import pytest
+FIXTURES = f"{TILEDB_ARRAYS}/1.6"
 
-FIXTURES = "/root/reference/mysql-test/mytile/test_data/tiledb_arrays/1.6"
-
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(FIXTURES), reason="reference fixtures not present"
-)
+pytestmark = needs_fixtures(FIXTURES)
 
 
 def test_dense_fixture_matches_mtr_golden():

@@ -17,6 +17,7 @@ import struct
 
 import pytest
 
+from tiledb_mariadb_spark.reference_fixtures import TILEDB_ARRAYS
 from tiledb_mariadb_spark.sources.tiledb_native import (
     native_to_dataframe,
     parse_array_schema,
@@ -24,15 +25,19 @@ from tiledb_mariadb_spark.sources.tiledb_native import (
     read_native_array,
 )
 
-R = "/root/reference/mysql-test/mytile/test_data/tiledb_arrays"
+from tests.conftest import needs_fixtures
+
+R = TILEDB_ARRAYS
 
 
+@needs_fixtures(f"{R}/2.0/string_dim")
 def test_string_dim_matches_mtr_golden():
     _, rows = read_native_array(f"{R}/2.0/string_dim")
     # r/string_dim.result: two fragments merged, newest wins
     assert rows == [("aa", 4), ("bb", 2), ("cc", 3), ("dddd", 1), ("jfk", 5)]
 
 
+@needs_fixtures(f"{R}/2.2/nullable_attributes")
 def test_nullable_attributes_matches_mtr_golden():
     s, rows = read_native_array(f"{R}/2.2/nullable_attributes")
     assert [a.name for a in s.attrs] == ["a2", "a1"]
@@ -51,6 +56,7 @@ def test_nullable_attributes_matches_mtr_golden():
     ]
 
 
+@needs_fixtures(f"{R}/1.7/metadata_array", f"{R}/1.6/quickstart_dense")
 def test_array_metadata_matches_mtr_golden():
     assert read_array_metadata(f"{R}/1.7/metadata_array") == {
         "key1": "25",
@@ -63,6 +69,7 @@ def test_array_metadata_matches_mtr_golden():
     assert read_array_metadata(f"{R}/1.6/quickstart_dense") == {}
 
 
+@needs_fixtures(f"{R}/var")
 def test_var_offsets_pipeline_matches_mtr_golden():
     s, rows = read_native_array(f"{R}/var")
     assert [a.name for a in s.attrs] == [
@@ -79,6 +86,7 @@ def test_var_offsets_pipeline_matches_mtr_golden():
     assert {r[0] for r in rows} == set(range(20082))
 
 
+@needs_fixtures(f"{R}/multi_attribute")
 def test_multi_attribute_matches_mtr_golden():
     s, rows = read_native_array(f"{R}/multi_attribute")
     assert [(a.name, a.cell_val_num) for a in s.attrs] == [
@@ -95,6 +103,7 @@ def test_multi_attribute_matches_mtr_golden():
     assert row_31[2] == [flt_max, p2]
 
 
+@needs_fixtures(f"{R}/2.0/bank")
 def test_bank_schema_blob_matches_show_create():
     # r/mrr.result SHOW CREATE TABLE bank: uint64 dim id 0..45211 extent
     # 11, string dim job, 16 attrs led by age bigint
@@ -110,6 +119,7 @@ def test_bank_schema_blob_matches_show_create():
     assert len(rows) == 45211 and rows[0][0] == 0
 
 
+@needs_fixtures(f"{R}/2.0/all_datetimes", f"{R}/2.0/datetime_dimensions")
 def test_datetime_fixture_schemas():
     s = parse_array_schema(f"{R}/2.0/all_datetimes/__array_schema.tdb")
     # the reference's 13 DATETIME resolutions (t/datetimes.test)
@@ -120,6 +130,11 @@ def test_datetime_fixture_schemas():
     assert len(drows[0]) == 14  # 13 datetime dims + char attr
 
 
+@needs_fixtures(
+    f"{R}/2.0/string_dim",
+    f"{R}/2.2/nullable_attributes",
+    f"{R}/var",
+)
 def test_native_to_dataframe_discovery(spark):
     # bare directory -> typed DataFrame, no caller schema (discovery)
     df = native_to_dataframe(spark, f"{R}/2.0/string_dim")
@@ -145,6 +160,7 @@ def test_unsupported_filter_fails_loudly():
         _reverse_pipeline([(18, b"")], [meta], b"abcd", 8)  # WEBP
 
 
+@needs_fixtures(f"{R}/2.0/bank")
 def test_connector_executes_on_reference_arrays(spark):
     """read_array() — the connector's distributed scan — now EXECUTES
     against the reference's own on-disk arrays via NativeDecoderBackend
@@ -165,6 +181,7 @@ def test_connector_executes_on_reference_arrays(spark):
     assert set(df.columns) == {"id", "job", "age"}
 
 
+@needs_fixtures(f"{R}/2.0/string_dim")
 def test_connector_open_at_on_reference_fragments(spark):
     """open_at parity on the reference's OWN committed fragments: the
     string_dim array has two fragments (ts 1588883067894 / 1588890540288);
@@ -311,6 +328,7 @@ def test_bwr_reverse_fuzz():
         assert got == words, f"trial {trial}"
 
 
+@needs_fixtures(f"{R}/2.0/bank")
 def test_connector_pushes_attribute_conditions(spark):
     """QueryCondition analog (t/query_conditions.test): attribute
     predicates evaluate inside the backend, before rows cross into
@@ -390,6 +408,7 @@ def test_dd_loop_fallback_matches_numpy():
     assert _dd_decode(enc, 8 * len(vals), 8) == _dd_decode_loop(enc)
 
 
+@needs_fixtures(f"{R}/1.6/test@/quickstart_dense")
 def test_at_sign_in_path_component(spark):
     """discovery.test's `1.6/test@/quickstart_dense` fixture: an '@' in a
     PATH component is part of the path, not the @ts/@metadata suffix —

@@ -529,7 +529,12 @@ def read_array_metadata(array_dir: str, at: int | None = None) -> dict:
     identical to fragments): an entry file is visible iff its WHOLE
     timestamp range is <= ``at`` — a consolidated metadata file
     spanning [t1, t2] is skipped when opening mid-range, falling back
-    to the original entries (kept until vacuum)."""
+    to the original entries (kept until vacuum).
+
+    Raises FileNotFoundError when ``array_dir`` does not exist; an
+    array without ``__meta/`` has no metadata and reads as ``{}``."""
+    if not os.path.isdir(array_dir):
+        raise FileNotFoundError(f"no array at {array_dir}")
     meta_dir = os.path.join(array_dir, "__meta")
     out: dict = {}
     if not os.path.isdir(meta_dir):

@@ -34,6 +34,7 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from tiledb_mariadb_spark.reference_fixtures import missing
 from tiledb_mariadb_spark.session import tune_for_oracle
 from tiledb_mariadb_spark.sources.registry import load_table
 
@@ -44,6 +45,12 @@ class QuerySpec:
     spark: Callable[[SparkSession, str], DataFrame]
     oracle: Optional[str]  # ANSI SQL for DuckDB; None → rows-only check
     doc: str = ""
+    # input directories the spec reads outside sf_dir (the reference
+    # fixtures); a spec whose needs are missing cannot run
+    needs: tuple[str, ...] = ()
+
+    def missing_needs(self) -> list[str]:
+        return missing(self.needs)
 
 
 # Decimal type wide enough for any sf0.1 sum (≤ ~6e11 with 10 frac digits).

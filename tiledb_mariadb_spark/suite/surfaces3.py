@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tiledb_mariadb_spark.reference_fixtures import TEST_DATA, TILEDB_ARRAYS
 from tiledb_mariadb_spark.suite import QuerySpec, ldf, t
 
 # --- q210: sentence splitting ----------------------------------------------
@@ -261,7 +262,7 @@ FROM s GROUP BY 1 ORDER BY grp
 # is the literal mtr golden output (r/pushdown_ranges.result).  Runs the
 # golden box query over the dense fixture and appends the sparse
 # fixture's cells.
-_FIXTURES = "/root/reference/mysql-test/mytile/test_data/tiledb_arrays/1.6"
+_FIXTURES = f"{TILEDB_ARRAYS}/1.6"
 
 
 def q258_reference_fixture(spark, sf_dir):
@@ -416,6 +417,10 @@ SPECS = [
         Q258_SQL,
         "reference repo's own TileDB arrays decoded natively; oracle = "
         "the literal mtr golden output",
+        needs=(
+            f"{_FIXTURES}/quickstart_dense",
+            f"{_FIXTURES}/quickstart_sparse",
+        ),
     ),
     QuerySpec(
         "q261_hetero_dims",
@@ -622,7 +627,7 @@ SPECS.append(
 # (multi_attribute, t/multi_value_fixed_length.test) and the 2.x
 # DOUBLE_DELTA + BIT_WIDTH_REDUCTION + ZSTD offsets pipeline (var/,
 # t/utf8_pushdown.test).  Oracles are the literal mtr goldens.
-_FIXROOT = "/root/reference/mysql-test/mytile/test_data/tiledb_arrays"
+_FIXROOT = TILEDB_ARRAYS
 
 
 def q265_native_fixtures(spark, sf_dir):
@@ -715,6 +720,11 @@ SPECS.append(
         Q265_SQL,
         "schema-blob discovery + string dims, validity, array metadata "
         "decoded from the reference's committed arrays; oracle = mtr goldens",
+        needs=(
+            f"{_FIXROOT}/2.0/string_dim",
+            f"{_FIXROOT}/2.2/nullable_attributes",
+            f"{_FIXROOT}/1.7/metadata_array",
+        ),
     )
 )
 SPECS.append(
@@ -724,6 +734,7 @@ SPECS.append(
         Q266_SQL,
         "DD+BWR+ZSTD offsets pipeline + multi-value cells from the "
         "reference's var/ and multi_attribute fixtures; oracle = mtr goldens",
+        needs=(f"{_FIXROOT}/var", f"{_FIXROOT}/multi_attribute"),
     )
 )
 
@@ -780,6 +791,7 @@ SPECS.append(
         Q267_SQL,
         "connector read_array on the reference's bank + string_dim arrays: "
         "dim-range split pruning and open_at between committed fragments",
+        needs=(f"{_FIXROOT}/2.0/bank", f"{_FIXROOT}/2.0/string_dim"),
     )
 )
 
@@ -850,6 +862,7 @@ SPECS.append(
         Q272_SQL,
         "aggregates.test + mrr.test self-join goldens over the natively "
         "decoded quickstart array",
+        needs=(f"{_FIXROOT}/1.6/quickstart_dense",),
     )
 )
 
@@ -1003,6 +1016,7 @@ SPECS.append(
         Q283_SQL,
         "all 13 DATETIME resolutions decoded natively and rendered "
         "byte-equal to the reference's data_types.result golden",
+        needs=(f"{_FIXROOT}/2.0/all_datetimes",),
     )
 )
 
@@ -2344,7 +2358,7 @@ def q302_native_attr_stats(spark, sf_dir):
         native_to_dataframe,
     )
 
-    obs = f"{_FIXROOT}/../obs"
+    obs = f"{TEST_DATA}/obs"
     st = attr_stats_native_array(obs)
     if st is None:  # metadata path failed — fail loudly, never scan
         raise AssertionError("v19 stats not provable from metadata")
@@ -2418,6 +2432,7 @@ SPECS.append(
         Q302_SQL,
         "fragment MIN/MAX/SUM from the v19 fmmsn metadata tile alone "
         "(zero data tiles), cross-checked against a full native scan",
+        needs=(f"{TEST_DATA}/obs",),
     )
 )
 
@@ -2433,7 +2448,7 @@ SPECS.append(
 def q303_native_enum(spark, sf_dir):
     from tiledb_mariadb_spark.sources.tiledb_array import read_array  # noqa: PLC0415
 
-    uri = f"{_FIXROOT}/../enum_array"
+    uri = f"{TEST_DATA}/enum_array"
     full = read_array(spark, uri).select(
         F.lit("full").alias("part"), "rows", "a0", "a1", "a2", "a3"
     )
@@ -2468,6 +2483,7 @@ SPECS.append(
         "v20 enumerations read as label columns through the connector: "
         "full scan, label-equality pushdown, dim range + label stacked "
         "(r/enum.result golden)",
+        needs=(f"{TEST_DATA}/enum_array",),
     )
 )
 
@@ -2488,7 +2504,7 @@ def q304_native_bio_scan(spark, sf_dir):
         count_native_array,
     )
 
-    uri = f"{_FIXROOT}/../tabula-sapiens-immune-var"
+    uri = f"{TEST_DATA}/tabula-sapiens-immune-var"
     st = attr_stats_native_array(uri)
     n = count_native_array(uri)
     if st is None or n is None:
@@ -2563,6 +2579,7 @@ SPECS.append(
         "v21 58k-row array: metadata-only aggregates vs a full connector "
         "scan (independent paths over the same bytes) plus a pushed tail "
         "range; oversize-enum typing in effect",
+        needs=(f"{TEST_DATA}/tabula-sapiens-immune-var",),
     )
 )
 
@@ -2715,7 +2732,7 @@ def q306_soma_matrix(spark, sf_dir):
         read_native_array,
     )
 
-    uri = f"{_FIXROOT}/../data"
+    uri = f"{TEST_DATA}/data"
     st = attr_stats_native_array(uri)
     n = count_native_array(uri)
     meta = [
@@ -2821,6 +2838,7 @@ SPECS.append(
         "4.1M-cell SOMA X matrix: metadata stats + footer COUNT + a full "
         "decode of the one committed coordinate column agreeing with the "
         "engine-written sums; missing LFS-stripped files fail loudly",
+        needs=(f"{TEST_DATA}/data",),
     )
 )
 
