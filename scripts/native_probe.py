@@ -38,40 +38,42 @@ def main() -> int:
     print("| cells | write | narrow-100 | COUNT | est | full |")
     print("|---|---|---|---|---|---|")
     for n in sizes:
-        d = tempfile.mkdtemp(prefix="native_probe_") + "/arr"
-        create_native_array(
-            d,
-            dims=[NativeDim("k", 1, 1, (0, 10**9), None)],
-            attrs=[NativeAttr("v", 1, 1, False, None)],
-            capacity=10_000,
-        )
-        t0 = time.time()
-        write_native_fragment(
-            d, {"k": list(range(n)), "v": list(range(n))}, ts=10
-        )
-        tw = time.time() - t0
-        t0 = time.time()
-        _names, cols = read_native_array_range_np(
-            d, ranges=[(n // 2, n // 2 + 99)]
-        )
-        tn = time.time() - t0
-        assert len(cols["k"]) == 100
-        t0 = time.time()
-        c = count_native_array(d)
-        tc = time.time() - t0
-        assert c == n
-        t0 = time.time()
-        e = estimate_range_cells(d, ranges=[(0, n // 10)])
-        te = time.time() - t0
-        assert e is not None and e >= n // 10
-        t0 = time.time()
-        _names, allc = read_native_array_range_np(d)
-        tf = time.time() - t0
-        assert len(allc["k"]) == n
-        print(
-            f"| {n} | {tw:.2f} s | {tn * 1000:.0f} ms | {tc * 1000:.1f} ms"
-            f" | {te * 1000:.1f} ms | {tf:.2f} s |"
-        )
+        # removed with everything under it, even when a step fails
+        with tempfile.TemporaryDirectory(prefix="native_probe_") as tmp:
+            d = tmp + "/arr"
+            create_native_array(
+                d,
+                dims=[NativeDim("k", 1, 1, (0, 10**9), None)],
+                attrs=[NativeAttr("v", 1, 1, False, None)],
+                capacity=10_000,
+            )
+            t0 = time.time()
+            write_native_fragment(
+                d, {"k": list(range(n)), "v": list(range(n))}, ts=10
+            )
+            tw = time.time() - t0
+            t0 = time.time()
+            _names, cols = read_native_array_range_np(
+                d, ranges=[(n // 2, n // 2 + 99)]
+            )
+            tn = time.time() - t0
+            assert len(cols["k"]) == 100
+            t0 = time.time()
+            c = count_native_array(d)
+            tc = time.time() - t0
+            assert c == n
+            t0 = time.time()
+            e = estimate_range_cells(d, ranges=[(0, n // 10)])
+            te = time.time() - t0
+            assert e is not None and e >= n // 10
+            t0 = time.time()
+            _names, allc = read_native_array_range_np(d)
+            tf = time.time() - t0
+            assert len(allc["k"]) == n
+            print(
+                f"| {n} | {tw:.2f} s | {tn * 1000:.0f} ms | {tc * 1000:.1f} ms"
+                f" | {te * 1000:.1f} ms | {tf:.2f} s |"
+            )
 
     # v11+ attribute-stats probe on the reference's largest modern array:
     # metadata-only MIN/MAX/SUM + refutation pruning vs a full decode of

@@ -19,8 +19,10 @@ from tiledb_mariadb_spark.sources.tiledb_native import (
     NativeAttr,
     NativeDim,
     _SPAN_STATS,
+    _field_cells,
+    _field_file,
     _fragment_dirs,
-    _read_field,
+    _np_field,
     fragment_overlaps,
     parse_array_schema,
     parse_fragment_footer,
@@ -37,6 +39,13 @@ from tests.conftest import needs_fixtures
 from .native_model import range_rows
 
 FIXROOT = TILEDB_ARRAYS
+
+
+def _column(frag, schema, d, i):
+    """Every cell of dim ``d`` (index ``i``) of ``frag`` as python
+    values."""
+    n = _field_cells(_field_file(frag, d.name, i, "d"), d)
+    return _np_field(frag, schema, d, i, "d", 0, n).tolist()
 
 
 def _fixture_fragments():
@@ -77,7 +86,7 @@ def test_fixture_footers_never_narrower_than_truth():
             if dom is None:
                 continue  # var dim: untrusted by design
             try:
-                col = _read_field(frag, schema, d, i, "d")
+                col = _column(frag, schema, d, i)
             except Exception:  # noqa: BLE001
                 continue
             if not col:
@@ -302,7 +311,7 @@ def test_count_is_metadata_only(tmp_path, monkeypatch):
     def boom(*_a, **_k):
         raise AssertionError("tile decode reached from count path")
 
-    monkeypatch.setattr(tn, "_read_field", boom)
+    monkeypatch.setattr(tn, "read_byte_span", boom)
     monkeypatch.setattr(tn, "read_tile_file", boom)
     monkeypatch.setattr(tn, "read_native_array", boom)
     monkeypatch.setattr(tn, "read_native_array_range_np", boom)
@@ -404,7 +413,7 @@ def test_fixture_rtrees_never_narrower_than_truth():
                 assert all(m[i] is None for m in mbrs)
                 continue
             try:
-                coords = _read_field(frag, schema, d, i, "d")
+                coords = _column(frag, schema, d, i)
             except FileNotFoundError:
                 continue  # 1.6 zipped-coords fragments: no per-dim file
             for k, m in enumerate(mbrs):
@@ -582,7 +591,7 @@ def test_explain_native_pruning(tmp_path):
         raise AssertionError("tile decode reached from explain path")
 
     orig = {n: getattr(tn, n) for n in
-            ("_read_field", "read_tile_file", "read_native_array",
+            ("read_byte_span", "read_tile_file", "read_native_array",
              "read_native_array_range_np")}
     try:
         for n in orig:

@@ -23,7 +23,18 @@ from tiledb_mariadb_spark.sources.tiledb_native_write import (
 from .native_model import range_rows
 
 
-def _mk(tmp_path, name="garr", capacity=50, dups=False):
+# float, var-string and enumerated attrs (``rich`` arrays): float sums
+# of quarter-multiples are exact in any order; string and label extrema
+# follow python ordering; labels are not in ordinal order
+_RICH = [
+    NativeAttr("f", 3, 1, False, None),
+    NativeAttr("s", 12, 0xFFFFFFFF, False, None),
+    NativeAttr("e", 6, 1, False, None, enumeration="colors"),
+]
+_LABELS = ["zebra", "apple", "mango", "kiwi"]
+
+
+def _mk(tmp_path, name="garr", capacity=50, dups=False, rich=False):
     uri = str(tmp_path / name)
     create_native_array(
         uri,
@@ -34,25 +45,32 @@ def _mk(tmp_path, name="garr", capacity=50, dups=False):
         attrs=[
             NativeAttr("v", 1, 1, False, None),
             NativeAttr("w", 1, 1, True, None),
+            *(_RICH if rich else []),
         ],
         capacity=capacity,
         allows_dups=dups,
+        **({"enumerations": {"colors": _LABELS}} if rich else {}),
     )
     return uri
 
 
-def _write_cells(uri, cells, seed=0, ts=None):
+def _write_cells(uri, cells, seed=0, ts=None, rich=False):
     rng = random.Random(seed)
+    cols = {
+        "x": [c[0] for c in cells],
+        "y": [c[1] for c in cells],
+        "v": [rng.randrange(-500, 500) for _ in cells],
+        "w": [None if rng.random() < 0.25 else rng.randrange(100)
+              for _ in cells],
+    }
+    if rich:
+        cols["f"] = [rng.randrange(-1000, 1000) * 0.25 for _ in cells]
+        cols["s"] = [f"t{rng.randrange(40):02d}" for _ in cells]
+        cols["e"] = [rng.randrange(1, len(_LABELS) + 1) for _ in cells]
     write_native_fragment(
         uri,
-        {
-            "x": [c[0] for c in cells],
-            "y": [c[1] for c in cells],
-            "v": [rng.randrange(-500, 500) for _ in cells],
-            "w": [None if rng.random() < 0.25 else rng.randrange(100)
-                  for _ in cells],
-        },
-        version=19,
+        cols,
+        version=20 if rich else 19,
         **({"ts": ts} if ts is not None else {}),
     )
 
@@ -78,12 +96,13 @@ def _expected(uri, wx, wy, col, window_x=None):
     return out
 
 
-def _check(uri, wx, wy, window_x=None):
+def _check(uri, wx, wy, window_x=None, cols=("v", "w")):
     kw = {"ranges": {"x": window_x}} if window_x else {}
-    res = grid_agg_native(uri, {"x": wx, "y": wy}, fields=["v", "w"],
+    res = grid_agg_native(uri, {"x": wx, "y": wy}, fields=list(cols),
                           **kw)
     assert res is not None
-    for col in ("v", "w"):
+    for col in cols:
+        summable = col in ("v", "w", "f")
         exp = _expected(uri, wx, wy, col, window_x=window_x)
         assert sorted(res["buckets"]) == sorted(exp), (wx, wy, window_x)
         for b, e in exp.items():
@@ -91,7 +110,9 @@ def _check(uri, wx, wy, window_x=None):
             s = got["fields"][col]
             assert got["count"] == e["rows"], (col, b)
             assert s["count"] == e["count"]
-            assert s["sum"] == (sum(e["vals"]) if e["vals"] else None)
+            assert s["sum"] == (
+                sum(e["vals"]) if e["vals"] and summable else None
+            )
             assert s["min"] == (min(e["vals"]) if e["vals"] else None)
             assert s["max"] == (max(e["vals"]) if e["vals"] else None)
             if col == "w":
@@ -101,21 +122,70 @@ def _check(uri, wx, wy, window_x=None):
 
 def test_grid_parity_fuzz(tmp_path):
     """Random 2-D point sets x grid widths == brute force, including a
-    1-D grid (y free) and a windowed cube."""
+    1-D grid (y free) and a windowed cube, over int, nullable int,
+    float, var-string and enumerated attrs."""
     rng = random.Random(21)
-    uri = _mk(tmp_path)
+    uri = _mk(tmp_path, rich=True)
     cells = sorted({(rng.randrange(0, 400), rng.randrange(0, 400))
                     for _ in range(1500)})
-    _write_cells(uri, cells, seed=1)
+    _write_cells(uri, cells, seed=1, rich=True)
+    cols = ("v", "w", "f", "s", "e")
     for wx, wy in ((100, 100), (64, 37), (400, 13), (7, 7)):
-        _check(uri, wx, wy)
-    _check(uri, 100, 100, window_x=(50, 250))
+        _check(uri, wx, wy, cols=cols)
+    _check(uri, 100, 100, window_x=(50, 250), cols=cols)
     # 1-D grid on a 2-D array: y rides free
     res = grid_agg_native(uri, {"x": 100}, fields=["v"])
     exp = _expected(uri, 100, 10**9, "v")
     assert sorted(res["buckets"]) == sorted(
         {(b[0],) for b in exp}
     )
+
+
+def test_1d_grid_keys_are_tuples_on_dense_and_sparse(tmp_path):
+    """A 1-D grid keys its buckets by 1-tuples on a dense array as on a
+    sparse one, with the same buckets and counts."""
+    dense = str(tmp_path / "dense1")
+    sparse = str(tmp_path / "sparse1")
+    for uri, kw in ((dense, {"array_type": "DENSE"}), (sparse, {})):
+        create_native_array(
+            uri,
+            dims=[NativeDim("k", 1, 1, (0, 59), 10)],
+            attrs=[NativeAttr("v", 1, 1, False, None)],
+            **kw,
+        )
+    write_native_fragment(dense, {"v": list(range(60))},
+                          subarray=[(0, 59)], version=19)
+    write_native_fragment(sparse, {"k": list(range(60)),
+                                   "v": list(range(60))}, version=19)
+    got = {}
+    for uri in (dense, sparse):
+        res = grid_agg_native(uri, {"k": 20})
+        assert list(res["buckets"]) == [(0,), (1,), (2,)], uri
+        got[uri] = {b: (r["count"], r["fields"]["v"]["sum"])
+                    for b, r in res["buckets"].items()}
+    assert got[dense] == got[sparse]
+
+
+def test_string_dim_grid_raises_value_error(tmp_path):
+    """A string dimension has no bucket arithmetic: gridding it is bad
+    input (ValueError, which the SQL bridge turns into a scan
+    fallback), raised before any fragment is read."""
+    from tiledb_mariadb_spark.sources.tiledb_native_agg import (
+        bucketed_agg_native,
+    )
+
+    uri = str(tmp_path / "sdim")
+    create_native_array(
+        uri,
+        dims=[NativeDim("name", 12, 0xFFFFFFFF, None, None)],
+        attrs=[NativeAttr("v", 1, 1, False, None)],
+    )
+    write_native_fragment(uri, {"name": ["a", "b", "c"], "v": [1, 2, 3]},
+                          version=19)
+    with pytest.raises(ValueError, match="string dimension"):
+        bucketed_agg_native(uri, 10)
+    with pytest.raises(ValueError, match="string dimension"):
+        grid_agg_native(uri, {"name": 10})
 
 
 def test_clustered_layout_serves_from_stats(tmp_path):
@@ -170,12 +240,10 @@ def test_trust_rules_and_validation(tmp_path):
 
 
 def test_vectorized_run_fold_matches_loop(tmp_path):
-    """The numpy run-fold (r9: _decode_run_vec) must be value- and
-    audit-identical to the exact per-tile loop.  fields=['v'] engages
-    the vectorized path (pure-int straddlers); fields=['v','w'] refuses
-    it (w carries Nones) and replays the same tiles through the loop —
-    the 'v' results of both calls must match bit for bit, and both must
-    match brute force."""
+    """Folding a field must not depend on which other fields ride the
+    same decode: fields=['v'] (pure-int straddlers) and fields=['v','w']
+    (w carries Nones) fold the same tiles, so the 'v' results of both
+    calls must match bit for bit, and both must match brute force."""
     rng = random.Random(77)
     uri = _mk(tmp_path, capacity=50)
     # scattered points: with wx=wy=13 nearly every tile straddles
@@ -201,9 +269,8 @@ def test_vectorized_run_fold_matches_loop(tmp_path):
 
 
 def test_vectorized_run_fold_overflow_refusal(tmp_path):
-    """Values big enough that an int64 group sum could overflow must be
-    refused by the vectorized gate and still fold exactly through the
-    python-int loop."""
+    """Values big enough that an int64 group sum could overflow must
+    still sum exactly (python ints past the int64 bound)."""
     uri = str(tmp_path / "big")
     create_native_array(
         uri,

@@ -218,8 +218,10 @@ def test_out_of_range_ordinals_raise(tmp_path, dense, ordinal):
     import shutil
 
     from tiledb_mariadb_spark.sources.tiledb_native import (
-        _read_field,
+        _field_cells,
+        _field_file,
         _fragment_dirs,
+        _np_field,
         read_native_array_range_np,
     )
 
@@ -256,5 +258,7 @@ def test_out_of_range_ordinals_raise(tmp_path, dense, ordinal):
         read_native_array(d)
     schema = parse_array_schema(_schema_path(d))
     frag = _fragment_dirs(d)[0]
+    a = schema.attrs[0]
+    n = _field_cells(_field_file(frag, a.name, 0, "a"), a)
     with pytest.raises(ValueError, match="ordinal out of range"):
-        _read_field(frag, schema, schema.attrs[0], 0, "a")
+        _np_field(frag, schema, a, 0, "a", 0, n).tolist()

@@ -231,18 +231,14 @@ def test_refuting_condition_decodes_zero_chunks(monkeypatch):
     import tiledb_mariadb_spark.sources.tiledb_native as tn
 
     calls = {"n": 0}
-    orig_f, orig_s = tn._read_field, tn._read_field_span
+    orig = tn.read_byte_span
 
-    def count_f(*a, **k):
+    def count(*a, **k):
         calls["n"] += 1
-        return orig_f(*a, **k)
+        return orig(*a, **k)
 
-    def count_s(*a, **k):
-        calls["n"] += 1
-        return orig_s(*a, **k)
-
-    monkeypatch.setattr(tn, "_read_field", count_f)
-    monkeypatch.setattr(tn, "_read_field_span", count_s)
+    # every data-chunk decode of the range reader goes through it
+    monkeypatch.setattr(tn, "read_byte_span", count)
     names, rows = range_rows(
         _TABULA, [(None, None)],
         prune_conditions=[("gene_symbol", ">", 99999)],

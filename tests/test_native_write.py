@@ -458,7 +458,7 @@ def test_sparse_writes_land_in_global_order(tmp_path):
     coordinate chunks are monotone."""
     from tiledb_mariadb_spark.sources.tiledb_native import (
         _fragment_dirs,
-        _read_field,
+        _np_field,
     )
 
     d = _mk_sparse(tmp_path)
@@ -475,8 +475,12 @@ def test_sparse_writes_land_in_global_order(tmp_path):
     )
     schema = parse_array_schema(_schema_path(d))
     frag = _fragment_dirs(d)[0]
-    assert _read_field(frag, schema, schema.dims[0], 0, "d") == [1, 5, 9]
-    assert _read_field(frag, schema, schema.attrs[0], 0, "a") == [10, 20, 30]
+    assert _np_field(
+        frag, schema, schema.dims[0], 0, "d", 0, 3
+    ).tolist() == [1, 5, 9]
+    assert _np_field(
+        frag, schema, schema.attrs[0], 0, "a", 0, 3
+    ).tolist() == [10, 20, 30]
     _s, rows = read_native_array(d)
     assert [r[:2] for r in rows] == [(1, 10), (5, 20), (9, 30)]
 
@@ -797,8 +801,8 @@ def test_col_major_cell_order_native(tmp_path):
     dim tuple (last dim slowest... first dim fastest within), layout id
     1 in the schema blob; reads stay coordinate-exact."""
     from tiledb_mariadb_spark.sources.tiledb_native import (
+        _np_field,
         read_native_array,
-        _read_field,
     )
 
     d = str(tmp_path / "colmajor")
@@ -823,7 +827,7 @@ def test_col_major_cell_order_native(tmp_path):
     # on-disk order: y-major (y slowest? no — reversed tuple sort means
     # y is the PRIMARY sort key)
     frag = _fragment_dirs(d)[0]
-    ys = _read_field(frag, schema, schema.dims[1], 1, "d")
+    ys = _np_field(frag, schema, schema.dims[1], 1, "d", 0, 16).tolist()
     assert ys == sorted(ys)
     _s, rows = read_native_array(d)
     assert rows == sorted(pts)

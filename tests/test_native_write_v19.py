@@ -157,13 +157,13 @@ def test_v19_connector_prunes_refuted_fragment(spark, tmp_path, monkeypatch):
         ts=2000, version=19,
     )
     touched = set()
-    orig = tn._read_field_span
+    orig = tn._np_field
 
     def spy(frag, *a, **k):
         touched.add(os.path.basename(frag))
         return orig(frag, *a, **k)
 
-    monkeypatch.setattr(tn, "_read_field_span", spy)
+    monkeypatch.setattr(tn, "_np_field", spy)
     df = read_array(spark, d, columns=["k", "v"],
                     conditions=[("v", ">=", 50)])
     got = sorted((r["k"], r["v"]) for r in df.collect())

@@ -171,6 +171,47 @@ def test_stream_source_incremental_batches(spark, tmp_path):
     assert got == [(1, 10), (2, 20), (3, 30)]
 
 
+def test_stream_source_reads_evolved_attr_as_fill(tmp_path):
+    """A fragment written before an attr was evolved in streams that
+    attr as its fill (NULL when nullable), exactly as the batch read
+    returns it — the stream source must not demand a data file the
+    fragment never had."""
+    import struct as _struct
+
+    from tiledb_mariadb_spark.sources.spark_datasource import (
+        TileDBNativeStreamReader,
+    )
+    from tiledb_mariadb_spark.sources.tiledb_native import read_native_array
+    from tiledb_mariadb_spark.sources.tiledb_native_write import (
+        evolve_native_schema,
+    )
+
+    uri = str(tmp_path / "evo")
+    create_native_array(
+        uri,
+        dims=[NativeDim("k", 1, 1, (0, 10**6), None)],
+        attrs=[NativeAttr("v", 1, 1, False, None)],
+    )
+    write_native_fragment(uri, {"k": [1, 2], "v": [10, 20]}, ts=100)
+    evolve_native_schema(
+        uri,
+        add_attrs=[
+            NativeAttr("w", 1, 1, True, None),
+            NativeAttr("z", 1, 1, False, _struct.pack("<q", -7)),
+        ],
+        ts=150,
+    )
+    write_native_fragment(
+        uri, {"k": [3], "v": [30], "w": [5], "z": [6]}, ts=200
+    )
+    reader = TileDBNativeStreamReader(uri, ["k", "w", "v", "z"])
+    rows, _end = reader.read({"frags": []})
+    expect = [(1, None, 10, -7), (2, None, 20, -7), (3, 5, 30, 6)]
+    assert sorted(rows) == expect
+    _s, batch = read_native_array(uri)
+    assert sorted((r[0], r[2], r[1], r[3]) for r in batch) == expect
+
+
 def test_stream_sink_lands_fragments(spark, tmp_path):
     register_tiledb_native(spark)
     root = str(tmp_path)

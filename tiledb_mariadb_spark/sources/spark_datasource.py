@@ -447,14 +447,18 @@ class TileDBNativeStreamReader(SimpleDataSourceStreamReader):
     def _rows_of(self, frag_names: list) -> Iterator:
         """Rows of exactly the named fragments (each decoded in
         isolation — fragments are immutable, so a batch's content never
-        changes on replay)."""
+        changes on replay).  Only the requested columns decode; an attr
+        evolved in after a fragment was written reads as its fill, as
+        in the batch read."""
         import os  # noqa: PLC0415
 
         from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
+            _field_cells,
+            _field_file,
             _fragment_dirs,
-            parse_array_schema,
-            _read_field,
+            _np_field,
             _schema_path,
+            parse_array_schema,
         )
 
         if not frag_names:
@@ -467,20 +471,20 @@ class TileDBNativeStreamReader(SimpleDataSourceStreamReader):
             open_encryption(self.uri, self.encryption_key)
         wanted = set(frag_names)
         schema = parse_array_schema(_schema_path(self.uri))
-        names = [d.name for d in schema.dims] + [a.name for a in schema.attrs]
-        idx = [names.index(c) for c in self.columns]
+        by_name = {d.name: ("d", i, d) for i, d in enumerate(schema.dims)}
+        by_name.update(
+            {a.name: ("a", i, a) for i, a in enumerate(schema.attrs)}
+        )
+        d0 = schema.dims[0]
         for f in _fragment_dirs(self.uri):
             if os.path.basename(f) not in wanted:
                 continue
+            n = _field_cells(_field_file(f, d0.name, 0, "d"), d0)
             cols = [
-                _read_field(f, schema, d, i, "d")
-                for i, d in enumerate(schema.dims)
-            ] + [
-                _read_field(f, schema, a, i, "a")
-                for i, a in enumerate(schema.attrs)
+                _np_field(f, schema, fld, i, kind, 0, n).tolist()
+                for kind, i, fld in (by_name[c] for c in self.columns)
             ]
-            for row in zip(*cols):
-                yield tuple(row[j] for j in idx)
+            yield from zip(*cols)
 
     def initialOffset(self) -> dict:
         return {"frags": []}

@@ -25,11 +25,14 @@ array directory opens with no caller schema at all, and handles generic
 tiles, array metadata, validity, var-length offsets pipelines
 (DD+BWR+ZSTD), multi-fragment newest-wins merge, v11+ fragment
 attribute stats (metadata-only MIN/MAX/SUM/NULL_COUNT + refutation
-pruning) and enumeration label mapping.  Every read of a bare array
-goes through ONE columnar reader, ``read_native_array_range_np``: each
-field decodes into its own column (MyTile's per-field buffers of data,
-offsets and validity), and ``read_native_array`` is a row view of those
-columns.  Write support lives in the sibling
+pruning) and enumeration label mapping.  Every field of a bare array
+decodes through ONE columnar field decoder, ``_np_field`` (cells
+[lo, hi) of one dim/attr, touching only the covering chunks — MyTile's
+per-field buffers of data, offsets and validity): the range reader
+``read_native_array_range_np`` (of which ``read_native_array`` is a row
+view), the metadata aggregates' boundary-tile decode
+(``tiledb_native_agg``) and the streaming source all use it.  Write
+support lives in the sibling
 module ``tiledb_native_write`` (round 4): it emits fragments + schema
 blobs this decoder reads back byte-exact.
 """
@@ -1438,9 +1441,9 @@ def _fill_value(attr):
 
 def _enum_fill_label(schema: "NativeSchema", attr):
     """The LABEL an evolved-in ENUMERATED attribute reads as on
-    pre-evolution fragments: the fill ordinal pushed through
-    :func:`_apply_enumeration` (None for nullable, '' for ordinal 0),
-    computed once for a whole fill column."""
+    pre-evolution fragments: the fill ordinal mapped to its label by the
+    convention :func:`_np_field` reads with (None for nullable, '' for
+    ordinal 0), computed once for a whole fill column."""
     fill = _fill_value(attr)
     if fill is None:
         return None
@@ -1452,104 +1455,6 @@ def _enum_fill_label(schema: "NativeSchema", attr):
             f"enumeration ordinal out of range for {attr.name}"
         )
     return labels[fill - 1]
-
-
-def _read_field(frag: str, schema: "NativeSchema", field, idx: int,
-                kind: str, n_cells: int | None = None) -> list:
-    """Decode one dim/attr column of a fragment into python values:
-    var-length (offsets + _var bytes), fixed multi-value (lists), and
-    nullable (validity tile) cells.  Each tile kind is decoded through
-    ITS schema-declared pipeline: the field's own filters for data, the
-    array-level offsets pipeline for offsets, the validity pipeline for
-    validity — matching how TileDB assigns pipelines.
-
-    An attribute with NO data file in this fragment was evolved in AFTER
-    the fragment was written: it reads as its fill value (``n_cells``
-    fills, when the caller knows the count)."""
-    try:
-        base = _field_file(frag, field.name, idx, kind)
-    except FileNotFoundError:
-        if kind == "a" and n_cells is not None:
-            # through the enum map: an evolved-in ENUM attr fills with
-            # the fill ordinal's LABEL, never a raw int
-            return _apply_enumeration(
-                schema, field, [_fill_value(field)] * n_cells
-            )
-        raise
-    dtype_id, cvn = field.dtype_id, field.cell_val_num
-    _, _, elem = _DT[dtype_id]
-    nullable = getattr(field, "nullable", False)
-    if cvn == 0xFFFFFFFF:
-        offs = _typed_cells(
-            read_tile_file(base, filters=schema.offsets_filters, elem=8), 10
-        )
-        var = read_tile_file(
-            base[:-4] + "_var.tdb", filters=field.filters, elem=elem,
-            var=True,
-        )
-        bounds = [int(o) for o in offs] + [len(var)]
-        blobs = [var[bounds[i] : bounds[i + 1]] for i in range(len(offs))]
-        if dtype_id in _TEXT_CODEC:
-            _cdc = _TEXT_CODEC[dtype_id]
-            vals = [b.decode(_cdc, errors="replace") for b in blobs]
-        elif dtype_id in (39, 41):  # var blob / WKB geometry: raw bytes
-            vals = [bytes(b) for b in blobs]
-        else:
-            vals = [_typed_cells(b, dtype_id) for b in blobs]
-    else:
-        raw_fixed = read_tile_file(base, filters=field.filters, elem=elem)
-        flat = _typed_cells(raw_fixed, dtype_id)
-        if dtype_id in _TEXT_CODEC:
-            cb = cvn * _DT[dtype_id][2]  # code units x unit width
-            vals = [
-                raw_fixed[i : i + cb].decode(
-                    _TEXT_CODEC[dtype_id], errors="replace"
-                )
-                for i in range(0, len(raw_fixed), cb)
-            ]
-        elif cvn != 1:
-            vals = [flat[i : i + cvn] for i in range(0, len(flat), cvn)]
-        else:
-            vals = flat
-    if nullable:
-        validity = read_tile_file(
-            base[:-4] + "_validity.tdb",
-            rle_value_size=1,
-            filters=schema.validity_filters,
-            elem=1,
-        )
-        vals = [v if validity[i] else None for i, v in enumerate(vals)]
-    return _apply_enumeration(schema, field, vals)
-
-
-def _apply_enumeration(schema: "NativeSchema", field, vals: list) -> list:
-    """Map an enumerated attribute's stored ordinals to its labels
-    (t/enum.test: `a0` reads back 'ee'/'ff'/…, never raw ints).  The
-    on-disk convention is the one the reference WRITES (ha_mytile stores
-    the MariaDB ENUM ordinal): 1-based, with 0 = the empty string —
-    pinned by the enum_array fixture, whose row 10 stores 1 and reads
-    back the FIRST label 'ee' in r/enum.result.  Only VAR string-label
-    enumerations are registered (see NativeSchema); an out-of-range
-    ordinal (negative, past the last label, or not an integer) is
-    corruption and fails loudly."""
-    labels = (
-        schema.enumerations.get(getattr(field, "enumeration", None) or "")
-        if schema.enumerations
-        else None
-    )
-    if not labels:
-        return vals
-    out = []
-    for v in vals:
-        if v is None or v == 0:
-            out.append(None if v is None else "")
-        elif isinstance(v, int) and 1 <= v <= len(labels):
-            out.append(labels[v - 1])
-        else:
-            raise ValueError(
-                f"enumeration ordinal out of range for {field.name}"
-            )
-    return out
 
 
 def _dense_fragment_box(frag: str, schema: NativeSchema):
@@ -1713,96 +1618,6 @@ def read_byte_span(
             out += dec[max(0, lo - cpos) : hi - cpos]
             cpos += orig
     return bytes(out)
-
-
-def _fixed_vals(raw: bytes, dtype_id: int, cvn: int) -> list:
-    """Shared fixed-width raw-bytes -> python-values conversion
-    (scalar, fixed char, fixed multi-value)."""
-    flat = _typed_cells(raw, dtype_id)
-    if dtype_id in _TEXT_CODEC:
-        cb = cvn * _DT[dtype_id][2]  # code units x unit width
-        return [
-            raw[i : i + cb].decode(_TEXT_CODEC[dtype_id], errors="replace")
-            for i in range(0, len(raw), cb)
-        ]
-    if cvn != 1:
-        return [flat[i : i + cvn] for i in range(0, len(flat), cvn)]
-    return flat
-
-
-def _read_field_span(
-    frag: str,
-    schema: "NativeSchema",
-    field,
-    idx: int,
-    kind: str,
-    lo_cell: int,
-    hi_cell: int,
-    n_cells: int,
-) -> list:
-    """Decode cells [lo_cell, hi_cell) of one field, touching only the
-    chunks that cover the span (var-length: offsets span + the var byte
-    range those offsets address).  Attrs evolved in after this fragment
-    was written (no data file) read as fills."""
-    try:
-        base = _field_file(frag, field.name, idx, kind)
-    except FileNotFoundError:
-        if kind == "a":
-            # through the enum map: an evolved-in ENUM attr fills with
-            # the fill ordinal's LABEL, never a raw int
-            return _apply_enumeration(
-                schema, field,
-                [_fill_value(field)] * (hi_cell - lo_cell),
-            )
-        raise
-    dtype_id, cvn = field.dtype_id, field.cell_val_num
-    _, _, elem = _DT[dtype_id]
-    if cvn == 0xFFFFFFFF:
-        offs_raw = read_byte_span(
-            base, lo_cell * 8, hi_cell * 8,
-            filters=schema.offsets_filters, elem=8,
-        )
-        offs = [int(o) for o in struct.unpack(f"<{len(offs_raw) // 8}Q", offs_raw)]
-        var_file = base[:-4] + "_var.tdb"
-        if hi_cell < n_cells:
-            (end,) = struct.unpack(
-                "<Q",
-                read_byte_span(
-                    base, hi_cell * 8, (hi_cell + 1) * 8,
-                    filters=schema.offsets_filters, elem=8,
-                ),
-            )
-            end = int(end)
-        else:
-            end = file_decoded_size(var_file)
-        start = offs[0] if offs else 0
-        var = read_byte_span(
-            var_file, start, end, filters=field.filters, elem=elem,
-            var=True,
-        )
-        bounds = [o - start for o in offs] + [end - start]
-        blobs = [var[bounds[i] : bounds[i + 1]] for i in range(len(offs))]
-        if dtype_id in _TEXT_CODEC:
-            _cdc = _TEXT_CODEC[dtype_id]
-            vals = [b.decode(_cdc, errors="replace") for b in blobs]
-        elif dtype_id in (39, 41):  # var blob / WKB geometry: raw bytes
-            vals = [bytes(b) for b in blobs]
-        else:
-            vals = [_typed_cells(b, dtype_id) for b in blobs]
-    else:
-        cell_bytes = elem * (cvn if cvn != 0xFFFFFFFF else 1)
-        raw = read_byte_span(
-            base, lo_cell * cell_bytes, hi_cell * cell_bytes,
-            filters=field.filters, elem=elem,
-        )
-        vals = _fixed_vals(raw, dtype_id, cvn)
-    if getattr(field, "nullable", False):
-        validity = read_byte_span(
-            base[:-4] + "_validity.tdb", lo_cell, hi_cell,
-            rle_value_size=1, filters=schema.validity_filters, elem=1,
-        )
-        vals = [v if validity[i] else None for i, v in enumerate(vals)]
-    return _apply_enumeration(schema, field, vals)
 
 
 class _SortedCellView:
@@ -1994,8 +1809,11 @@ def _np_field(frag: str, schema: "NativeSchema", field, idx: int,
     the span — the one columnar field decoder.  Non-nullable scalar
     numeric fields come back typed (see _NP_DT); everything else as an
     OBJECT column: text (_np_text), bytes, python lists for fixed
-    multi-value and var numeric cells, enumeration labels (1-based
-    ordinals, 0 = '' — see :func:`_apply_enumeration`), None for NULL.
+    multi-value and var numeric cells, enumeration labels, None for
+    NULL.  Enumeration ordinals follow the convention the reference
+    WRITES (ha_mytile stores the MariaDB ENUM ordinal): 1-based, with
+    0 = the empty string — pinned by the enum_array fixture, whose row
+    10 stores 1 and reads back the FIRST label 'ee' in r/enum.result.
     An attr with no data file in this fragment was evolved in later and
     reads as its fill.  A span past the end of a file (torn fragment)
     and an out-of-range enumeration ordinal raise ValueError."""

@@ -14,7 +14,10 @@ that design on the repo's native decoder:
 costs O(footers + boundary tiles), not O(window cells).  At 100 TB with
 10k-cell tiles a month-window SUM reads the fragment footers plus at most
 two partial tiles per straddling fragment — the interior 99.9% of the
-window never leaves object storage.
+window never leaves object storage.  The windowed, bucketed (GROUP BY
+floor(dim0/width)) and grid (GROUP BY floor(x/wx), floor(y/wy), ...)
+sparse rollups are one core, :func:`_sparse_rollup`: a windowed
+aggregate is the grid rollup over no gridded dims.
 
 Soundness contract (sound-or-None, mirroring ``attr_stats_native_array``
 and ``count_native_array``): a metadata-backed number is returned only
@@ -23,26 +26,33 @@ array, no visible delete conditions, pairwise-disjoint fragment NEDs
 unless the array allows duplicates (engine-written fragments are
 sorted-unique within themselves, the same trust ``count_native_array``
 extends).  Anything the metadata cannot prove for a tile is answered by
-decoding that tile exactly (via the O(span) chunk reader), never guessed;
-if the trust rules fail, the whole call returns None and the caller falls
-back to a distributed scan.
+decoding that tile exactly (via the O(span) columnar decoder
+``_np_field``), never guessed; if the trust rules fail, the whole call
+returns None and the caller falls back to a distributed scan.
 
-Float SUM caveat (inherent to the design, same as libtiledb): tile sums
-are accumulated per tile then folded across tiles, so a float64 SUM may
-differ from a flat cell-order scan by reassociation.  Integer sums are
-exact (python arbitrary precision in the fold).
+Float SUM: stats-served tiles add their stored tile sums and decoded
+cells add one at a time in cell order, per bucket — so a float64 SUM is
+the sequential fold of tile sums and cells, and may differ from a flat
+cell-order scan only by the reassociation inside each stats-served tile
+(same as libtiledb).  Integer sums are exact (python arbitrary precision
+once int64 could overflow).
 """
 
 from __future__ import annotations
 
+import functools
+import operator
 import os
 
 from tiledb_mariadb_spark.sources.tiledb_native import (
+    _NP_DT,
     _SUMMABLE_DT,
+    _TEXT_CODEC,
     _delete_conditions,
     _fragment_dirs,
     _neds_pairwise_disjoint,
-    _read_field_span,
+    _np_field,
+    _np_obj_scalar,
     _schema_path,
     fragment_tile_stats,
     parse_array_schema,
@@ -80,15 +90,345 @@ def _fold_minmax(acc, lo, hi):
 
 
 def _coalesce_runs(tiles, cap, n_cells):
-    """Sorted tile indexes -> contiguous [lo_cell, hi_cell) runs."""
+    """Sorted (tile index, masked) pairs -> [lo_cell, hi_cell, masked]
+    runs of consecutive tiles that share ``masked``."""
     runs = []
-    for k in tiles:
+    for k, masked in tiles:
         lo_c, hi_c = k * cap, min((k + 1) * cap, n_cells)
-        if runs and runs[-1][1] == lo_c:
+        if runs and runs[-1][1] == lo_c and runs[-1][2] == masked:
             runs[-1][1] = hi_c
         else:
-            runs.append([lo_c, hi_c])
+            runs.append([lo_c, hi_c, masked])
     return runs
+
+
+def _summable(fld) -> bool:
+    """SUM is reported only for single-value summable numeric fields
+    (int/float families), exactly the dtypes fragment-metadata sums
+    cover; an enumerated attr reads as labels and never sums."""
+    return (
+        fld.cell_val_num == 1
+        and fld.dtype_id in _SUMMABLE_DT
+        and not getattr(fld, "enumeration", None)
+    )
+
+
+def _facc_new():
+    return {"count": 0, "null_count": 0, "sum": 0,
+            "minmax": [None, None], "minmax_ok": True,
+            "saw_nonnull": False}
+
+
+def _fold_column(segs, col, fld, want_sum, want_mm):
+    """Fold one decoded column (an ``_np_field`` column) into the
+    accumulators of ``segs``: (acc, start, end) triples splitting the
+    column into contiguous per-bucket segments, cell order kept within
+    each.  The values equal a python loop over the cells: integer sums
+    exact (python ints once int64 could overflow), float sums added one
+    cell at a time in cell order (bit-identical), float extrema as
+    python's ``<`` fold (a leading NaN sticks, later ones never win),
+    python ordering for string/bytes/list extrema — a TypeError there
+    yields min/max None.  Numeric columns fold in numpy (float sums
+    aside); python loops over segments, not cells."""
+    import numpy as np  # noqa: PLC0415
+
+    summable = _summable(fld)
+    if col.dtype == object:
+        lst = col.tolist()
+        if not summable:  # text, bytes, lists, labels: python ordering
+            for acc, s, e in segs:
+                nn = [v for v in lst[s:e] if v is not None]
+                acc["null_count"] += e - s - len(nn)
+                if not nn:
+                    continue
+                acc["count"] += len(nn)
+                acc["saw_nonnull"] = True
+                if want_mm and acc["minmax_ok"]:
+                    try:
+                        _fold_minmax(acc["minmax"], min(nn), max(nn))
+                    except TypeError:
+                        acc["minmax_ok"] = False
+            return
+        # nullable numeric: count the NULLs, fold the rest typed
+        valid = np.fromiter((v is not None for v in lst), bool, len(lst))
+        cut = np.concatenate(([0], np.cumsum(valid))).tolist()
+        for acc, s, e in segs:
+            acc["null_count"] += e - s - (cut[e] - cut[s])
+        segs = [(acc, cut[s], cut[e]) for acc, s, e in segs]
+        col = np.array([v for v in lst if v is not None], _NP_DT[fld.dtype_id])
+    segs = [sg for sg in segs if sg[2] > sg[1]]
+    if not segs:
+        return
+    for acc, s, e in segs:
+        acc["count"] += e - s
+        acc["saw_nonnull"] = True
+    # live segments still tile the whole column, as reduceat requires
+    starts = [s for _acc, s, _e in segs]
+    is_float = col.dtype.kind == "f"
+    if want_sum and summable:
+        if is_float:
+            vals = col.tolist()
+            for acc, s, e in segs:
+                acc["sum"] = functools.reduce(
+                    operator.add, vals[s:e], acc["sum"]
+                )
+        elif max(-int(col.min()), int(col.max())) * len(col) < 2**63:
+            sums = np.add.reduceat(col.astype(np.int64), starts).tolist()
+            for (acc, _s, _e), v in zip(segs, sums):
+                acc["sum"] += v
+        else:
+            vals = col.tolist()
+            for acc, s, e in segs:
+                acc["sum"] += sum(vals[s:e])
+    if not want_mm:
+        return
+    lo_fn, hi_fn = (np.fmin, np.fmax) if is_float else (np.minimum, np.maximum)
+    firsts = col[starts].tolist()
+    los = lo_fn.reduceat(col, starts).tolist()
+    his = hi_fn.reduceat(col, starts).tolist()
+    for (acc, _s, _e), first, lo, hi in zip(segs, firsts, los, his):
+        if acc["minmax_ok"]:
+            # the first cell seeds an empty accumulator as python's fold
+            # does; fmin/fmax then fold the rest ignoring NaN, as ``<``
+            _fold_minmax(acc["minmax"], first, first)
+            _fold_minmax(acc["minmax"], lo, hi)
+
+
+def _sparse_rollup(array_dir, schema, gridded, ranges, fields, at, since,
+                   stats):
+    """The one sparse rollup core behind :func:`windowed_agg_native`,
+    :func:`bucketed_agg_native` and :func:`grid_agg_native`: COUNT(*)
+    and per-field (count, null_count, sum, min, max) per bucket over the
+    cells inside ``ranges``.  A bucket key is the tuple of
+    ``floor(coord / width)`` over ``gridded`` ((dim index, width) pairs
+    in schema dim order); with no gridded dims every cell lands in the
+    one bucket ``()``, which is always present.
+
+    One footer walk: the trust rules, then per fragment each R-tree
+    leaf MBR classifies its tile — outside the window (skipped), inside
+    the window and one bucket (folded from tile stats, unread), or an
+    edge tile straddling a window edge or a grid line (decoded through
+    ``_np_field``, masked and bucketed in numpy).  Returns ``(buckets,
+    audit)`` with ``buckets`` sorted by key, each ``{"count": n,
+    "fields": {...}}``, or None when the trust rules fail."""
+    import numpy as np  # noqa: PLC0415
+
+    dim_names = [d.name for d in schema.dims]
+    ranges = dict(ranges or {})
+    for name in ranges:
+        if name not in dim_names:
+            raise ValueError(f"range on non-dimension {name!r}")
+    rngs = [tuple(ranges.get(n, (None, None))) for n in dim_names]
+    ranged = [(i, r) for i, r in enumerate(rngs) if r != (None, None)]
+    by_name = {d.name: ("d", i, d) for i, d in enumerate(schema.dims)}
+    by_name.update(
+        {a.name: ("a", i, a) for i, a in enumerate(schema.attrs)}
+    )
+    if fields is None:
+        fields = [a.name for a in schema.attrs]
+    for f in fields:
+        if f not in by_name:
+            raise ValueError(f"unknown field {f!r}")
+
+    frags = _fragment_dirs(array_dir, at=at, since=since)
+    audit = {
+        "fragments": len(frags), "fragments_skipped": 0,
+        "tiles_total": 0, "tiles_contained": 0, "tiles_partial": 0,
+        "tiles_skipped": 0, "cells_decoded": 0,
+    }
+    if frags and _delete_conditions(array_dir, at, frags):
+        return None  # a .del could shadow cells the tile stats counted
+    footers = []
+    for frag in frags:
+        fm = os.path.join(frag, "__fragment_metadata.tdb")
+        ftr = parse_fragment_footer(fm, schema)
+        if ftr is None or ftr.dense:
+            return None
+        footers.append(ftr)
+    if len(frags) > 1 and not schema.allows_dups and not (
+        _neds_pairwise_disjoint(footers)
+    ):
+        return None  # newest-wins overwrites: per-fragment stats lie
+
+    want_mm = "min" in stats or "max" in stats
+    want_sum = "sum" in stats
+    counts = {} if gridded else {(): 0}
+    accs: dict = {}
+
+    def acc_of(b):
+        a = accs.get(b)
+        if a is None:
+            a = accs[b] = {f: _facc_new() for f in fields}
+        return a
+
+    def decode(frag, lo_c, hi_c, masked, flds, bucket=None):
+        """Exact fold of cells [lo_c, hi_c) of ``frag`` for ``flds``.
+        ``masked``: the run straddles the window — the ranged dims
+        decode and only in-window cells count.  ``bucket``: the run is
+        proved inside that bucket and the window (no dim decodes; the
+        caller counted its cells from tile capacities)."""
+        cols: dict = {}  # dim index -> decoded dim column
+        sel = None  # in-window cells of the (tightened) span
+        if masked and ranged:
+            inw = np.ones(hi_c - lo_c, dtype=bool)
+            for i, (lo, hi) in ranged:
+                col = cols[i] = _np_field(
+                    frag, schema, schema.dims[i], i, "d", lo_c, hi_c
+                )
+                audit["cells_decoded"] += hi_c - lo_c
+                if lo is not None:
+                    inw &= np.asarray(col >= _np_obj_scalar(lo), dtype=bool)
+                if hi is not None:
+                    inw &= np.asarray(col <= _np_obj_scalar(hi), dtype=bool)
+            hit = np.flatnonzero(inw)
+            if not len(hit):
+                return
+            # tighten the rest of the decode to the matched sub-span: a
+            # point query in a 10k-cell tile decodes ~1 attr cell, not
+            # 10k (the ranged dims already paid the locate cost)
+            first, last = int(hit[0]), int(hit[-1]) + 1
+            cols = {i: c[first:last] for i, c in cols.items()}
+            if len(hit) < last - first:
+                sel = hit - first
+            lo_c, hi_c = lo_c + first, lo_c + last
+
+        def column(kind, idx, fld):
+            col = cols.get(idx) if kind == "d" else None
+            if col is None:
+                col = _np_field(frag, schema, fld, idx, kind, lo_c, hi_c)
+                audit["cells_decoded"] += hi_c - lo_c
+                if kind == "d":
+                    cols[idx] = col
+            return col if sel is None else col[sel]
+
+        order = None
+        starts, keys = [0], [() if bucket is None else bucket]
+        if bucket is None and gridded:
+            comps = [column("d", i, schema.dims[i]) // w for i, w in gridded]
+            # cells grouped by bucket, cell order kept within a bucket
+            order = np.lexsort([np.arange(len(comps[0]))] + comps[::-1])
+            comps = [c[order] for c in comps]
+            brk = np.zeros(len(order), dtype=bool)
+            brk[0] = True
+            for c in comps:
+                brk[1:] |= c[1:] != c[:-1]
+            starts = np.flatnonzero(brk).tolist()
+            keys = list(zip(*(c[starts].tolist() for c in comps)))
+        ends = starts[1:] + [hi_c - lo_c if sel is None else len(sel)]
+        if bucket is None:
+            for b, s, e in zip(keys, starts, ends):
+                counts[b] = counts.get(b, 0) + e - s
+        for f in flds:
+            kind, idx, fld = by_name[f]
+            col = column(kind, idx, fld)
+            if order is not None:
+                col = col[order]
+            _fold_column(
+                [(acc_of(b)[f], s, e) for b, s, e in zip(keys, starts, ends)],
+                col, fld, want_sum, want_mm,
+            )
+
+    for frag, ftr in zip(frags, footers):
+        stn = ftr.sparse_tile_num
+        if stn == 0:
+            audit["fragments_skipped"] += 1
+            continue
+        cap, ltcn = schema.capacity, ftr.last_tile_cell_num
+        n_cells = (stn - 1) * cap + ltcn
+        audit["tiles_total"] += stn
+        contained: dict = {}  # bucket -> [tile index]
+        edge = []  # (tile index, straddles the window)
+        mbrs = parse_rtree_leaf_mbrs(frag, schema)
+        if mbrs is None or len(mbrs) != stn:
+            # no classifiable R-tree (legacy fragment): decode it whole
+            # with masking — exact, just not metadata-accelerated
+            edge = [(k, True) for k in range(stn)]
+        else:
+            for k, mbr in enumerate(mbrs):
+                cls = _classify_tile(mbr, rngs)
+                if cls == "skip":
+                    audit["tiles_skipped"] += 1
+                elif cls == "partial":
+                    edge.append((k, True))
+                else:
+                    b = tuple(mbr[i][0] // w for i, w in gridded)
+                    if b == tuple(mbr[i][1] // w for i, w in gridded):
+                        contained.setdefault(b, []).append(k)
+                    else:  # straddles a grid line
+                        edge.append((k, False))
+        audit["tiles_partial"] += len(edge)
+        for lo_c, hi_c, masked in _coalesce_runs(edge, cap, n_cells):
+            decode(frag, lo_c, hi_c, masked, fields)
+        if not contained:
+            continue
+        audit["tiles_contained"] += sum(map(len, contained.values()))
+
+        def _cells_of(k, stn=stn, cap=cap, ltcn=ltcn):
+            return cap if k < stn - 1 else ltcn
+
+        served, need_decode = {}, []
+        for f in fields:
+            fld = by_name[f][2]
+            ts = fragment_tile_stats(frag, schema, f)
+            mins = maxs = sums = nulls = None
+            if ts is not None and len(ts) == stn:
+                if ts[0][0] is not None:
+                    mins = [t[0] for t in ts]
+                    maxs = [t[1] for t in ts]
+                if ts[0][2] is not None:
+                    sums = [t[2] for t in ts]
+                if ts[0][3] is not None:
+                    nulls = [t[3] for t in ts]
+            # enum attrs: tile stats describe RAW ordinals, reads return
+            # LABELS — ordinal order is not label order, so min/max/sum
+            # must come from decode; counts are still ordinal-agnostic
+            enum = getattr(fld, "enumeration", None)
+            can_mm = mins is not None and not enum
+            add_sum = want_sum and _summable(fld)
+            if (
+                (nulls is not None or not getattr(fld, "nullable", False))
+                and (can_mm or not want_mm)
+                and (sums is not None or not add_sum)
+            ):
+                served[f] = (mins, maxs, sums, nulls, can_mm, add_sum)
+            else:
+                need_decode.append(f)
+        for b, tiles in contained.items():
+            counts[b] = counts.get(b, 0) + sum(map(_cells_of, tiles))
+            for f, (mins, maxs, sums, nulls, can_mm, add_sum) in (
+                served.items()
+            ):
+                acc = acc_of(b)[f]
+                for k in tiles:
+                    nc = nulls[k] if nulls is not None else 0
+                    nn = _cells_of(k) - nc
+                    acc["null_count"] += nc
+                    acc["count"] += nn
+                    if nn == 0:
+                        continue
+                    acc["saw_nonnull"] = True
+                    if add_sum:
+                        acc["sum"] += sums[k]
+                    if want_mm:
+                        if can_mm:
+                            _fold_minmax(acc["minmax"], mins[k], maxs[k])
+                        else:  # string/var field, counts-only request
+                            acc["minmax_ok"] = False
+            if need_decode:
+                for lo_c, hi_c, _m in _coalesce_runs(
+                    [(k, False) for k in tiles], cap, n_cells
+                ):
+                    decode(frag, lo_c, hi_c, False, need_decode, bucket=b)
+
+    flds = [by_name[f][2] for f in fields]
+    buckets = {}
+    for b in sorted(counts):
+        facc = accs.get(b) or {f: _facc_new() for f in fields}
+        buckets[b] = {
+            "count": counts[b],
+            "fields": _assemble_fields(flds, facc, stats),
+        }
+    return buckets, audit
 
 
 def windowed_agg_native(
@@ -115,276 +455,25 @@ def windowed_agg_native(
     boundary-exact decode (lexicographic, matching the read path).
 
     Returns None when the trust rules cannot prove the merged view
-    (deletes, dense, overlapping non-dup fragments, missing footer).
-    The ``audit`` key reports tile classification and decoded-cell
-    counts — the decode-poison tests pin interior tiles at zero reads.
+    (deletes, overlapping non-dup fragments, missing footer); a dense
+    array is answered by :func:`dense_windowed_agg_native`.  The
+    ``audit`` key reports tile classification and decoded-cell counts —
+    the decode-poison tests pin interior tiles at zero reads.
     """
     schema = parse_array_schema(_schema_path(array_dir))
     if schema.array_type == "DENSE":
-        # round 8: the dense twin — fragment stats + clipped-edge decode
-        # + fill arithmetic (fills ARE part of the dense read view)
+        # the dense twin — fragment stats + clipped-edge decode + fill
+        # arithmetic (fills ARE part of the dense read view)
         return dense_windowed_agg_native(
             array_dir, ranges, fields=fields, at=at, since=since,
             stats=stats,
         )
-    dim_names = [d.name for d in schema.dims]
-    ranges = dict(ranges or {})
-    for name in ranges:
-        if name not in dim_names:
-            raise ValueError(f"range on non-dimension {name!r}")
-    rngs = [tuple(ranges.get(n, (None, None))) for n in dim_names]
-
-    by_name = {d.name: ("d", i, d) for i, d in enumerate(schema.dims)}
-    by_name.update(
-        {a.name: ("a", i, a) for i, a in enumerate(schema.attrs)}
-    )
-    if fields is None:
-        fields = [a.name for a in schema.attrs]
-    for f in fields:
-        if f not in by_name:
-            raise ValueError(f"unknown field {f!r}")
-
-    frags = _fragment_dirs(array_dir, at=at, since=since)
-    audit = {
-        "fragments": len(frags), "fragments_skipped": 0,
-        "tiles_total": 0, "tiles_contained": 0, "tiles_partial": 0,
-        "tiles_skipped": 0, "cells_decoded": 0,
-    }
-    if frags and _delete_conditions(array_dir, at, frags):
-        return None  # a .del could shadow cells the tile stats counted
-
-    footers = []
-    for frag in frags:
-        fm = os.path.join(frag, "__fragment_metadata.tdb")
-        ftr = parse_fragment_footer(fm, schema)
-        if ftr is None or ftr.dense:
-            return None
-        footers.append(ftr)
-    if len(frags) > 1 and not schema.allows_dups and not (
-        _neds_pairwise_disjoint(footers)
-    ):
-        return None  # newest-wins overwrites: per-fragment stats lie
-
-    total = 0
-    facc = {
-        f: {"count": 0, "null_count": 0, "sum": 0,
-            "minmax": [None, None], "minmax_ok": True,
-            "saw_nonnull": False}
-        for f in fields
-    }
-
-    def _decode_runs(frag, runs, n_cells, flds, masked, count_cells):
-        """Exact aggregation of the cells in ``runs`` for ``flds``.
-        ``masked`` evaluates the dim ranges per cell (boundary tiles);
-        unmasked runs already proved containment.  ``count_cells`` adds
-        the in-window cells to the grand COUNT(*) (False when the
-        containment pass counted them from tile capacities)."""
-        nonlocal total
-        ranged = [
-            (i, d, rngs[i]) for i, d in enumerate(schema.dims)
-            if rngs[i] != (None, None)
-        ]
-        summable = {
-            f: by_name[f][2].cell_val_num == 1
-            and by_name[f][2].dtype_id in _SUMMABLE_DT
-            and not getattr(by_name[f][2], "enumeration", None)
-            for f in flds
-        }
-        for lo_c, hi_c in runs:
-            mask = None
-            if masked and ranged:
-                for i, d, (lo, hi) in ranged:
-                    vals = _read_field_span(
-                        frag, schema, d, i, "d", lo_c, hi_c, n_cells
-                    )
-                    m = [
-                        (lo is None or v >= lo) and (hi is None or v <= hi)
-                        for v in vals
-                    ]
-                    mask = m if mask is None else [
-                        a and b for a, b in zip(mask, m)
-                    ]
-                audit["cells_decoded"] += (hi_c - lo_c) * len(ranged)
-            n_in = (hi_c - lo_c) if mask is None else sum(mask)
-            if count_cells:
-                total += n_in
-            if n_in == 0:
-                continue
-            if mask is not None:
-                # tighten the attr decode to the matched sub-span: a
-                # point query in a 10k-cell tile decodes ~1 attr cell,
-                # not 10k (the dim columns already paid the locate cost)
-                first = mask.index(True)
-                last = len(mask) - 1 - mask[::-1].index(True)
-                mask = mask[first : last + 1]
-                lo_c, hi_c = lo_c + first, lo_c + last + 1
-                if all(mask):
-                    mask = None
-            for f in flds:
-                kind, idx, fld = by_name[f]
-                vals = _read_field_span(
-                    frag, schema, fld, idx, kind, lo_c, hi_c, n_cells
-                )
-                audit["cells_decoded"] += hi_c - lo_c
-                acc = facc[f]
-                can_sum = summable[f]
-                for j, v in enumerate(vals):
-                    if mask is not None and not mask[j]:
-                        continue
-                    if v is None:
-                        acc["null_count"] += 1
-                        continue
-                    acc["count"] += 1
-                    acc["saw_nonnull"] = True
-                    if can_sum:
-                        acc["sum"] += v
-                    if acc["minmax_ok"]:
-                        try:
-                            _fold_minmax(acc["minmax"], v, v)
-                        except TypeError:
-                            acc["minmax_ok"] = False
-
-    want_mm = "min" in stats or "max" in stats
-    want_sum = "sum" in stats
-
-    for frag, ftr in zip(frags, footers):
-        stn = ftr.sparse_tile_num
-        if stn == 0:
-            audit["fragments_skipped"] += 1
-            continue
-        cap = schema.capacity
-        n_cells = (stn - 1) * cap + ftr.last_tile_cell_num
-        mbrs = parse_rtree_leaf_mbrs(frag, schema)
-        if mbrs is None or len(mbrs) != stn:
-            # no classifiable R-tree (legacy fragment): decode it whole
-            # with masking — exact, just not metadata-accelerated
-            audit["tiles_total"] += stn
-            audit["tiles_partial"] += stn
-            _decode_runs(
-                frag, [[0, n_cells]], n_cells, fields,
-                masked=True, count_cells=True,
-            )
-            continue
-        contained, partial = [], []
-        audit["tiles_total"] += stn
-        for k, mbr in enumerate(mbrs):
-            cls = _classify_tile(mbr, rngs)
-            if cls == "skip":
-                audit["tiles_skipped"] += 1
-            elif cls == "contained":
-                contained.append(k)
-            else:
-                partial.append(k)
-        audit["tiles_partial"] += len(partial)
-        if partial:
-            _decode_runs(
-                frag, _coalesce_runs(partial, cap, n_cells),
-                n_cells, fields, masked=True, count_cells=True,
-            )
-        if not contained:
-            continue
-        audit["tiles_contained"] += len(contained)
-
-        def _cells_of(k, stn=stn, cap=cap, ltcn=ftr.last_tile_cell_num):
-            return cap if k < stn - 1 else ltcn
-
-        total += sum(_cells_of(k) for k in contained)
-        need_decode = []
-        for f in fields:
-            kind, idx, fld = by_name[f]
-            nullable = bool(getattr(fld, "nullable", False))
-            summable = (
-                fld.cell_val_num == 1
-                and fld.dtype_id in _SUMMABLE_DT
-                and not getattr(fld, "enumeration", None)
-            )
-            ts = fragment_tile_stats(frag, schema, f)
-            mins = maxs = sums = nulls = None
-            if ts is not None and len(ts) == stn:
-                if ts[0][0] is not None:
-                    mins = [t[0] for t in ts]
-                    maxs = [t[1] for t in ts]
-                if ts[0][2] is not None:
-                    sums = [t[2] for t in ts]
-                if ts[0][3] is not None:
-                    nulls = [t[3] for t in ts]
-            # enum attrs: tile stats describe RAW ordinals, reads return
-            # LABELS — ordinal order is not label order, so min/max/sum
-            # must come from decode; counts are still ordinal-agnostic
-            enum = getattr(fld, "enumeration", None)
-            can_count = (nulls is not None) or not nullable
-            can_mm = mins is not None and not enum
-            can_sum = sums is not None and not enum
-            ok = (
-                can_count
-                and (can_mm or not want_mm or not _mm_possible(fld))
-                and (can_sum or not want_sum or not summable)
-            )
-            if not ok:
-                need_decode.append(f)
-                continue
-            acc = facc[f]
-            for k in contained:
-                cells = _cells_of(k)
-                nc = nulls[k] if nulls is not None else 0
-                nn = cells - nc
-                acc["null_count"] += nc
-                acc["count"] += nn
-                if nn == 0:
-                    continue
-                acc["saw_nonnull"] = True
-                if can_sum and summable:
-                    acc["sum"] += sums[k]
-                if want_mm:
-                    if can_mm:
-                        _fold_minmax(acc["minmax"], mins[k], maxs[k])
-                    else:  # string/var field, counts-only request
-                        acc["minmax_ok"] = False
-        if need_decode:
-            _decode_runs(
-                frag, _coalesce_runs(contained, cap, n_cells),
-                n_cells, need_decode, masked=False, count_cells=False,
-            )
-
-    out_fields = {}
-    for f in fields:
-        acc = facc[f]
-        kind, idx, fld = by_name[f]
-        nullable = bool(getattr(fld, "nullable", False))
-        summable = (
-            fld.cell_val_num == 1
-            and fld.dtype_id in _SUMMABLE_DT
-            and not getattr(fld, "enumeration", None)
-        )
-        out_fields[f] = {
-            "count": acc["count"] if "count" in stats else None,
-            "null_count": (
-                acc["null_count"] if nullable and "null_count" in stats
-                else None
-            ),
-            "sum": (
-                acc["sum"]
-                if want_sum and summable and acc["saw_nonnull"]
-                else None
-            ),
-            "min": (
-                acc["minmax"][0]
-                if "min" in stats and acc["minmax_ok"] else None
-            ),
-            "max": (
-                acc["minmax"][1]
-                if "max" in stats and acc["minmax_ok"] else None
-            ),
-        }
-    return {"count": total, "fields": out_fields, "audit": audit}
-
-
-def _mm_possible(fld) -> bool:
-    """MIN/MAX is meaningful for single- and fixed-multi-value cells and
-    strings alike; only cells with no total order (multi-value numeric
-    tuples are python-orderable, so everything qualifies) are excluded.
-    Kept as a hook: today every field qualifies."""
-    return True
+    out = _sparse_rollup(array_dir, schema, [], ranges, fields, at, since,
+                         stats)
+    if out is None:
+        return None
+    buckets, audit = out
+    return {**buckets[()], "audit": audit}
 
 
 def grid_agg_native(
@@ -404,21 +493,23 @@ def grid_agg_native(
 
     ``widths`` maps dimension names to positive int cell widths; every
     named dim contributes one component of the tuple bucket key (in
-    schema dim order).  A tile whose MBR lies inside ONE grid cell on
-    every gridded dim contributes its tile stats unread; tiles
-    straddling any grid line decode per-cell.  ``ranges`` optionally
-    windows the cube exactly as in :func:`bucketed_agg_native`.
+    schema dim order), a 1-D grid included.  A tile whose MBR lies
+    inside ONE grid cell on every gridded dim contributes its tile stats
+    unread; tiles straddling any grid line decode per-cell.  ``ranges``
+    optionally windows the cube exactly as in
+    :func:`windowed_agg_native`.  A string dimension has no bucket
+    arithmetic: gridding one raises ValueError.
 
     With data ingested in space-tile or Hilbert order (the clustered
     2-D layout the writer supports), tile MBRs are small boxes, so a
     coarse grid serves almost entirely from stats — a 100 TB heatmap
     refresh is a footer walk.  Same sound-or-None trust rules as the
-    1-D rollup.  Returns ``{"buckets": {(bx, by, ...): {"count": n,
-    "fields": {...}}}, "audit": {...}}`` or None.
+    windowed aggregate.  Returns ``{"buckets": {(bx, by, ...): {"count":
+    n, "fields": {...}}}, "audit": {...}}`` or None.
     """
     schema = parse_array_schema(_schema_path(array_dir))
     if schema.array_type == "DENSE":
-        # round 8: the dense twin (fills included, every cell present)
+        # the dense twin (fills included, every cell present)
         return dense_grid_agg_native(
             array_dir, widths, fields=fields, at=at, since=since,
             stats=stats, ranges=ranges,
@@ -432,380 +523,28 @@ def grid_agg_native(
         if not isinstance(w, int) or w <= 0:
             raise ValueError(f"width must be a positive int, got {w!r}")
     gridded = [
-        (i, d, widths[d.name]) for i, d in enumerate(schema.dims)
+        (i, widths[d.name]) for i, d in enumerate(schema.dims)
         if d.name in widths
     ]
-    ranges = dict(ranges or {})
-    for name in ranges:
-        if name not in dim_names:
-            raise ValueError(f"range on non-dimension {name!r}")
-    rngs = [tuple(ranges.get(n, (None, None))) for n in dim_names]
-    ranged = [
-        (i, d, rngs[i]) for i, d in enumerate(schema.dims)
-        if rngs[i] != (None, None)
-    ]
-
-    by_name = {d.name: ("d", i, d) for i, d in enumerate(schema.dims)}
-    by_name.update(
-        {a.name: ("a", i, a) for i, a in enumerate(schema.attrs)}
-    )
-    if fields is None:
-        fields = [a.name for a in schema.attrs]
-    for f in fields:
-        if f not in by_name:
-            raise ValueError(f"unknown field {f!r}")
-
-    frags = _fragment_dirs(array_dir, at=at, since=since)
-    audit = {
-        "fragments": len(frags), "fragments_skipped": 0,
-        "tiles_total": 0, "tiles_contained": 0, "tiles_partial": 0,
-        "tiles_skipped": 0, "cells_decoded": 0,
-    }
-    if frags and _delete_conditions(array_dir, at, frags):
+    for i, _w in gridded:
+        d = schema.dims[i]
+        if d.is_var or d.dtype_id in _TEXT_CODEC:
+            raise ValueError(f"cannot bucket string dimension {d.name!r}")
+    out = _sparse_rollup(array_dir, schema, gridded, ranges, fields, at,
+                         since, stats)
+    if out is None:
         return None
-    footers = []
-    for frag in frags:
-        fm = os.path.join(frag, "__fragment_metadata.tdb")
-        ftr = parse_fragment_footer(fm, schema)
-        if ftr is None or ftr.dense:
-            return None
-        footers.append(ftr)
-    if len(frags) > 1 and not schema.allows_dups and not (
-        _neds_pairwise_disjoint(footers)
-    ):
-        return None
-
-    def _facc():
-        return {"count": 0, "null_count": 0, "sum": 0,
-                "minmax": [None, None], "minmax_ok": True,
-                "saw_nonnull": False}
-
-    btotal: dict = {}
-    bacc: dict = {}
-
-    def _acc(b, f):
-        per = bacc.setdefault(b, {})
-        a = per.get(f)
-        if a is None:
-            a = per[f] = _facc()
-        return a
-
-    want_mm = "min" in stats or "max" in stats
-    want_sum = "sum" in stats
-    summable_of = {
-        f: by_name[f][2].cell_val_num == 1
-        and by_name[f][2].dtype_id in _SUMMABLE_DT
-        and not getattr(by_name[f][2], "enumeration", None)
-        for f in fields
-    }
-
-    def _decode_tile(frag, k, cap, n_cells, flds, bucket=None,
-                     count_cells=True, masked=False):
-        lo_c, hi_c = k * cap, min((k + 1) * cap, n_cells)
-        mask = None
-        dim_vals: dict = {}
-        if masked and ranged:
-            for i, d, (lo, hi) in ranged:
-                vals = _read_field_span(
-                    frag, schema, d, i, "d", lo_c, hi_c, n_cells
-                )
-                dim_vals[i] = vals
-                m = [
-                    (lo is None or v >= lo) and (hi is None or v <= hi)
-                    for v in vals
-                ]
-                mask = m if mask is None else [
-                    a and b for a, b in zip(mask, m)
-                ]
-                audit["cells_decoded"] += hi_c - lo_c
-        bks = None
-        if bucket is None:
-            comps = []
-            for i, d, w in gridded:
-                vals = dim_vals.get(i)
-                if vals is None:
-                    vals = _read_field_span(
-                        frag, schema, d, i, "d", lo_c, hi_c, n_cells
-                    )
-                    audit["cells_decoded"] += hi_c - lo_c
-                comps.append([v // w for v in vals])
-            bks = list(zip(*comps))
-        if count_cells:
-            if bks is None:
-                btotal[bucket] = btotal.get(bucket, 0) + (hi_c - lo_c)
-            else:
-                for j, b in enumerate(bks):
-                    if mask is None or mask[j]:
-                        btotal[b] = btotal.get(b, 0) + 1
-        for f in flds:
-            kind, idx, fld = by_name[f]
-            vals = _read_field_span(
-                frag, schema, fld, idx, kind, lo_c, hi_c, n_cells
-            )
-            audit["cells_decoded"] += hi_c - lo_c
-            can_sum = summable_of[f]
-            for j, v in enumerate(vals):
-                if mask is not None and not mask[j]:
-                    continue
-                acc = _acc(bucket if bks is None else bks[j], f)
-                if v is None:
-                    acc["null_count"] += 1
-                    continue
-                acc["count"] += 1
-                acc["saw_nonnull"] = True
-                if can_sum:
-                    acc["sum"] += v
-                if acc["minmax_ok"]:
-                    try:
-                        _fold_minmax(acc["minmax"], v, v)
-                    except TypeError:
-                        acc["minmax_ok"] = False
-
-    def _decode_run_vec(frag, k_lo, k_hi, cap, n_cells):
-        """Vectorized decode+bin of tiles [k_lo, k_hi) — one span read
-        per field, numpy lexsort+reduceat per-bucket fold.  Engages only
-        for the unmasked all-int shape (no ranges; every gridded dim
-        and requested field decodes to an integer ndarray with no None,
-        enum label, or multi-value cell) and only when the int64 group
-        sums provably cannot overflow; anything else returns False and
-        the caller runs the exact per-tile python loop.  For the shapes
-        it accepts the fold is value-identical to that loop: integer
-        sums/min/max are order-independent, and cross-run accumulation
-        still happens in arbitrary-precision python ints."""
-        import numpy as np  # noqa: PLC0415
-
-        lo_c, hi_c = k_lo * cap, min(k_hi * cap, n_cells)
-        n = hi_c - lo_c
-        if n <= 0:
-            return True
-        comps = []
-        dim_arr: dict = {}
-        for i, d, w in gridded:
-            try:
-                arr = np.asarray(
-                    _read_field_span(
-                        frag, schema, d, i, "d", lo_c, hi_c, n_cells
-                    )
-                )
-            except OverflowError:
-                return False
-            if arr.dtype.kind not in "iu" or arr.shape != (n,):
-                return False
-            dim_arr[d.name] = arr
-            # int64 floor division matches python // for any sign
-            comps.append(arr.astype(np.int64, copy=False) // w)
-        fld_arr: dict = {}
-        for f in fields:
-            kind, idx, fld = by_name[f]
-            arr = dim_arr.get(f) if kind == "d" else None
-            if arr is None:
-                try:
-                    arr = np.asarray(
-                        _read_field_span(
-                            frag, schema, fld, idx, kind, lo_c, hi_c,
-                            n_cells,
-                        )
-                    )
-                except OverflowError:
-                    return False
-            if arr.dtype.kind not in "iu" or arr.shape != (n,):
-                return False
-            if summable_of[f]:
-                hi = max(abs(int(arr.min())), abs(int(arr.max())))
-                if hi and n > (2**62) // hi:  # group sum could overflow
-                    return False
-            fld_arr[f] = arr.astype(np.int64, copy=False)
-        audit["cells_decoded"] += n * (len(gridded) + len(fields))
-        order = np.lexsort(tuple(reversed(comps)))
-        stacked = [c[order] for c in comps]
-        starts = np.flatnonzero(
-            np.concatenate((
-                [True],
-                np.any(
-                    [s[1:] != s[:-1] for s in stacked], axis=0,
-                ),
-            ))
-        )
-        counts = np.diff(np.append(starts, n))
-        keys = [tuple(int(s[j]) for s in stacked) for j in starts]
-        for b, c in zip(keys, counts):
-            btotal[b] = btotal.get(b, 0) + int(c)
-        for f, arr in fld_arr.items():
-            srt = arr[order]
-            can_sum = summable_of[f]
-            sums = np.add.reduceat(srt, starts) if can_sum else None
-            mns = np.minimum.reduceat(srt, starts)
-            mxs = np.maximum.reduceat(srt, starts)
-            for j, b in enumerate(keys):
-                acc = _acc(b, f)
-                acc["count"] += int(counts[j])
-                acc["saw_nonnull"] = True
-                if can_sum:
-                    acc["sum"] += int(sums[j])
-                if acc["minmax_ok"]:
-                    _fold_minmax(acc["minmax"], int(mns[j]), int(mxs[j]))
-        return True
-    for frag, ftr in zip(frags, footers):
-        stn = ftr.sparse_tile_num
-        if stn == 0:
-            audit["fragments_skipped"] += 1
-            continue
-        cap = schema.capacity
-        n_cells = (stn - 1) * cap + ftr.last_tile_cell_num
-        audit["tiles_total"] += stn
-        mbrs = parse_rtree_leaf_mbrs(frag, schema)
-        if mbrs is None or len(mbrs) != stn:
-            audit["tiles_partial"] += stn
-            if ranged or not _decode_run_vec(frag, 0, stn, cap, n_cells):
-                for k in range(stn):
-                    _decode_tile(frag, k, cap, n_cells, fields,
-                                 masked=bool(ranged))
-            continue
-        contained: dict = {}  # cell tuple -> [tile index]
-        edge = []
-        for k, mbr in enumerate(mbrs):
-            wcls = _classify_tile(mbr, rngs) if ranged else "contained"
-            if wcls == "skip":
-                audit["tiles_skipped"] += 1
-                continue
-            if wcls == "partial":
-                edge.append((k, True))
-                continue
-            cell = []
-            for i, d, w in gridded:
-                dom = mbr[i]
-                if dom is None:
-                    cell = None
-                    break
-                try:
-                    c_lo, c_hi = dom[0] // w, dom[1] // w
-                except TypeError:
-                    cell = None
-                    break
-                if c_lo != c_hi:
-                    cell = None
-                    break
-                cell.append(c_lo)
-            if cell is None:
-                edge.append((k, False))
-            else:
-                contained.setdefault(tuple(cell), []).append(k)
-        audit["tiles_partial"] += len(edge)
-        audit["tiles_contained"] += sum(len(v) for v in contained.values())
-        if not ranged and edge:
-            # batch consecutive unmasked edge tiles into vectorized
-            # runs; a run the helper refuses (non-int shape, possible
-            # overflow) replays through the exact per-tile loop —
-            # _decode_run_vec gates BEFORE touching any accumulator,
-            # so refusal never leaves partial state for its run
-            ks = [k for k, _m in edge]
-            runs, r_lo, prev = [], ks[0], ks[0]
-            for k in ks[1:]:
-                if k == prev + 1:
-                    prev = k
-                    continue
-                runs.append((r_lo, prev + 1))
-                r_lo = prev = k
-            runs.append((r_lo, prev + 1))
-            for lo, hi in runs:
-                if not _decode_run_vec(frag, lo, hi, cap, n_cells):
-                    for k in range(lo, hi):
-                        _decode_tile(frag, k, cap, n_cells, fields)
-        else:
-            for k, need_mask in edge:
-                _decode_tile(frag, k, cap, n_cells, fields,
-                             masked=need_mask)
-        if not contained:
-            continue
-
-        def _cells_of(k, stn=stn, cap=cap, ltcn=ftr.last_tile_cell_num):
-            return cap if k < stn - 1 else ltcn
-
-        field_stats, need_decode = {}, []
-        for f in fields:
-            kind, idx, fld = by_name[f]
-            nullable = bool(getattr(fld, "nullable", False))
-            ts = fragment_tile_stats(frag, schema, f)
-            mins = maxs = sums = nulls = None
-            if ts is not None and len(ts) == stn:
-                if ts[0][0] is not None:
-                    mins = [t[0] for t in ts]
-                    maxs = [t[1] for t in ts]
-                if ts[0][2] is not None:
-                    sums = [t[2] for t in ts]
-                if ts[0][3] is not None:
-                    nulls = [t[3] for t in ts]
-            enum = getattr(fld, "enumeration", None)
-            can_count = (nulls is not None) or not nullable
-            can_mm = mins is not None and not enum
-            can_sum = sums is not None and not enum
-            ok = (
-                can_count
-                and (can_mm or not want_mm or not _mm_possible(fld))
-                and (can_sum or not want_sum or not summable_of[f])
-            )
-            if not ok:
-                need_decode.append(f)
-                continue
-            field_stats[f] = (mins, maxs, sums, nulls, can_mm, can_sum)
-        for b, tiles in contained.items():
-            btotal[b] = btotal.get(b, 0) + sum(_cells_of(k) for k in tiles)
-            for f, (mins, maxs, sums, nulls, can_mm, can_sum) in (
-                field_stats.items()
-            ):
-                acc = _acc(b, f)
-                for k in tiles:
-                    cells = _cells_of(k)
-                    nc = nulls[k] if nulls is not None else 0
-                    nn = cells - nc
-                    acc["null_count"] += nc
-                    acc["count"] += nn
-                    if nn == 0:
-                        continue
-                    acc["saw_nonnull"] = True
-                    if can_sum and summable_of[f]:
-                        acc["sum"] += sums[k]
-                    if want_mm:
-                        if can_mm:
-                            _fold_minmax(acc["minmax"], mins[k], maxs[k])
-                        else:
-                            acc["minmax_ok"] = False
-            for f in need_decode:
-                for k in tiles:
-                    _decode_tile(
-                        frag, k, cap, n_cells, [f],
-                        bucket=b, count_cells=False,
-                    )
-
-    buckets = {}
-    for b in sorted(btotal):
-        fo = {}
-        for f in fields:
-            acc = bacc.get(b, {}).get(f) or _facc()
-            kind, idx, fld = by_name[f]
-            nullable = bool(getattr(fld, "nullable", False))
-            fo[f] = {
-                "count": acc["count"] if "count" in stats else None,
-                "null_count": (
-                    acc["null_count"]
-                    if nullable and "null_count" in stats else None
-                ),
-                "sum": (
-                    acc["sum"]
-                    if want_sum and summable_of[f] and acc["saw_nonnull"]
-                    else None
-                ),
-                "min": (
-                    acc["minmax"][0]
-                    if "min" in stats and acc["minmax_ok"] else None
-                ),
-                "max": (
-                    acc["minmax"][1]
-                    if "max" in stats and acc["minmax_ok"] else None
-                ),
-            }
-        buckets[b] = {"count": btotal[b], "fields": fo}
+    buckets, audit = out
     return {"buckets": buckets, "audit": audit}
+
+
+def _dim0_rollup(grid_fn, array_dir, width, **kw):
+    """``grid_fn`` over dim0 alone, with its 1-tuple keys unwrapped."""
+    dim0 = parse_array_schema(_schema_path(array_dir)).dims[0].name
+    res = grid_fn(array_dir, {dim0: width}, **kw)
+    if res is not None:
+        res["buckets"] = {b[0]: v for b, v in res["buckets"].items()}
+    return res
 
 
 def bucketed_agg_native(
@@ -830,16 +569,13 @@ def bucketed_agg_native(
     bucket assignment).  With tile extent aligned to the bucket grid —
     the natural time-partitioned ingest — straddlers are ~one per
     fragment per bucket boundary, so a 100 TB daily-rollup refresh
-    costs footers + edge tiles, not the corpus.
+    costs footers + edge tiles, not the corpus.  It is
+    :func:`grid_agg_native` on dim0 with scalar bucket keys.
 
-    Bucket ids use python floor division (``v // width``), matching SQL
+    Bucket ids use floor division (``v // width``), matching SQL
     FLOOR(v / width) for positive ``width`` on any-sign coordinates.
-    Buckets with no cells are absent (sparse GROUP BY semantics).
-
-    Same sound-or-None trust rules as ``windowed_agg_native``; the same
-    per-field availability rules decide stats-vs-decode, and a dim0
-    whose MBRs are untrusted (var/string) degrades every tile to decode
-    — still exact, just not metadata-accelerated.
+    Buckets with no cells are absent (sparse GROUP BY semantics).  A
+    string dim0 has no bucket arithmetic and raises ValueError.
 
     ``ranges`` (optional, dict dim name -> inclusive (lo, hi)) windows
     the rollup exactly as in ``windowed_agg_native``: only cells inside
@@ -850,283 +586,10 @@ def bucketed_agg_native(
     Returns ``{"buckets": {bucket_id: {"count": n, "fields": {f:
     {count, null_count, sum, min, max}}}}, "audit": {...}}`` or None.
     """
-    if not isinstance(width, int) or width <= 0:
-        raise ValueError(f"width must be a positive int, got {width!r}")
-    schema = parse_array_schema(_schema_path(array_dir))
-    if schema.array_type == "DENSE":
-        # round 8: the dense twin (fills included, every slice present)
-        return dense_bucketed_agg_native(
-            array_dir, width, fields=fields, at=at, since=since,
-            stats=stats, ranges=ranges,
-        )
-    dim0 = schema.dims[0]
-    dim_names = [d.name for d in schema.dims]
-    ranges = dict(ranges or {})
-    for name in ranges:
-        if name not in dim_names:
-            raise ValueError(f"range on non-dimension {name!r}")
-    rngs = [tuple(ranges.get(n, (None, None))) for n in dim_names]
-    ranged = [
-        (i, d, rngs[i]) for i, d in enumerate(schema.dims)
-        if rngs[i] != (None, None)
-    ]
-
-    by_name = {d.name: ("d", i, d) for i, d in enumerate(schema.dims)}
-    by_name.update(
-        {a.name: ("a", i, a) for i, a in enumerate(schema.attrs)}
+    return _dim0_rollup(
+        grid_agg_native, array_dir, width, fields=fields, at=at,
+        since=since, stats=stats, ranges=ranges,
     )
-    if fields is None:
-        fields = [a.name for a in schema.attrs]
-    for f in fields:
-        if f not in by_name:
-            raise ValueError(f"unknown field {f!r}")
-
-    frags = _fragment_dirs(array_dir, at=at, since=since)
-    audit = {
-        "fragments": len(frags), "fragments_skipped": 0,
-        "tiles_total": 0, "tiles_contained": 0, "tiles_partial": 0,
-        "tiles_skipped": 0, "cells_decoded": 0,
-    }
-    if frags and _delete_conditions(array_dir, at, frags):
-        return None
-    footers = []
-    for frag in frags:
-        fm = os.path.join(frag, "__fragment_metadata.tdb")
-        ftr = parse_fragment_footer(fm, schema)
-        if ftr is None or ftr.dense:
-            return None
-        footers.append(ftr)
-    if len(frags) > 1 and not schema.allows_dups and not (
-        _neds_pairwise_disjoint(footers)
-    ):
-        return None
-
-    def _facc():
-        return {"count": 0, "null_count": 0, "sum": 0,
-                "minmax": [None, None], "minmax_ok": True,
-                "saw_nonnull": False}
-
-    btotal: dict = {}
-    bacc: dict = {}
-
-    def _acc(b, f):
-        per = bacc.get(b)
-        if per is None:
-            per = bacc[b] = {}
-        a = per.get(f)
-        if a is None:
-            a = per[f] = _facc()
-        return a
-
-    want_mm = "min" in stats or "max" in stats
-    want_sum = "sum" in stats
-    summable_of = {
-        f: by_name[f][2].cell_val_num == 1
-        and by_name[f][2].dtype_id in _SUMMABLE_DT
-        and not getattr(by_name[f][2], "enumeration", None)
-        for f in fields
-    }
-
-    def _decode_tile(frag, k, cap, n_cells, flds, bucket=None,
-                     count_cells=True, masked=False):
-        """Exact per-cell aggregation of tile ``k``.  ``bucket`` set =
-        containment already proved (dim0 never decoded); None = edge
-        tile, per-cell ``v // width`` assignment.  ``masked`` = the
-        tile straddles a window edge: the ranged dims decode and only
-        in-window cells count."""
-        lo_c, hi_c = k * cap, min((k + 1) * cap, n_cells)
-        mask = None
-        dim_vals: dict = {}
-        if masked and ranged:
-            for i, d, (lo, hi) in ranged:
-                vals = _read_field_span(
-                    frag, schema, d, i, "d", lo_c, hi_c, n_cells
-                )
-                dim_vals[i] = vals
-                m = [
-                    (lo is None or v >= lo) and (hi is None or v <= hi)
-                    for v in vals
-                ]
-                mask = m if mask is None else [
-                    a and b for a, b in zip(mask, m)
-                ]
-                audit["cells_decoded"] += hi_c - lo_c
-        bks = None
-        if bucket is None:
-            kv = dim_vals.get(0)
-            if kv is None:
-                kv = _read_field_span(
-                    frag, schema, dim0, 0, "d", lo_c, hi_c, n_cells
-                )
-                audit["cells_decoded"] += hi_c - lo_c
-            bks = [v // width for v in kv]
-        if count_cells:
-            if bks is None:
-                btotal[bucket] = btotal.get(bucket, 0) + (hi_c - lo_c)
-            else:
-                for j, b in enumerate(bks):
-                    if mask is None or mask[j]:
-                        btotal[b] = btotal.get(b, 0) + 1
-        for f in flds:
-            kind, idx, fld = by_name[f]
-            vals = _read_field_span(
-                frag, schema, fld, idx, kind, lo_c, hi_c, n_cells
-            )
-            audit["cells_decoded"] += hi_c - lo_c
-            can_sum = summable_of[f]
-            for j, v in enumerate(vals):
-                if mask is not None and not mask[j]:
-                    continue
-                acc = _acc(bucket if bks is None else bks[j], f)
-                if v is None:
-                    acc["null_count"] += 1
-                    continue
-                acc["count"] += 1
-                acc["saw_nonnull"] = True
-                if can_sum:
-                    acc["sum"] += v
-                if acc["minmax_ok"]:
-                    try:
-                        _fold_minmax(acc["minmax"], v, v)
-                    except TypeError:
-                        acc["minmax_ok"] = False
-
-    for frag, ftr in zip(frags, footers):
-        stn = ftr.sparse_tile_num
-        if stn == 0:
-            audit["fragments_skipped"] += 1
-            continue
-        cap = schema.capacity
-        n_cells = (stn - 1) * cap + ftr.last_tile_cell_num
-        audit["tiles_total"] += stn
-        mbrs = parse_rtree_leaf_mbrs(frag, schema)
-        if mbrs is None or len(mbrs) != stn:
-            audit["tiles_partial"] += stn
-            for k in range(stn):
-                _decode_tile(frag, k, cap, n_cells, fields,
-                             masked=bool(ranged))
-            continue
-        contained: dict = {}  # bucket -> [tile index]
-        edge = []  # (tile index, needs window mask)
-        for k, mbr in enumerate(mbrs):
-            # window classification first: out-of-window tiles cost
-            # nothing, straddlers decode with per-cell masking
-            wcls = _classify_tile(mbr, rngs) if ranged else "contained"
-            if wcls == "skip":
-                audit["tiles_skipped"] += 1
-                continue
-            if wcls == "partial":
-                edge.append((k, True))
-                continue
-            d0 = mbr[0]
-            if d0 is None:  # untrusted (var dim0): decode to know
-                edge.append((k, False))
-                continue
-            try:
-                b_lo, b_hi = d0[0] // width, d0[1] // width
-            except TypeError:  # string dim0: no bucket arithmetic
-                edge.append((k, False))
-                continue
-            if b_lo == b_hi:
-                contained.setdefault(b_lo, []).append(k)
-            else:
-                edge.append((k, False))
-        audit["tiles_partial"] += len(edge)
-        audit["tiles_contained"] += sum(len(v) for v in contained.values())
-        for k, need_mask in edge:
-            _decode_tile(frag, k, cap, n_cells, fields,
-                         masked=need_mask)
-        if not contained:
-            continue
-
-        def _cells_of(k, stn=stn, cap=cap, ltcn=ftr.last_tile_cell_num):
-            return cap if k < stn - 1 else ltcn
-
-        field_stats, need_decode = {}, []
-        for f in fields:
-            kind, idx, fld = by_name[f]
-            nullable = bool(getattr(fld, "nullable", False))
-            ts = fragment_tile_stats(frag, schema, f)
-            mins = maxs = sums = nulls = None
-            if ts is not None and len(ts) == stn:
-                if ts[0][0] is not None:
-                    mins = [t[0] for t in ts]
-                    maxs = [t[1] for t in ts]
-                if ts[0][2] is not None:
-                    sums = [t[2] for t in ts]
-                if ts[0][3] is not None:
-                    nulls = [t[3] for t in ts]
-            enum = getattr(fld, "enumeration", None)
-            can_count = (nulls is not None) or not nullable
-            can_mm = mins is not None and not enum
-            can_sum = sums is not None and not enum
-            ok = (
-                can_count
-                and (can_mm or not want_mm or not _mm_possible(fld))
-                and (can_sum or not want_sum or not summable_of[f])
-            )
-            if not ok:
-                need_decode.append(f)
-                continue
-            field_stats[f] = (mins, maxs, sums, nulls, can_mm, can_sum)
-        for b, tiles in contained.items():
-            btotal[b] = btotal.get(b, 0) + sum(_cells_of(k) for k in tiles)
-            for f, (mins, maxs, sums, nulls, can_mm, can_sum) in (
-                field_stats.items()
-            ):
-                acc = _acc(b, f)
-                for k in tiles:
-                    cells = _cells_of(k)
-                    nc = nulls[k] if nulls is not None else 0
-                    nn = cells - nc
-                    acc["null_count"] += nc
-                    acc["count"] += nn
-                    if nn == 0:
-                        continue
-                    acc["saw_nonnull"] = True
-                    if can_sum and summable_of[f]:
-                        acc["sum"] += sums[k]
-                    if want_mm:
-                        if can_mm:
-                            _fold_minmax(acc["minmax"], mins[k], maxs[k])
-                        else:
-                            acc["minmax_ok"] = False
-            for f in need_decode:
-                for k in tiles:
-                    _decode_tile(
-                        frag, k, cap, n_cells, [f],
-                        bucket=b, count_cells=False,
-                    )
-
-    buckets = {}
-    for b in sorted(btotal):
-        fo = {}
-        for f in fields:
-            acc = bacc.get(b, {}).get(f) or _facc()
-            kind, idx, fld = by_name[f]
-            nullable = bool(getattr(fld, "nullable", False))
-            fo[f] = {
-                "count": acc["count"] if "count" in stats else None,
-                "null_count": (
-                    acc["null_count"]
-                    if nullable and "null_count" in stats else None
-                ),
-                "sum": (
-                    acc["sum"]
-                    if want_sum and summable_of[f] and acc["saw_nonnull"]
-                    else None
-                ),
-                "min": (
-                    acc["minmax"][0]
-                    if "min" in stats and acc["minmax_ok"] else None
-                ),
-                "max": (
-                    acc["minmax"][1]
-                    if "max" in stats and acc["minmax_ok"] else None
-                ),
-            }
-        buckets[b] = {"count": btotal[b], "fields": fo}
-    return {"buckets": buckets, "audit": audit}
 
 
 # ---------------------------------------------------------------------------
@@ -1230,14 +693,6 @@ def _boxes_subtract(pieces, minus_list):
     return pieces
 
 
-def _facc_new():
-    return {"count": 0, "null_count": 0, "sum": 0,
-            "minmax": [None, None], "minmax_ok": True,
-            "saw_nonnull": False}
-
-
-
-
 def _stats_accessors(schema, cache):
     """(fstats, tstats) accessors over fragment footer stats, memoized
     in ``cache`` when the caller loops buckets over one fragment set."""
@@ -1306,11 +761,7 @@ def _dense_fold_fragment(array_dir, schema, frag, box, R, attr_fields,
             s = st.get(f) or {}
             nullable = bool(getattr(fld, "nullable", False))
             enum = getattr(fld, "enumeration", None)
-            summable = (
-                fld.cell_val_num == 1
-                and fld.dtype_id in _SUMMABLE_DT
-                and not enum
-            )
+            summable = _summable(fld)
             nc = 0 if not nullable else s.get("null_count")
             has_mm = "min" in s and "max" in s and not enum
             has_sum = "sum" in s and not enum
@@ -1435,29 +886,10 @@ def _dense_fold_fragment(array_dir, schema, frag, box, R, attr_fields,
             )
             audit["cells_decoded"] += len(cols[names[0]]) * len(flds)
             for f in flds:
-                fld = by_name[f][2]
-                summable = (
-                    fld.cell_val_num == 1
-                    and fld.dtype_id in _SUMMABLE_DT
-                    and not getattr(fld, "enumeration", None)
-                )
-                acc = facc[f]
-                # python values in cell order: float sums stay
-                # bit-identical to a row-at-a-time fold
-                for v in cols[f].tolist():
-                    if v is None:
-                        acc["null_count"] += 1
-                        continue
-                    acc["count"] += 1
-                    acc["saw_nonnull"] = True
-                    if want_sum and summable:
-                        acc["sum"] += v
-                    if want_mm and acc["minmax_ok"]:
-                        try:
-                            _fold_minmax(acc["minmax"], v, v)
-                        except TypeError:
-                            acc["minmax_ok"] = False
+                _fold_column([(facc[f], 0, len(cols[f]))], cols[f],
+                             by_name[f][2], want_sum, want_mm)
     return v_i
+
 
 def _dense_eval(array_dir, schema, frags, boxes, R, fields, stats, at,
                 audit, cache=None):
@@ -1512,11 +944,7 @@ def _dense_fold_tail(schema, by_name, attr_fields, fields, facc, vol,
                 _enum_fill_label(schema, fld) if enum
                 else _fill_value(fld)
             )
-            summable = (
-                fld.cell_val_num == 1
-                and fld.dtype_id in _SUMMABLE_DT
-                and not enum
-            )
+            summable = _summable(fld)
             acc = facc[f]
             if fill is None:
                 acc["null_count"] += fill_n
@@ -1592,19 +1020,25 @@ def _dense_eval_overlap(array_dir, schema, frags, boxes, R, fields,
     return vol, facc
 
 
-def _dense_assemble(schema, fields, facc, stats):
+def _field_objs(schema, fields):
+    """The dim/attr objects named by ``fields``, in order."""
     by_name = {d.name: d for d in schema.dims}
     by_name.update({a.name: a for a in schema.attrs})
+    return [by_name[f] for f in fields]
+
+
+def _assemble_fields(flds, facc, stats):
+    """The per-field result dicts of a rollup bucket over the field
+    objects ``flds``: each requested stat from its accumulator, None
+    where not requested or undefined (null_count on a non-nullable
+    field, SUM on a non-summable one or over no values, MIN/MAX after
+    an uncomparable fold)."""
     want_sum = "sum" in stats
     out = {}
-    for f in fields:
-        fld = by_name[f]
+    for fld in flds:
+        f = fld.name
         nullable = bool(getattr(fld, "nullable", False))
-        summable = (
-            fld.cell_val_num == 1
-            and fld.dtype_id in _SUMMABLE_DT
-            and not getattr(fld, "enumeration", None)
-        )
+        summable = _summable(fld)
         acc = facc[f]
         out[f] = {
             "count": acc["count"] if "count" in stats else None,
@@ -1692,16 +1126,16 @@ def dense_windowed_agg_native(
     audit = _dense_audit()
     audit["fragments"] = len(frags)
     if R is None:
-        facc = {f: _facc_new() for f in fields}
-        return {"count": 0,
-                "fields": _dense_assemble(schema, fields, facc, stats),
-                "audit": audit}
-    ev = _dense_eval_overlap if overlap else _dense_eval
-    vol, facc = ev(
-        array_dir, schema, frags, boxes, R, fields, stats, at, audit
-    )
+        vol, facc = 0, {f: _facc_new() for f in fields}
+    else:
+        ev = _dense_eval_overlap if overlap else _dense_eval
+        vol, facc = ev(
+            array_dir, schema, frags, boxes, R, fields, stats, at, audit
+        )
     return {"count": vol,
-            "fields": _dense_assemble(schema, fields, facc, stats),
+            "fields": _assemble_fields(
+                _field_objs(schema, fields), facc, stats
+            ),
             "audit": audit}
 
 
@@ -1719,40 +1153,16 @@ def dense_bucketed_agg_native(
 ) -> dict | None:
     """Dense twin of :func:`bucketed_agg_native`: GROUP BY
     ``floor(dim0/width)`` over the materialized (fill-included) dense
-    view.  Every bucket slice intersecting the window is present (dense
+    view — :func:`dense_grid_agg_native` on dim0 with scalar bucket
+    keys.  Every bucket slice intersecting the window is present (dense
     reads materialize every cell).  Fragment-per-bucket ingest — the
     time-partitioned raster shape — answers wholly from fragment stats
     + fill arithmetic; straddling fragments decode only their clipped
     boxes."""
-    if not isinstance(width, int) or width <= 0:
-        raise ValueError(f"width must be a positive int, got {width!r}")
-    prep = _dense_prep(array_dir, ranges, fields, at, since)
-    if prep is None:
-        return None
-    schema, fields, frags, boxes, R, overlap = prep
-    audit = _dense_audit()
-    audit["fragments"] = len(frags)
-    if R is None:
-        return {"buckets": {}, "audit": audit}
-    b0, b1 = R[0][0] // width, R[0][1] // width
-    if b1 - b0 + 1 > _DENSE_MAX_BUCKETS:
-        return None  # absurd materialization; let the caller scan
-    buckets = {}
-    cache: dict = {}  # footer parses once per fragment, not per bucket
-    ev = _dense_eval_overlap if overlap else _dense_eval
-    for b in range(b0, b1 + 1):
-        slice_r = [
-            (max(R[0][0], b * width), min(R[0][1], (b + 1) * width - 1))
-        ] + list(R[1:])
-        vol, facc = ev(
-            array_dir, schema, frags, boxes, slice_r, fields, stats, at,
-            audit, cache=cache,
-        )
-        buckets[b] = {
-            "count": vol,
-            "fields": _dense_assemble(schema, fields, facc, stats),
-        }
-    return {"buckets": buckets, "audit": audit}
+    return _dim0_rollup(
+        dense_grid_agg_native, array_dir, width, fields=fields, at=at,
+        since=since, stats=stats, ranges=ranges,
+    )
 
 
 def dense_grid_agg_native(
@@ -1770,7 +1180,8 @@ def dense_grid_agg_native(
     window is present; whole-box-aligned fragments contribute stats,
     clipped slices decode (1-D sliver acceleration applies per slice),
     gaps are fill arithmetic.  Bucket keys are tuples of
-    ``floor(coord/width)`` over the GRIDDED dims (schema dim order)."""
+    ``floor(coord/width)`` over the GRIDDED dims (schema dim order), a
+    1-D grid included."""
     # validate BEFORE _dense_prep so bad input raises even when the
     # dense context is unprovable (same raise-on-bad-input contract as
     # the sparse path, which validates before any metadata work)
@@ -1805,6 +1216,7 @@ def dense_grid_agg_native(
         return None  # absurd materialization; let the caller scan
     import itertools  # noqa: PLC0415
 
+    flds = _field_objs(schema, fields)
     buckets = {}
     cache: dict = {}  # footer parses once per fragment, not per grid cell
     ev = _dense_eval_overlap if overlap else _dense_eval
@@ -1816,9 +1228,8 @@ def dense_grid_agg_native(
             array_dir, schema, frags, boxes, slice_r, fields, stats, at,
             audit, cache=cache,
         )
-        key = combo[0] if len(combo) == 1 else tuple(combo)
-        buckets[key] = {
+        buckets[tuple(combo)] = {
             "count": vol,
-            "fields": _dense_assemble(schema, fields, facc, stats),
+            "fields": _assemble_fields(flds, facc, stats),
         }
     return {"buckets": buckets, "audit": audit}

@@ -1250,8 +1250,8 @@ def write_native_fragment(
     n = lengths[names[0]]
     # enum-linked attrs store MariaDB ENUM ordinals (1-based, 0 = '');
     # accept labels (mapped) or ints (validated) — the INSERT semantics
-    # of ha_mytile's enum columns, inverse of the reader's
-    # _apply_enumeration
+    # of ha_mytile's enum columns, inverse of the reader's label
+    # mapping in _np_field
     for a in schema.attrs:
         en = getattr(a, "enumeration", None)
         if not en or en not in schema.enumerations:

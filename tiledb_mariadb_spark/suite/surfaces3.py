@@ -2724,7 +2724,6 @@ SPECS.append(
 def q306_soma_matrix(spark, sf_dir):
     from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
         _fragment_dirs,
-        _read_field,
         _schema_path,
         attr_stats_native_array,
         count_native_array,
@@ -2756,7 +2755,6 @@ def q306_soma_matrix(spark, sf_dir):
         file_decoded_size,
     )
 
-    _ = _read_field  # row-path import kept for the honesty check's era
     kfile = _field_file(frag, schema.dims[0].name, 0, "d")
     n_cells = file_decoded_size(kfile) // 8
     n_splits = 8

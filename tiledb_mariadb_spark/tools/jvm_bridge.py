@@ -18,10 +18,9 @@ from the command line:
   the merged view could differ from per-fragment stats) as one JSON
   object;
 - ``gagg --uri U --aggs ... --group d1:w1[,d2:w2...] [--conditions J]``:
-  GROUP BY floor(dim/width) rollup rows — bucketed_agg_native for the
-  1-D dim0 case, grid_agg_native for N-D / non-dim0 grids (footer walk
-  + edge-tile decode — the q340/q343 metadata rollups behind plain
-  SQL); bucket keys in the requested group order;
+  GROUP BY floor(dim/width) rollup rows — grid_agg_native over the
+  grouped dims (footer walk + edge-tile decode — the q340/q343 metadata
+  rollups behind plain SQL); bucket keys in the requested group order;
 - ``write --uri U`` (JSON-lines rows on stdin, which under ``serve`` is
   the request's payload) / ``commitfrags --uri U --frags J``:
   the write path — one staged fragment per task, one atomic job-level
@@ -534,7 +533,6 @@ def main(argv=None) -> int:
         # and the q343 grid rollup (N-D, any dims) behind plain SQL.
         # Sound-or-refuse.
         from tiledb_mariadb_spark.sources.tiledb_native_agg import (  # noqa: PLC0415
-            bucketed_agg_native,
             grid_agg_native,
         )
 
@@ -558,9 +556,6 @@ def main(argv=None) -> int:
                 {"ok": False, "reason": "group cols must be distinct dims"}
             ))
             return 0
-        # dim0 1-D grouping keeps the bucketed fast path; anything else
-        # (N-D, or 1-D on a non-dim0 dim) is the grid rollup's job
-        one_d = len(gspecs) == 1 and gspecs[0][0] == dim_names[0]
         conds = _parse_conditions(a.conditions)
         ranges, rest = _fold_dim_ranges(schema, conds)
         if rest:
@@ -570,16 +565,10 @@ def main(argv=None) -> int:
             fcols = sorted({
                 q.partition(":")[2] for q in reqs if ":" in q
             })
-            if one_d:
-                r = bucketed_agg_native(
-                    a.uri, gspecs[0][1], fields=fcols, at=a.at,
-                    ranges=ranges or None,
-                )
-            else:
-                r = grid_agg_native(
-                    a.uri, dict(gspecs), fields=fcols, at=a.at,
-                    ranges=ranges or None,
-                )
+            r = grid_agg_native(
+                a.uri, dict(gspecs), fields=fcols, at=a.at,
+                ranges=ranges or None,
+            )
         except ValueError as e:
             print(json.dumps({"ok": False, "reason": str(e)}))
             return 0
@@ -592,8 +581,7 @@ def main(argv=None) -> int:
         perm = [schema_order.index(c) for c, _w in gspecs]
         rows = []
         for b, acc in sorted(r["buckets"].items()):
-            key = b if isinstance(b, tuple) else (b,)
-            key = [int(key[i]) for i in perm]
+            key = [int(b[i]) for i in perm]
             for kv, (c, w) in zip(key, gspecs):
                 if w > 1 and abs(kv) * w >= _FLOOR_SAFE:
                     # SQL's FLOOR(k/width) is double division — beyond
