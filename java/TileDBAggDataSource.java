@@ -27,9 +27,12 @@
 // (tiledb_mariadb_spark.tools.jvm_bridge serve) running the repo's
 // pure-Python decoder: each command is one framed request to an idle
 // bridge from a per-JVM pool, which spawns one only when every bridge is
-// busy, so a call pays no interpreter start (Arrow IPC rows; the
-// big-scan fast path remains the Python datasource — this format exists
-// for the pushdown contract).
+// busy, so a call pays no interpreter start (Arrow IPC rows).  It is the
+// format behind the SQL table names sql_table_from_array registers: the
+// read options at, since, encryption_key, target_splits, bbox and
+// spatial_* reach the bridge (since on every request, the rest on the
+// split plan), so the view keeps every option format("tiledb_native")
+// takes.
 //
 // Build/registration: tiledb_mariadb_spark.sources.jvm_agg compiles this
 // file against the installed pyspark jars and loads it with ADD JAR, so
@@ -153,20 +156,23 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
 
   // ---- bridge -------------------------------------------------------------
 
-  /** One array's address (uri, at, key) plus the interpreter that
+  /** One array's view (uri, at, since, key) plus the interpreter that
    * serves it; every command goes as a request to a resident bridge. */
   static class Bridge implements Serializable {
     final String python;
     final String pythonPath;
     final String uri;
     final String at;
+    final String since;
     final String encryptionKey;
 
-    Bridge(String python, String pythonPath, String uri, String at, String key) {
+    Bridge(
+        String python, String pythonPath, String uri, String at, String since, String key) {
       this.python = python;
       this.pythonPath = pythonPath;
       this.uri = uri;
       this.at = at;
+      this.since = since;
       this.encryptionKey = key;
     }
 
@@ -180,17 +186,19 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
           o.getOrDefault("pythonpath", ""),
           uri,
           o.get("at"),
+          o.get("since"),
           o.get("encryption_key"));
     }
 
-    /** {@code cmd --uri uri [--at] [--encryption-key]} followed by the
-     * flag/value {@code pairs} whose value is non-null. */
+    /** {@code cmd --uri uri [--at] [--since] [--encryption-key]}
+     * followed by the flag/value {@code pairs} whose value is
+     * non-null. */
     private List<String> argv(String cmd, String... pairs) {
       List<String> argv = new ArrayList<>();
       argv.add(cmd);
       argv.add("--uri");
       argv.add(uri);
-      String[] common = {"--at", at, "--encryption-key", encryptionKey};
+      String[] common = {"--at", at, "--since", since, "--encryption-key", encryptionKey};
       for (String[] ps : new String[][] {common, pairs}) {
         for (int i = 0; i < ps.length; i += 2) {
           if (ps[i + 1] != null) {
@@ -581,7 +589,7 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
      * top-n by col can live anywhere in a split. */
     @Override
     public boolean pushTopN(SortOrder[] orders, int n) {
-      if (aggRows != null || orders.length != 1) {
+      if (aggRows != null || orders.length != 1 || spatialWindow()) {
         return false;
       }
       SortOrder o = orders[0];
@@ -632,6 +640,12 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
     AggScanBuilder(StructType tableSchema, CaseInsensitiveStringMap options) {
       this.tableSchema = tableSchema;
       this.options = options;
+    }
+
+    /** The box/spatial options narrow only the split plan, so metadata
+     * answers over the whole array cannot stand for the view. */
+    private boolean spatialWindow() {
+      return options.containsKey("bbox") || options.containsKey("spatial_wkb");
     }
 
     private static String singleColumn(Expression e) {
@@ -853,6 +867,9 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
     private boolean tryPush(Aggregation aggregation) {
       if (aggRows != null) {
         return true;
+      }
+      if (spatialWindow()) {
+        return false;
       }
       Expression[] groups = aggregation.groupByExpressions();
       // each group expr: a plain integral column (width-1 buckets) or
@@ -1256,8 +1273,17 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
     private JsonNode planCall() {
       String key = effectiveConds() == null ? "" : effectiveConds();
       if (planOut == null || !key.equals(planKey)) {
-        Bridge b = Bridge.fromOptions(new CaseInsensitiveStringMap(opts));
-        planOut = b.call("splits", "--conditions", effectiveConds());
+        CaseInsensitiveStringMap o = new CaseInsensitiveStringMap(opts);
+        planOut =
+            Bridge.fromOptions(o)
+                .call(
+                    "splits",
+                    "--conditions", effectiveConds(),
+                    "--target-splits", o.get("target_splits"),
+                    "--bbox", o.get("bbox"),
+                    "--spatial-wkb", o.get("spatial_wkb"),
+                    "--spatial-dims", o.get("spatial_dims"),
+                    "--spatial-pad", o.get("spatial_pad"));
         planKey = key;
       }
       return planOut;

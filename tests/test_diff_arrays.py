@@ -308,6 +308,17 @@ def test_window_destroyed_guard(spark, tmp_path):
 
     with pytest.raises(ValueError, match="destroyed by consolidation"):
         TileDBNativeReader(uri, None, 2, ["k", "v"], since=1500).partitions()
+    # so does a SQL view: its metadata COUNT declines to answer the
+    # destroyed window, and the scan it falls back to raises
+    from tiledb_mariadb_spark.sources.spark_datasource import (
+        sql_table_from_array,
+    )
+
+    sql_table_from_array(spark, "destroyed_window", uri, since=1500)
+    for q in ("SELECT k FROM destroyed_window",
+              "SELECT COUNT(*) FROM destroyed_window"):
+        with pytest.raises(Exception, match="destroyed by consolidation"):
+            spark.sql(q).collect()
     # windows past the consolidated range still read fine
     write_native_fragment(
         uri, {"k": [5], "v": [50]}, ts=3000, version=19

@@ -38,9 +38,9 @@ from tiledb_mariadb_spark.sources.tiledb_native import (
     _F_ZSTD,
     _bitshuffle,
     _rle_decode,
+    file_decoded_size,
     read_native_array,
     read_byte_span,
-    read_tile_file,
 )
 from tiledb_mariadb_spark.sources.tiledb_native_write import (
     _encode_chunked,
@@ -49,12 +49,17 @@ from tiledb_mariadb_spark.sources.tiledb_native_write import (
 )
 
 
+def _read_whole(path, **kw):
+    """Every decoded byte of a data file."""
+    return read_byte_span(path, 0, file_decoded_size(path), **kw)
+
+
 def _roundtrip(tmp_path, filters, data, elem=8, var_lens=None):
     enc = _encode_chunked(data, filters, elem=elem, var_lens=var_lens)
     p = str(tmp_path / "tile.bin")
     with open(p, "wb") as f:
         f.write(enc)
-    out = read_tile_file(
+    out = _read_whole(
         p, filters=list(filters), elem=elem, var=var_lens is not None
     )
     assert out == data
@@ -232,7 +237,7 @@ def test_checksum_detects_corruption(tmp_path):
     with open(p, "wb") as f:
         f.write(bytes(enc))
     with pytest.raises(ValueError):
-        read_tile_file(p, filters=[(_F_MD5, b""), (_F_LZ4, b"")], elem=8)
+        _read_whole(p, filters=[(_F_MD5, b""), (_F_LZ4, b"")], elem=8)
 
 
 def test_writer_refuses_unroundtrippable_shapes():
@@ -653,8 +658,8 @@ def test_empty_var_chunk_dict_roundtrip(tmp_path):
     p = str(tmp_path / "e.bin")
     with open(p, "wb") as f:
         f.write(enc)
-    assert read_tile_file(p, filters=[(_F_DICT, b"")], elem=1,
-                          var=True) == b""
+    assert _read_whole(p, filters=[(_F_DICT, b"")], elem=1,
+                       var=True) == b""
 
 
 def test_webp_refuses_without_pillow():

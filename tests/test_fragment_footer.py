@@ -312,7 +312,6 @@ def test_count_is_metadata_only(tmp_path, monkeypatch):
         raise AssertionError("tile decode reached from count path")
 
     monkeypatch.setattr(tn, "read_byte_span", boom)
-    monkeypatch.setattr(tn, "read_tile_file", boom)
     monkeypatch.setattr(tn, "read_native_array", boom)
     monkeypatch.setattr(tn, "read_native_array_range_np", boom)
     assert tn.count_native_array(d) == 5
@@ -591,7 +590,7 @@ def test_explain_native_pruning(tmp_path):
         raise AssertionError("tile decode reached from explain path")
 
     orig = {n: getattr(tn, n) for n in
-            ("read_byte_span", "read_tile_file", "read_native_array",
+            ("read_byte_span", "read_native_array",
              "read_native_array_range_np")}
     try:
         for n in orig:

@@ -909,3 +909,49 @@ def test_write_task_failure_leaves_nothing(spark, tmp_path):
         "COUNT(*) AS n", "SUM(k) AS s"
     ).collect()[0]
     assert (got.n, got.s) == (4000, sum(range(4000)))
+
+
+def test_concurrent_first_build_compiles_once(tmp_path, monkeypatch):
+    """Two threads asking for the jar in an empty build directory run
+    ``javac`` once between them (the second waits on the build lock and
+    re-checks), and both get the same loadable jar."""
+    import threading
+    import zipfile
+
+    from tiledb_mariadb_spark.sources import jvm_agg
+
+    calls = []
+    real_run = jvm_agg.subprocess.run
+
+    def counting_run(argv, *a, **kw):
+        calls.append(argv[0])
+        return real_run(argv, *a, **kw)
+
+    monkeypatch.setattr(jvm_agg.subprocess, "run", counting_run)
+    build = str(tmp_path / "jvm")
+    start = threading.Barrier(2)
+    jars, errors = [], []
+
+    def build_jar():
+        start.wait()
+        try:
+            jars.append(jvm_agg.ensure_agg_jar(build))
+        except Exception as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=build_jar) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors
+    assert calls.count("javac") == 1 and calls.count("jar") == 1
+    assert jars == [os.path.join(build, "tiledb_agg.jar")] * 2
+    with zipfile.ZipFile(jars[0]) as z:
+        assert z.testzip() is None
+        names = set(z.namelist())
+    assert "TileDBAggDataSource.class" in names
+    assert (
+        "META-INF/services/org.apache.spark.sql.sources.DataSourceRegister"
+        in names
+    )

@@ -140,11 +140,18 @@ def test_v19_nullable_nulls_suppress_minmax(tmp_path):
     assert st_["f"]["sum"] == 3.0
 
 
-def test_v19_connector_prunes_refuted_fragment(spark, tmp_path, monkeypatch):
-    """Two v19 fragments; a pushed condition refutes ONE — only the
-    other's field data is decoded (per-fragment counting)."""
-    import tiledb_mariadb_spark.sources.tiledb_native as tn
-    from tiledb_mariadb_spark.sources.tiledb_array import read_array
+def test_v19_connector_prunes_refuted_fragment(spark, tmp_path):
+    """Two v19 fragments; a pushed condition refutes ONE — the planner
+    keeps only the other (its stats refute ``v >= 50`` for ts=1000), so
+    no task reads the refuted fragment, and the rows are exact."""
+    from tiledb_mariadb_spark.sources.tiledb_array import (
+        NativeDecoderBackend,
+        read_array,
+        scan_ranges,
+    )
+    from tiledb_mariadb_spark.sources.tiledb_native import (
+        explain_native_pruning,
+    )
 
     d = _mk(tmp_path)
     write_native_fragment(
@@ -156,20 +163,16 @@ def test_v19_connector_prunes_refuted_fragment(spark, tmp_path, monkeypatch):
             "s": ["c", "d"]},
         ts=2000, version=19,
     )
-    touched = set()
-    orig = tn._np_field
-
-    def spy(frag, *a, **k):
-        touched.add(os.path.basename(frag))
-        return orig(frag, *a, **k)
-
-    monkeypatch.setattr(tn, "_np_field", spy)
-    df = read_array(spark, d, columns=["k", "v"],
-                    conditions=[("v", ">=", 50)])
+    cond = [("v", ">=", 50)]
+    plan = explain_native_pruning(d, conditions=cond)
+    kept = [r["fragment"] for r in plan if r["decision"] == "read"]
+    assert len(plan) == 2 and len(kept) == 1 and "_2000_" in kept[0], plan
+    be = NativeDecoderBackend()
+    ranges = scan_ranges(be, d, be.info(d), {}, cond, None, None)
+    assert ranges == {"k": (10, 11)}  # the kept fragment's box alone
+    df = read_array(spark, d, columns=["k", "v"], conditions=cond)
     got = sorted((r["k"], r["v"]) for r in df.collect())
     assert got == [(10, 50), (11, 60)]
-    assert all("_2000_" in f.split("_", 2)[2] or "__2000" in f
-               for f in touched), touched
 
 
 def test_v19_empty_fragment(tmp_path):
@@ -184,6 +187,24 @@ def test_v19_empty_fragment(tmp_path):
     # exact for cross-fragment combination; min/max stay absent
     st_ = attr_stats_native_array(d)
     assert st_["v"] == {"sum": 0} and "min" not in st_["f"]
+
+
+def test_v19_uint64_stats_past_int64(tmp_path):
+    """UINT64 cells mixing values >= 2**63 with small ones write at v19
+    (their stats once inferred float64 and failed to pack), and the
+    cells and their metadata MIN/MAX/SUM read back exact."""
+    d = str(tmp_path / "u64")
+    create_native_array(
+        d,
+        dims=[NativeDim("k", 1, 1, (0, 100), None)],
+        attrs=[NativeAttr("u", 10, 1, False, None)],
+    )
+    write_native_fragment(d, {"k": [1, 2], "u": [2**63, 1]}, version=19)
+    _s, rows = read_native_array(d)
+    assert rows == [(1, 2**63), (2, 1)]
+    assert attr_stats_native_array(d)["u"] == {
+        "min": 1, "max": 2**63, "sum": 2**63 + 1,
+    }
 
 
 def test_v19_fragment_float_sum_crosses_tile_boundaries(tmp_path):

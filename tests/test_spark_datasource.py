@@ -235,22 +235,26 @@ def test_stream_sink_lands_fragments(spark, tmp_path):
 def test_sql_table_from_array(spark, arr):
     """Pure-SQL surface: `sql_table_from_array` is the `CREATE TABLE ...
     ENGINE=mytile uri=...` analog — the bare array becomes a SQL table
-    name queried with plain SQL (pushFilters still applies through the
-    registered source).  Catalog `CREATE TABLE ... USING` is not used:
-    Spark 4.1 does not forward its OPTIONS to Python DS reads."""
+    name queried with plain SQL, served by the JVM `tiledb_agg` row scan
+    (filters pushed through DataSource V2).  Catalog `CREATE TABLE ...
+    USING` is not used: Spark 4.1 does not forward its OPTIONS to Python
+    DS reads."""
     import uuid as _uuid
 
     from tiledb_mariadb_spark.sources.spark_datasource import (
         sql_table_from_array,
     )
 
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     tname = "mytile_sql_" + _uuid.uuid4().hex[:6]
     sql_table_from_array(spark, tname, arr)
-    row = spark.sql(
+    df = spark.sql(
         f"SELECT COUNT(*) AS n, SUM(k) AS sk FROM {tname} "
         "WHERE k BETWEEN 10 AND 19 AND tag = 't0'"
-    ).collect()[0]
+    )
+    assert "TileDBBridgeRowScan" in (
+        df._jdf.queryExecution().executedPlan().toString()
+    )
+    row = df.collect()[0]
     keys = [i for i in range(10, 20) if i % 3 == 0]
     assert (row.n, row.sk) == (len(keys), sum(keys))
     # joins against ordinary tables work like any SQL table

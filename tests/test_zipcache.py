@@ -183,9 +183,11 @@ def test_wrapper_installed_in_tasks(spark):
 
 def test_native_sql_read_repeats(spark, tmp_path):
     """Repeated planner requests and tasks in the same workers: the
-    second read sees the same rows as the first."""
+    second read sees the same rows as the first.  The table is a view
+    over ``format("tiledb_native")`` itself, so the Python DataSource
+    planner worker serves both queries."""
     from tiledb_mariadb_spark.sources.spark_datasource import (  # noqa: PLC0415
-        sql_table_from_array,
+        register_tiledb_native,
     )
     from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
         NativeAttr,
@@ -207,7 +209,9 @@ def test_native_sql_read_repeats(spark, tmp_path):
     )
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     tname = "zc_" + uuid.uuid4().hex[:6]
-    sql_table_from_array(spark, tname, uri)
+    register_tiledb_native(spark)
+    spark.read.format("tiledb_native").option("path", uri).load() \
+        .createOrReplaceTempView(tname)
     q = f"SELECT k, v FROM {tname} WHERE k BETWEEN 5 AND 24 ORDER BY k"
     first = [tuple(r) for r in spark.sql(q).collect()]
     second = [tuple(r) for r in spark.sql(q).collect()]

@@ -18,15 +18,21 @@ honest bridge row-scan when the metadata trust rules cannot prove the
 value.  The Java side sends every command to a resident
 ``tools/jvm_bridge.py serve`` process of this interpreter, pooled per
 JVM, so a pushed aggregate costs one request, not an interpreter start.
-The fast scan path remains ``format("tiledb_native")``; this format
-exists for the aggregate contract.
+Row scans go the same way (Arrow IPC batches), so this format also
+serves the SQL table names ``sql_table_from_array`` registers.
+
+The jar is built once per checkout, by the first caller that finds it
+missing or older than the Java source; concurrent callers, threads or
+processes, wait on a lock in the build directory and reuse that build.
 """
 
 from __future__ import annotations
 
+import fcntl
 import os
 import subprocess
 import sys
+import threading
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__)
@@ -41,50 +47,70 @@ def _pyspark_jars() -> str:
     return os.path.join(os.path.dirname(pyspark.__file__), "jars")
 
 
+def _jar_fresh(jar_path: str) -> bool:
+    return (
+        os.path.isfile(jar_path)
+        and os.path.getmtime(jar_path) >= os.path.getmtime(_JAVA_SRC)
+    )
+
+
 def ensure_agg_jar(build_dir: str | None = None) -> str:
     """Compile the shim into ``build/jvm/tiledb_agg.jar`` (cached by
-    source mtime).  Needs a JDK (javac + jar) — raises RuntimeError
+    source mtime).  Builders serialize on an ``flock`` in the build
+    directory and re-check the jar once they hold it, so concurrent
+    first callers run ``javac`` once and never write ``classes`` while
+    another packs it.  Needs a JDK (javac + jar) — raises RuntimeError
     with the compiler output otherwise."""
     build_dir = build_dir or os.path.join(_REPO, "build", "jvm")
     jar_path = os.path.join(build_dir, "tiledb_agg.jar")
-    if (
-        os.path.isfile(jar_path)
-        and os.path.getmtime(jar_path) >= os.path.getmtime(_JAVA_SRC)
-    ):
+    if _jar_fresh(jar_path):
         return jar_path
-    classes = os.path.join(build_dir, "classes")
-    os.makedirs(classes, exist_ok=True)
-    meta = os.path.join(build_dir, "META-INF", "services")
-    os.makedirs(meta, exist_ok=True)
-    with open(os.path.join(meta, _SERVICE), "w") as f:
-        f.write("TileDBAggDataSource\n")
-    cp = os.path.join(_pyspark_jars(), "*")
-    tmp_jar = jar_path + f".tmp.{os.getpid()}"
-    for argv in (
-        ["javac", "-cp", cp, "-d", classes, _JAVA_SRC],
-        ["jar", "cf", tmp_jar, "-C", classes, ".",
-         "-C", build_dir, "META-INF"],
-    ):
-        r = subprocess.run(argv, capture_output=True, text=True)
-        if r.returncode != 0:
-            raise RuntimeError(
-                f"jvm_agg build failed ({argv[0]}): {r.stderr[:2000]}"
-            )
-    os.replace(tmp_jar, jar_path)  # concurrent builders: atomic publish
+    os.makedirs(build_dir, exist_ok=True)
+    with open(os.path.join(build_dir, "build.lock"), "w") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        if _jar_fresh(jar_path):  # built while this caller waited
+            return jar_path
+        classes = os.path.join(build_dir, "classes")
+        os.makedirs(classes, exist_ok=True)
+        meta = os.path.join(build_dir, "META-INF", "services")
+        os.makedirs(meta, exist_ok=True)
+        with open(os.path.join(meta, _SERVICE), "w") as f:
+            f.write("TileDBAggDataSource\n")
+        cp = os.path.join(_pyspark_jars(), "*")
+        tmp_jar = jar_path + ".tmp"
+        for argv in (
+            ["javac", "-cp", cp, "-d", classes, _JAVA_SRC],
+            ["jar", "cf", tmp_jar, "-C", classes, ".",
+             "-C", build_dir, "META-INF"],
+        ):
+            r = subprocess.run(argv, capture_output=True, text=True)
+            if r.returncode != 0:
+                raise RuntimeError(
+                    f"jvm_agg build failed ({argv[0]}): {r.stderr[:2000]}"
+                )
+        os.replace(tmp_jar, jar_path)  # readers never see a partial jar
     return jar_path
 
 
 _REGISTERED: set = set()
+_REGISTER_LOCK = threading.Lock()
 
 
 def register_tiledb_agg(spark) -> None:
-    """Compile if needed and ADD JAR into this session (idempotent)."""
+    """Compile if needed and ADD JAR into this session once (safe from
+    concurrent threads), then let the calling thread resolve the
+    format: ADD JAR makes the session's jar class loader the context
+    class loader of the JVM thread that ran it only, and py4j gives
+    every Python thread its own JVM thread."""
     jar = ensure_agg_jar()
     key = (id(spark.sparkContext), jar)
-    if key in _REGISTERED:
-        return
-    spark.sql(f"ADD JAR 'file://{jar}'")
-    _REGISTERED.add(key)
+    with _REGISTER_LOCK:
+        if key not in _REGISTERED:
+            spark.sql(f"ADD JAR 'file://{jar}'")
+            _REGISTERED.add(key)
+    spark._jvm.java.lang.Thread.currentThread().setContextClassLoader(
+        spark._jsparkSession.sharedState().jarClassLoader()
+    )
 
 
 def agg_reader(spark, uri: str, **options):

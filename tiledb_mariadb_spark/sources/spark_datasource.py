@@ -1,4 +1,4 @@
-"""First-class Spark Data Source for native TileDB arrays (Spark 4
+"""Spark Python Data Source for native TileDB arrays (Spark 4
 Python Data Source API): ``spark.read.format("tiledb_native")`` /
 ``df.write.format("tiledb_native")`` over bare on-disk arrays — schema
 from the array's own blob, one Spark InputPartition per domain split,
@@ -14,10 +14,21 @@ point the reference occupies inside MariaDB (the handler +
 cond_push hooks, ha_mytile.cc:2783-2882), re-expressed as Spark's
 official extension API.
 
+SQL table names are not served from here: :func:`sql_table_from_array`
+registers a view over the JVM ``tiledb_agg`` format
+(``sources/jvm_agg.py``), whose scans plan and read through the resident
+bridge with no Python planner worker per query.  Its read options are
+the ones listed below, with the same meaning.
+
 Options:
 - ``path``   array directory (required)
 - ``at``     unix-millis time travel (open_at parity)
+- ``since``  unix-millis CDC window start: only writes in [since, at]
 - ``target_splits``  max partitions (default 16)
+- ``encryption_key``  the array's AES-256-GCM key
+- ``bbox`` / ``spatial_wkb`` + ``spatial_dims`` + ``spatial_pad``
+  box and polygon-MBR windows on the dims
+  (``tiledb_array.spatial_dim_ranges``)
 - write: ``dims`` comma-separated dim column names +
   ``domain.<dim>`` "lo:hi" bounds — auto-creates the array on first
   write when it does not exist.
@@ -150,53 +161,19 @@ class TileDBNativeReader(DataSourceReader):
         self.target_splits = target_splits
         self.columns = columns
         self.encryption_key = encryption_key
-        self.dim_ranges: dict = {}
         self.conditions: list = []
         info = _backend(encryption_key).info(uri, at=at)
         self._dim_names = [d.name for d in info.dims]
         self._attr_names = [a.name for a in info.attrs]
         self._info = info
-        # spatial / box pushdown OPTIONS (cond_push_func_spatial parity,
-        # mytile/ha_mytile.cc:2312-2507, 2825-2830): plain SQL over the
-        # format has no ST_* functions Catalyst could push, so the MBR
-        # tier arrives as reader options and seeds dim_ranges — splits
-        # outside the box never become tasks (plan_splits prunes on
-        # these ranges exactly like pushed filters).  The EXACT
-        # geometry residual stays with the caller, same two-tier
-        # contract as operators/spatial.st_intersects_native.
-        if bbox:
-            # "dim:lo:hi[;dim:lo:hi...]" — generic per-dim window
-            for part in str(bbox).split(";"):
-                nm, lo_s, hi_s = part.split(":")
-                if nm not in self._dim_names:
-                    raise ValueError(f"bbox names non-dimension {nm!r}")
-                lo, hi = float(lo_s), float(hi_s)
-                self.dim_ranges[nm] = (lo, hi)
-        if spatial_wkb:
-            # WKB polygon (hex) -> padded MBR over two named dims.
-            # spatial_pad is REQUIRED: the dims index centroids, so the
-            # MBR only over-selects when pad >= the corpus's max stored
-            # half-extent (see st_intersects_native's contract).
-            if spatial_pad is None or spatial_dims is None:
-                raise ValueError(
-                    "spatial_wkb requires spatial_dims='x,y' and "
-                    "spatial_pad=<max stored half-extent>"
-                )
-            from tiledb_mariadb_spark.operators.spatial import (  # noqa: PLC0415
-                parse_wkb_polygon,
-            )
+        from tiledb_mariadb_spark.sources.tiledb_array import (  # noqa: PLC0415
+            spatial_dim_ranges,
+        )
 
-            dx, dy = [s.strip() for s in str(spatial_dims).split(",")]
-            if dx not in self._dim_names or dy not in self._dim_names:
-                raise ValueError(
-                    f"spatial_dims {spatial_dims!r} must name dims"
-                )
-            pad = float(spatial_pad)
-            pts = parse_wkb_polygon(bytes.fromhex(str(spatial_wkb)))
-            xs = [p[0] for p in pts]
-            ys = [p[1] for p in pts]
-            self._narrow(dx, min(xs) - pad, max(xs) + pad)
-            self._narrow(dy, min(ys) - pad, max(ys) + pad)
+        # bbox / spatial options seed the pushed dim ranges
+        self.dim_ranges: dict = spatial_dim_ranges(
+            self._dim_names, bbox, spatial_wkb, spatial_dims, spatial_pad
+        )
 
     def _narrow(self, name, lo, hi):
         from tiledb_mariadb_spark.sources.tiledb_array import (  # noqa: PLC0415
@@ -550,14 +527,36 @@ def register_tiledb_native(spark) -> None:
     spark.dataSource.register(TileDBNativeDataSource)
 
 
+# the read options of format("tiledb_native"), which a SQL table view
+# carries to tiledb_agg
+_VIEW_OPTIONS = frozenset({
+    "at", "since", "target_splits", "encryption_key", "bbox",
+    "spatial_wkb", "spatial_dims", "spatial_pad",
+})
+
+
 def sql_table_from_array(spark, table_name: str, uri: str, **options) -> None:
     """SQL-surface registration — the ``CREATE TABLE ... ENGINE=mytile
-    uri='...'`` analog: the bare array becomes a plain SQL table name
-    (temp view over the registered format, so pushFilters still applies).
-    Spark's catalog `CREATE TABLE ... USING <python-ds>` does not forward
-    OPTIONS to the Python read path (verified on 4.1), hence the view."""
-    register_tiledb_native(spark)
-    reader = spark.read.format("tiledb_native").option("path", uri)
-    for k, v in options.items():
-        reader = reader.option(k, str(v))
-    reader.load().createOrReplaceTempView(table_name)
+    uri='...'`` analog: the bare array becomes a plain SQL table name, a
+    temp view over the JVM ``tiledb_agg`` format (``jvm_agg.agg_reader``).
+    Each query plans through the resident bridge's ``splits`` command and
+    reads Arrow batches from its ``rows`` command, with filters, columns,
+    aggregates and top-k pushed through DataSource V2; no Python
+    DataSource planner runs, so ``TileDBNativeReader`` options and hooks
+    no longer apply to the view.  The read options of
+    ``format("tiledb_native")`` (``at``, ``since``, ``target_splits``,
+    ``encryption_key``, ``bbox``, ``spatial_*``) keep their meaning; any
+    other option raises ValueError instead of being dropped.  A view is
+    used because Spark's catalog ``CREATE TABLE ... USING`` does not
+    forward OPTIONS to a Python data source's reads (verified on 4.1)."""
+    unknown = sorted(set(options) - _VIEW_OPTIONS)
+    if unknown:
+        raise ValueError(
+            f"sql_table_from_array: unknown read option(s) {unknown}; "
+            f"known: {sorted(_VIEW_OPTIONS)}"
+        )
+    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader  # noqa: PLC0415
+
+    agg_reader(spark, uri, **options).load().createOrReplaceTempView(
+        table_name
+    )

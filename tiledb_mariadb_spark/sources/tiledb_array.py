@@ -600,6 +600,51 @@ def narrow_range(cur, lo, hi):
     )
 
 
+def spatial_dim_ranges(dim_names, bbox=None, spatial_wkb=None,
+                       spatial_dims=None, spatial_pad=None) -> dict:
+    """The box/spatial read options as pushed dim ranges
+    (cond_push_func_spatial parity, mytile/ha_mytile.cc:2312-2507,
+    2825-2830).  Plain SQL over the formats has no ST_* functions
+    Catalyst could push, so the MBR tier arrives as options and seeds
+    the scan's dim ranges: splits outside the box never become tasks.
+    The EXACT geometry residual stays with the caller, the same two-tier
+    contract as operators/spatial.st_intersects_native.
+
+    ``bbox`` is ``"dim:lo:hi[;dim:lo:hi...]"``, a per-dim window.
+    ``spatial_wkb`` is a hex WKB polygon whose MBR, padded by
+    ``spatial_pad`` (required: the dims index centroids, so the MBR only
+    over-selects when pad >= the corpus's max stored half-extent),
+    narrows the two ``spatial_dims`` ``"x,y"``.  Returns ``{dim: (lo,
+    hi)}``; names that are not dims raise ValueError."""
+    ranges: dict = {}
+    if bbox:
+        for part in str(bbox).split(";"):
+            nm, lo_s, hi_s = part.split(":")
+            if nm not in dim_names:
+                raise ValueError(f"bbox names non-dimension {nm!r}")
+            ranges[nm] = (float(lo_s), float(hi_s))
+    if spatial_wkb:
+        if spatial_pad is None or spatial_dims is None:
+            raise ValueError(
+                "spatial_wkb requires spatial_dims='x,y' and "
+                "spatial_pad=<max stored half-extent>"
+            )
+        from tiledb_mariadb_spark.operators.spatial import (  # noqa: PLC0415
+            parse_wkb_polygon,
+        )
+
+        dx, dy = [s.strip() for s in str(spatial_dims).split(",")]
+        if dx not in dim_names or dy not in dim_names:
+            raise ValueError(f"spatial_dims {spatial_dims!r} must name dims")
+        pad = float(spatial_pad)
+        pts = parse_wkb_polygon(bytes.fromhex(str(spatial_wkb)))
+        for nm, vals in ((dx, [p[0] for p in pts]), (dy, [p[1] for p in pts])):
+            ranges[nm] = narrow_range(
+                ranges.get(nm), min(vals) - pad, max(vals) + pad
+            )
+    return ranges
+
+
 def merge_ranges(
     ranges: list[tuple[Any, Any]],
 ) -> list[tuple[Any, Any]]:

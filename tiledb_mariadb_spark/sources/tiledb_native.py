@@ -1076,60 +1076,6 @@ def _reverse_pipeline(
     raise NotImplementedError(f"filter type {ftype} decode unsupported")
 
 
-def read_tile_file(
-    path: str,
-    rle_value_size: int | None = None,
-    filters: list | None = None,
-    elem: int = 8,
-    var: bool = False,
-) -> bytes:
-    """Concatenated payload of ALL chunked tiles in a fragment data file
-    (multi-tile files appear when the fragment spans several space tiles).
-    With ``filters`` (the field's pipeline from the array schema) chunks
-    are decoded by reversing the exact pipeline — required for composite
-    pipelines like the 2.x offsets default (DD+BWR+ZSTD).  Without it,
-    the chunk payload is sniffed (zstd frame / zlib / raw).
-    ``rle_value_size`` switches sniffing to the RLE filter (validity
-    tiles).  Files of an encrypted array (key in the process registry —
-    entry APIs enforce key↔schema consistency) decrypt each chunk
-    before pipeline reversal."""
-    from tiledb_mariadb_spark.sources.tiledb_native_crypto import (  # noqa: PLC0415
-        decrypt_chunk,
-        key_for_path,
-    )
-
-    enc_key = key_for_path(path)
-    buf = open(path, "rb").read()
-    out = bytearray()
-    pos = 0
-    while pos < len(buf):
-        (num_chunks,) = struct.unpack_from("<Q", buf, pos)
-        pos += 8
-        for _ in range(num_chunks):
-            orig, filt, meta = struct.unpack_from("<III", buf, pos)
-            pos += 12
-            mbytes = buf[pos : pos + meta]
-            pos += meta
-            payload = buf[pos : pos + filt]
-            pos += filt
-            if enc_key is not None:
-                mbytes, payload = decrypt_chunk(enc_key, payload, mbytes)
-            if filters:
-                out += _reverse_pipeline(filters, [mbytes], payload, elem,
-                                         var=var)
-            elif rle_value_size is not None and filt != orig:
-                out += _rle_decode(payload, rle_value_size, orig)
-            elif payload[:4] == ZSTD_MAGIC:
-                out += _zstd_decode(payload, orig)
-            elif payload[:2] in (b"\x78\x01", b"\x78\x9c", b"\x78\xda"):
-                out += zlib.decompress(payload)
-            else:
-                if len(payload) != orig:
-                    raise ValueError(f"chunk {len(payload)} != {orig}")
-                out += payload
-    return bytes(out)
-
-
 def _frag_ts(name: str) -> int:
     try:
         return int(name.strip("_").split("_")[0])

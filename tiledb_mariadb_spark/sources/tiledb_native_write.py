@@ -2499,11 +2499,16 @@ def _field_tile_stats(field, vals, slices):
     arr = None
     try:
         cand = np.asarray(vals)
+        if code in "bBhHiIqQ" and cand.dtype.kind not in "iu":
+            # python ints mixing >= 2**63 with small ones infer float64
+            # (inexact, and unpackable as an integer stat): use the
+            # field's own integer type
+            cand = np.asarray(vals, dtype=np.dtype("<" + code))
         if cand.dtype.kind in "iuf" and not (
             cand.dtype.kind == "f" and np.isnan(cand).any()
         ):
             arr = cand
-    except (TypeError, ValueError):
+    except (TypeError, ValueError, OverflowError):
         arr = None
     if arr is not None:
         mins = [arr[s:e].min().item() for s, e in slices]

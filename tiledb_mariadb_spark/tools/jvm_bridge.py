@@ -29,27 +29,33 @@ from the command line:
   for SupportsPushDownTopN;
 - ``stats --uri U``: planning statistics (rows exact-or-upper-bound,
   on-disk/fixed-width sizeInBytes) for SupportsReportStatistics;
-- ``splits --uri U [--conditions J]``: the split plan for the scan —
-  pushed dim ranges narrowed by ``scan_ranges`` (condition-NED), task
-  count sized by the estimated matching cells, cut by ``scan_splits``
-  (dim0 cuts / R-tree weights / string boundary keys); ``[]`` when the
-  plan is provably empty;
+- ``splits --uri U [--conditions J] [--target-splits N] [--bbox B]
+  [--spatial-wkb W --spatial-dims x,y --spatial-pad P]``: the split plan
+  for the scan — the box/spatial options (``spatial_dim_ranges``, the
+  parser the ``tiledb_native`` reader uses) and pushed dim ranges
+  narrowed by ``scan_ranges`` (since window, condition-NED), task count
+  sized by the estimated matching cells up to ``--target-splits``, cut
+  by ``scan_splits`` (dim0 cuts / R-tree weights / string boundary
+  keys); ``[]`` when the plan is provably empty;
 - ``rows --uri U [--ranges J] [--conditions J] [--columns J]
   [--limit N]``: the decoded table — pushed conditions applied EXACTLY
   (QueryCondition analog), projection pruned, and an advisory
   per-split LIMIT truncation, so the fallback scan is filter-, column-
   and limit-pushed like the Python datasource.
 
+Every command takes ``--at`` (time travel), ``--since`` (the CDC
+window start: reads, aggregates and top-k bounds see only the
+fragments written in ``[since, at]``) and ``--encryption-key``.
 Everything prints to stdout; errors exit nonzero with the reason on
 stderr (the Java side surfaces both).
 
 Wire of ``serve``: every frame is a 4-byte big-endian length and that
 many bytes.  A request is a header frame (the JSON argv list ``main``
-parses, ``--uri``/``--at``/``--encryption-key`` included), then zero or
-more payload frames (``write`` rows) ended by an empty frame.  The reply
-is ``main``'s stdout as frames ended by an empty frame, then one status
-frame ``{"rc": int, "stderr": str}``.  Stdin EOF between requests ends
-the loop with exit status 0.
+parses, ``--uri``/``--at``/``--since``/``--encryption-key`` included),
+then zero or more payload frames (``write`` rows) ended by an empty
+frame.  The reply is ``main``'s stdout as frames ended by an empty
+frame, then one status frame ``{"rc": int, "stderr": str}``.  Stdin EOF
+between requests ends the loop with exit status 0.
 """
 
 from __future__ import annotations
@@ -89,8 +95,9 @@ def _parse_conditions(s: str | None):
     return out or None
 
 
-def _fold_dim_ranges(schema, conds):
-    """Fold integer-dim range conjuncts into ``{dim: (lo, hi)}``.
+def _fold_dim_ranges(schema, conds, seed=None):
+    """Fold integer-dim range conjuncts into ``{dim: (lo, hi)}``,
+    narrowing the ``seed`` ranges when given.
 
     Returns ``(ranges, rest)`` where ``rest`` holds every conjunct not
     expressible as one inclusive per-dim range (attr conditions, IN,
@@ -105,7 +112,7 @@ def _fold_dim_ranges(schema, conds):
     non_nullable = dim_names | {
         a.name for a in schema.attrs if not a.nullable
     }
-    ranges: dict = {}
+    ranges: dict = dict(seed or {})
     rest = []
 
     def _narrow(name, lo, hi):
@@ -297,7 +304,7 @@ def _rows(a, info, want, rng, conds) -> None:
     need = set(want) | {c[0] for c in conds or []}
     names, arrays = read_native_array_range_np(
         a.uri, ranges=list(rng), columns=list(need), at=a.at,
-        prune_conditions=list(conds) if conds else None,
+        since=a.since, prune_conditions=list(conds) if conds else None,
     )
     mask = None
     for c in conds or []:
@@ -336,7 +343,8 @@ def _stats_payload(a) -> dict | None:
     )
 
     cnt = count_native_array(a.uri, at=a.at)
-    exact = cnt is not None
+    # under a since window the whole array's count is an upper bound
+    exact = cnt is not None and a.since is None
     if cnt is None:
         cnt = estimate_range_cells(a.uri, None, at=a.at)
     if cnt is None:
@@ -358,7 +366,7 @@ def _stats_payload(a) -> dict | None:
                 cnt = min(cnt, est)
                 exact = False
     disk = 0
-    for frag in _fragment_dirs(a.uri, at=a.at):
+    for frag in _fragment_dirs(a.uri, at=a.at, since=a.since):
         for f in _os.listdir(frag):
             fp = _os.path.join(frag, f)
             if _os.path.isfile(fp):
@@ -386,6 +394,7 @@ def main(argv=None) -> int:
     )
     p.add_argument("--uri", required=True)
     p.add_argument("--at", type=int, default=None)
+    p.add_argument("--since", type=int, default=None)  # CDC window start
     p.add_argument("--encryption-key", default=None)
     p.add_argument("--aggs", default="")
     p.add_argument("--ranges", default=None)  # JSON [[lo,hi],...] | null
@@ -396,6 +405,11 @@ def main(argv=None) -> int:
     p.add_argument("--topk", default=None)  # "col:asc|desc:k"
     p.add_argument("--group", default=None)  # "dim0:width"
     p.add_argument("--target-splits", type=int, default=16)
+    # the box/spatial read options (splits only: spatial_dim_ranges)
+    p.add_argument("--bbox", default=None)
+    p.add_argument("--spatial-wkb", default=None)
+    p.add_argument("--spatial-dims", default=None)
+    p.add_argument("--spatial-pad", default=None)
     a = p.parse_args(argv)
 
     from tiledb_mariadb_spark.sources.tiledb_array import (  # noqa: PLC0415
@@ -412,6 +426,19 @@ def main(argv=None) -> int:
     if a.encryption_key is not None:
         open_encryption(a.uri, a.encryption_key)
 
+    if a.since is not None and a.cmd in ("agg", "gagg", "topk"):
+        from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
+            window_destroyed,
+        )
+
+        if window_destroyed(a.uri, a.since):
+            # the scan of a destroyed window raises (scan_ranges); no
+            # metadata answer may stand in for it
+            print(json.dumps(
+                {"ok": False, "reason": "since window destroyed"}
+            ))
+            return 0
+
     if a.cmd == "schema":
         try:
             info = NativeDecoderBackend(
@@ -421,7 +448,7 @@ def main(argv=None) -> int:
             print(json.dumps({"ok": False, "reason": str(e)}))
             return 0
         ddl = ", ".join(
-            f"{x.name} {x.dtype}" for x in list(info.dims) + list(info.attrs)
+            f"`{x.name}` {x.dtype}" for x in list(info.dims) + list(info.attrs)
         )
         print(json.dumps({"ok": True, "ddl": ddl}))
         return 0
@@ -429,10 +456,11 @@ def main(argv=None) -> int:
     if a.cmd == "agg":
         reqs = [r for r in a.aggs.split(";") if r]
         conds = _parse_conditions(a.conditions)
-        if conds:
+        if conds or a.since is not None:
             # range-stealing composition (ha_mytile.cc:634-640): pushed
-            # dim ranges window the metadata aggregate; anything else
-            # residual makes stats unprovable -> honest scan fallback
+            # dim ranges (and the since window) window the metadata
+            # aggregate; anything else residual makes stats unprovable
+            # -> honest scan fallback
             from tiledb_mariadb_spark.sources.tiledb_native_agg import (  # noqa: PLC0415
                 windowed_agg_native,
             )
@@ -451,7 +479,8 @@ def main(argv=None) -> int:
             fcols = sorted({
                 r.partition(":")[2] for r in reqs if ":" in r
             })
-            w = windowed_agg_native(a.uri, ranges, fields=fcols, at=a.at)
+            w = windowed_agg_native(a.uri, ranges, fields=fcols, at=a.at,
+                                    since=a.since)
             vals = None if w is None else _extract(
                 reqs, w["count"], w["fields"]
             )
@@ -567,7 +596,7 @@ def main(argv=None) -> int:
             })
             r = grid_agg_native(
                 a.uri, dict(gspecs), fields=fcols, at=a.at,
-                ranges=ranges or None,
+                since=a.since, ranges=ranges or None,
             )
         except ValueError as e:
             print(json.dumps({"ok": False, "reason": str(e)}))
@@ -614,7 +643,8 @@ def main(argv=None) -> int:
             be = NativeDecoderBackend(encryption_key=a.encryption_key)
             thr = be.topk_threshold(
                 a.uri, col, int(k), ascending=direction == "asc",
-                at=a.at, conditions=_parse_conditions(a.conditions),
+                at=a.at, since=a.since,
+                conditions=_parse_conditions(a.conditions),
             )
             print(json.dumps({"ok": True, "thr": thr}, default=_json_cell))
         except Exception as e:  # noqa: BLE001 - bridge boundary
@@ -769,18 +799,23 @@ def main(argv=None) -> int:
         from tiledb_mariadb_spark.sources.tiledb_array import (  # noqa: PLC0415
             scan_ranges,
             scan_splits,
+            spatial_dim_ranges,
         )
 
         be = NativeDecoderBackend(encryption_key=a.encryption_key)
         try:
             info = be.info(a.uri, at=a.at)
             conds = _parse_conditions(a.conditions)
-            dim_ranges: dict = {}
+            dim_ranges = spatial_dim_ranges(
+                [d.name for d in info.dims], a.bbox, a.spatial_wkb,
+                a.spatial_dims, a.spatial_pad,
+            )
             if conds:
                 schema = parse_array_schema(_schema_path(a.uri))
-                dim_ranges, _rest = _fold_dim_ranges(schema, conds)
+                dim_ranges, _rest = _fold_dim_ranges(schema, conds,
+                                                     dim_ranges)
             ranges = scan_ranges(be, a.uri, info, dim_ranges, conds, a.at,
-                                 None)
+                                 a.since)
             splits = []
             if ranges is not None:
                 # size the task count by the metadata UPPER BOUND on
@@ -806,7 +841,7 @@ def main(argv=None) -> int:
                     except (OSError, ValueError):
                         pass
                 splits = scan_splits(be, a.uri, info, ranges, target, a.at,
-                                     None)
+                                     a.since)
             out = [[list(r) for r in s] for s in splits]
             try:  # piggyback planning stats: one request serves both
                 st = _stats_payload(a)
