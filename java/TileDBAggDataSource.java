@@ -21,7 +21,11 @@
 //   EXACTLY by the Python decoder, so accepted filters carry no Spark
 //   residual) and column pruning on the row scan, with the split plan
 //   intersected with pushed dim ranges + the condition-NED (zero
-//   partitions when provably empty).
+//   partitions when provably empty);
+// - small reads without a Spark job: a split plan the bridge marks
+//   `local` (at most one split of at most one task's cells) and every
+//   pushed aggregate are DSv2 LocalScans, read in the driver, and
+//   LocalProjectStrategy keeps the projection over them there too.
 //
 // All delegation goes to resident bridge processes
 // (tiledb_mariadb_spark.tools.jvm_bridge serve) running the repo's
@@ -61,8 +65,13 @@ import java.util.Map;
 import java.util.OptionalLong;
 import java.util.concurrent.ConcurrentHashMap;
 import java.util.concurrent.ConcurrentLinkedDeque;
+import org.apache.spark.sql.classic.SparkSession;
 import org.apache.spark.sql.catalyst.InternalRow;
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow;
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression;
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection;
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan;
+import org.apache.spark.sql.catalyst.plans.logical.Project;
 import org.apache.spark.sql.connector.catalog.SupportsRead;
 import org.apache.spark.sql.connector.catalog.SupportsWrite;
 import org.apache.spark.sql.connector.catalog.Table;
@@ -87,6 +96,7 @@ import org.apache.spark.sql.connector.expressions.aggregate.Min;
 import org.apache.spark.sql.connector.expressions.aggregate.Sum;
 import org.apache.spark.sql.connector.read.Batch;
 import org.apache.spark.sql.connector.read.InputPartition;
+import org.apache.spark.sql.connector.read.LocalScan;
 import org.apache.spark.sql.connector.read.PartitionReader;
 import org.apache.spark.sql.connector.read.PartitionReaderFactory;
 import org.apache.spark.sql.connector.read.Scan;
@@ -107,6 +117,10 @@ import org.apache.spark.sql.connector.write.Write;
 import org.apache.spark.sql.connector.write.WriteBuilder;
 import org.apache.spark.sql.connector.write.WriterCommitMessage;
 import org.apache.spark.sql.connector.read.SupportsReportStatistics;
+import org.apache.spark.sql.execution.LocalTableScanExec;
+import org.apache.spark.sql.execution.SparkPlan;
+import org.apache.spark.sql.execution.SparkStrategy;
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation;
 import org.apache.spark.sql.sources.DataSourceRegister;
 import org.apache.spark.sql.sources.EqualNullSafe;
 import org.apache.spark.sql.sources.EqualTo;
@@ -128,6 +142,7 @@ import org.apache.spark.sql.vectorized.ArrowColumnVector;
 import org.apache.spark.sql.vectorized.ColumnVector;
 import org.apache.spark.sql.vectorized.ColumnarBatch;
 import org.apache.spark.unsafe.types.UTF8String;
+import scala.jdk.javaapi.CollectionConverters;
 
 public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
 
@@ -1072,38 +1087,37 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
           throw new RuntimeException("tiledb_agg: columns JSON: " + e, e);
         }
       }
-      return new RowScan(s, options, condsJson(), columnsJson, limit);
+      // the query's one planning request; every later request of the
+      // scan reads the snapshot it was planned at
+      Map<String, String> opts = new java.util.HashMap<>(options.asCaseSensitiveMap());
+      String cj = condsJson();
+      JsonNode plan = planSplits(opts, cj);
+      if (!options.containsKey("at") && plan.hasNonNull("at")) {
+        opts.put("at", plan.path("at").asText());
+      }
+      return plan.path("local").asBoolean(false)
+          ? new LocalRowScan(s, opts, cj, columnsJson, limit, plan)
+          : new RowScan(s, opts, cj, columnsJson, limit, plan);
     }
   }
 
   // ---- metadata-aggregate scan: stat rows, zero/edge tiles decoded ----------
 
-  static class MetadataAggScan implements Scan, Batch, SupportsReportStatistics {
+  /** The pushed aggregate's rows, already in the driver. */
+  static class MetadataAggScan implements LocalScan, SupportsReportStatistics {
     private final StructType schema;
     private final List<Object[]> rows;
-
-    @Override
-    public Statistics estimateStatistics() {
-      final long n = rows.size();
-      final long w = 8L * Math.max(1, schema.fields().length);
-      return new Statistics() {
-        @Override
-        public OptionalLong sizeInBytes() {
-          return OptionalLong.of(n * w);
-        }
-
-        @Override
-        public OptionalLong numRows() {
-          return OptionalLong.of(n);
-        }
-      };
-    }
     private final boolean grouped;
 
     MetadataAggScan(StructType schema, List<Object[]> rows, boolean grouped) {
       this.schema = schema;
       this.rows = rows;
       this.grouped = grouped;
+    }
+
+    @Override
+    public Statistics estimateStatistics() {
+      return statistics(true, rows.size(), rows.size() * 8L * Math.max(1, schema.fields().length));
     }
 
     @Override
@@ -1119,73 +1133,192 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
     }
 
     @Override
-    public Batch toBatch() {
-      return this;
-    }
-
-    @Override
-    public InputPartition[] planInputPartitions() {
-      return new InputPartition[] {new StatRowsPartition(rows)};
-    }
-
-    @Override
-    public PartitionReaderFactory createReaderFactory() {
-      return new StatRowsReaderFactory();
+    public InternalRow[] rows() {
+      InternalRow[] out = new InternalRow[rows.size()];
+      for (int i = 0; i < out.length; i++) {
+        out[i] = new GenericInternalRow(rows.get(i).clone());
+      }
+      return out;
     }
   }
 
-  static class StatRowsPartition implements InputPartition {
-    final List<Object[]> rows;
+  static Statistics statistics(boolean known, long rows, long bytes) {
+    return new Statistics() {
+      @Override
+      public OptionalLong sizeInBytes() {
+        return known ? OptionalLong.of(bytes) : OptionalLong.empty();
+      }
 
-    StatRowsPartition(List<Object[]> rows) {
-      this.rows = rows;
-    }
-  }
-
-  static class StatRowsReaderFactory implements PartitionReaderFactory {
-    @Override
-    public PartitionReader<InternalRow> createReader(InputPartition p) {
-      List<Object[]> rows = ((StatRowsPartition) p).rows;
-      return new PartitionReader<InternalRow>() {
-        private int i = -1;
-
-        @Override
-        public boolean next() {
-          i++;
-          return i < rows.size();
-        }
-
-        @Override
-        public InternalRow get() {
-          return new GenericInternalRow(rows.get(i).clone());
-        }
-
-        @Override
-        public void close() {}
-      };
-    }
+      @Override
+      public OptionalLong numRows() {
+        return known ? OptionalLong.of(rows) : OptionalLong.empty();
+      }
+    };
   }
 
   // ---- row-scan path (bridge Arrow IPC; filters exact, columns pruned) -----
 
-  static class RowScan implements Scan, Batch, SupportsReportStatistics, SupportsRuntimeFiltering {
-    private final StructType schema;
-    private final Map<String, String> opts;
-    private final String condsJson;
-    private final String columnsJson;
-    private final Integer limit;
+  /** The bridge's split plan for one condition set (jvm_bridge.py
+   * splits): the splits, the piggybacked stats, the {@code local} flag
+   * and the snapshot {@code at} the plan was made at. */
+  static JsonNode planSplits(Map<String, String> opts, String condsJson) {
+    CaseInsensitiveStringMap o = new CaseInsensitiveStringMap(opts);
+    return Bridge.fromOptions(o)
+        .call(
+            "splits",
+            "--conditions", condsJson,
+            "--target-splits", o.get("target_splits"),
+            "--bbox", o.get("bbox"),
+            "--spatial-wkb", o.get("spatial_wkb"),
+            "--spatial-dims", o.get("spatial_dims"),
+            "--spatial-pad", o.get("spatial_pad"));
+  }
 
-    RowScan(
+  /** A filter- and column-pushed scan over the bridge's split plan.
+   * {@code opts} carry the snapshot the plan was made at, so every
+   * request of the scan sees one array state. */
+  abstract static class BridgeRowScan implements Scan, SupportsReportStatistics {
+    final StructType schema;
+    final Map<String, String> opts;
+    final String condsJson;
+    final String columnsJson;
+    final Integer limit;
+
+    // ONE planning request per condition set: the splits reply
+    // piggybacks the stats payload, cached here and keyed by the
+    // effective condition set (runtime filters invalidate it)
+    private transient JsonNode planOut;
+    private transient String planKey;
+
+    BridgeRowScan(
         StructType schema,
-        CaseInsensitiveStringMap options,
+        Map<String, String> opts,
         String condsJson,
         String columnsJson,
-        Integer limit) {
+        Integer limit,
+        JsonNode plan) {
       this.schema = schema;
-      this.opts = new java.util.HashMap<>(options.asCaseSensitiveMap());
+      this.opts = opts;
       this.condsJson = condsJson;
       this.columnsJson = columnsJson;
       this.limit = limit;
+      this.planOut = plan;
+      this.planKey = condsJson == null ? "" : condsJson;
+    }
+
+    String effectiveConds() {
+      return condsJson;
+    }
+
+    JsonNode planCall() {
+      String key = effectiveConds() == null ? "" : effectiveConds();
+      if (planOut == null || !key.equals(planKey)) {
+        planOut = planSplits(opts, effectiveConds());
+        planKey = key;
+      }
+      return planOut;
+    }
+
+    /** Metadata-only planning statistics (records_in_range parity,
+     * ha_mytile.cc:1424-1468): exact footer COUNT or the R-tree
+     * upper bound, narrowed by pushed dim ranges — lets Spark pick
+     * broadcast joins for genuinely small arrays instead of assuming
+     * the default (huge) size.  Served from the cached splits call. */
+    @Override
+    public Statistics estimateStatistics() {
+      JsonNode plan = planCall();
+      JsonNode st = plan.path("ok").asBoolean(false) ? plan.path("stats") : null;
+      boolean ok = st != null && !st.isNull() && st.has("rows");
+      return statistics(
+          ok, ok ? st.path("rows").asLong() : 0, ok ? st.path("bytes").asLong() : 0);
+    }
+
+    @Override
+    public StructType readSchema() {
+      return schema;
+    }
+
+    @Override
+    public String description() {
+      return "TileDBBridgeRowScan"
+          + (this instanceof LocalScan ? " Local" : "")
+          + (condsJson == null ? "" : " PushedConditions: " + condsJson)
+          + (columnsJson == null ? "" : " PrunedColumns: " + columnsJson)
+          + (limit == null ? "" : " PushedLimit: " + limit);
+    }
+
+    /** One partition per planned split: scan_ranges (pushed dim ranges
+     * + condition-NED) then scan_splits (dim0 cuts / R-tree weights /
+     * string boundary keys), the planner every read surface shares.  An
+     * empty list = provably empty -> ZERO partitions; a null entry =
+     * unbounded full scan; no usable reply = one unbounded scan. */
+    RowsPartition[] partitions() {
+      JsonNode out = planCall();
+      List<RowsPartition> parts = new ArrayList<>();
+      if (out.path("ok").asBoolean(false) && out.path("splits").isArray()) {
+        for (JsonNode s : out.path("splits")) {
+          parts.add(
+              new RowsPartition(
+                  opts, s.isNull() ? null : s.toString(), effectiveConds(), columnsJson, limit));
+        }
+      } else {
+        parts.add(new RowsPartition(opts, null, effectiveConds(), columnsJson, limit));
+      }
+      return parts.toArray(new RowsPartition[0]);
+    }
+  }
+
+  /** A plan of at most one split small enough for one task (the
+   * bridge's {@code local} flag): Spark plans it as a
+   * LocalTableScanExec, whose collect() runs no job.  The rows are read
+   * once, through the same {@code rows} request and reader a task
+   * would use, and copied out of the Arrow batches. */
+  static class LocalRowScan extends BridgeRowScan implements LocalScan {
+    private transient InternalRow[] rows;
+
+    LocalRowScan(
+        StructType schema,
+        Map<String, String> opts,
+        String condsJson,
+        String columnsJson,
+        Integer limit,
+        JsonNode plan) {
+      super(schema, opts, condsJson, columnsJson, limit, plan);
+    }
+
+    @Override
+    public synchronized InternalRow[] rows() {
+      if (rows == null) {
+        UnsafeProjection copy = UnsafeProjection.create(schema);
+        List<InternalRow> out = new ArrayList<>();
+        for (RowsPartition p : partitions()) {
+          ColumnarRowsReader r = new ColumnarRowsReader(p, schema);
+          try {
+            while (r.next()) {
+              java.util.Iterator<InternalRow> it = r.get().rowIterator();
+              while (it.hasNext()) {
+                out.add(copy.apply(it.next()).copy());
+              }
+            }
+          } finally {
+            r.close();
+          }
+        }
+        rows = out.toArray(new InternalRow[0]);
+      }
+      return rows;
+    }
+  }
+
+  static class RowScan extends BridgeRowScan implements Batch, SupportsRuntimeFiltering {
+    RowScan(
+        StructType schema,
+        Map<String, String> opts,
+        String condsJson,
+        String columnsJson,
+        Integer limit,
+        JsonNode plan) {
+      super(schema, opts, condsJson, columnsJson, limit, plan);
     }
 
     // runtime (DPP-style) conditions folded in AFTER planning starts:
@@ -1260,71 +1393,9 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
       }
     }
 
-    private String effectiveConds() {
+    @Override
+    String effectiveConds() {
       return runtimeCondsJson != null ? runtimeCondsJson : condsJson;
-    }
-
-    // ONE planning request per query: the splits reply piggybacks the
-    // stats payload, cached here and keyed by the effective condition
-    // set (runtime filters invalidate it)
-    private transient JsonNode planOut;
-    private transient String planKey;
-
-    private JsonNode planCall() {
-      String key = effectiveConds() == null ? "" : effectiveConds();
-      if (planOut == null || !key.equals(planKey)) {
-        CaseInsensitiveStringMap o = new CaseInsensitiveStringMap(opts);
-        planOut =
-            Bridge.fromOptions(o)
-                .call(
-                    "splits",
-                    "--conditions", effectiveConds(),
-                    "--target-splits", o.get("target_splits"),
-                    "--bbox", o.get("bbox"),
-                    "--spatial-wkb", o.get("spatial_wkb"),
-                    "--spatial-dims", o.get("spatial_dims"),
-                    "--spatial-pad", o.get("spatial_pad"));
-        planKey = key;
-      }
-      return planOut;
-    }
-
-    /** Metadata-only planning statistics (records_in_range parity,
-     * ha_mytile.cc:1424-1468): exact footer COUNT or the R-tree
-     * upper bound, narrowed by pushed dim ranges — lets Spark pick
-     * broadcast joins for genuinely small arrays instead of assuming
-     * the default (huge) size.  Served from the cached splits call. */
-    @Override
-    public Statistics estimateStatistics() {
-      JsonNode plan = planCall();
-      JsonNode st = plan.path("ok").asBoolean(false) ? plan.path("stats") : null;
-      final boolean ok = st != null && !st.isNull() && st.has("rows");
-      final long rows = ok ? st.path("rows").asLong() : 0;
-      final long bytes = ok ? st.path("bytes").asLong() : 0;
-      return new Statistics() {
-        @Override
-        public OptionalLong sizeInBytes() {
-          return ok ? OptionalLong.of(bytes) : OptionalLong.empty();
-        }
-
-        @Override
-        public OptionalLong numRows() {
-          return ok ? OptionalLong.of(rows) : OptionalLong.empty();
-        }
-      };
-    }
-
-    @Override
-    public StructType readSchema() {
-      return schema;
-    }
-
-    @Override
-    public String description() {
-      return "TileDBBridgeRowScan"
-          + (condsJson == null ? "" : " PushedConditions: " + condsJson)
-          + (columnsJson == null ? "" : " PrunedColumns: " + columnsJson)
-          + (limit == null ? "" : " PushedLimit: " + limit);
     }
 
     @Override
@@ -1334,23 +1405,7 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
 
     @Override
     public InputPartition[] planInputPartitions() {
-      // split plan from the bridge: scan_ranges (pushed dim ranges +
-      // condition-NED) then scan_splits (dim0 cuts / R-tree weights /
-      // string boundary keys), the planner every read surface shares.
-      // An empty list = provably empty -> ZERO partitions; a null entry
-      // = unbounded full scan; no usable reply = one unbounded scan
-      JsonNode out = planCall();
-      List<InputPartition> parts = new ArrayList<>();
-      if (out.path("ok").asBoolean(false) && out.path("splits").isArray()) {
-        for (JsonNode s : out.path("splits")) {
-          parts.add(
-              new RowsPartition(
-                  opts, s.isNull() ? null : s.toString(), effectiveConds(), columnsJson, limit));
-        }
-      } else {
-        parts.add(new RowsPartition(opts, null, effectiveConds(), columnsJson, limit));
-      }
-      return parts.toArray(new InputPartition[0]);
+      return partitions();
     }
 
     @Override
@@ -1480,6 +1535,73 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
         // release-path best effort
       }
       req.close(); // a stream left unread destroys its bridge
+    }
+  }
+
+  // ---- planner strategy: a projection over a local scan, in the driver -----
+
+  /** Spark puts a Project (the aliases) over every completely pushed
+   * aggregate, and ProjectExec over LocalTableScanExec runs as a Spark
+   * job.  This strategy plans a deterministic, subquery-free Project
+   * straight over one of this format's LocalScans as a
+   * LocalTableScanExec of the projected rows, so collect() stays in the
+   * driver.  A session without it plans the same query correctly, with
+   * one job. */
+  public static final class LocalProjectStrategy extends SparkStrategy {
+    @Override
+    @SuppressWarnings({"unchecked", "rawtypes"})
+    public scala.collection.immutable.Seq<SparkPlan> apply(LogicalPlan plan) {
+      List<SparkPlan> out = new ArrayList<>();
+      if (plan instanceof Project && ((Project) plan).child() instanceof DataSourceV2ScanRelation) {
+        Project p = (Project) plan;
+        DataSourceV2ScanRelation rel = (DataSourceV2ScanRelation) p.child();
+        scala.collection.immutable.Seq exprs = p.projectList();
+        if (ownLocalScan(rel.scan()) && projectable(exprs)) {
+          UnsafeProjection proj = UnsafeProjection.create(exprs, (scala.collection.immutable.Seq) rel.output());
+          proj.initialize(0);
+          List<InternalRow> rows = new ArrayList<>();
+          for (InternalRow r : ((LocalScan) rel.scan()).rows()) {
+            rows.add(proj.apply(r).copy());
+          }
+          out.add(
+              new LocalTableScanExec(
+                  p.output(), CollectionConverters.asScala(rows).toList(), scala.Option.empty()));
+        }
+      }
+      return CollectionConverters.asScala(out).toList();
+    }
+
+    private static boolean ownLocalScan(Scan scan) {
+      // by name: the session may have loaded this jar more than once
+      return scan instanceof LocalScan
+          && scan.getClass().getName().startsWith(TileDBAggDataSource.class.getName() + "$");
+    }
+
+    private static boolean projectable(scala.collection.immutable.Seq<?> exprs) {
+      for (Object o : CollectionConverters.asJava(exprs)) {
+        org.apache.spark.sql.catalyst.expressions.Expression e =
+            (org.apache.spark.sql.catalyst.expressions.Expression) o;
+        if (!e.deterministic() || SubqueryExpression.hasSubquery(e)) {
+          return false;
+        }
+      }
+      return true;
+    }
+  }
+
+  /** Appends {@link LocalProjectStrategy} to {@code session}'s extra
+   * planner strategies unless it is there already. */
+  public static void installStrategy(SparkSession session) {
+    org.apache.spark.sql.ExperimentalMethods x = session.experimental();
+    synchronized (x) {
+      List<SparkStrategy> have = new ArrayList<>(CollectionConverters.asJava(x.extraStrategies()));
+      for (SparkStrategy st : have) {
+        if (st.getClass().getName().equals(LocalProjectStrategy.class.getName())) {
+          return;
+        }
+      }
+      have.add(new LocalProjectStrategy());
+      x.extraStrategies_$eq(CollectionConverters.asScala(have).toList());
     }
   }
 

@@ -245,7 +245,10 @@ def test_sql_surface_metadata_equals_scan(spark, tmp_path):
     """GROUP BY FLOOR(k/300) over format('tiledb_agg'): the bucketed
     metadata rollup equals the scan fallback row-for-row (forced by a
     delete commit, which trips the trust rules)."""
-    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader
+    from tiledb_mariadb_spark.sources.jvm_agg import (
+        agg_reader,
+        scan_descriptions,
+    )
 
     uri = _mk(tmp_path)
     _write(uri, 0, 700, seed=11, ts=10)
@@ -259,12 +262,12 @@ def test_sql_surface_metadata_equals_scan(spark, tmp_path):
         "MIN(tag), MAX(tag) FROM b_sql WHERE k BETWEEN 150 AND 1450 "
         "GROUP BY FLOOR(k/300) ORDER BY b"
     )
-    plan = spark.sql(q)._jdf.queryExecution().executedPlan().toString()
+    plan = " ".join(scan_descriptions(spark.sql(q)))
     assert "GroupedPushedAggregates" in plan, plan
     meta = [tuple(r) for r in spark.sql(q).collect()]
     # no-op delete trips the trust rules -> scan fallback, same numbers
     write_delete_condition(uri, [("v", ">", 10**9)], ts=30)
-    plan2 = spark.sql(q)._jdf.queryExecution().executedPlan().toString()
+    plan2 = " ".join(scan_descriptions(spark.sql(q)))
     assert "GroupedPushedAggregates" not in plan2, plan2
     scan = [tuple(r) for r in spark.sql(q).collect()]
     assert len(meta) == len(scan) > 0

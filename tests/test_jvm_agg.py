@@ -34,6 +34,59 @@ pytestmark = pytest.mark.skipif(
 )
 
 
+def _scans(df):
+    """df's scan descriptions, joined: a local scan's executed plan is a
+    LocalTableScan that prints none."""
+    from tiledb_mariadb_spark.sources.jvm_agg import scan_descriptions
+
+    return " | ".join(scan_descriptions(df))
+
+
+# cells of a scan the bridge plans as two splits (jvm_bridge.py
+# _CELLS_PER_TASK is 262144), so it runs as a batch scan
+_WIDE = 300_000
+
+
+def _mk_wide(tmp_path, n, name="wide"):
+    """k = 0..n-1, v = 3k, q = k % 7, in one fragment."""
+    import numpy as np
+
+    uri = str(tmp_path / name)
+    create_native_array(
+        uri,
+        [NativeDim("k", 1, 1, (0, 10**9), None)],
+        [NativeAttr("v", 1, 1, False, None),
+         NativeAttr("q", 1, 1, False, None)],
+    )
+    k = np.arange(n, dtype=np.int64)
+    write_native_fragment(uri, {"k": k, "v": 3 * k, "q": k % 7}, ts=10,
+                          version=19)
+    return uri
+
+
+def _jobs(spark, fn):
+    """``(fn(), jobs, tasks)``: what ``fn`` returned, and the Spark jobs
+    and tasks it ran."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = "jvm_agg_" + uuid.uuid4().hex
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    tasks = 0
+    for j in jobs:
+        for st in tracker.getJobInfo(j).stageIds:
+            info = tracker.getStageInfo(st)
+            tasks += info.numTasks if info else 0
+    return out, len(jobs), tasks
+
+
 def _mk(tmp_path, n=500, name="arr"):
     uri = str(tmp_path / name)
     create_native_array(
@@ -77,7 +130,7 @@ def test_agg_pushdown_zero_decode(spark, tmp_path):
         "MIN(tag) AS mt, MAX(tag) AS xt FROM jvm_agg_t"
     )
     df = spark.sql(q)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = _scans(df)
     assert "MetadataAggScan" in plan, plan
     row = df.collect()[0]
     assert (
@@ -88,9 +141,7 @@ def test_agg_pushdown_zero_decode(spark, tmp_path):
     # AVG over a NULL-containing nullable column: sum stat withheld,
     # honest refusal (would need a scan — which is poisoned, so assert
     # only the plan)
-    p2 = spark.sql(
-        "SELECT AVG(w) FROM jvm_agg_t"
-    )._jdf.queryExecution().executedPlan().toString()
+    p2 = _scans(spark.sql("SELECT AVG(w) FROM jvm_agg_t"))
     assert "MetadataAggScan" not in p2
     # the poisoned row scan fails loudly — the aggregates above really
     # never touched a data tile
@@ -112,9 +163,7 @@ def test_agg_fallback_is_honest(spark, tmp_path):
         "SELECT MIN(tag) AS mt, MAX(tag) AS xt FROM jvm_agg_f"
     ).collect()[0]
     assert (got.mt, got.xt) == ("t0", "t2")
-    plan = spark.sql(
-        "SELECT MIN(tag) FROM jvm_agg_f"
-    )._jdf.queryExecution().executedPlan().toString()
+    plan = _scans(spark.sql("SELECT MIN(tag) FROM jvm_agg_f"))
     assert "MetadataAggScan" in plan  # string extrema from metadata
     grouped = spark.sql(
         "SELECT tag, COUNT(*) AS n FROM jvm_agg_f GROUP BY tag ORDER BY tag"
@@ -146,7 +195,7 @@ def test_agg_refuses_unprovable_stats(spark, tmp_path):
     df = agg_reader(spark, uri).load()
     df.createOrReplaceTempView("jvm_agg_o")
     q = "SELECT COUNT(*) AS n, MAX(v) AS mx FROM jvm_agg_o"
-    plan = spark.sql(q)._jdf.queryExecution().executedPlan().toString()
+    plan = _scans(spark.sql(q))
     assert "MetadataAggScan" not in plan  # honest refusal
     row = spark.sql(q).collect()[0]
     assert (row.n, row.mx) == (100, 999.0)
@@ -156,7 +205,7 @@ def test_agg_refuses_unprovable_stats(spark, tmp_path):
     write_delete_condition(uri2, [("k", "<", 100)])
     agg_reader(spark, uri2).load().createOrReplaceTempView("jvm_agg_d")
     q2 = "SELECT COUNT(*) AS n, MIN(k) AS mk FROM jvm_agg_d"
-    p2 = spark.sql(q2)._jdf.queryExecution().executedPlan().toString()
+    p2 = _scans(spark.sql(q2))
     assert "MetadataAggScan" not in p2
     row = spark.sql(q2).collect()[0]
     assert (row.n, row.mk) == (400, 100)
@@ -176,7 +225,7 @@ def test_agg_composes_with_pushed_filters(spark, tmp_path):
         "SELECT COUNT(*) AS n, SUM(q) AS sq, MIN(v) AS mn "
         "FROM jvm_agg_c WHERE k BETWEEN 100 AND 299"
     )
-    plan = spark.sql(q)._jdf.queryExecution().executedPlan().toString()
+    plan = _scans(spark.sql(q))
     assert "MetadataAggScan" in plan, plan
     row = spark.sql(q).collect()[0]
     assert (row.n, row.sq, row.mn) == (
@@ -185,7 +234,7 @@ def test_agg_composes_with_pushed_filters(spark, tmp_path):
     # attr-condition residual makes stats unprovable: honest fallback,
     # filter still pushed into the scan (exact), correct value
     q2 = "SELECT COUNT(*) AS n FROM jvm_agg_c WHERE q = 3"
-    p2 = spark.sql(q2)._jdf.queryExecution().executedPlan().toString()
+    p2 = _scans(spark.sql(q2))
     assert "MetadataAggScan" not in p2
     assert "PushedConditions" in p2
     assert spark.sql(q2).collect()[0].n == sum(
@@ -210,7 +259,7 @@ def test_agg_composes_with_pushed_filters(spark, tmp_path):
     agg_reader(spark, big).load().createOrReplaceTempView("jvm_agg_big")
     for cond, want in (("q = 3", 36000), ("q = 1", 0)):
         q3 = f"SELECT COUNT(*) AS n FROM jvm_agg_big WHERE {cond}"
-        p3 = spark.sql(q3)._jdf.queryExecution().executedPlan().toString()
+        p3 = _scans(spark.sql(q3))
         assert "MetadataAggScan" not in p3
         assert "PushedConditions" in p3
         assert spark.sql(q3).collect()[0].n == want
@@ -241,7 +290,7 @@ def test_grouped_rollup_pushdown_zero_scan(spark, tmp_path):
         "MIN(v) AS mn, MAX(v) AS mx FROM jvm_agg_g "
         "GROUP BY FLOOR(k/100) ORDER BY b"
     )
-    plan = spark.sql(q)._jdf.queryExecution().executedPlan().toString()
+    plan = _scans(spark.sql(q))
     assert "GroupedPushedAggregates" in plan, plan
     rows = [(r.b, r.n, r.sv, r.mn, r.mx) for r in spark.sql(q).collect()]
     assert rows == [
@@ -267,7 +316,7 @@ def test_grouped_rollup_pushdown_zero_scan(spark, tmp_path):
         "SELECT k, COUNT(*) AS n FROM jvm_agg_g2 WHERE k < 3 "
         "GROUP BY k ORDER BY k"
     )
-    p2 = spark.sql(q2)._jdf.queryExecution().executedPlan().toString()
+    p2 = _scans(spark.sql(q2))
     assert "GroupedPushedAggregates" in p2
     assert [(r.k, r.n) for r in spark.sql(q2).collect()] == [
         (0, 1), (1, 1), (2, 1),
@@ -287,9 +336,12 @@ def test_scan_filter_pushdown_and_pruning(spark, tmp_path, capsys):
     df = agg_reader(spark, uri).load()
     df.createOrReplaceTempView("jvm_scan_p")
     q = "SELECT v FROM jvm_scan_p WHERE w >= 290 AND k < 299"
-    plan = spark.sql(q)._jdf.queryExecution().executedPlan().toString()
+    plan = _scans(spark.sql(q))
     assert "PushedConditions" in plan and "PrunedColumns" in plan
-    assert "FilterExec" not in plan  # fully absorbed, no residual
+    # fully absorbed: no Filter node above the scan
+    assert "Filter" not in (
+        spark.sql(q)._jdf.queryExecution().executedPlan().toString()
+    )
     # w NULL at k%5==0 -> 290 and 295 drop (3VL), 299 out of range
     assert sorted(r.v for r in spark.sql(q).collect()) == [
         145.5, 146.0, 146.5, 147.0, 148.0, 148.5, 149.0,
@@ -317,6 +369,7 @@ def test_scan_filter_pushdown_and_pruning(spark, tmp_path, capsys):
         ) == 0
         reply = json.loads(capsys.readouterr().out)
         assert reply["ok"] and reply["splits"] == [], reply
+        assert reply["local"], reply  # nothing to read: no Spark job
         assert "rows" in reply["stats"] and "empty" not in reply
     # ... and the JVM plans zero partitions for it: a scan of the
     # poisoned tiles would fail loudly
@@ -355,7 +408,7 @@ def test_grid_rollup_2d_pushdown(spark, tmp_path):
         "SUM(v) AS sv FROM jvm_g2 GROUP BY FLOOR(y/50), FLOOR(x/50) "
         "ORDER BY by, bx"
     )
-    plan = spark.sql(q)._jdf.queryExecution().executedPlan().toString()
+    plan = _scans(spark.sql(q))
     assert "GroupedPushedAggregates" in plan, plan
     exp = collections.defaultdict(lambda: [0, 0])
     for x, y, v in zip(xs, ys, vs):
@@ -370,7 +423,7 @@ def test_grid_rollup_2d_pushdown(spark, tmp_path):
         "SELECT FLOOR(x/50) AS bx, COUNT(*) AS n FROM jvm_g2 "
         "WHERE y BETWEEN 10 AND 59 GROUP BY FLOOR(x/50) ORDER BY bx"
     )
-    p2 = spark.sql(q2)._jdf.queryExecution().executedPlan().toString()
+    p2 = _scans(spark.sql(q2))
     assert "GroupedPushedAggregates" in p2
     exp2 = collections.defaultdict(int)
     for x, y in zip(xs, ys):
@@ -404,7 +457,7 @@ def test_grid_rollup_dense_pushdown(spark, tmp_path):
         "SELECT FLOOR(x/10) AS bx, FLOOR(y/10) AS by, COUNT(*) AS n, "
         "MIN(v) AS mn FROM jvm_gd GROUP BY 1, 2 ORDER BY bx, by"
     )
-    plan = spark.sql(q)._jdf.queryExecution().executedPlan().toString()
+    plan = _scans(spark.sql(q))
     assert "GroupedPushedAggregates" in plan, plan
     names, rows = range_rows(uri)
     ix, iy, iv = names.index("x"), names.index("y"), names.index("v")
@@ -511,7 +564,7 @@ def test_limit_pushdown_truncates_wire(spark, tmp_path):
 
     uri = _mk(tmp_path, n=400)
     df = agg_reader(spark, uri).load().select("k", "v").limit(7)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = _scans(df)
     assert "PushedLimit: 7" in plan, plan
     assert len(df.collect()) == 7
     # limit composes with pushed filters: survivors truncate AFTER the
@@ -532,14 +585,25 @@ def test_runtime_filtering_dpp(spark, tmp_path):
     test_scan_filter_pushdown_and_pruning applies at runtime)."""
     from tiledb_mariadb_spark.sources.jvm_agg import agg_reader
 
-    uri = _mk(tmp_path, n=500)
+    uri = _mk_wide(tmp_path, _WIDE)  # a two-split batch scan
     fact = agg_reader(spark, uri).load()
-    dim = spark.range(0, 100).selectExpr("id*1 AS k").filter("k < 5")
+    dim = (
+        spark.range(0, 100).selectExpr("id AS k", "id % 20 AS g")
+        .filter("g = 0")
+    )
     j = fact.join(dim.hint("broadcast"), "k")
     plan = j._jdf.queryExecution().executedPlan().toString()
     assert "RuntimeFilters: [dynamicpruning" in plan, plan
     got = sorted(r.k for r in j.select("k").collect())
-    assert got == [0, 1, 2, 3, 4]
+    assert got == [0, 20, 40, 60, 80]
+    # a small fact side is read in the driver at planning time, before
+    # any runtime filter exists: it joins exactly without one
+    small = agg_reader(spark, _mk(tmp_path, n=500)).load()
+    j2 = small.join(dim.hint("broadcast"), "k")
+    assert "Local" in _scans(j2)
+    assert sorted(r.k for r in j2.select("k").collect()) == [
+        0, 20, 40, 60, 80,
+    ]
 
 
 def test_write_path_atomic_group(spark, tmp_path):
@@ -643,7 +707,7 @@ def test_topn_pushdown_zone_map(spark, tmp_path):
     poison_data_tiles(uri, frags[:3])
     agg_reader(spark, uri).load().createOrReplaceTempView("jvm_topk")
     df = spark.sql("SELECT k, q FROM jvm_topk ORDER BY q DESC LIMIT 5")
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = _scans(df)
     assert '"q",">="' in plan.replace(" ", ""), plan  # pushed threshold
     got = [(r.k, r.q) for r in df.collect()]
     assert got == [(399, 3099), (398, 3098), (397, 3097),
@@ -739,9 +803,7 @@ def test_resident_bridge_spawns_once(spark, tmp_path):
             "SELECT COUNT(*) AS n, SUM(q) AS s FROM jvm_spawns "
             f"WHERE k BETWEEN {i * 10} AND {i * 10 + 300}"
         )
-        assert "MetadataAggScan" in (
-            df._jdf.queryExecution().executedPlan().toString()
-        )
+        assert "MetadataAggScan" in _scans(df)
         row = df.collect()[0]
         assert (row.n, row.s) == _window_expect(500, i * 10, i * 10 + 300)
         now = _bridge_pids(jvm)
@@ -821,14 +883,15 @@ def test_abandoned_stream_not_reused(spark, tmp_path):
     batches never reach the next request."""
     from tiledb_mariadb_spark.sources.jvm_agg import agg_reader
 
-    n = 70000  # three Arrow batches of at most 32768 rows
-    uri = _mk(tmp_path, n=n)
+    # two splits of five Arrow batches (at most 32768 rows each): a
+    # batch scan, whose task streams the LIMIT abandons
+    n = _WIDE
+    uri = _mk_wide(tmp_path, n)
     agg_reader(spark, uri).load().createOrReplaceTempView("jvm_abandon")
     for _ in range(3):
         df = spark.sql("SELECT k FROM jvm_abandon WHERE k * 2 + 1 > 0 LIMIT 5")
-        assert "PushedLimit" not in (
-            df._jdf.queryExecution().executedPlan().toString()
-        )
+        assert "PushedLimit" not in _scans(df)
+        assert "Local" not in _scans(df)
         assert len(df.collect()) == 5
         row = spark.sql(
             "SELECT COUNT(*) AS n, SUM(q) AS s FROM jvm_abandon WHERE q >= 3"
@@ -955,3 +1018,174 @@ def test_concurrent_first_build_compiles_once(tmp_path, monkeypatch):
         "META-INF/services/org.apache.spark.sql.sources.DataSourceRegister"
         in names
     )
+
+
+# ---- local scans: small reads in the driver, with no Spark job --------------
+
+
+def _small_model(n=2000):
+    import numpy as np
+
+    k = np.arange(n, dtype=np.int64) * 2  # gapped: odd keys are absent
+    return k, k * 7 % 1001, k % 5
+
+
+@pytest.fixture()
+def small_view(spark, tmp_path):
+    """A 2000-cell view ``(name, uri)`` over k = 0, 2, .., v = 7k % 1001,
+    q = k % 5, registered through ``sql_table_from_array``."""
+    from tiledb_mariadb_spark.sources.spark_datasource import (
+        sql_table_from_array,
+    )
+
+    k, v, q = _small_model()
+    uri = str(tmp_path / "small")
+    create_native_array(
+        uri,
+        [NativeDim("k", 1, 1, (0, 10**6), None)],
+        [NativeAttr("v", 1, 1, False, None),
+         NativeAttr("q", 1, 1, False, None)],
+    )
+    write_native_fragment(uri, {"k": k, "v": v, "q": q}, ts=10, version=19)
+    name = "small_" + os.path.basename(str(tmp_path))[-8:].replace("-", "_")
+    sql_table_from_array(spark, name, uri)
+    return name, uri
+
+
+def test_small_reads_run_no_job(spark, small_view):
+    """Point, range, needle, COUNT(*) and windowed aggregate reads of a
+    small array plan as local scans: each runs 0 Spark jobs and answers
+    exactly as the numpy model."""
+    name, _uri = small_view
+    k, v, q = _small_model()
+
+    def rows(sql):
+        return sorted(tuple(r) for r in spark.sql(sql).collect())
+
+    lo, hi = 300, 1298
+    win = (k >= lo) & (k <= hi)
+    cases = [
+        (f"SELECT k, v, q FROM {name} WHERE k = 640",
+         [(640, 640 * 7 % 1001, 0)]),
+        (f"SELECT k, v, q FROM {name} WHERE k = 641", []),
+        (f"SELECT v, k FROM {name} WHERE k BETWEEN {lo} AND {hi}",
+         sorted(zip(v[win].tolist(), k[win].tolist()))),
+        (f"SELECT k FROM {name} WHERE v = 14",
+         sorted((int(x),) for x in k[v == 14])),
+        (f"SELECT COUNT(*) FROM {name}", [(len(k),)]),
+        (f"SELECT COUNT(*) AS n, SUM(q) AS sq, MIN(v) AS mn, MAX(v) AS mx "
+         f"FROM {name} WHERE k BETWEEN {lo} AND {hi}",
+         [(int(win.sum()), int(q[win].sum()), int(v[win].min()),
+           int(v[win].max()))]),
+    ]
+    for sql, want in cases:
+        got, jobs, _tasks = _jobs(spark, lambda sql=sql: rows(sql))
+        assert got == want, sql
+        assert jobs == 0, sql
+
+
+def test_multi_split_scan_stays_batch(spark, tmp_path):
+    """A scan planned as more than one split still runs as a BatchScan
+    with one task per split."""
+    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader
+
+    uri = _mk_wide(tmp_path, _WIDE)
+    agg_reader(spark, uri).load().createOrReplaceTempView("jvm_wide")
+    df = spark.sql("SELECT k FROM jvm_wide WHERE k >= 0 AND q = 3")
+    assert "Local" not in _scans(df)
+    assert "BatchScan" in df._jdf.queryExecution().executedPlan().toString()
+    got, jobs, tasks = _jobs(spark, df.collect)
+    assert sorted(r.k for r in got) == list(range(3, _WIDE, 7))
+    assert jobs >= 1 and tasks >= 2, (jobs, tasks)
+
+
+def test_local_scan_limit_and_residual_exact(spark, small_view):
+    """LIMIT, ORDER BY .. LIMIT and a residual filter Spark evaluates
+    above a local scan answer exactly as the numpy model."""
+    name, _uri = small_view
+    k, v, _q = _small_model()
+    resid = f"SELECT k, v FROM {name} WHERE k BETWEEN 100 AND 3000 AND v % 7 = 3"
+    assert "Local" in _scans(spark.sql(resid))
+    m = (k >= 100) & (k <= 3000) & (v % 7 == 3)
+    assert sorted(tuple(r) for r in spark.sql(resid).collect()) == sorted(
+        zip(k[m].tolist(), v[m].tolist())
+    )
+    got = spark.sql(f"SELECT k FROM {name} WHERE k >= 1000 LIMIT 5").collect()
+    assert len(got) == 5 and len({r.k for r in got}) == 5
+    assert all(r.k >= 1000 and r.k % 2 == 0 for r in got)
+    got = spark.sql(
+        f"SELECT k, v FROM {name} WHERE k < 3000 AND v % 7 = 3 "
+        "ORDER BY v DESC, k LIMIT 4"
+    ).collect()
+    m = (k < 3000) & (v % 7 == 3)
+    want = sorted(zip(k[m].tolist(), v[m].tolist()),
+                  key=lambda r: (-r[1], r[0]))[:4]
+    assert [tuple(r) for r in got] == want
+
+
+def test_local_side_still_broadcasts(spark, small_view):
+    """A local scan reports the bridge's statistics, so a small local
+    side of a join is still broadcast without a hint."""
+    name, _uri = small_view
+    big = spark.range(0, 20_000).selectExpr("id AS k", "id % 3 AS g")
+    small = spark.sql(f"SELECT k, v FROM {name} WHERE k < 500")
+    assert "Local" in _scans(small)
+    joined = big.join(small, "k")
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan, plan
+    assert joined.count() == 250
+
+
+def test_session_without_strategy_answers(spark, tmp_path):
+    """A session whose planner lacks the local projection strategy still
+    answers a pushed aggregate and a local row scan exactly; the
+    aggregate's projection then runs as one job."""
+    import sys
+
+    from tiledb_mariadb_spark.sources import jvm_agg
+
+    jvm_agg.register_tiledb_agg(spark)  # the jar and this thread's loader
+    other = spark.newSession()
+    assert other._jsparkSession.experimental().extraStrategies().size() == 0
+    uri = _mk(tmp_path, n=300)
+    (
+        other.read.format("tiledb_agg").option("path", uri)
+        .option("python", sys.executable).option("pythonpath", jvm_agg._REPO)
+        .load().createOrReplaceTempView("jvm_nostrat")
+    )
+    agg = other.sql(
+        "SELECT COUNT(*) AS n, SUM(q) AS s FROM jvm_nostrat "
+        "WHERE k BETWEEN 10 AND 109"
+    )
+    assert "MetadataAggScan" in _scans(agg)
+    row, jobs, _tasks = _jobs(other, lambda: agg.collect()[0])
+    assert (row.n, row.s) == _window_expect(300, 10, 109)
+    assert jobs == 1
+    got = other.sql("SELECT k, q FROM jvm_nostrat WHERE k BETWEEN 5 AND 9")
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (i, i % 7) for i in range(5, 10)
+    ]
+
+
+@pytest.mark.parametrize("n", [500, _WIDE], ids=["local", "batch"])
+def test_one_snapshot_per_query(spark, tmp_path, n):
+    """A query reads the snapshot its plan was made at: a newer append
+    committed between planning and collect() stays invisible to it,
+    whether it reads locally or in batch tasks, and the next query sees
+    the append."""
+    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader
+
+    uri = _mk_wide(tmp_path, n)
+    view = f"jvm_snap_{n}"
+    agg_reader(spark, uri).load().createOrReplaceTempView(view)
+    sql = f"SELECT k, v FROM {view} WHERE k >= 0 AND q = 3"
+    before = [(i, 3 * i) for i in range(3, n, 7)]
+    df = spark.sql(sql)
+    df._jdf.queryExecution().optimizedPlan()  # the splits request
+    assert ("Local" in _scans(df)) == (n < _WIDE)
+    write_native_fragment(  # ts: newer than every commit
+        uri, {"k": [3, n + 4], "v": [-1, -2], "q": [3, 3]}, version=19
+    )
+    assert sorted(tuple(r) for r in df.collect()) == before
+    after = sorted([(3, -1)] + before[1:] + [(n + 4, -2)])
+    assert sorted(tuple(r) for r in spark.sql(sql).collect()) == after

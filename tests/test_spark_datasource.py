@@ -241,6 +241,7 @@ def test_sql_table_from_array(spark, arr):
     DS reads."""
     import uuid as _uuid
 
+    from tiledb_mariadb_spark.sources.jvm_agg import scan_descriptions
     from tiledb_mariadb_spark.sources.spark_datasource import (
         sql_table_from_array,
     )
@@ -251,9 +252,7 @@ def test_sql_table_from_array(spark, arr):
         f"SELECT COUNT(*) AS n, SUM(k) AS sk FROM {tname} "
         "WHERE k BETWEEN 10 AND 19 AND tag = 't0'"
     )
-    assert "TileDBBridgeRowScan" in (
-        df._jdf.queryExecution().executedPlan().toString()
-    )
+    assert "TileDBBridgeRowScan" in " ".join(scan_descriptions(df))
     row = df.collect()[0]
     keys = [i for i in range(10, 20) if i % 3 == 0]
     assert (row.n, row.sk) == (len(keys), sum(keys))

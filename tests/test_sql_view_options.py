@@ -10,6 +10,7 @@ import uuid
 import pytest
 
 from tiledb_mariadb_spark.sources import tiledb_native_crypto as crypto
+from tiledb_mariadb_spark.sources.jvm_agg import scan_descriptions
 from tiledb_mariadb_spark.sources.spark_datasource import (
     register_tiledb_native,
     sql_table_from_array,
@@ -55,7 +56,7 @@ def _rows(spark, sql):
 
 
 def _plan(spark, sql):
-    return spark.sql(sql)._jdf.queryExecution().executedPlan().toString()
+    return " ".join(scan_descriptions(spark.sql(sql)))
 
 
 @pytest.fixture()

@@ -341,7 +341,10 @@ def test_sql_windowed_stats_surface(spark, tmp_path):
     """WHERE dim BETWEEN over format('tiledb_agg'): metadata-served
     when provable, a scan under deletes — identical numbers, each
     pinned against a full range-read recompute."""
-    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader
+    from tiledb_mariadb_spark.sources.jvm_agg import (
+        agg_reader,
+        scan_descriptions,
+    )
 
     uri = _mk(tmp_path, capacity=100)
     for i, base in enumerate((0, 1000, 2000)):
@@ -353,7 +356,7 @@ def test_sql_windowed_stats_surface(spark, tmp_path):
         "MIN(tag) AS mnt, MAX(tag) AS mxt FROM wstats "
         "WHERE k BETWEEN 150 AND 2849"
     )
-    plan = spark.sql(q)._jdf.queryExecution().executedPlan().toString()
+    plan = " ".join(scan_descriptions(spark.sql(q)))
     assert "MetadataAggScan" in plan, plan
     md = spark.sql(q).collect()[0]
     exp = _expected(uri, 150, 2849, "v")
@@ -367,6 +370,6 @@ def test_sql_windowed_stats_surface(spark, tmp_path):
 
     # a delete makes metadata unprovable -> scan, same numbers
     write_delete_condition(uri, [("v", ">", 10**9)], ts=None)
-    plan2 = spark.sql(q)._jdf.queryExecution().executedPlan().toString()
+    plan2 = " ".join(scan_descriptions(spark.sql(q)))
     assert "MetadataAggScan" not in plan2, plan2
     assert spark.sql(q).collect()[0] == md

@@ -21,6 +21,19 @@ JVM, so a pushed aggregate costs one request, not an interpreter start.
 Row scans go the same way (Arrow IPC batches), so this format also
 serves the SQL table names ``sql_table_from_array`` registers.
 
+Small reads run in the driver with no Spark job.  The bridge's
+``splits`` reply marks a plan ``local`` when it has no split, or one
+split of at most ``_CELLS_PER_TASK`` estimated cells (the size one task
+is planned for, so running it in the driver gives up no parallelism).
+The scan is then a DSv2 ``LocalScan``, which Spark plans as a
+``LocalTableScanExec``, and ``collect()`` reads the split through the
+same ``rows`` request a task would make.  Pushed aggregates are local
+scans too; :func:`register_tiledb_agg` adds the planner strategy that
+keeps the projection Spark puts over them in the driver as well.  Every
+request of one query reads the snapshot (``at``) its plan was made at.
+:func:`scan_descriptions` shows what a scan pushed, which a local
+scan's executed plan does not print.
+
 The jar is built once per checkout, by the first caller that finds it
 missing or older than the Java source; concurrent callers, threads or
 processes, wait on a lock in the build directory and reuse that build.
@@ -101,7 +114,9 @@ def register_tiledb_agg(spark) -> None:
     concurrent threads), then let the calling thread resolve the
     format: ADD JAR makes the session's jar class loader the context
     class loader of the JVM thread that ran it only, and py4j gives
-    every Python thread its own JVM thread."""
+    every Python thread its own JVM thread.  Last, add the planner
+    strategy that keeps a projection over a local scan (a pushed
+    aggregate's aliases) in the driver to this session, once."""
     jar = ensure_agg_jar()
     key = (id(spark.sparkContext), jar)
     with _REGISTER_LOCK:
@@ -111,6 +126,22 @@ def register_tiledb_agg(spark) -> None:
     spark._jvm.java.lang.Thread.currentThread().setContextClassLoader(
         spark._jsparkSession.sharedState().jarClassLoader()
     )
+    spark._jvm.TileDBAggDataSource.installStrategy(spark._jsparkSession)
+
+
+def scan_descriptions(df) -> list[str]:
+    """``scan().description()`` of every DataSourceV2 scan relation in
+    ``df``'s optimized plan.  A local scan's executed plan is a
+    ``LocalTableScan`` that prints no scan description, so this is where
+    pushed conditions, limits and aggregates stay visible.  Optimizing
+    makes the scan's planning request, not its rows request."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    out = []
+    for i in range(leaves.size()):
+        node = leaves.apply(i)
+        if node.getClass().getSimpleName() == "DataSourceV2ScanRelation":
+            out.append(node.scan().description())
+    return out
 
 
 def agg_reader(spark, uri: str, **options):

@@ -1218,6 +1218,18 @@ def _fragment_dirs(
     return [os.path.join(root, d) for d in sorted(frags, key=lambda d: (_frag_ts(d), d))]
 
 
+def newest_commit_ts(array_dir: str) -> int | None:
+    """The newest timestamp of any visible fragment or delete commit
+    (None when there is neither).  A read at this ``at`` sees what a
+    read with no ``at`` sees now, and keeps seeing it after a commit
+    with a newer timestamp lands: the snapshot one scan pins."""
+    ts = [_frag_range(os.path.basename(f))[1] for f in _fragment_dirs(array_dir)]
+    commits = os.path.join(array_dir, "__commits")
+    if os.path.isdir(commits):
+        ts += [_frag_ts(e) for e in os.listdir(commits) if e.endswith(".del")]
+    return max(ts, default=None)
+
+
 def _delete_conditions(
     array_dir: str,
     at: int | None,

@@ -3206,6 +3206,7 @@ def q310_native_stats_sql(spark, sf_dir):
 
     from tiledb_mariadb_spark.sources.jvm_agg import (  # noqa: PLC0415
         agg_reader,
+        scan_descriptions,
     )
     from tiledb_mariadb_spark.sources.tiledb_array import (  # noqa: PLC0415
         write_array,
@@ -3254,9 +3255,9 @@ def q310_native_stats_sql(spark, sf_dir):
         )
         + " ORDER BY col_name"
     )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n_meta = plan.count("MetadataAggScan")
-    assert n_meta == 3, f"{n_meta} metadata-served columns of 3:\n{plan}"
+    scans = scan_descriptions(df)
+    n_meta = sum("MetadataAggScan" in d for d in scans)
+    assert n_meta == 3, f"{n_meta} metadata-served columns of 3: {scans}"
     return df
 
 
@@ -5091,6 +5092,7 @@ def q330_jvm_agg(spark, sf_dir):
 
     from tiledb_mariadb_spark.sources.jvm_agg import (  # noqa: PLC0415
         agg_reader,
+        scan_descriptions,
     )
     from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
         NativeAttr,
@@ -5136,9 +5138,7 @@ def q330_jvm_agg(spark, sf_dir):
         "SUM(cents) AS sum_cents, MIN(custkey) AS min_cust, "
         "MAX(custkey) AS max_cust FROM q330_arr"
     )
-    pushed = "MetadataAggScan" in (
-        df._jdf.queryExecution().executedPlan().toString()
-    )
+    pushed = any("MetadataAggScan" in d for d in scan_descriptions(df))
     return df.withColumn("pushed_to_metadata", F.lit(pushed))
 
 

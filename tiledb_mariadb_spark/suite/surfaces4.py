@@ -1715,6 +1715,7 @@ def q352_jvm_grouped_rollup(spark, sf_dir):
 
     from tiledb_mariadb_spark.sources.jvm_agg import (  # noqa: PLC0415
         agg_reader,
+        scan_descriptions,
     )
     from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
         NativeAttr,
@@ -1770,8 +1771,9 @@ def q352_jvm_grouped_rollup(spark, sf_dir):
         f"FROM q352_arr WHERE k BETWEEN {_Q352_LO} AND {_Q352_HI} "
         f"GROUP BY FLOOR(k/{_Q352_W}) ORDER BY bucket"
     )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    pushed = "GroupedPushedAggregates" in plan
+    pushed = any(
+        "GroupedPushedAggregates" in d for d in scan_descriptions(df)
+    )
     # the filtered SCAN path of the same provider (pushed conditions +
     # pruned projection — no Spark residual): total of one bucket
     probe = spark.sql(

@@ -36,7 +36,11 @@ from the command line:
   narrowed by ``scan_ranges`` (since window, condition-NED), task count
   sized by the estimated matching cells up to ``--target-splits``, cut
   by ``scan_splits`` (dim0 cuts / R-tree weights / string boundary
-  keys); ``[]`` when the plan is provably empty;
+  keys); ``[]`` when the plan is provably empty.  The reply carries
+  ``local`` (no split, or one split of at most ``_CELLS_PER_TASK``
+  estimated cells: the JVM reads it in the driver) and ``at``, the
+  snapshot the plan was made at, which every ``rows`` request of the
+  scan sends back;
 - ``rows --uri U [--ranges J] [--conditions J] [--columns J]
   [--limit N]``: the decoded table — pushed conditions applied EXACTLY
   (QueryCondition analog), projection pruned, and an advisory
@@ -67,6 +71,12 @@ import os
 import struct
 import sys
 import traceback
+
+# Matching cells one scan task is sized for.  The ``splits`` command
+# plans ceil(est / _CELLS_PER_TASK) tasks, and marks a plan of at most
+# one split whose estimate fits one task ``local``: the JVM then reads
+# it in the driver, with no Spark job.
+_CELLS_PER_TASK = 262144
 
 # FLOOR(k/width) in SQL is DOUBLE division: exact vs integer ``k//width``
 # only while |k| < 2^52 (quotient*width below the 53-bit mantissa).
@@ -802,8 +812,17 @@ def main(argv=None) -> int:
             spatial_dim_ranges,
         )
 
+        from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
+            estimate_range_cells,
+            newest_commit_ts,
+        )
+
         be = NativeDecoderBackend(encryption_key=a.encryption_key)
         try:
+            if a.at is None:
+                # one snapshot per scan: the plan, its stats and every
+                # rows request read at the newest commit seen here
+                a.at = newest_commit_ts(a.uri)
             info = be.info(a.uri, at=a.at)
             conds = _parse_conditions(a.conditions)
             dim_ranges = spatial_dim_ranges(
@@ -817,6 +836,7 @@ def main(argv=None) -> int:
             ranges = scan_ranges(be, a.uri, info, dim_ranges, conds, a.at,
                                  a.since)
             splits = []
+            est = None
             if ranges is not None:
                 # size the task count by the metadata UPPER BOUND on
                 # matching cells: a needle/top-k query plans one task, a
@@ -824,10 +844,6 @@ def main(argv=None) -> int:
                 # only over-parallelize, never starve a real scan
                 target = a.target_splits
                 if ranges:
-                    from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
-                        estimate_range_cells,
-                    )
-
                     try:
                         rlist = [
                             tuple(ranges.get(d.name, (None, None)))
@@ -836,12 +852,18 @@ def main(argv=None) -> int:
                         est = estimate_range_cells(a.uri, rlist, at=a.at)
                         if est is not None:
                             target = max(
-                                1, min(target, -(-est // 262144))
+                                1, min(target, -(-est // _CELLS_PER_TASK))
                             )
                     except (OSError, ValueError):
                         pass
                 splits = scan_splits(be, a.uri, info, ranges, target, a.at,
                                      a.since)
+            # a one-split plan runs on one task anyway: reading it in
+            # the driver gives up no parallelism
+            local = not splits or (
+                len(splits) == 1 and est is not None
+                and est <= _CELLS_PER_TASK
+            )
             out = [[list(r) for r in s] for s in splits]
             try:  # piggyback planning stats: one request serves both
                 st = _stats_payload(a)
@@ -852,10 +874,12 @@ def main(argv=None) -> int:
             return 3
         try:
             reply = json.dumps(
-                {"ok": True, "splits": out, "stats": st}, default=_json_cell
+                {"ok": True, "splits": out, "stats": st, "local": local,
+                 "at": a.at},
+                default=_json_cell,
             )
         except TypeError:  # bounds not JSON-expressible (bytes dims)
-            reply = json.dumps({"ok": True, "splits": [None]})
+            reply = json.dumps({"ok": True, "splits": [None], "at": a.at})
         print(reply)
         return 0
 
