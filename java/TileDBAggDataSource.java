@@ -25,7 +25,8 @@
 // - small reads without a Spark job: a split plan the bridge marks
 //   `local` (at most one split of at most one task's cells) and every
 //   pushed aggregate are DSv2 LocalScans, read in the driver, and
-//   LocalProjectStrategy keeps the projection over them there too.
+//   LocalProjectStrategy keeps a projection or residual filter over
+//   them there too.
 //
 // All delegation goes to resident bridge processes
 // (tiledb_mariadb_spark.tools.jvm_bridge serve) running the repo's
@@ -67,7 +68,9 @@ import java.util.concurrent.ConcurrentHashMap;
 import java.util.concurrent.ConcurrentLinkedDeque;
 import org.apache.spark.sql.classic.SparkSession;
 import org.apache.spark.sql.catalyst.InternalRow;
+import org.apache.spark.sql.catalyst.expressions.BasePredicate;
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow;
+import org.apache.spark.sql.catalyst.expressions.Predicate$;
 import org.apache.spark.sql.catalyst.expressions.SubqueryExpression;
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection;
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan;
@@ -1538,34 +1541,55 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
     }
   }
 
-  // ---- planner strategy: a projection over a local scan, in the driver -----
+  // ---- planner strategy: a projection or filter over a local scan, in the driver
 
   /** Spark puts a Project (the aliases) over every completely pushed
-   * aggregate, and ProjectExec over LocalTableScanExec runs as a Spark
-   * job.  This strategy plans a deterministic, subquery-free Project
-   * straight over one of this format's LocalScans as a
-   * LocalTableScanExec of the projected rows, so collect() stays in the
-   * driver.  A session without it plans the same query correctly, with
-   * one job. */
+   * aggregate, and a Filter over a scan for every predicate the scan
+   * did not take (e.g. {@code v % 7 = 3}); ProjectExec and FilterExec
+   * over LocalTableScanExec run as a Spark job.  This strategy plans a
+   * deterministic, subquery-free Project, Filter, or Project over a
+   * Filter, straight over one of this format's LocalScans as a
+   * LocalTableScanExec of the filtered, projected rows, so collect()
+   * stays in the driver.  A session without it plans the same query
+   * correctly, with one job. */
   public static final class LocalProjectStrategy extends SparkStrategy {
     @Override
     @SuppressWarnings({"unchecked", "rawtypes"})
     public scala.collection.immutable.Seq<SparkPlan> apply(LogicalPlan plan) {
       List<SparkPlan> out = new ArrayList<>();
-      if (plan instanceof Project && ((Project) plan).child() instanceof DataSourceV2ScanRelation) {
-        Project p = (Project) plan;
-        DataSourceV2ScanRelation rel = (DataSourceV2ScanRelation) p.child();
-        scala.collection.immutable.Seq exprs = p.projectList();
-        if (ownLocalScan(rel.scan()) && projectable(exprs)) {
-          UnsafeProjection proj = UnsafeProjection.create(exprs, (scala.collection.immutable.Seq) rel.output());
+      LogicalPlan child = plan;
+      scala.collection.immutable.Seq exprs = null; // null: no Project
+      if (child instanceof Project) {
+        exprs = ((Project) child).projectList();
+        child = ((Project) child).child();
+      }
+      org.apache.spark.sql.catalyst.expressions.Expression cond = null;
+      if (child instanceof org.apache.spark.sql.catalyst.plans.logical.Filter) {
+        cond = ((org.apache.spark.sql.catalyst.plans.logical.Filter) child).condition();
+        child = ((org.apache.spark.sql.catalyst.plans.logical.Filter) child).child();
+      }
+      if (child != plan && child instanceof DataSourceV2ScanRelation) {
+        DataSourceV2ScanRelation rel = (DataSourceV2ScanRelation) child;
+        scala.collection.immutable.Seq input = rel.output();
+        if (ownLocalScan(rel.scan())
+            && (exprs == null || driverSafe(CollectionConverters.asJava(exprs)))
+            && (cond == null || driverSafe(List.of(cond)))) {
+          BasePredicate pred = null;
+          if (cond != null) {
+            pred = Predicate$.MODULE$.create(cond, input);
+            pred.initialize(0);
+          }
+          UnsafeProjection proj = UnsafeProjection.create(exprs == null ? input : exprs, input);
           proj.initialize(0);
           List<InternalRow> rows = new ArrayList<>();
           for (InternalRow r : ((LocalScan) rel.scan()).rows()) {
-            rows.add(proj.apply(r).copy());
+            if (pred == null || pred.eval(r)) {
+              rows.add(proj.apply(r).copy());
+            }
           }
           out.add(
               new LocalTableScanExec(
-                  p.output(), CollectionConverters.asScala(rows).toList(), scala.Option.empty()));
+                  plan.output(), CollectionConverters.asScala(rows).toList(), scala.Option.empty()));
         }
       }
       return CollectionConverters.asScala(out).toList();
@@ -1577,8 +1601,8 @@ public class TileDBAggDataSource implements TableProvider, DataSourceRegister {
           && scan.getClass().getName().startsWith(TileDBAggDataSource.class.getName() + "$");
     }
 
-    private static boolean projectable(scala.collection.immutable.Seq<?> exprs) {
-      for (Object o : CollectionConverters.asJava(exprs)) {
+    private static boolean driverSafe(Iterable<?> exprs) {
+      for (Object o : exprs) {
         org.apache.spark.sql.catalyst.expressions.Expression e =
             (org.apache.spark.sql.catalyst.expressions.Expression) o;
         if (!e.deterministic() || SubqueryExpression.hasSubquery(e)) {

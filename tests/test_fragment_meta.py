@@ -31,6 +31,9 @@ from tiledb_mariadb_spark.sources.tiledb_native_write import (
     write_native_fragment,
 )
 
+from .native_model import range_rows
+from .spark_jobs import distributed_maintenance, spark_jobs
+
 
 @pytest.fixture(autouse=True)
 def _fresh_cache():
@@ -272,7 +275,8 @@ def test_distributed_fold_equals_driver_fold(tmp_path, spark):
 
     arr = _mk(tmp_path, n_frags=6)
     p1 = consolidate_fragment_meta(arr)
-    p2 = consolidate_fragment_meta(arr, spark=spark, target_splits=3)
+    with distributed_maintenance():
+        p2 = consolidate_fragment_meta(arr, spark=spark, target_splits=3)
     d1 = json.loads(read_generic_tile(p1).decode())
     d2 = json.loads(read_generic_tile(p2).decode())
     assert d1["fragments"] == d2["fragments"]
@@ -298,7 +302,8 @@ def test_maintain_array_one_call(tmp_path, spark):
     before = sorted(
         map(tuple, read_array(spark, arr, target_splits=2).collect())
     )
-    out = maintain_array(spark, arr)
+    with distributed_maintenance():
+        out = maintain_array(spark, arr)
     assert out["fragments"] >= 1
     assert out["fragment_meta"] and out["vacuumed"] >= 1
     after = sorted(
@@ -318,6 +323,33 @@ def test_maintain_array_one_call(tmp_path, spark):
     )
     with pytest.raises(ValueError, match="unknown consolidation"):
         maintain_array(spark, arr, modes=("nope",))
+
+
+def test_maintain_array_small_runs_no_job(tmp_path, spark):
+    """Maintenance of a small array fits one task at every step, so
+    maintain_array runs in the driver: 0 Spark jobs, and the merged
+    state reads the same."""
+    from tiledb_mariadb_spark.sources.tiledb_array import maintain_array
+
+    arr = _mk(tmp_path, n_frags=0)
+    write_native_fragment(
+        arr, {"k": list(range(0, 4000, 2)), "v": list(range(2000)),
+              "s": [f"b{i}" for i in range(2000)]}, ts=1, version=19,
+    )
+    for f in range(5):  # one size-ratio run; the base stays
+        ks = list(range(f * 30, f * 30 + 40))
+        write_native_fragment(
+            arr, {"k": ks, "v": [k + f for k in ks],
+                  "s": [f"s{f}_{k}" for k in ks]}, ts=f + 2, version=19,
+        )
+    _n, before = range_rows(arr)
+    out, jobs, _tasks = spark_jobs(spark, lambda: maintain_array(spark, arr))
+    assert jobs == 0
+    assert out["fragments"] == 1 and out["fragment_meta"]
+    assert out["vacuumed"] >= 5
+    assert len(_fragment_dirs(arr)) == 2
+    _n, after = range_rows(arr)
+    assert after == before
 
 
 def test_maintain_array_encrypted_without_fragments_mode(tmp_path, spark):

@@ -27,6 +27,7 @@ from tiledb_mariadb_spark.sources.tiledb_native_write import (
 from tiledb_mariadb_spark.suite.surfaces3 import poison_data_tiles
 
 from .native_model import range_rows
+from .spark_jobs import spark_jobs as _jobs
 
 pytestmark = pytest.mark.skipif(
     shutil.which("javac") is None or shutil.which("jar") is None,
@@ -62,29 +63,6 @@ def _mk_wide(tmp_path, n, name="wide"):
     write_native_fragment(uri, {"k": k, "v": 3 * k, "q": k % 7}, ts=10,
                           version=19)
     return uri
-
-
-def _jobs(spark, fn):
-    """``(fn(), jobs, tasks)``: what ``fn`` returned, and the Spark jobs
-    and tasks it ran."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = "jvm_agg_" + uuid.uuid4().hex
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup(group)
-    tasks = 0
-    for j in jobs:
-        for st in tracker.getJobInfo(j).stageIds:
-            info = tracker.getStageInfo(st)
-            tasks += info.numTasks if info else 0
-    return out, len(jobs), tasks
 
 
 def _mk(tmp_path, n=500, name="arr"):
@@ -1121,6 +1099,30 @@ def test_local_scan_limit_and_residual_exact(spark, small_view):
     want = sorted(zip(k[m].tolist(), v[m].tolist()),
                   key=lambda r: (-r[1], r[0]))[:4]
     assert [tuple(r) for r in got] == want
+
+
+def test_residual_filter_over_local_scan_runs_no_job(spark, small_view):
+    """A deterministic residual filter, alone or under a projection,
+    over a local scan is evaluated in the driver: 0 jobs, and the rows
+    equal the numpy model.  A nondeterministic filter is left to Spark,
+    which plans and runs it as usual."""
+    name, _uri = small_view
+    k, v, q = _small_model()
+    m = (k < 100) & (v % 7 == 3)
+    for sql, want in (
+        (f"SELECT * FROM {name} WHERE k < 100 AND v % 7 = 3",
+         zip(k[m].tolist(), v[m].tolist(), q[m].tolist())),
+        (f"SELECT k, v + 1 AS w FROM {name} WHERE k < 100 AND v % 7 = 3",
+         zip(k[m].tolist(), (v[m] + 1).tolist())),
+    ):
+        got, jobs, _tasks = _jobs(spark, spark.sql(sql).collect)
+        assert sorted(tuple(r) for r in got) == sorted(want)
+        assert jobs == 0, (sql, jobs)
+    got, jobs, _tasks = _jobs(spark, spark.sql(
+        f"SELECT k FROM {name} WHERE k < 100 AND rand(7) < 0.5"
+    ).collect)
+    assert {r.k for r in got} <= set(k[k < 100].tolist())
+    assert jobs >= 1
 
 
 def test_local_side_still_broadcasts(spark, small_view):

@@ -24,6 +24,7 @@ from tiledb_mariadb_spark.sources.tiledb_native_write import (
 )
 
 from .native_model import range_rows
+from .spark_jobs import distributed_maintenance, spark_jobs
 
 
 def _mkarray(d):
@@ -314,6 +315,17 @@ def test_distributed_consolidation_atomic(tmp_path, spark):
     whole group visible atomically.  Before the .con, staged dirs are
     invisible (crash contract); after vacuum the merged state survives
     with deletes baked in."""
+    _check_full_consolidation(tmp_path, spark, distributed=True)
+
+
+def test_driver_consolidation_atomic(tmp_path, spark):
+    """The same array fits one task, so `consolidate_array` merges it in
+    the driver into ONE fragment, committed by its .wrt marker; the
+    merged state and the vacuum are the same."""
+    _check_full_consolidation(tmp_path, spark, distributed=False)
+
+
+def _check_full_consolidation(tmp_path, spark, distributed):
     import os
 
     from pyspark.sql import functions as F
@@ -357,13 +369,17 @@ def test_distributed_consolidation_atomic(tmp_path, spark):
     import shutil
 
     shutil.rmtree(staged)  # abandoned stage: plain dir removal, no repair
-    n_new = consolidate_array(spark, uri, target_splits=4)
-    assert n_new >= 2  # multiple disjoint fragments, one .con
+    with distributed_maintenance(distributed):
+        n_new = consolidate_array(spark, uri, target_splits=4)
     cons = [
         e for e in os.listdir(os.path.join(uri, "__commits"))
         if e.endswith(".con")
     ]
-    assert len(cons) == 1
+    if distributed:
+        assert n_new >= 2  # multiple disjoint fragments, one .con
+        assert len(cons) == 1
+    else:
+        assert n_new == 1 and not cons  # one fragment, one .wrt
     assert len(_fragment_dirs(uri)) == n_new  # old fragments retired
     assert tuple(agg.collect()[0]) == before
     assert vacuum_native_array(uri) > 0
@@ -382,6 +398,16 @@ def test_distributed_consolidation_dense(tmp_path, spark):
     (tile-expanded on disk, true-NED footer) whose padding must never
     shadow the base fragment.  Reads are bit-identical pre/post
     consolidation and post vacuum."""
+    _check_dense_consolidation(tmp_path, spark, distributed=True)
+
+
+def test_driver_consolidation_dense(tmp_path, spark):
+    """The dense array's bounding box fits one task: the driver merges
+    it into ONE band fragment with the same bit-identical reads."""
+    _check_dense_consolidation(tmp_path, spark, distributed=False)
+
+
+def _check_dense_consolidation(tmp_path, spark, distributed):
     import struct
 
     from tiledb_mariadb_spark.sources.tiledb_array import consolidate_array
@@ -416,13 +442,17 @@ def test_distributed_consolidation_dense(tmp_path, spark):
     _n, before = range_rows(uri)
     assert len(before) == 60 * 30  # bbox [(0,59),(0,29)]
     assert (13, 7, 777) in before and (13, 6, 1306) in before
-    n_new = consolidate_array(spark, uri, target_splits=6)
-    assert n_new >= 2
+    with distributed_maintenance(distributed):
+        n_new = consolidate_array(spark, uri, target_splits=6)
     cons = [
         e for e in os.listdir(os.path.join(uri, "__commits"))
         if e.endswith(".con")
     ]
-    assert len(cons) == 1
+    if distributed:
+        assert n_new >= 2
+        assert len(cons) == 1
+    else:
+        assert n_new == 1 and not cons
     assert len(_fragment_dirs(uri)) == n_new  # originals retired
     _n, after = range_rows(uri)
     assert after == before
@@ -443,6 +473,15 @@ def test_incremental_consolidation(tmp_path, spark):
     fragment-SUBSET reader; reads stay bit-identical, the base fragment
     is not rewritten, and the delete commit survives (it bakes only in
     FULL consolidation)."""
+    _check_incremental_consolidation(tmp_path, spark, distributed=False)
+
+
+def test_incremental_consolidation_distributed(tmp_path, spark):
+    """The same runs merged by a Spark job of one task per (run, split)."""
+    _check_incremental_consolidation(tmp_path, spark, distributed=True)
+
+
+def _check_incremental_consolidation(tmp_path, spark, distributed):
     from tiledb_mariadb_spark.sources.tiledb_array import (
         consolidate_array_incremental,
         plan_consolidation,
@@ -474,7 +513,8 @@ def test_incremental_consolidation(tmp_path, spark):
     runs = plan_consolidation(uri, ratio=3.0)
     assert len(runs) == 1 and len(runs[0]) == 5
     assert all(big != os.path.basename(f) for f in runs[0])
-    n_new = consolidate_array_incremental(spark, uri, target_splits=3)
+    with distributed_maintenance(distributed):
+        n_new = consolidate_array_incremental(spark, uri, target_splits=3)
     assert n_new >= 1
     _n, after = range_rows(uri)
     assert after == before
@@ -489,6 +529,86 @@ def test_incremental_consolidation(tmp_path, spark):
     ]
     # nothing left to merge at this ratio: base vs merged-run sizes skew
     assert plan_consolidation(uri, ratio=3.0) == []
+
+
+def test_driver_consolidation_failure_leaves_no_orphans(
+    tmp_path, spark, monkeypatch
+):
+    """Staging that raises partway through (here on the second of two
+    admissible runs) in the driver removes every fragment it already
+    staged and re-raises: no new fragment directory, no commit, and
+    reads equal the pre-call rows."""
+    from tiledb_mariadb_spark.sources import tiledb_native_write
+    from tiledb_mariadb_spark.sources.tiledb_array import (
+        consolidate_array_incremental,
+        plan_consolidation,
+    )
+
+    uri = str(tmp_path / "fail")
+    create_native_array(
+        uri, [NativeDim("k", 1, 1, (0, 10**6), None)],
+        [NativeAttr("v", 1, 1, False, None)], capacity=100,
+    )
+    for ts, lo, n in ((100, 0, 100), (101, 50, 100), (102, 120, 100),
+                      (200, 0, 10000),
+                      (300, 30, 100), (301, 90, 100), (302, 170, 100)):
+        ks = list(range(lo, lo + n))
+        write_native_fragment(uri, {"k": ks, "v": [k + ts for k in ks]},
+                              ts=ts, version=19)
+    assert len(plan_consolidation(uri)) == 2
+    _n, before = range_rows(uri)
+    froot = os.path.join(uri, "__fragments")
+    commits = os.path.join(uri, "__commits")
+    dirs, markers = set(os.listdir(froot)), set(os.listdir(commits))
+    real = tiledb_native_write.write_native_fragment
+    calls = []
+
+    def flaky(*a, **k):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("injected staging failure")
+        return real(*a, **k)
+
+    monkeypatch.setattr(tiledb_native_write, "write_native_fragment", flaky)
+    with pytest.raises(RuntimeError, match="injected"):
+        consolidate_array_incremental(spark, uri)
+    assert len(calls) == 2
+    assert set(os.listdir(froot)) == dirs
+    assert set(os.listdir(commits)) == markers
+    _n, after = range_rows(uri)
+    assert after == before
+
+
+def test_large_consolidation_still_distributes(tmp_path, spark):
+    """An input above one task's cells (300k cells in 8 fragments) is
+    consolidated by one Spark job of more than one task, and reads back
+    equal to the newest-wins model."""
+    import numpy as np
+
+    from tiledb_mariadb_spark.sources.tiledb_array import (
+        NativeDecoderBackend,
+        _CELLS_PER_TASK,
+        maintain_array,
+    )
+
+    uri = str(tmp_path / "large")
+    create_native_array(
+        uri, [NativeDim("k", 1, 1, (0, 10**7), None)],
+        [NativeAttr("v", 1, 1, False, None)],
+    )
+    model = np.full(8 * 30_000 + 7_500, -1, dtype=np.int64)
+    for i in range(8):
+        k = np.arange(i * 30_000, i * 30_000 + 37_500, dtype=np.int64)
+        write_native_fragment(uri, {"k": k, "v": k * 10 + i}, ts=100 + i,
+                              version=19)
+        model[k] = k * 10 + i
+    assert 8 * 37_500 > _CELLS_PER_TASK
+    out, jobs, tasks = spark_jobs(spark, lambda: maintain_array(spark, uri))
+    assert out["fragments"] >= 2
+    assert jobs == 1 and tasks >= 2, (jobs, tasks)
+    got = NativeDecoderBackend().read_range(uri, [(None, None)], ["k", "v"])
+    assert np.array_equal(got["k"].to_numpy(), np.arange(len(model)))
+    assert np.array_equal(got["v"].to_numpy(), model)
 
 
 def test_plan_consolidation_respects_deletes_and_coverage(tmp_path):
@@ -558,6 +678,17 @@ def test_incremental_consolidation_races_appender(tmp_path, spark):
     concurrent writer committing mid-consolidation) is never part of
     any run, never retired, and serves its rows both before and after
     the runs commit + vacuum."""
+    _check_races_appender(tmp_path, spark, distributed=False)
+
+
+def test_incremental_consolidation_races_appender_distributed(
+    tmp_path, spark
+):
+    """The same race with the runs merged by a Spark job."""
+    _check_races_appender(tmp_path, spark, distributed=True)
+
+
+def _check_races_appender(tmp_path, spark, distributed):
     from tiledb_mariadb_spark.sources.tiledb_array import (
         consolidate_array_incremental,
         plan_consolidation,
@@ -586,7 +717,8 @@ def test_incremental_consolidation_races_appender(tmp_path, spark):
     )
     _n, before = range_rows(uri)
     assert (7, -7) in before and (999, -999) in before
-    n_new = consolidate_array_incremental(spark, uri, target_splits=2)
+    with distributed_maintenance(distributed):
+        n_new = consolidate_array_incremental(spark, uri, target_splits=2)
     assert n_new >= 1
     _n, after = range_rows(uri)
     assert after == before
@@ -602,6 +734,15 @@ def test_dense_incremental_consolidation(tmp_path, spark):
     workload).  The big base fragment is not rewritten, reads are
     bit-identical before/after/post-vacuum, gap cells between run
     bands read as fills, and an overlapping-history run is refused."""
+    _check_dense_incremental(tmp_path, spark, distributed=False)
+
+
+def test_dense_incremental_consolidation_distributed(tmp_path, spark):
+    """The same dense runs merged (and refused) on the Spark-job path."""
+    _check_dense_incremental(tmp_path, spark, distributed=True)
+
+
+def _check_dense_incremental(tmp_path, spark, distributed):
     from tiledb_mariadb_spark.sources.tiledb_array import (
         consolidate_array_incremental,
         plan_consolidation,
@@ -632,7 +773,8 @@ def test_dense_incremental_consolidation(tmp_path, spark):
     assert len(runs) == 1 and len(runs[0]) == 4
     _n, before = range_rows(uri)
     big = os.path.basename(_fragment_dirs(uri)[0])
-    n_new = consolidate_array_incremental(spark, uri, target_splits=2)
+    with distributed_maintenance(distributed):
+        n_new = consolidate_array_incremental(spark, uri, target_splits=2)
     assert n_new >= 1
     _n, after = range_rows(uri)
     assert after == before
@@ -664,7 +806,8 @@ def test_dense_incremental_consolidation(tmp_path, spark):
         )
     assert plan_consolidation(uri2, ratio=3.0)  # size-wise plannable
     _n, b2 = range_rows(uri2)
-    assert consolidate_array_incremental(spark, uri2) == 0
+    with distributed_maintenance(distributed):
+        assert consolidate_array_incremental(spark, uri2) == 0
     _n, a2 = range_rows(uri2)
     assert a2 == b2
 
@@ -717,6 +860,17 @@ def test_incremental_consolidation_aborts_on_midspan_commit(
     step re-checks admissibility against a fresh listing and ABORTS the
     run — no .con lands, the staged fragments are removed, and every
     row (including the racer's) stays visible."""
+    _check_midspan_abort(tmp_path, spark, monkeypatch, distributed=False)
+
+
+def test_incremental_consolidation_aborts_on_midspan_commit_distributed(
+    tmp_path, spark, monkeypatch
+):
+    """The same aborts when the runs were staged by a Spark job."""
+    _check_midspan_abort(tmp_path, spark, monkeypatch, distributed=True)
+
+
+def _check_midspan_abort(tmp_path, spark, monkeypatch, distributed):
     from tiledb_mariadb_spark.sources import tiledb_array as ta
     from tiledb_mariadb_spark.sources.tiledb_native_write import (
         write_delete_condition,
@@ -749,9 +903,10 @@ def test_incremental_consolidation_aborts_on_midspan_commit(
             write_delete_condition(uri, [("v", "=", 0)], ts=102)
         _n, before = range_rows(uri)
         n_frags_before = len(_fragment_dirs(uri))
-        assert ta.consolidate_array_incremental(
-            spark, uri, target_splits=2
-        ) == 0
+        with distributed_maintenance(distributed):
+            assert ta.consolidate_array_incremental(
+                spark, uri, target_splits=2
+            ) == 0
         commits = os.path.join(uri, "__commits")
         assert not [e for e in os.listdir(commits) if e.endswith(".con")]
         # staged-but-aborted fragments are gone from disk too

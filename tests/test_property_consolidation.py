@@ -31,6 +31,7 @@ from tiledb_mariadb_spark.sources.tiledb_native_write import (
 )
 
 from .native_model import range_rows
+from .spark_jobs import distributed_maintenance
 
 
 @settings(max_examples=8, deadline=None)
@@ -38,6 +39,20 @@ from .native_model import range_rows
 def test_incremental_consolidation_model(
     tmp_path_factory, spark, data
 ):
+    """Every history here fits one task: the runs merge in the driver."""
+    _check_model(tmp_path_factory, spark, data, distributed=False)
+
+
+@settings(max_examples=8, deadline=None)
+@given(data=st.data())
+def test_incremental_consolidation_model_distributed(
+    tmp_path_factory, spark, data
+):
+    """The same invariants with the runs merged by a Spark job."""
+    _check_model(tmp_path_factory, spark, data, distributed=True)
+
+
+def _check_model(tmp_path_factory, spark, data, distributed):
     from tiledb_mariadb_spark.sources.tiledb_array import (
         consolidate_array_incremental,
         plan_consolidation,
@@ -89,7 +104,8 @@ def test_incremental_consolidation_model(
         assert not any(t1 <= dt <= t2 for dt in del_ts)
         run_members |= {os.path.basename(f) for f in run}
 
-    n_new = consolidate_array_incremental(spark, d, target_splits=3)
+    with distributed_maintenance(distributed):
+        n_new = consolidate_array_incremental(spark, d, target_splits=3)
     _n, after = range_rows(d)
     assert after == before
     post_frags = {os.path.basename(f) for f in _fragment_dirs(d)}

@@ -731,6 +731,49 @@ def _seed_partitions(spark, n: int, colname: str = "split_id",
     )
 
 
+# Input cells one task is sized for.  Scan splits (the bridge ``splits``
+# command) and consolidation plan ceil(cells / _CELLS_PER_TASK) tasks,
+# and work that fits one task runs in the driver: a one-task Spark job
+# gives up no parallelism and costs a job's scheduling.  Incremental
+# consolidation in the driver was faster than a 4-task job up to this
+# many cells and as fast at 1M (scripts/consolidation_scale_probe.py
+# --crossover).
+_CELLS_PER_TASK = 262144
+
+
+def tasks_for(size: Optional[int], per_task: int, target_splits: int) -> int:
+    """ceil(size / per_task) tasks, capped by ``target_splits``;
+    ``target_splits`` when the input size is unknown (None)."""
+    if size is None:
+        return max(1, target_splits)
+    return max(1, min(target_splits, -(-size // per_task)))
+
+
+def run_seed_tasks(spark, fn, n: int, schema: str,
+                   colname: str = "split_id",
+                   num_partitions: Optional[int] = None) -> list[tuple]:
+    """Run the ``mapInPandas`` task function ``fn`` over seed ids
+    ``0..n-1`` and return its output rows as tuples in ``schema`` order.
+    A job of one partition (``num_partitions`` defaults to ``n``) runs
+    in the driver instead: ``fn`` gets the seed frame directly and no
+    Spark job starts (``spark`` may then be None).  Otherwise the seeds
+    go out as a shuffle-free :func:`_seed_partitions` job."""
+    if (num_partitions or n) <= 1:
+        import pandas as pd  # noqa: PLC0415
+
+        seeds = pd.DataFrame({colname: list(range(n))}, dtype="int32")
+        return [
+            tuple(row)
+            for pdf in fn(iter([seeds]))
+            for row in pdf.itertuples(index=False, name=None)
+        ]
+    return [
+        tuple(r)
+        for r in _seed_partitions(spark, n, colname, num_partitions)
+        .mapInPandas(fn, schema=schema).collect()
+    ]
+
+
 def plan_splits(
     info: ArrayInfo,
     dim_ranges: Optional[dict[str, Any]] = None,
@@ -2324,13 +2367,192 @@ def write_array(
     df.mapInPandas(write_part, schema="written int").collect()
 
 
+def _ned_box(frag: str, schema) -> Optional[list]:
+    """A fragment's written box from its footer NED; None when the
+    footer, or any dim's NED, proves nothing."""
+    import os  # noqa: PLC0415
+
+    from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
+        parse_fragment_footer,
+    )
+
+    footer = parse_fragment_footer(
+        os.path.join(frag, "__fragment_metadata.tdb"), schema
+    )
+    if footer is None or any(n is None for n in footer.non_empty_domain):
+        return None
+    return list(footer.non_empty_domain)
+
+
+def _union_box(frags, schema) -> Optional[list]:
+    """The bounding box of ``frags``' written boxes (None: unprovable)."""
+    boxes = [_ned_box(f, schema) for f in frags]
+    if not boxes or any(b is None for b in boxes):
+        return None
+    return [
+        (min(b[i][0] for b in boxes), max(b[i][1] for b in boxes))
+        for i in range(len(schema.dims))
+    ]
+
+
+def _merge_cells(frags, schema) -> Optional[int]:
+    """Cells a consolidation materializes when it merges ``frags``: for
+    a sparse array the sum of their footer cell counts (an upper bound
+    on the merged cells), for a dense one the volume of their union box
+    (the range reader fills every cell of it).  None when a footer
+    cannot tell."""
+    from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
+        fragment_cell_count,
+    )
+
+    if schema.array_type == "DENSE":
+        box = _union_box(frags, schema)
+        if box is None:
+            return None
+        vol = 1
+        for lo, hi in box:
+            vol *= hi - lo + 1
+        return vol
+    counts = [fragment_cell_count(f, schema) for f in frags]
+    return None if None in counts else sum(counts)
+
+
+def _stage_merged(uri, part, dense, dim_names, attr_names, span, key):
+    """Stage the merged piece ``part`` (dims + attrs) as an invisible v19
+    fragment spanning ``span`` and return its directory; the caller's
+    group commit makes it visible.  A dense piece is a full box (the
+    range reader clips to the merged bounding box and materializes
+    fills): its per-dim min/max IS the written subarray, and its cells
+    go down in row-major box order; the writer tile-aligns and records
+    the true NED."""
+    from tiledb_mariadb_spark.sources.tiledb_native_write import (  # noqa: PLC0415
+        write_native_fragment,
+    )
+
+    kw = {}
+    cols = list(part.columns)
+    if dense:
+        part = part.sort_values(dim_names, kind="mergesort")
+        box = [(int(part[d].min()), int(part[d].max())) for d in dim_names]
+        vol = 1
+        for blo, bhi in box:
+            vol *= bhi - blo + 1
+        if vol != len(part):
+            raise ValueError(
+                f"dense consolidation band is not a full box:"
+                f" {len(part)} cells for {box}"
+            )
+        kw["subarray"] = box
+        cols = attr_names
+    return write_native_fragment(
+        uri,
+        {c: part[c].to_numpy() if part[c].dtype.kind in "iuf"
+         else list(part[c]) for c in cols},
+        ts_range=span,
+        version=19,
+        encryption_key=key,
+        commit=False,
+        **kw,
+    )
+
+
+def _stage_tasks(uri, backend, info, splits, runs, spans, dense, key):
+    """The consolidation task function for :func:`run_seed_tasks`: seed
+    ``t`` merges run ``t // len(splits)`` (``None``: every visible
+    fragment) over split ``t % len(splits)`` and stages the result.
+    Yields ``(run_id, fragment name)`` rows.  When staging fails, the
+    task removes what it staged before re-raising: nothing committed
+    them, so they are orphans."""
+    import shutil  # noqa: PLC0415
+
+    dim_names = [d.name for d in info.dims]
+    attr_names = [a.name for a in info.attrs]
+
+    def task(batches) -> Iterator:
+        import os  # noqa: PLC0415
+
+        import pandas as pd  # noqa: PLC0415
+
+        made = []
+        try:
+            for pdf in batches:
+                for t in pdf["task_id"]:
+                    ri, si = divmod(int(t), len(splits))
+                    part = backend.read_range(
+                        uri, splits[si], dim_names + attr_names,
+                        frags=runs[ri],
+                    )
+                    if len(part):
+                        made.append((ri, _stage_merged(
+                            uri, part, dense, dim_names, attr_names,
+                            spans[ri], key,
+                        )))
+        except BaseException:
+            for _ri, frag in made:
+                shutil.rmtree(frag, ignore_errors=True)
+            raise
+        yield pd.DataFrame(
+            [(ri, os.path.basename(f)) for ri, f in made] or [(-1, "")],
+            columns=["run_id", "frag"],
+        )
+
+    return task
+
+
+def _run_consolidation(spark, uri, backend, runs, spans, dense, key,
+                       target_splits, cells):
+    """Plan one dim0 split per ``_CELLS_PER_TASK`` input cells and stage
+    every (run, split) merge: in the driver when one split per run
+    does, else as one Spark job of one task per pair.  Returns the
+    staged fragment names of each run."""
+    n = tasks_for(cells, _CELLS_PER_TASK, target_splits)
+    info = backend.info(uri)
+    splits = plan_splits(
+        info, None, n, weights=backend.split_weights(uri) if n > 1 else None
+    )
+    staged = run_seed_tasks(
+        spark,
+        _stage_tasks(uri, backend, info, splits, runs, spans, dense, key),
+        len(runs) * len(splits), "run_id int, frag string",
+        colname="task_id",
+        num_partitions=1 if len(splits) == 1 else None,
+    )
+    return [
+        [nm for r, nm in staged if nm and int(r) == ri]
+        for ri in range(len(runs))
+    ]
+
+
+def _write_vac(uri, span, lines) -> None:
+    """A ``.vac`` manifest: what :func:`vacuum_native_array` retires
+    once the group committed over ``span`` supersedes it."""
+    import os  # noqa: PLC0415
+    import uuid as _uuid  # noqa: PLC0415
+
+    name = f"__{span[0]}_{span[1]}_{_uuid.uuid4().hex}.vac"
+    with open(os.path.join(uri, "__commits", name), "w") as f:
+        for ln in lines:
+            f.write(f"{ln}\n")
+
+
+def _superseded(uri, frags) -> list:
+    """Vacuum lines for merged fragments: each directory and its marker."""
+    import os  # noqa: PLC0415
+
+    out = []
+    for o in frags:
+        out.append(os.path.relpath(o, uri))
+        out.append(f"__commits/{os.path.basename(o)}.wrt")
+    return out
+
+
 def consolidate_array(
     spark: SparkSession,
     uri: str,
     target_splits: int = 16,
     encryption_key: Optional[Any] = None,
 ) -> int:
-    """DISTRIBUTED fragment consolidation for native arrays — the
+    """Fragment consolidation for native arrays that scales out — the
     100 TB twin of ``consolidate_native_array`` (which materializes the
     merged state on one node, fine for small arrays, a non-starter at
     scale).  Each task:
@@ -2341,11 +2563,17 @@ def consolidate_array(
     - stages a v19 fragment spanning the consolidated ``[t1, t2]``
       timestamp range WITHOUT a commit marker (invisible).
 
-    The driver then writes ONE ``__commits/<name>.con`` file listing
-    every staged fragment — the reader's consolidation-commit era — so
-    the whole group becomes visible ATOMICALLY (a crash before the .con
-    leaves only invisible staged dirs, never a half-consolidated view).
-    Old fragments (strictly narrower ranges) are hidden by the coverage
+    The split count is ceil(input cells / ``_CELLS_PER_TASK``) capped
+    by ``target_splits`` (input cells: the fragments' footer counts, or
+    for a dense array the merged bounding box).  One split runs in the
+    driver with no Spark job and stages one fragment.
+
+    The driver then commits the staged group at once
+    (:func:`commit_fragments`: one ``.wrt`` for one fragment, else one
+    ``__commits/<name>.con`` listing them — the reader's
+    consolidation-commit era), so a crash before the commit leaves only
+    invisible staged dirs, never a half-consolidated view.  Old
+    fragments (strictly narrower ranges) are hidden by the coverage
     rule and listed in a ``.vac`` manifest for ``vacuum_native_array``;
     delete commits inside ``[t1, t2]`` are baked in and retired with
     them.  Returns the number of new fragments (0 = nothing to merge).
@@ -2364,7 +2592,6 @@ def consolidate_array(
     consolidation commit files (the v18/v19 fixture layout);
     ha_mytile.cc delegates to the same libtiledb machinery."""
     import os  # noqa: PLC0415
-    import uuid as _uuid  # noqa: PLC0415
 
     from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
         _delete_conditions,
@@ -2376,7 +2603,7 @@ def consolidate_array(
         parse_array_schema,
     )
     from tiledb_mariadb_spark.sources.tiledb_native_write import (  # noqa: PLC0415
-        write_native_fragment,
+        commit_fragments,
     )
 
     open_encryption(uri, encryption_key)
@@ -2396,77 +2623,10 @@ def consolidate_array(
     while any(r == (t1, t2) for r in rngs):
         t2 += 1
     backend = NativeDecoderBackend(encryption_key=encryption_key)
-    info = backend.info(uri)
-    splits = plan_splits(info, None, target_splits,
-                         weights=backend.split_weights(uri))
-    cols = [d.name for d in info.dims] + [a.name for a in info.attrs]
-    split_df = _seed_partitions(spark, len(splits))
-    key = encryption_key
-
-    dim_names = [d.name for d in info.dims]
-    attr_names = [a.name for a in info.attrs]
-
-    def consolidate_part(batches) -> Iterator:
-        import pandas as pd  # noqa: PLC0415
-
-        names = []
-        for pdf in batches:
-            for sid in pdf["split_id"]:
-                ranges = splits[int(sid)]
-                part = backend.read_range(uri, ranges, cols)
-                if not len(part):
-                    continue
-                if dense:
-                    # the merged band is a full box (the range reader
-                    # clips to the visible bounding box and materializes
-                    # fills): its per-dim min/max IS the written
-                    # subarray.  Cells go down in row-major box order;
-                    # the writer tile-aligns and records the true NED.
-                    part = part.sort_values(dim_names, kind="mergesort")
-                    box = [
-                        (int(part[d].min()), int(part[d].max()))
-                        for d in dim_names
-                    ]
-                    vol = 1
-                    for blo, bhi in box:
-                        vol *= bhi - blo + 1
-                    if vol != len(part):
-                        raise ValueError(
-                            f"dense consolidation band is not a full box:"
-                            f" {len(part)} cells for {box}"
-                        )
-                    frag = write_native_fragment(
-                        uri,
-                        {a: part[a].to_numpy()
-                         if part[a].dtype.kind in "iuf" else list(part[a])
-                         for a in attr_names},
-                        subarray=box,
-                        ts_range=(t1, t2),
-                        version=19,
-                        encryption_key=key,
-                        commit=False,
-                    )
-                else:
-                    frag = write_native_fragment(
-                        uri,
-                        {c: part[c].to_numpy()
-                         if part[c].dtype.kind in "iuf" else list(part[c])
-                         for c in part.columns},
-                        ts_range=(t1, t2),
-                        version=19,
-                        encryption_key=key,
-                        commit=False,  # the driver's .con commits the group
-                    )
-                names.append(os.path.basename(frag))
-        yield pd.DataFrame({"frag": names or [""]})
-
-    staged = [
-        r.frag
-        for r in split_df.mapInPandas(
-            consolidate_part, schema="frag string"
-        ).collect()
-        if r.frag
-    ]
+    [staged] = _run_consolidation(
+        spark, uri, backend, [None], [(t1, t2)], dense, encryption_key,
+        target_splits, _merge_cells(old, schema),
+    )
     if not staged:
         return 0
     commits = os.path.join(uri, "__commits")
@@ -2474,26 +2634,12 @@ def consolidate_array(
         raise ValueError(
             "distributed consolidation needs the __commits layout"
         )
-    # ONE .con file = the atomic visibility flip for the whole group
-    con_name = (
-        f"__{t1}_{t2}_{_uuid.uuid4().hex}.con"
-    )
-    # tmp must NOT end in ".con": a concurrent reader listing
-    # __commits mid-write would parse a PARTIAL group as committed
-    tmp = os.path.join(commits, "." + con_name + ".tmp")
-    with open(tmp, "w") as f:
-        for n in staged:
-            f.write(f"__commits/{n}.wrt\n")
-    os.replace(tmp, os.path.join(commits, con_name))
+    commit_fragments(uri, staged, span=(t1, t2))
     # vacuum manifest: everything the consolidated group supersedes
-    with open(os.path.join(commits, con_name[:-4] + ".vac"), "w") as f:
-        for o in old:
-            name = os.path.basename(o)
-            f.write(f"{os.path.relpath(o, uri)}\n")
-            f.write(f"__commits/{name}.wrt\n")
-        for e in os.listdir(commits):
-            if e.endswith(".del") and t1 <= _frag_ts(e) <= t2:
-                f.write(f"__commits/{e}\n")
+    _write_vac(uri, (t1, t2), _superseded(uri, old) + [
+        f"__commits/{e}" for e in os.listdir(commits)
+        if e.endswith(".del") and t1 <= _frag_ts(e) <= t2
+    ])
     return len(staged)
 
 
@@ -2588,19 +2734,25 @@ def consolidate_array_incremental(
     target_splits: int = 8,
     encryption_key: Optional[Any] = None,
 ) -> int:
-    """Distributed INCREMENTAL consolidation for SPARSE native arrays:
-    execute :func:`plan_consolidation`'s size-ratio runs.  Per run, each
-    task reads one dim0 split of the run-SUBSET merged state (the
-    ``frags=`` reader — newest-wins WITHIN the run only; deletes are
-    era-bounded and, by plan construction, never baked) and stages an
-    invisible v19 fragment spanning the run's widened [t1, t2]; one
-    ``.con`` per run flips it visible atomically and a ``.vac`` lists
-    the run's members (never ``.del`` commits — those outlive
-    incremental merges).  Cells in non-run fragments are untouched:
-    a run cell's newest in-run value lands in the new fragment, which
-    sorts exactly where the run sorted, so the global newest-wins order
-    is unchanged.  Returns the number of new fragments (0 = no
-    admissible runs — e.g. sizes too skewed, nothing to merge).
+    """INCREMENTAL consolidation for native arrays: execute
+    :func:`plan_consolidation`'s size-ratio runs.  Per run, each task
+    reads one dim0 split of the run-SUBSET merged state (the ``frags=``
+    reader — newest-wins WITHIN the run only; deletes are era-bounded
+    and, by plan construction, never baked) and stages an invisible v19
+    fragment spanning the run's widened [t1, t2]; one commit per run
+    (:func:`commit_fragments`) flips it visible atomically and a
+    ``.vac`` lists the run's members (never ``.del`` commits — those
+    outlive incremental merges).  Cells in non-run fragments are
+    untouched: a run cell's newest in-run value lands in the new
+    fragment, which sorts exactly where the run sorted, so the global
+    newest-wins order is unchanged.  Returns the number of new fragments
+    (0 = no admissible runs — e.g. sizes too skewed, nothing to merge).
+
+    The split count is ceil(input cells / ``_CELLS_PER_TASK``) capped
+    by ``target_splits``, where the input cells are the runs' footer
+    cell counts (dense: their bounding boxes).  One split runs every
+    run in the driver with no Spark job, one new fragment per run;
+    more run one Spark task per (run, split).
 
     DENSE arrays (round 7): a dense subset-merge materializes FILLS for
     gap cells inside the run's union bounding box, which would shadow
@@ -2614,18 +2766,18 @@ def consolidate_array_incremental(
     fill-shadowing caveat).  Newer non-run fragments need no box check:
     they merge after the run and overwrite it wherever they overlap."""
     import os  # noqa: PLC0415
-    import uuid as _uuid  # noqa: PLC0415
+    import shutil  # noqa: PLC0415
 
     from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
         _frag_range,
+        _frag_ts,
         _fragment_dirs,
         _schema_path,
         open_encryption,
         parse_array_schema,
-        parse_fragment_footer,
     )
     from tiledb_mariadb_spark.sources.tiledb_native_write import (  # noqa: PLC0415
-        write_native_fragment,
+        commit_fragments,
     )
 
     open_encryption(uri, encryption_key)
@@ -2635,32 +2787,11 @@ def consolidate_array_incremental(
         uri, ratio=ratio, min_run=min_run, max_run=max_run
     )
 
-    def _ned_box(frag):
-        fm = os.path.join(frag, "__fragment_metadata.tdb")
-        footer = parse_fragment_footer(fm, schema)
-        if footer is None:
-            return None
-        box = []
-        for ned in footer.non_empty_domain:
-            if ned is None:
-                return None  # untrusted dim: no provable box
-            box.append(ned)
-        return box
-
-    def _run_bbox(run):
-        boxes = [_ned_box(f) for f in run]
-        if any(b is None for b in boxes):
-            return None
-        return [
-            (min(b[i][0] for b in boxes), max(b[i][1] for b in boxes))
-            for i in range(len(schema.dims))
-        ]
-
     def _dense_run_safe(run, frag_listing):
         """True iff the run's union bounding box cannot shadow an older
         non-run fragment: every strictly-older fragment has a provable
         written box disjoint from the run's bbox."""
-        bbox = _run_bbox(run)
+        bbox = _union_box(run, schema)
         if bbox is None:
             return False
         run_names = {os.path.basename(f) for f in run}
@@ -2669,7 +2800,7 @@ def consolidate_array_incremental(
             nm = os.path.basename(f)
             if nm in run_names or _frag_range(nm)[1] >= run_t1:
                 continue  # in-run, or newer: merges after the run
-            ob = _ned_box(f)
+            ob = _ned_box(f, schema)
             if ob is None or all(
                 alo <= bhi and blo <= ahi
                 for (alo, ahi), (blo, bhi) in zip(bbox, ob)
@@ -2682,17 +2813,11 @@ def consolidate_array_incremental(
         runs = [r for r in runs if _dense_run_safe(r, listing)]
     if not runs:
         return 0
-    all_rngs = {
-        os.path.basename(f): _frag_range(os.path.basename(f))
-        for run in runs for f in run
-    }
 
     def _span(run):
-        t1 = min(all_rngs[os.path.basename(f)][0] for f in run)
-        t2 = max(all_rngs[os.path.basename(f)][1] for f in run)
-        from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
-            _fragment_dirs,
-        )
+        rngs = [_frag_range(os.path.basename(f)) for f in run]
+        t1 = min(a for a, _b in rngs)
+        t2 = max(b for _a, b in rngs)
         taken = [
             _frag_range(os.path.basename(f)) for f in _fragment_dirs(uri)
         ]
@@ -2700,97 +2825,15 @@ def consolidate_array_incremental(
             t2 += 1
         return t1, t2
 
-    backend = NativeDecoderBackend(encryption_key=encryption_key)
-    info = backend.info(uri)
-    splits = plan_splits(info, None, target_splits,
-                         weights=backend.split_weights(uri))
-    dim_names = [d.name for d in info.dims]
-    attr_names = [a.name for a in info.attrs]
-    cols = dim_names + attr_names
     spans = [_span(run) for run in runs]
-    tasks = [
-        (ri, si) for ri in range(len(runs)) for si in range(len(splits))
-    ]
-    # (run_id, split_id) was enumerated run-major, so both components
-    # derive from the seed row id arithmetically — one task per pair,
-    # no shuffle (see _seed_partitions)
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
-    task_df = _seed_partitions(spark, len(tasks), colname="task_id").select(
-        "task_id",
-        (F.col("task_id") / len(splits)).cast("int").alias("run_id"),
-        (F.col("task_id") % len(splits)).cast("int").alias("split_id"),
+    cells = [_merge_cells(run, schema) for run in runs]
+    staged = _run_consolidation(
+        spark, uri, NativeDecoderBackend(encryption_key=encryption_key),
+        runs, spans, dense, encryption_key, target_splits,
+        None if None in cells else sum(cells),
     )
-    key = encryption_key
-
-    def consolidate_part(batches) -> Iterator:
-        import pandas as pd  # noqa: PLC0415
-
-        out = []
-        for pdf in batches:
-            for ri, si in zip(pdf["run_id"], pdf["split_id"]):
-                run, (t1, t2) = runs[int(ri)], spans[int(ri)]
-                part = backend.read_range(
-                    uri, splits[int(si)], cols, frags=run
-                )
-                if not len(part):
-                    continue
-                if dense:
-                    # the run-subset merged band is a full box (the
-                    # reader clips to the run bbox and materializes
-                    # fills) — same shape as consolidate_array's dense
-                    # branch; admissibility proved the bbox disjoint
-                    # from every older fragment, so those fills shadow
-                    # nothing
-                    part = part.sort_values(dim_names, kind="mergesort")
-                    box = [
-                        (int(part[d].min()), int(part[d].max()))
-                        for d in dim_names
-                    ]
-                    vol = 1
-                    for blo, bhi in box:
-                        vol *= bhi - blo + 1
-                    if vol != len(part):
-                        raise ValueError(
-                            "dense incremental band is not a full box:"
-                            f" {len(part)} cells for {box}"
-                        )
-                    frag = write_native_fragment(
-                        uri,
-                        {a: part[a].to_numpy()
-                         if part[a].dtype.kind in "iuf" else list(part[a])
-                         for a in attr_names},
-                        subarray=box,
-                        ts_range=(t1, t2),
-                        version=19,
-                        encryption_key=key,
-                        commit=False,
-                    )
-                else:
-                    frag = write_native_fragment(
-                        uri,
-                        {c: part[c].to_numpy()
-                         if part[c].dtype.kind in "iuf" else list(part[c])
-                         for c in part.columns},
-                        ts_range=(t1, t2),
-                        version=19,
-                        encryption_key=key,
-                        commit=False,
-                    )
-                out.append((int(ri), os.path.basename(frag)))
-        yield pd.DataFrame(
-            out or [(-1, "")], columns=["run_id", "frag"]
-        )
-
-    staged = [
-        (r.run_id, r.frag)
-        for r in task_df.mapInPandas(
-            consolidate_part, schema="run_id int, frag string"
-        ).collect()
-        if r.frag
-    ]
     commits = os.path.join(uri, "__commits")
-    if staged and not os.path.isdir(commits):
+    if any(staged) and not os.path.isdir(commits):
         raise ValueError(
             "incremental consolidation needs the __commits layout"
         )
@@ -2804,13 +2847,8 @@ def consolidate_array_incremental(
         .del committed while the run's tasks were staging can make the
         widened span cover a non-run fragment (the coverage rule would
         hide it) or bracket a new delete commit (which incremental
-        merges must never bake).  The .con flip is what makes the new
+        merges must never bake).  The commit is what makes the new
         fragment visible, so checking here closes the plan->commit race."""
-        from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
-            _frag_ts,
-            _fragment_dirs,
-        )
-
         run_names = {os.path.basename(f) for f in run}
         for f in _fragment_dirs(uri):
             nm = os.path.basename(f)
@@ -2825,35 +2863,22 @@ def consolidate_array_incremental(
         )
 
     n_total = 0
-    for ri, run in enumerate(runs):
-        names = [nm for r, nm in staged if r == ri]
+    for run, span, names in zip(runs, spans, staged):
         if not names:
             continue
-        t1, t2 = spans[ri]
-        if not _still_admissible(run, t1, t2) or (
+        if not _still_admissible(run, *span) or (
             dense and not _dense_run_safe(run, _fragment_dirs(uri))
         ):
             # Abort this run: its staged fragments never got a commit
             # marker (invisible by the crash-atomicity contract); drop
             # them from disk instead of leaving orphan directories.
-            import shutil  # noqa: PLC0415
-
             for nm in names:
                 shutil.rmtree(
                     os.path.join(frag_root, nm), ignore_errors=True
                 )
             continue
-        con_name = f"__{t1}_{t2}_{_uuid.uuid4().hex}.con"
-        tmp = os.path.join(commits, "." + con_name + ".tmp")
-        with open(tmp, "w") as f:
-            for nm in names:
-                f.write(f"__commits/{nm}.wrt\n")
-        os.replace(tmp, os.path.join(commits, con_name))
-        with open(os.path.join(commits, con_name[:-4] + ".vac"), "w") as f:
-            for o in run:
-                nm = os.path.basename(o)
-                f.write(f"{os.path.relpath(o, uri)}\n")
-                f.write(f"__commits/{nm}.wrt\n")
+        commit_fragments(uri, names, span=span)
+        _write_vac(uri, span, _superseded(uri, run))
         n_total += len(names)
     return n_total
 
@@ -2880,12 +2905,18 @@ def maintain_array(
 
     * ``fragments``: ``incremental=True`` (default) runs size-ratio
       incremental consolidation (cost tracks appended data — the
-      100 TB default); False runs full distributed consolidation.
+      100 TB default); False runs full consolidation.
     * ``commits``: fold per-fragment commit markers into one .con.
     * ``array_meta``: fold the __meta entry history.
     * ``fragment_meta``: fold footers/stats/tile-weights into one
-      __fragment_meta object (planning opens O(1) files; built
-      distributed over ``spark``).
+      __fragment_meta object (planning opens O(1) files).
+
+    Maintenance runs in the driver, with no Spark job, whenever its
+    work fits one task: consolidation input of at most
+    ``_CELLS_PER_TASK`` cells, and a fold over at most
+    ``_FRAGMENTS_PER_TASK`` fragments (``tiledb_native_write``).
+    Larger inputs run one Spark job each, sized by the same constants
+    and capped by ``target_splits``.
     * ``expire_before=<unix_ms>`` (optional, runs FIRST): TTL
       retention — physically drop fragments wholly older than the
       cutoff and any `.del` that can no longer match

@@ -1058,6 +1058,40 @@ def _commit_fragment(array_dir: str, frag: str) -> None:
         open(os.path.join(commits, os.path.basename(frag) + ".wrt"), "w").close()
 
 
+def commit_fragments(
+    array_dir: str,
+    names: Sequence[str],
+    span: Optional[tuple[int, int]] = None,
+) -> Optional[str]:
+    """Make the staged fragments ``names`` visible in one step (the group
+    commit of a multi-task write or a consolidation): one fragment gets
+    its ``.wrt`` marker, several get ONE ``__commits/__t1_t2_uuid.con``
+    listing their markers, written to a dotted tmp file and renamed into
+    place, so a reader sees all of the group or none of it.  ``span``
+    is the ``.con``'s ``[t1, t2]`` (default: the hull of the fragments'
+    ranges).  Returns the marker or ``.con`` path; None when ``names``
+    is empty or the array predates ``__commits`` (directory presence is
+    then the visibility rule)."""
+    commits = os.path.join(array_dir, "__commits")
+    if not names or not os.path.isdir(commits):
+        return None
+    if len(names) == 1:
+        _commit_fragment(array_dir, names[0])
+        return os.path.join(commits, names[0] + ".wrt")
+    if span is None:
+        rngs = [_frag_range(n) for n in names]
+        span = (min(a for a, _b in rngs), max(b for _a, b in rngs))
+    con = f"__{span[0]}_{span[1]}_{uuid.uuid4().hex}.con"
+    # tmp must NOT end in .con: a reader listing __commits mid-write
+    # must never parse a partial group as committed
+    tmp = os.path.join(commits, "." + con + ".tmp")
+    with open(tmp, "w") as f:
+        for n in names:
+            f.write(f"__commits/{n}.wrt\n")
+    os.replace(tmp, os.path.join(commits, con))
+    return os.path.join(commits, con)
+
+
 def _write_field_files(
     frag: str,
     schema: NativeSchema,
@@ -2178,6 +2212,12 @@ def _fmeta_entry_of(frag: str, schema: NativeSchema) -> Optional[dict]:
     return entry
 
 
+# Fragments one fold task parses.  The driver built the fold faster
+# than a 4-task Spark job up to 1000 fragments and as fast at about
+# 1300 (scripts/consolidation_scale_probe.py --crossover).
+_FRAGMENTS_PER_TASK = 1000
+
+
 def consolidate_fragment_meta(
     array_dir: str,
     encryption_key: "Optional[bytes | str]" = None,
@@ -2204,12 +2244,19 @@ def consolidate_fragment_meta(
     Encrypted arrays seal the fold with the registered key (fragment
     stats of an encrypted array never reach disk in plaintext).
     ``spark``: distribute the per-fragment footer/stats parsing over
-    executors (order-preserving) — at 100k fragments on object storage
-    the fold build is latency-bound per fragment, so executors do the
-    opens and only compact JSON entries return to the driver.
+    executors (order-preserving) in ceil(fragments /
+    ``_FRAGMENTS_PER_TASK``) tasks, capped by ``target_splits`` — at
+    100k fragments on object storage the fold build is latency-bound
+    per fragment, so executors do the opens and only compact JSON
+    entries return to the driver.  A fold that fits one task (and every
+    fold without ``spark``) is built in the driver with no Spark job.
     Returns the .meta path, or None with <2 parseable fragments."""
     import json  # noqa: PLC0415
 
+    from tiledb_mariadb_spark.sources.tiledb_array import (  # noqa: PLC0415
+        run_seed_tasks,
+        tasks_for,
+    )
     from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
         _fmeta_schema_fp,
         open_encryption,
@@ -2218,53 +2265,32 @@ def consolidate_fragment_meta(
     open_encryption(array_dir, encryption_key)
     schema = parse_array_schema(_schema_path(array_dir))
     frags = _fragment_dirs(array_dir)
-    if spark is not None and len(frags) > 1:
+    key = encryption_key
+
+    def build(batches):
         import pandas as pd  # noqa: PLC0415
 
-        key = encryption_key
-
-        def build(batches):
-            from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
-                open_encryption as _oe,
-            )
-
-            _oe(array_dir, key)
-            s = parse_array_schema(_schema_path(array_dir))
-            for pdf in batches:
-                out = []
-                names = []
-                for fi in pdf["frag_idx"]:
-                    frag = frags[int(fi)]
-                    e = _fmeta_entry_of(frag, s)
-                    names.append(frag)
-                    out.append(None if e is None else json.dumps(e))
-                yield pd.DataFrame({"frag": names, "entry": out})
-
-        from tiledb_mariadb_spark.sources.tiledb_array import (  # noqa: PLC0415
-            _seed_partitions,
+        from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
+            open_encryption as _oe,
         )
 
-        n_parts = max(1, min(int(target_splits), len(frags)))
-        # seed frag INDEXES over exactly n_parts shuffle-free partitions
-        # (range slices are contiguous and balanced — the old
-        # repartition-by-frag-string hashing could leave partitions
-        # empty while doubling up others)
-        built = (
-            _seed_partitions(spark, len(frags), colname="frag_idx",
-                             num_partitions=n_parts)
-            .mapInPandas(build, schema="frag string, entry string")
-            .collect()
-        )
-        by_frag = {r["frag"]: r["entry"] for r in built}
-        entries = [
-            json.loads(by_frag[f]) for f in frags
-            if by_frag.get(f) is not None
-        ]
-    else:
-        entries = [
-            e for e in (_fmeta_entry_of(frag, schema) for frag in frags)
-            if e is not None
-        ]
+        _oe(array_dir, key)
+        s = parse_array_schema(_schema_path(array_dir))
+        for pdf in batches:
+            out = []
+            for fi in pdf["frag_idx"]:
+                e = _fmeta_entry_of(frags[int(fi)], s)
+                out.append(None if e is None else json.dumps(e))
+            yield pd.DataFrame({"entry": out}, dtype=object)
+
+    n_parts = 1 if spark is None else tasks_for(
+        len(frags), _FRAGMENTS_PER_TASK, int(target_splits)
+    )
+    # seed frag INDEXES over n_parts contiguous, balanced, shuffle-free
+    # partitions; rows come back in fragment order either way
+    built = run_seed_tasks(spark, build, len(frags), "entry string",
+                           colname="frag_idx", num_partitions=n_parts)
+    entries = [json.loads(e) for (e,) in built if e is not None]
     if len(entries) < 2:
         return None
     rngs = [_frag_range(e["name"]) for e in entries]

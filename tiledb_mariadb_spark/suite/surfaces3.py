@@ -3987,8 +3987,10 @@ SPECS.append(
 # stages an invisible v19 fragment spanning [t1, t2]; ONE
 # __commits/*.con file (the reader's consolidation-commit era, v18/v19
 # fixture layout) flips the whole group visible ATOMICALLY.  The spec
-# writes overlapping fragments + a delete, consolidates distributed,
-# VACUUMS, and aggregates the survivor state.
+# writes overlapping fragments + a delete, consolidates, VACUUMS, and
+# aggregates the survivor state.  Its 8000 cells fit one task
+# (`_CELLS_PER_TASK`), so the merge runs in the driver and writes
+# exactly one fragment.
 def q319_distributed_consolidation(spark, sf_dir):
     import tempfile  # noqa: PLC0415
 
@@ -4043,7 +4045,7 @@ def q319_distributed_consolidation(spark, sf_dir):
             F.count(F.lit(1)).alias("n"),
             F.sum("cents").alias("sum_cents"),
         )
-        .withColumn("new_frags_ge_2", F.lit(n_new >= 2))
+        .withColumn("one_new_frag", F.lit(n_new == 1))
         .withColumn(
             "frags_consolidated",
             F.lit(0 < len(_fragment_dirs(uri)) <= 5),
@@ -4069,7 +4071,7 @@ merged AS (
 kept AS (SELECT * FROM merged WHERE status <> 'O')
 SELECT status, CAST(COUNT(*) AS BIGINT) AS n,
        CAST(SUM(cents) AS BIGINT) AS sum_cents,
-       TRUE AS new_frags_ge_2,
+       TRUE AS one_new_frag,
        TRUE AS frags_consolidated
 FROM kept GROUP BY status ORDER BY status
 """
@@ -4097,6 +4099,7 @@ SPECS.append(
 # materialization by the range reader) and stages a dense band
 # fragment; one .con commits the group, vacuum retires the three
 # originals.  Read results must be bit-identical to the logical merge.
+# The 1200-cell box fits one task, so the driver writes one band.
 def q320_dense_consolidation(spark, sf_dir):
     import struct as _struct  # noqa: PLC0415
     import tempfile  # noqa: PLC0415
@@ -4163,7 +4166,7 @@ def q320_dense_consolidation(spark, sf_dir):
             F.sum("cents").alias("sum_cents"),
             F.min("cents").alias("min_cents"),
         )
-        .withColumn("consolidated", F.lit(n_new >= 2))
+        .withColumn("consolidated", F.lit(n_new == 1))
         .withColumn(
             "frags_retired", F.lit(0 < len(_fragment_dirs(uri)) <= 5)
         )

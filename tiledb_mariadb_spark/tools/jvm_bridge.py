@@ -72,11 +72,11 @@ import struct
 import sys
 import traceback
 
-# Matching cells one scan task is sized for.  The ``splits`` command
-# plans ceil(est / _CELLS_PER_TASK) tasks, and marks a plan of at most
-# one split whose estimate fits one task ``local``: the JVM then reads
-# it in the driver, with no Spark job.
-_CELLS_PER_TASK = 262144
+# The ``splits`` command plans ceil(est / _CELLS_PER_TASK) tasks, and
+# marks a plan of at most one split whose estimate fits one task
+# ``local``: the JVM then reads it in the driver, with no Spark job.
+# Consolidation sizes its tasks by the same constant.
+from tiledb_mariadb_spark.sources.tiledb_array import _CELLS_PER_TASK
 
 # FLOOR(k/width) in SQL is DOUBLE division: exact vs integer ``k//width``
 # only while |k| < 2^52 (quotient*width below the 53-bit mantissa).
@@ -738,40 +738,16 @@ def main(argv=None) -> int:
     if a.cmd == "commitfrags":
         # the job-level visibility flip: one .wrt marker for a single
         # fragment, one atomic .con group file for many
-        import os as _os  # noqa: PLC0415
-        import uuid as _uuid  # noqa: PLC0415
-
-        from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
-            _frag_range,
-        )
         from tiledb_mariadb_spark.sources.tiledb_native_write import (  # noqa: PLC0415
-            _commit_fragment,
-            _frag_root,
+            commit_fragments,
         )
 
         try:
             frags = [f for f in json.loads(a.frags or "[]") if f]
-            commits = _os.path.join(a.uri, "__commits")
-            if not frags or not _os.path.isdir(commits):
-                print(json.dumps({"ok": True, "committed": 0}))
-                return 0
-            if len(frags) == 1:
-                _commit_fragment(
-                    a.uri, _os.path.join(_frag_root(a.uri), frags[0])
-                )
-            else:
-                rngs = [_frag_range(f) for f in frags]
-                t1 = min(r[0] for r in rngs)
-                t2 = max(r[1] for r in rngs)
-                con = f"__{t1}_{t2}_{_uuid.uuid4().hex}.con"
-                # tmp must NOT end in .con: a concurrent reader listing
-                # __commits mid-write must never parse a partial group
-                tmp = _os.path.join(commits, "." + con + ".tmp")
-                with open(tmp, "w") as f:
-                    for n in frags:
-                        f.write(f"__commits/{n}.wrt\n")
-                _os.replace(tmp, _os.path.join(commits, con))
-            print(json.dumps({"ok": True, "committed": len(frags)}))
+            done = commit_fragments(a.uri, frags)
+            print(json.dumps(
+                {"ok": True, "committed": len(frags) if done else 0}
+            ))
         except Exception as e:  # noqa: BLE001 - bridge boundary
             print(f"tiledb_agg commit bridge: {e}", file=sys.stderr)
             return 3
