@@ -405,3 +405,70 @@ def test_repeated_maintenance_folds_dont_accumulate(tmp_path):
     schema = parse_array_schema(_schema_path(arr))
     st = fragment_attr_stats(_fragment_dirs(arr)[0], schema)
     assert st["v"]["min"] == 0  # the surviving fold still serves
+
+
+def _fold_names(path):
+    import json
+
+    from tiledb_mariadb_spark.sources.tiledb_native import read_generic_tile
+
+    doc = json.loads(read_generic_tile(path).decode())
+    return [e["name"] for e in doc["fragments"]]
+
+
+def test_vacuum_retires_fold_of_vanished_fragments(tmp_path, spark):
+    """A maintain_array that merges every fragment into one leaves no
+    fold listing only vacuumed fragments, and reads stay the same."""
+    from tiledb_mariadb_spark.sources.tiledb_array import maintain_array
+
+    arr = _mk(tmp_path, n_frags=6)
+    old = consolidate_fragment_meta(arr)
+    assert len(_fold_names(old)) == 6
+    _n, before = range_rows(arr)
+    out = maintain_array(spark, arr, incremental=False)
+    assert out["fragment_meta"] is None  # one fragment: nothing to fold
+    frags = _fragment_dirs(arr)
+    assert len(frags) == 1
+    mdir = os.path.join(arr, "__fragment_meta")
+    root = os.path.dirname(frags[0])
+    for e in os.listdir(mdir):
+        if e.endswith(".meta"):
+            names = _fold_names(os.path.join(mdir, e))
+            assert all(os.path.isdir(os.path.join(root, n)) for n in names)
+    assert not os.path.exists(old)
+    _FMETA_CACHE.clear()
+    _n, after = range_rows(arr)
+    assert after == before
+
+
+def test_vacuum_keeps_fold_with_a_live_fragment(tmp_path):
+    """A fold stays while any fragment it lists exists, and an
+    unreadable fold (sealed, with no key registered) is kept."""
+    from tiledb_mariadb_spark.sources.tiledb_native_crypto import (
+        clear_encryption_key,
+    )
+
+    arr = _mk(tmp_path, n_frags=3)
+    fold = consolidate_fragment_meta(arr)
+    gone = _fragment_dirs(arr)[0]
+    import shutil
+
+    shutil.rmtree(gone)
+    vacuum_native_array(arr)
+    assert os.path.exists(fold)
+
+    key = b"3" * 32
+    enc = str(tmp_path / "enc")
+    create_native_array(
+        enc, dims=[NativeDim("k", 1, 1, (0, 100), None)],
+        attrs=[NativeAttr("v", 1, 1, False, None)], encryption_key=key,
+    )
+    for f in range(2):
+        write_native_fragment(enc, {"k": [f], "v": [f]}, ts=f + 1,
+                              version=19, encryption_key=key)
+    sealed = consolidate_fragment_meta(enc, encryption_key=key)
+    clear_encryption_key(enc)
+    for f in _fragment_dirs(enc):
+        shutil.rmtree(f)
+    vacuum_native_array(enc)
+    assert os.path.exists(sealed)

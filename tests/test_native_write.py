@@ -1512,3 +1512,298 @@ def test_var_numeric_cell_pack_byte_identity():
         write_native_fragment(
             uri2, {"k": [1, 2], "vl": [[1, 2], [3.5]]}, version=19
         )
+
+
+# --- write_array's two paths ------------------------------------------------
+# Rows already in the driver (a local relation of at most _CELLS_PER_TASK
+# rows) are written by the driver as one fragment; every other input runs
+# a mapInPandas job that writes one fragment per non-empty partition.
+
+VAR = 0xFFFFFFFF
+
+
+def _kv_array(tmp_path, name="kv"):
+    d = str(tmp_path / name)
+    create_native_array(
+        d,
+        dims=[NativeDim("k", 1, 1, (0, 10**7), None)],
+        attrs=[NativeAttr("v", 1, 1, False, None)],
+    )
+    return d
+
+
+def _kv_frame(spark, n, lo=0):
+    import numpy as np
+    import pandas as pd
+
+    k = np.arange(lo, lo + n, dtype=np.int64)
+    return spark.createDataFrame(pd.DataFrame({"k": k, "v": k * 3}))
+
+
+def _commit_markers(d):
+    return {e for e in os.listdir(os.path.join(d, "__commits"))
+            if e.endswith(".wrt")}
+
+
+def _nonempty_partitions(df):
+    return sum(1 for n in df.rdd.glom().map(len).collect() if n)
+
+
+@pytest.fixture()
+def no_map_in_pandas(spark, monkeypatch):
+    """Make any DataFrame.mapInPandas call fail the test."""
+    cls = type(spark.range(1))
+
+    def refuse(*_a, **_k):
+        raise AssertionError("mapInPandas ran")
+
+    monkeypatch.setattr(cls, "mapInPandas", refuse)
+
+
+def test_local_write_is_one_driver_fragment(spark, tmp_path,
+                                            no_map_in_pandas):
+    """A 10,000-row createDataFrame(pandas) input is written by the
+    driver: exactly one new fragment, one new .wrt, no mapInPandas."""
+    from tiledb_mariadb_spark.sources.tiledb_array import (
+        local_rows,
+        write_array,
+    )
+
+    d = _kv_array(tmp_path)
+    write_array(_kv_frame(spark, 100, lo=50_000), d)
+    frags, markers = set(_fragment_dirs(d)), _commit_markers(d)
+    df = _kv_frame(spark, 10_000)
+    assert local_rows(df) == 10_000
+    write_array(df, d)
+    new = set(_fragment_dirs(d)) - frags
+    assert len(new) == 1
+    assert _commit_markers(d) - markers == {
+        os.path.basename(next(iter(new))) + ".wrt"
+    }
+    _n, rows = range_rows(d, ranges=[(0, 9_999)])
+    assert rows == [(k, 3 * k) for k in range(10_000)]
+
+
+@pytest.mark.parametrize("shape", ["repartition3", "coalesce2", "range"])
+def test_partitioned_input_writes_per_partition(spark, tmp_path, shape):
+    """Inputs that are not local relations keep the job path: one
+    fragment per non-empty partition."""
+    from tiledb_mariadb_spark.sources.tiledb_array import (
+        local_rows,
+        write_array,
+    )
+
+    src = {
+        "repartition3": lambda: _kv_frame(spark, 300).repartition(3),
+        "coalesce2": lambda: _kv_frame(spark, 300).coalesce(2),
+        "range": lambda: spark.range(0, 300, numPartitions=3)
+        .selectExpr("id AS k", "id * 3 AS v"),
+    }[shape]()
+    assert local_rows(src) is None
+    parts = _nonempty_partitions(src)
+    assert parts >= 2
+    d = _kv_array(tmp_path)
+    write_array(src, d)
+    assert len(_fragment_dirs(d)) == parts
+    assert len(_commit_markers(d)) == parts
+    _n, rows = range_rows(d)
+    assert rows == [(k, 3 * k) for k in range(300)]
+
+
+def test_local_input_above_task_size_runs_job(spark, tmp_path,
+                                              monkeypatch):
+    """A local input with more rows than one task holds still runs the
+    mapInPandas job, one fragment per non-empty partition."""
+    from tiledb_mariadb_spark.sources import tiledb_array
+
+    monkeypatch.setattr(tiledb_array, "_CELLS_PER_TASK", 100)
+    cls = type(spark.range(1))
+    real = cls.mapInPandas
+    calls = []
+
+    def spy(self, *a, **k):
+        calls.append(1)
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(cls, "mapInPandas", spy)
+    df = _kv_frame(spark, 1000)
+    assert tiledb_array.local_rows(df) == 1000
+    parts = _nonempty_partitions(df)
+    assert parts >= 2
+    d = _kv_array(tmp_path)
+    tiledb_array.write_array(df, d)
+    assert calls == [1]
+    assert len(_fragment_dirs(d)) == parts
+    _n, rows = range_rows(d)
+    assert rows == [(k, 3 * k) for k in range(1000)]
+
+
+def test_empty_local_write_writes_nothing(spark, tmp_path,
+                                          no_map_in_pandas):
+    from tiledb_mariadb_spark.sources.tiledb_array import (
+        local_rows,
+        write_array,
+    )
+
+    from .spark_jobs import spark_jobs
+
+    d = _kv_array(tmp_path)
+    df = _kv_frame(spark, 100).where("k < 0")
+    assert local_rows(df) == 0
+    _out, jobs, _tasks = spark_jobs(spark, lambda: write_array(df, d))
+    assert jobs == 0
+    assert _fragment_dirs(d) == [] and _commit_markers(d) == set()
+
+
+def _typed_source(spark, n=600):
+    """Every column type the writers take, with nulls, NaN, empty and
+    multi-byte values, as a local relation."""
+    import datetime as dt
+
+    import pandas as pd
+
+    pdf = pd.DataFrame({
+        "k": list(range(n)),
+        "n": pd.array([None if i % 3 == 0 else i * 7 - 900
+                       for i in range(n)], dtype="Int64"),
+        "x": [float("nan") if i % 4 == 0 else None if i % 4 == 1
+              else i / 3 for i in range(n)],
+        "s": [None if i % 5 == 0 else "" if i % 5 == 1 else f"s{i}é多"
+              for i in range(n)],
+        "b": [None if i % 6 == 0 else bytes([i % 256, 0, 255])
+              for i in range(n)],
+        "pair": [[i, -i] for i in range(n)],
+        "vi": [list(range(i % 4 + 1)) for i in range(n)],
+        "d": [dt.date(2020, 1, 1) + dt.timedelta(days=i) for i in range(n)],
+        "t": [dt.datetime(2021, 3, 4, 5, 6, 7, 123456)
+              + dt.timedelta(minutes=i) for i in range(n)],
+    })
+    return spark.createDataFrame(
+        pdf,
+        schema="k long, n long, x double, s string, b binary, "
+        "pair array<int>, vi array<long>, d date, t timestamp",
+    )
+
+
+def _write_both_paths(src, write, monkeypatch):
+    """Run ``write`` on the driver path, then with the job path forced
+    (no local input fits a task of 0 cells)."""
+    from tiledb_mariadb_spark.sources import tiledb_array
+
+    assert tiledb_array.local_rows(src) is not None
+    write("driver")
+    with monkeypatch.context() as mp:
+        mp.setattr(tiledb_array, "_CELLS_PER_TASK", 0)
+        write("job")
+
+
+def test_both_write_paths_hand_the_backend_equal_frames(
+    spark, tmp_path, monkeypatch
+):
+    """The backend gets the same pandas values from both paths: dates,
+    timestamps, nulls, NaN, binary and list cells included
+    (FragmentDirBackend stores the frames it is given as parquet)."""
+    import glob
+
+    import pandas as pd
+
+    from tiledb_mariadb_spark.sources.tiledb_array import (
+        ArrayInfo,
+        AttrInfo,
+        DimInfo,
+        FragmentDirBackend,
+        write_array,
+    )
+
+    src = _typed_source(spark)
+    be = FragmentDirBackend()
+    info = ArrayInfo(dims=[DimInfo("k", "bigint", (0, 10**6))],
+                     attrs=[AttrInfo("n", "bigint")])
+
+    def write(path):
+        be.create(str(tmp_path / path), info)
+        write_array(src, str(tmp_path / path), backend=be)
+
+    _write_both_paths(src, write, monkeypatch)
+
+    def frame(path):
+        files = glob.glob(str(tmp_path / path / "frag_*.parquet"))
+        pdf = pd.concat([pd.read_parquet(f) for f in files])
+        return len(files), pdf.sort_values("k").reset_index(drop=True)
+
+    (n_driver, driver), (n_job, job) = frame("driver"), frame("job")
+    assert n_driver == 1 and n_job == _nonempty_partitions(src) > 1
+    pd.testing.assert_frame_equal(driver, job)
+    assert len(driver) == 600
+    assert driver["t"].iloc[1] == pd.Timestamp("2021-03-04 05:07:07.123456")
+    assert str(driver["d"].iloc[1]) == "2020-01-02"
+
+
+@pytest.mark.parametrize("ts,key", [(None, None), (5000, None),
+                                    (None, b"k" * 32)])
+def test_both_write_paths_write_identical_cells(
+    spark, tmp_path, monkeypatch, ts, key
+):
+    """Native arrays written through either path decode to the same
+    cells: nullable ints, NaN and null floats, strings, binary, fixed
+    multi-value and var-length attributes, with and without an explicit
+    ``ts`` and an encryption key."""
+    from tiledb_mariadb_spark.sources.tiledb_array import write_array
+
+    src = _typed_source(spark).drop("d", "t")
+
+    def write(path):
+        d = str(tmp_path / path)
+        create_native_array(
+            d,
+            dims=[NativeDim("k", 1, 1, (0, 10**6), None)],
+            attrs=[
+                NativeAttr("n", 1, 1, True, None),      # nullable int64
+                NativeAttr("x", 3, 1, True, None),      # nullable float64
+                NativeAttr("s", 12, VAR, True, None),   # var UTF-8
+                NativeAttr("b", 39, VAR, True, None),   # var blob
+                NativeAttr("pair", 0, 2, False, None),  # int32[2]
+                NativeAttr("vi", 1, VAR, False, None),  # var int64
+            ],
+            encryption_key=key,
+        )
+        write_array(src, d, encryption_key=key, ts=ts)
+
+    _write_both_paths(src, write, monkeypatch)
+    _n, driver = range_rows(str(tmp_path / "driver"))
+    _n, job = range_rows(str(tmp_path / "job"))
+    assert driver == job
+    assert len(driver) == 600
+    k, n, x, s, b, pair, vi = driver[8]
+    assert (k, n, s, b) == (8, 8 * 7 - 900, "s8é多", bytes([8, 0, 255]))
+    assert x is None or x != x  # NaN cells are written as null either way
+    assert list(pair) == [8, -8] and list(vi) == [0]
+    assert len(_fragment_dirs(str(tmp_path / "driver"))) == 1
+    if ts is not None:
+        assert all(os.path.basename(f).startswith(f"__{ts}_{ts}_")
+                   for f in _fragment_dirs(str(tmp_path / "driver")))
+
+
+def test_failed_driver_write_leaves_nothing_visible(spark, tmp_path,
+                                                    monkeypatch):
+    """A driver-path write whose fragment write raises re-raises from
+    write_array, commits no marker, and leaves reads unchanged."""
+    from tiledb_mariadb_spark.sources import tiledb_native_write
+    from tiledb_mariadb_spark.sources.tiledb_array import write_array
+
+    d = _kv_array(tmp_path)
+    write_array(_kv_frame(spark, 500), d)
+    _n, before = range_rows(d)
+    froot = os.path.join(d, "__fragments")
+    dirs, markers = set(os.listdir(froot)), _commit_markers(d)
+
+    def fail(*_a, **_k):
+        raise RuntimeError("injected write failure")
+
+    monkeypatch.setattr(tiledb_native_write, "write_native_fragment", fail)
+    with pytest.raises(RuntimeError, match="injected"):
+        write_array(_kv_frame(spark, 500, lo=1000), d)
+    assert set(os.listdir(froot)) == dirs
+    assert _commit_markers(d) == markers
+    _n, after = range_rows(d)
+    assert after == before

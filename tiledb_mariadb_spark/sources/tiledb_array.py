@@ -734,10 +734,12 @@ def _seed_partitions(spark, n: int, colname: str = "split_id",
 # Input cells one task is sized for.  Scan splits (the bridge ``splits``
 # command) and consolidation plan ceil(cells / _CELLS_PER_TASK) tasks,
 # and work that fits one task runs in the driver: a one-task Spark job
-# gives up no parallelism and costs a job's scheduling.  Incremental
-# consolidation in the driver was faster than a 4-task job up to this
-# many cells and as fast at 1M (scripts/consolidation_scale_probe.py
-# --crossover).
+# gives up no parallelism and costs a job's scheduling.  So does a
+# write_array of at most this many rows already in the driver.
+# Incremental consolidation in the driver was faster than a 4-task job
+# up to this many cells and as fast at 1M
+# (scripts/consolidation_scale_probe.py --crossover); for writes see
+# scripts/write_scale_probe.py.
 _CELLS_PER_TASK = 262144
 
 
@@ -762,16 +764,50 @@ def run_seed_tasks(spark, fn, n: int, schema: str,
         import pandas as pd  # noqa: PLC0415
 
         seeds = pd.DataFrame({colname: list(range(n))}, dtype="int32")
-        return [
-            tuple(row)
-            for pdf in fn(iter([seeds]))
-            for row in pdf.itertuples(index=False, name=None)
-        ]
+        return _run_in_driver(fn, [seeds])
     return [
         tuple(r)
         for r in _seed_partitions(spark, n, colname, num_partitions)
         .mapInPandas(fn, schema=schema).collect()
     ]
+
+
+def _run_in_driver(fn, batches: list) -> list[tuple]:
+    """Call the ``mapInPandas`` task function ``fn`` on ``batches`` as
+    one task in this process; its output rows as tuples."""
+    return [
+        tuple(row)
+        for pdf in fn(iter(batches))
+        for row in pdf.itertuples(index=False, name=None)
+    ]
+
+
+def local_rows(df: DataFrame) -> Optional[int]:
+    """How many rows ``df`` holds when its optimized plan is a
+    ``LocalRelation``: rows already in the driver, such as a
+    ``createDataFrame`` over a pandas frame and the projections and
+    filters the optimizer folds into it.  None for any other plan
+    (an explicit ``repartition``/``coalesce``, ``spark.range``, an array
+    or file read).  Reads the plan; no Spark job runs."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() != "LocalRelation":
+        return None
+    return int(plan.data().size())
+
+
+def run_frame_tasks(df: DataFrame, fn, schema: str) -> list[tuple]:
+    """Run the ``mapInPandas`` task function ``fn`` over ``df`` and
+    return its output rows as tuples in ``schema`` order.  Rows already
+    in the driver (:func:`local_rows` of at most ``_CELLS_PER_TASK``)
+    are one task's input, so ``fn`` runs here on them as one batch,
+    fetched by ``toPandas()`` (Spark's Arrow collect: no Python worker,
+    the same Arrow-to-pandas conversion a task's batches get); an empty
+    input is no batch at all, as an empty partition is.  Any other
+    input runs as a Spark job of one task per partition."""
+    n = local_rows(df)
+    if n is not None and n <= _CELLS_PER_TASK:
+        return _run_in_driver(fn, [df.toPandas()] if n else [])
+    return [tuple(r) for r in df.mapInPandas(fn, schema=schema).collect()]
 
 
 def plan_splits(
@@ -2329,15 +2365,25 @@ def write_array(
     encryption_key: Optional[Any] = None,
     ts: Optional[int] = None,
 ) -> None:
-    """Each partition writes an independent fragment — TileDB writers
+    """Write ``df``'s rows to the array at ``uri`` as new fragments.
+
+    Rows already in the driver — a local relation of at most
+    ``_CELLS_PER_TASK`` rows, such as ``spark.createDataFrame`` over a
+    pandas frame — are written by the driver as ONE fragment with one
+    commit marker and no Spark job (the reference's INSERT path: rows
+    buffered in the server, one write per statement).  Any other input
+    (an explicit ``repartition``/``coalesce``, ``spark.range``, an array
+    read, a larger local input) runs one Spark job in which each
+    non-empty partition writes an independent fragment — TileDB writers
     need no coordination, so write parallelism is the partition count.
+    An empty input writes nothing.
 
     Default backend: :class:`NativeDecoderBackend`, the package's own
     native-format writer.
     ``encryption_key`` seals every written fragment with AES-256-GCM.
     ``ts``: explicit unix-millis write timestamp (TileDB's open-at-
     timestamp writes — the one logical write may land several fragments,
-    all at ``ts``); None = each task stamps commit time.  Explicit
+    all at ``ts``); None = each writer stamps commit time.  Explicit
     timestamps make rapid successive writes deterministic under
     newest-wins (auto timestamps of two sub-millisecond writes could
     tie) and let backfills slot history at the right instant.  CAVEAT
@@ -2364,7 +2410,7 @@ def write_array(
             )
         yield pd.DataFrame({"written": [len(parts)]})
 
-    df.mapInPandas(write_part, schema="written int").collect()
+    run_frame_tasks(df, write_part, "written int")
 
 
 def _ned_box(frag: str, schema) -> Optional[list]:

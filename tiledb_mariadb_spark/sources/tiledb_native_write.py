@@ -1888,8 +1888,9 @@ def vacuum_native_array(array_dir: str) -> int:
     layout) fall back to the COVERAGE rule: remove exactly the fragments
     whose [t1, t2] range is strictly contained in a wider fragment's
     range (i.e. merged into a consolidated fragment) — a vacuum with
-    nothing consolidated is a no-op, never a data loss.  Returns
-    fragments removed."""
+    nothing consolidated is a no-op, never a data loss.  Then retires
+    the fragment-metadata folds nothing reads any more
+    (:func:`_retire_folds`).  Returns fragments removed."""
     import shutil  # noqa: PLC0415
 
     removed = 0
@@ -1911,36 +1912,6 @@ def vacuum_native_array(array_dir: str) -> int:
                     os.unlink(p)
                     removed += 1
             os.unlink(vp)
-    # consolidated FRAGMENT metadata (__fragment_meta/*.meta): retire a
-    # fold whose [t1, t2] range a strictly WIDER fold contains — the
-    # wider one answers for every fragment the narrow one covered (the
-    # .meta tier is a pure cache, so removal is always safe; TileDB's
-    # fragment_meta vacuum mode)
-    fmeta_dir = os.path.join(array_dir, "__fragment_meta")
-    if os.path.isdir(fmeta_dir):
-        metas = [
-            e for e in os.listdir(fmeta_dir)
-            if e.startswith("__") and e.endswith(".meta")
-        ]
-        rngs = {e: _frag_range(e[: -len(".meta")]) for e in metas}
-        for e in metas:
-            t1, t2 = rngs[e]
-            covered_by_wider = any(
-                g != e
-                and rngs[g][0] <= t1 and t2 <= rngs[g][1]
-                and (rngs[g][1] - rngs[g][0]) > (t2 - t1)
-                for g in metas
-            )
-            # equal-range folds are re-runs over an unchanged layout
-            # (periodic maintenance on a quiet array): keep only the
-            # newest name so they can't accumulate unboundedly —
-            # removal is always safe, the fold tier is a pure cache
-            superseded_twin = any(
-                g != e and rngs[g] == (t1, t2) and g > e for g in metas
-            )
-            if covered_by_wider or superseded_twin:
-                os.unlink(os.path.join(fmeta_dir, e))
-                removed += 1
     commits = os.path.join(array_dir, "__commits")
     vacs = (
         [e for e in os.listdir(commits) if e.endswith(".vac")]
@@ -1960,7 +1931,7 @@ def vacuum_native_array(array_dir: str) -> int:
                 elif os.path.isfile(p):
                     os.unlink(p)
             os.unlink(vp)
-        return removed
+        return removed + _retire_folds(array_dir)
     # raw listing (not _fragment_dirs — that already hides covered
     # fragments from readers; vacuum is what physically removes them)
     root = os.path.join(array_dir, "__fragments")
@@ -1987,7 +1958,68 @@ def vacuum_native_array(array_dir: str) -> int:
         if covered:
             shutil.rmtree(os.path.join(root, d), ignore_errors=True)
             removed += 1
+    return removed + _retire_folds(array_dir)
+
+
+def _retire_folds(array_dir: str) -> int:
+    """Remove the consolidated FRAGMENT metadata folds
+    (``__fragment_meta/*.meta``) nothing reads any more; returns how
+    many.  The tier is a pure cache, so removal is always safe (TileDB's
+    ``fragment_meta`` vacuum mode).  A fold goes when a strictly WIDER
+    fold's [t1, t2] range contains its own, when a newer fold has the
+    same range, or when none of the fragments it lists still exists
+    (a consolidation merged and vacuumed them all; a fold that cannot be
+    read, such as a sealed one with no key registered, is kept).  Runs
+    after the fragment vacuum so that it sees what that removed."""
+    fmeta_dir = os.path.join(array_dir, "__fragment_meta")
+    if not os.path.isdir(fmeta_dir):
+        return 0
+    metas = [
+        e for e in os.listdir(fmeta_dir)
+        if e.startswith("__") and e.endswith(".meta")
+    ]
+    rngs = {e: _frag_range(e[: -len(".meta")]) for e in metas}
+    root = _frag_root(array_dir)
+    removed = 0
+    for e in metas:
+        t1, t2 = rngs[e]
+        covered_by_wider = any(
+            g != e
+            and rngs[g][0] <= t1 and t2 <= rngs[g][1]
+            and (rngs[g][1] - rngs[g][0]) > (t2 - t1)
+            for g in metas
+        )
+        # equal-range folds are re-runs over an unchanged layout
+        # (periodic maintenance on a quiet array): keep only the newest
+        # name so they can't accumulate unboundedly
+        superseded_twin = any(
+            g != e and rngs[g] == (t1, t2) and g > e for g in metas
+        )
+        if (covered_by_wider or superseded_twin
+                or _fold_orphaned(os.path.join(fmeta_dir, e), root)):
+            os.unlink(os.path.join(fmeta_dir, e))
+            removed += 1
     return removed
+
+
+def _fold_orphaned(path: str, frag_root: str) -> bool:
+    """True when none of the fragments the fold at ``path`` lists still
+    exists under ``frag_root``; False when any does, or when the fold
+    cannot be read (foreign, torn, or sealed with no key registered)."""
+    import json  # noqa: PLC0415
+
+    from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
+        read_generic_tile,
+    )
+
+    try:
+        doc = json.loads(read_generic_tile(path).decode())
+        names = [ent["name"] for ent in doc["fragments"]]
+    except Exception:  # noqa: BLE001 — unreadable: keep it
+        return False
+    return not any(
+        os.path.isdir(os.path.join(frag_root, n)) for n in names
+    )
 
 
 def expire_native_fragments(array_dir: str, before: int) -> int:
