@@ -9,6 +9,8 @@ delete commits, consolidation inside the window, empty windows."""
 
 from __future__ import annotations
 
+import contextlib
+import io
 import random
 
 import pytest
@@ -301,13 +303,18 @@ def test_window_destroyed_guard(spark, tmp_path):
     assert window_destroyed(uri, 1500)
     with pytest.raises(ValueError, match="destroyed by consolidation"):
         read_array(spark, uri, since=1500)
-    # format("tiledb_native") plans through the same guard
-    from tiledb_mariadb_spark.sources.spark_datasource import (
-        TileDBNativeReader,
-    )
+    # the tiledb_agg planner (the bridge's splits command) runs the
+    # same guard
+    from tiledb_mariadb_spark.tools import jvm_bridge
 
-    with pytest.raises(ValueError, match="destroyed by consolidation"):
-        TileDBNativeReader(uri, None, 2, ["k", "v"], since=1500).partitions()
+    err = io.StringIO()
+    with contextlib.redirect_stderr(err), contextlib.redirect_stdout(
+        io.StringIO()
+    ):
+        assert jvm_bridge.main(
+            ["splits", "--uri", uri, "--since", "1500"]
+        ) == 3
+    assert "destroyed by consolidation" in err.getvalue()
     # so does a SQL view: its metadata COUNT declines to answer the
     # destroyed window, and the scan it falls back to raises
     from tiledb_mariadb_spark.sources.spark_datasource import (

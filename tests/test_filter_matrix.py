@@ -609,7 +609,6 @@ def test_datasource_write_with_filter_options(tmp_path):
     spark = _pytest.importorskip("pyspark.sql").SparkSession.builder \
         .master("local[4]").appName("fm_ds") \
         .config("spark.sql.shuffle.partitions", "4") \
-        .config("spark.sql.python.filterPushdown.enabled", "true") \
         .getOrCreate()
     from tiledb_mariadb_spark.sources.spark_datasource import (
         register_tiledb_native,
@@ -643,10 +642,9 @@ def test_datasource_write_with_filter_options(tmp_path):
     lang = next(a for a in schema.attrs if a.name == "lang")
     assert native_filters_to_csv(v.filters) == "BITSHUFFLE,ZSTD=7"
     assert native_filters_to_csv(lang.filters) == "DICTIONARY_ENCODING"
-    back = (
-        spark.read.format("tiledb_native").option("path", uri).load()
-        .orderBy("k").collect()
-    )
+    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader
+
+    back = agg_reader(spark, uri).load().orderBy("k").collect()
     assert len(back) == 100 and back[3].lang == "de" and back[4].v == 4.0
 
 

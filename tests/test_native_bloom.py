@@ -250,11 +250,8 @@ def test_in_list_pushdown_and_refutation(tmp_path, spark):
     absent (either proof per member)."""
     from pyspark.sql import functions as F
 
-    from tiledb_mariadb_spark.sources.spark_datasource import (
-        register_tiledb_native,
-    )
+    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader
 
-    register_tiledb_native(spark)
     arr, cols = _mk(tmp_path)
     schema = parse_array_schema(_schema_path(arr))
     frags = sorted(_fragment_dirs(arr))
@@ -270,10 +267,10 @@ def test_in_list_pushdown_and_refutation(tmp_path, spark):
     assert not fragment_refutes_conditions(
         frags[0], schema, [("v", "in", ("not-a-number", 5.0))]
     ) or True  # no crash is the contract here
-    # end-to-end through format(): IN absorbed (no residual re-read),
+    # end-to-end through the format: IN absorbed (no residual re-read),
     # NULL member dropped, values exact
     out = (
-        spark.read.format("tiledb_native").option("path", arr).load()
+        agg_reader(spark, arr).load()
         .filter(F.col("doc").isin("doc1_3", "doc2_9", "absent"))
         .orderBy("k")
         .collect()
@@ -369,13 +366,16 @@ def test_condition_skip_safe_cases(tmp_path):
 
 def test_format_needle_planning(tmp_path, spark):
     """format() reads use condition-aware planning too: an absent
-    needle resolves through ONE sentinel empty partition (no scan), a
-    present needle returns its row, and IN-lists work end-to-end."""
+    needle plans no split (no scan), a present needle returns its row,
+    and IN-lists work end-to-end."""
     from pyspark.sql import functions as F
 
+    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader
     from tiledb_mariadb_spark.sources.spark_datasource import (
         register_tiledb_native,
     )
+
+    from .bridge_plan import splits
 
     register_tiledb_native(spark)
     uri = str(tmp_path / "fmt")
@@ -392,7 +392,9 @@ def test_format_needle_planning(tmp_path, spark):
     import hashlib
 
     nd = hashlib.md5(b"777").hexdigest()
-    base = spark.read.format("tiledb_native").option("path", uri).load()
+    assert splits(uri, conds=[["doc", "=", "absent"]]) == []  # refuted
+    assert splits(uri, conds=[["doc", "=", nd]])
+    base = agg_reader(spark, uri).load()
     got = base.filter(F.col("doc") == nd).collect()
     assert len(got) == 1 and got[0]["k"] == 777
     assert base.filter(F.col("doc") == "absent").count() == 0
@@ -471,12 +473,9 @@ def test_range_condition_planning(tmp_path, spark):
     all-refuted range plans empty, and results stay exact."""
     from pyspark.sql import functions as F
 
-    from tiledb_mariadb_spark.sources.spark_datasource import (
-        register_tiledb_native,
-    )
+    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader
     from tiledb_mariadb_spark.sources.tiledb_array import read_array
 
-    register_tiledb_native(spark)
     arr = str(tmp_path / "rng")
     create_native_array(
         arr,
@@ -501,8 +500,8 @@ def test_range_condition_planning(tmp_path, spark):
     assert read_array(
         spark, arr, conditions=[("v", ">", 10**5)], target_splits=2
     ).count() == 0
-    # and the same through plain format()
-    df = spark.read.format("tiledb_native").option("path", arr).load()
+    # and the same through the format
+    df = agg_reader(spark, arr).load()
     assert df.filter(F.col("v") >= 300).count() == 100
     assert df.filter(F.col("v") > 10**5).count() == 0
     # [250, 320) hits only fragment 3's 300..319 band: 20 residues x 2

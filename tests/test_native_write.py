@@ -1061,16 +1061,10 @@ def test_window_reads_since(spark, tmp_path):
     # the decoder's own window read
     _n, rr = range_rows(uri, since=1500, at=2500)
     assert rr == [(i, i * 10) for i in range(20, 60)]
-    # datasource option
-    spark.dataSource.register(__import__(
-        "tiledb_mariadb_spark.sources.spark_datasource",
-        fromlist=["TileDBNativeDataSource"],
-    ).TileDBNativeDataSource)
-    df = (
-        spark.read.format("tiledb_native")
-        .option("path", uri).option("since", "1500").option("at", "2500")
-        .load()
-    )
+    # the format's options
+    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader
+
+    df = agg_reader(spark, uri, since=1500, at=2500).load()
     assert sorted((r.id, r.v) for r in df.collect()) == [
         (i, i * 10) for i in range(20, 60)
     ]
@@ -1191,19 +1185,16 @@ def test_window_split_planning_prunes(spark, tmp_path):
         spark, uri, since=1500, dim_ranges={"id": (0, 700050)}
     )
     assert out2.count() == 51
-    # format("tiledb_native") shares the planner: its partitions lie
-    # inside the window box too, and an empty window plans none
-    from tiledb_mariadb_spark.sources.spark_datasource import (
-        TileDBNativeReader,
-    )
+    # the tiledb_agg planner (the bridge's splits command) shares the
+    # window box: its splits lie inside it, and an empty window plans
+    # none
+    from .bridge_plan import splits
 
-    parts = TileDBNativeReader(uri, None, 8, ["id", "v"],
-                               since=1500).partitions()
+    parts = splits(uri, "--since", "1500", "--target-splits", "8")
     assert parts and all(
-        700000 <= lo and hi <= 700099 for p in parts for lo, hi in p.ranges
+        700000 <= lo and hi <= 700099 for p in parts for lo, hi in p
     )
-    assert TileDBNativeReader(uri, None, 8, ["id", "v"],
-                              since=9999).partitions() == []
+    assert splits(uri, "--since", "9999") == []
 
 
 def test_vectorized_text_pack_byte_identity():

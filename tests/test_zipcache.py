@@ -182,12 +182,12 @@ def test_wrapper_installed_in_tasks(spark):
 
 
 def test_native_sql_read_repeats(spark, tmp_path):
-    """Repeated planner requests and tasks in the same workers: the
-    second read sees the same rows as the first.  The table is a view
-    over ``format("tiledb_native")`` itself, so the Python DataSource
-    planner worker serves both queries."""
-    from tiledb_mariadb_spark.sources.spark_datasource import (  # noqa: PLC0415
-        register_tiledb_native,
+    """Repeated native read tasks in the same workers: the second read
+    sees the same rows as the first.  ``read_array`` decodes in Python
+    task workers, so both reads import the package from the cached
+    archive directories."""
+    from tiledb_mariadb_spark.sources.tiledb_array import (  # noqa: PLC0415
+        read_array,
     )
     from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
         NativeAttr,
@@ -207,14 +207,14 @@ def test_native_sql_read_repeats(spark, tmp_path):
     write_native_fragment(
         uri, {"k": list(range(50)), "v": [i * 7 for i in range(50)]}, ts=10
     )
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    tname = "zc_" + uuid.uuid4().hex[:6]
-    register_tiledb_native(spark)
-    spark.read.format("tiledb_native").option("path", uri).load() \
-        .createOrReplaceTempView(tname)
-    q = f"SELECT k, v FROM {tname} WHERE k BETWEEN 5 AND 24 ORDER BY k"
-    first = [tuple(r) for r in spark.sql(q).collect()]
-    second = [tuple(r) for r in spark.sql(q).collect()]
+
+    def read():
+        df = read_array(spark, uri, dim_ranges={"k": (5, 24)},
+                        target_splits=2)
+        return sorted(tuple(r) for r in df.collect())
+
+    first = read()
+    second = read()
     assert first == [(k, k * 7) for k in range(5, 25)]
     assert second == first
 

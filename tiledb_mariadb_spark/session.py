@@ -53,7 +53,6 @@ def get_spark(app_name: str = "tiledb_mariadb_spark") -> SparkSession:
         .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", warehouse)
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         # let the planner pick shuffled-hash over sort-merge when its
         # size conditions hold (guide §3.1): skips the per-partition
         # sort; scale-safe because the planner still falls back to
@@ -91,7 +90,4 @@ def tune_for_oracle(spark: SparkSession) -> SparkSession:
     timestamp columns collect identically to DuckDB's UTC-naive values.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # the Python data source (sources/spark_datasource.py) implements
-    # pushFilters; Spark requires this opt-in flag (runtime-settable)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     return spark

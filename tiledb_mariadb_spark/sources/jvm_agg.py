@@ -1,10 +1,10 @@
-"""JVM aggregate-pushdown shim: build + registration.
+"""The JVM ``tiledb_agg`` format, every batch read of an array: build +
+registration.
 
-The one group_by_handler behavior (TileDB-MariaDB
-mytile/ha_mytile.cc:607-715) unreachable from plain SQL over the Python
-datasource is aggregate pushdown — the Python DataSource API exposes no
-``SupportsPushDownAggregates`` hook, so ``SELECT COUNT(*)`` over
-``format("tiledb_native")`` full-scans.  This module compiles
+It is a DataSource V2 provider because the group_by_handler behavior
+(TileDB-MariaDB mytile/ha_mytile.cc:607-715) needs aggregate pushdown,
+which the Python DataSource API cannot express (it has no
+``SupportsPushDownAggregates`` hook).  This module compiles
 ``java/TileDBAggDataSource.java`` against the installed pyspark jars
 (plain ``javac``, no build system) and loads it into the session with
 ``ADD JAR``, after which
@@ -18,8 +18,9 @@ honest bridge row-scan when the metadata trust rules cannot prove the
 value.  The Java side sends every command to a resident
 ``tools/jvm_bridge.py serve`` process of this interpreter, pooled per
 JVM, so a pushed aggregate costs one request, not an interpreter start.
-Row scans go the same way (Arrow IPC batches), so this format also
-serves the SQL table names ``sql_table_from_array`` registers.
+Row scans go the same way (Arrow IPC batches): :func:`agg_reader` is the
+one batch read of an array, and the SQL table names
+``sql_table_from_array`` registers are views over it.
 
 Small reads run in the driver with no Spark job.  The bridge's
 ``splits`` reply marks a plan ``local`` when it has no split, or one

@@ -1,34 +1,23 @@
-"""Spark Python Data Source for native TileDB arrays (Spark 4
-Python Data Source API): ``spark.read.format("tiledb_native")`` /
-``df.write.format("tiledb_native")`` over bare on-disk arrays — schema
-from the array's own blob, one Spark InputPartition per domain split,
-REAL filter pushdown through Catalyst's pushFilters hook (dim ranges
-prune partitions before launch; attribute predicates evaluate inside the
-backend before rows cross the Arrow boundary), Arrow-batch reads, and
-writes that land one native fragment per task.
+"""Spark Python Data Source for native TileDB arrays (Spark 4 Python
+Data Source API): the WRITE and STREAMING face of the connector.
+``df.write.format("tiledb_native")`` lands one native fragment per task
+and auto-creates the array on first write; ``readStream`` emits the
+rows of newly committed fragments per micro-batch and ``writeStream``
+lands fragments per epoch.  The schema comes from the array's own blob.
 
-This is the idiomatic-Spark face of the connector: what
-``tiledb_array.read_array``/``write_array`` express as function calls,
-this module surfaces through the planner itself — the same integration
-point the reference occupies inside MariaDB (the handler +
-cond_push hooks, ha_mytile.cc:2783-2882), re-expressed as Spark's
-official extension API.
-
-SQL table names are not served from here: :func:`sql_table_from_array`
-registers a view over the JVM ``tiledb_agg`` format
-(``sources/jvm_agg.py``), whose scans plan and read through the resident
-bridge with no Python planner worker per query.  Its read options are
-the ones listed below, with the same meaning.
+Batch reads are not served here.  Every batch read of an array goes
+through the JVM ``tiledb_agg`` format (``sources/jvm_agg.py``): call
+``jvm_agg.agg_reader(spark, uri, **options).load()``, or name the array
+in SQL with :func:`sql_table_from_array`.  That format pushes dim
+ranges, attribute comparisons, ``IN`` and ``IS [NOT] NULL`` into the
+resident bridge's scan planner (the handler + cond_push hooks of the
+reference, ha_mytile.cc:2783-2882), so there is one read path into an
+array.  ``spark.read.format("tiledb_native")`` raises and names it.
 
 Options:
 - ``path``   array directory (required)
-- ``at``     unix-millis time travel (open_at parity)
-- ``since``  unix-millis CDC window start: only writes in [since, at]
-- ``target_splits``  max partitions (default 16)
+- ``at``     unix-millis snapshot the schema is read at
 - ``encryption_key``  the array's AES-256-GCM key
-- ``bbox`` / ``spatial_wkb`` + ``spatial_dims`` + ``spatial_pad``
-  box and polygon-MBR windows on the dims
-  (``tiledb_array.spatial_dim_ranges``)
 - write: ``dims`` comma-separated dim column names +
   ``domain.<dim>`` "lo:hi" bounds — auto-creates the array on first
   write when it does not exist.
@@ -37,23 +26,12 @@ Options:
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterable, Iterator, List
+from typing import Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceReader,
     DataSourceStreamWriter,
     DataSourceWriter,
-    EqualTo,
-    Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
-    InputPartition,
-    IsNotNull,
-    IsNull,
-    LessThan,
-    LessThanOrEqual,
     SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
@@ -66,11 +44,6 @@ def _backend(encryption_key=None):
     )
 
     return NativeDecoderBackend(encryption_key=encryption_key)
-
-
-@dataclass
-class _SplitPartition(InputPartition):
-    ranges: list  # inclusive per-dim (lo, hi)
 
 
 class TileDBNativeDataSource(DataSource):
@@ -102,14 +75,6 @@ class TileDBNativeDataSource(DataSource):
         at = self.options.get("at")
         return int(at) if at is not None else None
 
-    def _since(self):
-        # inclusive LOWER time bound (TileDB timestamp_start): with
-        # 'at' this reads the WINDOW of fragments written in
-        # [since, at] — the CDC-export shape (only the delta, newest-
-        # wins within it)
-        since = self.options.get("since")
-        return int(since) if since is not None else None
-
     def _key(self):
         # AES-256-GCM table key (the reference's encryption_key table
         # option).  Lives only in options/closures, never on disk.
@@ -121,17 +86,12 @@ class TileDBNativeDataSource(DataSource):
             f"`{f.name}` {f.dtype}" for f in info.dims + info.attrs
         )
 
-    def reader(self, schema: StructType) -> "TileDBNativeReader":
-        return TileDBNativeReader(
-            self._uri(), self._at(),
-            int(self.options.get("target_splits", 16)),
-            [f.name for f in schema.fields],
-            encryption_key=self._key(),
-            since=self._since(),
-            bbox=self.options.get("bbox"),
-            spatial_wkb=self.options.get("spatial_wkb"),
-            spatial_dims=self.options.get("spatial_dims"),
-            spatial_pad=self.options.get("spatial_pad"),
+    def reader(self, schema: StructType):
+        raise NotImplementedError(
+            "format('tiledb_native') has no batch read: read an array "
+            "with jvm_agg.agg_reader(spark, uri, **options).load() or "
+            "name it in SQL with sql_table_from_array(spark, name, uri, "
+            "**options) (both format('tiledb_agg'))"
         )
 
     def writer(self, schema: StructType, overwrite: bool) -> "TileDBNativeWriter":
@@ -141,183 +101,6 @@ class TileDBNativeDataSource(DataSource):
                 "(TileDB model); use mode('append')"
             )
         return TileDBNativeWriter(self._uri(), dict(self.options), schema)
-
-
-_COND_OPS = {
-    EqualTo: "=",
-    GreaterThan: ">",
-    GreaterThanOrEqual: ">=",
-    LessThan: "<",
-    LessThanOrEqual: "<=",
-}
-
-
-class TileDBNativeReader(DataSourceReader):
-    def __init__(self, uri, at, target_splits, columns, encryption_key=None,
-                 bbox=None, spatial_wkb=None, spatial_dims=None,
-                 spatial_pad=None, since=None):
-        self.uri, self.at = uri, at
-        self.since = since
-        self.target_splits = target_splits
-        self.columns = columns
-        self.encryption_key = encryption_key
-        self.conditions: list = []
-        info = _backend(encryption_key).info(uri, at=at)
-        self._dim_names = [d.name for d in info.dims]
-        self._attr_names = [a.name for a in info.attrs]
-        self._info = info
-        from tiledb_mariadb_spark.sources.tiledb_array import (  # noqa: PLC0415
-            spatial_dim_ranges,
-        )
-
-        # bbox / spatial options seed the pushed dim ranges
-        self.dim_ranges: dict = spatial_dim_ranges(
-            self._dim_names, bbox, spatial_wkb, spatial_dims, spatial_pad
-        )
-
-    def _narrow(self, name, lo, hi):
-        from tiledb_mariadb_spark.sources.tiledb_array import (  # noqa: PLC0415
-            narrow_range,
-        )
-
-        self.dim_ranges[name] = narrow_range(self.dim_ranges.get(name), lo, hi)
-
-    def pushFilters(self, filters: List[Filter]) -> Iterable[Filter]:
-        """Catalyst hands every eligible predicate here; we absorb what
-        the storage layer can evaluate (the reference's cond_push) and
-        return the rest as residuals for Spark to re-apply."""
-
-        def _add_points(name, pts):
-            cur = self.dim_ranges.get(name)
-            if cur is None:
-                self.dim_ranges[name] = [(v, v) for v in pts]
-            elif isinstance(cur, tuple):
-                lo, hi = cur
-                self.dim_ranges[name] = [
-                    (v, v)
-                    for v in pts
-                    if (lo is None or v >= lo) and (hi is None or v <= hi)
-                ]
-            else:
-                keep = {v for v, _ in cur}
-                self.dim_ranges[name] = [(v, v) for v in pts if v in keep]
-
-        residual = []
-        for f in filters:
-            attr = getattr(f, "attribute", None)
-            col = attr[0] if attr and len(attr) == 1 else None
-            known = col in self._dim_names or col in self._attr_names
-            ftype = type(f)
-            if not known:
-                residual.append(f)
-                continue
-            if col in self._dim_names and ftype in _COND_OPS:
-                v = f.value
-                if ftype is EqualTo:
-                    self._narrow(col, v, v)
-                elif ftype is GreaterThanOrEqual:
-                    self._narrow(col, v, None)
-                elif ftype is LessThanOrEqual:
-                    self._narrow(col, None, v)
-                elif ftype is GreaterThan and isinstance(v, int):
-                    self._narrow(col, v + 1, None)
-                elif ftype is LessThan and isinstance(v, int):
-                    self._narrow(col, None, v - 1)
-                else:
-                    residual.append(f)
-                    continue
-                # dims are exactly enforced by the range scan: absorbed
-                continue
-            if ftype in _COND_OPS:
-                self.conditions.append((col, _COND_OPS[ftype], f.value))
-            elif ftype is IsNull:
-                self.conditions.append((col, "is_null"))
-            elif ftype is IsNotNull:
-                self.conditions.append((col, "is_not_null"))
-            elif ftype is In and col in self._dim_names and all(
-                isinstance(v, int) for v in f.value
-            ):
-                # EXACT multi-range absorption (MRR parity): one point
-                # range per IN value, merged/split by plan_splits — the
-                # holes between values are never scanned and no residual
-                # re-check is needed
-                _add_points(col, sorted(set(f.value)))
-            elif ftype is In and col in self._attr_names and all(
-                v is None or isinstance(v, (int, float, str, bool))
-                for v in f.value
-            ):
-                # attr IN-list: pushed as one backend condition — exact
-                # isin evaluation inside the task, and fragments whose
-                # stats/bloom prove EVERY member absent skip entirely.
-                # NULL members drop (IN's NULL never matches, 3VL).
-                self.conditions.append((
-                    col, "in",
-                    tuple(v for v in f.value if v is not None),
-                ))
-            else:
-                residual.append(f)
-        return residual
-
-    def partitions(self):
-        """One partition per split of the shared scan plan
-        (``scan_ranges`` then ``scan_splits``); [] when the plan is
-        provably empty, which Spark runs as one ``None`` partition."""
-        from tiledb_mariadb_spark.sources.tiledb_array import (  # noqa: PLC0415
-            scan_ranges,
-            scan_splits,
-        )
-
-        be = _backend(self.encryption_key)
-        ranges = scan_ranges(be, self.uri, self._info, self.dim_ranges,
-                             self.conditions, self.at, self.since)
-        if ranges is None:
-            return []
-        splits = scan_splits(be, self.uri, self._info, ranges,
-                             self.target_splits, self.at, self.since)
-        return [_SplitPartition(s) for s in splits]
-
-    _PA_TYPES = {
-        "bigint": "int64", "int": "int32", "smallint": "int16",
-        "tinyint": "int8", "double": "float64", "float": "float32",
-        "string": "string", "boolean": "bool", "binary": "binary",
-    }
-
-    def read(self, partition: _SplitPartition) -> Iterator:
-        import pyarrow as pa  # noqa: PLC0415
-
-        if partition is None:
-            return  # provably empty plan
-        kw = {} if self.since is None else {"since": self.since}
-        pdf = _backend(self.encryption_key).read_range(
-            self.uri,
-            partition.ranges,
-            self.columns,
-            at=self.at,
-            conditions=self.conditions,
-            **kw,
-        )
-        if not len(pdf):
-            return
-        # explicit Arrow schema: a split whose nullable column is
-        # all-None must not drift to the null type (schema mismatch
-        # across partitions)
-        ddl = {f.name: f.dtype for f in self._info.dims + self._info.attrs}
-
-        def _pa_type(d: str):
-            if d.startswith("array<") and d.endswith(">"):
-                inner = d[6:-1]
-                return pa.list_(
-                    getattr(pa, self._PA_TYPES.get(inner, "string"))()
-                )
-            return getattr(pa, self._PA_TYPES.get(d, "string"))()
-
-        fields = [
-            pa.field(c, _pa_type(ddl.get(c, "string")))
-            for c in self.columns
-        ]
-        yield pa.RecordBatch.from_pandas(
-            pdf, schema=pa.schema(fields), preserve_index=False
-        )
 
 
 @dataclass
@@ -401,11 +184,22 @@ class TileDBNativeWriter(DataSourceWriter):
 
 class TileDBNativeStreamReader(SimpleDataSourceStreamReader):
     """Streaming SOURCE over a native array: the offset is the set of
-    committed fragment directories; each micro-batch emits exactly the
-    rows of fragments that appeared since the last offset (TileDB's
-    append-only fragment model makes the change feed exact and
-    replayable — readBetweenOffsets re-decodes the same immutable
-    fragments)."""
+    visible fragment names; each micro-batch emits exactly the rows of
+    fragments that appeared since the last offset (TileDB's append-only
+    fragment model makes the change feed exact and replayable —
+    readBetweenOffsets re-decodes the same immutable fragments).
+
+    Consolidation adds a fragment whose name spans the timestamps of
+    everything it merged.  It carries no new rows, so it emits only the
+    originals it merged that the stream never emitted, decoded from disk
+    while they are still there (until vacuum).  When vacuum removed
+    them, a merged fragment whose span reaches past the fragments the
+    stream emitted raises ValueError naming it, as a ``since`` window
+    destroyed by consolidation does, instead of re-emitting or dropping
+    rows.  Names are all a vacuumed history leaves, so two cases are
+    judged by span alone: an unseen fragment pinned to a timestamp
+    between two emitted ones is not detected, and a merged delete newer
+    than every emitted fragment raises."""
 
     def __init__(self, uri: str, columns: list, encryption_key=None):
         self.uri = uri
@@ -421,18 +215,87 @@ class TileDBNativeStreamReader(SimpleDataSourceStreamReader):
 
         return [os.path.basename(f) for f in _fragment_dirs(self.uri)]
 
-    def _rows_of(self, frag_names: list) -> Iterator:
-        """Rows of exactly the named fragments (each decoded in
-        isolation — fragments are immutable, so a batch's content never
-        changes on replay).  Only the requested columns decode; an attr
-        evolved in after a fragment was written reads as its fill, as
-        in the batch read."""
+    def _new_frags(self, seen: set, now: list) -> list:
+        """The fragments whose rows a batch from the offset ``seen`` to
+        the visible fragments ``now`` emits: new plain writes, and the
+        unseen originals of new merged fragments."""
         import os  # noqa: PLC0415
 
         from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
+            _committed_fragments,
+            _frag_range,
+            _frag_ts,
+        )
+
+        def inside(r, s):
+            return s[0] <= r[0] and r[1] <= s[1] and r != s
+
+        seen_spans = [_frag_range(n) for n in seen]
+
+        def done(name):  # emitted, or merged into an emitted fragment
+            r = _frag_range(name)
+            return name in seen or any(inside(r, s) for s in seen_spans)
+
+        on_disk = _committed_fragments(self.uri)[1]
+        commits = os.path.join(self.uri, "__commits")
+        dels = [
+            _frag_ts(e) for e in (
+                os.listdir(commits) if os.path.isdir(commits) else []
+            ) if e.endswith(".del")
+        ]
+        out: list = []
+
+        def resolve(name):
+            span = _frag_range(name)
+            if span[0] == span[1]:
+                out.append(name)  # a plain write
+                return
+            inner = [o for o in on_disk if inside(_frag_range(o), span)]
+            children = [
+                o for o in inner
+                if not any(
+                    inside(_frag_range(o), _frag_range(p)) for p in inner
+                )
+            ]
+            for c in children:
+                if not done(c):
+                    resolve(c)
+            # a merged span runs from its oldest original's start to its
+            # newest original's (or baked delete's) end: an end that no
+            # emitted or on-disk original reaches was a fragment this
+            # stream never emitted, and vacuum removed it
+            ends = [_frag_range(c) for c in children]
+            ends += [r for r in seen_spans if inside(r, span)]
+            ends += [(t, t) for t in dels if span[0] <= t <= span[1]]
+            if not (
+                any(lo == span[0] for lo, _hi in ends)
+                and any(hi == span[1] for _lo, hi in ends)
+            ):
+                raise ValueError(
+                    f"stream source: consolidated fragment {name} merged "
+                    "fragments this stream never emitted, and vacuum "
+                    "removed them; their rows would be silently lost"
+                )
+
+        for f in now:
+            if not done(f):
+                resolve(f)
+        return out
+
+    def _rows_of(self, frag_names: list) -> Iterator:
+        """Rows of exactly the named fragments, oldest first (each
+        decoded in isolation — fragments are immutable, so a batch's
+        content never changes on replay; a named fragment that is gone
+        raises).  Only the requested columns decode; an attr evolved in
+        after a fragment was written reads as its fill, as in the batch
+        read."""
+        import os  # noqa: PLC0415
+
+        from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
+            _committed_fragments,
             _field_cells,
             _field_file,
-            _fragment_dirs,
+            _frag_ts,
             _np_field,
             _schema_path,
             parse_array_schema,
@@ -446,16 +309,21 @@ class TileDBNativeStreamReader(SimpleDataSourceStreamReader):
             )
 
             open_encryption(self.uri, self.encryption_key)
-        wanted = set(frag_names)
+        root, on_disk = _committed_fragments(self.uri)
+        gone = sorted(set(frag_names) - set(on_disk))
+        if gone:
+            raise ValueError(
+                f"stream source: fragment(s) {gone} were vacuumed before "
+                "their rows were read"
+            )
         schema = parse_array_schema(_schema_path(self.uri))
         by_name = {d.name: ("d", i, d) for i, d in enumerate(schema.dims)}
         by_name.update(
             {a.name: ("a", i, a) for i, a in enumerate(schema.attrs)}
         )
         d0 = schema.dims[0]
-        for f in _fragment_dirs(self.uri):
-            if os.path.basename(f) not in wanted:
-                continue
+        for name in sorted(frag_names, key=lambda d: (_frag_ts(d), d)):
+            f = os.path.join(root, name)
             n = _field_cells(_field_file(f, d0.name, 0, "d"), d0)
             cols = [
                 _np_field(f, schema, fld, i, kind, 0, n).tolist()
@@ -467,19 +335,15 @@ class TileDBNativeStreamReader(SimpleDataSourceStreamReader):
         return {"frags": []}
 
     def read(self, start: dict):
-        seen = set(start.get("frags", []))
         now = self._frags()
-        new = [f for f in now if f not in seen]
+        new = self._new_frags(set(start.get("frags", [])), now)
         # materialized list: the runner copies/pickles the batch payload
         return list(self._rows_of(new)), {"frags": now}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        seen = set(start.get("frags", []))
-        return list(
-            self._rows_of(
-                [f for f in end.get("frags", []) if f not in seen]
-            )
-        )
+        return list(self._rows_of(self._new_frags(
+            set(start.get("frags", [])), end.get("frags", [])
+        )))
 
     def commit(self, end: dict) -> None:
         pass  # fragments are immutable; nothing to clean up
@@ -519,16 +383,15 @@ TileDBNativeDataSource.streamWriter = _ds_stream_writer
 
 
 def register_tiledb_native(spark) -> None:
-    """Register the data source on a session:
-    ``spark.read.format('tiledb_native').option('path', uri).load()``;
-    streaming: ``spark.readStream.format('tiledb_native')`` emits new
-    fragments per micro-batch, ``df.writeStream.format('tiledb_native')``
-    lands fragments per epoch."""
+    """Register the data source on a session: batch writes
+    ``df.write.format('tiledb_native')``; streaming:
+    ``spark.readStream.format('tiledb_native')`` emits new fragments per
+    micro-batch, ``df.writeStream.format('tiledb_native')`` lands
+    fragments per epoch."""
     spark.dataSource.register(TileDBNativeDataSource)
 
 
-# the read options of format("tiledb_native"), which a SQL table view
-# carries to tiledb_agg
+# the read options of format("tiledb_agg") a SQL table view takes
 _VIEW_OPTIONS = frozenset({
     "at", "since", "target_splits", "encryption_key", "bbox",
     "spatial_wkb", "spatial_dims", "spatial_pad",
@@ -541,14 +404,13 @@ def sql_table_from_array(spark, table_name: str, uri: str, **options) -> None:
     temp view over the JVM ``tiledb_agg`` format (``jvm_agg.agg_reader``).
     Each query plans through the resident bridge's ``splits`` command and
     reads Arrow batches from its ``rows`` command, with filters, columns,
-    aggregates and top-k pushed through DataSource V2; no Python
-    DataSource planner runs, so ``TileDBNativeReader`` options and hooks
-    no longer apply to the view.  The read options of
-    ``format("tiledb_native")`` (``at``, ``since``, ``target_splits``,
-    ``encryption_key``, ``bbox``, ``spatial_*``) keep their meaning; any
-    other option raises ValueError instead of being dropped.  A view is
-    used because Spark's catalog ``CREATE TABLE ... USING`` does not
-    forward OPTIONS to a Python data source's reads (verified on 4.1)."""
+    aggregates and top-k pushed through DataSource V2.  The read options
+    are ``at`` (unix-millis time travel), ``since`` (CDC window start:
+    only writes in [since, at]), ``target_splits`` (max partitions,
+    default 16), ``encryption_key``, and the ``bbox`` / ``spatial_wkb`` +
+    ``spatial_dims`` + ``spatial_pad`` windows on the dims
+    (``tiledb_array.spatial_dim_ranges``); any other option raises
+    ValueError instead of being dropped."""
     unknown = sorted(set(options) - _VIEW_OPTIONS)
     if unknown:
         raise ValueError(

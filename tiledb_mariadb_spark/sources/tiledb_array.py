@@ -1087,7 +1087,8 @@ def read_array(
                          since)
     )
     ddl = ", ".join(
-        f"{c} {next(x.dtype for x in info.dims + info.attrs if x.name == c)}"
+        f"`{c.replace('`', '``')}` "
+        f"{next(x.dtype for x in info.dims + info.attrs if x.name == c)}"
         for c in cols
     )
     if not splits:

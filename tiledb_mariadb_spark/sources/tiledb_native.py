@@ -1141,6 +1141,26 @@ def _committed_names(array_dir: str, root: str) -> set[str] | None:
     return None
 
 
+def _committed_fragments(array_dir: str) -> tuple[str, list[str]]:
+    """``(root, names)``: the directory fragments live in and the names
+    of every COMMITTED fragment there, including the ones a wider
+    consolidated fragment covers (they stay on disk until vacuum).  A
+    pure name listing — no tile reads."""
+    root = os.path.join(array_dir, "__fragments")
+    if not os.path.isdir(root):
+        root = array_dir
+    skip = {"__meta", "__schema", "__commits", "__fragments", "__labels"}
+    committed = _committed_names(array_dir, root)
+    return root, [
+        d
+        for d in os.listdir(root)
+        if d.startswith("__")
+        and d not in skip
+        and os.path.isdir(os.path.join(root, d))
+        and (committed is None or d in committed)
+    ]
+
+
 def _fragment_dirs(
     array_dir: str, at: int | None = None, since: int | None = None
 ) -> list[str]:
@@ -1171,19 +1191,11 @@ def _fragment_dirs(
          skipped (TileDB's pre-vacuum read rule).  O(n²) over visible
          fragments; fragment counts are small by design (consolidation
          exists precisely to keep them so)."""
-    root = os.path.join(array_dir, "__fragments")
-    if not os.path.isdir(root):
-        root = array_dir
-    skip = {"__meta", "__schema", "__commits", "__fragments", "__labels"}
-    committed = _committed_names(array_dir, root)
+    root, names = _committed_fragments(array_dir)
     frags = [
         d
-        for d in os.listdir(root)
-        if d.startswith("__")
-        and d not in skip
-        and os.path.isdir(os.path.join(root, d))
-        and (committed is None or d in committed)
-        and (at is None or _frag_range(d)[1] <= at)
+        for d in names
+        if (at is None or _frag_range(d)[1] <= at)
         and (since is None or _frag_range(d)[0] >= since)
     ]
     rng = {d: _frag_range(d) for d in frags}
@@ -3186,20 +3198,7 @@ def snapshot_destroyed(array_dir: str, at: int) -> bool:
     ha_mytile.cc:3440-3455).  Snapshot-diff uses this to RAISE instead of
     reporting a plausible-looking all-'added' diff (round-7 advisor
     finding).  A pure name listing — no tile reads."""
-    root = os.path.join(array_dir, "__fragments")
-    if not os.path.isdir(root):
-        root = array_dir
-    skip = {"__meta", "__schema", "__commits", "__fragments", "__labels"}
-    committed = _committed_names(array_dir, root)
-    names = [
-        d
-        for d in os.listdir(root)
-        if d.startswith("__")
-        and d not in skip
-        and os.path.isdir(os.path.join(root, d))
-        and (committed is None or d in committed)
-    ]
-    ranges = [_frag_range(d) for d in names]
+    ranges = [_frag_range(d) for d in _committed_fragments(array_dir)[1]]
     for t1, t2 in ranges:
         if not (t1 <= at < t2):
             continue  # plain write or not straddling ``at``
@@ -3222,19 +3221,7 @@ def window_destroyed(array_dir: str, since: int) -> bool:
     originals wrote inside the window — the windowed sibling of
     :func:`snapshot_destroyed` (round-8 self-review; same vacuum hazard
     class as the r7 advisor's diff_arrays finding).  Name listing only."""
-    root = os.path.join(array_dir, "__fragments")
-    if not os.path.isdir(root):
-        root = array_dir
-    skip = {"__meta", "__schema", "__commits", "__fragments", "__labels"}
-    committed = _committed_names(array_dir, root)
-    ranges = [
-        _frag_range(d)
-        for d in os.listdir(root)
-        if d.startswith("__")
-        and d not in skip
-        and os.path.isdir(os.path.join(root, d))
-        and (committed is None or d in committed)
-    ]
+    ranges = [_frag_range(d) for d in _committed_fragments(array_dir)[1]]
     for t1, t2 in ranges:
         if not (t1 < since <= t2):
             continue

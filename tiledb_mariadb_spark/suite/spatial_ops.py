@@ -301,13 +301,14 @@ SPECS.append(
 )
 
 
-# --- q313: spatial pushdown THROUGH spark.read.format (round 6) -------------
+# --- q313: spatial pushdown THROUGH the tiledb_agg format (round 6) ---------
 # q311 drives the MBR tier through the st_intersects_native helper; this
-# spec drives it through the FIRST-CLASS Python Data Source: the query
-# polygon arrives as reader OPTIONS (spatial_wkb hex + spatial_dims +
-# spatial_pad), the reader seeds padded-MBR dim ranges BEFORE split
-# planning (cond_push_func_spatial parity, ha_mytile.cc:2312-2507,
-# 2825-2830 — tested split-confinement in test_spark_datasource), and
+# spec drives it through the SQL read format (jvm_agg.agg_reader): the
+# query polygon arrives as reader OPTIONS (spatial_wkb hex +
+# spatial_dims + spatial_pad), the bridge's split planner seeds
+# padded-MBR dim ranges BEFORE split planning (cond_push_func_spatial
+# parity, ha_mytile.cc:2312-2507, 2825-2830 — split confinement tested
+# in test_spark_datasource), and
 # the EXACT rectangle-overlap residual runs in plain SQL over the
 # scanned columns.  pad >= max stored half-extent (hw<=3.5) keeps the
 # centroid-indexed MBR tier over-selecting only; coordinates are
@@ -323,9 +324,7 @@ def q313_spatial_datasource(spark, sf_dir):
     from tiledb_mariadb_spark.operators.spatial import (  # noqa: PLC0415
         make_wkb_polygon,
     )
-    from tiledb_mariadb_spark.sources.spark_datasource import (  # noqa: PLC0415
-        register_tiledb_native,
-    )
+    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader  # noqa: PLC0415
     from tiledb_mariadb_spark.sources.tiledb_array import (  # noqa: PLC0415
         write_array,
     )
@@ -337,7 +336,6 @@ def q313_spatial_datasource(spark, sf_dir):
         create_native_array,
     )
 
-    register_tiledb_native(spark)
     uri = tempfile.mkdtemp(prefix="q313_spds_") + "/rects"
     create_native_array(
         uri,
@@ -369,14 +367,10 @@ def q313_spatial_datasource(spark, sf_dir):
     qwkb = make_wkb_polygon(
         [(qx1, qy1), (qx2, qy1), (qx2, qy2), (qx1, qy2)]
     )
-    pre = (
-        spark.read.format("tiledb_native")
-        .option("path", uri)
-        .option("spatial_wkb", qwkb.hex())
-        .option("spatial_dims", "cx,cy")
-        .option("spatial_pad", str(_Q313_PAD))
-        .load()
-    )
+    pre = agg_reader(
+        spark, uri, spatial_wkb=qwkb.hex(), spatial_dims="cx,cy",
+        spatial_pad=_Q313_PAD,
+    ).load()
     return (
         pre.filter(
             (F.col("cx") - F.col("hw") < qx2)
@@ -408,7 +402,7 @@ SPECS.append(
         "q313_spatial_datasource",
         q313_spatial_datasource,
         Q313_SQL,
-        "spatial pushdown through spark.read.format options "
+        "spatial pushdown through tiledb_agg read options "
         "(spatial_wkb/spatial_dims/spatial_pad -> padded-MBR dim "
         "ranges, split pruning) + exact overlap residual in plain SQL",
     )

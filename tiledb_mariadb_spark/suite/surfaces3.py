@@ -1022,25 +1022,26 @@ SPECS.append(
 
 
 # --- q284: first-class Spark Data Source (round 4) --------------------------
-# The connector surfaced through Spark's OFFICIAL extension point (the
-# Python Data Source API): spark.read.format("tiledb_native") with
-# Catalyst-driven pushFilters (dim ranges narrow the split plan, attr
-# predicates evaluate in the backend) and df.write.format(...) landing
-# one native fragment per task — the planner-level integration the
+# The connector surfaced through Spark's extension points: df.write
+# .format("tiledb_native") lands one native fragment per task (the
+# Python Data Source API), and the read goes through the JVM tiledb_agg
+# format (jvm_agg.agg_reader), whose DataSource V2 filter pushdown
+# narrows the split plan by the dim range and evaluates the attr
+# predicate in the decoder — the planner-level integration the
 # reference has inside MariaDB (handler + cond_push,
-# ha_mytile.cc:2783-2882).  Same data/oracle shape as q278 but the whole
-# path goes through the registered format, so the driver verifies the
-# DataSource plumbing itself.
+# ha_mytile.cc:2783-2882).  Same data/oracle shape as q278 but the
+# whole path goes through the registered formats, so the driver
+# verifies the DataSource plumbing itself.
 def q284_python_datasource(spark, sf_dir):
     import tempfile  # noqa: PLC0415
 
+    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader  # noqa: PLC0415
     from tiledb_mariadb_spark.sources.spark_datasource import (  # noqa: PLC0415
         register_tiledb_native,
     )
     from tiledb_mariadb_spark.suite import dsum  # noqa: PLC0415
 
     register_tiledb_native(spark)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     uri = tempfile.mkdtemp(prefix="q284_datasource_") + "/orders_arr"
     o = t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 20000)
     src = o.select(
@@ -1057,12 +1058,9 @@ def q284_python_datasource(spark, sf_dir):
         .save()
     )
     arr = (
-        spark.read.format("tiledb_native")
-        .option("path", uri)
-        .option("target_splits", "8")
-        .load()
+        agg_reader(spark, uri, target_splits=8).load()
         .filter((F.col("o_orderkey") >= 100) & (F.col("o_orderkey") <= 15000))
-        .filter(F.col("st") != "X")  # residual (Not) stays Spark-side
+        .filter(F.col("st") != "X")
     )
     return (
         arr.groupBy("st")
@@ -1089,9 +1087,9 @@ SPECS.append(
         "q284_python_datasource",
         q284_python_datasource,
         Q284_SQL,
-        "registered Spark Python Data Source: format() write -> "
-        "pushFilters-pruned format() read (handler/cond_push parity "
-        "through Spark's official extension API)",
+        "registered Spark data sources: tiledb_native write -> "
+        "filter-pushed tiledb_agg read (handler/cond_push parity "
+        "through Spark's extension APIs)",
     )
 )
 
@@ -1188,23 +1186,24 @@ SPECS.append(
 
 # --- q288: multi-range IN pushdown via the data source (round 4) ------------
 # The MRR surface (t/mrr.test, mytile-range.cc:647-730 range dedupe)
-# expressed through Catalyst: an IN over the dimension absorbs as EXACT
-# point ranges in pushFilters, the split plan covers only those values
-# (holes never scanned), and the scan feeds a plain aggregate.  Oracle =
-# WHERE IN over the parquet table.
+# expressed through Catalyst: an IN over the dimension is pushed into
+# the tiledb_agg scan as one condition, the split plan is narrowed to
+# the hull of its values, the decoder keeps
+# exactly the IN rows (no Spark-side residual), and the scan feeds a
+# plain aggregate.  Oracle = WHERE IN over the parquet table.
 _Q288_KEYS = tuple(range(7, 20000, 97))  # 207 spread-out orderkeys
 
 
 def q288_multirange_in(spark, sf_dir):
     import tempfile  # noqa: PLC0415
 
+    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader  # noqa: PLC0415
     from tiledb_mariadb_spark.sources.spark_datasource import (  # noqa: PLC0415
         register_tiledb_native,
     )
     from tiledb_mariadb_spark.suite import dsum  # noqa: PLC0415
 
     register_tiledb_native(spark)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     uri = tempfile.mkdtemp(prefix="q288_mrr_") + "/orders_arr"
     o = t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 20000)
     (
@@ -1222,10 +1221,7 @@ def q288_multirange_in(spark, sf_dir):
         .save()
     )
     arr = (
-        spark.read.format("tiledb_native")
-        .option("path", uri)
-        .option("target_splits", "16")
-        .load()
+        agg_reader(spark, uri, target_splits=16).load()
         .filter(F.col("o_orderkey").isin(list(_Q288_KEYS)))
     )
     return arr.agg(
@@ -1250,8 +1246,8 @@ SPECS.append(
         "q288_multirange_in",
         q288_multirange_in,
         Q288_SQL,
-        "multi-range IN pushdown through the registered data source: "
-        "exact point-range split plan (t/mrr.test parity)",
+        "multi-range IN pushdown through the tiledb_agg scan: "
+        "exact IN rows from the decoder (t/mrr.test parity)",
     )
 )
 
@@ -1264,9 +1260,7 @@ SPECS.append(
 def q289_datasource_time_travel(spark, sf_dir):
     import tempfile  # noqa: PLC0415
 
-    from tiledb_mariadb_spark.sources.spark_datasource import (  # noqa: PLC0415
-        register_tiledb_native,
-    )
+    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader  # noqa: PLC0415
     from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
         NativeAttr,
         NativeDim,
@@ -1276,7 +1270,6 @@ def q289_datasource_time_travel(spark, sf_dir):
         write_native_fragment,
     )
 
-    register_tiledb_native(spark)
     uri = tempfile.mkdtemp(prefix="q289_tt_") + "/arr"
     create_native_array(
         uri,
@@ -1303,10 +1296,7 @@ def q289_datasource_time_travel(spark, sf_dir):
     )
 
     def read_at(ts):
-        return (
-            spark.read.format("tiledb_native")
-            .option("path", uri).option("at", str(ts)).load()
-        )
+        return agg_reader(spark, uri, at=ts).load()
 
     parts = []
     for label, ts in (("t1500", 1500), ("t2500", 2500), ("t500", 500)):
@@ -1869,9 +1859,9 @@ SPECS.append(
 
 
 # --- q297: STACKED pushdowns through the data source --------------------------
-# The combination a real workload hits: time travel (`at`) + multi-range
-# IN absorption + attribute-condition pushdown + projection, all through
-# spark.read.format("tiledb_native") in ONE query — q288/q289/q284 each
+# The combination a real workload hits: time travel (`at`) + dim IN +
+# attribute-condition pushdown + projection, all through one tiledb_agg
+# scan (jvm_agg.agg_reader) in ONE query — q288/q289/q284 each
 # prove a single axis; this proves they compose (the reference composes
 # them too: open_at + pushdown_ranges + pushdown conditions in one scan,
 # ha_mytile.cc init_scan).  Snapshot t1500 sees pre-update values; t2500
@@ -1881,9 +1871,7 @@ def q297_datasource_stacked(spark, sf_dir):
 
     import pandas as pd  # noqa: PLC0415
 
-    from tiledb_mariadb_spark.sources.spark_datasource import (  # noqa: PLC0415
-        register_tiledb_native,
-    )
+    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader  # noqa: PLC0415
     from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
         NativeAttr,
         NativeDim,
@@ -1893,7 +1881,6 @@ def q297_datasource_stacked(spark, sf_dir):
         write_native_fragment,
     )
 
-    register_tiledb_native(spark)
     uri = tempfile.mkdtemp(prefix="q297_stacked_") + "/arr"
     create_native_array(
         uri,
@@ -1933,10 +1920,7 @@ def q297_datasource_stacked(spark, sf_dir):
     in_keys = list(range(0, 1400, 37))
 
     def snap(label, ts):
-        df = (
-            spark.read.format("tiledb_native")
-            .option("path", uri).option("at", str(ts)).load()
-        )
+        df = agg_reader(spark, uri, at=ts).load()
         return (
             df.filter(F.col("k").isin(in_keys))
             .filter(F.col("cents") > 10_000_00)
@@ -3505,12 +3489,12 @@ SPECS.append(
 )
 
 
-# --- q315: DENSE array through spark.read.format (round 6) -------------------
+# --- q315: DENSE array through the tiledb_agg format (round 6) ---------------
 # q314 drives dense v19 through read_array; this spec drives the SAME
-# fill/overlay semantics through the FIRST-CLASS Python Data Source —
-# schema inferred from the blob, splits planned over the NED bounding
-# box, dim-range pushFilters narrowing the scan, fills materialized in
-# plain `spark.read.format(...).load().filter(...)` SQL.
+# fill/overlay semantics through the SQL read format (jvm_agg.agg_reader)
+# — schema inferred from the blob, splits planned over the NED bounding
+# box, the pushed dim range narrowing the scan, fills materialized in
+# plain `agg_reader(...).load().filter(...)` DataFrame code.
 def q315_dense_datasource(spark, sf_dir):
     import struct as _struct  # noqa: PLC0415
     import tempfile  # noqa: PLC0415
@@ -3519,9 +3503,7 @@ def q315_dense_datasource(spark, sf_dir):
 
     from pyspark.sql import Window  # noqa: PLC0415
 
-    from tiledb_mariadb_spark.sources.spark_datasource import (  # noqa: PLC0415
-        register_tiledb_native,
-    )
+    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader  # noqa: PLC0415
     from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
         NativeAttr,
         NativeDim,
@@ -3531,7 +3513,6 @@ def q315_dense_datasource(spark, sf_dir):
         write_native_fragment,
     )
 
-    register_tiledb_native(spark)
     uri = tempfile.mkdtemp(prefix="q315_dense_fmt_") + "/arr"
     create_native_array(
         uri,
@@ -3579,7 +3560,7 @@ def q315_dense_datasource(spark, sf_dir):
         600, 999, 2000,
     )
     df = (
-        spark.read.format("tiledb_native").option("path", uri).load()
+        agg_reader(spark, uri).load()
         .filter((F.col("k") >= 100) & (F.col("k") <= 899))
     )
     return (
@@ -3618,26 +3599,25 @@ SPECS.append(
         "q315_dense_datasource",
         q315_dense_datasource,
         Q315_SQL,
-        "dense v19 fragments through spark.read.format: blob schema, "
-        "NED-box splits, dim-range pushdown, fill materialization",
+        "dense v19 fragments through the tiledb_agg format: blob "
+        "schema, NED-box splits, dim-range pushdown, fill "
+        "materialization",
     )
 )
 
 
-# --- q316: DELETE commits through spark.read.format (round 6) ----------------
+# --- q316: DELETE commits through the tiledb_agg format (round 6) ------------
 # q301 proves delete-condition commits through read_array; this spec
-# proves them through the FIRST-CLASS data source AND on the round-6
-# delete-aware columnar fast path: a .del lands between two writes, the
-# format scan must hide matching cells written at-or-before the delete
-# while the re-insert AFTER it survives (writer-ts gating).
+# proves them through the SQL read format (jvm_agg.agg_reader) AND on
+# the round-6 delete-aware columnar fast path: a .del lands between two
+# writes, the format scan must hide matching cells written at-or-before
+# the delete while the re-insert AFTER it survives (writer-ts gating).
 def q316_delete_datasource(spark, sf_dir):
     import tempfile  # noqa: PLC0415
 
     import pandas as pd  # noqa: PLC0415
 
-    from tiledb_mariadb_spark.sources.spark_datasource import (  # noqa: PLC0415
-        register_tiledb_native,
-    )
+    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader  # noqa: PLC0415
     from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
         NativeAttr,
         NativeDim,
@@ -3648,7 +3628,6 @@ def q316_delete_datasource(spark, sf_dir):
         write_native_fragment,
     )
 
-    register_tiledb_native(spark)
     uri = tempfile.mkdtemp(prefix="q316_del_fmt_") + "/arr"
     create_native_array(
         uri,
@@ -3696,7 +3675,7 @@ def q316_delete_datasource(spark, sf_dir):
         ),
         2000,
     )
-    df = spark.read.format("tiledb_native").option("path", uri).load()
+    df = agg_reader(spark, uri).load()
     return (
         df.groupBy("status")
         .agg(
@@ -4581,15 +4560,13 @@ SPECS.append(
 # what was written this hour, newest-wins within it" — without reading
 # the base.  The spec writes three layers at explicit timestamps
 # through the connector, exports the MIDDLE window through BOTH
-# read_array(since=, at=) and the spark.read.format option, and proves
-# the two window surfaces agree (the format path feeds the result; a
-# flag pins the read_array cross-check).
+# read_array(since=, at=) and the tiledb_agg format's options, and
+# proves the two window surfaces agree (the format path feeds the
+# result; a flag pins the read_array cross-check).
 def q324_cdc_window(spark, sf_dir):
     import tempfile  # noqa: PLC0415
 
-    from tiledb_mariadb_spark.sources.spark_datasource import (  # noqa: PLC0415
-        TileDBNativeDataSource,
-    )
+    from tiledb_mariadb_spark.sources.jvm_agg import agg_reader  # noqa: PLC0415
     from tiledb_mariadb_spark.sources.tiledb_array import (  # noqa: PLC0415
         ArrayInfo,
         AttrInfo,
@@ -4599,7 +4576,6 @@ def q324_cdc_window(spark, sf_dir):
         write_array,
     )
 
-    spark.dataSource.register(TileDBNativeDataSource)
     uri = tempfile.mkdtemp(prefix="q324_window_") + "/arr"
     NativeDecoderBackend().create(
         uri,
@@ -4633,12 +4609,7 @@ def q324_cdc_window(spark, sf_dir):
         ).coalesce(1),
         uri, ts=3000,
     )
-    df = (
-        spark.read.format("tiledb_native")
-        .option("path", uri)
-        .option("since", "1500").option("at", "2500")
-        .load()
-    )
+    df = agg_reader(spark, uri, since=1500, at=2500).load()
     cross = sorted(
         (r.k, r.cents, r.status)
         for r in read_array(spark, uri, since=1500, at=2500).collect()
@@ -4671,7 +4642,8 @@ SPECS.append(
         Q324_SQL,
         "CDC window reads: since= (timestamp_start) bounds history from "
         "below — export exactly the fragments written in [since, at] "
-        "through read_array AND spark.read.format, surfaces agreeing",
+        "through read_array AND the tiledb_agg format, surfaces "
+        "agreeing",
     )
 )
 

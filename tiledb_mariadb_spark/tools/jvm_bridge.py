@@ -111,7 +111,9 @@ def _fold_dim_ranges(schema, conds, seed=None):
 
     Returns ``(ranges, rest)`` where ``rest`` holds every conjunct not
     expressible as one inclusive per-dim range (attr conditions, IN,
-    NULL tests, non-integer values).  The metadata aggregate path only
+    NULL tests, non-integer values).  An integer-dim IN also narrows its
+    dim to the values' hull, so a scan plans only the box that can hold
+    them; the IN stays in ``rest``.  The metadata aggregate path only
     fires when ``rest`` is empty — stats cannot prove anything under a
     residual filter."""
     from tiledb_mariadb_spark.sources.tiledb_array import (  # noqa: PLC0415
@@ -147,8 +149,12 @@ def _fold_dim_ranges(schema, conds, seed=None):
                 _narrow(col, None, v)
             else:
                 _narrow(col, None, v - 1)
-        else:
-            rest.append(c)
+            continue
+        if col in dim_names and op == "in" and v and all(
+            isinstance(x, int) and not isinstance(x, bool) for x in v
+        ):
+            _narrow(col, min(v), max(v))
+        rest.append(c)
     return ranges, rest
 
 
